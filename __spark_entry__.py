@@ -5,24 +5,14 @@ queries()     : every declared operator from SURVEY.md §2 — one
                 callable per QuerySpec in the engine's plan catalog.
 oracle_sql()  : matching DuckDB SQL for every SQL-expressible query.
 
-Naming: canonical catalog names (``q01..q162`` as of round-17),
-in a round-18 WINDOW order: the driver's correctness artifact
-records only the FIRST 50 dict entries, so this round seats (the
-round-17 verdict's Next #1) every round-17-TOUCHED query first —
-``q95 q107 q114 q119 q142 q146 q49 q94`` (five of the eight were
-outside the r17 window; their oracle status rested on the
-builder's local run) — then the owed roll-forward ``q131 q140
-q141``, then the round-18-touched paths ``q138 q139 q159 q160``
-(SNM keyed staging, bigram dim fold), then ALL remaining
-streaming drains (every drain's reader schema now comes from the
-driver-side footer read instead of a Spark inference job), then
-``q01..q15`` — the oldest remaining r14/r15 rows.  Names are NOT
-aliased — same canonical ``qNN``, same QuerySpec, same oracle;
-only dict insertion order moves.  Everything outside the window
-carries r16/r17 rows (q161/q162's llr path is untouched this
-round, so they keep their fresh r17 rows).  The per-round ledger
-lives in README §Rotation and the full-catalog artifact is
-CORRECTNESS_local_r{N}.json every round.
+Naming: canonical catalog names (``q01..q162``), in WINDOW order.
+The external correctness artifact records only the FIRST 50 dict
+entries, so ``_WINDOW`` lists, in order, the queries that must carry a
+fresh correctness row; every query a change touches is seated there in the
+same commit. Everything else follows in numeric order. Names are never
+aliased: only dict insertion order moves. The per-round window ledger
+lives in README §Rotation; the full-catalog artifact is
+CORRECTNESS_local_r{N}.json.
 """
 
 from __future__ import annotations
@@ -34,34 +24,26 @@ from pyspark.sql import DataFrame, SparkSession
 
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
 
-# The driver's 50-entry window this round, as an EXPLICIT ordered list
-# of catalog numbers (round 18; round-17 verdict "Next round #1"):
-# every r17-touched query seats FIRST (q107/q114/q119/q142/q146 were
-# outside the r17 window — their oracle claims must get driver rows),
-# then the owed roll-forward q131+q140+q141, the round-18-touched
-# paths (q138/q139 SNM keyed staging, q159/q160 bigram dim fold), all
-# remaining streaming drains (the round-18 footer-schema reader path),
-# and the oldest remaining r14/r15 rows q01..q15.  Exactly 50 entries.
+# The 50-entry correctness window, as an explicit ordered list of
+# catalog numbers: recently touched queries first, then every streaming
+# drain, then the oldest correctness rows.  Exactly 50 entries.
 _WINDOW: list[int] = (
-    [95, 107, 114, 119, 142, 146, 49, 94]      # r17-touched (verdict #1)
-    + [131, 140, 141]                           # owed roll-forward
-    + [138, 139, 159, 160]                      # r18-touched paths
-    + [50, 51, 56, 57, 73, 83, 91, 108, 113,    # streaming drains:
-       121, 129, 134, 136, 144, 145, 150,       # footer-schema path
-       152, 154, 156, 158]
-    + list(range(1, 16))                        # oldest r14/r15 rows
+    [95, 107, 114, 119, 142, 146, 49, 94]
+    + [131, 140, 141]
+    + [138, 139, 159, 160]
+    + [50, 51, 56, 57, 73, 83, 91, 108, 113,    # streaming drains
+       121, 129, 134, 136, 144, 145, 150,
+       152, 154, 156, 158, 162]
+    + list(range(1, 15))
 )
 assert len(_WINDOW) == 50
 _WINDOW_POS = {n: i for i, n in enumerate(_WINDOW)}
 
 
 def _catalog_order(name: str) -> tuple[int, int, str]:
-    """Round-17 window order: the explicit ``_WINDOW`` list first (in
-    list position, NOT numeric order), then everything else in
-    NUMERIC query order (q2 < q10 < q100, not lexicographic; a plain
-    sorted() would slot q100 between q10 and q11).  Mid-round catalog
-    additions seat at the FRONT of ``_WINDOW`` explicitly when they
-    land; an addition not yet seated sorts after the window."""
+    """Window order: the ``_WINDOW`` list first (in list position, not
+    numeric order), then everything else in NUMERIC query order (q2 <
+    q10 < q100; a plain sorted() would slot q100 between q10 and q11)."""
     m = re.match(r"q(\d+)", name)
     n = int(m.group(1)) if m else 10**9
     if n in _WINDOW_POS:
@@ -76,16 +58,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Insertion order is the round-17 window order (module docstring):
-    q159..q162 (the round-17 additions) + q123..q126 + q136..q139 +
-    q32..q35 + q48..q58 + q77..q95 + q127..q130 first, so the
-    driver's 50-entry correctness window gives the additions their
-    first driver rows, retires all eight remaining r13 rows, and
-    refreshes the oldest r14 block minus the displaced tail; then
-    the rest of the catalog in numeric order.
-    """
+    """One entry per implemented operator from SURVEY.md §2, in
+    window order (``_catalog_order``)."""
     specs = all_specs()
     return {
         name: specs[name].spark for name in sorted(specs, key=_catalog_order)

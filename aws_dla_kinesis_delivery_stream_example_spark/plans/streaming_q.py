@@ -3,21 +3,18 @@ Structured Streaming path (readStream -> windowed agg / dedup -> memory
 sink, availableNow) over the closed events table, so the t2 gate
 hash-checks actual streaming execution against the batch-SQL oracle —
 not just the batch twin (FIXTURES.md: 'streaming queries are verified
-on closed inputs against the equivalent batch query').
+on closed inputs against the equivalent batch query'). Every drain goes
+through the one closed-input harness, ``streaming.windows.run_on_closed_input``.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sketch as _SK
-from ..sources.tables import normalize_event_time, parquet_schema
 from ..streaming import windows as SW
 from .catalog import query
 from .curation6 import SKEW_ORACLE as _SKEW_ORACLE
@@ -34,156 +31,10 @@ from .curation20 import PPL_ORACLE as _PPL_ORACLE
 from .curation21 import BIGRAM_ORACLE as _BIGRAM_ORACLE
 from .curation22 import LLR_ORACLE as _LLR_ORACLE
 
-# State-store backend for the catalog drains. At 100 TB of events the
-# state store IS the scaling wall for stateful streaming (watermarked
-# windows, dedup, stream-stream joins, applyInPandasWithState): the
-# default HDFS-backed provider keeps every state row on the JVM heap,
-# so state is bounded by executor memory; RocksDB spills to local disk
-# with incremental checkpointing and is the provider a production
-# deployment runs. Default ON here; SPARK_GRAFT_STATE_STORE=hdfs
-# reverts to the heap provider.
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-
-# Observability (K8): stateOperators metrics (state rows / bytes /
-# provider custom metrics) of the most recent drain, keyed by catalog
-# drain id — the same reconciliation surface the delivery pipeline's
-# _progress log gives the sinks.
-LAST_DRAIN_PROGRESS: dict[str, object] = {}
-
-
-def _state_store_conf() -> str | None:
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb").lower() == "hdfs":
-        return None
-    return _ROCKSDB_PROVIDER
-
-
-def _drain_width(explicit: str | None) -> str:
-    """Shuffle width for a closed-input drain. Each stateful stage
-    allocates one state-store instance PER shuffle partition, so the
-    right width tracks the drain's STATE SIZE, not the data volume —
-    round-12 fresh-process measurements at sf0.1 (min-of-3):
-
-      width          8       2
-      q129 hll     3.98    3.41   (constant state, Arrow-scan bound)
-      q134 hist    3.41    1.50   (constant state)
-      q136 bloom   3.61    2.28   (constant state)
-      q113 cms     2.17    1.88   (constant state)
-      q73 join     3.26    3.46   (real join state — wants width)
-      q91 pandas   2.41    3.26   (python-stateful — wants width)
-
-    so constant-state sketch drains pass explicit "2" and everything
-    else keeps the default 8 (itself measured in round 9: 6.9 ->
-    2.3 s for the stream-stream join at 32 -> 8). The env knob
-    overrides both for A/B experiments. On a real cluster the
-    checkpoint fixes state partitioning per query — size it to the
-    stream's key cardinality, not this local knob."""
-    env = os.environ.get("SPARK_GRAFT_DRAIN_PARTITIONS")
-    if env:
-        return env
-    return explicit if explicit is not None else "8"
-
-
-def _stream_table_closed(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    op,
-    output_mode: str,
-    normalize_ts: bool = False,
-    partitions: str | None = None,
-) -> DataFrame:
-    """THE closed-input drain: stream the canonical parquet table
-    through Structured Streaming (availableNow -> memory sink) and
-    return the fully-materialized result. One implementation serves
-    every streaming catalog query — the events/documents twins had
-    already started diverging (normalize/conf fixes landing in one but
-    not the other) when they were separate copies.
-
-    Self-sufficient under ANY session, like load_table: sets
-    nanosAsLong (events.ts has shipped as TIMESTAMP(NANOS)), pins the
-    session timezone to UTC (window-start strings must render in UTC
-    for oracle hash parity — a non-UTC external session would shift
-    them), and normalizes the event-time column across the parquet
-    encodings the driver has generated.
-
-    Stateful operators allocate one state-store instance PER shuffle
-    partition per stateful stage; on a closed local input that fixed
-    per-instance cost dominates (measured 6.9 s -> 2.3 s for the
-    stream-stream join at 32 -> 8 partitions, sf0.1). Scope a small
-    partition count to this drain and restore the session value — on
-    a real cluster the checkpoint fixes state partitioning per query,
-    sized to the stream's key cardinality, not to this local default.
-    """
-    tmp = tempfile.mkdtemp(prefix="stream_q_")
-    name = f"sq_{uuid.uuid4().hex[:10]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
-    provider = _state_store_conf()
-    # Reset observability UP FRONT: a drain that ends without a
-    # progress report must not leave the previous drain's state metrics
-    # attributed to this one.
-    LAST_DRAIN_PROGRESS.clear()
-    LAST_DRAIN_PROGRESS.update(
-        {
-            "query": name,
-            "table": table,
-            "provider": provider or "hdfs-default",
-            "stateOperators": [],
-        }
-    )
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", _drain_width(partitions))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        if provider is not None:
-            spark.conf.set(_PROVIDER_CONF, provider)
-        src = os.path.join(sf_dir, f"{table}.parquet")
-        # Reader schema from the parquet footer driver-side: the
-        # spark.read.parquet(...)-schema probe this replaced launched a
-        # 1-task inference JOB per drain — pure fixed cost x 23
-        # streaming catalog queries (round-17 verdict Next #4; guide
-        # §6). parquet_schema maps footer types under THIS session's
-        # confs (nanosAsLong/NTZ set just above), equality pinned in
-        # tests/test_round18_schema.py.
-        schema = parquet_schema(spark, src)
-        # The streaming file source wants a directory or a glob; the
-        # canonical table is a single file, so glob it (zero-copy).
-        stream = spark.readStream.schema(schema).parquet(src + "*")
-        if normalize_ts:
-            stream = normalize_event_time(stream, "ts")
-        q = (
-            op(stream)
-            .writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # K8 observability: surface state rows/bytes (and the RocksDB
-        # custom metrics, which double as proof the provider was
-        # active) for the stateful stage(s) of this drain.
-        lp = q.lastProgress
-        if lp is not None:
-            LAST_DRAIN_PROGRESS["stateOperators"] = lp.get("stateOperators", [])
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if provider is not None:
-            if prev_provider is None:
-                spark.conf.unset(_PROVIDER_CONF)
-            else:
-                spark.conf.set(_PROVIDER_CONF, prev_provider)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.table(name)
-
 
 def _stream_events_closed(spark: SparkSession, sf_dir: str, op, output_mode: str) -> DataFrame:
-    return _stream_table_closed(
-        spark, sf_dir, "events", op, output_mode, normalize_ts=True
+    return SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "events.parquet"), op, output_mode, normalize_ts=True
     )
 
 
@@ -342,8 +193,8 @@ def _stream_documents_closed(
     output_mode: str,
     partitions: str | None = None,
 ) -> DataFrame:
-    return _stream_table_closed(
-        spark, sf_dir, "documents", op, output_mode, partitions=partitions
+    return SW.run_on_closed_input(
+        spark, os.path.join(sf_dir, "documents.parquet"), op, output_mode, partitions=partitions
     )
 
 

@@ -157,7 +157,12 @@ def parquet_schema(spark: SparkSession, path: str):
             if not parts:
                 raise FileNotFoundError(f"no parquet parts under {path}")
             target = os.path.join(path, parts[0])
-        asch = pq.read_schema(target)
+        pf = pq.ParquetFile(target)
+        if any(c.physical_type == "INT96" for c in pf.schema):
+            # Spark's legacy timestamp encoding: arrow reports it as
+            # timestamp[ns], which would mis-map under nanosAsLong.
+            raise ValueError(f"INT96 column in {target}")
+        asch = pf.schema_arrow
         fields = []
         for f in asch:
             st = _map(f.type)

@@ -10,10 +10,15 @@ which is what the closed-input stream==batch tests assert.
 
 from __future__ import annotations
 
+import logging
+import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.tables import normalize_event_time, parquet_schema
 
 
 def _event_time(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -21,8 +26,6 @@ def _event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     TimestampType (LTZ); normalize long-nanos / TIMESTAMP_NTZ encodings
     the same way sources.tables.load_table does, so these operators are
     safe even on a DataFrame that bypassed load_table."""
-    from ..sources.tables import normalize_event_time
-
     return normalize_event_time(df, col)
 
 
@@ -107,28 +110,85 @@ def streaming_dedup(df: DataFrame, keys: list[str], watermark: str = "2 hours") 
     return df.dropDuplicates(keys)
 
 
+# Closed-input drains keep state in RocksDB: it spills to local disk
+# with incremental checkpoints, so state is bounded by disk rather
+# than by the executor heap the default provider keeps it on.
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+
+_log = logging.getLogger(__name__)
+
+
 def run_on_closed_input(
     spark: SparkSession,
     parquet_path: str,
     op,
-    output_mode: str = "append",
-    query_name: str = "closed_input_out",
+    output_mode: str,
+    *,
+    normalize_ts: bool = False,
+    partitions: str | None = None,
 ) -> DataFrame:
-    """Replay a *closed* parquet input through Structured Streaming and
-    return the final result as a batch DataFrame (memory sink +
-    availableNow). This is the FIXTURES.md rule: streaming answers are
-    verified against the batch answer on the same closed input."""
-    schema = spark.read.parquet(parquet_path).schema
-    stream = spark.readStream.schema(schema).parquet(parquet_path)
-    out = op(stream)
-    with tempfile.TemporaryDirectory() as ckpt:
+    """Replay a *closed* parquet input (a file or a directory) through
+    Structured Streaming and return the final result as a batch
+    DataFrame (memory sink + availableNow). This is the FIXTURES.md
+    rule: streaming answers are verified against the batch answer on
+    the same closed input.
+
+    Self-sufficient under any session: the reader schema comes from the
+    parquet footer (``parquet_schema``), ``nanosAsLong`` is set for
+    TIMESTAMP(NANOS) inputs, the session timezone is pinned to UTC so
+    window-start strings render identically to the oracle's, and
+    ``normalize_ts`` normalizes the ``ts`` event-time encodings.
+
+    The shuffle width (``partitions``, default "8") and the RocksDB
+    state-store provider are scoped to the drain and restored after it.
+    Each stateful stage allocates one state-store instance per shuffle
+    partition, so size the width to the drain's state, not its input:
+    constant-state sketches want "2", per-key state wants the default.
+
+    Nothing outlives the call in the caller's session: the memory-sink
+    view is dropped (the returned frame already holds the sink's plan)
+    and the checkpoint directory is removed, on success or failure.
+    The final ``lastProgress`` (incl. ``stateOperators``) is emitted as
+    one INFO record on this module's logger.
+    """
+    tmp = tempfile.mkdtemp(prefix="stream_q_")
+    name = f"sq_{uuid.uuid4().hex[:10]}"
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions or "8")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set(_PROVIDER_CONF, _ROCKSDB_PROVIDER)
+        schema = parquet_schema(spark, parquet_path)
+        # The file source wants a directory or a glob: the glob admits a
+        # single-file table and still lists a directory's files.
+        stream = spark.readStream.schema(schema).parquet(parquet_path + "*")
+        if normalize_ts:
+            stream = normalize_event_time(stream, "ts")
         q = (
-            out.writeStream.outputMode(output_mode)
+            op(stream)
+            .writeStream.outputMode(output_mode)
             .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
+            .queryName(name)
+            .option("checkpointLocation", f"{tmp}/ckpt")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
+        _log.info(
+            "closed-input drain %(query)s on %(provider)s: %(progress)s",
+            {"query": name, "provider": _ROCKSDB_PROVIDER, "progress": q.lastProgress},
+        )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        if prev_provider is None:
+            spark.conf.unset(_PROVIDER_CONF)
+        else:
+            spark.conf.set(_PROVIDER_CONF, prev_provider)
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -137,14 +137,6 @@ def bench_delivery(spark, n_records: int = 100_000) -> float:
         shutil.rmtree(base, ignore_errors=True)
 
 
-def _state_store_label() -> str:
-    from aws_dla_kinesis_delivery_stream_example_spark.plans.streaming_q import (
-        _state_store_conf,
-    )
-
-    return "hdfs" if _state_store_conf() is None else "rocksdb"
-
-
 def _cpu_row() -> list[int]:
     with open("/proc/stat") as f:
         for line in f:
@@ -154,10 +146,10 @@ def _cpu_row() -> list[int]:
 
 
 def _host_canary(before: list[int], after: list[int]) -> dict[str, float]:
-    """Steal/iowait share of THIS sweep's wall clock (round-17 verdict
-    Next #8: the noise attribution must be machine-checkable, not
-    narrative). Same /proc/stat arithmetic as scripts/host_quiet.py,
-    sampled over the whole sweep instead of a 10 s probe."""
+    """Steal/iowait/busy share of the sweep's wall clock, from the
+    /proc/stat ``cpu`` row sampled before and after it: each share is
+    that column's tick delta over the total tick delta. A sweep run
+    with steal near 0% was not slowed by neighbours on the host."""
     if not before or not after:
         return {}
     d = [y - x for x, y in zip(before, after)]
@@ -208,12 +200,6 @@ def main() -> None:
         "delivery_rec_per_s": tps,
         "repeats": REPEATS,
         "agg": "min",
-        # A/B label for the q34/q40/q46 drift investigation:
-        # which state-store provider the streaming drains used
-        # (rocksdb loads a native lib into the shared JVM).
-        # Derived from the SAME resolver the drains use, so the
-        # label cannot disagree with the provider actually run.
-        "state_store": _state_store_label(),
         "sweep_wall_sec": wall,
         "n_queries_ok": len(ok),
         "query_errors": errs,
@@ -252,7 +238,7 @@ def main() -> None:
     # Round-17 verdict Next #2 (the r16 line overflowed the driver's
     # ~2.1 KB tail capture and killed the round-over-round table):
     # keep the one JSON line BOUNDED — contract keys + the per-query
-    # map at 2 decimals; everything bulky (repeats/agg/state_store/
+    # map at 2 decimals; everything bulky (repeats/agg/
     # sweep_wall/host_canary/prev-catalog subtotal, 3-decimal
     # timings, full names) lives in bench_full.json.
     line = {

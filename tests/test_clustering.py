@@ -101,9 +101,7 @@ def test_interval_join_streaming_matches_batch(spark, tmp_path):
         (r["user_id"], str(r["l_ts"]), str(r["r_ts"]))
         for r in SW.interval_join_counts(spark.read.parquet(src)).collect()
     )
-    streamed = SW.run_on_closed_input(
-        spark, src, SW.interval_join_counts, "append", "ij_closed"
-    )
+    streamed = SW.run_on_closed_input(spark, src, SW.interval_join_counts, "append")
     got = sorted(
         (r["user_id"], str(r["l_ts"]), str(r["r_ts"])) for r in streamed.collect()
     )

@@ -81,3 +81,16 @@ def test_unmapped_type_falls_back_to_inference(spark, tmp_path):
     built = parquet_schema(spark, src)
     inferred = spark.read.parquet(src).schema
     assert built == inferred  # fallback returns inference itself
+
+
+def test_spark_written_int96_timestamp_equals_inference(spark, tmp_path):
+    # Spark writes timestamps as INT96 by default; arrow reports that
+    # column as timestamp[ns], which must not map to bigint under
+    # nanosAsLong (Spark itself reads it as a timestamp).
+    src = str(tmp_path / "int96")
+    spark.sql("SELECT 1L AS id, TIMESTAMP '2024-01-01 10:00:00' AS ts").write.parquet(src)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    built = parquet_schema(spark, src)
+    inferred = spark.read.parquet(src).schema
+    assert built == inferred
+    assert dict((f.name, f.dataType.simpleString()) for f in built)["ts"] == "timestamp"

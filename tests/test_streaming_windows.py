@@ -4,6 +4,9 @@ the batch answer."""
 
 from __future__ import annotations
 
+import logging
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,9 +36,7 @@ def _as_sets(df):
 def test_tumbling_stream_equals_batch(spark, events_parquet):
     # complete mode: append would (correctly) hold back the final
     # windows still inside the watermark horizon on a closed input.
-    streamed = SW.run_on_closed_input(
-        spark, events_parquet, SW.tumbling_counts, output_mode="complete", query_name="t_tumbling"
-    )
+    streamed = SW.run_on_closed_input(spark, events_parquet, SW.tumbling_counts, "complete")
     batch = SW.tumbling_counts(_batch(spark, events_parquet))
     assert _as_sets(streamed) == _as_sets(batch)
 
@@ -44,9 +45,7 @@ def test_tumbling_append_holds_back_open_windows(spark, events_parquet):
     """Append mode emits only watermark-closed windows: streamed results
     are a strict prefix of the batch answer, missing only the tail."""
     streamed = _as_sets(
-        SW.run_on_closed_input(
-            spark, events_parquet, SW.tumbling_counts, query_name="t_tumbling_append"
-        )
+        SW.run_on_closed_input(spark, events_parquet, SW.tumbling_counts, "append")
     )
     batch = _as_sets(SW.tumbling_counts(_batch(spark, events_parquet)))
     assert streamed <= batch
@@ -56,9 +55,7 @@ def test_tumbling_append_holds_back_open_windows(spark, events_parquet):
 
 
 def test_sliding_stream_equals_batch(spark, events_parquet):
-    streamed = SW.run_on_closed_input(
-        spark, events_parquet, SW.sliding_counts, output_mode="complete", query_name="t_sliding"
-    )
+    streamed = SW.run_on_closed_input(spark, events_parquet, SW.sliding_counts, "complete")
     batch = SW.sliding_counts(_batch(spark, events_parquet))
     assert _as_sets(streamed) == _as_sets(batch)
 
@@ -66,9 +63,7 @@ def test_sliding_stream_equals_batch(spark, events_parquet):
 def test_session_window_stream_runs(spark, events_parquet):
     """session_window is streaming-only in this form; assert it produces
     sessions and that per-user totals reconcile with the event count."""
-    streamed = SW.run_on_closed_input(
-        spark, events_parquet, SW.session_counts, output_mode="complete", query_name="t_session"
-    )
+    streamed = SW.run_on_closed_input(spark, events_parquet, SW.session_counts, "complete")
     total = streamed.agg(F.sum("session_len")).collect()[0][0]
     n_events = _batch(spark, events_parquet).count()
     assert total == n_events  # every event belongs to exactly one session
@@ -81,7 +76,7 @@ def test_streaming_dedup_equals_batch(spark, events_parquet):
         lambda df: SW.streaming_dedup(df, ["user_id", "event_type"]).select(
             "user_id", "event_type"
         ),
-        query_name="t_dedup",
+        "append",
     )
     batch = _batch(spark, events_parquet).select("user_id", "event_type").distinct()
     assert _as_sets(streamed) == _as_sets(batch)
@@ -90,8 +85,6 @@ def test_streaming_dedup_equals_batch(spark, events_parquet):
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Late-data semantics: with watermark W, a row older than
     max(event time) - W arriving in a LATER micro-batch is dropped."""
-    import os
-
     src = str(tmp_path / "late_src")
     os.makedirs(src)
     # batch 1: events at 10:00 and 12:00 (watermark advances to 10:00)
@@ -150,9 +143,7 @@ def test_interval_join_stream_equals_batch(spark, events_parquet):
     """q73's operator: inner stream-stream interval joins emit matches
     as found, so an availableNow drain over a closed input equals the
     batch range join (the oracle path)."""
-    streamed = SW.run_on_closed_input(
-        spark, events_parquet, SW.interval_join_counts, query_name="t_ijoin"
-    )
+    streamed = SW.run_on_closed_input(spark, events_parquet, SW.interval_join_counts, "append")
     batch = SW.interval_join_counts(_batch(spark, events_parquet))
     assert _as_sets(streamed) == _as_sets(batch)
 
@@ -188,29 +179,28 @@ def test_interval_join_boundaries(spark, tmp_path):
 
     batch = SW.interval_join_counts(spark.read.parquet(src))
     assert fmt(batch) == expected
-    streamed = SW.run_on_closed_input(
-        spark, src, SW.interval_join_counts, query_name="t_ijoin_bounds"
-    )
+    streamed = SW.run_on_closed_input(spark, src, SW.interval_join_counts, "append")
     assert fmt(streamed) == expected
 
 
-def test_drain_uses_rocksdb_state_store(spark):
-    """The catalog drains default to the RocksDB state-store provider
-    (the 100 TB backend) and surface state metrics for K8: provider
-    custom metrics prove RocksDB was actually active, not just
+def test_drain_uses_rocksdb_state_store(spark, caplog):
+    """The drains run on the RocksDB state-store provider and report
+    their final progress as one log record: provider custom metrics in
+    ``stateOperators`` prove RocksDB was actually active, not just
     configured."""
-    from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs, streaming_q
-
-    from .conftest import SF_SMOKE
+    from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
 
     # q91 keeps NoTimeout per-user state, so numRowsTotal stays non-zero
     # on a closed input (dedup/window state is watermark-evicted by end
     # of stream and would legitimately report 0)
-    df = all_specs()["q91_streaming_stateful_totals"].spark(spark, SF_SMOKE)
+    with caplog.at_level(logging.INFO, logger=SW.__name__):
+        df = all_specs()["q91_streaming_stateful_totals"].spark(spark, SF_SMOKE)
     assert df.count() > 0
-    prog = streaming_q.LAST_DRAIN_PROGRESS
+    records = [r for r in caplog.records if r.name == SW.__name__]
+    assert len(records) == 1, "one progress record per drain"
+    prog = records[0].args
     assert prog["provider"].endswith("RocksDBStateStoreProvider")
-    ops = prog["stateOperators"]
+    ops = prog["progress"]["stateOperators"]
     assert ops, "stateful drain must report state operators"
     assert ops[0]["numRowsTotal"] > 0
     assert any("rocksdb" in k.lower() for k in ops[0].get("customMetrics", {}))
@@ -220,12 +210,45 @@ def test_drain_uses_rocksdb_state_store(spark):
     )
 
 
-def test_drain_state_store_flag_reverts_to_hdfs(spark, monkeypatch):
-    from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs, streaming_q
+def _sq_views(spark):
+    return [
+        r.tableName
+        for r in spark.sql("SHOW TABLES").collect()
+        if r.isTemporary and r.tableName.startswith("sq_")
+    ]
 
-    from .conftest import SF_SMOKE
 
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "hdfs")
-    df = all_specs()["q51_streaming_dedup"].spark(spark, SF_SMOKE)
-    assert df.count() > 0
-    assert streaming_q.LAST_DRAIN_PROGRESS["provider"] == "hdfs-default"
+def test_drain_leaves_no_view_and_frames_stay_readable(spark):
+    from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
+
+    spec = all_specs()["q50_streaming_tumbling"]
+    frames = [spec.spark(spark, SF_SMOKE) for _ in range(3)]
+    assert _sq_views(spark) == []
+    rows = [f.collect() for f in frames]
+    assert rows[0] and rows[0] == rows[1] == rows[2]
+
+
+def test_failed_drain_restores_session(spark, events_parquet, monkeypatch):
+    """A drain whose operator fails mid-stream leaves no view, no
+    checkpoint dir and no changed conf behind."""
+    made = []
+    real_mkdtemp = SW.tempfile.mkdtemp
+
+    def mkdtemp(*a, **kw):
+        made.append(real_mkdtemp(*a, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(SW.tempfile, "mkdtemp", mkdtemp)
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    prev_provider = spark.conf.get(provider, None)
+
+    def op(df):
+        return df.withColumn("boom", F.raise_error(F.lit("drain failure")))
+
+    with pytest.raises(Exception, match="drain failure"):
+        SW.run_on_closed_input(spark, events_parquet, op, "append", partitions="3")
+    assert _sq_views(spark) == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert spark.conf.get(provider, None) == prev_provider
+    assert len(made) == 1 and not os.path.exists(made[0])
