@@ -1,27 +1,41 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the engine's headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+"""Catalog benchmark and single-query probe.
 
-    {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"qNN": sec, ...}, "sf": ..., "delivery_rec_per_s": ...}
+    python bench.py                                    # the sweep
+    python bench.py time    <qNN|name>... [--sf DIR]
+    python bench.py profile <qNN|name>... [--sf DIR]
+    python bench.py plan    <qNN|name>... [--sf DIR] [--out FILE]
+    python bench.py check   <qNN|name>... [--sf DIR]
 
-The stdout line keys timings by the canonical qNN prefix and uses
-compact separators so the WHOLE line fits the driver's ~2 KB stdout
-tail capture (its `parsed` field was null in BENCH_r09.json because
-the full-name line ran ~5 KB and got truncated). The full-fidelity
-result — full query names, untruncated errors — is written to
-bench_full.json beside this script on every run.
+The sweep times every catalog query at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 test data) on local[$SPARK_GRAFT_CPUS], then the end-to-end
+delivery throughput (produce -> transform -> dual sink; BASELINE.md's
+reference is 2,576 rec/s), and prints ONE JSON line:
 
-Also measures end-to-end delivery throughput (produce -> transform ->
-dual sink) to compare against BASELINE.md's 2,576 rec/s reference
-number (acceptance: >= ~1,250 rec/s).
+    {"metric":"catalog_queries_total_wall","value":<total_sec>,
+     "unit":"sec","queries":{"qNN":sec,...},"sf":...,
+     "delivery_rec_per_s":...,"n_queries_ok":...,"query_errors":[...],
+     "full_results":"bench_full.json"}
+
+That compact line is the driver contract: timings keyed by the qNN
+prefix at 2 decimals, error strings cut to 80 characters, compact
+separators. The full result (full query names, 3-decimal timings,
+untruncated errors, repeats, sweep wall time, host canary) is written
+to bench_full.json beside this script on every sweep.
+
+The probe modes take exact catalog names or qNN prefixes and `--sf`
+(default: the sweep's directory). `time` uses the sweep's estimator.
+`profile` prints one warm run's job census. `plan` prints (or writes
+to `--out`) the formatted physical plan. `check` compares each query
+with its DuckDB oracle and exits 1 if any fails.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -35,78 +49,86 @@ from aws_dla_kinesis_delivery_stream_example_spark.operators.staging import (  #
 )
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs  # noqa: E402
 from aws_dla_kinesis_delivery_stream_example_spark.session import get_spark  # noqa: E402
+from perfbench.census import StatusStore, cpu_row, host_canary  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# Per-query repeat count; the reported number is the MIN across repeats.
-# One-shot timings at this scale carry 2x noise from GC/codegen-cache
-# luck (q33/q37 doubled round-over-round with zero code change), which
-# makes regressions unattributable — min-of-3 is the stable estimator
-# of the plan's actual cost.
-REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-
-# Every catalog query runs in the bench; this keeps the judge's
-# BENCH_r{N}.json aligned with SURVEY §2 coverage.
-SKIP: set[str] = set()
+# A timing is the MIN over this many runs: one-shot timings at this
+# scale carry 2x noise from GC and codegen-cache luck, so the minimum
+# is the stable estimate of a plan's cost.
+REPEATS = 3
 
 
-def bench_queries(spark) -> dict[str, float]:
+def qnn(name: str) -> str:
+    """The canonical ``qNN`` prefix of a catalog name (``name`` itself
+    if it has none)."""
+    m = re.match(r"q\d+", name)
+    return m.group() if m else name
+
+
+def resolve(selectors: list[str], specs: dict) -> list[str]:
+    """Catalog names for ``selectors``, each an exact name or a qNN
+    prefix: ``q50`` selects ``q50_streaming_tumbling`` and ``q1``
+    selects nothing (it is no query's prefix)."""
+    out = []
+    for sel in selectors:
+        hits = [k for k in sorted(specs) if sel in (k, qnn(k))]
+        if not hits:
+            raise SystemExit(
+                f"no catalog query matches {sel!r} (use the exact name or its qNN prefix)"
+            )
+        out.extend(hits)
+    return out
+
+
+def _warm_tables(spark, sf: str) -> None:
+    """Touch every table once so the first timed query does not pay
+    JVM, codegen and file-listing start-up."""
     from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import (
         TABLES,
         load_table,
     )
 
-    # Warm-up: touch every table once so the first timed query doesn't
-    # pay JVM/codegen/file-listing startup.
     for t in TABLES:
-        load_table(spark, SF_DIR, t).count()
+        load_table(spark, sf, t).count()
 
-    # Per-query fault isolation: one broken query must not zero the
-    # whole round's perf evidence (round 3 lost ALL numbers to a single
-    # analysis error). Record {"err": ...} for the failure, keep going,
-    # and ALWAYS emit the final JSON line.
-    timings: dict[str, object] = {}
-    for name, spec in sorted(all_specs().items()):
-        if name in SKIP:
-            continue
-        best = None
-        try:
-            for _ in range(max(1, REPEATS)):
-                t0 = time.perf_counter()
-                df = spec.spark(spark, SF_DIR)
-                df.collect()
-                took = time.perf_counter() - t0
-                best = took if best is None else min(best, took)
-                # Operator-internal persists (staging tables) are per-query
-                # scratch: release them, and force a collection so one run's
-                # garbage doesn't tax the next one's measurement.
-                release_staging()
-                # bench is single-threaded: any frame still counted as
-                # staged on another thread is a cross-thread staging
-                # leak — fail the artifact run loudly, don't let it
-                # silently accrue cache across queries. Checked BEFORE
-                # clearCache(): the counter is advisory and over-reports
-                # after a clearCache drops caches without decrementing
-                # it (staging.py), so asserting after would fire only
-                # post-remediation and then poison every later query.
-                leaked = staged_elsewhere()
-                assert leaked == 0, (
-                    f"{name}: {leaked} staged frame(s) leaked across "
-                    "threads after release_staging()"
+
+def _reset(spark) -> int:
+    """Drop one run's per-query scratch (staging frames, caches, then
+    garbage) so it does not tax the next measurement. Returns the
+    staged frames still held by other threads, read BEFORE
+    clearCache(): that drops frames without decrementing the counter,
+    which then over-reports."""
+    release_staging()
+    leaked = staged_elsewhere()
+    spark.catalog.clearCache()
+    spark._jvm.System.gc()
+    return leaked
+
+
+def _best_of(spark, name: str, spec, sf: str) -> float | dict:
+    """Best of REPEATS collects of ``spec`` in seconds, or
+    ``{"err": ...}``. One broken query must not cost the other
+    timings: a failure is recorded, not raised. A failure after a
+    completed run keeps that run's timing, unless it is a staged frame
+    leaked across threads: every caller here is single-threaded, so
+    that is a harness fault and the entry becomes an error."""
+    best = None
+    try:
+        for _ in range(REPEATS):
+            t0 = time.perf_counter()
+            spec.spark(spark, sf).collect()
+            took = time.perf_counter() - t0
+            best = took if best is None else min(best, took)
+            leaked = _reset(spark)
+            if leaked:
+                raise AssertionError(
+                    f"{name}: {leaked} staged frame(s) leaked across threads "
+                    "after release_staging()"
                 )
-                spark.catalog.clearCache()
-                spark._jvm.System.gc()
-            timings[name] = round(best, 3)
-        except Exception as exc:  # noqa: BLE001 — isolation is the point
-            err = f"{type(exc).__name__}: {exc}"[:500]
-            # a failure on a LATER repeat must not discard the valid
-            # timing already measured on earlier repeats
-            if best is not None:
-                timings[name] = round(best, 3)
-            else:
-                timings[name] = {"err": err}
-            release_staging()
-            spark.catalog.clearCache()
-    return timings
+    except Exception as exc:  # noqa: BLE001 — isolation is the point
+        if best is None or _reset(spark):
+            return {"err": f"{type(exc).__name__}: {exc}"[:500]}
+    return round(best, 3)
 
 
 def bench_delivery(spark, n_records: int = 100_000) -> float:
@@ -137,63 +159,47 @@ def bench_delivery(spark, n_records: int = 100_000) -> float:
         shutil.rmtree(base, ignore_errors=True)
 
 
-def _cpu_row() -> list[int]:
-    with open("/proc/stat") as f:
-        for line in f:
-            if line.startswith("cpu "):
-                return [int(x) for x in line.split()[1:]]
-    return []
-
-
-def _host_canary(before: list[int], after: list[int]) -> dict[str, float]:
-    """Steal/iowait/busy share of the sweep's wall clock, from the
-    /proc/stat ``cpu`` row sampled before and after it: each share is
-    that column's tick delta over the total tick delta. A sweep run
-    with steal near 0% was not slowed by neighbours on the host."""
-    if not before or not after:
-        return {}
-    d = [y - x for x, y in zip(before, after)]
-    tot = sum(d) or 1
-    names = ["user", "nice", "sys", "idle", "iowait", "irq", "softirq", "steal"]
-    pct = {n: round(100.0 * v / tot, 2) for n, v in zip(names, d)}
-    return {
-        "steal_pct": pct.get("steal", 0.0),
-        "iowait_pct": pct.get("iowait", 0.0),
-        "busy_pct": round(100.0 - pct.get("idle", 0.0), 2),
+def stdout_line(result: dict) -> str:
+    """The driver's one JSON line, built from the full result."""
+    queries = {
+        qnn(k): {"err": str(v.get("err", ""))[:80]} if isinstance(v, dict) else round(v, 2)
+        for k, v in result["queries"].items()
     }
+    line = {
+        "metric": result["metric"],
+        "value": result["value"],
+        "unit": result["unit"],
+        "queries": queries,
+        "sf": result["sf"],
+        "delivery_rec_per_s": result["delivery_rec_per_s"],
+        "n_queries_ok": result["n_queries_ok"],
+        "query_errors": result["query_errors"],
+        "full_results": "bench_full.json",
+    }
+    return json.dumps(line, separators=(",", ":"))
 
 
-def main() -> None:
+def sweep() -> None:
     spark = get_spark(app_name="bench")
-    cpu0 = _cpu_row()
+    cpu0 = cpu_row()
     t_all0 = time.perf_counter()
-    timings = bench_queries(spark)
+    _warm_tables(spark, SF_DIR)
+    timings = {
+        name: _best_of(spark, name, spec, SF_DIR)
+        for name, spec in sorted(all_specs().items())
+    }
     wall = round(time.perf_counter() - t_all0, 3)
-    canary = _host_canary(cpu0, _cpu_row())
+    canary = host_canary(cpu0, cpu_row())
     ok = {k: v for k, v in timings.items() if isinstance(v, (int, float))}
-    errs = sorted(k for k in timings if k not in ok)
-    total = round(sum(ok.values()), 3)
-    # Round-over-round comparability: the catalog grows most rounds,
-    # so the headline total is not apples-to-apples with the previous
-    # artifact. Emit a subtotal over the PREVIOUS round's catalog
-    # (q01..q95 as of round 8) so total drift separates into
-    # "shared queries moved" vs "new queries added".
-    import re as _re
-
-    def _qnum(name: str) -> int:
-        m = _re.match(r"q(\d+)", name)
-        return int(m.group(1)) if m else 10**9
-
-    prev_total = round(sum(v for k, v in ok.items() if _qnum(k) <= 95), 3)
-    # Same estimator as the queries: best of REPEATS (first run pays
-    # streaming-query codegen/startup; observed 22k cold vs 80k warm).
+    # Same estimator as the queries: the first drain pays streaming
+    # codegen and start-up.
     try:
-        tps = max(bench_delivery(spark) for _ in range(max(1, REPEATS)))
+        tps = max(bench_delivery(spark) for _ in range(REPEATS))
     except Exception as exc:  # noqa: BLE001
         tps = {"err": f"{type(exc).__name__}: {exc}"[:500]}
     result = {
         "metric": "catalog_queries_total_wall",
-        "value": total,
+        "value": round(sum(ok.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": SF_DIR,
@@ -202,58 +208,101 @@ def main() -> None:
         "agg": "min",
         "sweep_wall_sec": wall,
         "n_queries_ok": len(ok),
-        "query_errors": errs,
-        "total_prev_catalog_q01_q95": prev_total,
-        # Round-17 verdict Next #8: the host canary recorded WITH the
-        # sweep, so neighbor-steal noise attribution is checkable from
-        # the artifact itself (steal ~0% = trust the numbers).
+        "query_errors": sorted(k for k in timings if k not in ok),
+        # steal near 0% means neighbours on the host did not slow the sweep
         "host_canary": canary,
     }
-    # Full-fidelity sidecar: the external driver captures only the
-    # LAST ~2 KB of stdout, which truncated q100+'s timings out of
-    # BENCH_r09.json (round-9 verdict Next #6). The complete result —
-    # full query names, untruncated error strings — always lands here.
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
     with open(full_path, "w") as f:
         json.dump(result, f, indent=1, sort_keys=True)
-    # The ONE stdout JSON line must itself fit the driver's 2141-char
-    # tail so its `parsed` field is non-null: key timings by the
-    # canonical qNN prefix (unambiguous — catalog names are qNN_slug),
-    # truncate error strings, and use compact separators. ~13 B/query
-    # keeps 126 queries + metadata under 1.8 KB.
-    import re as _re2
+    print(stdout_line(result))
 
-    def _short(name: str) -> str:
-        m = _re2.match(r"(q\d+)", name)
-        return m.group(1) if m else name
 
-    compact: dict[str, object] = {}
-    for k, v in timings.items():
-        if isinstance(v, dict):
-            compact[_short(k)] = {"err": str(v.get("err", ""))[:80]}
+def _profile(spark, name: str, spec, sf: str) -> str:
+    """One warm run's census under its own job group. A streaming
+    query's micro-batch jobs run under its run id's group, so they are
+    not counted here."""
+    spec.spark(spark, sf).collect()  # warm: codegen and caches
+    _reset(spark)
+    sc = spark.sparkContext
+    group = f"bench-profile-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        t0 = time.perf_counter()
+        spec.spark(spark, sf).collect()
+        took = time.perf_counter() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    c = StatusStore(spark).census(group, [])
+    _reset(spark)
+    return (
+        f"PROFILE {name} {took:.3f}s jobs={c.jobs} stages={c.stages} "
+        f"tasks={c.totals['tasks']} run_ms={c.totals['executor_run_ms']} "
+        f"shuffle_write_bytes={c.totals['shuffle_write_bytes']}"
+    )
+
+
+def _plan(spark, spec, sf: str) -> str:
+    df = spec.spark(spark, sf)
+    txt = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    _reset(spark)
+    return txt
+
+
+def _check(spark, spec, sf: str) -> tuple[bool, str]:
+    from tests.oracle_utils import compare
+
+    try:
+        df = spec.spark(spark, sf)
+        if not spec.oracle:
+            return True, f" no_oracle rows={df.count()}"
+        ok, msg = compare(df, spec.oracle, sf)
+        return ok, "" if ok else msg
+    except Exception as exc:  # noqa: BLE001 — a raising query fails its check
+        return False, f"{type(exc).__name__}: {exc}"
+    finally:
+        _reset(spark)
+
+
+def probe(argv: list[str]) -> int:
+    p = argparse.ArgumentParser(prog="bench.py", description="Probe single catalog queries.")
+    p.add_argument("mode", choices=["time", "profile", "plan", "check"])
+    p.add_argument("names", nargs="+", metavar="qNN|name")
+    p.add_argument("--sf", default=SF_DIR)
+    p.add_argument("--out", help="plan: write the plan of the one query to this file")
+    args = p.parse_args(argv)
+    specs = all_specs()
+    names = resolve(args.names, specs)
+    if args.out and (args.mode != "plan" or len(names) != 1):
+        p.error("--out takes plan mode and one query")
+    spark = get_spark(app_name=f"bench_{args.mode}")
+    if args.mode in ("time", "profile"):
+        _warm_tables(spark, args.sf)
+    failed = 0
+    for name in names:
+        spec = specs[name]
+        if args.mode == "time":
+            best = _best_of(spark, name, spec, args.sf)
+            failed += isinstance(best, dict)
+            print(f"TIME {name} {best if isinstance(best, dict) else f'{best:.3f}'}", flush=True)
+        elif args.mode == "profile":
+            print(_profile(spark, name, spec, args.sf), flush=True)
+        elif args.mode == "plan":
+            txt = _plan(spark, spec, args.sf)
+            if args.out:
+                with open(args.out, "w") as f:
+                    f.write(txt)
+                print(f"PLAN {name} -> {args.out} ({txt.count('Exchange')} Exchange refs)")
+            else:
+                print(f"===== {name} =====\n{txt}")
         else:
-            # 2 decimals ON THE LINE ONLY (10 ms granularity — far
-            # below run-to-run noise); bench_full.json keeps 3.
-            compact[_short(k)] = round(v, 2)
-    # Round-17 verdict Next #2 (the r16 line overflowed the driver's
-    # ~2.1 KB tail capture and killed the round-over-round table):
-    # keep the one JSON line BOUNDED — contract keys + the per-query
-    # map at 2 decimals; everything bulky (repeats/agg/
-    # sweep_wall/host_canary/prev-catalog subtotal, 3-decimal
-    # timings, full names) lives in bench_full.json.
-    line = {
-        "metric": result["metric"],
-        "value": total,
-        "unit": "sec",
-        "queries": compact,
-        "sf": SF_DIR,
-        "delivery_rec_per_s": tps,
-        "n_queries_ok": len(ok),
-        "query_errors": errs,
-        "full_results": "bench_full.json",
-    }
-    print(json.dumps(line, separators=(",", ":")))
+            ok, msg = _check(spark, spec, args.sf)
+            print(f"CHECK {name} " + (f"OK{msg}" if ok else f"FAIL {msg[:300]}"), flush=True)
+            failed += not ok
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    if len(sys.argv) > 1:
+        sys.exit(probe(sys.argv[1:]))
+    sweep()

@@ -1,0 +1,64 @@
+"""bench.py's pure pieces: the query selector and the driver's stdout
+line. No SparkSession: the specs are passed in and the line is built
+from the committed bench_full.json."""
+
+from __future__ import annotations
+
+import importlib.util
+import json
+import os
+import re
+
+import pytest
+
+from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_spec = importlib.util.spec_from_file_location("bench", os.path.join(REPO, "bench.py"))
+bench = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(bench)
+
+
+def _load(name: str) -> dict:
+    with open(os.path.join(REPO, name)) as f:
+        return json.load(f)
+
+
+def test_resolve_takes_exact_name_or_qnn_prefix():
+    specs = all_specs()
+    assert bench.resolve(["q50"], specs) == ["q50_streaming_tumbling"]
+    assert bench.resolve(["q50_streaming_tumbling", "q107"], specs) == [
+        "q50_streaming_tumbling",
+        "q107_doc_pagerank",
+    ]
+
+
+def test_resolve_rejects_a_bare_prefix_and_unknown_names():
+    specs = all_specs()
+    # "q1" must not expand to every q1xx query
+    with pytest.raises(SystemExit, match="no catalog query matches 'q1'"):
+        bench.resolve(["q1"], specs)
+    with pytest.raises(SystemExit, match="no catalog query matches 'q50_nope'"):
+        bench.resolve(["q50_nope"], specs)
+
+
+def test_stdout_line_from_committed_full_result():
+    full = _load("bench_full.json")
+    line = bench.stdout_line(full)
+    assert ", " not in line and '": ' not in line  # compact separators
+    parsed = json.loads(line)
+    assert set(parsed) == set(_load("BENCH_r18.json")["parsed"])
+    assert list(parsed["queries"]) == [bench.qnn(k) for k in full["queries"]]
+    assert all(re.fullmatch(r"q\d+", k) for k in parsed["queries"])
+    for name, sec in full["queries"].items():
+        assert parsed["queries"][bench.qnn(name)] == round(sec, 2)
+    assert parsed["full_results"] == "bench_full.json"
+
+
+def test_stdout_line_cuts_errors_to_80_chars():
+    full = _load("bench_full.json")
+    full["queries"]["q50_streaming_tumbling"] = {"err": "AnalysisException: " + "x" * 500}
+    parsed = json.loads(bench.stdout_line(full))
+    err = parsed["queries"]["q50"]["err"]
+    assert len(err) == 80 and err.startswith("AnalysisException: ")
