@@ -12,9 +12,11 @@ body performs, on each micro-batch (= the Firehose buffer flush):
    opensearch-py in the same foreachBatch)
 
 Two-destination fan-out (K5) = two DeliveryPipeline instances off the
-same source directory, each with its own checkpoint — exactly the
-reference's two Firehose streams consuming one Kinesis stream
-(kds_example/iac/s2_app.py:314-316, :837-839).
+same source directory, each with its own checkpoint, Observation and
+``DeliveryResult``, running as two concurrent streaming queries —
+exactly the reference's two Firehose streams reading one Kinesis
+stream independently and at the same time
+(kds_example/iac/s2_app.py:314-316, :837-839; ``pipeline.DualDelivery``).
 
 Buffering parity (B1/B2/B4): Firehose's 60 s / 5 MB either-or flush maps
 to ``trigger(processingTime="60 seconds")`` for the time condition plus
@@ -69,6 +71,10 @@ PREFIX_BACKUP = "01-backup"
 PREFIX_BACKUP_FAILED = "02-backup-failed"
 PREFIX_SUCCESS = "03-success"
 PREFIX_FAILED = "04-failed"
+
+# Session conf holding how many StreamingQueryProgress entries a query
+# keeps in recentProgress (K8, see ``progress_retention``).
+PROGRESS_RETENTION_KEY = "spark.sql.streaming.numRecentProgressUpdates"
 
 
 @dataclass
@@ -191,21 +197,14 @@ class DeliveryPipeline:
                     return True
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # Serialize the original rows to JSON ONCE and cache THAT frame:
-        # the raw backup (K3) and the transform input share json_line, so
-        # caching post-serialization saves a whole Jackson pass per batch
-        # (the round-2 plan serialized once for the json-format backup
-        # writer and again for the transform input). Persisting BEFORE
-        # the emptiness probe also keeps isEmpty() from adding an extra
-        # partial source scan to the FileStreamSource numInputRows metric
-        # (observed 1004 rows reported for 1000 records): on the cached
-        # frame every source partition is read exactly once.
+        # Serialize the original rows to JSON once and cache that frame:
+        # the raw backup (K3) and the transform input share json_line.
+        # The backup write is the first action over the cached frame, so
+        # every source partition is read exactly once per flush (which
+        # also keeps FileStreamSource's numInputRows equal to the input).
         with_json = batch_df.withColumn(
             "json_line", F.to_json(F.struct(*batch_df.columns))
         ).persist()
-        if with_json.isEmpty():
-            with_json.unpersist()
-            return
         transformed = None  # assigned mid-try; finally must not NameError
         try:
             backup_failed = self._write_backup(with_json, batch_id)
@@ -239,6 +238,8 @@ class DeliveryPipeline:
                 ok.select("payload"), self.path(PREFIX_SUCCESS), str(batch_id), "text"
             )
             m = obs.get  # blocks until the first action over `transformed`
+            if m["n_input"] == 0:  # empty flush: nothing to route or count
+                return
 
             if (m["n_failed"] or 0) > 0:
                 # K2: error sink keeps the ORIGINAL payload.
@@ -348,15 +349,17 @@ class DeliveryPipeline:
     # -- run ---------------------------------------------------------------
     def run(self, await_termination: bool = True):
         """Start the streaming query. With trigger_seconds=None uses
-        availableNow (drain the source and stop — the test/bench mode)."""
+        availableNow (drain the source and stop — the test/bench mode)
+        and, if ``await_termination``, waits for it via ``finish`` and
+        then restores the progress retention."""
         # Raise the progress retention (see progress_retention field) —
         # Spark reads this conf on EVERY progress update, so it must
-        # stay raised for the query's lifetime. The drain path restores
-        # the prior value after termination; a continuous-mode caller
-        # should call restore_progress_retention() after stopping.
-        _RET_KEY = "spark.sql.streaming.numRecentProgressUpdates"
-        self._prior_progress_retention = self.spark.conf.get(_RET_KEY, None)
-        self.spark.conf.set(_RET_KEY, str(self.progress_retention))
+        # stay raised for the query's lifetime. The caller that waits
+        # for termination restores the prior value afterwards; a
+        # continuous-mode caller should call restore_progress_retention()
+        # after stopping.
+        self._prior_progress_retention = self.spark.conf.get(PROGRESS_RETENTION_KEY, None)
+        self.spark.conf.set(PROGRESS_RETENTION_KEY, str(self.progress_retention))
         reader = self.spark.readStream.schema(self.payload_schema)
         if self.max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
@@ -376,23 +379,29 @@ class DeliveryPipeline:
         self.last_query = query
         if await_termination and self.trigger_seconds is None:
             try:
-                query.awaitTermination()
-                self._log_progress(query)
+                self.finish(query)
             finally:
                 self.restore_progress_retention()
         return query
 
+    def finish(self, query) -> None:
+        """Wait for a started drain query to terminate, then append its
+        progress to the ``_progress`` log. Raises the query's failure
+        (nothing is logged then). Leaves the progress retention raised:
+        the caller restores it once no query that needs it is running."""
+        query.awaitTermination()
+        self._log_progress(query)
+
     def restore_progress_retention(self) -> None:
         """Undo run()'s session-wide progress-retention raise (no-op if
         run() hasn't set it or it was already restored)."""
-        _RET_KEY = "spark.sql.streaming.numRecentProgressUpdates"
         prior = getattr(self, "_prior_progress_retention", "unset")
         if prior == "unset":
             return
         if prior is None:
-            self.spark.conf.unset(_RET_KEY)
+            self.spark.conf.unset(PROGRESS_RETENTION_KEY)
         else:
-            self.spark.conf.set(_RET_KEY, prior)
+            self.spark.conf.set(PROGRESS_RETENTION_KEY, prior)
         self._prior_progress_retention = "unset"
 
     # -- K8 observability: per-delivery-stream progress log --------------
@@ -441,11 +450,12 @@ class DeliveryPipeline:
 
     # -- inspection surface (SURVEY.md §2.7 A1-A2, §2.8 Q1-Q2) -------------
     def count_sink_records(self, prefix: str) -> int:
-        """A1 parity: records = JSON lines under the prefix."""
-        try:
-            return self.spark.read.text(self.path(prefix)).count()
-        except Exception:
+        """A1 parity: records = JSON lines under the prefix (0 when the
+        prefix was never written; a failing read raises)."""
+        p = self.path(prefix)
+        if not os.path.isdir(p):
             return 0
+        return self.spark.read.text(p).count()
 
     def count_sink_objects(self, prefix: str) -> int:
         """A2 parity: number of sink files (one per partition per flush)."""
@@ -464,8 +474,9 @@ class DeliveryPipeline:
         return self.spark.read.schema(self.payload_schema).json(self.path(PREFIX_SUCCESS))
 
     def count_documents(self) -> int:
-        """A3/Q2 parity: document-sink count."""
-        try:
-            return self.spark.read.parquet(self.path("documents")).count()
-        except Exception:
+        """A3/Q2 parity: document-sink count (0 when the local document
+        sink was never written; a failing read raises)."""
+        p = self.path("documents")
+        if not os.path.isdir(p):
             return 0
+        return self.spark.read.parquet(p).count()

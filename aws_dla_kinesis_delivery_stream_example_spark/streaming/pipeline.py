@@ -1,7 +1,7 @@
 """Pipeline builder (SURVEY.md §3.4): construct the reference's full
 topology — one source, two delivery streams (S3-style JSON-lines sink
 and OpenSearch-style document sink), each with its own transform,
-backup, error routing and checkpoint — and run them.
+backup, error routing and checkpoint — and run them concurrently.
 
 The reference assembles this with CloudFormation resource groups
 (rg5/rg6 both consuming one Kinesis stream, iac/s2_app.py:314-316,
@@ -21,12 +21,46 @@ from .delivery import DeliveryPipeline
 
 @dataclass
 class DualDelivery:
+    """The two delivery streams run as two concurrent streaming queries
+    on one session, each with its own checkpoint (the Structured
+    Streaming model of independent queries side by side), so their
+    micro-batch bodies run on separate callback threads. They share no
+    mutable state: each pipeline owns its ``DeliveryResult``,
+    ``Observation``s, destination dir and document client."""
+
     to_s3: DeliveryPipeline
     to_docs: DeliveryPipeline
 
     def run(self) -> "DualDelivery":
-        self.to_s3.run()
-        self.to_docs.run()
+        """Start both queries, then, for drain-mode (availableNow)
+        pipelines, wait for both and write both ``_progress`` logs. A
+        failed query does not stop the other from draining: the first
+        failure is re-raised once both have terminated. The progress
+        retention is restored in reverse start order, only after both
+        have terminated. Continuous-mode pipelines are started and left
+        running, as ``DeliveryPipeline.run`` does."""
+        pipes = (self.to_s3, self.to_docs)
+        drains = [p for p in pipes if p.trigger_seconds is None]
+        failures = []
+        try:
+            for pipe in pipes:
+                pipe.run(await_termination=False)
+            for pipe in drains:
+                try:
+                    pipe.finish(pipe.last_query)
+                except Exception as exc:  # the other stream still drains
+                    failures.append(exc)
+        finally:
+            # Only reached with a query still active when a start failed
+            # or the wait was interrupted: no drain outlives run().
+            for pipe in drains:
+                query = getattr(pipe, "last_query", None)
+                if query is not None and query.isActive:
+                    query.stop()
+            for pipe in reversed(drains):
+                pipe.restore_progress_retention()
+        if failures:
+            raise failures[0]
         return self
 
     def reconciled(self) -> bool:

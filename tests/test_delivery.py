@@ -6,9 +6,12 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import nullcontext
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
+from aws_dla_kinesis_delivery_stream_example_spark.functions.serde import BANK_ACCOUNT_SCHEMA
 from aws_dla_kinesis_delivery_stream_example_spark.sources.jsonlines import (
     generate_bank_accounts,
     produce_jsonlines,
@@ -18,7 +21,9 @@ from aws_dla_kinesis_delivery_stream_example_spark.streaming.delivery import (
     PREFIX_BACKUP_FAILED,
     PREFIX_FAILED,
     PREFIX_SUCCESS,
+    PROGRESS_RETENTION_KEY,
     DeliveryPipeline,
+    DeliveryResult,
 )
 from aws_dla_kinesis_delivery_stream_example_spark.streaming.doc_sink import DocumentSink
 from aws_dla_kinesis_delivery_stream_example_spark.streaming.transform import DropIt
@@ -251,15 +256,150 @@ def test_kinesis_stub_raises_cleanly(spark):
         kinesis_reader(spark, "my-stream")
 
 
+def _set_retention(spark, value: str | None) -> None:
+    if value is None:
+        spark.conf.unset(PROGRESS_RETENTION_KEY)
+    else:
+        spark.conf.set(PROGRESS_RETENTION_KEY, value)
+
+
+# The caller's progress retention before a run: unset, or a value the
+# caller chose. Either must be back once run() returns or raises.
+CALLER_RETENTIONS = (None, "250")
+
+
+def _run_dual(spark, dual, prior: str | None, raises=None) -> None:
+    """Run ``dual`` under the caller retention ``prior`` (the session's
+    own value is put back afterwards) and check that no query is left
+    active and that ``prior`` is restored."""
+    before = spark.conf.get(PROGRESS_RETENTION_KEY, None)
+    _set_retention(spark, prior)
+    try:
+        with pytest.raises(raises) if raises else nullcontext():
+            dual.run()
+        assert spark.streams.active == []
+        assert spark.conf.get(PROGRESS_RETENTION_KEY, None) == prior
+    finally:
+        _set_retention(spark, before)
+
+
+def _progress_logged(pipe) -> bool:
+    log = os.path.join(pipe.dest_dir, "_progress", f"{pipe.last_query.id}.jsonl")
+    return os.path.isfile(log) and os.path.getsize(log) > 0
+
+
 def test_dual_delivery_topology(spark, source_dir, tmp_path):
     """§3.4 full-topology parity: one source, two branches, E2E
-    reconciliation across both (the reference's acceptance check)."""
+    reconciliation across both (the reference's acceptance check). Both
+    queries ran, both logged their progress, none is left active and
+    the caller's progress retention is back."""
     from aws_dla_kinesis_delivery_stream_example_spark.streaming.pipeline import build_dual_delivery
 
-    dual = build_dual_delivery(spark, source_dir, str(tmp_path / "dual")).run()
-    assert dual.reconciled()
-    c = dual.counts()
-    assert c["s3_ok"] == c["n_input"] == c["docs_ok"] == c["docs_indexed"]
+    for i, prior in enumerate(CALLER_RETENTIONS):
+        dual = build_dual_delivery(spark, source_dir, str(tmp_path / f"dual{i}"))
+        _run_dual(spark, dual, prior)
+        assert dual.reconciled()
+        c = dual.counts()
+        assert c["s3_ok"] == c["n_input"] == c["docs_ok"] == c["docs_indexed"]
+        assert _progress_logged(dual.to_s3) and _progress_logged(dual.to_docs)
+
+
+def test_dual_delivery_one_stream_fails(spark, source_dir, tmp_path):
+    """Two independent delivery streams: when one query fails, the other
+    still drains to the end, and run() raises the failure only after
+    both have terminated."""
+    from pyspark.errors import StreamingQueryException
+
+    from aws_dla_kinesis_delivery_stream_example_spark.streaming.pipeline import build_dual_delivery
+
+    n_source = spark.read.text(source_dir).count()
+    for i, prior in enumerate(CALLER_RETENTIONS):
+        dest = tmp_path / f"dual{i}"
+        dual = build_dual_delivery(spark, source_dir, str(dest))
+        # Both backup attempts fail, and the K3 fallback write itself
+        # fails because a regular file sits where its directory must go.
+        dual.to_s3.backup_failure_injector = lambda attempt: True
+        (dest / "to-s3").mkdir(parents=True)
+        (dest / "to-s3" / PREFIX_BACKUP_FAILED).write_text("not a directory")
+        _run_dual(spark, dual, prior, raises=StreamingQueryException)
+        assert dual.to_s3.result.n_batches == 0
+        docs = dual.to_docs.result
+        assert docs.n_input == n_source and docs.reconciled()
+        assert dual.to_docs.count_documents() == docs.n_ok == n_source
+        assert _progress_logged(dual.to_docs)
+
+
+def test_dual_delivery_start_failure_stops_the_other(spark, source_dir, tmp_path):
+    """When the second query cannot start, run() raises without leaving
+    the first one running under a progress retention it has restored."""
+    from aws_dla_kinesis_delivery_stream_example_spark.streaming.pipeline import build_dual_delivery
+
+    for i, prior in enumerate(CALLER_RETENTIONS):
+        dest = tmp_path / f"dual{i}"
+        dual = build_dual_delivery(spark, source_dir, str(dest))
+        dest.mkdir()
+        (dest / "to-oss").write_text("not a directory")  # no checkpoint dir fits
+        _run_dual(spark, dual, prior, raises=Py4JJavaError)
+
+
+def _flush_jobs(spark, pipe, batch_df) -> int:
+    """Number of Spark jobs one ``_process_batch`` call runs."""
+    sc = spark.sparkContext
+    group = f"flush-{os.path.basename(pipe.dest_dir)}"
+    sc.setJobGroup(group, "one delivery flush")
+    try:
+        pipe._process_batch(batch_df, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_flush_job_count_transform_path(spark, source_dir, tmp_path):
+    """A flush with planted failures runs exactly three jobs: backup,
+    success and failed sink writes (no separate emptiness probe)."""
+    p = DeliveryPipeline(spark, source_dir, str(tmp_path / "jobs-t"), transform_fn=_transform)
+    batch = spark.read.schema(p.payload_schema).json(source_dir)
+    assert _flush_jobs(spark, p, batch) == 3
+    assert p.result.n_failed > 0 and p.result.n_input == batch.count()
+
+
+def test_flush_job_count_identity_path(spark, source_dir, tmp_path):
+    """The identity flush with the document sink runs exactly three
+    jobs: backup, success and document writes."""
+    p = DeliveryPipeline(spark, source_dir, str(tmp_path / "jobs-i"), document_sink=True)
+    batch = spark.read.schema(p.payload_schema).json(source_dir)
+    assert _flush_jobs(spark, p, batch) == 3
+    assert p.count_documents() == p.result.n_ok == batch.count()
+
+
+def test_empty_flush_writes_and_counts_nothing(spark, tmp_path):
+    """An empty micro-batch routes no rows to any sink and is not
+    counted, not even as a batch."""
+    p = DeliveryPipeline(
+        spark,
+        str(tmp_path / "src"),
+        str(tmp_path / "out"),
+        transform_fn=_transform,
+        document_sink=True,
+    )
+    p._process_batch(spark.createDataFrame([], BANK_ACCOUNT_SCHEMA), 0)
+    for prefix in (PREFIX_BACKUP, PREFIX_BACKUP_FAILED, PREFIX_SUCCESS, PREFIX_FAILED):
+        assert p.count_sink_records(prefix) == 0
+    assert p.count_documents() == 0
+    assert p.result == DeliveryResult()
+
+
+def test_sink_counts_raise_on_unreadable_sink(spark, tmp_path):
+    """A sink that exists but cannot be read raises instead of counting
+    as 0 records (a vacuous reconciliation); only a never-written sink
+    counts 0."""
+    p = DeliveryPipeline(spark, str(tmp_path / "src"), str(tmp_path / "out"), document_sink=True)
+    assert p.count_documents() == 0
+    part = tmp_path / "out" / "documents" / "batch_id=0"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"this is not parquet")
+    with pytest.raises(Py4JJavaError, match="parquet"):
+        p.count_documents()
 
 
 def test_byte_size_flush(spark, source_dir, tmp_path):
