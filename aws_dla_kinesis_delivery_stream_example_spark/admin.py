@@ -24,11 +24,12 @@ def match_all(spark: SparkSession, path: str, schema=None) -> DataFrame:
 
 def count_records(spark: SparkSession, path: str) -> int:
     """Q2/A1: record count of a sink prefix (JSON lines => text lines,
-    exactly the reference's newline count, s2_inspect_data_in_s3.py:19-23)."""
-    try:
-        return spark.read.text(path).count()
-    except Exception:
+    exactly the reference's newline count, s2_inspect_data_in_s3.py:19-23).
+    0 when the prefix directory does not exist; any other read failure
+    raises, so an unreadable sink never reconciles as empty."""
+    if not os.path.isdir(path):
         return 0
+    return spark.read.text(path).count()
 
 
 def count_objects(path: str) -> int:

@@ -10,13 +10,8 @@ see ``kinesis_reader`` (stubbed: connector jar not in this image).
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..functions.serde import BANK_ACCOUNT_SCHEMA
 
 
 def generate_bank_accounts(spark: SparkSession, n: int, partitions: int = 10) -> DataFrame:
@@ -62,20 +57,6 @@ def produce_jsonlines(df: DataFrame, out_dir: str, n_files: int | None = None) -
         writer = df
     writer.write.mode("append").json(out_dir)
     return out_dir
-
-
-def drop_batch(df: DataFrame, out_dir: str) -> str:
-    """Land one more micro-batch file set into a live source dir (the
-    file source picks up the new files on its next trigger)."""
-    return produce_jsonlines(df, out_dir)
-
-
-def jsonlines_stream(spark: SparkSession, source_dir: str, schema=None, max_files: int = 1000):
-    return (
-        spark.readStream.schema(schema or BANK_ACCOUNT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .json(source_dir)
-    )
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 2500):
@@ -145,9 +126,3 @@ def kinesis_reader(
     if schema is None:
         return raw
     return decode_kinesis_records(raw, schema)
-
-
-def unique_dir(base: str) -> str:
-    d = os.path.join(base, uuid.uuid4().hex[:12])
-    os.makedirs(d, exist_ok=True)
-    return d

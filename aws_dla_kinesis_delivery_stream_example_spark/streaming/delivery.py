@@ -30,20 +30,23 @@ exclusive in Spark); with neither set, availableNow drain mode admits up
 to 1000 files per flush.
 
 Exactly-once: checkpointed source offsets + *idempotent per-batch_id
-sink writes*. Every sink write lands under a ``batch_id=N`` partition
-with dynamic partition overwrite, so a micro-batch replayed after a
-mid-batch crash rewrites its own partition instead of appending
-duplicates — effectively exactly-once end-to-end, strictly stronger
-than the reference's at-least-once + recordId reconciliation (§2.9).
+sink writes*. Every sink write is a ``doc_sink.write_flush``: it lands
+under a ``batch_id=N`` partition with dynamic partition overwrite, so a
+micro-batch replayed after a mid-batch crash rewrites its own partition
+instead of appending duplicates — effectively exactly-once end-to-end,
+strictly stronger than the reference's at-least-once + recordId
+reconciliation (§2.9).
 (Driver-side ``DeliveryResult`` counters are in-memory per-run
 conveniences and are NOT crash-durable; the durable numbers are the
 sink partitions themselves, see ``count_sink_records``.)
-Retry (K7): one bounded retry around the document-sink write, then
-rows route to the error prefix — reference NumberOfRetries=1
-(kds_example/iac/s2_app.py:353-356). The raw-backup write gets the
-same bounded retry, after which original rows land under
-``02-backup-failed/`` (K3 failure branch,
-kds_example/iac/s2_app.py:806-808).
+Retry (K7): one helper, ``DeliveryPipeline._with_one_retry``, owns the
+bounded retry — try, retry once (reference NumberOfRetries=1,
+kds_example/iac/s2_app.py:353-356), then run the fallback; every failed
+attempt bumps a ``DeliveryResult`` counter. The document-sink write
+falls back to the error prefix under the flush key ``<batch_id>-docs``,
+so it cannot clobber the K2 write of the same flush. The raw-backup
+write falls back to ``02-backup-failed/`` with the original rows (K3
+failure branch, kds_example/iac/s2_app.py:806-808).
 
 Per-batch counters come from ``df.observe`` (Observation metrics
 piggy-backing on the sink writes) — zero extra passes over the batch,
@@ -54,15 +57,17 @@ micro-batch at scale.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import admin
 from ..functions import serde
-from .doc_sink import DocumentSink, ParquetDocumentSink
+from .doc_sink import DocumentSink, ParquetDocumentSink, write_flush
 from .transform import STATUS_DROPPED, STATUS_FAILED, STATUS_OK, apply_transform
 
 # Sink layout mirrors the reference's S3 prefixes
@@ -72,9 +77,29 @@ PREFIX_BACKUP_FAILED = "02-backup-failed"
 PREFIX_SUCCESS = "03-success"
 PREFIX_FAILED = "04-failed"
 
-# Session conf holding how many StreamingQueryProgress entries a query
-# keeps in recentProgress (K8, see ``progress_retention``).
+# K8: session conf holding how many StreamingQueryProgress entries a
+# query keeps in recentProgress. Spark keeps 100 by default; a drain with
+# more micro-batches would undercount throughput() and drop the head of
+# the progress log, so a drain runs under ``progress_retention``.
 PROGRESS_RETENTION_KEY = "spark.sql.streaming.numRecentProgressUpdates"
+PROGRESS_RETENTION = 10_000
+
+
+@contextmanager
+def progress_retention(spark: SparkSession) -> Iterator[None]:
+    """Raise the session's progress retention to ``PROGRESS_RETENTION``
+    for the block, then restore the caller's value (or unset it). Spark
+    reads the conf on every progress update, so a drain must terminate
+    inside the block."""
+    prior = spark.conf.get(PROGRESS_RETENTION_KEY, None)
+    spark.conf.set(PROGRESS_RETENTION_KEY, str(PROGRESS_RETENTION))
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(PROGRESS_RETENTION_KEY)
+        else:
+            spark.conf.set(PROGRESS_RETENTION_KEY, prior)
 
 
 @dataclass
@@ -114,8 +139,6 @@ class DeliveryPipeline:
     # Mutually exclusive with max_files_per_trigger (Spark rejects
     # both); the file-count cap wins when explicitly set.
     max_buffer_bytes: int | None = None
-    doc_sink_failure_injector: Callable[[int], bool] | None = None  # test hook
-    backup_failure_injector: Callable[[int], bool] | None = None  # test hook (K3)
     # K4 client seam: pass a DocumentSink implementation (e.g. a real
     # bulk-index client) — defaults to the local parquet stand-in.
     document_client: DocumentSink | None = None
@@ -124,13 +147,6 @@ class DeliveryPipeline:
     # setting, iac/s2_app.py:845); other values partition the document
     # sink by a time-derived index name.
     index_rotation: str = "NoRotation"  # NoRotation|OneHour|OneDay|OneMonth
-    # K8: recentProgress retains only the last N entries (Spark default
-    # 100); a drain with more micro-batches would silently undercount
-    # throughput() and drop the head of the progress log, so run()
-    # raises the session retention to this for the query's lifetime and
-    # RESTORES the prior value afterwards (an explicit knob rather than
-    # a permanent global side effect on the shared SparkSession).
-    progress_retention: int = 10_000
 
     def __post_init__(self) -> None:
         valid = ("NoRotation", *self._ROTATION_FMT)
@@ -153,48 +169,34 @@ class DeliveryPipeline:
         return os.path.join(self.dest_dir, "_checkpoint")
 
     # -- the micro-batch body (the Lambda-invoke equivalent) --------------
-    def _write_partitioned(
-        self, df: DataFrame, path: str, flush_key: str, fmt: str
-    ) -> None:
-        """Idempotent sink write: every flush lands under its own
-        ``batch_id=<flush_key>`` partition with dynamic partition
-        overwrite, so a replayed micro-batch rewrites its partition
-        instead of appending duplicates (the exactly-once upgrade over
-        the reference's at-least-once, SURVEY.md §2.9)."""
-        (
-            df.withColumn("batch_id", F.lit(flush_key))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .format(fmt)
-            .save(path)
-        )
-
-    def _write_backup(self, with_json: DataFrame, batch_id: int) -> bool:
-        """K3: raw pre-transform backup with one bounded retry; on a
-        second failure the original rows land under ``02-backup-failed/``
-        (reference kds_example/iac/s2_app.py:806-808). Returns True when
-        the failure branch was taken. Writes the pre-serialized
-        ``json_line`` column as text — same JSON-lines layout as the
-        json writer, but reuses the one cached serialization pass."""
-        lines = with_json.select("json_line")
-        attempts = 0
-        while True:
+    def _with_one_retry(
+        self, write: Callable[[], None], fallback: Callable[[], None], counter: str
+    ) -> bool:
+        """K7: try ``write``, retry it once (NumberOfRetries=1), then run
+        ``fallback``. Every failed attempt bumps the ``DeliveryResult``
+        field ``counter``. Returns True when the fallback ran."""
+        for _attempt in range(2):
             try:
-                if self.backup_failure_injector and self.backup_failure_injector(attempts):
-                    raise IOError("injected backup-sink failure")
-                self._write_partitioned(
-                    lines, self.path(PREFIX_BACKUP), str(batch_id), "text"
-                )
+                write()
                 return False
             except Exception:
-                attempts += 1
-                self.result.backup_retries += 1
-                if attempts > 1:  # NumberOfRetries=1 parity
-                    self._write_partitioned(
-                        lines, self.path(PREFIX_BACKUP_FAILED), str(batch_id), "text"
-                    )
-                    return True
+                setattr(self.result, counter, getattr(self.result, counter) + 1)
+        fallback()
+        return True
+
+    def _write_backup(self, with_json: DataFrame, batch_id: int) -> bool:
+        """K3: raw pre-transform backup; when it fails past its retry the
+        original rows land under ``02-backup-failed/`` (reference
+        kds_example/iac/s2_app.py:806-808). Returns True when the failure
+        branch was taken. Writes the pre-serialized ``json_line`` column
+        as text — same JSON-lines layout as the json writer, but reuses
+        the one cached serialization pass."""
+        lines = with_json.select("json_line")
+        return self._with_one_retry(
+            lambda: write_flush(lines, self.path(PREFIX_BACKUP), str(batch_id), "text"),
+            lambda: write_flush(lines, self.path(PREFIX_BACKUP_FAILED), str(batch_id), "text"),
+            "backup_retries",
+        )
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # Serialize the original rows to JSON once and cache that frame:
@@ -234,9 +236,7 @@ class DeliveryPipeline:
             # first action over `transformed`, so `obs` is populated after
             # it — letting the empty error-sink / doc-sink jobs be skipped
             # instead of launching full passes that write zero rows.
-            self._write_partitioned(
-                ok.select("payload"), self.path(PREFIX_SUCCESS), str(batch_id), "text"
-            )
+            write_flush(ok.select("payload"), self.path(PREFIX_SUCCESS), str(batch_id), "text")
             m = obs.get  # blocks until the first action over `transformed`
             if m["n_input"] == 0:  # empty flush: nothing to route or count
                 return
@@ -244,7 +244,7 @@ class DeliveryPipeline:
             if (m["n_failed"] or 0) > 0:
                 # K2: error sink keeps the ORIGINAL payload.
                 failed = transformed.filter(F.col("status") == STATUS_FAILED)
-                self._write_partitioned(
+                write_flush(
                     failed.select("payload"), self.path(PREFIX_FAILED), str(batch_id), "text"
                 )
 
@@ -302,7 +302,8 @@ class DeliveryPipeline:
     ) -> None:
         """K4: document sink via the pluggable ``DocumentSink`` client
         seam (reference bulk-index: kds_example/oss_utils.py:54-63), with
-        one bounded retry (K7); index name rotates by delivery time per
+        one bounded retry (K7) before the payloads route to the error
+        prefix; index name rotates by delivery time per
         ``index_rotation`` (K6) — deterministically per batch (idempotent
         under replay)."""
         id_col = (
@@ -324,42 +325,23 @@ class DeliveryPipeline:
                 self._rotation_epoch(batch_id), tz=timezone.utc
             ).strftime(fmt)
             docs = docs.withColumn("index_name", F.lit(f"documents-{stamp}"))
-        attempts = 0
-        while True:
-            try:
-                if self.doc_sink_failure_injector and self.doc_sink_failure_injector(attempts):
-                    raise IOError("injected document-sink failure")
-                self.document_client.bulk_index(docs, batch_id)
-                return
-            except Exception:
-                attempts += 1
-                self.result.doc_sink_retries += 1
-                if attempts > 1:  # NumberOfRetries=1 parity
-                    # fall to error output, original payloads preserved;
-                    # distinct flush key so it cannot clobber the K2 write
-                    # for the same micro-batch.
-                    self._write_partitioned(
-                        ok.select("payload"),
-                        self.path(PREFIX_FAILED),
-                        f"{batch_id}-docs",
-                        "text",
-                    )
-                    return
+        self._with_one_retry(
+            lambda: self.document_client.bulk_index(docs, batch_id),
+            # Distinct flush key: the fallback must not clobber the K2
+            # write of the same micro-batch.
+            lambda: write_flush(
+                ok.select("payload"), self.path(PREFIX_FAILED), f"{batch_id}-docs", "text"
+            ),
+            "doc_sink_retries",
+        )
 
     # -- run ---------------------------------------------------------------
     def run(self, await_termination: bool = True):
         """Start the streaming query. With trigger_seconds=None uses
         availableNow (drain the source and stop — the test/bench mode)
-        and, if ``await_termination``, waits for it via ``finish`` and
-        then restores the progress retention."""
-        # Raise the progress retention (see progress_retention field) —
-        # Spark reads this conf on EVERY progress update, so it must
-        # stay raised for the query's lifetime. The caller that waits
-        # for termination restores the prior value afterwards; a
-        # continuous-mode caller should call restore_progress_retention()
-        # after stopping.
-        self._prior_progress_retention = self.spark.conf.get(PROGRESS_RETENTION_KEY, None)
-        self.spark.conf.set(PROGRESS_RETENTION_KEY, str(self.progress_retention))
+        and, if ``await_termination``, waits for it via ``finish``, all
+        under ``progress_retention``. A query that is not waited on runs
+        under the caller's retention."""
         reader = self.spark.readStream.schema(self.payload_schema)
         if self.max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
@@ -375,34 +357,21 @@ class DeliveryPipeline:
             writer = writer.trigger(availableNow=True)
         else:
             writer = writer.trigger(processingTime=f"{self.trigger_seconds} seconds")
-        query = writer.start()
-        self.last_query = query
-        if await_termination and self.trigger_seconds is None:
-            try:
+        drain = await_termination and self.trigger_seconds is None
+        with progress_retention(self.spark) if drain else nullcontext():
+            query = writer.start()
+            self.last_query = query
+            if drain:
                 self.finish(query)
-            finally:
-                self.restore_progress_retention()
         return query
 
     def finish(self, query) -> None:
         """Wait for a started drain query to terminate, then append its
         progress to the ``_progress`` log. Raises the query's failure
-        (nothing is logged then). Leaves the progress retention raised:
-        the caller restores it once no query that needs it is running."""
+        (nothing is logged then). The caller runs the query's start and
+        its ``finish`` inside one ``progress_retention`` block."""
         query.awaitTermination()
         self._log_progress(query)
-
-    def restore_progress_retention(self) -> None:
-        """Undo run()'s session-wide progress-retention raise (no-op if
-        run() hasn't set it or it was already restored)."""
-        prior = getattr(self, "_prior_progress_retention", "unset")
-        if prior == "unset":
-            return
-        if prior is None:
-            self.spark.conf.unset(PROGRESS_RETENTION_KEY)
-        else:
-            self.spark.conf.set(PROGRESS_RETENTION_KEY, prior)
-        self._prior_progress_retention = "unset"
 
     # -- K8 observability: per-delivery-stream progress log --------------
     @staticmethod
@@ -450,28 +419,16 @@ class DeliveryPipeline:
 
     # -- inspection surface (SURVEY.md §2.7 A1-A2, §2.8 Q1-Q2) -------------
     def count_sink_records(self, prefix: str) -> int:
-        """A1 parity: records = JSON lines under the prefix (0 when the
-        prefix was never written; a failing read raises)."""
-        p = self.path(prefix)
-        if not os.path.isdir(p):
-            return 0
-        return self.spark.read.text(p).count()
+        """A1 parity: ``admin.count_records`` of the prefix."""
+        return admin.count_records(self.spark, self.path(prefix))
 
     def count_sink_objects(self, prefix: str) -> int:
-        """A2 parity: number of sink files (one per partition per flush)."""
-        p = self.path(prefix)
-        if not os.path.isdir(p):
-            return 0
-        return sum(
-            1
-            for root, _dirs, files in os.walk(p)
-            for f in files
-            if not f.startswith(("_", "."))
-        )
+        """A2 parity: ``admin.count_objects`` of the prefix."""
+        return admin.count_objects(self.path(prefix))
 
     def read_success(self) -> DataFrame:
-        """Q1 parity: match-all read of the success sink."""
-        return self.spark.read.schema(self.payload_schema).json(self.path(PREFIX_SUCCESS))
+        """Q1 parity: ``admin.match_all`` of the success sink."""
+        return admin.match_all(self.spark, self.path(PREFIX_SUCCESS), self.payload_schema)
 
     def count_documents(self) -> int:
         """A3/Q2 parity: document-sink count (0 when the local document

@@ -12,8 +12,9 @@ Idempotence contract: ``bulk_index`` MUST be a per-``batch_id``
 overwrite (replaying a micro-batch after a crash rewrites that batch's
 documents instead of appending duplicates) — that is what upgrades the
 checkpointed source from at-least-once to effectively-exactly-once.
-OpenSearch gets this for free from ``_id``-keyed upserts; the parquet
-implementation gets it from dynamic partition overwrite on ``batch_id``.
+OpenSearch gets this for free from ``_id``-keyed upserts; every file
+sink (the parquet documents and the four delivery prefixes) gets it
+from ``write_flush``.
 """
 
 from __future__ import annotations
@@ -23,6 +24,22 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def write_flush(df: DataFrame, path: str, flush_key, fmt: str) -> None:
+    """The idempotent flush write: the flush lands under its own
+    ``batch_id=<flush_key>`` partition with dynamic partition overwrite,
+    so a replayed micro-batch rewrites its partition instead of
+    appending duplicates (the exactly-once upgrade over the reference's
+    at-least-once, SURVEY.md §2.9)."""
+    (
+        df.withColumn("batch_id", F.lit(flush_key))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .format(fmt)
+        .save(path)
+    )
 
 
 class DocumentSink(abc.ABC):
@@ -47,13 +64,7 @@ class ParquetDocumentSink(DocumentSink):
         self.path = path
 
     def bulk_index(self, docs: DataFrame, batch_id: int) -> None:
-        (
-            docs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.path)
-        )
+        write_flush(docs, self.path, batch_id, "parquet")
 
 
 def opensearch_client_factory(hosts, **kwargs) -> Callable[[], object]:

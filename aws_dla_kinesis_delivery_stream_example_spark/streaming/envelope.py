@@ -25,15 +25,10 @@ from pyspark.sql import types as T
 from ..functions import serde
 from .transform import STATUS_DROPPED, STATUS_FAILED, STATUS_OK, apply_transform
 
-# ONE definition of the Firehose envelope shape (functions/serde.py);
-# a local copy could drift from the serde the payloads round-trip
-# through. Re-exported under the historical name for callers.
-ENVELOPE_SCHEMA = serde.ENVELOPE_RECORD_SCHEMA
-
-
 def envelope_df(spark: SparkSession, event: dict) -> DataFrame:
-    """Lift a Firehose transform event dict into a DataFrame of records."""
-    return spark.createDataFrame(event["records"], ENVELOPE_SCHEMA)
+    """Lift a Firehose transform event dict into a DataFrame of records
+    (the one envelope shape, ``serde.ENVELOPE_RECORD_SCHEMA``)."""
+    return spark.createDataFrame(event["records"], serde.ENVELOPE_RECORD_SCHEMA)
 
 
 def transform_envelope(

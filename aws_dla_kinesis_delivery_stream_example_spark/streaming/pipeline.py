@@ -11,12 +11,11 @@ directory.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from .delivery import DeliveryPipeline
+from .delivery import DeliveryPipeline, progress_retention
 
 
 @dataclass
@@ -35,30 +34,32 @@ class DualDelivery:
         """Start both queries, then, for drain-mode (availableNow)
         pipelines, wait for both and write both ``_progress`` logs. A
         failed query does not stop the other from draining: the first
-        failure is re-raised once both have terminated. The progress
-        retention is restored in reverse start order, only after both
-        have terminated. Continuous-mode pipelines are started and left
-        running, as ``DeliveryPipeline.run`` does."""
+        failure is re-raised once both have terminated. Both starts, both
+        waits and the stop-on-failure cleanup run inside one
+        ``progress_retention`` block, so the caller's retention is back
+        only after no drain is left running. Continuous-mode pipelines
+        are started and left running under the caller's retention, as
+        ``DeliveryPipeline.run`` does."""
         pipes = (self.to_s3, self.to_docs)
         drains = [p for p in pipes if p.trigger_seconds is None]
         failures = []
-        try:
-            for pipe in pipes:
-                pipe.run(await_termination=False)
-            for pipe in drains:
-                try:
-                    pipe.finish(pipe.last_query)
-                except Exception as exc:  # the other stream still drains
-                    failures.append(exc)
-        finally:
-            # Only reached with a query still active when a start failed
-            # or the wait was interrupted: no drain outlives run().
-            for pipe in drains:
-                query = getattr(pipe, "last_query", None)
-                if query is not None and query.isActive:
-                    query.stop()
-            for pipe in reversed(drains):
-                pipe.restore_progress_retention()
+        with progress_retention(self.to_s3.spark):
+            try:
+                for pipe in pipes:
+                    pipe.run(await_termination=False)
+                for pipe in drains:
+                    try:
+                        pipe.finish(pipe.last_query)
+                    except Exception as exc:  # the other stream still drains
+                        failures.append(exc)
+            finally:
+                # Only reached with a query still active when a start
+                # failed or the wait was interrupted: no drain outlives
+                # run().
+                for pipe in drains:
+                    query = getattr(pipe, "last_query", None)
+                    if query is not None and query.isActive:
+                        query.stop()
         if failures:
             raise failures[0]
         return self
@@ -82,32 +83,13 @@ class DualDelivery:
         }
 
 
-def build_dual_delivery(
-    spark: SparkSession,
-    source_dir: str,
-    dest_root: str,
-    transform_s3: Callable[[dict], dict] | None = None,
-    transform_docs: Callable[[dict], dict] | None = None,
-    trigger_seconds: int | None = None,
-    index_rotation: str = "NoRotation",
-) -> DualDelivery:
-    """The two-destination fan-out: independent transforms, buffers,
-    backups and checkpoints per branch, one shared source."""
+def build_dual_delivery(spark: SparkSession, source_dir: str, dest_root: str) -> DualDelivery:
+    """The reference's two-destination fan-out with its defaults: both
+    branches drain one shared source with the identity transform, each
+    with its own backups and checkpoint; the second also fills the
+    document sink. Other topologies construct ``DualDelivery``
+    directly."""
     return DualDelivery(
-        to_s3=DeliveryPipeline(
-            spark,
-            source_dir,
-            f"{dest_root}/to-s3",
-            transform_fn=transform_s3,
-            trigger_seconds=trigger_seconds,
-        ),
-        to_docs=DeliveryPipeline(
-            spark,
-            source_dir,
-            f"{dest_root}/to-oss",
-            transform_fn=transform_docs,
-            document_sink=True,
-            trigger_seconds=trigger_seconds,
-            index_rotation=index_rotation,
-        ),
+        to_s3=DeliveryPipeline(spark, source_dir, f"{dest_root}/to-s3"),
+        to_docs=DeliveryPipeline(spark, source_dir, f"{dest_root}/to-oss", document_sink=True),
     )

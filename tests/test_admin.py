@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
+from py4j.protocol import Py4JJavaError
 
 from aws_dla_kinesis_delivery_stream_example_spark import admin
 from aws_dla_kinesis_delivery_stream_example_spark.sources.jsonlines import (
@@ -22,6 +23,18 @@ def test_match_all_count_truncate(spark, tmp_path):
     admin.truncate(sink)
     assert admin.count_records(spark, sink) == 0
     assert admin.count_objects(sink) == 0
+
+
+def test_count_records_raises_on_unreadable_sink(spark, tmp_path):
+    """Only a never-written prefix counts 0: a prefix whose objects
+    cannot be read raises instead of reconciling as empty."""
+    sink = tmp_path / "sink"
+    assert admin.count_records(spark, str(sink)) == 0
+    part = sink / "batch_id=0"
+    part.mkdir(parents=True)
+    (part / "part-00000.txt.gz").write_bytes(b"this is not gzip")
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        admin.count_records(spark, str(sink))
 
 
 def test_sink_table_ddl(spark, tmp_path):

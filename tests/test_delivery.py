@@ -25,7 +25,10 @@ from aws_dla_kinesis_delivery_stream_example_spark.streaming.delivery import (
     DeliveryPipeline,
     DeliveryResult,
 )
-from aws_dla_kinesis_delivery_stream_example_spark.streaming.doc_sink import DocumentSink
+from aws_dla_kinesis_delivery_stream_example_spark.streaming.doc_sink import (
+    DocumentSink,
+    ParquetDocumentSink,
+)
 from aws_dla_kinesis_delivery_stream_example_spark.streaming.transform import DropIt
 
 N = 2000
@@ -108,14 +111,25 @@ def test_identity_fanout_golden_roundtrip(spark, source_dir, tmp_path):
     assert all(src[r["id"]] == r for r in out)
 
 
+class _FlakySink(DocumentSink):
+    """Fails its first bulk_index, then indexes into the local sink."""
+
+    def __init__(self, path: str) -> None:
+        self.inner = ParquetDocumentSink(path)
+        self.calls = 0
+
+    def bulk_index(self, docs, batch_id: int) -> None:
+        self.calls += 1
+        if self.calls == 1:
+            raise IOError("transient document-sink failure")
+        self.inner.bulk_index(docs, batch_id)
+
+
 def test_doc_sink_retry(spark, source_dir, tmp_path):
     """K7: one bounded retry, then success."""
+    dest = str(tmp_path / "d3")
     p = DeliveryPipeline(
-        spark,
-        source_dir,
-        str(tmp_path / "d3"),
-        document_sink=True,
-        doc_sink_failure_injector=lambda attempt: attempt == 0,
+        spark, source_dir, dest, document_client=_FlakySink(os.path.join(dest, "documents"))
     )
     p.run()
     assert p.result.doc_sink_retries == 1
@@ -177,12 +191,11 @@ def test_backup_failure_branch(spark, source_dir, tmp_path):
     """K3 failure branch: when the raw-backup write fails past its one
     bounded retry, original rows land under 02-backup-failed/
     (reference prefix config kds_example/iac/s2_app.py:806-808)."""
-    p = DeliveryPipeline(
-        spark,
-        source_dir,
-        str(tmp_path / "bf"),
-        backup_failure_injector=lambda attempt: True,  # both attempts fail
-    )
+    dest = tmp_path / "bf"
+    dest.mkdir()
+    # A regular file where the backup prefix must go: both attempts fail.
+    (dest / PREFIX_BACKUP).write_text("not a directory")
+    p = DeliveryPipeline(spark, source_dir, str(dest))
     p.run()
     r = p.result
     assert r.reconciled() and r.n_input > 0
@@ -224,12 +237,18 @@ def test_document_client_seam(spark, source_dir, tmp_path):
 
 def test_document_client_failure_routes_to_error(spark, source_dir, tmp_path):
     """K7 through the seam: a client that stays down exhausts the one
-    bounded retry and the batch's payloads route to the error prefix."""
-    p = DeliveryPipeline(spark, source_dir, str(tmp_path / "seamf"), document_client=_DownSink())
-    p.run()
-    r = p.result
-    assert r.doc_sink_retries == 2 * r.n_batches
-    assert p.count_sink_records(PREFIX_FAILED) == r.n_ok + r.n_failed
+    bounded retry and the batch's payloads route to the error prefix.
+    With planted failures the fallback must not clobber the K2 error
+    write of the same flush (it uses its own flush key)."""
+    for name, fn in (("seamf", None), ("seamf-t", _transform)):
+        p = DeliveryPipeline(
+            spark, source_dir, str(tmp_path / name), transform_fn=fn, document_client=_DownSink()
+        )
+        p.run()
+        r = p.result
+        assert r.doc_sink_retries == 2 * r.n_batches
+        assert (r.n_failed > 0) == (fn is not None)
+        assert p.count_sink_records(PREFIX_FAILED) == r.n_ok + r.n_failed
 
 
 def test_replay_batch_is_idempotent(spark, tmp_path):
@@ -254,6 +273,26 @@ def test_kinesis_stub_raises_cleanly(spark):
 
     with pytest.raises(NotImplementedError, match="connector"):
         kinesis_reader(spark, "my-stream")
+
+
+def test_continuous_mode_runs_under_caller_retention(spark, source_dir, tmp_path):
+    """B1/B2/B4 continuous mode: a processingTime-triggered pipeline is
+    started and left running, delivers every record, and does not touch
+    the session's progress retention."""
+    before = spark.conf.get(PROGRESS_RETENTION_KEY, None)
+    p = DeliveryPipeline(
+        spark, source_dir, str(tmp_path / "cont"), trigger_seconds=1, document_sink=True
+    )
+    query = p.run()
+    try:
+        query.processAllAvailable()
+        assert spark.conf.get(PROGRESS_RETENTION_KEY, None) == before
+    finally:
+        query.stop()
+    n_source = spark.read.text(source_dir).count()
+    assert p.result.reconciled() and p.result.n_input == n_source
+    assert p.count_documents() == n_source
+    assert spark.streams.active == []
 
 
 def _set_retention(spark, value: str | None) -> None:
@@ -316,11 +355,11 @@ def test_dual_delivery_one_stream_fails(spark, source_dir, tmp_path):
     for i, prior in enumerate(CALLER_RETENTIONS):
         dest = tmp_path / f"dual{i}"
         dual = build_dual_delivery(spark, source_dir, str(dest))
-        # Both backup attempts fail, and the K3 fallback write itself
-        # fails because a regular file sits where its directory must go.
-        dual.to_s3.backup_failure_injector = lambda attempt: True
+        # Both backup attempts fail, and so does the K3 fallback write:
+        # a regular file sits where each directory must go.
         (dest / "to-s3").mkdir(parents=True)
-        (dest / "to-s3" / PREFIX_BACKUP_FAILED).write_text("not a directory")
+        for prefix in (PREFIX_BACKUP, PREFIX_BACKUP_FAILED):
+            (dest / "to-s3" / prefix).write_text("not a directory")
         _run_dual(spark, dual, prior, raises=StreamingQueryException)
         assert dual.to_s3.result.n_batches == 0
         docs = dual.to_docs.result
