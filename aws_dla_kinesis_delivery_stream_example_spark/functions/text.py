@@ -68,22 +68,3 @@ def hash60(col) -> Column:
     the parity-critical width/base cannot drift between the call
     sites (doc fingerprints, span window keys, chunk hashes)."""
     return F.conv(F.substring(F.md5(_c(col)), 1, 15), 16, 10).cast("long")
-
-
-def word_shingles(col, n: int = 5) -> Column:
-    """Distinct word n-gram shingles as an array<string>.
-
-    Word n-grams (not char n-grams) keep shingle frequency near-unique,
-    so the downstream self-join on shingle stays ~linear instead of
-    quadratic on hot shingles — the property that makes shingle-based
-    dedup survive 100 TB.
-    """
-    w = words(col)
-    sh = F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(w, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(sh)

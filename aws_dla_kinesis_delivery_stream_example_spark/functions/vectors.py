@@ -79,16 +79,3 @@ def int8_quantize(a) -> Column:
     maxabs = F.array_max(F.transform(a, lambda x: F.abs(x.cast("double"))))
     scale = F.lit(127.0) / F.nullif(maxabs, F.lit(0.0))
     return F.transform(a, lambda x: F.round(x.cast("double") * scale, 0).cast("int"))
-
-
-def qdot(a, b) -> Column:
-    """Exact BIGINT dot product of two int8-quantized vectors — the
-    integer analog of ``dot``; summation-order-independent, so AQE
-    re-planning and engine choice cannot move the result."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )

@@ -571,80 +571,6 @@ def shingle_novelty(
     )
 
 
-def normalize_for_edit_distance(
-    df: DataFrame, text_col: str, policy: str = "nfc"
-) -> DataFrame:
-    """Unicode pre-pass for edit-distance verification (round-9
-    verdict Next #8): project ``text_col`` into a normalized form so
-    the q119 verify stage measures CONTENT distance, not encoding
-    distance. Apply to BOTH candidate and benchmark frames before
-    ``fuzzy_contamination`` on a real (non-ASCII) corpus.
-
-    Policies (all NFC first — a composed "é" U+00E9 and its
-    decomposed e+U+0301 twin are the same text but levenshtein
-    distance 1..2 apart raw, and they shingle differently, so an
-    un-normalized pair can miss BLOCKING too, not just the gate):
-
-    - ``nfc``: canonical composition only. Character-level distance
-      (Spark semantics) is then right for any engine that counts
-      code points.
-    - ``strip_marks``: NFD, drop combining marks (Mn), re-NFC —
-      accent-insensitive matching ("resume" contaminates "résumé").
-    - ``ascii``: after NFC, replace every remaining non-ASCII code
-      point with "?" — pins byte-count == char-count so byte-counting
-      engines (DuckDB's levenshtein) agree exactly with Spark's
-      character counting. This is the policy that extends the
-      FIXTURES.md ASCII contract to arbitrary corpora.
-
-    Arrow-batched pandas UDF (Python's unicodedata is the normative
-    NFC implementation; Spark has no built-in normalizer) — but it
-    runs ONCE per document as a scan-time projection, never per
-    verify pair, so the Python cost is O(corpus scan), not
-    O(pairs x len^2) like the verify stage it protects. The q119
-    catalog plan does NOT call this (its fixtures are ASCII, where
-    every policy is the identity — keeping the DuckDB oracle exact);
-    it exists for real-corpus callers.
-    """
-    if policy not in ("nfc", "strip_marks", "ascii"):
-        raise ValueError(
-            f"normalize_for_edit_distance: unknown policy {policy!r} "
-            "(expected nfc | strip_marks | ascii)"
-        )
-
-    from pyspark.sql.functions import pandas_udf
-
-    def _norm_series(s):
-        import unicodedata
-
-        def one(v):
-            if v is None:
-                return None
-            v = unicodedata.normalize("NFC", v)
-            if policy == "strip_marks":
-                v = unicodedata.normalize(
-                    "NFC",
-                    "".join(
-                        ch
-                        for ch in unicodedata.normalize("NFD", v)
-                        if unicodedata.category(ch) != "Mn"
-                    ),
-                )
-            elif policy == "ascii":
-                v = "".join(ch if ord(ch) < 128 else "?" for ch in v)
-            return v
-
-        return s.map(one)
-
-    # annotate via __annotations__ (pandas imported lazily: the
-    # type-hint resolver reads the function's module globals, so a
-    # function-local `import pandas` plus string hints doesn't resolve)
-    import pandas as _pd
-
-    _norm_series.__annotations__ = {"s": _pd.Series, "return": _pd.Series}
-    _norm = pandas_udf("string")(_norm_series)
-    return df.withColumn(text_col, _norm(F.col(text_col)))
-
-
 def fuzzy_contamination(
     candidates: DataFrame,
     benchmark: DataFrame,
@@ -680,10 +606,8 @@ def fuzzy_contamination(
     Engine caveat (pinned by the ASCII fixture contract, FIXTURES.md):
     Spark's levenshtein counts CHARACTERS while DuckDB's counts BYTES
     — identical on ASCII, divergent on multi-byte code points. The
-    fixtures are ASCII-only (verified at all SFs); a unicode corpus
-    needs ``normalize_for_edit_distance`` (above) on both frames
-    before this operator — policy "ascii" restores exact byte==char
-    parity, "nfc"/"strip_marks" keep character semantics.
+    fixtures are ASCII-only (verified at all SFs), so the oracle
+    holds on ASCII input only.
     """
     from .dedup import _shingle_hash_rows
 

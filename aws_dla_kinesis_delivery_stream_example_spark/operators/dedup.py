@@ -1,8 +1,8 @@
 """Deduplication operators (SURVEY.md §2.11).
 
-Four tiers, all shuffle-frugal by construction:
+Three near-dup tiers, all shuffle-frugal by construction (exact dedup
+is one hash-aggregate on the key, inline in q25):
 
-- exact:      one hash-aggregate on the dedup key (map-side combine).
 - ngram:      exact Jaccard over distinct word shingles; linear-ish
               self-join because word 5-grams are near-unique.
 - minhash:    MinHash + LSH banding — candidate pairs come from a
@@ -32,21 +32,6 @@ from .staging import stage
 # never overflows int64 under ANSI arithmetic). All constants fixed =>
 # deterministic across runs/nodes AND reproducible in DuckDB SQL.
 _MERSENNE = (1 << 31) - 1
-
-
-def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
-    """Keep the min-id row per duplicate group (deterministic, unlike
-    dropDuplicates which keeps an arbitrary row).
-
-    Null keys follow SQL GROUP BY semantics: rows whose key is null form
-    one group and keep their min-id survivor — they don't silently
-    vanish, because the semi join keys on the ID alone: the min-id set
-    from the groupBy already identifies exactly one surviving row per
-    group (ids are unique), so joining back on id is sufficient AND
-    keeps the join key a single narrow column instead of a multi-column
-    compound with null-safe comparisons."""
-    keep = df.groupBy(*key_cols).agg(F.min(id_col).alias(id_col))
-    return df.join(keep.select(id_col), id_col, "left_semi")
 
 
 def shingle_jaccard_pairs(
@@ -1025,8 +1010,8 @@ def minhash_calibration_sampled(
     are hash-random.
 
     ``sample_mod=1`` is EXACTLY the full report (pinned column-for-
-    column by test) — the same "scale mode equals audited face"
-    discipline as ``bloom_decontam_scale``. The stratum filter is a
+    column by test): a scale mode equals its audited face wherever
+    both are computable. The stratum filter is a
     scan-side integer predicate applied before any shuffle or Arrow
     pass, so the whole pipeline downstream (shingling, signatures,
     joins) runs on |corpus|/sample_mod rows.

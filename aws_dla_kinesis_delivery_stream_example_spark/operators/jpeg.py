@@ -39,7 +39,6 @@ def _zigzag_order() -> np.ndarray:
 
 
 _ZIGZAG = _zigzag_order()
-_UNZIGZAG = np.argsort(_ZIGZAG)
 
 
 def _dct_matrix() -> np.ndarray:

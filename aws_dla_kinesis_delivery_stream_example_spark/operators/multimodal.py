@@ -1,7 +1,7 @@
 """Multimodal column plumbing (SURVEY.md §2.11 'Multimodal columns').
 
 Design: media payloads are opaque ``binary`` columns with a typed
-metadata struct; heavy per-item work (decode, feature-extract, resize,
+metadata struct; heavy per-item work (decode, feature-extract,
 frame-sample) runs as Arrow-batched ``mapInPandas`` so each Python
 worker touches a whole batch at a time. Decode is REAL for three
 formats parsed with stdlib+numpy: uncompressed 24-bit BMP and PCM-16
@@ -157,43 +157,6 @@ def extract_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
 
     ensure_shipped(media.sparkSession)
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Real resize for BMP and JPEG payloads (nearest-neighbor,
-    re-encoded in the source format); other payloads pass through
-    untouched. Arrow-batched — the per-image numpy work happens once
-    per batch partition."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        from . import codecs, jpeg
-
-        def one(b):
-            if b is None:
-                return None
-            raw = bytes(b)
-            try:
-                if raw[:2] == b"BM":
-                    return codecs.encode_bmp(
-                        codecs.resize_nearest(codecs.decode_bmp(raw), out_w, out_h)
-                    )
-                if raw[:2] == b"\xff\xd8":
-                    return jpeg.encode_jpeg(
-                        codecs.resize_nearest(jpeg.decode_jpeg(raw), out_w, out_h)
-                    )
-            except (ValueError, _struct.error, IndexError):
-                pass  # malformed: pass through untouched
-            return raw
-
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = out["payload"].map(one)
-            yield out
-
-    ensure_shipped(media.sparkSession)
-    return media.mapInPandas(run, schema=media.schema)
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -353,10 +316,9 @@ _DHASH_BANDS = 4  # bands; recall guaranteed for Hamming <= _DHASH_BANDS - 1
 
 DHASH_SIG_SCHEMA = "media_id long, b0 long, b1 long, b2 long, b3 long"
 
-# Band geometries (the bloom_decontam_scale / dsir_milli house rule:
-# the scale story must be EXECUTABLE, not narrated). Collision
-# candidates are ~ C(n,2) * B / 2^w for B bands of w bits, so band
-# width is the knob that must track corpus size: the bench geometry's
+# Band geometries (the scale story must be EXECUTABLE, not narrated).
+# Collision candidates are ~ C(n,2) * B / 2^w for B bands of w bits,
+# so band width is the knob that must track corpus size: the bench geometry's
 # w=16 saturates around n ~ 2^16, the wide geometry's w=64 holds to
 # n ~ 2^64/B — far past 1e10 images. Wide = a LARGER grid hashed
 # wider (same decode, same resize arithmetic, same packing), so the

@@ -13,13 +13,12 @@ shard assignment and intra-shard order are pure functions of
 
 Scale shape: `assign_shards` is a pure projection (zero shuffles —
 the hash is computed at scan); `shard_manifest` adds ONE map-side-
-combinable hash aggregate over n_shards groups. Writing the actual
-shards is then `df.repartition(n_shards, "shard")` + per-partition
-sort by order_key — a single exchange whose partitioning is the
-output layout, the minimum any shuffler can do. The XOR checksum is
-order- and partitioning-independent (XOR is commutative), so two runs
-on different cluster layouts can be compared shard-by-shard without
-re-reading payloads.
+combinable hash aggregate over n_shards groups. This module does not
+write shards: a writer would `repartition(n_shards, "shard")` and
+sort each partition by order_key, one exchange whose partitioning is
+the output layout. The XOR checksum is order- and partitioning-
+independent (XOR is commutative), so two runs on different cluster
+layouts can be compared shard-by-shard without re-reading payloads.
 """
 
 from __future__ import annotations
@@ -88,62 +87,3 @@ def shard_manifest(
         F.max("order_key").cast("long").alias("max_key"),
     )
 
-
-def write_shards(
-    df: DataFrame,
-    id_col: str,
-    n_shards: int,
-    out_dir: str,
-    seed: int = 17,
-    chars_col: str | None = None,
-    tasks_per_shard: int = 1,
-) -> DataFrame:
-    """Materialize the deterministic shuffle: assign, partition so the
-    output layout is the ONLY exchange, sort each partition by
-    (shard, order_key, id), write parquet partitioned by shard, and
-    return the manifest to verify the written files against.
-
-    Two parallelism modes — the 100 TB knob:
-
-    - ``tasks_per_shard=1``: `repartition(n_shards, "shard")` routes
-      every row of a shard to ONE task; each `shard=K/` directory is
-      that task's output in sorted order (one file unless
-      ``spark.sql.files.maxRecordsPerFile`` splits it — split files
-      number monotonically within the task, preserving the sort).
-      Rerunning on any cluster layout rewrites byte-identical shard
-      FILES. Right when shards are small enough for one task
-      (<= a few GB each).
-    - ``tasks_per_shard>1``: `repartitionByRange` over
-      (shard, order_key) splits each shard across ~tasks_per_shard
-      contiguous, non-overlapping key ranges — at 100 TB / 2048
-      shards, one task per shard means ~50 GB tasks, so this is the
-      mode that actually runs. Range boundaries come from sampling,
-      so FILE boundaries may shift between runs/layouts; the
-      CONCATENATED per-shard stream (files in name order — ascending
-      partition id == ascending key range) is still the identical
-      total order, and the manifest (count/XOR/span) is partitioning-
-      invariant either way. Verify streams, not files, in this mode.
-
-    The id tiebreak after order_key makes the within-shard order total
-    even across 60-bit order-key collisions (~2^30 docs/shard for 50%
-    odds), so the layout is reproducible unconditionally, not just
-    almost-surely.
-    """
-    if tasks_per_shard < 1:
-        raise ValueError(
-            f"write_shards: tasks_per_shard must be >= 1, got {tasks_per_shard}"
-        )
-    assigned = assign_shards(df, id_col, n_shards, seed)
-    if tasks_per_shard == 1:
-        routed = assigned.repartition(n_shards, "shard")
-    else:
-        routed = assigned.repartitionByRange(
-            n_shards * tasks_per_shard, F.col("shard"), F.col("order_key")
-        )
-    (
-        routed.sortWithinPartitions("shard", "order_key", id_col)
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(out_dir)
-    )
-    return shard_manifest(df, id_col, n_shards, seed, chars_col)

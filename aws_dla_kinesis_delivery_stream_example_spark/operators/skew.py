@@ -11,7 +11,7 @@ with map-side combine; the hot key's work spreads over n_salts tasks.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # (partial_agg, final_agg) pairs per supported measure.
@@ -46,23 +46,6 @@ def salted_agg(
         _partial, final = _MERGERS[fn]
         phase2_aggs.append(final(F.col(f"_p_{out}")).alias(out))
     return phase1.groupBy(*keys).agg(*phase2_aggs)
-
-
-def salt_keys(df: DataFrame, key: str, n_salts: int) -> tuple[DataFrame, Column]:
-    """Attach a salt column for a salted join: the skewed (large) side
-    gets a random salt; the small side is exploded n_salts ways so
-    every (key, salt) shard finds its match."""
-    return (
-        df.withColumn("_salt", (F.rand(seed=42) * n_salts).cast("int")),
-        F.col("_salt"),
-    )
-
-
-def explode_salts(df: DataFrame, n_salts: int) -> DataFrame:
-    """Replicate the small join side across all salt values."""
-    return df.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
 
 
 def key_skew_audit(df: DataFrame, key_col: str, n_buckets: int = 32) -> DataFrame:

@@ -39,12 +39,6 @@ from .curation import _BENCH_MOD
 _BLOOM_BITS = 1 << 16
 _BLOOM_N = 4
 
-# q133 geometry: 4 sub-bins per octave (bin = 4*floor(log2 v) + sub),
-# so the bin lower bound is within 1/(4+sub) <= 25% of any member —
-# the histogram answers quantiles to ~12% relative error with <= 60
-# rows per group for values up to 2^15 chars.
-_HIST_SUB = 4
-
 
 def _bloom_pos(h, shift: int):
     col = F.col(h) if isinstance(h, str) else h
@@ -79,16 +73,11 @@ def bloom_bits(spark: SparkSession, sf_dir: str):
     return bench_h, bits
 
 
-def bloom_flag_probes(
-    probe: DataFrame, bench_h: DataFrame, bits, exact: bool = True
-) -> DataFrame:
-    """(source, bloom_hit[, exact_hit]) rows from (source, h) probe
-    shingles: three broadcast LEFT joins against the bit sets, plus —
-    only when ``exact`` — the exact-marker broadcast truth column.
-    The probe stream never shuffles here. ``exact=False`` is the
-    100 TB mode: the bench-sized ``bench_h`` broadcast never ships
-    (it is still consumed once, executor-side, to BUILD the bit
-    sets); only the three fixed 2^16-bit sets do."""
+def bloom_flag_probes(probe: DataFrame, bench_h: DataFrame, bits) -> DataFrame:
+    """(source, bloom_hit, exact_hit) rows from (source, h) probe
+    shingles: three broadcast LEFT joins against the bit sets, plus
+    the exact-marker broadcast truth column. The probe stream never
+    shuffles here."""
     withpos = probe.select(
         "source",
         "h",
@@ -106,8 +95,6 @@ def bloom_flag_probes(
         & F.col("_b2").isNotNull()
         & F.col("_b3").isNotNull()
     ).alias("bloom_hit")
-    if not exact:
-        return flagged.select("source", bloom_hit)
     return flagged.join(
         F.broadcast(bench_h.withColumn("_ex", F.lit(1))), "h", "left"
     ).select("source", bloom_hit, F.col("_ex").isNotNull().alias("exact_hit"))
@@ -228,8 +215,7 @@ def q132_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bloom_probe(docs: DataFrame) -> DataFrame:
     """(source, h) probe shingles: every non-bench doc's distinct
     4-shingle hashes, keyed by source — shared by q132 and its
-    truth-column-free scale mode so the two probe exactly the same
-    universe."""
+    streaming face q136 so the two probe exactly the same universe."""
     return _shingle_hash_rows(
         docs.filter(F.col("doc_id") % _BENCH_MOD != 0).select("source", "text"),
         "source",
@@ -237,33 +223,6 @@ def _bloom_probe(docs: DataFrame) -> DataFrame:
         _BLOOM_N,
         id_type="string",
     ).withColumnRenamed("doc", "source")
-
-
-def bloom_decontam_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q132's at-scale mode, executable (round-11 verdict Next #6):
-    the SAME bloom gate with the exact truth column dropped — the one
-    bench-sized broadcast in q132's plan never ships; only the three
-    fixed 8 KiB bit sets reach the probe stream. Output: (source,
-    n_shingles, bloom_pos), column-for-column equal to q132's first
-    three columns (planted test test_round12_planted.py pins the
-    equality, so the scale mode cannot drift from the audited one).
-
-    Library entry point, NOT a catalog query: at bench/test SFs the
-    measured-FPR face (q132) is strictly more informative; this
-    exists so the 100 TB deployment story is code, not narration."""
-    docs = load_table(spark, sf_dir, "documents")
-    bench_h, bits = bloom_bits(spark, sf_dir)
-    flagged = bloom_flag_probes(_bloom_probe(docs), bench_h, bits, exact=False)
-    return (
-        flagged.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_shingles"),
-            F.sum(F.when(F.col("bloom_hit"), 1).otherwise(0))
-            .cast("long")
-            .alias("bloom_pos"),
-        )
-        .orderBy("source")
-    )
 
 
 # --------------------------------------------------------------- q133

@@ -18,13 +18,9 @@ the integer milli floor lattice — score(b) = 1000 * c_tgt[b] * n_all
 // (c_all[b] * n_tgt) — and a doc's importance is the floor-mean of
 its token occurrences' scores. Monotone in the same direction as the
 paper's per-token likelihood ratio, exactly reproducible in any
-engine with 64-bit integers. At true 100 TB counts the raw triple
-product can exceed int64; production folds the bucket counts first
-(a 256-row transform) — EXECUTABLE here as ``dsir_distribution_milli``
-/ ``dsir_reweight_milli`` (fold k = max(1, n_all div 2^24), identity
-at bench counts, pinned equal to q140 by planted test). The catalog
-faces keep the exact-count form, which bench counts never push past
-the lattice, and hash-check it.
+engine with 64-bit integers. The raw triple product crosses int64
+once ``c_tgt * n_all`` passes ~9.2e15, far above bench counts; the
+catalog faces keep the exact-count form and hash-check it.
 
 Conventions: the house md5-60-bit token hash folded mod 256 (the
 q128 register fold geometry) computed JVM-side via conv() — the
@@ -140,83 +136,18 @@ def dsir_distribution(rows: DataFrame) -> DataFrame:
     )
 
 
-# The milli fold's target magnitude: folded totals stay <= ~2^24 + 256,
-# so the score's triple product 1000 * c_tgt' * n_all' peaks at
-# ~1000 * 2^48 ~ 2.8e17 — inside int64 with 30x headroom — at ANY
-# corpus size, while a 256-bucket distribution keeps ~2^24/256 = 65k
-# quanta per bucket (relative quantization ~1.5e-5, invisible on the
-# milli score lattice).
-_DSIR_FOLD_LIMIT = 1 << 24
-
-
-def dsir_distribution_milli(dist: DataFrame) -> DataFrame:
-    """The 100 TB int64-headroom mode of the DSIR distribution,
-    executable (round-13 verdict Next #4): fold the (c_all, c_tgt)
-    bucket counts by k = max(1, n_all div 2^24) — a 256-row transform
-    deriving k from the distribution's OWN total — before the ratio,
-    so ``dsir_score_table``'s triple product stays inside int64 at
-    true 100 TB token counts (raw, ``1000 * c_tgt * n_all`` crosses
-    int64 once ``c_tgt * n_all`` passes ~9.2e15 — between ~1e8 total
-    tokens for a fully skewed distribution and ~1.5e9 for a uniform
-    one; a 100 TB corpus is ~2.5e13. The module docstring's
-    documented deviation, now code instead of narration).
-
-    Equivalence pin (the ``bloom_decontam_scale`` /
-    ``minhash_calibration_sampled`` discipline): at bench counts
-    n_all < 2^24, so k == 1 and the fold is the IDENTITY — the
-    planted test pins ``dsir_reweight_milli`` == q140 column-for-
-    column, and a second planted test drives near-int64-max synthetic
-    counts through the fold, asserting no wrap (scores equal the
-    pure-python big-int model of the folded lattice) and <= 3-milli
-    drift from the exact big-int score."""
-    dist = stage(dist)
-    # staged: the fold-factor agg and the folded projection read it
-    tot = dist.agg(F.sum("c_all").cast("long").alias("n_all_raw"))
-    k = F.greatest(
-        F.lit(1).cast("long"), F.expr(f"n_all_raw div {_DSIR_FOLD_LIMIT}")
-    )
-    return dist.crossJoin(F.broadcast(tot.select(k.alias("fold_k")))).select(
-        "bkt",
-        F.expr("c_all div fold_k").cast("long").alias("c_all"),
-        F.expr("c_tgt div fold_k").cast("long").alias("c_tgt"),
-    )
-
-
-def dsir_reweight_milli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q140's at-scale mode, executable: the identical report built
-    through ``dsir_distribution_milli``'s folded lattice. Library
-    entry point, NOT a catalog query — at bench counts the fold is
-    the identity (k == 1), so the catalog face q140 is strictly more
-    informative; this exists so the int64-headroom story is code the
-    planted pin can hold still (the ``bloom_decontam_scale``
-    convention)."""
-    rows = stage(_dsir_bucket_rows(load_table(spark, sf_dir, "documents")))
-    # staged: the distribution agg and the per-doc scoring join each
-    # read the exploded token frame once (q140's shape)
-    return _dsir_output(
-        spark,
-        sf_dir,
-        dsir_distribution_milli(dsir_distribution(rows)),
-        rows=rows,
-    )
-
-
 def dsir_score_table(dist: DataFrame) -> DataFrame:
     """(bkt, s): the per-bucket milli ratio scores from a (bkt, c_all,
-    c_tgt) distribution — exact (q140/q141) or milli-folded
-    (``dsir_distribution_milli``). The TOTALS are derived from the
+    c_tgt) distribution (q140/q141). The TOTALS are derived from the
     distribution itself (sums of bucket counts), so the 256-row frame
     alone determines the score table.
 
-    Empty/underflow conventions (round-13 advisor + the milli fold):
-    a corpus with ZERO target-language tokens has no measurable
-    affinity — every score is 0 (so imp_milli = 0 < the 1000
-    selection bar: nothing selected) instead of Spark
-    NULL-vs-DuckDB-error divergence on the 0/0 ratio; a bucket whose
-    folded mass underflows to c_all = 0 (possible only under the
-    milli fold, impossible for the exact groupBy output) likewise
-    scores 0. Mirrored verbatim in DSIR_ORACLE's CASE (where only the
-    n_tgt arm is reachable)."""
+    Empty convention (round-13 advisor): a corpus with ZERO
+    target-language tokens has no measurable affinity — every score
+    is 0 (so imp_milli = 0 < the 1000 selection bar: nothing
+    selected) instead of Spark NULL-vs-DuckDB-error divergence on the
+    0/0 ratio. Every groupBy bucket has c_all >= 1, so n_tgt is the
+    only zero divisor. Mirrored verbatim in DSIR_ORACLE's CASE."""
     dist = stage(dist)
     # staged: the totals agg and the score projection read it; for the
     # streaming twin this also freezes the drained state
@@ -227,7 +158,7 @@ def dsir_score_table(dist: DataFrame) -> DataFrame:
     return dist.crossJoin(F.broadcast(tot)).select(
         "bkt",
         F.when(
-            (F.col("n_tgt") > 0) & (F.col("c_all") > 0),
+            F.col("n_tgt") > 0,
             F.expr("1000 * c_tgt * n_all div (c_all * n_tgt)"),
         )
         .otherwise(F.lit(0))

@@ -194,8 +194,7 @@ def _alloc_expr(budget: str, share_micro: str) -> str:
     "pow()-based alpha would not be — micro-lattice shares, a "
     "one-epoch token budget allocated by overflow-free "
     "split-multiply, implied epochs per source, and the 4-epoch "
-    "repetition cap with the deficit the waterfilling redistribution "
-    "re-allocates — executable as library mode waterfill_allocation "
+    "repetition cap with the per-source deficit it leaves unallocated "
     "(the Gopher/Llama data-mixing table; q67 is the "
     "fixed-target-weights face)",
     tags=("llm", "curation", "audit"),
@@ -268,115 +267,3 @@ def q148_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("deficit_tok"),
     ).orderBy("source")
 
-
-def waterfill_allocation(alloc: DataFrame) -> DataFrame:
-    """The waterfilling redistribution q148 reports the deficit FOR —
-    executable library mode (the house rule that produced
-    ``dsir_distribution_milli`` and ``DHASH_GEOM_WIDE``: the scale
-    story must be code, not narration).
-
-    Input: q148's output frame (or any frame with ``source``,
-    ``n_tok``, ``w_milli``, ``alloc_tok`` columns). The total capped
-    deficit ``sum(alloc_tok - min(alloc_tok, 4 * n_tok))`` is
-    re-allocated across sources still below the 4-epoch cap,
-    proportionally to their temperature weights ``w_milli``, round by
-    round until a fixed point: deficit exhausted, or every source
-    capped (the leftover is then structural — the corpus cannot absorb
-    the budget under the repetition ceiling, and the report says so
-    rather than silently over-repeating).
-
-    Execution mode — a DRIVER-SIDE loop over the |sources|-row table,
-    deliberately: mixture tables are tens of rows at ANY corpus size
-    (they enumerate sources, not documents), so this is a bounded
-    collect (the q75 centroid-seed convention), and the loop runs in
-    native Python big-int arithmetic — ``deficit * w // sumw`` is
-    exact with no int64 staging, unlike the engine-side split-multiply
-    q148 needs. Iterating this on the CLUSTER would be |rounds| tiny
-    jobs for a table that fits in a sentence.
-
-    Termination is structural, not assumed: a proportional round
-    either caps at least one source (<= |sources| such rounds) or
-    moves all but the floor loss (< |uncapped| tokens), after which
-    the floor-starved remainder is drained greedily in source order —
-    so rounds <= 2 * |sources| + 1, enforced with a RuntimeError
-    (survives `python -O`, unlike an assert). Invariants pinned by
-    test: budget conservation (sum(wf_realized) + leftover ==
-    sum(alloc_tok)), no source above cap * n_tok, realized never
-    shrinks, leftover nonzero only when every source is capped."""
-    rows = sorted(
-        (
-            (r["source"], int(r["n_tok"]), int(r["w_milli"]), int(r["alloc_tok"]))
-            for r in alloc.select("source", "n_tok", "w_milli", "alloc_tok").collect()
-        ),
-        key=lambda t: t[0],
-    )
-    if len({s for s, _, _, _ in rows}) != len(rows):
-        # a repeated source would silently collapse into one dict slot,
-        # undercounting the budget — reject loudly (round-15 review)
-        raise ValueError(
-            "waterfill_allocation: duplicate source names in the "
-            "allocation frame — aggregate to one row per source first"
-        )
-    cap = {s: _Q148_CAP_EPOCHS * n for s, n, _, _ in rows}
-    w = {s: wm for s, _, wm, _ in rows}
-    alloc0 = {s: a for s, _, _, a in rows}
-    realized = {s: min(a, cap[s]) for s, a in alloc0.items()}
-    deficit = sum(alloc0.values()) - sum(realized.values())
-    order = [s for s, _, _, _ in rows]
-    rounds = 0
-    max_rounds = 2 * len(rows) + 1
-    while deficit > 0:
-        uncapped = [s for s in order if realized[s] < cap[s]]
-        if not uncapped:
-            break
-        if rounds >= max_rounds:
-            # enforced even under `python -O` (a bare assert is
-            # stripped there); termination is structurally guaranteed
-            # by the greedy drain, but the documented <=2|sources|+1
-            # bound is a production invariant, not a debug check
-            raise RuntimeError(
-                "waterfill_allocation failed to converge within "
-                f"{max_rounds} rounds"
-            )
-        rounds += 1
-        sumw = sum(w[s] for s in uncapped)
-        moved = 0
-        if sumw > 0:
-            d0 = deficit
-            for s in uncapped:
-                take = min(d0 * w[s] // sumw, cap[s] - realized[s])
-                realized[s] += take
-                moved += take
-        if moved == 0:
-            # Floor-starved (every proportional share rounded to 0) or
-            # all-zero-weight sources with headroom: drain greedily in
-            # source order so the fixed point is still reached.
-            for s in uncapped:
-                take = min(deficit - moved, cap[s] - realized[s])
-                realized[s] += take
-                moved += take
-                if moved >= deficit:
-                    break
-        deficit -= moved
-    leftover = sum(alloc0.values()) - sum(realized.values())
-    spark = alloc.sparkSession
-    out = spark.createDataFrame(
-        [
-            (
-                s,
-                n,
-                wm,
-                a,
-                realized[s],
-                realized[s] - min(a, cap[s]),
-                1 if realized[s] >= cap[s] else 0,
-                rounds,
-                leftover,
-            )
-            for s, n, wm, a in rows
-        ],
-        "source string, n_tok long, w_milli long, alloc_tok long, "
-        "wf_realized_tok long, wf_added_tok long, wf_capped long, "
-        "wf_rounds long, wf_leftover_tok long",
-    )
-    return out.orderBy("source")

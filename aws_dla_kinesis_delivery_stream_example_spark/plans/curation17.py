@@ -8,29 +8,26 @@ run the same gate with bigger lists, and both pair it with a
 domain-CONCENTRATION check: a source whose kept docs are dominated by
 one domain is a crawl artifact, not a corpus. q151 is both faces in
 one report: per-source blocked-doc counts/rates (the gate's audit) and
-the top kept domain with its share (the concentration audit). The gate
-itself ships as library mode ``blocklist_gate`` — a broadcast anti-join
-— with a planted pin that its keep-set cardinality equals the audit's
-``kept_docs`` (the q149/q30 single-source-of-truth discipline).
+the top kept domain with its share (the concentration audit).
 
 Bench fixture: the synthetic corpus carries no URLs, so the catalog
 face plants a deterministic domain stratum AT THE SCAN (the q143
 planted-PII convention) — ``'site' || (doc_id % 97) || '.example'``,
 integer arithmetic + string concat, identical in Spark and DuckDB;
 every 10th site index is blocklisted, so ~10/97 of any slice is
-blocked and the audit is non-vacuous at every SF. The library pieces
-(``domain_counters`` / ``domain_finalize`` / ``blocklist_gate``) take
-ANY (source, domain, ...) frame, so real URL columns drop in
-unchanged; the planted test drives them on handmade domains.
+blocked and the audit is non-vacuous at every SF. ``domain_counters``
+and ``domain_finalize`` take ANY (source, domain, text) frame, so real
+URL columns drop in unchanged; the planted test drives them on
+handmade rows.
 
 Scale notes: the blocklist is a BROADCAST dim by nature — production
 lists run 1e4..1e6 domains (C4's is ~4e5), megabytes against a 100 TB
-corpus — so the gate is a broadcast anti-join and the audit's flag a
-broadcast left join; the corpus itself crosses exactly ONE exchange
-(the map-side-combined (source, domain) agg). The counter table is
-the q145 per-key state family: it grows with DOMAIN cardinality
-(the web's registered-domain count, ~1e8 worst case — a few GB of
-BIGINT counters, shuffle-partitioned), never with corpus volume.
+corpus — so the audit's flag is a broadcast left join; the corpus
+itself crosses exactly ONE exchange (the map-side-combined
+(source, domain) agg). The counter table is the q145 per-key state
+family: it grows with DOMAIN cardinality (the web's registered-domain
+count, ~1e8 worst case — a few GB of BIGINT counters,
+shuffle-partitioned), never with corpus volume.
 """
 
 from __future__ import annotations
@@ -67,36 +64,6 @@ def _domain_augment(docs: DataFrame) -> DataFrame:
     )
 
 
-def blocklist_frame(
-    spark: SparkSession, domains: tuple[str, ...] = BLOCKLIST
-) -> DataFrame:
-    """A blocklist as a tiny dim frame — the shape a production list
-    loads into (a file of domains), joined by broadcast everywhere.
-    Defaults to the planted bench list; pass any domain collection
-    (round-15 review: the library pieces must take REAL blocklists,
-    not only the fixture)."""
-    return spark.createDataFrame(
-        [(d,) for d in domains], "domain string"
-    ).withColumn("_blocked", F.lit(1))
-
-
-def blocklist_gate(df: DataFrame, blocklist: DataFrame | None = None) -> DataFrame:
-    """THE C4 gate: drop every row whose ``domain`` is blocklisted —
-    a broadcast LEFT ANTI join (the list is broadcast-sized by nature;
-    the corpus never shuffles). Library mode: ``blocklist`` is any
-    frame with a ``domain`` column (a production list read from a
-    file), defaulting to the planted bench list. The audit (q151)
-    reports what this gate removes, and the planted pin asserts
-    ``blocklist_gate(aug).count() == sum(kept_docs)`` so gate and
-    audit cannot drift."""
-    bl = (
-        blocklist.select("domain")
-        if blocklist is not None
-        else blocklist_frame(df.sparkSession).select("domain")
-    )
-    return df.join(F.broadcast(bl), "domain", "left_anti")
-
-
 def domain_counters(df: DataFrame) -> DataFrame:
     """Per-(source, domain) LINEAR counters over any (source, domain,
     text) frame: (source, domain, n_docs, n_tok). Both are sums —
@@ -121,9 +88,7 @@ def domain_counters(df: DataFrame) -> DataFrame:
     )
 
 
-def domain_finalize(
-    counters: DataFrame, blocklist: DataFrame | None = None
-) -> DataFrame:
+def domain_finalize(counters: DataFrame) -> DataFrame:
     """Finalize the audit from the counter table ALONE (batch-built or
     drained from streaming state): flag each domain against the
     broadcast blocklist, roll up per-source blocked counts/rates
@@ -132,18 +97,14 @@ def domain_finalize(
     deterministic-tie-break house rule). A source whose every domain
     is blocked reports kept_docs = 0, top_domain = '' and share 0
     instead of dividing by zero (the q140/q148 empty-stratum lesson,
-    guarded on both faces). ``blocklist``: any frame with ``domain``
-    + ``_blocked`` columns (``blocklist_frame`` builds one from a
-    domain collection), defaulting to the planted bench list. Every
-    step runs on the counter frame — |sources| x |domains| rows,
-    never the corpus."""
+    guarded on both faces). The blocklist is ``BLOCKLIST`` as a tiny
+    broadcast dim frame. Every step runs on the counter frame —
+    |sources| x |domains| rows, never the corpus."""
     from ..operators.staging import stage
 
-    bl = (
-        blocklist
-        if blocklist is not None
-        else blocklist_frame(counters.sparkSession)
-    )
+    bl = counters.sparkSession.createDataFrame(
+        [(d,) for d in BLOCKLIST], "domain string"
+    ).withColumn("_blocked", F.lit(1))
     f = stage(
         counters.join(F.broadcast(bl), "domain", "left").select(
             "source",
@@ -209,14 +170,12 @@ def domain_finalize(
     )
 
 
-def domain_audit_report(
-    df: DataFrame, blocklist: DataFrame | None = None
-) -> DataFrame:
+def domain_audit_report(df: DataFrame) -> DataFrame:
     """Per-source blocklist + domain-concentration audit of any
-    (source, domain, text) frame against any blocklist frame
-    (default: the planted bench list): one corpus pass into the tiny
-    counter agg, then every derivation on the counter table."""
-    return domain_finalize(domain_counters(df), blocklist)
+    (source, domain, text) frame against ``BLOCKLIST``: one corpus
+    pass into the tiny counter agg, then every derivation on the
+    counter table."""
+    return domain_finalize(domain_counters(df))
 
 
 _BL_SQL = ", ".join(f"'{d}'" for d in BLOCKLIST)
@@ -284,9 +243,7 @@ BLOCKLIST_ORACLE = f"""
     "doc/token counts and rates (milli) against a broadcast blocklist "
     "dim, plus the domain-concentration face (top kept domain and its "
     "share of kept docs, deterministic tie-break) that flags "
-    "single-domain crawl artifacts; the gate itself is library mode "
-    "blocklist_gate (broadcast anti-join), pinned to agree with the "
-    "audit's kept_docs; bench corpus carries no URLs, so a "
+    "single-domain crawl artifacts; bench corpus carries no URLs, so a "
     "deterministic doc_id-keyed domain stratum is planted at the "
     "scan, identically in both faces (the q143 convention)",
     tags=("llm", "curation", "audit"),

@@ -558,9 +558,8 @@ def q136_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs Arrow-batched INSIDE the stream (the q129 pattern). Linear
     counts are NOT idempotent, so at-least-once ingestion needs
     upstream dedup (q51/q83) — q134's documented caveat. The exact
-    truth column (bench_h broadcast) is part of the audit face; at
-    100 TB you run the bloom_decontam_scale projection instead and
-    drop it."""
+    truth column (bench_h broadcast) is part of the audit face and is
+    its one bench-sized broadcast."""
     from .curation10 import (
         _bloom_probe,
         bloom_bits,

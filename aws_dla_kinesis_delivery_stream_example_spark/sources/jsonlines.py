@@ -59,24 +59,6 @@ def produce_jsonlines(df: DataFrame, out_dir: str, n_files: int | None = None) -
     return out_dir
 
 
-def rate_stream(spark: SparkSession, rows_per_second: int = 2500):
-    """B5 parity: paced producer (~100 rec/s per worker in the
-    reference) as Spark's rate source."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .select(
-            F.md5(F.col("value").cast("string")).alias("id"),
-            F.concat(F.lit("First"), (F.col("value") % 97).cast("string")).alias("firstname"),
-            F.concat(F.lit("Last"), (F.col("value") % 89).cast("string")).alias("lastname"),
-            F.lit("rate source generated record description text").alias("description"),
-            F.lit(0).cast("long").alias("balance"),
-            F.col("timestamp").alias("ts"),
-        )
-    )
-
-
 def decode_kinesis_records(raw: DataFrame, schema) -> DataFrame:
     """D1 parity over the Kinesis record envelope: the connector emits
     (data binary, partitionKey, sequenceNumber,

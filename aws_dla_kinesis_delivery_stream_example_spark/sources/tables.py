@@ -34,9 +34,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize an event-time column to TimestampType (LTZ, micros)
     regardless of how the parquet writer encoded it. The driver has
@@ -196,10 +193,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the SQL-expressed plans)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

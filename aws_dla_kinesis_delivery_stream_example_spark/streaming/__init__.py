@@ -1,9 +1,8 @@
-from .transform import DropIt, TransformRegistry, apply_transform
+from .transform import DropIt, apply_transform
 from .delivery import DeliveryPipeline, DeliveryResult
 
 __all__ = [
     "DropIt",
-    "TransformRegistry",
     "apply_transform",
     "DeliveryPipeline",
     "DeliveryResult",

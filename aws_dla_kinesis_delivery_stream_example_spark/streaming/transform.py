@@ -18,7 +18,6 @@ Two execution paths:
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable
 
 import pandas as pd
@@ -34,41 +33,6 @@ STATUS_FAILED = "ProcessingFailed"
 class DropIt(Exception):
     """Raise inside a transform to mark the record Dropped
     (reference kds_example/kds_helper.py:26)."""
-
-
-class TransformRegistry:
-    """Named transform registry (T5 parity: the reference registers
-    Lambdas by name, lambda_app/app.py:15-22)."""
-
-    def __init__(self) -> None:
-        self._fns: dict[str, Callable[[dict], dict]] = {}
-
-    def register(self, name: str, fn: Callable[[dict], dict] | None = None):
-        if fn is not None:
-            self._fns[name] = fn
-            return fn
-
-        def deco(f: Callable[[dict], dict]):
-            self._fns[name] = f
-            return f
-
-        return deco
-
-    def get(self, name: str) -> Callable[[dict], dict]:
-        return self._fns[name]
-
-    def names(self) -> list[str]:
-        return sorted(self._fns)
-
-
-registry = TransformRegistry()
-
-
-@registry.register("identity")
-def identity_transform(dct: dict) -> dict:
-    """T3/T4 parity: the reference's only concrete transform is a
-    passthrough (kds_example/lbd/to_s3.py:6-7)."""
-    return dct
 
 
 _RESULT_SCHEMA = T.StructType(

@@ -25,15 +25,17 @@ to bench_full.json beside this script on every sweep.
 
 The probe modes take exact catalog names or qNN prefixes and `--sf`
 (default: the sweep's directory). `time` uses the sweep's estimator.
-`profile` prints one warm run's job census. `plan` prints (or writes
-to `--out`) the formatted physical plan. `check` compares each query
-with its DuckDB oracle and exits 1 if any fails.
+`profile` prints one warm run's job census, a streaming drain's
+micro-batch jobs included. `plan` prints (or writes to `--out`) the
+formatted physical plan. `check` compares each query with its DuckDB
+oracle and exits 1 if any fails.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import re
 import shutil
@@ -49,6 +51,7 @@ from aws_dla_kinesis_delivery_stream_example_spark.operators.staging import (  #
 )
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs  # noqa: E402
 from aws_dla_kinesis_delivery_stream_example_spark.session import get_spark  # noqa: E402
+from aws_dla_kinesis_delivery_stream_example_spark.streaming import windows  # noqa: E402
 from perfbench.census import StatusStore, cpu_row, host_canary  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -218,14 +221,33 @@ def sweep() -> None:
     print(stdout_line(result))
 
 
+class _DrainRuns(logging.Handler):
+    """Collects the ``runId`` of each closed-input drain's final-progress
+    record (``windows.run_on_closed_input``)."""
+
+    def __init__(self) -> None:
+        super().__init__(logging.INFO)
+        self.run_ids: list[str] = []
+
+    def emit(self, record: logging.LogRecord) -> None:
+        progress = record.args.get("progress") if isinstance(record.args, dict) else None
+        if progress:
+            self.run_ids.append(progress["runId"])
+
+
 def _profile(spark, name: str, spec, sf: str) -> str:
-    """One warm run's census under its own job group. A streaming
-    query's micro-batch jobs run under its run id's group, so they are
-    not counted here."""
+    """One warm run's census: the jobs of its own job group plus the
+    micro-batch jobs of every streaming drain it runs, which Spark puts
+    under the drain's run id (``jobs_stream``)."""
     spec.spark(spark, sf).collect()  # warm: codegen and caches
     _reset(spark)
     sc = spark.sparkContext
     group = f"bench-profile-{name}"
+    log = logging.getLogger(windows.__name__)
+    prev_level = log.level
+    drains = _DrainRuns()
+    log.addHandler(drains)
+    log.setLevel(logging.INFO)
     sc.setJobGroup(group, name)
     try:
         t0 = time.perf_counter()
@@ -233,11 +255,13 @@ def _profile(spark, name: str, spec, sf: str) -> str:
         took = time.perf_counter() - t0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    c = StatusStore(spark).census(group, [])
+        log.removeHandler(drains)
+        log.setLevel(prev_level)
+    c = StatusStore(spark).census(group, drains.run_ids)
     _reset(spark)
     return (
-        f"PROFILE {name} {took:.3f}s jobs={c.jobs} stages={c.stages} "
-        f"tasks={c.totals['tasks']} run_ms={c.totals['executor_run_ms']} "
+        f"PROFILE {name} {took:.3f}s jobs={c.jobs} jobs_stream={c.jobs_stream} "
+        f"stages={c.stages} tasks={c.totals['tasks']} run_ms={c.totals['executor_run_ms']} "
         f"shuffle_write_bytes={c.totals['shuffle_write_bytes']}"
     )
 

@@ -1,17 +1,20 @@
-"""bench.py's pure pieces: the query selector and the driver's stdout
-line. No SparkSession: the specs are passed in and the line is built
-from the committed bench_full.json."""
+"""bench.py: the query selector and the compact stdout line (no
+SparkSession: the specs are passed in and the line is built from the
+committed bench_full.json), plus the profile census of a drain."""
 
 from __future__ import annotations
 
 import importlib.util
 import json
+import logging
 import os
 import re
 
 import pytest
 
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
+
+from .conftest import SF_SMOKE
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -62,3 +65,19 @@ def test_stdout_line_cuts_errors_to_80_chars():
     parsed = json.loads(bench.stdout_line(full))
     err = parsed["queries"]["q50"]["err"]
     assert len(err) == 80 and err.startswith("AnalysisException: ")
+
+
+def test_profile_counts_a_drains_micro_batch_jobs(spark):
+    """q50 is a streaming drain: its micro-batch jobs run under the
+    query's run id, not the profile's job group, and must still be
+    counted."""
+    name = "q50_streaming_tumbling"
+    log = logging.getLogger(
+        "aws_dla_kinesis_delivery_stream_example_spark.streaming.windows"
+    )
+    before = (log.level, list(log.handlers))
+    line = bench._profile(spark, name, all_specs()[name], SF_SMOKE)
+    fields = dict(kv.split("=") for kv in line.split()[3:])
+    assert int(fields["jobs_stream"]) >= 1, line
+    assert int(fields["jobs"]) > int(fields["jobs_stream"]), line
+    assert (log.level, list(log.handlers)) == before

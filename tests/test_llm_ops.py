@@ -32,26 +32,6 @@ def planted_docs(spark):
     return docs.unionAll(near).unionAll(exact)
 
 
-def test_exact_dedup_keeps_min_id(spark, planted_docs):
-    out = dedup.exact_dedup(planted_docs, ["text"], "doc_id")
-    # all planted exact copies (+200000) must be gone, originals kept
-    ids = {r.doc_id for r in out.collect()}
-    assert not any(i >= 200000 for i in ids)
-    assert all(i in ids for i in range(20))
-    assert out.count() == planted_docs.count() - 20
-
-
-def test_exact_dedup_null_keys_keep_one_survivor(spark):
-    """Null dedup keys follow GROUP BY semantics: one group, min-id
-    survivor — not silently dropped by a null-unsafe semi join."""
-    df = spark.createDataFrame(
-        [(1, None), (2, None), (3, "x"), (4, "x"), (5, "y")],
-        "doc_id long, text string",
-    )
-    out = dedup.exact_dedup(df, ["text"], "doc_id")
-    assert {r.doc_id for r in out.collect()} == {1, 3, 5}
-
-
 def test_shingle_ops_tolerate_null_text(spark):
     """A null text yields no shingles (oracle: regexp over NULL is empty)
     instead of crashing the whole job inside mapInPandas."""
@@ -442,21 +422,6 @@ def test_multimodal_real_decode_stats(spark):
     assert abs(aud[4] - 1.0) < 1e-3  # square wave crosses zero every sample
 
 
-def test_multimodal_resize(spark):
-    """resize_images really resizes BMP payloads; audio passes through."""
-    import numpy as np
-
-    from aws_dla_kinesis_delivery_stream_example_spark.operators import codecs
-
-    px, _bmp, wav, media = _known_media(spark)
-    out = {r.media_id: bytes(r.payload) for r in multimodal.resize_images(media, 2, 1).collect()}
-    resized = codecs.decode_bmp(out[1])
-    assert resized.shape == (1, 2, 3)
-    # nearest-neighbor at x=0 (red) and x=2 (blue)
-    assert np.array_equal(resized[0, 0], px[0, 0]) and np.array_equal(resized[0, 1], px[0, 2])
-    assert out[2] == bytes(wav)  # non-image untouched
-
-
 def test_jpeg_codec_roundtrip():
     """Baseline JPEG encode/decode in numpy: gradient images survive a
     roundtrip with small error, in 4:4:4 and 4:2:0, RGB and grayscale,
@@ -494,8 +459,8 @@ def test_jpeg_codec_roundtrip():
 
 def test_multimodal_jpeg_features_and_resize(spark):
     """A real JPEG fixture flows through extract_features (tag 3.0,
-    content-derived channel stats) and resize_images (re-encoded JPEG
-    at the target size) — multimodal decode is no longer partial."""
+    content-derived channel stats) — multimodal decode is no longer
+    partial."""
     import numpy as np
 
     from aws_dla_kinesis_delivery_stream_example_spark.operators import jpeg
@@ -512,10 +477,6 @@ def test_multimodal_jpeg_features_and_resize(spark):
     assert feat[0] == 3.0 and (feat[1], feat[2]) == (16.0, 16.0)
     # half red / half blue: mean r ~= b ~= 0.5, g ~= 0
     assert abs(feat[3] - 0.5) < 0.05 and feat[4] < 0.05 and abs(feat[5] - 0.5) < 0.05
-    out = bytes(multimodal.resize_images(media, 8, 8).collect()[0].payload)
-    resized = jpeg.decode_jpeg(out)
-    assert resized.shape == (8, 8, 3)
-    assert resized[0, 0, 0] > 200 and resized[0, 7, 2] > 200  # still red|blue
 
 
 def test_multimodal_malformed_payloads_fall_back(spark):
@@ -548,9 +509,6 @@ def test_multimodal_malformed_payloads_fall_back(spark):
     for r in rows:
         assert r.feature[0] == 0.0 and len(r.feature) == 17  # digest fallback
         assert all(np.isfinite(v) for v in r.feature)
-    # resize passes malformed payloads through untouched
-    out = {r.media_id: bytes(r.payload) for r in multimodal.resize_images(media, 4, 4).collect()}
-    assert out[3] == bytes(neg_bmp) and out[4] == bytes(bad_jpeg)
 
 
 def test_multimodal_frame_sampling(spark):

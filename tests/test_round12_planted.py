@@ -1,11 +1,6 @@
 """Round-12 planted/equivalence coverage.
 
-Three members:
-- bloom_decontam_scale (plans/curation10.py), q132's truth-column-free
-  100 TB mode — same bloom gate, no bench-sized broadcast. Pinned to
-  the audited face on the searched-collision planted fixture AND the
-  smoke-SF corpus, plus a plan-shape pin that the exact-marker
-  broadcast is GONE (that absence is the entire point).
+Two members:
 - q136_streaming_bloom: the streaming face must land on the q132
   hand-asserted planted rows (the q134 stream-equals-batch pattern).
 - q137_hll_overlap: planted three-source fixture with hand-counted
@@ -21,43 +16,10 @@ import hashlib
 import pytest
 
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
-from aws_dla_kinesis_delivery_stream_example_spark.plans.curation10 import (
-    bloom_decontam_scale,
-)
 
-from .conftest import SF_SMOKE
 from .test_round11_planted import _write_documents, bloom_sf_dir  # noqa: F401
 
 SPECS = all_specs()
-
-
-def _scale_vs_q132(spark, sf_dir: str) -> None:
-    scale = {
-        r["source"]: (r["n_shingles"], r["bloom_pos"])
-        for r in bloom_decontam_scale(spark, sf_dir).collect()
-    }
-    full = {
-        r["source"]: (r["n_shingles"], r["bloom_pos"])
-        for r in SPECS["q132_bloom_decontam"].spark(spark, sf_dir).collect()
-    }
-    assert scale == full and len(scale) > 0
-
-
-def test_bloom_scale_equals_q132_on_planted(spark, bloom_sf_dir):  # noqa: F811
-    """On the planted fixture the searched false positive must survive
-    the scale mode too: bloom_pos=1 for source 'fp' even though no
-    exact column exists to say so."""
-    _scale_vs_q132(spark, bloom_sf_dir)
-    rows = {
-        r["source"]: r.asDict()
-        for r in bloom_decontam_scale(spark, bloom_sf_dir).collect()
-    }
-    assert rows["fp"] == {"source": "fp", "n_shingles": 1, "bloom_pos": 1}
-    assert rows["clean"] == {"source": "clean", "n_shingles": 1, "bloom_pos": 0}
-
-
-def test_bloom_scale_equals_q132_at_smoke_sf(spark):
-    _scale_vs_q132(spark, SF_SMOKE)
 
 
 def test_q136_streaming_bloom_equals_batch_on_planted(spark, bloom_sf_dir):  # noqa: F811
@@ -166,14 +128,3 @@ def test_q137_inclusion_exclusion_on_disjoint_sketches(spark, overlap_sf_dir):
     assert rows[("sA", "sC")] >= 0 and rows[("sB", "sC")] >= 0
 
 
-def test_bloom_scale_plan_has_no_bench_broadcast(spark):
-    """The scale mode's plan must contain EXACTLY three broadcast hash
-    joins (p1/p2/p3 bit sets) and no join on the raw 60-bit hash `h` —
-    dropping the bench-sized exact broadcast is what makes it the
-    100 TB mode, so its absence is pinned, not narrated."""
-    plan = bloom_decontam_scale(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") == 3, plan
-    import re
-
-    join_keys = re.findall(r"BroadcastHashJoin \[([a-zA-Z0-9_#]+)", plan)
-    assert all(k.startswith("p") for k in join_keys), join_keys

@@ -191,8 +191,8 @@ def test_q139_rotated_pass_catches_the_q138_miss(spark, snm_sf_dir):
 
 def test_minhash_calibration_sampled_mod1_equals_q114(spark):
     """The scale mode's audited face: sample_mod=1 must equal the full
-    q114 report column-for-column at smoke SF (the bloom_decontam_scale
-    equivalence discipline)."""
+    q114 report column-for-column at smoke SF (a scale mode equals its
+    audited face wherever both are computable)."""
     from aws_dla_kinesis_delivery_stream_example_spark.operators.dedup import (
         minhash_calibration_sampled,
     )

@@ -1,24 +1,16 @@
 """Round-14 planted coverage:
 
-1. The DSIR int64-headroom milli fold (``dsir_distribution_milli`` /
-   ``dsir_reweight_milli``; round-13 verdict Next #4): identity at
-   bench counts (pinned column-for-column against q140, the
-   ``bloom_decontam_scale`` discipline), and NO int64 wrap at
-   near-int64-max synthetic counts — Spark's folded scores must equal
-   a pure-python BIG-INT model of the folded lattice exactly, and sit
-   within 3 milli of the exact big-int score the unfolded form cannot
-   compute inside int64.
-2. The DSIR empty-target convention (round-13 advisor): a corpus with
+1. The DSIR empty-target convention (round-13 advisor): a corpus with
    zero target-language tokens scores 0 everywhere (nothing selected)
    on BOTH faces — no Spark-NULL-vs-DuckDB-error divergence.
-3. q143 (PII detection/redaction audit): hand-written PII fixture with
+2. q143 (PII detection/redaction audit): hand-written PII fixture with
    doc_ids outside every planted stratum (the augmentation is the
    identity there), expectations re-derived with Python ``re`` on the
    same Java/RE2 common-subset patterns, negative cases (UK phone,
    bare digit runs, 3-octet and word-glued IPs) pinned to zero, the
    DuckDB oracle hash-compared on the fixture, and redaction pinned
    idempotent.
-4. The common-subset claim as a hypothesis PROPERTY (counts, redacted
+3. The common-subset claim as a hypothesis PROPERTY (counts, redacted
    text, and residual equal the python-re model for ANY text over a
    boundary-dense alphabet), plus the two pii_redact design
    properties on adversarial fixtures: in-pass capture of rewrite-
@@ -36,12 +28,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
-from aws_dla_kinesis_delivery_stream_example_spark.plans.curation12 import (
-    _DSIR_FOLD_LIMIT,
-    dsir_distribution_milli,
-    dsir_reweight_milli,
-    dsir_score_table,
-)
 from aws_dla_kinesis_delivery_stream_example_spark.plans.curation13 import (
     PII_KINDS,
     pii_audit_report,
@@ -68,65 +54,7 @@ def _duck_on_documents(sf_dir: str, sql: str) -> list[tuple]:
     return [tuple(r) for r in con.execute(sql).fetchall()]
 
 
-# ------------------------------------------------------- DSIR milli
-
-def test_dsir_milli_identity_at_bench_counts(spark):
-    """The equivalence pin: at bench counts the fold factor is 1, so
-    the at-scale mode IS q140 column-for-column (the
-    ``bloom_decontam_scale`` convention — scale mode equals audited
-    face wherever both are computable)."""
-    exact = [
-        tuple(r)
-        for r in SPECS["q140_dsir_reweight"].spark(spark, SF_SMOKE).collect()
-    ]
-    milli = [tuple(r) for r in dsir_reweight_milli(spark, SF_SMOKE).collect()]
-    assert exact == milli and len(exact) > 0
-
-
-def _synthetic_dist() -> list[tuple[int, int, int]]:
-    """256 buckets with n_all ~ 9.0e18 (98% of int64 max): the raw
-    score's triple product would be ~1e39 here — the regime the fold
-    exists for. Counts vary per bucket so the scores are non-trivial."""
-    rows = []
-    for b in range(256):
-        c_all = 35_184_372_088_832 * 1000 + b * 1_000_003  # ~3.5e16
-        c_tgt = c_all * (b % 5 + 1) // 10  # 10%..50% target share
-        rows.append((b, c_all, c_tgt))
-    return rows
-
-
-def test_dsir_milli_no_wrap_at_100tb_counts(spark):
-    rows = _synthetic_dist()
-    n_all = sum(r[1] for r in rows)
-    n_tgt = sum(r[2] for r in rows)
-    assert n_all < 2**63 - 1 and n_all > int(0.9 * (2**63))  # near-max
-    # pure-python model of the folded lattice (big ints, no wrap)
-    k = max(1, n_all // _DSIR_FOLD_LIMIT)
-    assert k > 1, "fixture must actually exercise the fold"
-    folded = {b: (ca // k, ct // k) for b, ca, ct in rows}
-    nf_all = sum(v[0] for v in folded.values())
-    nf_tgt = sum(v[1] for v in folded.values())
-    model = {
-        b: (
-            1000 * ct * nf_all // (ca * nf_tgt) if ca > 0 and nf_tgt > 0 else 0
-        )
-        for b, (ca, ct) in folded.items()
-    }
-    # headroom proof: the folded product fits int64 with margin
-    worst = 1000 * max(v[1] for v in folded.values()) * nf_all
-    assert worst < 2**62
-
-    dist = spark.createDataFrame(rows, "bkt long, c_all long, c_tgt long")
-    got = {
-        r["bkt"]: r["s"]
-        for r in dsir_score_table(dsir_distribution_milli(dist)).collect()
-    }
-    assert got == model, "Spark folded scores drifted from the big-int model"
-    # and the fold tracks the EXACT big-int score within 3 milli
-    for b, ca, ct in rows:
-        s_exact = 1000 * ct * n_all // (ca * n_tgt)
-        assert abs(got[b] - s_exact) <= 3, (b, got[b], s_exact)
-
+# -------------------------------------------------- DSIR empty target
 
 _NO_TGT_ROWS = [
     (1, "alpha bravo charlie delta", "de", "s1", None),
@@ -544,8 +472,7 @@ def test_q146_nonvacuous_at_smoke_sf(spark):
 
 def test_q146_wide_band_geometry_is_executable(spark):
     """The scale remedy q146's docstring documents — wider bands at
-    production n — as an EXECUTABLE library mode (the
-    bloom_decontam_scale / dsir_milli house rule), not narration: the
+    production n — as an EXECUTABLE library mode, not narration: the
     wide 17x16 / 4x64-bit geometry runs the SAME decode -> resize ->
     pack chain on the SAME corpus, still finds every planted near-dup
     pair, and its band-collision candidate set never exceeds the bench

@@ -1,25 +1,15 @@
 """Round-15 planted coverage:
 
-1. ``waterfill_allocation`` (round-14 verdict Next #3 — the q148
-   waterfilling redistribution made executable): hand-computed
-   fixtures for the one-round proportional case, the multi-round
-   cap-and-respill case, the structural-leftover all-capped case, the
-   floor-starved greedy drain, and the zero-weight-headroom drain;
-   plus the global invariants (budget conservation, cap ceiling,
-   monotone realized, leftover only when every source is capped) on
-   both the fixtures and the real q148 output at the smoke SF, where
-   the bench corpus has no deficit and the redistribution must be the
-   identity.
-2. q151 (domain blocklist gate + domain-share audit) and its
+1. q151 (domain blocklist gate + domain-share audit) and its
    streaming twin q152: a handmade corpus exercising every audit
    face (blocked/kept counts, the all-blocked kept_docs = 0 guard,
    the deterministic top-domain tie-break) with the DuckDB oracle
-   hash-compared on the fixture; the library gate pinned to agree
-   with the audit's kept_docs (the q149/q30 single-source-of-truth
-   discipline) and to let no blocklisted domain through; and
-   stream == batch row-for-row (crash-resume lives in
-   tests/test_stateful.py).
-3. q153 (encoding/mojibake repair audit) and its streaming twin
+   hash-compared on the fixture; the audit's kept_docs pinned to a
+   plain blocklist filter over the planted domain stratum (the
+   q149/q30 single-source-of-truth discipline); the audit run on a
+   handmade (source, domain, text) frame; and stream == batch
+   row-for-row (crash-resume lives in tests/test_stateful.py).
+2. q153 (encoding/mojibake repair audit) and its streaming twin
    q154: the generated-table pins (every entry IS the cp1252 double
    encoding of its target; round-trip; mutually non-manufacturing),
    a handmade mojibake corpus with hand-computed counts and the
@@ -32,135 +22,10 @@
 from __future__ import annotations
 
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
-from aws_dla_kinesis_delivery_stream_example_spark.plans.curation15 import (
-    _Q148_CAP_EPOCHS,
-    waterfill_allocation,
-)
 
 from .conftest import SF_SMOKE
 
 SPECS = all_specs()
-
-_ALLOC_SCHEMA = "source string, n_tok long, w_milli long, alloc_tok long"
-
-
-def _wf(spark, rows):
-    df = spark.createDataFrame(rows, _ALLOC_SCHEMA)
-    return {r.source: r for r in waterfill_allocation(df).collect()}
-
-
-def _assert_invariants(out_rows):
-    """The four pinned waterfilling invariants, on any output."""
-    total_alloc = sum(r.alloc_tok for r in out_rows)
-    total_real = sum(r.wf_realized_tok for r in out_rows)
-    leftovers = {r.wf_leftover_tok for r in out_rows}
-    assert len(leftovers) == 1  # global scalar, replicated per row
-    leftover = leftovers.pop()
-    # budget conservation: nothing minted, nothing silently dropped
-    assert total_real + leftover == total_alloc
-    for r in out_rows:
-        cap = _Q148_CAP_EPOCHS * r.n_tok
-        # cap ceiling
-        assert r.wf_realized_tok <= cap
-        # monotone: redistribution never takes tokens away
-        assert r.wf_realized_tok >= min(r.alloc_tok, cap)
-        assert r.wf_added_tok == r.wf_realized_tok - min(r.alloc_tok, cap)
-        assert r.wf_capped == (1 if r.wf_realized_tok >= cap else 0)
-    # leftover is structural: only when every source sits at its cap
-    if leftover > 0:
-        assert all(r.wf_capped == 1 for r in out_rows)
-
-
-def test_waterfill_one_proportional_round(spark):
-    """Hand-computed: s0 over cap by 60; s1/s2 absorb 20/40 by weight
-    (1000:2000) in a single proportional round."""
-    got = _wf(
-        spark,
-        [("s0", 10, 1000, 100), ("s1", 100, 1000, 10), ("s2", 100, 2000, 10)],
-    )
-    assert got["s0"].wf_realized_tok == 40  # capped at 4 * 10
-    assert got["s1"].wf_realized_tok == 30  # 10 + 60 * 1000 // 3000
-    assert got["s2"].wf_realized_tok == 50  # 10 + 60 * 2000 // 3000
-    assert got["s0"].wf_rounds == 1
-    assert got["s0"].wf_leftover_tok == 0
-    _assert_invariants(list(got.values()))
-
-
-def test_waterfill_multi_round_respill(spark):
-    """Hand-computed: round 1 caps s1 (takes 40 of its proportional
-    498) and gives s2 498; round 2 re-spills the remaining 458 to s2
-    alone — the fixed point caps s0/s1 and leaves s2 below cap."""
-    got = _wf(
-        spark,
-        [("s0", 1, 0, 1000), ("s1", 10, 1000, 0), ("s2", 1000, 1000, 0)],
-    )
-    assert got["s0"].wf_realized_tok == 4
-    assert got["s1"].wf_realized_tok == 40
-    assert got["s2"].wf_realized_tok == 956
-    assert got["s0"].wf_rounds == 2
-    assert got["s0"].wf_leftover_tok == 0
-    assert (got["s0"].wf_capped, got["s1"].wf_capped, got["s2"].wf_capped) == (1, 1, 0)
-    _assert_invariants(list(got.values()))
-
-
-def test_waterfill_structural_leftover_when_all_capped(spark):
-    """When the whole corpus saturates the repetition ceiling the
-    leftover is REPORTED, not silently over-repeated: 100 tokens into
-    two cap-4 sources realizes 8 and strands 92."""
-    got = _wf(spark, [("s0", 1, 1000, 100), ("s1", 1, 1000, 0)])
-    assert got["s0"].wf_realized_tok == 4
-    assert got["s1"].wf_realized_tok == 4
-    assert got["s0"].wf_leftover_tok == 92
-    assert all(r.wf_capped == 1 for r in got.values())
-    _assert_invariants(list(got.values()))
-
-
-def test_waterfill_floor_starved_greedy_drain(spark):
-    """A deficit smaller than the weight spread floors every
-    proportional share to 0; the greedy fallback drains it in source
-    order so the loop still reaches the fixed point."""
-    got = _wf(
-        spark,
-        [("s0", 1, 1000, 5), ("s1", 100, 1, 0), ("s2", 100, 10**9, 0)],
-    )
-    # deficit = 1; 1 * 1 // (1e9 + 1) == 0 and 1 * 1e9 // (1e9 + 1) == 0,
-    # so the single token lands on s1 (first in source order).
-    assert got["s0"].wf_realized_tok == 4
-    assert got["s1"].wf_realized_tok == 1
-    assert got["s2"].wf_realized_tok == 0
-    assert got["s0"].wf_leftover_tok == 0
-    _assert_invariants(list(got.values()))
-
-
-def test_waterfill_zero_weight_headroom_drain(spark):
-    """Uncapped sources whose weights are all zero still absorb the
-    deficit (greedy, source order) — sumw == 0 must not strand budget
-    that headroom can take."""
-    got = _wf(spark, [("s0", 1, 1000, 10), ("s1", 10, 0, 0), ("s2", 10, 0, 0)])
-    # deficit = 6; s1 takes min(6, 40) = 6 greedily.
-    assert got["s0"].wf_realized_tok == 4
-    assert got["s1"].wf_realized_tok == 6
-    assert got["s2"].wf_realized_tok == 0
-    assert got["s0"].wf_leftover_tok == 0
-    _assert_invariants(list(got.values()))
-
-
-def test_waterfill_identity_on_bench_corpus(spark):
-    """On the bench corpus q148 reports zero deficit (sources are
-    near-uniform), so the redistribution must be the IDENTITY —
-    wf_realized == alloc_tok column-for-column, zero rounds, zero
-    leftover (the dsir_milli identity-at-bench convention)."""
-    q148 = SPECS["q148_temperature_mixture"].spark(spark, SF_SMOKE)
-    base = {r.source: r for r in q148.collect()}
-    assert sum(r.deficit_tok for r in base.values()) == 0  # non-vacuity guard
-    out = waterfill_allocation(q148).collect()
-    assert len(out) == len(base)
-    for r in out:
-        assert r.wf_realized_tok == base[r.source].alloc_tok
-        assert r.wf_added_tok == 0
-        assert r.wf_rounds == 0
-        assert r.wf_leftover_tok == 0
-    _assert_invariants(out)
 
 
 # ------------------------------------------------ q151 / q152 blocklist
@@ -168,7 +33,6 @@ def test_waterfill_identity_on_bench_corpus(spark):
 from aws_dla_kinesis_delivery_stream_example_spark.plans.curation17 import (  # noqa: E402
     BLOCKLIST,
     _domain_augment,
-    blocklist_gate,
 )
 from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import (  # noqa: E402
     load_table,
@@ -225,16 +89,16 @@ def test_q151_planted_fixture(spark, tmp_path):
 
 
 def test_q151_gate_agrees_with_audit(spark):
-    """The single-source-of-truth pin (the q149/q30 discipline): the
-    library gate's keep-set cardinality equals the audit's kept_docs
-    total, and no blocklisted domain survives the gate."""
+    """The single-source-of-truth pin (the q149/q30 discipline): a
+    plain blocklist filter over the planted domain stratum keeps
+    exactly the audit's kept_docs total."""
+    from pyspark.sql import functions as F
+
     docs = load_table(spark, SF_SMOKE, "documents")
     aug = _domain_augment(docs)
-    kept = blocklist_gate(aug)
+    kept = aug.filter(~F.col("domain").isin(list(BLOCKLIST)))
     audit = SPECS["q151_domain_blocklist"].spark(spark, SF_SMOKE).collect()
     assert kept.count() == sum(r.kept_docs for r in audit)
-    surviving = {r.domain for r in kept.select("domain").distinct().collect()}
-    assert surviving.isdisjoint(set(BLOCKLIST))
     # non-vacuity: the planted stratum blocks ~10/97 of any slice
     assert sum(r.blocked_docs for r in audit) > 0
     assert sum(r.n_docs for r in audit) == docs.count()
@@ -251,49 +115,30 @@ def test_q152_stream_equals_batch(spark):
 # ------------------------------------------- round-15 review fixes
 
 
-def test_waterfill_rejects_duplicate_sources(spark):
-    """A repeated source name would silently collapse into one dict
-    slot and undercount the budget — the loop must refuse loudly
-    (round-15 review)."""
-    import pytest as _pytest
-
-    df = spark.createDataFrame(
-        [("s0", 10, 1000, 100), ("s0", 20, 1000, 0)], _ALLOC_SCHEMA
-    )
-    with _pytest.raises(ValueError, match="duplicate source"):
-        waterfill_allocation(df)
-
-
 def test_blocklist_library_mode_takes_a_real_list(spark):
-    """The library pieces must take REAL blocklists, not only the
-    planted fixture (round-15 review): drive gate + audit on handmade
-    real-shaped domains with a custom blocklist frame and pin the
-    blocked/kept accounting by hand."""
+    """The audit runs on ANY (source, domain, text) frame, not only
+    the planted scan (round-15 review): drive it on handmade rows over
+    planted domains and pin the blocked/kept accounting by hand."""
     from aws_dla_kinesis_delivery_stream_example_spark.plans.curation17 import (
-        blocklist_frame,
         domain_audit_report,
     )
 
     df = spark.createDataFrame(
         [
-            ("s0", "spam.example.com", "a b"),
-            ("s0", "spam.example.com", "c"),
-            ("s0", "good.org", "d e"),
-            ("s0", "fine.net", "f"),
-            ("s1", "tracker.io", "g h i"),
+            ("s0", "site0.example", "a b"),
+            ("s0", "site0.example", "c"),
+            ("s0", "site1.example", "d e"),
+            ("s0", "site2.example", "f"),
+            ("s1", "site10.example", "g h i"),
         ],
         "source string, domain string, text string",
     )
-    bl = blocklist_frame(df.sparkSession, ("spam.example.com", "tracker.io"))
-    got = {r.source: tuple(r)[1:] for r in domain_audit_report(df, bl).collect()}
-    #             n_docs n_dom blk_docs blk_tok rate  kept top        share
+    got = {r.source: tuple(r)[1:] for r in domain_audit_report(df).collect()}
+    #             n_docs n_dom blk_docs blk_tok rate  kept top             share
     assert got == {
-        "s0": (4, 3, 2, 3, 500, 2, "fine.net", 500),
+        "s0": (4, 3, 2, 3, 500, 2, "site1.example", 500),
         "s1": (1, 1, 1, 3, 1000, 0, "", 0),
     }
-    kept = blocklist_gate(df, bl)
-    assert kept.count() == 2
-    assert {r.domain for r in kept.collect()} == {"good.org", "fine.net"}
 
 
 # ------------------------------------------ q153 / q154 mojibake audit

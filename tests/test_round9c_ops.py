@@ -208,62 +208,6 @@ def test_fuzzy_contamination_best_is_min_struct(spark):
     assert r["n_blocked"] == 2 and r["n_fuzzy"] == 2
 
 
-def test_normalize_for_edit_distance_unicode_planted(spark):
-    """Round-9 verdict Next #8: a decomposed-form twin (e + U+0301)
-    of a composed benchmark doc ("é" U+00E9) is the SAME text, but
-    raw levenshtein sees the phantom combining mark and raw shingles
-    differ. After the nfc policy on both frames the pair gates at
-    distance 0; strip_marks additionally matches the accent-free
-    variant; ascii pins byte==char parity ("é" -> "?")."""
-    composed = "le caf\u00e9 ouvre apres la pluie ce soir exactement"
-    decomposed = "le cafe\u0301 ouvre apres la pluie ce soir exactement"
-    accent_free = "le cafe ouvre apres la pluie ce soir exactement"
-    assert composed != decomposed and len(decomposed) == len(composed) + 1
-    bench = spark.createDataFrame([(1, composed)], "doc_id long, text string")
-    cand = spark.createDataFrame(
-        [(10, decomposed), (11, accent_free)], "doc_id long, text string"
-    )
-
-    def run(c, b):
-        return {
-            r["doc_id"]: r
-            for r in curation.fuzzy_contamination(
-                c, b, "doc_id", "text", n=4, max_dist_milli=100
-            ).collect()
-        }
-
-    # raw: the decomposed twin is not even distance-0 (and with a
-    # max_dist_milli tight enough it can drop entirely)
-    raw = run(cand, bench)
-    assert 10 not in raw or raw[10]["best_lev_milli"] > 0
-
-    norm = lambda df, pol: curation.normalize_for_edit_distance(df, "text", pol)  # noqa: E731
-    nfc = run(norm(cand, "nfc"), norm(bench, "nfc"))
-    assert nfc[10]["best_lev_milli"] == 0 and nfc[10]["best_bench"] == 1
-    assert 11 not in nfc or nfc[11]["best_lev_milli"] > 0
-
-    stripped = run(norm(cand, "strip_marks"), norm(bench, "strip_marks"))
-    assert stripped[10]["best_lev_milli"] == 0
-    assert stripped[11]["best_lev_milli"] == 0  # accent-insensitive
-
-    # ascii policy: both the composed bench and decomposed cand land
-    # on the same "caf?" form -> distance 0, and the output is pure
-    # ASCII so byte- and char-counting engines agree exactly
-    asc_cand, asc_bench = norm(cand, "ascii"), norm(bench, "ascii")
-    asc = run(asc_cand, asc_bench)
-    assert asc[10]["best_lev_milli"] == 0
-    texts = [r["text"] for r in asc_cand.collect()] + [
-        r["text"] for r in asc_bench.collect()
-    ]
-    assert all(all(ord(ch) < 128 for ch in t) for t in texts)
-
-
-def test_normalize_for_edit_distance_rejects_unknown_policy(spark):
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="policy"):
-        curation.normalize_for_edit_distance(df, "text", "nfkd")
-
-
 # ---------------------------------------------------------------- q121
 
 
@@ -353,136 +297,6 @@ def test_scd2_intervals_planted(spark):
         (1, 3): ("A", 40, None),
         (2, 1): ("X", 50, None),
     }
-
-
-def test_write_shards_layout_and_checksums(spark, tmp_path):
-    """The written shard directories must reconcile with the returned
-    manifest: per-shard row counts and XOR checksums match, and every
-    shard file is internally sorted by order_key (the deterministic-
-    shuffle contract a training loader relies on)."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    df = spark.createDataFrame(
-        [(i, 10 + i) for i in range(200)], "doc_id long, n_chars long"
-    )
-    out = str(tmp_path / "shards")
-    manifest = {
-        r["shard"]: r
-        for r in sharding.write_shards(
-            df, "doc_id", 4, out, seed=5, chars_col="n_chars"
-        ).collect()
-    }
-    assert set(manifest) == {0, 1, 2, 3}
-    for sh, m in manifest.items():
-        files = sorted(glob.glob(os.path.join(out, f"shard={sh}", "*.parquet")))
-        assert files, f"shard {sh} wrote no files"
-        keys = []
-        for f in files:
-            keys.extend(pq.read_table(f, columns=["order_key"])["order_key"].to_pylist())
-        assert len(keys) == m["n_docs"]
-        assert keys == sorted(keys), f"shard {sh} not sorted by order_key"
-        xor = 0
-        for k in keys:
-            xor ^= k
-        assert xor == m["xor_check"]
-        assert (min(keys), max(keys)) == (m["min_key"], m["max_key"])
-
-
-def test_write_shards_range_mode_stream_order_and_checksums(spark, tmp_path):
-    """tasks_per_shard=2 (the 100 TB mode): each shard spans multiple
-    files, but files concatenated in NAME order must form one sorted
-    stream whose count/XOR/span reconcile with the manifest — the
-    stream-level contract that survives range-boundary drift."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    df = spark.createDataFrame(
-        [(i, 10 + i) for i in range(400)], "doc_id long, n_chars long"
-    )
-    out = str(tmp_path / "shards_rng")
-    manifest = {
-        r["shard"]: r
-        for r in sharding.write_shards(
-            df, "doc_id", 3, out, seed=5, chars_col="n_chars", tasks_per_shard=2
-        ).collect()
-    }
-    assert set(manifest) == {0, 1, 2}
-    multi_file_shards = 0
-    for sh, m in manifest.items():
-        files = sorted(glob.glob(os.path.join(out, f"shard={sh}", "*.parquet")))
-        assert files
-        multi_file_shards += len(files) > 1
-        keys = []
-        for f in files:
-            keys.extend(pq.read_table(f, columns=["order_key"])["order_key"].to_pylist())
-        assert len(keys) == m["n_docs"]
-        assert keys == sorted(keys), f"shard {sh} concatenated stream not sorted"
-        xor = 0
-        for k in keys:
-            xor ^= k
-        assert xor == m["xor_check"]
-        assert (min(keys), max(keys)) == (m["min_key"], m["max_key"])
-    # the mode must actually have split at least one shard across
-    # files, or this test degenerates into the single-task case
-    assert multi_file_shards >= 1
-
-
-@pytest.mark.parametrize("tasks_per_shard", [1, 2])
-def test_write_shards_readback_full_manifest(spark, tmp_path, tasks_per_shard):
-    """Round-9 verdict Next #3: the returned manifest is recomputed
-    from the INPUT frame (sharding.py write_shards tail), so nothing
-    above guarantees the FILES agree with it on every column. Re-read
-    the written dataset the way a downstream consumer would (one Spark
-    read of the partitioned dir), recompute the FULL manifest — n_docs,
-    total_chars, xor_check, min_key, max_key — from the files alone,
-    and assert exact frame equality with the returned manifest, in
-    both parallelism modes."""
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(i, 10 + i) for i in range(300)], "doc_id long, n_chars long"
-    )
-    out = str(tmp_path / f"shards_rb{tasks_per_shard}")
-    returned = {
-        r["shard"]: r.asDict()
-        for r in sharding.write_shards(
-            df, "doc_id", 4, out, seed=5, chars_col="n_chars",
-            tasks_per_shard=tasks_per_shard,
-        ).collect()
-    }
-    readback = spark.read.parquet(out)
-    # the written rows carry everything the manifest summarizes
-    assert {"doc_id", "n_chars", "shard", "order_key"} <= set(readback.columns)
-    from_files = {
-        r["shard"]: r.asDict()
-        for r in readback.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-            F.expr("bit_xor(order_key)").cast("long").alias("xor_check"),
-            F.min("order_key").cast("long").alias("min_key"),
-            F.max("order_key").cast("long").alias("max_key"),
-        )
-        .collect()
-    }
-    # shard is a parquet partition column: normalize its type
-    from_files = {int(k): dict(v, shard=int(v["shard"])) for k, v in from_files.items()}
-    returned = {int(k): dict(v, shard=int(v["shard"])) for k, v in returned.items()}
-    assert from_files == returned
-    # and the files' doc ids are exactly the input's (no loss, no dup)
-    ids = [r["doc_id"] for r in readback.select("doc_id").collect()]
-    assert sorted(ids) == list(range(300))
-
-
-def test_write_shards_rejects_bad_parallelism(spark, tmp_path):
-    df = spark.createDataFrame([(1, 2)], "doc_id long, n_chars long")
-    with pytest.raises(ValueError, match="tasks_per_shard"):
-        sharding.write_shards(df, "doc_id", 2, str(tmp_path / "x"), tasks_per_shard=0)
 
 
 def test_streaming_shard_manifest_checkpoint_exactly_once(spark, tmp_path):

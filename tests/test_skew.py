@@ -5,8 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from aws_dla_kinesis_delivery_stream_example_spark.operators.skew import (
-    explode_salts,
-    salt_keys,
     salted_agg,
 )
 from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import load_table
@@ -44,19 +42,3 @@ def test_salted_agg_equals_plain(spark):
     assert salted == plain
 
 
-def test_salted_join_equals_plain(spark):
-    """Salted join: skewed fact side salted, small side exploded across
-    salts — same result as the direct join."""
-    li = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_suppkey")
-    supp = load_table(spark, SF_SMOKE, "supplier").select("s_suppkey", "s_name")
-    n_salts = 4
-    fact, _ = salt_keys(li, "l_suppkey", n_salts)
-    dim = explode_salts(supp, n_salts)
-    j = fact.join(
-        dim, (fact.l_suppkey == dim.s_suppkey) & (fact._salt == dim._salt)
-    ).select("l_orderkey", "l_suppkey", "s_name")
-    direct = li.join(supp, li.l_suppkey == supp.s_suppkey).select(
-        "l_orderkey", "l_suppkey", "s_name"
-    )
-    assert j.count() == direct.count()
-    assert j.subtract(direct).count() == 0 and direct.subtract(j).count() == 0
