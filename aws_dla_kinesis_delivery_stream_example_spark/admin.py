@@ -50,13 +50,11 @@ def truncate(path: str) -> None:
         shutil.rmtree(path)
 
 
-def create_sink_table(
-    spark: SparkSession, name: str, path: str, ddl: str, fmt: str = "json"
-) -> None:
-    """Q4: index DDL parity — register the sink as a catalog table with
-    an explicit schema (create-if-not-exists)."""
+def create_sink_table(spark: SparkSession, name: str, path: str, ddl: str) -> None:
+    """Q4: index DDL parity — register the JSON-lines sink as a catalog
+    table with an explicit schema (create-if-not-exists)."""
     spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {name} ({ddl}) USING {fmt} LOCATION '{path}'"
+        f"CREATE TABLE IF NOT EXISTS {name} ({ddl}) USING json LOCATION '{path}'"
     )
 
 

@@ -12,21 +12,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+# The detector's setting, shared with the streaming twin
+# (streaming/stateful.py) so batch and stream flag the same rows.
+ZS_LOOKBACK = 20
+ZS_MIN_N = 10
+ZS_THRESHOLD = 3.0
+
 
 def rolling_zscore(
     df: DataFrame,
     entity_col: str,
     order_cols: tuple[str, ...],
     value_col: str,
-    lookback: int = 20,
-    min_n: int = 10,
-    z_threshold: float = 3.0,
 ) -> DataFrame:
     """Per-entity rolling z-score outliers: each row's value against
-    the mean/stddev of its previous <= ``lookback`` rows (>= ``min_n``
-    required, zero-variance windows excluded); |z| >= ``z_threshold``
-    flags the row. Input ``value_col`` must already be integer units
-    (milli-units by convention) so the variance arithmetic is exact.
+    the mean/stddev of its previous <= ``ZS_LOOKBACK`` rows
+    (>= ``ZS_MIN_N`` required, zero-variance windows excluded);
+    |z| >= ``ZS_THRESHOLD`` flags the row. Input ``value_col`` must
+    already be integer units (milli-units by convention) so the
+    variance arithmetic is exact.
 
     Returns the input columns plus ``z`` (double). Keeps only flagged
     rows.
@@ -43,7 +47,7 @@ def rolling_zscore(
     w = (
         W.partitionBy(entity_col)
         .orderBy(*order_cols)
-        .rowsBetween(-lookback, -1)
+        .rowsBetween(-ZS_LOOKBACK, -1)
     )
     st = df.select(
         "*",
@@ -56,8 +60,8 @@ def rolling_zscore(
         var_num.cast("double") / (F.col("_n") * (F.col("_n") - 1))
     )
     return (
-        st.filter((F.col("_n") >= min_n) & (var_num > 0))
+        st.filter((F.col("_n") >= ZS_MIN_N) & (var_num > 0))
         .withColumn("z", z)
-        .filter(F.abs(F.col("z")) >= z_threshold)
+        .filter(F.abs(F.col("z")) >= ZS_THRESHOLD)
         .drop("_n", "_s", "_ss")
     )

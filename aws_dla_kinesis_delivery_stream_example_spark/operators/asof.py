@@ -19,25 +19,19 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    ts: str = "ts",
-    right_value_cols: list[str] | None = None,
-) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
     """For each left row, attach the right row with the greatest
     ``right.ts <= left.ts`` within the same ``on`` key (inclusive).
 
-    right_value_cols: right columns to carry (default: all non-key,
-    non-ts). Right-side (key, ts) ties resolve to one WHOLE row — the
-    lexicographic max over the value columns — never a per-column max
-    that could synthesize a row that doesn't exist.
+    Every right column but the key and ``ts`` is carried. Right-side
+    (key, ts) ties resolve to one WHOLE row — the lexicographic max
+    over those value columns — never a per-column max that could
+    synthesize a row that doesn't exist.
     """
-    value_cols = right_value_cols or [c for c in right.columns if c not in (on, ts)]
-    tie_w = W.partitionBy(on, ts).orderBy(*[F.desc(c) for c in value_cols])
+    value_cols = [c for c in right.columns if c not in (on, "ts")]
+    tie_w = W.partitionBy(on, "ts").orderBy(*[F.desc(c) for c in value_cols])
     r = (
-        right.select(on, ts, *value_cols)
+        right.select(on, "ts", *value_cols)
         .withColumn("_rn", F.row_number().over(tie_w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -45,14 +39,14 @@ def asof_join(
     # side: right=0 sorts before left=1 at equal ts => inclusive match.
     l_tagged = left.select(
         F.col(on).alias("_k"),
-        F.col(ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
         F.struct(*left.columns).alias("_left"),
         *[F.lit(None).cast(r.schema[c].dataType).alias(f"_r_{c}") for c in value_cols],
     )
     r_tagged = r.select(
         F.col(on).alias("_k"),
-        F.col(ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         F.lit(None).cast(
             l_tagged.schema["_left"].dataType

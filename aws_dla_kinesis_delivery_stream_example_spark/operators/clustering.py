@@ -55,56 +55,46 @@ def _batch_assign(x: np.ndarray, cents: np.ndarray) -> tuple[np.ndarray, np.ndar
 
 
 def assign_with_centroids(
-    emb: DataFrame,
-    cents: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_vector: bool = False,
+    emb: DataFrame, cents: np.ndarray, include_vector: bool = False
 ) -> DataFrame:
-    """Assignment pass against an explicit centroid matrix (closure-
-    shipped). With ``include_vector`` the embedding rides along, so a
-    per-cluster consumer (e.g. SemDeDup pair mining) needs NO corpus
-    self-join to get vectors next to cluster ids."""
-    schema = _ASSIGN_SCHEMA + (f", {vec_col} array<double>" if include_vector else "")
+    """Assignment pass of (vec_id, embedding) rows against an explicit
+    centroid matrix (closure-shipped). With ``include_vector`` the
+    embedding rides along, so a per-cluster consumer (e.g. SemDeDup
+    pair mining) needs NO corpus self-join to get vectors next to
+    cluster ids."""
+    schema = _ASSIGN_SCHEMA + (", embedding array<double>" if include_vector else "")
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+            x = np.vstack(pdf["embedding"].to_numpy()).astype("float64")
             best, d2 = _batch_assign(x, cents)
             out = {
-                "id": pdf[id_col].to_numpy(),
+                "id": pdf["vec_id"].to_numpy(),
                 "cluster": best.astype("int32"),
                 "d2": d2,
             }
             if include_vector:
-                out[vec_col] = list(x)
+                out["embedding"] = list(x)
             yield pd.DataFrame(out)
 
     ensure_shipped(emb.sparkSession)
-    return emb.select(id_col, vec_col).mapInPandas(assign, schema=schema)
+    return emb.select("vec_id", "embedding").mapInPandas(assign, schema=schema)
 
 
-def kmeans_assign(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", k: int = 8
-) -> DataFrame:
-    """One Lloyd assignment pass: each vector joins its nearest seed
-    centroid by squared euclidean distance.
+def kmeans_assign(emb: DataFrame, k: int = 8) -> DataFrame:
+    """One Lloyd assignment pass: each (vec_id, embedding) vector joins
+    its nearest seed centroid by squared euclidean distance.
 
     Returns (id, cluster, d2) with d2 rounded to 6 dp — the rounding
     grid on which the nearest-centroid decision is made.
     """
-    cents = kmeans_seeds(emb, id_col, vec_col, k)  # k x dim, closure-shipped
-    return assign_with_centroids(emb, cents, id_col, vec_col)
+    cents = kmeans_seeds(emb, "vec_id", "embedding", k)  # k x dim, closure-shipped
+    return assign_with_centroids(emb, cents)
 
 
-def updated_centroids(
-    emb: DataFrame,
-    cents: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def updated_centroids(emb: DataFrame, cents: np.ndarray) -> np.ndarray:
     """One Lloyd UPDATE step at scale: per-Arrow-batch partial sums
     (cluster, sum-vector, count) — k x dim doubles per batch, the
     map-side combine — then a tiny global agg; the corpus is scanned
@@ -116,7 +106,7 @@ def updated_centroids(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+            x = np.vstack(pdf["embedding"].to_numpy()).astype("float64")
             best, _ = _batch_assign(x, cents)
             rows = []
             for c in np.unique(best):
@@ -125,7 +115,7 @@ def updated_centroids(
             yield pd.DataFrame(rows, columns=["cluster", "s", "cnt"])
 
     ensure_shipped(emb.sparkSession)
-    part = emb.select(id_col, vec_col).mapInPandas(
+    part = emb.select("vec_id", "embedding").mapInPandas(
         partials, schema="cluster int, s array<double>, cnt long"
     )
     # partials are tiny (clusters x partitions); cache them so the two
@@ -155,14 +145,13 @@ def updated_centroids(
 
 def semantic_near_duplicates(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     threshold: float = 0.4,
     sub_blocks: int | None = None,
     max_cluster_rows: int | None = 50_000,
 ) -> DataFrame:
-    """SemDeDup: cosine near-dup pairs WITHIN k-means clusters.
+    """SemDeDup: cosine near-dup (vec_id, embedding) pairs WITHIN
+    k-means clusters.
 
     The cluster assignment is the candidate-blocking step — pairs
     across clusters are never formed, so the quadratic pair space
@@ -191,8 +180,8 @@ def semantic_near_duplicates(
     50k rows ~= 20 GB of pairwise doubles — the sensible ceiling for
     a 64 GB executor; pass ``None`` to disable.
     """
-    cents = kmeans_seeds(emb, id_col, vec_col, k)
-    assigned = assign_with_centroids(emb, cents, id_col, vec_col, include_vector=True)
+    cents = kmeans_seeds(emb, "vec_id", "embedding", k)
+    assigned = assign_with_centroids(emb, cents, include_vector=True)
     group_keys = ["cluster"]
     if sub_blocks is not None:
         import hashlib
@@ -218,7 +207,7 @@ def semantic_near_duplicates(
                         "big",
                     )
                     % nb
-                    for v in pdf[vec_col]
+                    for v in pdf["embedding"]
                 ]
                 pdf = pdf.assign(salt=np.array(g, dtype="int32"))
                 yield pdf
@@ -251,7 +240,7 @@ def semantic_near_duplicates(
             )
         pdf = pdf.sort_values("id")
         ids = pdf["id"].to_numpy()
-        x = np.vstack(pdf[vec_col].to_numpy())
+        x = np.vstack(pdf["embedding"].to_numpy())
         norms = np.linalg.norm(x, axis=1, keepdims=True)
         norms[norms == 0.0] = 1.0
         s = np.round((x / norms) @ (x / norms).T, 6)

@@ -43,9 +43,8 @@ def contaminated_ids(
     benchmark: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 8,
 ) -> DataFrame:
-    """IDs of candidate docs sharing >= 1 word-``n``-gram with any
+    """IDs of candidate docs sharing >= 1 word-4-gram with any
     benchmark doc (the decontamination pass a training pipeline runs
     against eval sets before training).
 
@@ -60,11 +59,11 @@ def contaminated_ids(
     from .dedup import _shingle_hash_rows
 
     bench_sh = (
-        _shingle_hash_rows(benchmark, id_col, text_col, n)
+        _shingle_hash_rows(benchmark, id_col, text_col, 4)
         .select(F.col("h").alias("shingle"))
         .distinct()
     )
-    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, n).select(
+    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, 4).select(
         F.col("doc").alias(id_col), F.col("h").alias("shingle")
     )
     return (
@@ -164,13 +163,11 @@ def incremental_dedup(
     )
 
 
-def boilerplate_ratio(
-    docs: DataFrame, id_col: str, text_col: str, n: int = 5, min_df: int = 3
-) -> DataFrame:
-    """Per-doc share of word-``n``-gram shingles that are *boilerplate*
-    (appear in >= ``min_df`` distinct docs) — the C4-style repeated-
-    template signal. Docs with zero shingles (shorter than ``n`` words)
-    are excluded.
+def boilerplate_ratio(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-doc share of word-5-gram shingles that are *boilerplate*
+    (appear in >= 3 distinct docs) — the C4-style repeated-template
+    signal. Docs with zero shingles (shorter than 5 words) are
+    excluded.
 
     Returns (id_col, n_shingles, n_boiler, boiler_ratio).
     """
@@ -179,17 +176,17 @@ def boilerplate_ratio(
     # the tokenize+explode over the corpus (a staging table at scale).
     # Hash-represented shingles (see contaminated_ids): df counting and
     # set membership are injective-mapping-invariant.
-    from .dedup import _shingle_hash_rows
+    from .dedup import _SHINGLE_N, _shingle_hash_rows
 
     sh = stage(
-        _shingle_hash_rows(docs, id_col, text_col, n).select(
+        _shingle_hash_rows(docs, id_col, text_col, _SHINGLE_N).select(
             F.col("doc").alias(id_col), F.col("h").alias("shingle")
         )
     )
     boiler = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= 3)
         .select("shingle")
     )
     flagged = sh.join(
@@ -504,20 +501,15 @@ def source_overlap(
     )
 
 
-def shingle_novelty(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    n: int = 5,
-) -> DataFrame:
-    """Per-source shingle NOVELTY audit: treating ``id_col`` order as
-    crawl order, a doc's shingle is *novel* iff this doc is the
-    shingle's globally first occurrence (min doc id over the corpus).
-    A source whose novelty ratio collapses is re-crawling content the
-    corpus already holds — the signal that decides when additional
-    crawling stops buying training data (the q102 composition report's
-    temporal cousin).
+def shingle_novelty(docs: DataFrame) -> DataFrame:
+    """Per-source shingle NOVELTY audit over the (doc_id, text, source)
+    columns' word-5-gram shingles: treating ``doc_id`` order as crawl
+    order, a doc's shingle is *novel* iff this doc is the shingle's
+    globally first occurrence (min doc id over the corpus). A source
+    whose novelty ratio collapses is re-crawling content the corpus
+    already holds — the signal that decides when additional crawling
+    stops buying training data (the q102 composition report's temporal
+    cousin).
 
     Returns one row per source:
     (source, n_docs, n_shingles, n_novel, novelty_ratio).
@@ -536,10 +528,10 @@ def shingle_novelty(
     The doc->source attach joins frames bounded by |docs|, never by
     |shingle rows|.
     """
-    from .dedup import _shingle_hash_rows
+    from .dedup import _SHINGLE_N, _shingle_hash_rows
 
     sh = stage(
-        _shingle_hash_rows(docs, id_col, text_col, n)
+        _shingle_hash_rows(docs, "doc_id", "text", _SHINGLE_N)
     )  # caller releases via staging.release_staging()
     per_doc = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
     novel_per_doc = (
@@ -548,7 +540,7 @@ def shingle_novelty(
         .groupBy("doc")
         .agg(F.count("*").alias("n_novel"))
     )
-    base = docs.select(F.col(id_col).alias("doc"), F.col(source_col).alias("source"))
+    base = docs.select(F.col("doc_id").alias("doc"), "source")
     joined = base.join(per_doc, "doc", "left").join(novel_per_doc, "doc", "left")
     return (
         joined.groupBy("source")

@@ -12,10 +12,14 @@ is one hash-aggregate on the key, inline in q25):
               16-bit chunk (Hamming<=3-style banding), verified by
               true Hamming distance.
 
-Everything is built-in expressions + joins — no Python UDF — so the
-plan is whole-stage-codegen end to end. At 100 TB: shingling is a
-narrow map; the only shuffles are groupBy(doc) for signatures and the
-band-key join, both on bounded-width keys. Reference parity: the
+Tokenize+hash is Arrow-batched Python: ``_shingle_hash_rows``,
+``cdc_chunk_rows`` and ``simhash_signatures`` are ``mapInPandas``
+passes, because one Python pass per batch beats building shingle
+strings with interpreted array expressions. Everything after them
+(signature min-aggs, band joins, verification, clustering) is JVM
+expressions and joins. At 100 TB: shingling is a narrow map; the
+only shuffles are groupBy(doc) for signatures and the band-key join,
+both on bounded-width keys. Reference parity: the
 reference has no dedup; this is the mandated extension surface
 (BASELINE.json north star).
 """
@@ -33,16 +37,20 @@ from .staging import stage
 # deterministic across runs/nodes AND reproducible in DuckDB SQL.
 _MERSENNE = (1 << 31) - 1
 
+# Word 5-grams: the shingle width of the near-dup operators here and of
+# the corpus statistics built on their shingles (curation.boilerplate_ratio,
+# curation.shingle_novelty, q102's per-source HLL).
+_SHINGLE_N = 5
+
 
 def shingle_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 5,
     threshold: float = 0.1,
     max_df: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs sharing >=1 shingle.
+    """Exact word-5-gram Jaccard similarity for all pairs sharing >=1 shingle.
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
 
@@ -66,7 +74,7 @@ def shingle_jaccard_pairs(
     # string: Jaccard is invariant under an injective mapping, the join
     # key shrinks ~4x, and the Python hash pass beats interpreted
     # string-building (see _shingle_hash_rows).
-    sh = stage(_capped_shingles(df, id_col, text_col, n, max_df))
+    sh = stage(_capped_shingles(df, id_col, text_col, max_df))
     # caller releases via staging.release_staging()
     return _jaccard_pairs_on(sh, threshold)
 
@@ -106,14 +114,13 @@ def _capped_shingles(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int,
     max_df: int | None,
 ) -> DataFrame:
     """(doc, shingle) rows with the optional max_df valve applied —
     the shared prefix of shingle_jaccard_pairs and
     shared_shingle_pairs. NOT staged here: each caller stages at the
     boundary its own consumer count requires."""
-    sh = _shingle_hash_rows(df, id_col, text_col, n).withColumnRenamed("h", "shingle")
+    sh = _shingle_hash_rows(df, id_col, text_col, _SHINGLE_N).withColumnRenamed("h", "shingle")
     if max_df is not None:
         rare = (
             sh.groupBy("shingle")
@@ -129,7 +136,6 @@ def shared_shingle_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 5,
     max_df: int | None = None,
 ) -> DataFrame:
     """Distinct (doc_a, doc_b) pairs (doc_a < doc_b) sharing >= 1
@@ -150,7 +156,7 @@ def shared_shingle_pairs(
     shingle_jaccard_pairs). Equivalence to the threshold-0 jaccard form
     is pinned in tests/test_round8b_ops.py.
     """
-    sh = stage(_capped_shingles(df, id_col, text_col, n, max_df))
+    sh = stage(_capped_shingles(df, id_col, text_col, max_df))
     a, b = sh.alias("a"), sh.alias("b")
     return (
         a.join(
@@ -228,20 +234,21 @@ def _shingle_hash_rows(
     )
 
 
-def cdc_chunk_rows(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    window: int = 4,
-    mask: int = 32,
-) -> DataFrame:
+# Content-defined chunking geometry (q135 and its oracle): 4-token
+# rolling windows, a boundary where the window hash = 0 mod 32, so
+# chunks run ~32 tokens.
+CDC_WINDOW = 4
+CDC_MASK = 32
+
+
+def cdc_chunk_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc, chunk_hash, chunk_len) content-defined chunks: a chunk
-    boundary falls AFTER token j whenever the rolling ``window``-gram
-    ending at j hashes to 0 mod ``mask`` (gear/Rabin-style CDC on the
+    boundary falls AFTER token j whenever the rolling ``CDC_WINDOW``-gram
+    ending at j hashes to 0 mod ``CDC_MASK`` (gear/Rabin-style CDC on the
     word stream), so an insertion only re-chunks its local
     neighborhood — unlike fixed-stride chunking (q103), where one
     inserted token shifts every downstream chunk and defeats dedup.
-    Expected chunk length ~``mask`` tokens; a doc shorter than the
+    Expected chunk length ~``CDC_MASK`` tokens; a doc shorter than the
     window is one whole-doc chunk (boundaries need a full window).
 
     Arrow-batched Python for the same reason as _shingle_hash_rows:
@@ -268,14 +275,14 @@ def cdc_chunk_rows(
                 if not toks:
                     continue
                 start = 0
-                for j in range(window, len(toks)):
+                for j in range(CDC_WINDOW, len(toks)):
                     # boundary after token j (1-based: window ends at
-                    # j) <=> hash of toks[j-window:j] = 0 mod mask;
+                    # j) <=> hash of toks[j-CDC_WINDOW:j] = 0 mod CDC_MASK;
                     # the LAST token never cuts (an empty tail chunk
                     # cannot exist in either engine's formulation)
-                    w = " ".join(toks[j - window : j])
+                    w = " ".join(toks[j - CDC_WINDOW : j])
                     hw = int(hashlib.md5(w.encode()).hexdigest()[:15], 16)
-                    if hw % mask == 0:
+                    if hw % CDC_MASK == 0:
                         chunk = " ".join(toks[start:j])
                         out_doc.append(doc)
                         out_h.append(
@@ -302,7 +309,6 @@ def minhash_signatures(
     id_col: str,
     text_col: str,
     n_hashes: int = 64,
-    shingle_n: int = 5,
     _hash_rows: DataFrame | None = None,
 ) -> DataFrame:
     """(id, signature array<long>) — min over n universal hashes of the
@@ -324,7 +330,7 @@ def minhash_signatures(
     sh = (
         _hash_rows
         if _hash_rows is not None
-        else _shingle_hash_rows(df, id_col, text_col, shingle_n, mod=_MERSENNE)
+        else _shingle_hash_rows(df, id_col, text_col, _SHINGLE_N, mod=_MERSENNE)
     )
     # h_i(x) = (a_i*x + b_i) mod p, fixed odd a_i / b_i derived from i.
     mins = [
@@ -342,7 +348,6 @@ def minhash_near_duplicates(
     threshold: float = 0.5,
     n_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 5,
     _hash_rows: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: band the signature, equi-join on
@@ -368,7 +373,7 @@ def minhash_near_duplicates(
     # Signature computation (shingle + 64 min-aggs) feeds both join
     # sides — materialize once (staging table at 100 TB).
     sig = stage(
-        minhash_signatures(df, id_col, text_col, n_hashes, shingle_n, _hash_rows)
+        minhash_signatures(df, id_col, text_col, n_hashes, _hash_rows)
     )
     # Narrow band join: only (doc, band) rows shuffle; the 64-long
     # signatures re-attach AFTER pair dedup, so candidate multiplicity
@@ -410,8 +415,8 @@ def minhash_near_duplicates(
     )
 
 
-def duplicate_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b") -> DataFrame:
-    """Resolve near-dup pairs into clusters: connected components by
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
+    """Resolve near-dup (doc_a, doc_b) pairs into clusters: connected components by
     iterative min-label propagation. Returns (doc, cluster_id) where
     cluster_id = min doc id in the component.
 
@@ -448,8 +453,8 @@ def duplicate_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc
     between GCs (``import gc; gc.collect()`` forces the release).
     """
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionAll(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
         .persist()
     )
@@ -500,23 +505,17 @@ def duplicate_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc
     return labels
 
 
-def cluster_survivors(
-    clusters: DataFrame,
-    scored: DataFrame,
-    id_col: str = "doc",
-    score_col: str = "score",
-    size_col: str | None = None,
-) -> DataFrame:
+def cluster_survivors(clusters: DataFrame, scored: DataFrame) -> DataFrame:
     """Quality-aware survivor selection: per near-dup cluster, keep the
-    member with the highest ``score_col`` (ties -> lowest id) and
+    member with the highest quality ``p_u`` (ties -> lowest id) and
     account for what gets dropped — the curation step after cluster
     resolution, where production pipelines keep the *best* copy of
     duplicated content rather than an arbitrary one (the usual
     refinement over ``duplicate_clusters``' min-id convention).
 
-    ``clusters`` is (id_col, cluster_id) as produced by
-    ``duplicate_clusters``; ``scored`` carries (id_col, score_col[,
-    size_col]) for at least every clustered id.
+    ``clusters`` is (doc, cluster_id) as produced by
+    ``duplicate_clusters``; ``scored`` carries (doc, p_u, n_chars) for
+    at least every clustered doc.
 
     100 TB design note: survivor choice is ONE hash aggregation using
     ``max_by(id, struct(score, -id))`` — map-side-combinable and
@@ -526,46 +525,42 @@ def cluster_survivors(
     it in constant state per cluster per task.
 
     Returns (cluster_id, survivor_doc, survivor_score, n_members,
-    n_removed[, removed_<size_col>]) — one row per cluster.
+    n_removed, removed_n_chars) — one row per cluster.
 
-    Contract: ``score_col`` must be non-null and exactly comparable
+    Contract: ``p_u`` must be non-null and exactly comparable
     (integers, e.g. q85 micro-units). A NULL score would make the
     max_by ordering struct contain a null field, whose placement
     engines disagree on — coalesce scores before calling. And
-    ``id_col`` must be NUMERIC: the tie-break negates it, and under
+    ``doc`` must be NUMERIC: the tie-break negates it, and under
     non-ANSI Spark negating a string casts to NULL, which would make
     the struct ordering engine-dependent instead of failing — so the
     type is validated here and a non-numeric id raises immediately.
     """
     _NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
-    id_type = dict(clusters.dtypes).get(id_col)
+    id_type = dict(clusters.dtypes).get("doc")
     if id_type is None or not (
         id_type in _NUMERIC or id_type.startswith("decimal")
     ):
         raise TypeError(
-            f"cluster_survivors: id_col {id_col!r} must be numeric for the "
+            "cluster_survivors: column 'doc' must be numeric for the "
             f"max_by(id, struct(score, -id)) tie-break, got {id_type!r} — "
             "hash or zip string ids to a numeric surrogate first "
             "(e.g. xxhash64(id))"
         )
-    j = clusters.join(scored, id_col)
+    j = clusters.join(scored, "doc")
     # struct comparison is lexicographic: max score first, then max(-id)
     # = min id — the deterministic tie-break both engines agree on for
     # exact-integer scores
     pref = F.struct(
-        F.col(score_col).alias("s"), (-F.col(id_col)).alias("neg_id")
+        F.col("p_u").alias("s"), (-F.col("doc")).alias("neg_id")
     )
     aggs = [
-        F.max_by(F.col(id_col), pref).alias("survivor_doc"),
-        F.max(score_col).alias("survivor_score"),
+        F.max_by(F.col("doc"), pref).alias("survivor_doc"),
+        F.max("p_u").alias("survivor_score"),
         F.count(F.lit(1)).alias("n_members"),
         (F.count(F.lit(1)) - 1).alias("n_removed"),
+        (F.sum("n_chars") - F.max_by(F.col("n_chars"), pref)).alias("removed_n_chars"),
     ]
-    if size_col is not None:
-        aggs.append(
-            (F.sum(size_col) - F.max_by(F.col(size_col), pref))
-            .alias(f"removed_{size_col}")
-        )
     return j.groupBy("cluster_id").agg(*aggs)
 
 
@@ -839,7 +834,6 @@ def simhash_near_duplicates(
     text_col: str,
     max_hamming: int = 3,
     max_band_bucket: int | None = 256,
-    hard_band_bucket: int | None = 65_536,
 ) -> DataFrame:
     """SimHash near-dup pairs: candidates share a band key (Manku
     block-triple banding for the standard radius-3 search, 16-bit
@@ -865,7 +859,7 @@ def simhash_near_duplicates(
     # of cached rows for sort-merge joins. Leave the distinct lazy.
     usig = sig.select("sig", "chunks").distinct()
     spair = (
-        simhash_band_candidates(usig, max_hamming, max_band_bucket, hard_band_bucket)
+        simhash_band_candidates(usig, max_hamming, max_band_bucket)
         .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
         .filter(F.col("hamming") <= max_hamming)
     )
@@ -899,14 +893,14 @@ def simhash_near_duplicates(
     return cross.unionByName(same)
 
 
-def minhash_calibration_report(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-) -> DataFrame:
+# The Jaccard level the calibration audit measures recall and precision at
+# (q26's exact truth set, q27's MinHash candidates).
+_CALIBRATION_THRESHOLD = 0.5
+
+
+def minhash_calibration_report(docs: DataFrame) -> DataFrame:
     """Estimator-quality audit: how well do the MinHash(64)+LSH(16)
-    candidates (q27) track the EXACT-Jaccard >= threshold truth set
+    candidates (q27) track the EXACT-Jaccard >= 0.5 truth set
     (cap-free q26)? One summary row:
 
     (n_truth, n_candidates, n_hit, recall_milli, precision_milli,
@@ -931,13 +925,13 @@ def minhash_calibration_report(
     (guide §1.2 step 1: the dominant cost at 100 TB is reading and
     tokenizing the corpus, and this audit was doing it twice).
     """
-    sh60 = stage(_shingle_hash_rows(docs, id_col, text_col, 5))
+    sh60 = stage(_shingle_hash_rows(docs, "doc_id", "text", _SHINGLE_N))
     truth = _jaccard_pairs_on(
-        sh60.withColumnRenamed("h", "shingle"), threshold
+        sh60.withColumnRenamed("h", "shingle"), _CALIBRATION_THRESHOLD
     ).select("doc_a", "doc_b", F.round(F.col("jaccard") * 1000, 0).cast("long").alias("ej_exact_milli"))
     h31 = sh60.select("doc", F.pmod(F.col("h"), F.lit(_MERSENNE)).alias("h"))
     cand = minhash_near_duplicates(
-        docs, id_col, text_col, threshold=threshold, _hash_rows=h31
+        docs, "doc_id", "text", threshold=_CALIBRATION_THRESHOLD, _hash_rows=h31
     ).select(
         "doc_a", "doc_b",
         F.round(F.col("est_jaccard") * 1000, 0).cast("long").alias("ej_est_milli"),
@@ -983,9 +977,6 @@ _CAL_SAMPLE_MOD = 2147483647
 
 def minhash_calibration_sampled(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
     sample_mod: int = 1,
     sample_bucket: int = 0,
 ) -> DataFrame:
@@ -1029,10 +1020,10 @@ def minhash_calibration_sampled(
         # DuckDB raises; the reduced form is mathematically identical
         # and peaks at (P-1)*MULT ~ 5.7e18, inside int64.
         bucket = (
-            (F.col(id_col) % _CAL_SAMPLE_MOD)
+            (F.col("doc_id") % _CAL_SAMPLE_MOD)
             * _CAL_SAMPLE_MULT
             % _CAL_SAMPLE_MOD
             % sample_mod
         )
         docs = docs.filter(bucket == sample_bucket)
-    return minhash_calibration_report(docs, id_col, text_col, threshold)
+    return minhash_calibration_report(docs)

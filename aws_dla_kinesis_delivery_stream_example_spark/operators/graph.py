@@ -22,15 +22,9 @@ PR_INIT = 1_000_000
 PR_TELEPORT = 150_000
 
 
-def pagerank_fixed_point(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    iters: int = 3,
-    checkpoint_every: int = 4,
-) -> DataFrame:
-    """PageRank on an UNDIRECTED pair list (each pair becomes two
-    directed edges), in fixed-point micro-unit integer arithmetic:
+def pagerank_fixed_point(pairs: DataFrame, iters: int = 3, checkpoint_every: int = 4) -> DataFrame:
+    """PageRank on an UNDIRECTED (doc_a, doc_b) pair list (each pair
+    becomes two directed edges), in fixed-point micro-unit integer arithmetic:
 
         r'(v) = PR_TELEPORT + (85 * sum_{u->v} (r(u) // deg(u))) // 100
 
@@ -79,9 +73,9 @@ def pagerank_fixed_point(
     plan-size test at iters=6 in tests/test_round9_ops.py.
     """
     sym = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(
-        pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
     edges = stage(sym)
     ranks = (

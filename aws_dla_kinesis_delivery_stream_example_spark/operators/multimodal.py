@@ -135,7 +135,7 @@ def _decode(payload: bytes, media_type: str) -> list[float]:
     return [0.0] + [b / 255.0 for b in digest[:16]]
 
 
-def extract_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload column."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -159,15 +159,15 @@ def extract_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame-sampling plumbing for video rows: expand each row into
-    frame timestamps (decode itself stubbed). Pure built-ins — the
+    one frame timestamp per second (decode itself stubbed). Pure built-ins — the
     expansion is `sequence` + `explode`, no Python."""
     return (
         media.filter(F.col("media_type") == "video")
         .withColumn(
             "frame_ms",
-            F.explode(F.sequence(F.lit(0), F.col("meta.duration_ms"), F.lit(every_ms))),
+            F.explode(F.sequence(F.lit(0), F.col("meta.duration_ms"), F.lit(1000))),
         )
         .select("media_id", "uri", "frame_ms")
     )
@@ -194,9 +194,11 @@ AUDIO_FEATURE_SCHEMA = T.StructType(
 # WITHOUT decoding bytes, which is what makes the binary round-trip
 # (encode_wav -> decode_wav) exactly checkable end-to-end.
 _AUD_A, _AUD_B, _AUD_M, _AUD_C = 31, 7, 201, 100
+# A frame is silent below this mean squared sample (q111).
+SILENCE_ENERGY_PER_SAMPLE = 100
 
 
-def synthesize_audio(documents: DataFrame, rate: int = 16000) -> DataFrame:
+def synthesize_audio(documents: DataFrame) -> DataFrame:
     """Deterministic fake audio table: one PCM-16 mono WAV payload per
     document, ``n_chars`` samples of the closed-form waveform above.
     The synthesis itself is Arrow-batched numpy (vectorized per
@@ -227,16 +229,14 @@ def synthesize_audio(documents: DataFrame, rate: int = 16000) -> DataFrame:
     )
 
 
-def audio_frame_energy(
-    media: DataFrame, frame_samples: int = 256, silence_energy_per_sample: int = 100
-) -> DataFrame:
+def audio_frame_energy(media: DataFrame, frame_samples: int = 256) -> DataFrame:
     """Frame-level energy features over PCM-16 WAV payloads: split each
     clip into non-overlapping ``frame_samples``-sample frames (last
     frame ragged) and compute EXACT integer energies — per media:
     (n_samples, n_frames, total_energy, peak_frame_energy, n_silent)
     where energy = sum of squared int16 samples (fits int64: 2^30 per
     sample x frame length) and a frame is silent iff its energy <
-    silence_energy_per_sample * its length.
+    ``SILENCE_ENERGY_PER_SAMPLE`` * its length.
 
     Integer energies, not float RMS, for the same reason as the q105
     milli-unit lattice: float sums are accumulation-order-dependent;
@@ -278,7 +278,7 @@ def audio_frame_energy(
                     total = int(energies.sum())
                     peak = int(energies.max())
                     n_silent = int(
-                        (energies < silence_energy_per_sample * lens).sum()
+                        (energies < SILENCE_ENERGY_PER_SAMPLE * lens).sum()
                     )
                 else:
                     n_frames, total, peak, n_silent = 0, 0, 0, 0

@@ -42,6 +42,13 @@ _PAIR_SCHEMA = "vec_a long, vec_b long, cos_sim double"
 # a larger workload is a join problem, not a closure problem.
 MAX_QUERY_VECTORS = 10_000
 
+# Sign-pattern buckets key on the signs of the first 3 dims: 8 buckets.
+_SIGN_BITS = 3
+# Learned IVF: k-means cells (seeds = the 8 smallest vec_ids).
+_IVF_LISTS = 8
+# Neighbors kept per probe by quantized_topk (q110's top-3).
+QUANTIZED_K = 3
+
 
 def _collect_queries(queries: DataFrame, op_name: str) -> pd.DataFrame:
     """Enforce the small-queries contract BEFORE collecting: probe one
@@ -65,8 +72,8 @@ def _unit_rows(series: pd.Series) -> np.ndarray:
     return m / norms
 
 
-def as_queries(df: DataFrame, id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
-    return df.select(F.col(id_col).alias("q_id"), F.col(emb_col).alias("q_emb"))
+def as_queries(df: DataFrame) -> DataFrame:
+    return df.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -125,24 +132,24 @@ def ivf_topk(
     candidates: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_bits: int = 3,
     hamming_probes: int = 0,
 ) -> DataFrame:
-    """Approximate top-k over sign-pattern buckets.
+    """Approximate top-k over sign-pattern buckets of
+    ``_SIGN_BITS`` bits.
 
     ``hamming_probes=0`` probes ONLY the query's own bucket (fastest,
     lowest recall); ``hamming_probes=1`` additionally probes every
     bucket at Hamming distance 1 — the standard multi-probe recall
-    lever: a vector whose first ``n_bits`` dims sit near a sign
+    lever: a vector whose first ``_SIGN_BITS`` dims sit near a sign
     boundary lands in a neighboring bucket, and the 1-bit-flip probes
-    recover it for ~``n_bits``x more scanned candidates (still a
-    2**n_bits-fold reduction vs brute force at 100 TB, and each probe
+    recover it for ~``_SIGN_BITS``x more scanned candidates (still a
+    2**_SIGN_BITS-fold reduction vs brute force at 100 TB, and each probe
     stays a partition-prunable bucket filter). Larger radii probe
-    every bucket within that Hamming distance (sum of C(n_bits, r)
-    flips); radius > n_bits raises — it cannot mean anything.
+    every bucket within that Hamming distance (sum of C(_SIGN_BITS, r)
+    flips); radius > _SIGN_BITS raises — it cannot mean anything.
 
     Recall contract (geometry-dependent — sign buckets key on the
-    signs of the first ``n_bits`` dims): on the planted-blob property
+    signs of the first ``_SIGN_BITS`` dims): on the planted-blob property
     geometry, ``hamming_probes=0`` measured 0.87-1.0 recall@5 vs brute
     force across seeds and ``hamming_probes=1`` recovered 1.0 on all
     of them; the >= 0.9 floor at 1 probe is pinned by
@@ -153,28 +160,28 @@ def ivf_topk(
     q_mat = _unit_rows(qp["q_emb"])
     q_ids = qp["q_id"].to_numpy()
     raw = np.vstack(qp["q_emb"].to_numpy())
-    weights = np.array([2 ** (n_bits - 1 - i) for i in range(n_bits)])
-    q_buckets = ((raw[:, :n_bits] > 0) * weights).sum(axis=1)
+    weights = np.array([2 ** (_SIGN_BITS - 1 - i) for i in range(_SIGN_BITS)])
+    q_buckets = ((raw[:, :_SIGN_BITS] > 0) * weights).sum(axis=1)
 
     # bucket -> indices of the queries probing it (own bucket plus
     # every bucket within Hamming distance <= hamming_probes when
-    # multi-probing — all C(n_bits, r) r-bit flips per radius, not
+    # multi-probing — all C(_SIGN_BITS, r) r-bit flips per radius, not
     # just radius 1, so the parameter means what it says instead of
     # silently capping at 1). Buckets stay disjoint, so each
     # (query, candidate) pair is scored at most once — no dedup needed.
     from itertools import combinations
 
-    if not 0 <= hamming_probes <= n_bits:
+    if not 0 <= hamming_probes <= _SIGN_BITS:
         raise ValueError(
             f"ivf_topk: hamming_probes={hamming_probes} outside [0, "
-            f"n_bits={n_bits}] — a radius past n_bits cannot flip more "
-            "bits than the bucket key has"
+            f"{_SIGN_BITS}] — a radius past the bucket key's {_SIGN_BITS} "
+            "bits cannot flip more bits than the key has"
         )
     probe_map: dict[int, list[int]] = {}
     for qi, b in enumerate(q_buckets.tolist()):
         probes = {int(b)}
         for r in range(1, hamming_probes + 1):
-            for bits in combinations(range(n_bits), r):
+            for bits in combinations(range(_SIGN_BITS), r):
                 flip = 0
                 for j in bits:
                     flip |= 1 << j
@@ -182,7 +189,7 @@ def ivf_topk(
         for pb in probes:
             probe_map.setdefault(pb, []).append(qi)
 
-    cand_b = candidates.withColumn("bucket", sign_bucket("embedding", n_bits))
+    cand_b = candidates.withColumn("bucket", sign_bucket("embedding", _SIGN_BITS))
     parts = []
     for pb in sorted(probe_map):
         idx = np.array(probe_map[pb])
@@ -199,41 +206,25 @@ def ivf_topk(
     return _topk(scored, k)
 
 
-def learned_centroids(
-    candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_list: int = 8,
-    train_iters: int = 1,
-) -> np.ndarray:
-    """Train the IVF coarse quantizer: deterministic seeds (k smallest
-    ids) refined by ``train_iters`` Lloyd iterations. Every step is on
+def learned_centroids(candidates: DataFrame) -> np.ndarray:
+    """Train the IVF coarse quantizer: deterministic seeds (the
+    ``_IVF_LISTS`` smallest ids) refined by one Lloyd iteration. Every step is on
     the 6-dp rounding grid (clustering._batch_assign /
     updated_centroids), so the trained centroids — and therefore the
     probe decisions — are bit-reproducible across engines and runs."""
     from .clustering import kmeans_seeds, updated_centroids
 
-    cents = kmeans_seeds(candidates, id_col, vec_col, n_list)
-    for _ in range(train_iters):
-        cents = updated_centroids(candidates, cents, id_col, vec_col)
-    return cents
+    return updated_centroids(candidates, kmeans_seeds(candidates, "vec_id", "embedding", _IVF_LISTS))
 
 
-def ivf_learned_topk(
-    candidates: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_list: int = 8,
-    n_probe: int = 2,
-    train_iters: int = 1,
-) -> DataFrame:
+def ivf_learned_topk(candidates: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF ANN with a LEARNED coarse quantizer (the production shape,
     vs the data-independent sign buckets of ``ivf_topk``): k-means
-    centroids partition the corpus into ``n_list`` cells that follow
-    the data distribution, and each query scans only its ``n_probe``
-    nearest cells — an ``n_list/n_probe``-fold candidate reduction
-    that, unlike sign bucketing, does not degrade when the embedding
-    mass concentrates away from the coordinate hyperplanes.
+    centroids partition the corpus into ``_IVF_LISTS`` cells that
+    follow the data distribution, and each query scans only its 2
+    nearest cells — an ``_IVF_LISTS/2``-fold candidate reduction that,
+    unlike sign bucketing, does not degrade when the embedding mass
+    concentrates away from the coordinate hyperplanes.
 
     100 TB sizing: n_list ~ sqrt(N) cells keeps both the per-cell scan
     (N/n_list vectors) and the query->centroid argmin (n_list
@@ -244,7 +235,7 @@ def ivf_learned_topk(
     of partition pruning.
 
     Probe selection happens driver-side on the (tiny, closure-shipped)
-    query set: nearest ``n_probe`` centroids by 6-dp-rounded distance
+    query set: nearest 2 centroids by 6-dp-rounded distance
     with index tie-break — the same grid the oracle's SQL reproduces.
     Cells are disjoint, so each (query, candidate) pair is scored at
     most once."""
@@ -253,7 +244,7 @@ def ivf_learned_topk(
     qp = _collect_queries(queries, "ivf_learned_topk")
     if len(qp) == 0:
         return _empty_topk(candidates.sparkSession)
-    cents = learned_centroids(candidates, train_iters=train_iters, n_list=n_list)
+    cents = learned_centroids(candidates)
     q_mat = _unit_rows(qp["q_emb"])
     q_ids = qp["q_id"].to_numpy()
     raw = np.vstack(qp["q_emb"].to_numpy()).astype("float64")
@@ -264,7 +255,7 @@ def ivf_learned_topk(
     probe_map: dict[int, list[int]] = {}
     for qi in range(len(q_ids)):
         order = np.argsort(d2[qi], kind="stable")  # ties -> lower cell index
-        for cell in order[:n_probe].tolist():
+        for cell in order[:2].tolist():
             probe_map.setdefault(int(cell), []).append(qi)
 
     # The assignment is a full-corpus Python GEMM pass and feeds one
@@ -293,12 +284,10 @@ def ivf_learned_topk(
     scored = parts[0]
     for p in parts[1:]:
         scored = scored.unionAll(p)
-    return _topk(scored, k)
+    return _topk(scored, 5)
 
 
-def embedding_near_duplicates(
-    df: DataFrame, threshold: float = 0.95, n_bits: int = 3
-) -> DataFrame:
+def embedding_near_duplicates(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-dup pairs via per-bucket upper-triangle
     GEMM (near-identical vectors share the sign bucket). Returns
     (vec_a, vec_b, cos_sim >= threshold), vec_a < vec_b. Pairs below
@@ -322,14 +311,14 @@ def embedding_near_duplicates(
 
     ensure_shipped(df.sparkSession)
     return (
-        df.withColumn("bucket", sign_bucket("embedding", n_bits))
+        df.withColumn("bucket", sign_bucket("embedding", _SIGN_BITS))
         .groupBy("bucket")
         .applyInPandas(pairs, schema=_PAIR_SCHEMA)
     )
 
 
 def embedding_cross_duplicates(
-    new: DataFrame, corpus: DataFrame, threshold: float = 0.95, n_bits: int = 3
+    new: DataFrame, corpus: DataFrame, threshold: float = 0.95
 ) -> DataFrame:
     """Embedding near-dups of a NEW ingest batch against an EXISTING
     corpus — the dense-vector analog of ``curation.incremental_dedup``
@@ -375,7 +364,7 @@ def embedding_cross_duplicates(
         corpus.select("vec_id", "embedding").withColumn("_side", F.lit(0))
     )
     return (
-        tagged.withColumn("bucket", sign_bucket("embedding", n_bits))
+        tagged.withColumn("bucket", sign_bucket("embedding", _SIGN_BITS))
         .groupBy("bucket")
         .applyInPandas(pairs, schema="vec_new long, vec_corpus long, cos_sim double")
     )
@@ -385,12 +374,12 @@ def quantized_topk(
     emb: DataFrame,
     probe_pred,
     corpus_pred,
-    k: int = 3,
     n_bits: int = 3,
 ) -> DataFrame:
     """Int8-quantized top-k neighbors (q110): probes scored against the
     corpus through shared sign buckets, EXACT BIGINT dot products.
-    Returns (probe_id, rnk, neighbor_id, qdot), rnk 1..k ordered by
+    Returns (probe_id, rnk, neighbor_id, qdot), rnk 1..QUANTIZED_K
+    ordered by
     (qdot desc, neighbor_id asc).
 
     Division of labor for cross-engine exactness at speed:
@@ -439,7 +428,7 @@ def quantized_topk(
         a = np.vstack(pr["qv"].to_numpy()).astype(np.int64)
         b = np.vstack(cp["qv"].to_numpy()).astype(np.int64)
         s = a @ b.T  # exact int64
-        kk = min(k, len(c_ids))
+        kk = min(QUANTIZED_K, len(c_ids))
         out = {"probe_id": [], "rnk": [], "neighbor_id": [], "qdot": []}
         for i in range(len(p_ids)):
             order = np.lexsort((c_ids, -s[i]))[:kk]

@@ -25,38 +25,33 @@ CMS_DEPTH = 4
 CMS_WIDTH = 1024
 
 
-def _bucket(tok_col, r: int, width: int):
-    """Row-r bucket of a token: hash60('r:'||token) % width. The salt
+def _bucket(tok_col, r: int):
+    """Row-r bucket of a token: hash60('r:'||token) % CMS_WIDTH. The salt
     prefix makes the d rows independent hash functions while staying
     one md5 away from the house 60-bit convention (engine-portable)."""
-    return TX.hash60(F.concat(F.lit(f"{r}:"), tok_col)) % width
+    return TX.hash60(F.concat(F.lit(f"{r}:"), tok_col)) % CMS_WIDTH
 
 
-def countmin_counters(
-    docs: DataFrame,
-    text_col: str = "text",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
-    """Build the d x w counter grid over the corpus token stream.
-    Returns (r, bucket, cnt) — at most depth*width rows TOTAL.
+def countmin_counters(docs: DataFrame) -> DataFrame:
+    """Build the d x w counter grid over the ``text`` token stream.
+    Returns (r, bucket, cnt) — at most CMS_DEPTH*CMS_WIDTH rows TOTAL.
 
     Scale shape: tokens explode once, each token row fans out to its
-    ``depth`` (r, bucket) keys, and ONE hash agg folds them — partial
+    ``CMS_DEPTH`` (r, bucket) keys, and ONE hash agg folds them — partial
     aggregation collapses each task's contribution to <= d*w counters
     before the shuffle, so the exchange carries a few thousand rows per
     task no matter how many tokens the corpus holds. This is the
     mergeable-summary property that lets daily corpus shards sketch
     independently and union-fold their grids (sum per (r, bucket))."""
-    tok = docs.select(F.explode(TX.words(text_col)).alias("tok"))
+    tok = docs.select(F.explode(TX.words("text")).alias("tok"))
     keyed = tok.select(
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(r).alias("r"), _bucket(F.col("tok"), r, width).alias("bucket")
+                        F.lit(r).alias("r"), _bucket(F.col("tok"), r).alias("bucket")
                     )
-                    for r in range(depth)
+                    for r in range(CMS_DEPTH)
                 ]
             )
         ).alias("kb")
@@ -64,12 +59,10 @@ def countmin_counters(
     return keyed.groupBy("r", "bucket").agg(F.count("*").cast("long").alias("cnt"))
 
 
-def exact_top_tokens(
-    docs: DataFrame, text_col: str = "text", k: int = 20
-) -> DataFrame:
-    """Exact top-k tokens by count — (token, exact_n), total order
-    (count desc, token asc). A TakeOrdered(k), never a full sort."""
-    tok = docs.select(F.explode(TX.words(text_col)).alias("token"))
+def exact_top_tokens(docs: DataFrame, k: int) -> DataFrame:
+    """Exact top-k ``text`` tokens by count — (token, exact_n), total
+    order (count desc, token asc). A TakeOrdered(k), never a full sort."""
+    tok = docs.select(F.explode(TX.words("text")).alias("token"))
     return (
         tok.groupBy("token")
         .agg(F.count("*").cast("long").alias("exact_n"))
@@ -78,14 +71,9 @@ def exact_top_tokens(
     )
 
 
-def countmin_probe(
-    counters: DataFrame,
-    candidates: DataFrame,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def countmin_probe(counters: DataFrame, candidates: DataFrame) -> DataFrame:
     """Score candidate tokens against a counter grid: each candidate
-    explodes to its ``depth`` (r, bucket) probes, joins the BROADCAST
+    explodes to its ``CMS_DEPTH`` (r, bucket) probes, joins the BROADCAST
     grid, and takes the min — (token, exact_n, cms_est,
     overestimate_ok). Shared by the batch (q112) and streaming (q113)
     faces, so 'stream state == batch sketch' is checked through the
@@ -98,9 +86,9 @@ def countmin_probe(
                 *[
                     F.struct(
                         F.lit(r).alias("r"),
-                        _bucket(F.col("token"), r, width).alias("bucket"),
+                        _bucket(F.col("token"), r).alias("bucket"),
                     )
-                    for r in range(depth)
+                    for r in range(CMS_DEPTH)
                 ]
             )
         ).alias("kb"),
@@ -118,13 +106,7 @@ def countmin_probe(
     ).orderBy(F.desc("exact_n"), F.asc("token"))
 
 
-def countmin_heavy_hitters(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = 20,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def countmin_heavy_hitters(docs: DataFrame, k: int = 20) -> DataFrame:
     """Top-k tokens by exact count, each carrying its count-min
     ESTIMATE (min over the d rows of the token's counters) and the
     CMS soundness verdict. Returns (token, exact_n, cms_est,
@@ -141,9 +123,9 @@ def countmin_heavy_hitters(
     (est >= exact, always true by construction — a FALSE row means the
     hash plumbing diverged between build and probe).
     """
-    counters = countmin_counters(docs, text_col, depth, width)
-    top = exact_top_tokens(docs, text_col, k)
-    return countmin_probe(counters, top, depth, width)
+    counters = countmin_counters(docs)
+    top = exact_top_tokens(docs, k)
+    return countmin_probe(counters, top)
 
 
 # ---------------------------------------------------------------- HLL
@@ -159,37 +141,33 @@ HLL_M = 1 << HLL_P
 _HLL_RHO_MAX = 53
 
 
-def hll_registers(
-    rows: DataFrame, group_col: str, hash_col: str, m: int = HLL_M
-) -> DataFrame:
+def hll_registers(rows: DataFrame, group_col: str, hash_col: str) -> DataFrame:
     """Per-group HLL register file from pre-hashed values: returns
     (group_col, register, rho) with rho = max over the group's values
-    landing in that register — at most ``m`` rows per group, TOTAL
-    state m x |groups| regardless of value volume.
+    landing in that register — at most ``HLL_M`` rows per group, TOTAL
+    state HLL_M x |groups| regardless of value volume.
 
     Why this is the 100 TB distinct counter: max() is commutative,
     associative, and idempotent, so partial aggregation collapses each
-    task to <= m rows per group before the shuffle, replays/dups
+    task to <= HLL_M rows per group before the shuffle, replays/dups
     cannot move the answer (same value -> same register/rho -> max
     absorbs it), and daily shards union-fold by the same max. The
     exact count(DISTINCT x) alternative shuffles every distinct value.
     The same property makes it the streaming state (q129): complete-
     mode max-agg over any micro-batch split lands on the identical
     register file bit-for-bit."""
-    if m & (m - 1):
-        raise ValueError(f"hll_registers: m must be a power of two, got {m}")
     h = F.col(hash_col)
     # h >> p, NOT h/m: Spark's / is DOUBLE division, which silently
     # rounds away low bits of a 60-bit hash (int64 > 2^53); the shift
     # is exact and mirrors the oracle's (h >> p)
-    w = F.shiftright(h, m.bit_length() - 1)  # the 52-bit rank window
+    w = F.shiftright(h, HLL_P)  # the 52-bit rank window
     rho = F.when(w > 0, F.lit(_HLL_RHO_MAX) - F.length(F.bin(w))).otherwise(
         F.lit(_HLL_RHO_MAX)
     )
     return (
         rows.select(
             F.col(group_col),
-            (h % m).cast("long").alias("register"),
+            (h % HLL_M).cast("long").alias("register"),
             rho.cast("long").alias("rho"),
         )
         .groupBy(group_col, "register")
@@ -197,7 +175,7 @@ def hll_registers(
     )
 
 
-def hll_estimate(registers: DataFrame, group_col: str, m: int = HLL_M) -> DataFrame:
+def hll_estimate(registers: DataFrame, group_col: str) -> DataFrame:
     """Fold a register file into the raw HLL estimate per group:
     (group_col, n_registers_hit, hll_sum_scaled, hll_est).
 
@@ -221,11 +199,11 @@ def hll_estimate(registers: DataFrame, group_col: str, m: int = HLL_M) -> DataFr
     )
     s = (
         F.col("_s_hit")
-        + (F.lit(m).cast("long") - F.col("n_registers_hit"))
+        + (F.lit(HLL_M).cast("long") - F.col("n_registers_hit"))
         * F.shiftleft(F.lit(1).cast("long"), _HLL_RHO_MAX)
     )
     est = F.expr(
-        f"CAST(round(({alpha_num}) * {m}.0 * {m}.0 * 9007199254740992.0"
+        f"CAST(round(({alpha_num}) * {HLL_M}.0 * {HLL_M}.0 * 9007199254740992.0"
         " / CAST(hll_sum_scaled AS DOUBLE)) AS BIGINT)"
     )
     return per.withColumn("hll_sum_scaled", s.cast("long")).select(

@@ -77,7 +77,7 @@ def _checked_milliweight(w_m):
 # the measured-quadratic mode, and safe-by-default wins over
 # drop-in-identical); pass ``max_df_ceiling=None`` to restore the old
 # semantics explicitly — accepting the scaling hazard it reintroduces.
-_MAX_DF_CEILING = 1_000
+MAX_DF_CEILING = 1_000
 
 
 def tfidf_postings(
@@ -86,7 +86,7 @@ def tfidf_postings(
     text_col: str,
     max_df: int | None = None,
     max_df_frac: float | None = None,
-    max_df_ceiling: int | None = _MAX_DF_CEILING,
+    max_df_ceiling: int | None = MAX_DF_CEILING,
 ) -> DataFrame:
     """(doc, tok, w) postings with smoothed-idf weights on the 6-dp
     grid.
@@ -151,7 +151,6 @@ def tfidf_cosine_pairs(
     threshold: float = 0.3,
     max_df: int | None = None,
     max_df_frac: float | None = None,
-    max_df_ceiling: int | None = _MAX_DF_CEILING,
 ) -> DataFrame:
     """All doc pairs sharing >= 1 (surviving) term, with TF-IDF cosine
     >= ``threshold``. Returns (doc_a, doc_b, cos_sim) with doc_a <
@@ -190,7 +189,6 @@ def tfidf_cosine_pairs(
             text_col,
             max_df=max_df,
             max_df_frac=max_df_frac,
-            max_df_ceiling=max_df_ceiling,
         )
         .withColumn(
             "w_m",
@@ -226,13 +224,16 @@ def tfidf_cosine_pairs(
     )
 
 
+# Okapi BM25's standard term-saturation and length-normalization weights.
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+
+
 def bm25_topk(
     docs: DataFrame,
     id_col: str,
     text_col: str,
     query_tokens: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
     top_k: int = 20,
     with_rank: bool = False,
 ) -> DataFrame:
@@ -266,8 +267,8 @@ def bm25_topk(
     idf = F.log(
         F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
-    tf_norm = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+    tf_norm = (F.col("tf") * (_BM25_K1 + 1)) / (
+        F.col("tf") + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
     )
     terms = (
         posts.join(dfreq, "tok")

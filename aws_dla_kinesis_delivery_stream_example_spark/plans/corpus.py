@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import text as TX
-from ..operators.tfidf import tfidf_cosine_pairs
+from ..operators.tfidf import MAX_DF_CEILING, tfidf_cosine_pairs
 from ..sources.tables import load_table
 from .catalog import query
 
@@ -130,10 +130,10 @@ def q79_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def session_assignment(ev: DataFrame, gap_s: int = 1800) -> DataFrame:
+def session_assignment(ev: DataFrame) -> DataFrame:
     """Gaps-and-islands session labeling (q22/q80 convention): a new
     session starts when the gap from the previous event of the same
-    user STRICTLY exceeds ``gap_s``, compared in integer microseconds
+    user STRICTLY exceeds 30 minutes, compared in integer microseconds
     (the grid both engines share). Adds a ``session_id`` column.
     Shared between q80 and its property test so the tested logic IS
     the production logic."""
@@ -143,7 +143,7 @@ def session_assignment(ev: DataFrame, gap_s: int = 1800) -> DataFrame:
         "new_session",
         F.when(
             F.lag("ts").over(w).isNull()
-            | (us - F.unix_micros(F.lag("ts").over(w)) > gap_s * 1_000_000),
+            | (us - F.unix_micros(F.lag("ts").over(w)) > 1_800_000_000),
             1,
         ).otherwise(0),
     )
@@ -231,7 +231,6 @@ def q80_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TFIDF_MAX_DF = 50
 _TFIDF_MAX_DF_FRAC = 0.1
-_TFIDF_MAX_DF_CEILING = 1000
 _TFIDF_THRESHOLD = 0.3
 
 
@@ -253,7 +252,7 @@ _TFIDF_THRESHOLD = 0.3
             HAVING count(*) <= greatest(
                 {_TFIDF_MAX_DF},
                 least((SELECT count(*) FROM documents) * {_TFIDF_MAX_DF_FRAC},
-                      {_TFIDF_MAX_DF_CEILING})
+                      {MAX_DF_CEILING})
             )
         ),
         w AS (
@@ -283,7 +282,7 @@ _TFIDF_THRESHOLD = 0.3
     description="Sparse TF-IDF cosine near-dup pairs via inverted-index "
     "self-join on token (pairs form only where a term is shared; hot "
     f"tokens over greatest({_TFIDF_MAX_DF}, least({_TFIDF_MAX_DF_FRAC}"
-    f" * n_docs, {_TFIDF_MAX_DF_CEILING})) are pruned before the join "
+    f" * n_docs, {MAX_DF_CEILING})) are pruned before the join "
     "— principled for TF-IDF since high-df terms carry ~zero idf "
     "weight; the ceiling keeps per-token fan-out absolutely bounded)",
     tags=("llm", "dedup", "similarity"),
@@ -300,7 +299,6 @@ def q81_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=_TFIDF_THRESHOLD,
             max_df=_TFIDF_MAX_DF,
             max_df_frac=_TFIDF_MAX_DF_FRAC,
-            max_df_ceiling=_TFIDF_MAX_DF_CEILING,
         )
         .orderBy("doc_a", "doc_b")
     )

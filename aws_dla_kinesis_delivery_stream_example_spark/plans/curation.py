@@ -58,7 +58,7 @@ def q64_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench_pred = F.col("doc_id") % _BENCH_MOD == 0
     bench, cand = docs.filter(bench_pred), docs.filter(~bench_pred)
-    hits = curation.contaminated_ids(cand, bench, "doc_id", "text", n=4)
+    hits = curation.contaminated_ids(cand, bench, "doc_id", "text")
     flagged = cand.join(
         hits.withColumn("_hit", F.lit(1)), "doc_id", "left"
     )
@@ -139,7 +139,7 @@ def q65_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q66_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    per_doc = curation.boilerplate_ratio(docs, "doc_id", "text", n=5, min_df=3)
+    per_doc = curation.boilerplate_ratio(docs, "doc_id", "text")
     return (
         per_doc.join(docs.select("doc_id", "source"), "doc_id")
         .groupBy("source")
@@ -515,20 +515,18 @@ def q95_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = stage(
         inp.join(exact_ids.select("doc_id"), "doc_id", "left_semi").withColumn(
-            "p_u", quality_p_u("text")
+            "p_u", quality_p_u()
         )
     )
 
     # 2 — near-dup clusters over the exact survivors; keep the best-
     # quality member per cluster (q94), pass singletons through
-    pairs = dedup.shingle_jaccard_pairs(e, "doc_id", "text", n=5, threshold=0.4)
+    pairs = dedup.shingle_jaccard_pairs(e, "doc_id", "text", threshold=0.4)
     clusters = dedup.duplicate_clusters(pairs).select(
         "doc", F.col("cluster_id").cast("long").alias("cluster_id")
     )
     scored = e.select(F.col("doc_id").alias("doc"), "p_u", "n_chars")
-    surv = dedup.cluster_survivors(
-        clusters, scored, id_col="doc", score_col="p_u", size_col="n_chars"
-    )
+    surv = dedup.cluster_survivors(clusters, scored)
     nd_ids = (
         e.join(clusters.select(F.col("doc").alias("doc_id")), "doc_id", "left_anti")
         .select("doc_id")
@@ -554,7 +552,7 @@ def q95_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cheap join. The expensive part — the shingle pass inside
     # contaminated_ids — runs once either way because `hits` is what
     # is cached (guide §5).
-    hits = stage(curation.contaminated_ids(qual, bench, "doc_id", "text", n=4))
+    hits = stage(curation.contaminated_ids(qual, bench, "doc_id", "text"))
     dec = qual.join(hits, "doc_id", "left_anti")
 
     # 5 — per-source token budget in doc_id order

@@ -25,7 +25,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import _shingle_hash_rows
+from ..operators.dedup import CDC_MASK, CDC_WINDOW, _shingle_hash_rows
 from ..operators.staging import stage
 from ..sources.tables import load_table
 from .catalog import query
@@ -403,12 +403,9 @@ def q133_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hist_output(spark, sf_dir, hist_documents(docs))
 
 
-# q135 CDC geometry: 4-token rolling windows, boundary when the window
-# hash = 0 mod 32 -> ~32-token expected chunks. Cross-doc duplicate =
-# chunk shared by >= 2 DISTINCT docs (intra-doc repeats are q72/q127's
-# axis, not this one).
-_CDC_WIN = 4
-_CDC_MASK = 32
+# q135 CDC geometry: operators/dedup.py's CDC_WINDOW / CDC_MASK.
+# Cross-doc duplicate = chunk shared by >= 2 DISTINCT docs (intra-doc
+# repeats are q72/q127's axis, not this one).
 
 
 @query(
@@ -425,10 +422,10 @@ _CDC_MASK = 32
         ),
         flagged AS (
             SELECT doc_id, p, tok,
-                   CASE WHEN p >= {_CDC_WIN} AND p < L
+                   CASE WHEN p >= {CDC_WINDOW} AND p < L
                              AND CAST('0x' || substring(md5(array_to_string(
-                                     array_slice(tk, p - {_CDC_WIN - 1}, p), ' ')
-                                 ), 1, 15) AS BIGINT) % {_CDC_MASK} = 0
+                                     array_slice(tk, p - {CDC_WINDOW - 1}, p), ' ')
+                                 ), 1, 15) AS BIGINT) % {CDC_MASK} = 0
                         THEN 1 ELSE 0 END AS cut
             FROM pos
         ),
@@ -490,9 +487,7 @@ def q135_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     chunks = stage(
-        cdc_chunk_rows(
-            docs.select("doc_id", "text"), "doc_id", "text", _CDC_WIN, _CDC_MASK
-        )
+        cdc_chunk_rows(docs.select("doc_id", "text"), "doc_id", "text")
     )  # staged: the df agg and the join-back probe read it once each
     cdf = chunks.groupBy("chunk_hash").agg(
         F.count_distinct("doc").cast("long").alias("df")

@@ -298,7 +298,6 @@ def q142_sampled_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return minhash_calibration_sampled(
         docs,
-        threshold=0.5,
         sample_mod=_Q142_MOD,
         sample_bucket=_Q142_BUCKET,
     )

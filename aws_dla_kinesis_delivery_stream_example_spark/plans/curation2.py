@@ -67,7 +67,7 @@ _VOCAB = 16  # OOV vocabulary size (top-16 words by frequency)
 )
 def q71_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = clustering.kmeans_assign(emb, "vec_id", "embedding", k=_K)
+    assigned = clustering.kmeans_assign(emb, k=_K)
     return clustering.cluster_profile(assigned)
 
 
@@ -451,6 +451,4 @@ def q92_ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = similarity.as_queries(emb.filter(F.col("vec_id") < 5))
-    return similarity.ivf_learned_topk(
-        emb, queries, k=5, n_list=_K, n_probe=2, train_iters=1
-    ).orderBy("q_id", "rn")
+    return similarity.ivf_learned_topk(emb, queries).orderBy("q_id", "rn")

@@ -126,7 +126,7 @@ def q97_quantile_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged: the scored frame feeds BOTH the percentile aggregation
     # and the join-side scan — unstaged, the model's four regex passes
     # over every document's full text run twice
-    scored = stage(docs.select("source", quality_p_u("text").alias("p_u")))
+    scored = stage(docs.select("source", quality_p_u().alias("p_u")))
     thr = scored.groupBy("source").agg(
         F.percentile("p_u", F.lit(0.70)).alias("thr")
     )
@@ -301,7 +301,7 @@ def q99_similar_doc_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged; pinned at budget 3 in tests/test_plan_shapes.py)
     pairs = stage(
         dedup.shingle_jaccard_pairs(
-            docs, "doc_id", "text", n=5, threshold=0.0, max_df=10
+            docs, "doc_id", "text", threshold=0.0, max_df=10
         )
     )
     sym = pairs.select(
@@ -361,7 +361,7 @@ def q100_embedding_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") % 2 == 0)
     # pre-filter margin 0.4195 < round-boundary 0.41995 (q36 pattern)
     pairs = similarity.embedding_cross_duplicates(
-        new, corpus, threshold=0.4195, n_bits=3
+        new, corpus, threshold=0.4195
     )
     return (
         pairs.select("vec_new", "vec_corpus", F.round("cos_sim", 4).alias("cos_sim"))
@@ -491,10 +491,10 @@ def q102_corpus_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the level-1 state; both are computed here so the verdict column
     proves the sketch lands inside its advertised bound against the
     exact truth."""
-    from ..operators.dedup import _shingle_hash_rows
+    from ..operators.dedup import _SHINGLE_N, _shingle_hash_rows
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = _shingle_hash_rows(docs, "doc_id", "text", 5)
+    sh = _shingle_hash_rows(docs, "doc_id", "text", _SHINGLE_N)
     j = sh.join(docs.select(F.col("doc_id").alias("doc"), "source"), "doc")
     lvl1 = j.groupBy("source", "h").agg(F.count(F.lit(1)).alias("occ"))
     # HLL is duplicate-insensitive, so sketching lvl1's one-row-per-

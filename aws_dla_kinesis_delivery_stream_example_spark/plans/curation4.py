@@ -221,15 +221,7 @@ def q105_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.round(F.col("value") * 1000, 0).cast("long").alias("v_milli"),
     )
-    out = anomaly.rolling_zscore(
-        base,
-        "user_id",
-        ("ts", "event_id"),
-        "v_milli",
-        lookback=20,
-        min_n=10,
-        z_threshold=3.0,
-    )
+    out = anomaly.rolling_zscore(base, "user_id", ("ts", "event_id"), "v_milli")
     return (
         out.select(
             "event_id",
@@ -396,5 +388,5 @@ def q107_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     test in tests/test_round8b_ops.py).
     """
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shared_shingle_pairs(docs, "doc_id", "text", n=5, max_df=10)
+    pairs = dedup.shared_shingle_pairs(docs, "doc_id", "text", max_df=10)
     return graph.pagerank_fixed_point(pairs, iters=_PR_ITERS).orderBy("doc")

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import curation, multimodal, sketch
+from ..operators import curation, multimodal, similarity, sketch
 from ..sources.tables import load_table
 from .catalog import query
 
@@ -72,14 +72,13 @@ def q109_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined. The oracle's window-free formulation mirrors the same
     two-level grouping."""
     docs = load_table(spark, sf_dir, "documents")
-    return curation.shingle_novelty(docs, "doc_id", "text", "source", n=5).orderBy(
+    return curation.shingle_novelty(docs).orderBy(
         "source"
     )
 
 
 # q110 blocking geometry: 3 sign bits = 8 buckets (the q100 convention)
 _Q110_BITS = 3
-_Q110_K = 3
 
 
 @query(
@@ -110,7 +109,7 @@ _Q110_K = 3
             FROM scored
         )
         SELECT probe_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, qdot
-        FROM ranked WHERE rnk <= {_Q110_K}
+        FROM ranked WHERE rnk <= {similarity.QUANTIZED_K}
         ORDER BY probe_id, rnk
     """,
     description="Int8-quantized ANN: symmetric per-vector int8 "
@@ -134,21 +133,17 @@ def q110_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking; the GEMM keeps the identical exact-integer scores, so
     the oracle is untouched. Zero-norm vectors quantize to NULL and
     drop out identically on both engines (FIXTURES.md rule)."""
-    from ..operators import similarity as SIM
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.quantized_topk(
+    return similarity.quantized_topk(
         emb,
         probe_pred=F.col("vec_id") % 2 == 1,
         corpus_pred=F.col("vec_id") % 2 == 0,
-        k=_Q110_K,
         n_bits=_Q110_BITS,
     ).orderBy("probe_id", "rnk")
 
 
 # q111 frame geometry: 256-sample frames; silence below 100 avg sq.
 _Q111_FRAME = 256
-_Q111_SILENCE = 100
 
 
 @query(
@@ -169,7 +164,7 @@ _Q111_SILENCE = 100
                    CAST(count(*) AS BIGINT) AS n_frames,
                    CAST(sum(energy) AS BIGINT) AS total_energy,
                    CAST(max(energy) AS BIGINT) AS peak_frame_energy,
-                   CAST(sum(CAST(energy < {_Q111_SILENCE} * flen AS INT)) AS BIGINT)
+                   CAST(sum(CAST(energy < {multimodal.SILENCE_ENERGY_PER_SAMPLE} * flen AS INT)) AS BIGINT)
                        AS n_silent
             FROM frames GROUP BY doc_id
         )
@@ -201,9 +196,7 @@ def q111_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     means any byte-level encode/decode drift fails the hash gate."""
     docs = load_table(spark, sf_dir, "documents")
     audio = multimodal.synthesize_audio(docs)
-    return multimodal.audio_frame_energy(
-        audio, frame_samples=_Q111_FRAME, silence_energy_per_sample=_Q111_SILENCE
-    ).orderBy("media_id")
+    return multimodal.audio_frame_energy(audio, frame_samples=_Q111_FRAME).orderBy("media_id")
 
 
 @query(
@@ -257,7 +250,7 @@ def q112_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch at test scale; its global sort is a TakeOrdered(20), never
     a full sort."""
     docs = load_table(spark, sf_dir, "documents")
-    return sketch.countmin_heavy_hitters(docs, "text", k=20)
+    return sketch.countmin_heavy_hitters(docs, k=20)
 
 
 def calibration_oracle(doc_where: str = "") -> str:
@@ -386,4 +379,4 @@ def q114_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup as _dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    return _dedup.minhash_calibration_report(docs, "doc_id", "text", threshold=0.5)
+    return _dedup.minhash_calibration_report(docs)

@@ -79,7 +79,7 @@ def q25_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q26_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", n=5, threshold=0.0)
+    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.0)
     return (
         pairs.select("doc_a", "doc_b", F.round("jaccard", 3).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.1)
@@ -124,7 +124,7 @@ def q26_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q55_jaccard_freq_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", n=5, threshold=0.0, max_df=10)
+    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.0, max_df=10)
     return (
         pairs.select("doc_a", "doc_b", F.round("jaccard", 3).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.1)
@@ -473,7 +473,7 @@ def q33_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q34_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = similarity.as_queries(emb.filter(F.col("vec_id") < 5))
-    return similarity.ivf_topk(emb, queries, k=5, n_bits=3).orderBy("q_id", "rn")
+    return similarity.ivf_topk(emb, queries, k=5).orderBy("q_id", "rn")
 
 
 @query(
@@ -518,7 +518,7 @@ def q34_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q70_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = similarity.as_queries(emb.filter(F.col("vec_id") < 5))
-    return similarity.ivf_topk(emb, queries, k=5, n_bits=3, hamming_probes=1).orderBy(
+    return similarity.ivf_topk(emb, queries, k=5, hamming_probes=1).orderBy(
         "q_id", "rn"
     )
 
@@ -590,7 +590,7 @@ def q36_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # pre-filter margin 0.4495 < round-boundary 0.44995: nothing that
     # rounds to >= 0.45 is lost, everything else dies bucket-locally
-    pairs = similarity.embedding_near_duplicates(emb, threshold=0.4495, n_bits=3)
+    pairs = similarity.embedding_near_duplicates(emb, threshold=0.4495)
     return (
         pairs.select("vec_a", "vec_b", F.round("cos_sim", 4).alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.45)
@@ -663,7 +663,7 @@ _JACCARD_CLUSTERS_CTE = jaccard_clusters_cte()
 )
 def q49_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", n=5, threshold=0.4)
+    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.4)
     return (
         dedup.duplicate_clusters(pairs)
         .select("doc", F.col("cluster_id").cast("long").alias("cluster_id"))
@@ -721,18 +721,16 @@ def q94_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .quality import quality_p_u
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", n=5, threshold=0.4)
+    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.4)
     clusters = dedup.duplicate_clusters(pairs).select(
         "doc", F.col("cluster_id").cast("long").alias("cluster_id")
     )
     scored = docs.select(
         F.col("doc_id").alias("doc"),
-        quality_p_u("text").alias("p_u"),
+        quality_p_u().alias("p_u"),
         F.col("n_chars"),
     )
-    return dedup.cluster_survivors(
-        clusters, scored, id_col="doc", score_col="p_u", size_col="n_chars"
-    ).orderBy("cluster_id")
+    return dedup.cluster_survivors(clusters, scored).orderBy("cluster_id")
 
 
 @query(
@@ -865,7 +863,7 @@ def q59_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     media = multimodal.synthesize_media(docs, media_type="video")
-    frames = multimodal.sample_frames(media, every_ms=1000)
+    frames = multimodal.sample_frames(media)
     return (
         frames.groupBy("media_id")
         .agg(

@@ -56,23 +56,23 @@ QUALITY_SCORED_CTE = f"""
         )"""
 
 
-def quality_p_u(text_col: str = "text"):
-    """The q85 model score as a reusable Column: integer micro-unit
-    logistic probability (round(1e6 * sigmoid(logit)) with the logit
-    rounded on a 6-dp grid first). Pure codegen column arithmetic —
+def quality_p_u():
+    """The q85 model score of the ``text`` column as a reusable
+    Column: integer micro-unit logistic probability (round(1e6 *
+    sigmoid(logit)) with the logit rounded on a 6-dp grid first). Pure codegen column arithmetic —
     the shared currency between the quality gate (q85) and quality-
     aware survivor selection (q94); exact-integer, so cross-engine
     comparisons and argmax ties behave identically."""
-    alpha = TX.alpha_ratio(text_col)
-    stop_ratio = TX.stopword_count(text_col).cast("double") / F.greatest(
-        TX.token_count(text_col), F.lit(1)
+    alpha = TX.alpha_ratio("text")
+    stop_ratio = TX.stopword_count("text").cast("double") / F.greatest(
+        TX.token_count("text"), F.lit(1)
     ).cast("double")
-    n_tok = TX.token_count(text_col).cast("double")
+    n_tok = TX.token_count("text").cast("double")
     # nullif guard: ANSI double/0 throws in Spark 4, DuckDB yields
     # NULL — see functions/text.py alpha_ratio (same convention)
     punct_ratio = (
-        F.length(text_col) - F.length(F.regexp_replace(text_col, "[.,!?;:]", ""))
-    ).cast("double") / F.nullif(F.length(text_col), F.lit(0)).cast("double")
+        F.length("text") - F.length(F.regexp_replace("text", "[.,!?;:]", ""))
+    ).cast("double") / F.nullif(F.length("text"), F.lit(0)).cast("double")
     logit = F.round(
         _W_ALPHA * alpha + _W_STOP * stop_ratio + _W_LEN * n_tok
         + _W_PUNCT * punct_ratio + F.lit(_BIAS),
@@ -109,7 +109,7 @@ def q85_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probability in integer micro-units: per-source averages then sum
     # EXACT integers, immune to float-sum associativity across engines
     return (
-        docs.select("doc_id", "source", quality_p_u("text").alias("p_u"))
+        docs.select("doc_id", "source", quality_p_u().alias("p_u"))
         .groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),

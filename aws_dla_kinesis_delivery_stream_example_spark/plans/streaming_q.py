@@ -406,10 +406,10 @@ def q113_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table as _load
 
     def op(df):
-        return _sketch.countmin_counters(df, "text")
+        return _sketch.countmin_counters(df)
 
     grid = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
-    top = _sketch.exact_top_tokens(_load(spark, sf_dir, "documents"), "text", 20)
+    top = _sketch.exact_top_tokens(_load(spark, sf_dir, "documents"), 20)
     return _sketch.countmin_probe(grid, top)
 
 

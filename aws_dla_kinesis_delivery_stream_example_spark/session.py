@@ -19,16 +19,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "aws_dla_kinesis_delivery_stream_example_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the SparkSession used by the engine."""
+    """Build (or fetch) the SparkSession used by the engine. One read of
+    ``SPARK_GRAFT_CPUS`` sizes both the local master and the shuffle
+    width."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Python workers must be able to import this package (pandas-UDF
     # closures reference it). Export the repo root BEFORE the JVM forks
@@ -42,10 +41,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", cpus)
         # AQE: runtime re-planning — coalesces tiny post-shuffle partitions,
         # converts sort-merge->broadcast when a side turns out small, and
         # splits skewed partitions. All three matter at 100 TB.

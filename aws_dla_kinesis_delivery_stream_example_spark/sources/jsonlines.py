@@ -40,22 +40,10 @@ def generate_bank_accounts(spark: SparkSession, n: int, partitions: int = 10) ->
     )
 
 
-def produce_jsonlines(df: DataFrame, out_dir: str, n_files: int | None = None) -> str:
+def produce_jsonlines(df: DataFrame, out_dir: str) -> str:
     """S1 parity: land records as JSON-line files (the put_records batch
-    -> the source dir). One file per partition = one put_records batch.
-
-    ``n_files`` is honored in BOTH directions: coalesce can only
-    REDUCE partition count, so asking for more files than the frame
-    has partitions needs a repartition (a caller modeling 20
-    put_records batches from a 4-partition frame would otherwise
-    silently get 4 files — and 4 micro-batches under
-    maxFilesPerTrigger=1)."""
-    if n_files:
-        cur = df.rdd.getNumPartitions()
-        writer = df.coalesce(n_files) if n_files <= cur else df.repartition(n_files)
-    else:
-        writer = df
-    writer.write.mode("append").json(out_dir)
+    -> the source dir). One file per partition = one put_records batch."""
+    df.write.mode("append").json(out_dir)
     return out_dir
 
 

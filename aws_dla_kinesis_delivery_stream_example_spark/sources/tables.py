@@ -34,8 +34,8 @@ TABLES = (
     "embeddings",
 )
 
-def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to TimestampType (LTZ, micros)
+def normalize_event_time(df: DataFrame) -> DataFrame:
+    """Normalize the ``ts`` event-time column to TimestampType (LTZ, micros)
     regardless of how the parquet writer encoded it. The driver has
     regenerated events.parquet with different encodings across rounds:
 
@@ -55,18 +55,17 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    if col not in df.columns:
+    if "ts" not in df.columns:
         return df
-    dt = df.schema[col].dataType
+    dt = df.schema["ts"].dataType
     if isinstance(dt, T.LongType):
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} DIV 1000")))
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     elif isinstance(dt, T.TimestampNTZType):
         df = df.withColumn(
-            col,
+            "ts",
             F.expr(
-                f"make_timestamp(year({col}), month({col}), day({col}), "
-                f"hour({col}), minute({col}), "
-                f"CAST(date_part('SECOND', {col}) AS DECIMAL(16,6)), 'UTC')"
+                "make_timestamp(year(ts), month(ts), day(ts), hour(ts), minute(ts), "
+                "CAST(date_part('SECOND', ts) AS DECIMAL(16,6)), 'UTC')"
             ),
         )
     return df
@@ -186,7 +185,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     src = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.schema(parquet_schema(spark, src)).parquet(src)
     if name == "events":
-        df = normalize_event_time(df, "ts")
+        df = normalize_event_time(df)
     return df
 
 

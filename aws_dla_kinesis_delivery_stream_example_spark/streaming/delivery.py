@@ -59,11 +59,10 @@ from __future__ import annotations
 import os
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager, nullcontext
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import admin
 from ..functions import serde
@@ -127,7 +126,6 @@ class DeliveryPipeline:
     spark: SparkSession
     source_dir: str
     dest_dir: str
-    payload_schema: T.StructType = field(default_factory=lambda: serde.BANK_ACCOUNT_SCHEMA)
     transform_fn: Callable[[dict], dict] | None = None
     document_sink: bool = False
     trigger_seconds: int | None = None  # None => availableNow (drain & stop)
@@ -283,7 +281,12 @@ class DeliveryPipeline:
         crash-replay, so a replay that crosses a rotation boundary still
         writes the SAME index as the original attempt (otherwise dynamic
         overwrite of (batch_id, new-index) would leave (batch_id,
-        old-index) rows behind — duplicate documents)."""
+        old-index) rows behind — duplicate documents).
+
+        The pin lands whole or not at all (temp file + ``os.replace``).
+        An empty pin file counts as unpinned: the pin is taken before
+        ``bulk_index``, so no document of the batch was written under
+        it."""
         import time
 
         d = os.path.join(self.dest_dir, "_index_epoch")
@@ -291,10 +294,14 @@ class DeliveryPipeline:
         f = os.path.join(d, str(batch_id))
         if os.path.exists(f):
             with open(f) as fh:
-                return float(fh.read().strip())
+                pinned = fh.read().strip()
+            if pinned:
+                return float(pinned)
         now = time.time()
-        with open(f, "w") as fh:
+        tmp = f"{f}.tmp"
+        with open(tmp, "w") as fh:
             fh.write(repr(now))
+        os.replace(tmp, f)
         return now
 
     def _write_documents(
@@ -342,7 +349,7 @@ class DeliveryPipeline:
         and, if ``await_termination``, waits for it via ``finish``, all
         under ``progress_retention``. A query that is not waited on runs
         under the caller's retention."""
-        reader = self.spark.readStream.schema(self.payload_schema)
+        reader = self.spark.readStream.schema(serde.BANK_ACCOUNT_SCHEMA)
         if self.max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         elif self.max_buffer_bytes is not None:
@@ -428,7 +435,7 @@ class DeliveryPipeline:
 
     def read_success(self) -> DataFrame:
         """Q1 parity: ``admin.match_all`` of the success sink."""
-        return admin.match_all(self.spark, self.path(PREFIX_SUCCESS), self.payload_schema)
+        return admin.match_all(self.spark, self.path(PREFIX_SUCCESS), serde.BANK_ACCOUNT_SCHEMA)
 
     def count_documents(self) -> int:
         """A3/Q2 parity: document-sink count (0 when the local document

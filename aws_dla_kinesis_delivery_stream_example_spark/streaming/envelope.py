@@ -33,7 +33,6 @@ def envelope_df(spark: SparkSession, event: dict) -> DataFrame:
 
 def transform_envelope(
     records: DataFrame,
-    payload_schema: T.StructType = serde.BANK_ACCOUNT_SCHEMA,
     fn: Callable[[dict], dict] | None = None,
     drop_when: Column | None = None,
     fail_when: Column | None = None,
@@ -45,8 +44,8 @@ def transform_envelope(
 
     Documented deviation (declarative path): decode failure is
     SCHEMA-VALIDATED, not just parse-validated — a record that is
-    valid JSON but type-mismatched against ``payload_schema`` (e.g.
-    ``"balance": "not-a-number"`` for a LongType field) routes to
+    valid JSON but type-mismatched against ``serde.BANK_ACCOUNT_SCHEMA``
+    (e.g. ``"balance": "not-a-number"`` for a LongType field) routes to
     ProcessingFailed here, where the reference's bare ``json.loads``
     would accept the dict and fail (or not) somewhere inside the
     transform body. Strict-at-the-boundary is the deliberate
@@ -58,7 +57,7 @@ def transform_envelope(
     # all-null struct on malformed input (not a null struct), so decode
     # failure is only detectable via columnNameOfCorruptRecord.
     parse_schema = T.StructType(
-        list(payload_schema.fields) + [T.StructField("_corrupt_record", T.StringType(), True)]
+        list(serde.BANK_ACCOUNT_SCHEMA.fields) + [T.StructField("_corrupt_record", T.StringType(), True)]
     )
     decoded = records.withColumn("json_line", serde.decoded_string("data")).withColumn(
         "rec",
@@ -66,7 +65,7 @@ def transform_envelope(
             F.col("json_line"), parse_schema, {"columnNameOfCorruptRecord": "_corrupt_record"}
         ),
     )
-    payload_struct = F.struct(*[F.col(f"rec.{f.name}") for f in payload_schema.fields])
+    payload_struct = F.struct(*[F.col(f"rec.{f.name}") for f in serde.BANK_ACCOUNT_SCHEMA.fields])
     if fn is not None:
         # the black-box fn owns ALL routing (it raises DropIt /
         # exceptions itself, the reference Lambda contract) — refuse
@@ -78,7 +77,7 @@ def transform_envelope(
                 "DropIt/exception routing decides every record's "
                 "status; encode the predicates inside fn instead"
             )
-        routed = apply_transform(decoded, fn=fn, json_col="json_line")
+        routed = apply_transform(decoded, fn=fn)
         ok_data = serde.encode_raw_line("payload")
     else:
         # Undecodable payload = ProcessingFailed, matching the reference
@@ -99,12 +98,9 @@ def transform_envelope(
 
 
 def handle_event(
-    spark: SparkSession,
-    event: dict,
-    payload_schema: T.StructType = serde.BANK_ACCOUNT_SCHEMA,
-    fn: Callable[[dict], dict] | None = None,
+    spark: SparkSession, event: dict, fn: Callable[[dict], dict] | None = None
 ) -> dict:
     """The full Lambda-handler contract: event dict in, event dict out
     (reference kds_example/lbd/common.py:7-33)."""
-    out = transform_envelope(envelope_df(spark, event), payload_schema, fn=fn)
+    out = transform_envelope(envelope_df(spark, event), fn=fn)
     return {"records": [r.asDict() for r in out.collect()]}

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.anomaly import ZS_LOOKBACK, ZS_MIN_N, ZS_THRESHOLD, rolling_zscore
 from ..shipping import ensure_shipped
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
@@ -79,14 +80,10 @@ def running_user_totals(events: DataFrame) -> DataFrame:
 # operators/anomaly.rolling_zscore, catalog q105).
 
 ZS_OUTPUT_SCHEMA = "event_id long, user_id long, v_milli long, z double"
-# Last <= lookback milli-unit values per key, oldest first: the state
+# Last <= ZS_LOOKBACK milli-unit values per key, oldest first: the state
 # is a fixed-width ring of BIGINTs — at 100 TB of events the store
-# scales with |users| x lookback, not |events|.
+# scales with |users| x ZS_LOOKBACK, not |events|.
 ZS_STATE_SCHEMA = "vals array<long>"
-
-ZS_LOOKBACK = 20
-ZS_MIN_N = 10
-ZS_THRESHOLD = 3.0
 
 
 def _zs_update(
@@ -185,17 +182,7 @@ def streaming_rolling_zscore(events: DataFrame) -> DataFrame:
     milli-unit column, for stream == batch verification.
     """
     if not events.isStreaming:
-        from ..operators.anomaly import rolling_zscore
-
-        return rolling_zscore(
-            events,
-            "user_id",
-            ("ts", "event_id"),
-            "v_milli",
-            lookback=ZS_LOOKBACK,
-            min_n=ZS_MIN_N,
-            z_threshold=ZS_THRESHOLD,
-        ).select("event_id", "user_id", "v_milli", "z")
+        return rolling_zscore(events, "user_id", ("ts", "event_id"), "v_milli").select("event_id", "user_id", "v_milli", "z")
     ensure_shipped(events.sparkSession)
     has_watermark = "EventTimeWatermark" in str(
         events._jdf.queryExecution().analyzed()

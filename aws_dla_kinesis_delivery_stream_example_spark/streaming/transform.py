@@ -77,7 +77,6 @@ def transform_udf(fn: Callable[[dict], dict]):
 def apply_transform(
     df: DataFrame,
     fn: Callable[[dict], dict] | None = None,
-    json_col: str = "json_line",
     declarative: dict[str, Column] | None = None,
     drop_when: Column | None = None,
     fail_when: Column | None = None,
@@ -86,10 +85,10 @@ def apply_transform(
 
     Declarative mode (preferred): pass Column expressions; stays JVM-side.
     Black-box mode: pass ``fn`` and the transform runs as a pandas UDF
-    over ``json_col``.
+    over ``json_line``.
     """
     if fn is not None:
-        res = transform_udf(fn)(F.col(json_col))
+        res = transform_udf(fn)(F.col("json_line"))
         return df.withColumn("payload", res["payload"]).withColumn("status", res["status"])
     # FAILED outranks DROPPED when both predicates hold: in the
     # reference Lambda, json.loads raises BEFORE any DropIt can be

@@ -21,19 +21,18 @@ from pyspark.sql import functions as F
 from ..sources.tables import normalize_event_time, parquet_schema
 
 
-def _event_time(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Defense-in-depth at every watermark site: watermarks require
-    TimestampType (LTZ); normalize long-nanos / TIMESTAMP_NTZ encodings
-    the same way sources.tables.load_table does, so these operators are
-    safe even on a DataFrame that bypassed load_table."""
-    return normalize_event_time(df, col)
+# The windows are part of each declared query, not arguments: hourly
+# windows, half-hour slides and session gaps, and a watermark two hours
+# behind the latest event (one hour on each side of the interval join,
+# whose half-hour horizon bounds its state).
+WATERMARK = "2 hours"
 
 
-def tumbling_counts(df: DataFrame, size: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    df = _event_time(df)
-    src = df.withWatermark("ts", watermark) if df.isStreaming else df
+def tumbling_counts(df: DataFrame) -> DataFrame:
+    df = normalize_event_time(df)
+    src = df.withWatermark("ts", WATERMARK) if df.isStreaming else df
     return (
-        src.groupBy(F.window("ts", size).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -44,38 +43,29 @@ def tumbling_counts(df: DataFrame, size: str = "1 hour", watermark: str = "2 hou
     )
 
 
-def sliding_counts(
-    df: DataFrame, size: str = "1 hour", slide: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    df = _event_time(df)
-    src = df.withWatermark("ts", watermark) if df.isStreaming else df
+def sliding_counts(df: DataFrame) -> DataFrame:
+    df = normalize_event_time(df)
+    src = df.withWatermark("ts", WATERMARK) if df.isStreaming else df
     return (
-        src.groupBy(F.window("ts", size, slide).alias("w"))
+        src.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"), "n", "sum_value")
     )
 
 
-def session_counts(df: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    df = _event_time(df)
-    src = df.withWatermark("ts", watermark) if df.isStreaming else df
+def session_counts(df: DataFrame) -> DataFrame:
+    df = normalize_event_time(df)
+    src = df.withWatermark("ts", WATERMARK) if df.isStreaming else df
     return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        src.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("session_len"))
         .select("user_id", "session_len")
     )
 
 
-def interval_join_counts(
-    df: DataFrame,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    horizon: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream interval join: pair every ``left_type`` event with
-    the same user's ``right_type`` events in ``[ts, ts + horizon]``,
-    counted per user.
+def interval_join_counts(df: DataFrame) -> DataFrame:
+    """Stream-stream interval join: pair every ``click`` event with the
+    same user's ``purchase`` events in ``[ts, ts + 30 minutes]``.
 
     Streaming shape: two filtered views of ONE source joined on the
     equi-key plus a bounded event-time range; the watermark + range
@@ -84,29 +74,29 @@ def interval_join_counts(
     found, so an availableNow drain over a closed input produces the
     complete pair set. The same plan runs in batch (the oracle path).
     """
-    df = _event_time(df)
-    left = df.filter(F.col("event_type") == left_type).select(
+    df = normalize_event_time(df)
+    left = df.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("l_user"), F.col("ts").alias("l_ts")
     )
-    right = df.filter(F.col("event_type") == right_type).select(
+    right = df.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("r_user"), F.col("ts").alias("r_ts")
     )
     if df.isStreaming:
-        left = left.withWatermark("l_ts", watermark)
-        right = right.withWatermark("r_ts", watermark)
+        left = left.withWatermark("l_ts", "1 hour")
+        right = right.withWatermark("r_ts", "1 hour")
     pairs = left.join(
         right,
         (F.col("l_user") == F.col("r_user"))
         & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {horizon}")),
+        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes")),
     )
     return pairs.select(F.col("l_user").alias("user_id"), "l_ts", "r_ts")
 
 
-def streaming_dedup(df: DataFrame, keys: list[str], watermark: str = "2 hours") -> DataFrame:
-    df = _event_time(df)
+def streaming_dedup(df: DataFrame, keys: list[str]) -> DataFrame:
+    df = normalize_event_time(df)
     if df.isStreaming:
-        return df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
+        return df.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(keys)
     return df.dropDuplicates(keys)
 
 
@@ -148,9 +138,11 @@ def run_on_closed_input(
     partition, so size the width to the drain's state, not its input:
     constant-state sketches want "2", per-key state wants the default.
 
-    Nothing outlives the call in the caller's session: the memory-sink
-    view is dropped (the returned frame already holds the sink's plan)
-    and the checkpoint directory is removed, on success or failure.
+    On success or failure the memory-sink view is dropped (the returned
+    frame already holds the sink's plan) and the checkpoint directory
+    is removed. Two settings DO outlive the call, as they do after
+    ``sources.tables.load_table``: ``spark.sql.session.timeZone`` stays
+    UTC and ``spark.sql.legacy.parquet.nanosAsLong`` stays true.
     The final ``lastProgress`` (incl. ``stateOperators``) is emitted as
     one INFO record on this module's logger.
     """
@@ -168,7 +160,7 @@ def run_on_closed_input(
         # single-file table and still lists a directory's files.
         stream = spark.readStream.schema(schema).parquet(parquet_path + "*")
         if normalize_ts:
-            stream = normalize_event_time(stream, "ts")
+            stream = normalize_event_time(stream)
         q = (
             op(stream)
             .writeStream.outputMode(output_mode)

@@ -438,14 +438,13 @@ def extreme_tier_rehearsal(
     row["quantann_valved_candidates"], row["quantann_valved_cand_sec"] = timed(
         lambda: _qcand(valve_bits)
     )
-    # end-to-end GEMM path at the valve config (the catalog's k/bits
-    # knobs, bucket count scaled) — the wall a 100 TB deployment pays
+    # end-to-end GEMM path at the valve config (the catalog's top-k,
+    # bucket count scaled) — the wall a 100 TB deployment pays
     _, row["quantann_valved_sec"] = timed(
         lambda: SIM.quantized_topk(
             emb,
             probe_pred=F.col("vec_id") % 2 == 1,
             corpus_pred=F.col("vec_id") % 2 == 0,
-            k=3,
             n_bits=valve_bits,
         ).count()
     )
@@ -719,14 +718,14 @@ def main() -> None:
         bench = full.filter(F.col("doc_id") < 10)
         cand_docs = full.filter(F.col("doc_id") >= 10)
         n_hits, row["contam_sec"] = timed(
-            lambda: curation.contaminated_ids(cand_docs, bench, "doc_id", "text", n=4).count()
+            lambda: curation.contaminated_ids(cand_docs, bench, "doc_id", "text").count()
         )
         row["contam_candidates"] = n_hits
 
         # boilerplate: the df-count aggregation is linear; the hazard is
         # the boilerplate-set size (broadcast back) — track it
         n_boiler, row["boiler_sec"] = timed(
-            lambda: curation.boilerplate_ratio(full, "doc_id", "text", n=5, min_df=3)
+            lambda: curation.boilerplate_ratio(full, "doc_id", "text")
             .filter("n_boiler > 0")
             .count()
         )

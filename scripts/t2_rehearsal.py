@@ -50,6 +50,7 @@ def main() -> None:
     n = len(mod.entry(spark).collect())
     print(f"RESULT t1_smoke rows={n} sec={time.perf_counter() - t0:.2f}", flush=True)
 
+    import bench
     from tests.oracle_utils import compare
 
     qs, osql = mod.queries(), mod.oracle_sql()
@@ -81,26 +82,14 @@ def main() -> None:
             entry["err"] = traceback.format_exc(limit=3)
             n_fail += 1
         finally:
-            # operator-internal persists (staging tables) are per-query
-            # scratch; don't let 80 queries' worth accumulate
-            from aws_dla_kinesis_delivery_stream_example_spark.operators.staging import (
-                release_staging,
-                staged_elsewhere,
-            )
-
-            release_staging()
-            # single-threaded loop: a frame still counted as staged on
-            # another thread is a cross-thread staging leak — fail the
-            # artifact run loudly instead of accruing cache. Checked
-            # BEFORE clearCache(): the advisory counter over-reports
-            # after a clearCache (staging.py), so asserting after
-            # would fire only post-remediation and then poison every
-            # later query in the sweep.
-            leaked = staged_elsewhere()
+            # Per-query scratch (staging tables, caches) must not
+            # accumulate across the catalog. In this single-threaded
+            # loop a frame still staged on another thread is a
+            # cross-thread staging leak: fail the run loudly.
+            leaked = bench._reset(spark)
             assert leaked == 0, (
                 f"{name}: {leaked} staged frame(s) leaked across threads"
             )
-            spark.catalog.clearCache()
         status = "FAIL" if entry["err"] and entry["err"] != "no_oracle" else (
             "rows-only" if entry["err"] == "no_oracle" else "ok")
         print(
@@ -110,39 +99,33 @@ def main() -> None:
         )
         report[name] = entry
 
-    # Provenance (VERDICT r03 #5): local evidence silently went stale
-    # when the driver regenerated events.parquet mid-round. Stamp the
-    # artifact with the data it actually ran against so staleness is
-    # detectable: events schema + mtime + run time.
-    # provenance must never cost the report itself: if the schema read
-    # fails (testdata regenerating mid-run — the very scenario _meta
-    # detects), record the error and still write every query result
+    # Provenance: stamp the artifact with the data it ran against
+    # (events schema + mtime + run time), so a report made before the
+    # test data was regenerated is detectably stale. Provenance must
+    # never cost the report itself: if the schema read fails (test data
+    # regenerating mid-run — the very case _meta detects), record the
+    # error and still write every query result.
     try:
         import pyarrow.parquet as _pq
 
         ev_path = os.path.join(sf_dir, "events.parquet")
-        # ADVICE r05: the alias->catalog map must live in the artifact
-        # itself, not only in README prose — record every exposed name
-        # that differs from its catalog name.
         from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
 
-        # Rotation retired in round 7: exposed names ARE catalog names.
-        # Assert that invariant (fails into _meta.err if it regresses)
-        # and record an empty map so the artifact states it explicitly.
+        # The driver sees catalog names unaliased: a divergence fails
+        # into _meta.err.
         exposed = set(mod.queries())
         assert exposed == set(all_specs()), (
             "exposed names diverge from catalog names: "
             f"{sorted(exposed ^ set(all_specs()))[:5]}"
         )
-        alias_map: dict[str, str] = {}
-        # Round-8 window shift: record the driver-visible window (the
-        # first 50 exposed names) so the artifact states which catalog
-        # queries carry driver rows this round without README archaeology.
+        # The driver's oracle window is the first 50 exposed names:
+        # record it, so the artifact states which queries carry driver
+        # rows.
         window_first_50 = list(mod.queries())[:50]
-        # Round-13 freeze guard: the artifact must declare the catalog
-        # extent it ran against; tests/test_catalog_extent.py pins the
-        # newest committed artifact's extent to plans.CATALOG_EXTENT,
-        # so a post-freeze catalog addition fails pytest mechanically.
+        # The artifact declares the catalog extent it ran against;
+        # tests/test_catalog_extent.py pins the newest committed
+        # artifact's extent to plans.CATALOG_EXTENT, so a catalog
+        # addition fails pytest.
         from aws_dla_kinesis_delivery_stream_example_spark.plans import (
             CATALOG_EXTENT,
         )
@@ -151,7 +134,6 @@ def main() -> None:
         report["_meta"] = {
             "sf_dir": sf_dir,
             "catalog_extent": CATALOG_EXTENT,
-            "alias_to_catalog": alias_map,
             "driver_window_first_50": window_first_50,
             "generated_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "events_mtime": time.strftime(

@@ -259,9 +259,7 @@ def test_ivf_learned_recall_on_planted_geometry(spark):
         "q_id long, q_emb array<double>",
     )
     exact = similarity.brute_force_topk(cand, queries, k=5)
-    approx = similarity.ivf_learned_topk(
-        cand, queries, k=5, n_list=8, n_probe=2, train_iters=1
-    )
+    approx = similarity.ivf_learned_topk(cand, queries)
     want = {(r.q_id, r.vec_id) for r in exact.collect()}
     got = {(r.q_id, r.vec_id) for r in approx.collect()}
     recall = len(want & got) / len(want)
@@ -304,13 +302,13 @@ def test_ivf_signbucket_multiprobe_recall(spark):
     own = {
         (r.q_id, r.vec_id)
         for r in similarity.ivf_topk(
-            cand, queries, k=5, n_bits=3, hamming_probes=0
+            cand, queries, k=5, hamming_probes=0
         ).collect()
     }
     multi = {
         (r.q_id, r.vec_id)
         for r in similarity.ivf_topk(
-            cand, queries, k=5, n_bits=3, hamming_probes=1
+            cand, queries, k=5, hamming_probes=1
         ).collect()
     }
     recall = len(want & multi) / len(want)

@@ -25,7 +25,7 @@ def test_contamination_finds_planted_overlap(spark):
         ],
     )
     hits = sorted(
-        r.doc_id for r in curation.contaminated_ids(cand, bench, "doc_id", "text", n=4).collect()
+        r.doc_id for r in curation.contaminated_ids(cand, bench, "doc_id", "text").collect()
     )
     assert hits == [1]
 
@@ -62,7 +62,7 @@ def test_boilerplate_planted_template(spark):
     out = {
         r.doc_id: (r.n_boiler, r.n_shingles)
         for r in curation.boilerplate_ratio(
-            _docs(spark, rows), "doc_id", "text", n=5, min_df=3
+            _docs(spark, rows), "doc_id", "text"
         ).collect()
     }
     for i in range(3):

@@ -187,6 +187,23 @@ def test_index_rotation(spark, source_dir, tmp_path):
     assert os.path.isdir(epoch_dir) and os.listdir(epoch_dir)
 
 
+def test_index_rotation_repins_an_empty_pin(spark, source_dir, tmp_path):
+    """K6: a crash between creating and writing ``_index_epoch/0`` leaves
+    an empty pin. The replay treats it as unpinned and delivers every
+    document, instead of failing on ``float("")`` in every replay."""
+    dest = tmp_path / "rot-empty"
+    (dest / "_index_epoch").mkdir(parents=True)
+    pin = dest / "_index_epoch" / "0"
+    pin.write_text("")
+    p = DeliveryPipeline(
+        spark, source_dir, str(dest), document_sink=True, index_rotation="OneDay"
+    )
+    p.run()
+    assert p.result.n_ok > 0
+    assert spark.read.parquet(p.path("documents")).count() == p.result.n_ok
+    assert float(pin.read_text()) > 0  # re-pinned
+
+
 def test_backup_failure_branch(spark, source_dir, tmp_path):
     """K3 failure branch: when the raw-backup write fails past its one
     bounded retry, original rows land under 02-backup-failed/
@@ -259,7 +276,7 @@ def test_replay_batch_is_idempotent(spark, tmp_path):
     src = str(tmp_path / "src")
     produce_jsonlines(generate_bank_accounts(spark, 200, partitions=2), src)
     p = DeliveryPipeline(spark, src, str(tmp_path / "out"), document_sink=True)
-    batch = spark.read.schema(p.payload_schema).json(src)
+    batch = spark.read.schema(BANK_ACCOUNT_SCHEMA).json(src)
     p._process_batch(batch, 0)
     assert p.count_sink_records(PREFIX_SUCCESS) == 200
     p._process_batch(batch, 0)  # simulated post-crash replay
@@ -397,7 +414,7 @@ def test_flush_job_count_transform_path(spark, source_dir, tmp_path):
     """A flush with planted failures runs exactly three jobs: backup,
     success and failed sink writes (no separate emptiness probe)."""
     p = DeliveryPipeline(spark, source_dir, str(tmp_path / "jobs-t"), transform_fn=_transform)
-    batch = spark.read.schema(p.payload_schema).json(source_dir)
+    batch = spark.read.schema(BANK_ACCOUNT_SCHEMA).json(source_dir)
     assert _flush_jobs(spark, p, batch) == 3
     assert p.result.n_failed > 0 and p.result.n_input == batch.count()
 
@@ -406,7 +423,7 @@ def test_flush_job_count_identity_path(spark, source_dir, tmp_path):
     """The identity flush with the document sink runs exactly three
     jobs: backup, success and document writes."""
     p = DeliveryPipeline(spark, source_dir, str(tmp_path / "jobs-i"), document_sink=True)
-    batch = spark.read.schema(p.payload_schema).json(source_dir)
+    batch = spark.read.schema(BANK_ACCOUNT_SCHEMA).json(source_dir)
     assert _flush_jobs(spark, p, batch) == 3
     assert p.count_documents() == p.result.n_ok == batch.count()
 

@@ -41,7 +41,7 @@ def test_shingle_ops_tolerate_null_text(spark):
          (3, "the quick brown fox jumps over the lazy dog today")],
         "doc_id long, text string",
     )
-    pairs = dedup.shingle_jaccard_pairs(df, "doc_id", "text", n=5, threshold=0.5).collect()
+    pairs = dedup.shingle_jaccard_pairs(df, "doc_id", "text", threshold=0.5).collect()
     assert {(r.doc_a, r.doc_b) for r in pairs} == {(1, 3)}
     sigs = dedup.minhash_signatures(df, "doc_id", "text").collect()
     assert {r.doc for r in sigs} == {1, 3}
@@ -305,7 +305,7 @@ def test_ivf_topk_is_subset_of_bruteforce_space(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = similarity.as_queries(emb.filter(F.col("vec_id") < 20))
     bf = similarity.brute_force_topk(emb, queries, k=50)
-    ivf = similarity.ivf_topk(emb, queries, k=5, n_bits=3)
+    ivf = similarity.ivf_topk(emb, queries, k=5)
     bf_scores = {(r.q_id, r.vec_id): r.cos_sim for r in bf.collect()}
     ivf_rows = ivf.collect()
     in_bf = [((r.q_id, r.vec_id) in bf_scores) for r in ivf_rows]
@@ -514,7 +514,7 @@ def test_multimodal_malformed_payloads_fall_back(spark):
 def test_multimodal_frame_sampling(spark):
     docs = load_table(spark, SF_SMOKE, "documents")
     media = multimodal.synthesize_media(docs, media_type="video")
-    frames = multimodal.sample_frames(media, every_ms=1000)
+    frames = multimodal.sample_frames(media)
     one = media.select("media_id", "meta.duration_ms").collect()[0]
     n = frames.filter(F.col("media_id") == one.media_id).count()
     assert n == one.duration_ms // 1000 + 1
@@ -569,14 +569,9 @@ def test_cluster_survivors_picks_best_quality_with_min_id_ties(spark):
         # cluster 1: doc 2 wins on score (min-id convention would say 1)
         # cluster 10: scores tie -> min id 10 wins
         [(1, 50, 100), (2, 90, 200), (3, 50, 300), (10, 70, 400), (11, 70, 500)],
-        "doc long, score long, n_chars long",
+        "doc long, p_u long, n_chars long",
     )
-    out = {
-        r.cluster_id: r
-        for r in dedup.cluster_survivors(
-            clusters, scored, id_col="doc", score_col="score", size_col="n_chars"
-        ).collect()
-    }
+    out = {r.cluster_id: r for r in dedup.cluster_survivors(clusters, scored).collect()}
     c1, c10 = out[1], out[10]
     assert (c1.survivor_doc, c1.survivor_score) == (2, 90)
     assert (c1.n_members, c1.n_removed, c1.removed_n_chars) == (3, 2, 400)
@@ -603,14 +598,9 @@ def test_cluster_survivors_randomized_equivalence(spark):
         )
         scored = spark.createDataFrame(
             [(i, s, ch) for i, _, s, ch in rows],
-            "doc long, score long, n_chars long",
+            "doc long, p_u long, n_chars long",
         )
-        got = {
-            r.cluster_id: r
-            for r in dedup.cluster_survivors(
-                clusters, scored, id_col="doc", score_col="score", size_col="n_chars"
-            ).collect()
-        }
+        got = {r.cluster_id: r for r in dedup.cluster_survivors(clusters, scored).collect()}
         by_cluster: dict[int, list[tuple[int, int, int]]] = {}
         for i, c, s, ch in rows:
             by_cluster.setdefault(c, []).append((i, s, ch))
@@ -635,8 +625,8 @@ def test_ivf_multiprobe_recall_dominates_single_probe(spark):
         (r.q_id, r.vec_id)
         for r in similarity.brute_force_topk(emb, queries, k=5).collect()
     }
-    single = similarity.ivf_topk(emb, queries, k=5, n_bits=3)
-    multi = similarity.ivf_topk(emb, queries, k=5, n_bits=3, hamming_probes=1)
+    single = similarity.ivf_topk(emb, queries, k=5)
+    multi = similarity.ivf_topk(emb, queries, k=5, hamming_probes=1)
     s_hits = {(r.q_id, r.vec_id) for r in single.collect()} & bf_top
     m_hits = {(r.q_id, r.vec_id) for r in multi.collect()} & bf_top
     assert len(m_hits) >= len(s_hits)

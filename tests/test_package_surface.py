@@ -1,5 +1,7 @@
-"""Dead-surface guard: every module-level def, class or assignment in
-the package is used by code that runs, or is named in ``ALLOWED``.
+"""Dead-surface guards, no Spark session needed.
+
+Every module-level def, class or assignment in the package is used by
+code that runs, or is named in ``ALLOWED``.
 
 Code that runs is the package itself, ``bench.py``,
 ``__spark_entry__.py``, ``perfbench/*.py`` and ``scripts/*.py``;
@@ -10,12 +12,23 @@ is not a use. A function registered with ``@query(...)`` is used by
 the catalog. Dunder names and ``__init__.py`` definitions are exempt.
 
 Each ``ALLOWED`` entry must still exist and still be unused, so the
-list cannot outlive the reason it gives. No Spark session needed.
+list cannot outlive the reason it gives.
+
+Every option (a defaulted parameter of a uniquely named module-level
+package function) that has a caller takes at least two values across
+its call sites, or is named in ``ONE_VALUE_ALLOWED``: with one value in
+use it is a constant. Call sites count everywhere, tests included,
+since a test that sets a second value is a real user. A call site that
+omits the option passes its default; an argument that is not a
+literal or an ALL_CAPS constant counts as a second value. A constant
+counts by its value (followed through imports), so ``n=_K`` with
+``_K = 8`` and ``n=8`` are one value.
 """
 
 from __future__ import annotations
 
 import ast
+import operator
 from collections import Counter
 from pathlib import Path
 
@@ -38,6 +51,15 @@ ALLOWED = {
     ("operators/jpeg.py", "encode_jpeg"): "the JPEG source for the decoder's tests",
     ("operators/multimodal.py", "MEDIA_SCHEMA"): "the media frame schema tests build on",
     ("plans/curation16.py", "ATTRITION_REASONS"): "q149's reason vocabulary, read by tests",
+}
+
+# (module path under the package, function, parameter) -> why the
+# option stays settable with one value in use.
+ONE_VALUE_ALLOWED = {
+    ("sources/jsonlines.py", "kinesis_reader", "region"): "deployment setting: the stream's AWS region",
+    ("sources/jsonlines.py", "kinesis_reader", "starting_position"): (
+        "deployment setting: where a new consumer starts in the stream"
+    ),
 }
 
 
@@ -115,3 +137,180 @@ def test_allowlist_names_exist_and_are_still_unused():
     assert not missing, f"ALLOWED names that no longer exist: {missing}"
     now_used = sorted(set(ALLOWED) - unused)
     assert not now_used, f"ALLOWED names that now have a caller: {now_used}"
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported(node: ast.ImportFrom, module: str, is_package: bool) -> str:
+    """The absolute module an ``ImportFrom`` in ``module`` reads from."""
+    if not node.level:
+        return node.module or ""
+    base = module.split(".")
+    base = base[: len(base) - node.level + (1 if is_package else 0)]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
+class _Constants:
+    """Module-level ALL_CAPS names bound to a value that folds from
+    literals (``N = 5``, ``M = 1 << P``, ``K = other.K``), per module,
+    following imports between package modules."""
+
+    def __init__(self) -> None:
+        self._trees = {}
+        for path in _runtime_files() + sorted((ROOT / "tests").glob("*.py")):
+            self._trees[_module_name(path)] = (path, ast.parse(path.read_text(), filename=str(path)))
+        self._values: dict[str, tuple[dict, dict]] = {}
+
+    def scope(self, module: str) -> tuple[dict, dict]:
+        """(constant name -> value, module alias -> module) for a module."""
+        if module not in self._values:
+            self._values[module] = consts, aliases = {}, {}
+            path, tree = self._trees.get(module, (None, ast.Module(body=[])))
+            for node in tree.body:
+                if isinstance(node, ast.Import):
+                    for a in node.names:
+                        if a.asname:
+                            aliases[a.asname] = a.name
+                elif isinstance(node, ast.ImportFrom):
+                    src = _imported(node, module, path is not None and path.name == "__init__.py")
+                    for a in node.names:
+                        local = a.asname or a.name
+                        if f"{src}.{a.name}" in self._trees:
+                            aliases[local] = f"{src}.{a.name}"
+                        elif a.name.isupper() and a.name in self.scope(src)[0]:
+                            consts[local] = self.scope(src)[0][a.name]
+                elif isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value is not None:
+                    targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                    if len(targets) == 1 and isinstance(targets[0], ast.Name) and targets[0].id.isupper():
+                        try:
+                            consts[targets[0].id] = self.fold(node.value, module)
+                        except ValueError:
+                            pass
+        return self._values[module]
+
+    def fold(self, node: ast.AST, module: str):
+        """The value of an expression built from literals and constants
+        visible in ``module``; ValueError for anything computed."""
+        consts, aliases = self.scope(module)
+        if isinstance(node, ast.Name) and node.id.isupper() and node.id in consts:
+            return consts[node.id]
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr.isupper()
+            and isinstance(node.value, ast.Name)
+            and node.value.id in aliases
+        ):
+            other = self.scope(aliases[node.value.id])[0]
+            if node.attr in other:
+                return other[node.attr]
+        if isinstance(node, ast.BinOp) and type(node.op) in _FOLDABLE:
+            return _FOLDABLE[type(node.op)](self.fold(node.left, module), self.fold(node.right, module))
+        return ast.literal_eval(node)
+
+    def key(self, node: ast.AST, module: str):
+        """A comparable key for a static value (a literal or an ALL_CAPS
+        constant), None for anything computed. Equal values give equal
+        keys whether spelled as a literal or through a constant."""
+        try:
+            value = self.fold(node, module)
+        except ValueError:
+            for name in (getattr(node, "id", None), getattr(node, "attr", None)):
+                if name and name.isupper():
+                    return ("unresolved constant", name)
+            return None
+        kind = "number" if isinstance(value, (int, float)) and not isinstance(value, bool) else type(value).__name__
+        try:
+            hash(value)
+        except TypeError:
+            value = repr(value)
+        return (kind, value)
+
+
+_FOLDABLE = {
+    ast.Add: operator.add,
+    ast.Sub: operator.sub,
+    ast.Mult: operator.mul,
+    ast.Div: operator.truediv,
+    ast.FloorDiv: operator.floordiv,
+    ast.Pow: operator.pow,
+    ast.LShift: operator.lshift,
+}
+
+
+def _options() -> dict[tuple[str, str, str], tuple[int | None, ast.AST, str]]:
+    """(module path, function, parameter) -> (positional index or None,
+    default, defining module) for every defaulted parameter of a
+    uniquely named module-level package function."""
+    found: dict[str, list] = {}
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.parse(path.read_text(), filename=str(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                found.setdefault(node.name, []).append((path, node))
+    options = {}
+    for name, defs in found.items():
+        if len(defs) != 1:
+            continue
+        path, fn = defs[0]
+        rel, module = path.relative_to(PKG).as_posix(), _module_name(path)
+        positional = fn.args.posonlyargs + fn.args.args
+        tail = positional[len(positional) - len(fn.args.defaults):]
+        for arg, default in zip(tail, fn.args.defaults):
+            options[(rel, name, arg.arg)] = (positional.index(arg), default, module)
+        for arg, default in zip(fn.args.kwonlyargs, fn.args.kw_defaults):
+            if default is not None:
+                options[(rel, name, arg.arg)] = (None, default, module)
+    return options
+
+
+def _argument(call: ast.Call, index: int | None, param: str) -> ast.AST | None:
+    """What a call passes for a parameter, ``_OMITTED`` when it passes
+    nothing, or None when ``*args``/``**kwargs`` hide it."""
+    for kw in call.keywords:
+        if kw.arg == param:
+            return kw.value
+    starred = any(isinstance(a, ast.Starred) for a in call.args)
+    if index is not None and not starred and index < len(call.args):
+        return call.args[index]
+    if starred or any(kw.arg is None for kw in call.keywords):
+        return None
+    return _OMITTED
+
+
+_OMITTED = ast.Constant(None)
+
+
+def _single_valued_options() -> set[tuple[str, str, str]]:
+    options = _options()
+    constants = _Constants()
+    by_function: dict[str, list] = {}
+    for key, spec in options.items():
+        by_function.setdefault(key[1], []).append((key, spec))
+    values: dict[tuple[str, str, str], set] = {key: set() for key in options}
+    for path in _runtime_files() + sorted((ROOT / "tests").glob("*.py")):
+        module = _module_name(path)
+        for call in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            for key, (index, default, home) in by_function.get(name, ()):
+                arg = _argument(call, index, key[2])
+                if arg is _OMITTED:
+                    value = constants.key(default, home)
+                else:
+                    value = constants.key(arg, module) if arg is not None else None
+                values[key].add(value or ("computed", f"{path.name}:{call.lineno}"))
+    return {key for key, seen in values.items() if len(seen) == 1 and next(iter(seen))[0] != "computed"}
+
+
+def test_every_option_takes_two_values():
+    single = _single_valued_options()
+    flagged = sorted(single - set(ONE_VALUE_ALLOWED))
+    assert not flagged, (
+        "options that every caller sets to one value (make each a "
+        f"constant, or add a ONE_VALUE_ALLOWED entry with its reason): {flagged}"
+    )
+    stale = sorted(set(ONE_VALUE_ALLOWED) - single)
+    assert not stale, f"ONE_VALUE_ALLOWED entries that are gone or now take two values: {stale}"

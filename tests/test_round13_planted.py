@@ -201,7 +201,7 @@ def test_minhash_calibration_sampled_mod1_equals_q114(spark):
 
     docs = load_table(spark, SF_SMOKE, "documents")
     full = SPECS["q114_minhash_calibration"].spark(spark, SF_SMOKE).collect()
-    sampled = minhash_calibration_sampled(docs, threshold=0.5).collect()
+    sampled = minhash_calibration_sampled(docs).collect()
     assert [r.asDict() for r in sampled] == [r.asDict() for r in full]
 
 
@@ -230,12 +230,12 @@ def test_minhash_calibration_sampled_strata(spark, snm_sf_dir):
     }
     assert truth == {(1, 2), (3, 4)}
     docs = load_table(spark, snm_sf_dir, "documents")
-    full = minhash_calibration_sampled(docs, threshold=0.5).collect()[0]
+    full = minhash_calibration_sampled(docs).collect()[0]
     b0 = minhash_calibration_sampled(
-        docs, threshold=0.5, sample_mod=2, sample_bucket=0
+        docs, sample_mod=2, sample_bucket=0
     ).collect()[0]
     b1 = minhash_calibration_sampled(
-        docs, threshold=0.5, sample_mod=2, sample_bucket=1
+        docs, sample_mod=2, sample_bucket=1
     ).collect()[0]
     assert full["n_truth"] == 2 and b0["n_truth"] == 2 and b1["n_truth"] == 0
     # within-stratum-only measurement: stratum truth can never exceed

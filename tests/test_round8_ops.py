@@ -72,7 +72,7 @@ def test_embedding_cross_duplicates_sides_never_self_join(spark):
     got = {
         (r["vec_new"], r["vec_corpus"])
         for r in similarity.embedding_cross_duplicates(
-            new, corpus, threshold=0.99, n_bits=3
+            new, corpus, threshold=0.99
         ).collect()
     }
     assert got == {(1, 2), (1, 4), (3, 2), (3, 4)}
@@ -393,7 +393,6 @@ def test_embedding_cross_duplicates_randomized_brute_force(spark):
                 emb.filter(F.col("vec_id") % 2 == 1),
                 emb.filter(F.col("vec_id") % 2 == 0),
                 threshold=thr,
-                n_bits=3,
             ).collect()
         }
         assert got == expected, (seed, got ^ expected)
@@ -514,13 +513,13 @@ def test_ivf_multiprobe_radius_means_what_it_says(spark):
     )
 
     def top1(probes):
-        rows = ivf_topk(cand_df, q_df, k=1, n_bits=3, hamming_probes=probes).collect()
+        rows = ivf_topk(cand_df, q_df, k=1, hamming_probes=probes).collect()
         return rows[0]["vec_id"] if rows else None
 
     assert top1(1) != 0, "radius-1 should not reach the Hamming-2 bucket"
     assert top1(2) == 0, "radius-2 must recover the true neighbor"
     with _pytest.raises(ValueError, match="hamming_probes"):
-        ivf_topk(cand_df, q_df, k=1, n_bits=3, hamming_probes=4)
+        ivf_topk(cand_df, q_df, k=1, hamming_probes=4)
 
 
 def test_minhash_bands_must_divide_hashes(spark):

@@ -143,9 +143,7 @@ def test_rolling_zscore_flags_planted_spike(spark):
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, pos long, v long"
     )
-    out = anomaly.rolling_zscore(
-        df, "user_id", ("pos",), "v", lookback=20, min_n=10, z_threshold=3.0
-    ).collect()
+    out = anomaly.rolling_zscore(df, "user_id", ("pos",), "v").collect()
     assert [r["event_id"] for r in out] == [20]
     assert out[0]["z"] > 100  # spike is wildly outside the calm band
 
@@ -158,9 +156,7 @@ def test_rolling_zscore_excludes_zero_variance_windows(spark):
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, pos long, v long"
     )
-    out = anomaly.rolling_zscore(
-        df, "user_id", ("pos",), "v", lookback=20, min_n=10, z_threshold=3.0
-    ).collect()
+    out = anomaly.rolling_zscore(df, "user_id", ("pos",), "v").collect()
     assert out == []
 
 
@@ -238,13 +234,13 @@ def test_shared_shingle_pairs_equals_threshold0_jaccard(spark):
             fast = {
                 (r.doc_a, r.doc_b)
                 for r in dedup.shared_shingle_pairs(
-                    docs, "doc_id", "text", n=5, max_df=cap
+                    docs, "doc_id", "text", max_df=cap
                 ).collect()
             }
             full = {
                 (r.doc_a, r.doc_b)
                 for r in dedup.shingle_jaccard_pairs(
-                    docs, "doc_id", "text", n=5, threshold=0.0, max_df=cap
+                    docs, "doc_id", "text", threshold=0.0, max_df=cap
                 ).collect()
             }
             assert fast == full and fast, (cap, fast, full)

@@ -79,9 +79,7 @@ def test_audio_roundtrip_energy_planted(spark):
     [-100,-93,-86,-79] energy 32406+... compute exactly below."""
     docs = spark.createDataFrame([(0, "x", "s", 5)], "doc_id long, text string, source string, n_chars long")
     audio = multimodal.synthesize_audio(docs)
-    [r] = multimodal.audio_frame_energy(
-        audio, frame_samples=4, silence_energy_per_sample=100
-    ).collect()
+    [r] = multimodal.audio_frame_energy(audio, frame_samples=4).collect()
     v = [(0 * 31 + i * 7) % 201 - 100 for i in range(5)]
     f1 = sum(x * x for x in v[:4])
     f2 = v[4] * v[4]
@@ -127,7 +125,7 @@ def test_countmin_estimates_exact_on_sparse_vocab(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["token"]: (r["exact_n"], r["cms_est"], r["overestimate_ok"])
-        for r in sketch.countmin_heavy_hitters(df, "text", k=3).collect()
+        for r in sketch.countmin_heavy_hitters(df, k=3).collect()
     }
     assert got == {
         "apple": (3, 3, True),
@@ -148,7 +146,7 @@ def test_countmin_counters_constant_size(spark):
     from .conftest import SF_SMOKE
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    grid = sketch.countmin_counters(docs, "text").persist()
+    grid = sketch.countmin_counters(docs).persist()
     n_cells = grid.count()
     assert n_cells <= sketch.CMS_DEPTH * sketch.CMS_WIDTH
     total = grid.agg(F.sum("cnt")).collect()[0][0]
@@ -182,7 +180,7 @@ def test_streaming_countmin_grid_equals_batch_across_batches(spark, tmp_path):
         .parquet(src + "/b*")
     )
     q = (
-        sketch.countmin_counters(stream, "text")
+        sketch.countmin_counters(stream)
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("cms_grid")
@@ -197,7 +195,7 @@ def test_streaming_countmin_grid_equals_batch_across_batches(spark, tmp_path):
     }
     want = {
         (r.r, r.bucket): r.cnt
-        for r in sketch.countmin_counters(docs, "text").collect()
+        for r in sketch.countmin_counters(docs).collect()
     }
     assert got == want and len(want) > 0
 
@@ -218,7 +216,7 @@ def test_minhash_calibration_planted(spark):
         (3, "one two three four five six seven eight nine"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    [r] = dedup.minhash_calibration_report(df, "doc_id", "text").collect()
+    [r] = dedup.minhash_calibration_report(df).collect()
     assert (r["n_truth"], r["n_candidates"], r["n_hit"]) == (1, 1, 1)
     assert (r["recall_milli"], r["precision_milli"]) == (1000, 1000)
     assert r["mean_est_err_milli"] == 0.0 and r["max_est_err_milli"] == 0
@@ -232,7 +230,7 @@ def test_minhash_calibration_empty_corpus_is_all_null_safe(spark):
     df = spark.createDataFrame(
         [(1, "just one lonely document here today")], "doc_id long, text string"
     )
-    [r] = dedup.minhash_calibration_report(df, "doc_id", "text").collect()
+    [r] = dedup.minhash_calibration_report(df).collect()
     assert (r["n_truth"], r["n_candidates"], r["n_hit"]) == (0, 0, 0)
     assert r["recall_milli"] is None and r["precision_milli"] is None
     assert r["mean_est_err_milli"] is None and r["max_est_err_milli"] == 0

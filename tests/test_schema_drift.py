@@ -109,7 +109,7 @@ def test_normalize_event_time_is_session_tz_independent(spark, tmp_path_factory)
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
         raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         assert isinstance(raw.schema["ts"].dataType, T.TimestampNTZType)
-        norm = normalize_event_time(raw, "ts")
+        norm = normalize_event_time(raw)
         micros = sorted(r[0] for r in norm.select(F.unix_micros("ts")).collect())
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
@@ -118,4 +118,4 @@ def test_normalize_event_time_is_session_tz_independent(spark, tmp_path_factory)
 
 def test_normalize_event_time_passthrough_without_ts(spark):
     df = spark.range(3)
-    assert normalize_event_time(df, "ts") is df
+    assert normalize_event_time(df) is df

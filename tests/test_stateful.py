@@ -261,7 +261,7 @@ def test_streaming_countmin_resume_from_checkpoint(spark, tmp_path):
             src + "/b*"
         )
         q = (
-            sketch.countmin_counters(stream, "text")
+            sketch.countmin_counters(stream)
             .writeStream.outputMode("complete")
             .format("memory")
             .queryName(qname)
@@ -280,7 +280,7 @@ def test_streaming_countmin_resume_from_checkpoint(spark, tmp_path):
     docs.filter("doc_id % 2 = 1").coalesce(1).write.parquet(_os.path.join(src, "b2"))
     final = drain("cms_resume_2")
     want = {
-        (r[0], r[1]): r[2] for r in sketch.countmin_counters(docs, "text").collect()
+        (r[0], r[1]): r[2] for r in sketch.countmin_counters(docs).collect()
     }
     assert final == want and len(want) > 0
     # the resumed grid must strictly extend the pre-crash one
