@@ -13,13 +13,13 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .functions import serde
 
-def match_all(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Q1: read everything from a JSON-lines sink directory."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
+
+def match_all(spark: SparkSession, path: str) -> DataFrame:
+    """Q1: read everything from a JSON-lines sink directory of bank
+    account records (``serde.BANK_ACCOUNT_SCHEMA``)."""
+    return spark.read.schema(serde.BANK_ACCOUNT_SCHEMA).json(path)
 
 
 def count_records(spark: SparkSession, path: str) -> int:

@@ -46,6 +46,23 @@ def stopword_count(col) -> Column:
     return F.size(F.regexp_extract_all(F.lower(_c(col)), F.lit(STOPWORD_PATTERN), 0)).cast("long")
 
 
+def stopword_lang(col) -> Column:
+    """Stopword-voting language guess: the first of en/de/es/fr whose
+    stopword set matches at least twice in the lower-cased text, else
+    'other' (q32's classifier, q124's confusion matrix)."""
+
+    def hits(pat: str) -> Column:
+        return F.size(F.regexp_extract_all(F.lower(_c(col)), F.lit(pat), 0))
+
+    return (
+        F.when(hits(r"\b(the|and|of|to|is)\b") >= 2, "en")
+        .when(hits(r"\b(der|die|das|und|ist)\b") >= 2, "de")
+        .when(hits(r"\b(el|la|los|es|de)\b") >= 2, "es")
+        .when(hits(r"\b(le|les|est|et|une)\b") >= 2, "fr")
+        .otherwise("other")
+    )
+
+
 def alpha_ratio(col) -> Column:
     """Share of [A-Za-z] characters — a cheap quality signal.
 

@@ -32,6 +32,12 @@ from ..shipping import ensure_shipped
 
 _ASSIGN_SCHEMA = "id long, cluster int, d2 double"
 
+KMEANS_K = 8  # clusters: the seeds are the embeddings of the 8 smallest ids
+
+# Per-group GEMM budget of semantic_near_duplicates: 50k rows ~= 20 GB
+# of pairwise doubles, the ceiling for a 64 GB executor.
+_MAX_CLUSTER_ROWS = 50_000
+
 
 def kmeans_seeds(emb: DataFrame, id_col: str, vec_col: str, k: int) -> np.ndarray:
     """Deterministic seed centroids: the embeddings of the ``k``
@@ -39,7 +45,7 @@ def kmeans_seeds(emb: DataFrame, id_col: str, vec_col: str, k: int) -> np.ndarra
     float64 matrix in id order."""
     rows = emb.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
     if len(rows) < k:
-        raise ValueError(f"kmeans_assign: need >= {k} rows, got {len(rows)}")
+        raise ValueError(f"kmeans_seeds: need >= {k} rows, got {len(rows)}")
     return np.array([[float(x) for x in r[1]] for r in rows], dtype=np.float64)
 
 
@@ -83,14 +89,15 @@ def assign_with_centroids(
     return emb.select("vec_id", "embedding").mapInPandas(assign, schema=schema)
 
 
-def kmeans_assign(emb: DataFrame, k: int = 8) -> DataFrame:
+def kmeans_assign(emb: DataFrame) -> DataFrame:
     """One Lloyd assignment pass: each (vec_id, embedding) vector joins
-    its nearest seed centroid by squared euclidean distance.
+    its nearest of ``KMEANS_K`` seed centroids by squared euclidean
+    distance.
 
     Returns (id, cluster, d2) with d2 rounded to 6 dp — the rounding
     grid on which the nearest-centroid decision is made.
     """
-    cents = kmeans_seeds(emb, "vec_id", "embedding", k)  # k x dim, closure-shipped
+    cents = kmeans_seeds(emb, "vec_id", "embedding", KMEANS_K)  # k x dim, closure-shipped
     return assign_with_centroids(emb, cents)
 
 
@@ -145,13 +152,11 @@ def updated_centroids(emb: DataFrame, cents: np.ndarray) -> np.ndarray:
 
 def semantic_near_duplicates(
     emb: DataFrame,
-    k: int = 8,
     threshold: float = 0.4,
     sub_blocks: int | None = None,
-    max_cluster_rows: int | None = 50_000,
 ) -> DataFrame:
     """SemDeDup: cosine near-dup (vec_id, embedding) pairs WITHIN
-    k-means clusters.
+    ``KMEANS_K`` k-means clusters.
 
     The cluster assignment is the candidate-blocking step — pairs
     across clusters are never formed, so the quadratic pair space
@@ -171,16 +176,14 @@ def semantic_near_duplicates(
     the split; pairs that are merely similar may land in different
     sub-blocks — the documented recall trade of the valve.
 
-    ``max_cluster_rows`` is the per-group GEMM memory budget: the
-    within-group cosine matrix is O(n^2) doubles, so a single hot
+    Each group has a GEMM memory budget of ``_MAX_CLUSTER_ROWS`` rows:
+    the within-group cosine matrix is O(n^2) doubles, so a single hot
     cluster (or hot sub-block) bigger than the budget would OOM one
     executor while the rest of the stage idles. Rather than die
     opaquely mid-GEMM, the group task fails fast with sizing guidance
-    (raise the budget, raise ``k``, or set/raise ``sub_blocks``).
-    50k rows ~= 20 GB of pairwise doubles — the sensible ceiling for
-    a 64 GB executor; pass ``None`` to disable.
+    (set or raise ``sub_blocks``).
     """
-    cents = kmeans_seeds(emb, "vec_id", "embedding", k)
+    cents = kmeans_seeds(emb, "vec_id", "embedding", KMEANS_K)
     assigned = assign_with_centroids(emb, cents, include_vector=True)
     group_keys = ["cluster"]
     if sub_blocks is not None:
@@ -228,15 +231,13 @@ def semantic_near_duplicates(
         )
         if len(pdf) < 2:
             return empty
-        if max_cluster_rows is not None and len(pdf) > max_cluster_rows:
+        if len(pdf) > _MAX_CLUSTER_ROWS:
             c = int(pdf["cluster"].iloc[0])
             raise ValueError(
                 f"semantic_near_duplicates: cluster {c} has {len(pdf)} rows, "
-                f"over the max_cluster_rows={max_cluster_rows} GEMM budget "
+                f"over the {_MAX_CLUSTER_ROWS}-row GEMM budget "
                 f"(~{len(pdf) ** 2 * 8 / 1e9:.1f} GB of pairwise doubles). "
-                f"Raise k to split the cluster, set/raise sub_blocks to salt "
-                f"it, or raise max_cluster_rows if the executors have the "
-                f"memory."
+                f"Set or raise sub_blocks to salt the cluster."
             )
         pdf = pdf.sort_values("id")
         ids = pdf["id"].to_numpy()

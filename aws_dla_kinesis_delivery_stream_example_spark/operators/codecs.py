@@ -76,10 +76,13 @@ def resize_nearest(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
 # -- WAV ------------------------------------------------------------------
 
 
-def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
-    """Encode a 1-D int16 array as a PCM-16 mono RIFF/WAVE file."""
+WAV_RATE = 16000  # sample rate (Hz) of every WAV this engine writes
+
+
+def encode_wav(samples: np.ndarray) -> bytes:
+    """Encode a 1-D int16 array as a ``WAV_RATE`` PCM-16 mono RIFF/WAVE file."""
     pcm = np.asarray(samples, dtype="<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
+    fmt = struct.pack("<HHIIHH", 1, 1, WAV_RATE, WAV_RATE * 2, 2, 16)
     chunks = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     chunks += b"data" + struct.pack("<I", len(pcm)) + pcm
     return b"RIFF" + struct.pack("<I", len(chunks)) + chunks

@@ -30,6 +30,15 @@ from pyspark.sql import functions as F
 from ..functions.vectors import cosine
 from .staging import stage
 
+CONTAM_N = 4  # word n-gram width of every benchmark-contamination check
+FUZZY_MAX_DIST_MILLI = 300  # fuzzy_contamination: normalized edit distance <= 0.3
+# chunk_dedup_rewrite geometry: non-overlapping 16-token chunks (the
+# C4/RefinedWeb dedup granularity), small enough that the ~54-token
+# synthetic docs produce 3-4 chunks each, so removal is non-vacuous.
+DEDUP_CHUNK_TOKENS = 16
+_SPAN_N = 20  # duplicated_span_stats: tokens per window
+_SNAPSHOT_KEEP_COLS = ("source", "n_chars")  # snapshot_diff's carried metadata
+
 
 def content_digest(text_col) -> Column:
     """Engine-independent content key for exact dedup across runs
@@ -44,9 +53,9 @@ def contaminated_ids(
     id_col: str,
     text_col: str,
 ) -> DataFrame:
-    """IDs of candidate docs sharing >= 1 word-4-gram with any
-    benchmark doc (the decontamination pass a training pipeline runs
-    against eval sets before training).
+    """IDs of candidate docs sharing >= 1 word-``CONTAM_N``-gram with
+    any benchmark doc (the decontamination pass a training pipeline
+    runs against eval sets before training).
 
     The benchmark shingle set is deduplicated and broadcast; candidate
     shingles stream through a map-side semi join. Shingles are
@@ -59,11 +68,11 @@ def contaminated_ids(
     from .dedup import _shingle_hash_rows
 
     bench_sh = (
-        _shingle_hash_rows(benchmark, id_col, text_col, 4)
+        _shingle_hash_rows(benchmark, id_col, text_col, CONTAM_N)
         .select(F.col("h").alias("shingle"))
         .distinct()
     )
-    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, 4).select(
+    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, CONTAM_N).select(
         F.col("doc").alias(id_col), F.col("h").alias("shingle")
     )
     return (
@@ -78,19 +87,18 @@ def contamination_overlap(
     benchmark: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 4,
 ) -> DataFrame:
     """Per-candidate-doc benchmark overlap FRACTION — the graded
     refinement of :func:`contaminated_ids`' boolean flag (the GPT-3
     appendix-C style "n-gram overlap with eval sets" audit): for every
-    candidate document, what share of its distinct word ``n``-grams
-    appears anywhere in the benchmark set. A pipeline thresholds this
-    (drop at >= 10%, review at >= 1%) instead of dropping on a single
-    shared shingle.
+    candidate document, what share of its distinct word
+    ``CONTAM_N``-grams appears anywhere in the benchmark set. A
+    pipeline thresholds this (drop at >= 10%, review at >= 1%) instead
+    of dropping on a single shared shingle.
 
     Returns (id_col, n_shingles, n_hit, overlap_frac) — one row per
-    candidate doc that has >= 1 shingle (docs shorter than ``n`` words
-    produce none, same exclusion as ``boilerplate_ratio``);
+    candidate doc that has >= 1 shingle (docs shorter than ``CONTAM_N``
+    words produce none, same exclusion as ``boilerplate_ratio``);
     overlap_frac is rounded to 4 dp on both engines.
 
     100 TB shape: identical to ``contaminated_ids`` — the benchmark
@@ -103,11 +111,11 @@ def contamination_overlap(
     from .dedup import _shingle_hash_rows
 
     bench_sh = (
-        _shingle_hash_rows(benchmark, id_col, text_col, n)
+        _shingle_hash_rows(benchmark, id_col, text_col, CONTAM_N)
         .select(F.col("h").alias("shingle"))
         .distinct()
     )
-    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, n).select(
+    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, CONTAM_N).select(
         F.col("doc").alias(id_col), F.col("h").alias("shingle")
     )
     flagged = cand_sh.join(
@@ -205,12 +213,10 @@ def boilerplate_ratio(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def duplicated_span_stats(
-    docs: DataFrame, id_col: str, text_col: str, n: int = 20
-) -> DataFrame:
+def duplicated_span_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-doc duplicated-span coverage — the EXACTSUBSTR-style signal
     (Lee et al., "Deduplicating Training Data Makes Language Models
-    Better"): how much of each document is covered by token ``n``-gram
+    Better"): how much of each document is covered by ``_SPAN_N``-token
     windows that occur MORE THAN ONCE in the corpus (cross-doc or
     within-doc). Unlike the pair-producing dedup family this emits one
     row per document, so there is NO pair join and no O(df^2) hazard
@@ -220,16 +226,16 @@ def duplicated_span_stats(
     window function — every stage linear in corpus token count.
 
     Coverage counts each token once even under overlapping duplicated
-    windows (union of [pos, pos+n) intervals via a sorted lead() pass),
-    which is what makes the number a defensible "fraction of this doc
+    windows (union of [pos, pos+_SPAN_N) intervals via a sorted lead()
+    pass), which is what makes the number a defensible "fraction of this doc
     is duplicated text" curation signal rather than an occurrence
     count (``boilerplate_ratio`` is the occurrence-count variant at
     shingle granularity).
 
     Returns (id_col, n_tokens, n_dup_windows, dup_tokens,
-    dup_fraction) for EVERY input document; docs shorter than ``n``
-    tokens report zeros. Window hashes are 60-bit md5 prefixes —
-    engine-portable (the q37 pattern), so the whole statistic sits
+    dup_fraction) for EVERY input document; docs shorter than
+    ``_SPAN_N`` tokens report zeros. Window hashes are 60-bit md5
+    prefixes — engine-portable (the q37 pattern), so the whole statistic sits
     under a full DuckDB hash oracle.
     """
     from pyspark.sql import Window
@@ -240,16 +246,16 @@ def duplicated_span_stats(
         F.col(id_col).alias("doc"), TX.words(text_col).alias("toks")
     ).withColumn("n_tokens", F.size("toks").cast("long"))
     window_structs = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - n + 1),
+        F.sequence(F.lit(1), F.size("toks") - _SPAN_N + 1),
         lambda i: F.struct(
             i.alias("pos"),
-            TX.hash60(F.concat_ws(" ", F.slice("toks", i, n))).alias("h"),
+            TX.hash60(F.concat_ws(" ", F.slice("toks", i, _SPAN_N))).alias("h"),
         ),
     )
     # ONE tokenize+hash pass feeds all three consumers (duplicate
     # count, join-back, final n_tokens projection): stage the
     # pre-explode frame holding (doc, n_tokens, hashed windows) —
-    # a staging table at 100 TB scale.  Docs shorter than n carry a
+    # a staging table at 100 TB scale.  Docs shorter than _SPAN_N carry a
     # NULL window array (explode drops them) but keep their n_tokens
     # row.  Staging pre-explode instead of post keeps the cache the
     # same size while making n_tokens free — the former shape re-ran
@@ -259,7 +265,7 @@ def duplicated_span_stats(
         toks.select(
             "doc",
             "n_tokens",
-            F.when(F.col("n_tokens") >= n, window_structs).alias("ws"),
+            F.when(F.col("n_tokens") >= _SPAN_N, window_structs).alias("ws"),
         )
     )
     w = pre.select("doc", F.explode("ws").alias("w")).select(
@@ -278,8 +284,8 @@ def duplicated_span_stats(
     ww = Window.partitionBy("doc").orderBy("pos")
     nxt = F.lead("pos").over(ww)
     covered = (
-        F.when(nxt.isNotNull() & (nxt - F.col("pos") < n), nxt - F.col("pos"))
-        .otherwise(F.lit(n))
+        F.when(nxt.isNotNull() & (nxt - F.col("pos") < _SPAN_N), nxt - F.col("pos"))
+        .otherwise(F.lit(_SPAN_N))
         .cast("long")
     )
     per_doc = (
@@ -335,13 +341,12 @@ def centroid_cosines(
     )
 
 
-def chunk_dedup_rewrite(
-    df: DataFrame, id_col: str, text_col: str, chunk_tokens: int = 16
-) -> DataFrame:
+def chunk_dedup_rewrite(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """C4/RefinedWeb-style duplicate-chunk REMOVAL with document
-    rewrite: split each doc into non-overlapping ``chunk_tokens``-token
-    chunks, keep only each chunk content's global first occurrence
-    (min (doc_id, chunk_idx)), reassemble the surviving text per doc.
+    rewrite: split each doc into non-overlapping
+    ``DEDUP_CHUNK_TOKENS``-token chunks, keep only each chunk content's
+    global first occurrence (min (doc_id, chunk_idx)), reassemble the
+    surviving text per doc.
 
     Returns (id_col, n_chunks, n_kept, removed_frac, kept_hash) — the
     60-bit hash of the rewritten text, not the text: at 100 TB the
@@ -365,13 +370,13 @@ def chunk_dedup_rewrite(
     toks = df.select(id_col, TX.words(text_col).alias("tk"))
     tk = F.col("tk")
     starts = F.when(
-        F.size(tk) >= 1, F.sequence(F.lit(1), F.size(tk), F.lit(chunk_tokens))
+        F.size(tk) >= 1, F.sequence(F.lit(1), F.size(tk), F.lit(DEDUP_CHUNK_TOKENS))
     ).otherwise(F.array().cast("array<int>"))
     chunk_structs = F.transform(
         starts,
         lambda s, i: F.struct(
             (i + 1).cast("long").alias("chunk_idx"),
-            F.concat_ws(" ", F.slice(tk, s, chunk_tokens)).alias("ctext"),
+            F.concat_ws(" ", F.slice(tk, s, DEDUP_CHUNK_TOKENS)).alias("ctext"),
         ),
     )
     ch = stage(
@@ -405,7 +410,7 @@ def chunk_dedup_rewrite(
     )
     n_chunks = (
         F.floor(
-            (F.coalesce(F.size(tk), F.lit(0)) + (chunk_tokens - 1)) / chunk_tokens
+            (F.coalesce(F.size(tk), F.lit(0)) + (DEDUP_CHUNK_TOKENS - 1)) / DEDUP_CHUNK_TOKENS
         )
         .cast("long")
         .alias("n_chunks")
@@ -424,11 +429,9 @@ def chunk_dedup_rewrite(
     )
 
 
-def source_overlap(
-    df: DataFrame, source_col: str, text_col: str, n: int = 5
-) -> DataFrame:
+def source_overlap(df: DataFrame, source_col: str, text_col: str) -> DataFrame:
     """Cross-source duplication matrix: for every source pair, the
-    count of distinct word n-gram shingles both contain, with Jaccard
+    count of distinct word-5-gram shingles both contain, with Jaccard
     and containment — the "which sources copy from which" audit that
     decides mixture weights and dedup ORDER (dedup the copier against
     the origin).
@@ -450,10 +453,10 @@ def source_overlap(
     transform/slice/concat_ws HOF stack — measured 4.8 s -> 3.4 s at
     sf0.1 for the catalog query.
     """
-    from .dedup import _shingle_hash_rows
+    from .dedup import _SHINGLE_N, _shingle_hash_rows
 
     sh = stage(
-        _shingle_hash_rows(df, source_col, text_col, n, id_type="string")
+        _shingle_hash_rows(df, source_col, text_col, _SHINGLE_N, id_type="string")
         .withColumnRenamed("doc", source_col)
         .distinct()
     )
@@ -568,11 +571,9 @@ def fuzzy_contamination(
     benchmark: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 4,
-    max_dist_milli: int = 300,
 ) -> DataFrame:
     """Fuzzy decontamination: candidate docs within a NORMALIZED edit
-    distance of ``max_dist_milli``/1000 of any benchmark doc. Exact
+    distance of ``FUZZY_MAX_DIST_MILLI``/1000 of any benchmark doc. Exact
     n-gram decontamination (q64/q96) misses eval items that entered
     the crawl with light reformatting — wrapped lines, shuffled
     punctuation, inserted boilerplate; an edit-distance verify stage
@@ -581,14 +582,14 @@ def fuzzy_contamination(
 
     Two stages, the classic blocking+verification shape:
     1. BLOCK: distinct (candidate, bench) pairs sharing >= 1 word-
-       ``n``-gram — the benchmark shingle set is tiny (eval suites are
+       ``CONTAM_N``-gram — the benchmark shingle set is tiny (eval suites are
        KBs, corpora are TBs) and broadcast, so this is a map-side join
        whose output is bounded by |bench shingle matches|, never
        |cand| x |bench|.
     2. VERIFY: levenshtein on the pair texts. O(len_a x len_b) per
        pair — strictly the gated path; the block cap is what makes it
        affordable. The gate is EXACT integer arithmetic
-       (1000*lev <= max_dist_milli * greatest(len_a, len_b, 1)), no
+       (1000*lev <= FUZZY_MAX_DIST_MILLI * greatest(len_a, len_b, 1)), no
        IEEE division anywhere.
 
     Returns one row per contaminated candidate:
@@ -603,21 +604,19 @@ def fuzzy_contamination(
     """
     from .dedup import _shingle_hash_rows
 
-    # No .distinct() here (round 17): _shingle_hash_rows already emits
-    # per-doc-distinct shingles, and the pair set is deduplicated after
-    # the blocking join anyway — the old distinct was a dead exchange +
-    # aggregation on the broadcast build path (one full stage barrier
-    # before the blocking join could start). ASSUMPTION (round-17
-    # advisor): benchmark ids are unique per frame — per-ROW dedup
-    # means a re-ingested bench doc under the same id would broadcast
-    # duplicate (bid, shingle) rows and fan out duplicate join hits
-    # (results stay correct via pairs.distinct(); only the broadcast
-    # build and join output inflate). Catalog callers pass the
-    # driver's unique-id bench split.
-    bench_sh = _shingle_hash_rows(benchmark, id_col, text_col, n).select(
+    # No .distinct() on the bench shingles: _shingle_hash_rows already
+    # emits per-doc-distinct shingles, and the pair set is deduplicated
+    # after the blocking join, so a distinct here would only add an
+    # exchange + aggregation before the broadcast. This assumes
+    # benchmark ids are unique per frame: a re-ingested bench doc under
+    # the same id would broadcast duplicate (bid, shingle) rows and fan
+    # out duplicate join hits (results stay correct via
+    # pairs.distinct(); only the broadcast build and join output
+    # inflate). Catalog callers pass the driver's unique-id bench split.
+    bench_sh = _shingle_hash_rows(benchmark, id_col, text_col, CONTAM_N).select(
         F.col("doc").alias("_bid"), F.col("h").alias("shingle")
     )
-    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, n).select(
+    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, CONTAM_N).select(
         F.col("doc").alias("_cid"), F.col("h").alias("shingle")
     )
     pairs = (
@@ -645,7 +644,7 @@ def fuzzy_contamination(
             .alias("_mlen"),
         )
     )
-    gate = F.lit(1000) * F.col("_lev") <= F.lit(max_dist_milli) * F.col("_mlen")
+    gate = F.lit(1000) * F.col("_lev") <= F.lit(FUZZY_MAX_DIST_MILLI) * F.col("_mlen")
     lev_milli = F.expr("1000 * _lev div _mlen")
     best = F.min(
         F.when(gate, F.struct(lev_milli.alias("l"), F.col("_bid").alias("b")))
@@ -673,15 +672,14 @@ def snapshot_diff(
     new: DataFrame,
     id_col: str,
     fp_col: str,
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Recrawl delta: classify every document across two corpus
     snapshots by identity and content fingerprint.
 
     Returns one row per doc id present in EITHER snapshot:
-    (id_col, status, *keep_cols) where status ∈
-    {'added', 'removed', 'changed', 'unchanged'} and each keep_col is
-    coalesce(new.col, old.col) — the freshest available metadata.
+    (id_col, status, source, n_chars) where status ∈
+    {'added', 'removed', 'changed', 'unchanged'} and source / n_chars
+    are coalesce(new.col, old.col) — the freshest available metadata.
 
     Recrawls dominate web-scale corpus maintenance: 90%+ of a monthly
     crawl is unchanged content, and re-deduplicating / re-scoring it
@@ -698,12 +696,12 @@ def snapshot_diff(
     o = old.select(
         F.col(id_col).alias("_oid"),
         F.col(fp_col).alias("_ofp"),
-        *[F.col(c).alias(f"_o_{c}") for c in keep_cols],
+        *[F.col(c).alias(f"_o_{c}") for c in _SNAPSHOT_KEEP_COLS],
     )
     n = new.select(
         F.col(id_col).alias("_nid"),
         F.col(fp_col).alias("_nfp"),
-        *[F.col(c).alias(f"_n_{c}") for c in keep_cols],
+        *[F.col(c).alias(f"_n_{c}") for c in _SNAPSHOT_KEEP_COLS],
     )
     j = o.join(n, o["_oid"] == n["_nid"], "full_outer")
     status = (
@@ -717,6 +715,6 @@ def snapshot_diff(
         status.alias("status"),
         *[
             F.coalesce(F.col(f"_n_{c}"), F.col(f"_o_{c}")).alias(c)
-            for c in keep_cols
+            for c in _SNAPSHOT_KEEP_COLS
         ],
     )

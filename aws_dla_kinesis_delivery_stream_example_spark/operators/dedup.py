@@ -132,14 +132,13 @@ def _capped_shingles(
     return sh
 
 
-def shared_shingle_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_df: int | None = None,
-) -> DataFrame:
+_SHARED_MAX_DF = 10  # shared_shingle_pairs' df cap (q55's max_df valve)
+
+
+def shared_shingle_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Distinct (doc_a, doc_b) pairs (doc_a < doc_b) sharing >= 1
-    (df-capped) shingle — exactly ``shingle_jaccard_pairs(threshold=0)``
+    shingle of document frequency <= ``_SHARED_MAX_DF`` — exactly
+    ``shingle_jaccard_pairs(threshold=0, max_df=_SHARED_MAX_DF)``
     projected to its id columns, without the jaccard arithmetic.
 
     Every co-occurring pair has n_inter >= 1 and a positive union size,
@@ -156,7 +155,7 @@ def shared_shingle_pairs(
     shingle_jaccard_pairs). Equivalence to the threshold-0 jaccard form
     is pinned in tests/test_round8b_ops.py.
     """
-    sh = stage(_capped_shingles(df, id_col, text_col, max_df))
+    sh = stage(_capped_shingles(df, id_col, text_col, _SHARED_MAX_DF))
     a, b = sh.alias("a"), sh.alias("b")
     return (
         a.join(
@@ -304,15 +303,20 @@ def cdc_chunk_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).mapInPandas(run, "doc long, chunk_hash long, chunk_len long")
 
 
+# MinHash geometry: 64 hashes in 16 bands of 4 rows.
+_MINHASH_N = 64
+_MINHASH_BANDS = 16
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 64,
     _hash_rows: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, signature array<long>) — min over n universal hashes of the
-    shingle-hash set. One narrow map + one groupBy(id) aggregate.
+    """(id, signature array<long>) — min over ``_MINHASH_N`` universal
+    hashes of the shingle-hash set. One narrow map + one groupBy(id)
+    aggregate.
 
     Shingle hashes are folded to 31 bits (mod 2^31-1) HERE ONLY: the
     permutation arithmetic (2k+1)*h + c must stay inside int64, and a
@@ -335,10 +339,10 @@ def minhash_signatures(
     # h_i(x) = (a_i*x + b_i) mod p, fixed odd a_i / b_i derived from i.
     mins = [
         F.min(F.pmod(F.lit(2 * i + 1) * F.col("h") + F.lit(1_000_003 * (i + 1)), F.lit(_MERSENNE))).alias(f"mh{i}")
-        for i in range(n_hashes)
+        for i in range(_MINHASH_N)
     ]
     agg = sh.groupBy("doc").agg(*mins)
-    return agg.select("doc", F.array(*[f"mh{i}" for i in range(n_hashes)]).alias("signature"))
+    return agg.select("doc", F.array(*[f"mh{i}" for i in range(_MINHASH_N)]).alias("signature"))
 
 
 def minhash_near_duplicates(
@@ -346,35 +350,20 @@ def minhash_near_duplicates(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    n_hashes: int = 64,
-    bands: int = 16,
     _hash_rows: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs: band the signature, equi-join on
-    (band_idx, band_hash) to get candidates, verify candidates with the
-    estimated Jaccard = fraction of matching minhashes.
+    """MinHash+LSH near-dup pairs: band the signature into
+    ``_MINHASH_BANDS`` bands, equi-join on (band_idx, band_hash) to get
+    candidates, verify candidates with the estimated Jaccard = fraction
+    of matching minhashes.
 
     Returns (doc_a, doc_b, est_jaccard >= threshold). The LSH join is
     the 100 TB path: candidates ~ true-positive pairs, never all pairs.
     """
-    # Fail fast on a banding that cannot mean what it says: bands >
-    # n_hashes makes rows-per-band 0, so every band key becomes
-    # xxhash64(empty slice) — the SAME constant for every doc — and
-    # the "LSH" join silently degenerates to all-pairs O(n^2), the
-    # exact blow-up the simhash path fail-fasts against. A non-divisor
-    # bands silently ignores the trailing signature entries.
-    if bands <= 0 or bands > n_hashes or n_hashes % bands != 0:
-        raise ValueError(
-            f"minhash_near_duplicates: bands={bands} must be a positive "
-            f"divisor of n_hashes={n_hashes} (rows per band = "
-            "n_hashes/bands must be a whole number >= 1)"
-        )
-    rows = n_hashes // bands
+    rows = _MINHASH_N // _MINHASH_BANDS
     # Signature computation (shingle + 64 min-aggs) feeds both join
     # sides — materialize once (staging table at 100 TB).
-    sig = stage(
-        minhash_signatures(df, id_col, text_col, n_hashes, _hash_rows)
-    )
+    sig = stage(minhash_signatures(df, id_col, text_col, _hash_rows))
     # Narrow band join: only (doc, band) rows shuffle; the 64-long
     # signatures re-attach AFTER pair dedup, so candidate multiplicity
     # never multiplies the signature payload (the shuffle-size property
@@ -382,7 +371,7 @@ def minhash_near_duplicates(
     banded = sig.select(
         "doc",
         F.posexplode(
-            F.array(*[F.xxhash64(F.slice("signature", i * rows + 1, rows)) for i in range(bands)])
+            F.array(*[F.xxhash64(F.slice("signature", i * rows + 1, rows)) for i in range(_MINHASH_BANDS)])
         ).alias("band_idx", "band_hash"),
     )
     a, b = banded.alias("a"), banded.alias("b")
@@ -409,7 +398,7 @@ def minhash_near_duplicates(
         F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
         F.lit(0),
         lambda acc, x: acc + x,
-    ).cast("double") / F.lit(float(n_hashes))
+    ).cast("double") / F.lit(float(_MINHASH_N))
     return cand.select("doc_a", "doc_b", est.alias("est_jaccard")).filter(
         F.col("est_jaccard") >= threshold
     )
@@ -672,16 +661,18 @@ def _manku_band_keys(sig_col) -> list:
     return keys
 
 
+# Fail-fast bound of simhash_band_candidates: a band bucket with more
+# distinct sigs than this raises instead of running a quadratic join.
+_HARD_BAND_BUCKET = 65_536
+
+
 def simhash_band_candidates(
     usig: DataFrame,
-    max_hamming: int = 3,
     max_band_bucket: int | None = 256,
-    hard_band_bucket: int | None = 65_536,
 ) -> DataFrame:
-    """Pre-verification candidate sig pairs from the band join over
-    DISTINCT fingerprints. ``max_hamming <= 3`` uses Manku block-triple
-    banding (recall-guaranteed, ~32-bit keys); larger radii fall back
-    to the four 16-bit chunks (best-effort, as before).
+    """Pre-verification candidate sig pairs for the radius-3 search
+    (``_MANKU_RADIUS``) from the band join over DISTINCT fingerprints:
+    Manku block-triple banding, recall-guaranteed, ~32-bit keys.
 
     Hot-bucket valve (``max_band_bucket``, the analog of the jaccard
     ``max_df`` / tfidf absolute-cap valves): template-correlated corpora
@@ -703,77 +694,38 @@ def simhash_band_candidates(
     20*|unique sigs|/max_band_bucket, so size the bound to keep that
     broadcastable at the target corpus (at 10^9 unique sigs the default
     256 bounds it at ~80M keys — raise the bound accordingly; the valve
-    only needs to engage on the pathological tail).  ``None`` disables
-    the refinement (candidate generation as before the valve existed;
-    the hard fail-fast below still applies).  Worst case — many distinct
-    sigs differing only inside ONE chunk — is irreducible for an exact
-    radius-3 search (those candidates may all be true pairs), so the
-    refined join's budget is the honest floor, not a silent cap.
+    only needs to engage on the pathological tail).  ``None`` is the
+    unvalved band join, the reference the valve tests compare against.
+    Worst case — many distinct sigs differing only inside ONE chunk —
+    is irreducible for an exact radius-3 search (those candidates may
+    all be true pairs), so the refined join's budget is the honest
+    floor, not a silent cap.
 
-    ``hard_band_bucket`` completes the budget with a FAIL-FAST (the
+    ``_HARD_BAND_BUCKET`` completes the budget with a FAIL-FAST (the
     ``_checked_milliweight`` philosophy: never silently quadratic): a
     band bucket beyond the hard bound — a degenerate fingerprint crowd,
     e.g. web-scale boilerplate collapsing onto one sig neighborhood —
     raises with sizing guidance instead of running an unbounded refined
-    self-join.  The fail-fast is INDEPENDENT of the refinement valve:
-    it also guards the ``max_band_bucket=None`` escape hatch and the
-    ``max_hamming > 3`` chunk-banding fallback (whose candidate growth
-    is the worst of the three paths), so no configuration of this
-    function runs a silently-quadratic join; only ``hard_band_bucket=
-    None`` removes the net, explicitly.  With both bounds in force the
-    candidate budget is hard: cold pairs <= 20*n*max_band_bucket/2,
-    refined hot pairs <= (20n/max_band_bucket) * 2*hard_band_bucket^2 —
-    linear in corpus size — and each candidate costs one XOR+POPCNT to
-    verify.  Exact-dedup the degenerate sig crowd first (it is,
-    definitionally, a set of exact near-duplicates) or raise the bound
-    deliberately.
+    self-join, on the valved and the unvalved path alike.  The candidate
+    budget is hard: cold pairs <= 20*n*max_band_bucket/2, refined hot
+    pairs <= (20n/max_band_bucket) * 2*_HARD_BAND_BUCKET^2 — linear in
+    corpus size — and each candidate costs one XOR+POPCNT to verify.
+    Exact-dedup the degenerate sig crowd first (it is, definitionally,
+    a set of exact near-duplicates).
     """
 
-    if (
-        max_band_bucket is not None
-        and hard_band_bucket is not None
-        and hard_band_bucket < max_band_bucket
-    ):
-        raise ValueError(
-            "hard_band_bucket must be >= max_band_bucket: a hard bound "
-            "below the refinement bound would let buckets in "
-            f"({hard_band_bucket}, {max_band_bucket}] bypass the "
-            "fail-fast through the valve filter's short-circuit"
-        )
-
-    def _overflow_msg() -> object:
-        return F.concat(
+    overflow = F.raise_error(
+        F.concat(
             F.lit(
                 "simhash band bucket exceeds the hard bound "
-                f"({hard_band_bucket}): a degenerate fingerprint crowd "
+                f"({_HARD_BAND_BUCKET}): a degenerate fingerprint crowd "
                 "would make even the chunk-refined join quadratic. "
                 "Exact-dedup the crowd first (those docs share a "
-                "fingerprint neighborhood) or raise hard_band_bucket "
-                "deliberately; bucket_rows="
+                "fingerprint neighborhood); bucket_rows="
             ),
             F.col("bucket_rows").cast("string"),
         )
-
-    def _hard_guarded(frame: DataFrame, keys: list[str]) -> DataFrame:
-        """Attach the fail-fast to paths without the hot/cold split: an
-        anti join against a tripwire aggregate that is empty when every
-        bucket is under the hard bound and RAISES while being built
-        otherwise (the raise lives in a filter predicate — a projection
-        could be pruned by Catalyst; a filter cannot)."""
-        if hard_band_bucket is None:
-            return frame
-        tripwire = (
-            frame.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("bucket_rows"))
-            .filter(
-                F.when(
-                    F.col("bucket_rows") > hard_band_bucket,
-                    F.raise_error(_overflow_msg()).isNotNull(),
-                ).otherwise(F.lit(False))
-            )
-            .select(*keys)
-        )
-        return frame.join(F.broadcast(tripwire), keys, "left_anti")
+    ).isNotNull()
 
     def _pairs(side: DataFrame, keys: list[str]) -> DataFrame:
         a, b = side.alias("a"), side.alias("b")
@@ -784,38 +736,28 @@ def simhash_band_candidates(
             F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b")
         )
 
-    if max_hamming > _MANKU_RADIUS:
-        banded = usig.select("sig", F.posexplode("chunks").alias("band", "key"))
-        return _pairs(_hard_guarded(banded, ["band", "key"]), ["band", "key"]).dropDuplicates(
-            ["sig_a", "sig_b"]
-        )
-
     banded = usig.select(
         "sig", "chunks", F.explode(F.array(*_manku_band_keys(F.col("sig")))).alias("bk")
     ).select("sig", "chunks", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    bucket_rows = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("bucket_rows"))
+    over_hard = F.when(F.col("bucket_rows") > _HARD_BAND_BUCKET, overflow)
 
     if max_band_bucket is None:
-        return _pairs(
-            _hard_guarded(banded.drop("chunks"), ["band", "key"]), ["band", "key"]
-        ).dropDuplicates(["sig_a", "sig_b"])
+        # the fail-fast as an anti join against a tripwire aggregate
+        # that is empty when every bucket is under the hard bound and
+        # RAISES while being built otherwise (the raise lives in a
+        # filter predicate — a projection could be pruned by Catalyst;
+        # a filter cannot)
+        tripwire = bucket_rows.filter(over_hard.otherwise(F.lit(False))).select("band", "key")
+        unvalved = banded.drop("chunks").join(F.broadcast(tripwire), ["band", "key"], "left_anti")
+        return _pairs(unvalved, ["band", "key"]).dropDuplicates(["sig_a", "sig_b"])
 
     # valved path: the fail-fast shares the hot-key aggregation — it is
     # evaluated while materializing the broadcast hot-key set, so an
     # over-the-bound bucket stops the job before any refined join runs
-    hard_check = (
-        F.when(
-            F.col("bucket_rows") > hard_band_bucket,
-            F.raise_error(_overflow_msg()).isNotNull(),
-        ).otherwise(F.lit(True))
-        if hard_band_bucket is not None
-        else F.lit(True)
-    )
-    hot_keys = (
-        banded.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("bucket_rows"))
-        .filter((F.col("bucket_rows") > max_band_bucket) & hard_check)
-        .select("band", "key")
-    )
+    hot_keys = bucket_rows.filter(
+        (F.col("bucket_rows") > max_band_bucket) & over_hard.otherwise(F.lit(True))
+    ).select("band", "key")
     cold = banded.join(F.broadcast(hot_keys), ["band", "key"], "left_anti").drop("chunks")
     hot = (
         banded.join(F.broadcast(hot_keys), ["band", "key"], "left_semi")
@@ -828,27 +770,19 @@ def simhash_band_candidates(
     )
 
 
-def simhash_near_duplicates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    max_band_bucket: int | None = 256,
-) -> DataFrame:
-    """SimHash near-dup pairs: candidates share a band key (Manku
-    block-triple banding for the standard radius-3 search, 16-bit
-    chunks beyond), verified by exact Hamming distance =
-    bit_count(sig_a XOR sig_b).
+def simhash_near_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """SimHash near-dup pairs within Hamming distance ``_MANKU_RADIUS``:
+    candidates share a Manku block-triple band key, verified by exact
+    Hamming distance = bit_count(sig_a XOR sig_b).
 
     The band join runs over DISTINCT fingerprints, not docs: a corpus
     with many identical fingerprints (exact duplicates are common in
     web data) otherwise turns every hot band bucket into an O(n^2)
     doc-pair blow-up *before* verification. Banding unique sigs caps
     the join at unique-fingerprint cardinality; doc multiplicity
-    re-attaches after the (tiny) verified sig-pair set.
-    ``max_band_bucket`` is the hot-bucket valve for DISTINCT-sig
-    crowding (recall-preserving chunk refinement — see
-    :func:`simhash_band_candidates`).
+    re-attaches after the (tiny) verified sig-pair set. DISTINCT-sig
+    crowding goes through the hot-bucket valve (recall-preserving
+    chunk refinement — see :func:`simhash_band_candidates`).
     """
     sig = stage(simhash_signatures(df, id_col, text_col))
     # usig feeds up to five scans inside the candidate generator, and
@@ -859,9 +793,9 @@ def simhash_near_duplicates(
     # of cached rows for sort-merge joins. Leave the distinct lazy.
     usig = sig.select("sig", "chunks").distinct()
     spair = (
-        simhash_band_candidates(usig, max_hamming, max_band_bucket)
+        simhash_band_candidates(usig)
         .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= _MANKU_RADIUS)
     )
     da = sig.select(F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a"))
     db = sig.select(F.col("doc").alias("doc_b"), F.col("sig").alias("sig_b"))
@@ -973,16 +907,18 @@ def minhash_calibration_report(docs: DataFrame) -> DataFrame:
 # arithmetic — any SQL engine reproduces the stratum exactly.
 _CAL_SAMPLE_MULT = 2654435761
 _CAL_SAMPLE_MOD = 2147483647
+# The audited stratum: hash mod 2, bucket 0 — the largest proper
+# stratum, non-vacuous (n_truth > 0) at every committed SF (mod 4
+# already empties the truth set at sf0.01's geometry). At 100 TB the
+# stratum would be far smaller (mod 1000 for a 0.1% pilot).
+CAL_STRATUM_MOD = 2
+CAL_STRATUM_BUCKET = 0
 
 
-def minhash_calibration_sampled(
-    docs: DataFrame,
-    sample_mod: int = 1,
-    sample_bucket: int = 0,
-) -> DataFrame:
+def minhash_calibration_sampled(docs: DataFrame) -> DataFrame:
     """``minhash_calibration_report`` restricted to a DETERMINISTIC
-    1/sample_mod document stratum — the 100 TB execution mode of q114
-    (round-12 verdict Next #7, option 2).
+    1/``CAL_STRATUM_MOD`` document stratum — the 100 TB execution mode
+    of q114.
 
     q114's point is "measure, don't guess": audit the LSH candidate
     generator against cap-free EXACT-Jaccard truth before committing
@@ -1000,30 +936,22 @@ def minhash_calibration_sampled(
     standard SNM/LSH calibration protocol and unbiased when strata
     are hash-random.
 
-    ``sample_mod=1`` is EXACTLY the full report (pinned column-for-
-    column by test): a scale mode equals its audited face wherever
-    both are computable. The stratum filter is a
+    The result equals q114's report over a corpus of only the
+    stratum's documents (pinned by test): a scale mode equals its
+    audited face wherever both are computable. The stratum filter is a
     scan-side integer predicate applied before any shuffle or Arrow
     pass, so the whole pipeline downstream (shingling, signatures,
-    joins) runs on |corpus|/sample_mod rows.
+    joins) runs on |corpus|/CAL_STRATUM_MOD rows.
     """
-    if sample_mod < 1:
-        raise ValueError(f"sample_mod must be >= 1, got {sample_mod}")
-    if not (0 <= sample_bucket < sample_mod):
-        raise ValueError(
-            f"sample_bucket must be in [0, {sample_mod}), got {sample_bucket}"
-        )
-    if sample_mod > 1:
-        # Reduce id mod P BEFORE multiplying (round-13 advisor): the
-        # raw product overflows int64 past id ~3.47e9 — Spark would
-        # wrap silently (dropping those docs from every bucket) while
-        # DuckDB raises; the reduced form is mathematically identical
-        # and peaks at (P-1)*MULT ~ 5.7e18, inside int64.
-        bucket = (
-            (F.col("doc_id") % _CAL_SAMPLE_MOD)
-            * _CAL_SAMPLE_MULT
-            % _CAL_SAMPLE_MOD
-            % sample_mod
-        )
-        docs = docs.filter(bucket == sample_bucket)
-    return minhash_calibration_report(docs)
+    # Reduce id mod P BEFORE multiplying: the raw product overflows
+    # int64 past id ~3.47e9 — Spark would wrap silently (dropping those
+    # docs from every bucket) while DuckDB raises; the reduced form is
+    # mathematically identical and peaks at (P-1)*MULT ~ 5.7e18, inside
+    # int64.
+    bucket = (
+        (F.col("doc_id") % _CAL_SAMPLE_MOD)
+        * _CAL_SAMPLE_MULT
+        % _CAL_SAMPLE_MOD
+        % CAL_STRATUM_MOD
+    )
+    return minhash_calibration_report(docs.filter(bucket == CAL_STRATUM_BUCKET))

@@ -20,11 +20,13 @@ from .staging import stage
 # under AQE re-planning, partition count, and engine.
 PR_INIT = 1_000_000
 PR_TELEPORT = 150_000
+PR_ITERS = 3
 
 
-def pagerank_fixed_point(pairs: DataFrame, iters: int = 3, checkpoint_every: int = 4) -> DataFrame:
-    """PageRank on an UNDIRECTED (doc_a, doc_b) pair list (each pair
-    becomes two directed edges), in fixed-point micro-unit integer arithmetic:
+def pagerank_fixed_point(pairs: DataFrame) -> DataFrame:
+    """``PR_ITERS`` iterations of PageRank on an UNDIRECTED (doc_a,
+    doc_b) pair list (each pair becomes two directed edges), in
+    fixed-point micro-unit integer arithmetic:
 
         r'(v) = PR_TELEPORT + (85 * sum_{u->v} (r(u) // deg(u))) // 100
 
@@ -46,31 +48,17 @@ def pagerank_fixed_point(pairs: DataFrame, iters: int = 3, checkpoint_every: int
     rebuilds the next rank frame directly, because on a SYMMETRIC edge
     list the in-degree of dst equals its degree: count(*) of the
     received contributions IS dg, so no node-sized rebuild join is
-    needed to re-attach it (round-17 optimization; previously each
-    iteration paid a third operator — ranks ⋈ contributions — per
-    round: q107 measured 7.6 -> 4.2 s at sf0.1, min-of-3, with this
-    fusion plus the loop de-staging below and the threshold-0 pair
-    derivation).
+    needed to re-attach it (a third, ranks ⋈ contributions operator
+    per iteration).
 
-    The per-iteration rank frame is NOT staged: with the rebuild join
-    fused away, each rank frame has exactly ONE consumer (the next
-    iteration's projection), so the lineage chain is linear — caching
-    it would only add a materialization barrier and one extra job per
-    iteration. The round-8 hazard that forced staging — two consumers
-    per iteration re-deriving the previous round's lineage down both
-    branches, ~2x exchanges per round — no longer exists in this
-    shape. The input pair list is NOT staged either: its own expensive
-    prefix (the shingle join) is already staged inside the pair
-    operator.
-
-    Lineage at iters >> 3: the logical plan tree nests one join/agg
-    level per iteration (an unbounded driver-side analysis cost and
-    eventual StackOverflow at tens of iterations) — so every
-    ``checkpoint_every`` iterations the rank frame is
-    ``localCheckpoint``-ed, truncating lineage to the node-sized
-    checkpoint (the q49 duplicate_clusters discipline; superseded
-    checkpoints are freed by the ContextCleaner). Asserted by a
-    plan-size test at iters=6 in tests/test_round9_ops.py.
+    The per-iteration rank frame is NOT staged: each rank frame has
+    exactly ONE consumer (the next iteration's projection), so the
+    lineage chain is linear — caching it would only add a
+    materialization barrier and one extra job per iteration. The input
+    pair list is NOT staged either: its own expensive prefix (the
+    shingle join) is already staged inside the pair operator. The
+    logical plan nests one join/agg level per iteration, which at
+    ``PR_ITERS`` levels needs no lineage truncation.
     """
     sym = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -84,11 +72,7 @@ def pagerank_fixed_point(pairs: DataFrame, iters: int = 3, checkpoint_every: int
         .select(F.col("src").alias("doc"), "dg")
         .withColumn("r", F.lit(PR_INIT).cast("long"))
     )
-    for it in range(iters):
-        if it and it % checkpoint_every == 0:
-            # truncate lineage: the checkpoint replaces the nested
-            # join/agg tree with a leaf scan of the materialized ranks
-            ranks = ranks.localCheckpoint()
+    for _ in range(PR_ITERS):
         contrib = ranks.select(
             F.col("doc").alias("src"), F.expr("r div dg").alias("c")
         )

@@ -194,7 +194,9 @@ AUDIO_FEATURE_SCHEMA = T.StructType(
 # WITHOUT decoding bytes, which is what makes the binary round-trip
 # (encode_wav -> decode_wav) exactly checkable end-to-end.
 _AUD_A, _AUD_B, _AUD_M, _AUD_C = 31, 7, 201, 100
-# A frame is silent below this mean squared sample (q111).
+# q111 frame geometry: 256-sample frames; a frame is silent below this
+# mean squared sample.
+AUDIO_FRAME = 256
 SILENCE_ENERGY_PER_SAMPLE = 100
 
 
@@ -229,9 +231,9 @@ def synthesize_audio(documents: DataFrame) -> DataFrame:
     )
 
 
-def audio_frame_energy(media: DataFrame, frame_samples: int = 256) -> DataFrame:
+def audio_frame_energy(media: DataFrame) -> DataFrame:
     """Frame-level energy features over PCM-16 WAV payloads: split each
-    clip into non-overlapping ``frame_samples``-sample frames (last
+    clip into non-overlapping ``AUDIO_FRAME``-sample frames (last
     frame ragged) and compute EXACT integer energies — per media:
     (n_samples, n_frames, total_energy, peak_frame_energy, n_silent)
     where energy = sum of squared int16 samples (fits int64: 2^30 per
@@ -267,13 +269,13 @@ def audio_frame_energy(media: DataFrame, frame_samples: int = 256) -> DataFrame:
                     v = np.zeros(0, dtype=np.int64)
                 n = len(v)
                 if n:
-                    pad = (-n) % frame_samples
+                    pad = (-n) % AUDIO_FRAME
                     sq = np.pad(v * v, (0, pad))
-                    frames = sq.reshape(-1, frame_samples)
+                    frames = sq.reshape(-1, AUDIO_FRAME)
                     energies = frames.sum(axis=1)
-                    lens = np.full(len(frames), frame_samples, dtype=np.int64)
+                    lens = np.full(len(frames), AUDIO_FRAME, dtype=np.int64)
                     if pad:
-                        lens[-1] = frame_samples - pad
+                        lens[-1] = AUDIO_FRAME - pad
                     n_frames = len(frames)
                     total = int(energies.sum())
                     peak = int(energies.max())
@@ -458,37 +460,26 @@ def dhash_band_candidates(sigs: DataFrame) -> DataFrame:
     )
 
 
-def dhash_near_duplicates(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
+def dhash_near_duplicates(sigs: DataFrame) -> DataFrame:
     """Near-dup image pairs from a dHash signature table: band
-    equi-join candidates (two signatures within Hamming ``max_hamming``
-    <= 3 agree on >= 1 of the 4 bands — pigeonhole, so the blocking is
-    recall-guaranteed, exactly q28's Manku argument), then the exact
+    equi-join candidates (two signatures within Hamming
+    ``_DHASH_BANDS - 1`` = 3 agree on >= 1 of the 4 bands — pigeonhole,
+    so the blocking is recall-guaranteed, exactly q28's Manku argument;
+    at 4+ differing bits 4 flips CAN damage all 4 bands), then the exact
     64-bit Hamming distance via bit_count(xor) per band kills false
     candidates. Candidate volume is bounded by band-value collisions
     (~2^-16 per band pair for independent images), never |images|^2;
     every join/agg here moves 5-int signature rows.
-
-    ``max_hamming`` is capped at ``_DHASH_BANDS - 1``: at 4+ differing
-    bits the pigeonhole argument breaks (4 flips CAN damage all 4
-    bands), so a larger threshold would silently drop true pairs —
-    rejected loudly instead of returning an incomplete answer.
 
     The signature frame is STAGED (operators/staging.py caller
     contract: release_staging() after the terminal action): four plan
     arms read it (both band self-join sides + both verify probes), and
     without staging each arm would re-run the DECODE pipeline feeding
     ``sigs`` — at 100 TB that's re-decoding every image four times to
-    save a 40-byte/image staging write. Joins stay UNHINTED (round-13
-    advisor rule): at bench SF Catalyst broadcasts the tiny staged
-    frame; at scale its stats exceed the threshold and the same plan
-    degrades to co-partitioned shuffle joins instead of OOMing the
-    driver."""
-    if not 0 <= max_hamming <= _DHASH_BANDS - 1:
-        raise ValueError(
-            f"dhash_near_duplicates: max_hamming={max_hamming} outside the "
-            f"banding recall guarantee [0, {_DHASH_BANDS - 1}] — a larger "
-            "threshold needs more bands, not a bigger filter"
-        )
+    save a 40-byte/image staging write. Joins stay UNHINTED: at bench
+    SF Catalyst broadcasts the tiny staged frame; at scale its stats
+    exceed the threshold and the same plan degrades to co-partitioned
+    shuffle joins instead of OOMing the driver."""
     from .staging import stage
 
     sigs = stage(sigs)
@@ -509,5 +500,5 @@ def dhash_near_duplicates(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select("doc_a", "doc_b", ham.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= _DHASH_BANDS - 1)
     )

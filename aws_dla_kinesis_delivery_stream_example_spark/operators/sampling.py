@@ -31,13 +31,15 @@ def hash_uniform(id_col) -> Column:
     return (TX.hash60(c.cast("string")) + 1).cast("double") / F.lit(_HASH60_SPAN)
 
 
+_N_SALT = 16  # weighted_sample's salted sub-partitions per stratum
+
+
 def weighted_sample(
     df: DataFrame,
     strata_col: str,
     id_col: str,
     weight_col,
     k: int,
-    n_salt: int = 16,
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement, k rows per stratum
     (Efraimidis-Spirakis 2006): draw u ~ uniform(0,1] per row, rank by
@@ -49,14 +51,14 @@ def weighted_sample(
     Returns (strata_col, rnk, id_col, w) with rnk in 1..k.
 
     Scale shape: TWO-STAGE top-k — stage 1 ranks inside
-    (stratum, id % n_salt) salted sub-partitions and keeps k each,
-    stage 2 re-ranks the <= k*n_salt survivors per stratum. Exact by
+    (stratum, id % _N_SALT) salted sub-partitions and keeps k each,
+    stage 2 re-ranks the <= k*_N_SALT survivors per stratum. Exact by
     the union bound (every true top-k row survives its salt cut), and
-    no window partition ever sorts more than ~1/n_salt of a stratum —
+    no window partition ever sorts more than ~1/_N_SALT of a stratum —
     a single-stage per-stratum window would sort a whole stratum's
     rows on one partition at 100 TB.
 
-    Contract: ``id_col`` must be NUMERIC — the salt is ``id % n_salt``
+    Contract: ``id_col`` must be NUMERIC — the salt is ``id % _N_SALT``
     and under non-ANSI Spark a string id makes the modulo NULL,
     silently collapsing every row into one salt partition (correct
     output, but the two-stage scale shape is defeated). And weights
@@ -72,13 +74,13 @@ def weighted_sample(
     ):
         raise TypeError(
             f"weighted_sample: id_col {id_col!r} must be numeric for the "
-            f"id % n_salt two-stage salt, got {id_type!r} — hash or zip "
+            f"id % {_N_SALT} two-stage salt, got {id_type!r} — hash or zip "
             "string ids to a numeric surrogate first (e.g. xxhash64(id))"
         )
     w_expr = weight_col if isinstance(weight_col, Column) else F.col(weight_col)
     w_expr = w_expr.cast("long")
-    # Fail fast on non-positive weights (mirrors the bands/radius/id
-    # validations elsewhere): raise_error is codegen'd and only fires
+    # Fail fast on non-positive weights (mirrors the id validation
+    # above): raise_error is codegen'd and only fires
     # on the bad row, so the hot path cost is one comparison.
     w_checked = F.when(
         w_expr <= 0,
@@ -95,7 +97,7 @@ def weighted_sample(
         id_col,
         w_expr.alias("w"),
         key.alias("k"),
-        (F.col(id_col) % n_salt).alias("salt"),
+        (F.col(id_col) % _N_SALT).alias("salt"),
     )
     s1 = W.partitionBy(strata_col, "salt").orderBy("k", id_col)
     survivors = (

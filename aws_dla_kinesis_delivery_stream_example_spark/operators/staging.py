@@ -107,9 +107,9 @@ def stage(df: DataFrame) -> DataFrame:
     return df
 
 
-def release_staging(blocking: bool = False) -> int:
-    """Unpersist every staging frame registered BY THIS THREAD;
-    returns how many.
+def release_staging() -> int:
+    """Unpersist (non-blocking) every staging frame registered BY THIS
+    THREAD; returns how many.
 
     If this thread has nothing registered while other threads do, the
     caller probably staged on one thread and released on another — the
@@ -138,7 +138,7 @@ def release_staging(blocking: bool = False) -> int:
             with _GLOBAL_LOCK:
                 _GLOBAL_STAGED -= 1
             try:
-                df.unpersist(blocking)
+                df.unpersist()
             except Exception:
                 # ...but on failure (transient gateway error, stopped
                 # session) push the frame BACK and re-increment before

@@ -10,11 +10,12 @@ self-join ON TOKEN — so only pairs that share a term are ever formed
 100 TB notes
 ------------
 - The one quadratic hazard is hot tokens: a stopword shared by every
-  doc fans out O(df^2) pairs. ``max_df`` is the valve (same contract
-  as shingle_jaccard_pairs): drop postings whose document frequency
-  exceeds it BEFORE the join. For TF-IDF this is principled, not just
-  safe — high-df terms carry near-zero idf weight, so the cosine over
-  the capped vocabulary is the cosine that matters.
+  doc fans out O(df^2) pairs. ``MAX_DF`` is the valve (same contract
+  as shingle_jaccard_pairs' ``max_df``): drop postings whose document
+  frequency exceeds it BEFORE the join. For TF-IDF this is
+  principled, not just safe — high-df terms carry near-zero idf
+  weight, so the cosine over the capped vocabulary is the cosine that
+  matters.
 - Weights are rounded to 6 dp on a shared grid (both engines compute
   ``round(tf * ln((N+1)/(df+1)), 6)``), keeping the DuckDB oracle
   hash-exact despite platform ``ln`` ulp differences.
@@ -38,7 +39,7 @@ from .staging import stage
 # surviving distinct terms before a sum can reach int64 range; weights
 # above the bound (w = tf*idf > 3000, e.g. a pathological doc
 # repeating one rare token ~1e5+ times) fail fast with sizing
-# guidance instead (same valve philosophy as max_df / the GEMM budget
+# guidance instead (same valve philosophy as MAX_DF / the GEMM budget
 # guard in clustering.py).
 _MAX_W_M = 3_000_000
 
@@ -52,7 +53,7 @@ def _checked_milliweight(w_m):
                     "tfidf weight exceeds the integer-cosine bound "
                     f"(|w*1000| > {_MAX_W_M}): a document repeats a rare "
                     "token enough to overflow int64 norm sums. Cap term "
-                    "frequency upstream or drop the token via max_df; "
+                    "frequency upstream or drop the token via the df cap; "
                     "offending w_m="
                 ),
                 w_m.cast("string"),
@@ -61,22 +62,17 @@ def _checked_milliweight(w_m):
     ).otherwise(w_m)
 
 
+# The absolute document-frequency cap on postings (the floor under the
+# relative cap when one is set).
+MAX_DF = 50
 # Absolute ceiling on the RELATIVE (max_df_frac) cap: the join hazard
 # is O(df^2) pairs per token, so any cap that grows linearly with the
-# corpus admits quadratic total work — the failure mode the round-5
-# rehearsal measured at exponent 2.81 / 331 s / 125M pairs for just
-# 50k docs (SCALE_REHEARSAL_r05.json, tfidf frac mode). Clamping the
-# relative term at an absolute bound makes the cap constant once the
-# corpus outgrows ceiling/frac docs: per-token fan-out is then at most
-# C(ceiling, 2) pairs (~0.5M at the default 1000) regardless of N.
-#
-# BEHAVIOR CHANGE vs pre-clamp versions — read before upgrading: the
-# ceiling defaults ON. A max_df+max_df_frac caller whose corpus has
-# frac*N > 1000 now prunes tokens with df in (1000, frac*N] that
-# previously survived. This is deliberate (the unclamped default is
-# the measured-quadratic mode, and safe-by-default wins over
-# drop-in-identical); pass ``max_df_ceiling=None`` to restore the old
-# semantics explicitly — accepting the scaling hazard it reintroduces.
+# corpus admits quadratic total work — measured at exponent 2.81 /
+# 331 s / 125M pairs for just 50k docs (SCALE_REHEARSAL_r05.json,
+# tfidf frac mode). Clamping the relative term at an absolute bound
+# makes the cap constant once the corpus outgrows ceiling/frac docs:
+# per-token fan-out is then at most C(ceiling, 2) pairs (~0.5M at
+# 1000) regardless of N.
 MAX_DF_CEILING = 1_000
 
 
@@ -84,32 +80,19 @@ def tfidf_postings(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    max_df: int | None = None,
     max_df_frac: float | None = None,
-    max_df_ceiling: int | None = MAX_DF_CEILING,
 ) -> DataFrame:
     """(doc, tok, w) postings with smoothed-idf weights on the 6-dp
     grid.
 
-    The hot-token cap is ``greatest(max_df, least(n_docs *
-    max_df_frac, max_df_ceiling))`` — an absolute floor so a tiny
-    corpus keeps its vocabulary, a corpus-relative term so the same
-    query stays meaningful across scale factors, and an absolute
-    CEILING on the relative term so the cap stops growing with the
-    corpus (O(df^2) pairs per token is the operator's one quadratic
-    hazard; an unbounded relative cap reintroduces it — measured at
-    exponent 2.81 in SCALE_REHEARSAL_r05.json). ``max_df_frac``
-    therefore REQUIRES ``max_df``: the quadratic frac-only mode is
-    unreachable through this signature. ``max_df_ceiling=None``
-    removes the clamp (legacy/oracle-parity escape hatch — do not use
-    at scale)."""
-    if max_df_frac is not None and max_df is None:
-        raise ValueError(
-            "max_df_frac requires max_df: a purely relative cap scales "
-            "per-token join fan-out quadratically with the corpus "
-            "(measured exponent 2.81 — see SCALE.md). Pass an absolute "
-            "max_df floor alongside the fraction."
-        )
+    The hot-token cap is ``MAX_DF``, or with ``max_df_frac``
+    ``greatest(MAX_DF, least(n_docs * max_df_frac, MAX_DF_CEILING))``
+    — an absolute floor so a tiny corpus keeps its vocabulary, a
+    corpus-relative term so the same query stays meaningful across
+    scale factors, and an absolute CEILING on the relative term so the
+    cap stops growing with the corpus (O(df^2) pairs per token is the
+    operator's one quadratic hazard; an unbounded relative cap
+    reintroduces it)."""
     toks = (
         docs.select(F.col(id_col).alias("doc"), F.explode(TX.words(text_col)).alias("tok"))
         .groupBy("doc", "tok")
@@ -117,18 +100,15 @@ def tfidf_postings(
     )
     n_docs = docs.agg(F.count("*").cast("double").alias("n_docs"))
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    if max_df is not None:
-        cap = F.lit(float(max_df))
-        if max_df_frac is not None:
-            rel = F.col("n_docs") * float(max_df_frac)
-            if max_df_ceiling is not None:
-                rel = F.least(rel, F.lit(float(max_df_ceiling)))
-            cap = F.greatest(cap, rel)
-        dfreq = (
-            dfreq.crossJoin(F.broadcast(n_docs))
-            .filter(F.col("df").cast("double") <= cap)
-            .select("tok", "df")
-        )
+    cap = F.lit(float(MAX_DF))
+    if max_df_frac is not None:
+        rel = F.least(F.col("n_docs") * float(max_df_frac), F.lit(float(MAX_DF_CEILING)))
+        cap = F.greatest(cap, rel)
+    dfreq = (
+        dfreq.crossJoin(F.broadcast(n_docs))
+        .filter(F.col("df").cast("double") <= cap)
+        .select("tok", "df")
+    )
     return (
         toks.join(dfreq, "tok")
         .crossJoin(F.broadcast(n_docs))
@@ -149,7 +129,6 @@ def tfidf_cosine_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.3,
-    max_df: int | None = None,
     max_df_frac: float | None = None,
 ) -> DataFrame:
     """All doc pairs sharing >= 1 (surviving) term, with TF-IDF cosine
@@ -170,12 +149,12 @@ def tfidf_cosine_pairs(
     join sides); after the terminal action on the returned frame, call
     ``staging.release_staging()`` to drop it (bench/rehearsal do).
 
-    RECALL WARNING — do not use absolute ``max_df`` for recall-
-    critical dedup. The df cap prunes the candidate join's hottest
-    terms, and duplicated *templates* live exactly in those high-df
-    terms: at the sf0.1 rehearsal tier (SCALE_REHEARSAL_r07.json,
-    SCALE.md §TF-IDF), ``max_df=50`` absolute mode found **0 of 256**
-    planted true pairs and relative mode (``max_df_frac``) ~5%, while
+    RECALL WARNING — do not use this operator for recall-critical
+    dedup. The df cap prunes the candidate join's hottest terms, and
+    duplicated *templates* live exactly in those high-df terms: at the
+    sf0.1 rehearsal tier (SCALE_REHEARSAL_r07.json, SCALE.md §TF-IDF),
+    the absolute ``MAX_DF`` mode found **0 of 256** planted true pairs
+    and relative mode (``max_df_frac``) ~5%, while
     :func:`~..operators.dedup.minhash_near_duplicates` found 100% at
     linear candidate growth. TF-IDF cosine is the right operator for
     *content* similarity over distinctive vocabulary (retrieval-ish
@@ -183,13 +162,7 @@ def tfidf_cosine_pairs(
     missing a pair matters, use MinHash — it is this repo's designated
     recall operator."""
     w = stage(
-        tfidf_postings(
-            docs,
-            id_col,
-            text_col,
-            max_df=max_df,
-            max_df_frac=max_df_frac,
-        )
+        tfidf_postings(docs, id_col, text_col, max_df_frac=max_df_frac)
         .withColumn(
             "w_m",
             _checked_milliweight(F.round(F.col("w") * 1000, 0).cast("long")),

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import text as TX
-from ..operators.tfidf import MAX_DF_CEILING, tfidf_cosine_pairs
+from ..operators.tfidf import MAX_DF, MAX_DF_CEILING, tfidf_cosine_pairs
 from ..sources.tables import load_table
 from .catalog import query
 
@@ -229,7 +229,6 @@ def q80_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TFIDF_MAX_DF = 50
 _TFIDF_MAX_DF_FRAC = 0.1
 _TFIDF_THRESHOLD = 0.3
 
@@ -250,7 +249,7 @@ _TFIDF_THRESHOLD = 0.3
         dfreq AS (
             SELECT tok, count(*) AS df FROM toks GROUP BY tok
             HAVING count(*) <= greatest(
-                {_TFIDF_MAX_DF},
+                {MAX_DF},
                 least((SELECT count(*) FROM documents) * {_TFIDF_MAX_DF_FRAC},
                       {MAX_DF_CEILING})
             )
@@ -281,7 +280,7 @@ _TFIDF_THRESHOLD = 0.3
     """,
     description="Sparse TF-IDF cosine near-dup pairs via inverted-index "
     "self-join on token (pairs form only where a term is shared; hot "
-    f"tokens over greatest({_TFIDF_MAX_DF}, least({_TFIDF_MAX_DF_FRAC}"
+    f"tokens over greatest({MAX_DF}, least({_TFIDF_MAX_DF_FRAC}"
     f" * n_docs, {MAX_DF_CEILING})) are pruned before the join "
     "— principled for TF-IDF since high-df terms carry ~zero idf "
     "weight; the ceiling keeps per-token fan-out absolutely bounded)",
@@ -289,7 +288,7 @@ _TFIDF_THRESHOLD = 0.3
 )
 def q81_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: postings staged once; the pair join is ON TOKEN so
-    fan-out is bounded by max_df^2 per term; norms/dots are partial-agg
+    fan-out is bounded by cap^2 per term; norms/dots are partial-agg
     shuffles on doc keys. The sparse complement of q76's dense
     cluster-blocked GEMM."""
     docs = load_table(spark, sf_dir, "documents")
@@ -297,7 +296,6 @@ def q81_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         tfidf_cosine_pairs(
             docs, "doc_id", "text",
             threshold=_TFIDF_THRESHOLD,
-            max_df=_TFIDF_MAX_DF,
             max_df_frac=_TFIDF_MAX_DF_FRAC,
         )
         .orderBy("doc_a", "doc_b")

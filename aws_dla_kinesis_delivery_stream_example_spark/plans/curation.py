@@ -362,9 +362,7 @@ def q69_embedding_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q93_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return curation.duplicated_span_stats(docs, "doc_id", "text", n=20).orderBy(
-        "doc_id"
-    )
+    return curation.duplicated_span_stats(docs, "doc_id", "text").orderBy("doc_id")
 
 
 # Per-source token budget for the pipeline's final stage — small

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import text as TX
 from ..operators import sketch as SK
 from ..operators.dedup import _shingle_hash_rows
 from ..operators.staging import stage
@@ -252,7 +253,7 @@ def _snm_key(pass_id: int = 0):
     window starting at token offset pass_id * _SNM_KEY_N (pass 0 = the
     prefix). Shorter docs yield whatever tokens remain (possibly ''),
     matching DuckDB array_slice semantics exactly."""
-    toks = F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
+    toks = TX.words("text")
     return F.array_join(
         F.slice(toks, 1 + _SNM_KEY_N * pass_id, _SNM_KEY_N), " "
     )
@@ -552,7 +553,7 @@ def q139_snm_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cache (guide §1.2 step 1 — at 100 TB each removed pass is a
     # full corpus text read, and the staged frame is two short key
     # strings per doc, not the text).
-    toks = F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
+    toks = TX.words("text")
     keyed = stage(
         docs.select("doc_id", toks.alias("_tk")).select(
             "doc_id",

@@ -37,6 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import text as TX
+from ..operators.dedup import (
+    CAL_STRATUM_BUCKET,
+    CAL_STRATUM_MOD,
+    minhash_calibration_sampled,
+)
 from ..operators.staging import stage
 from ..sources.tables import load_table
 from .catalog import query
@@ -109,17 +115,14 @@ def _dsir_bucket_rows(df: DataFrame) -> DataFrame:
     mod 256, computed JVM-side (conv stays inside whole-stage codegen;
     no Python crossing). Works identically on a batch frame and on the
     unbounded streaming frame (q141)."""
-    toks = F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
+    toks = TX.words("text")
     return df.select(
         "doc_id", "source", "lang", F.explode(toks).alias("t")
     ).select(
         "doc_id",
         "source",
         "lang",
-        F.expr(
-            "CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)"
-            f" % {_DSIR_BUCKETS}"
-        ).alias("bkt"),
+        (TX.hash60("t") % _DSIR_BUCKETS).alias("bkt"),
     )
 
 
@@ -252,24 +255,17 @@ def q140_dsir_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------- q142
 
-# Sampled-calibration stratum: the q60 multiplicative hash, mod 2,
-# bucket 0 — the largest proper stratum, non-vacuous (n_truth > 0) at
-# every committed SF (pinned by test; mod 4 already empties the truth
-# set at sf0.01's geometry).
-_Q142_MOD = 2
-_Q142_BUCKET = 0
-
 
 @query(
     "q142_sampled_calibration",
     # q114's oracle verbatim, restricted to the stratum in the ONE
     # place the corpus enters (the template's first CTE) — the audited
     # face and the sampled mode cannot drift apart. doc_id reduced mod
-    # P BEFORE the multiply (round-13 advisor: the raw product
-    # overflows int64 past id ~3.47e9; the reduced form is identical).
+    # P BEFORE the multiply (the raw product overflows int64 past id
+    # ~3.47e9; the reduced form is identical).
     oracle=calibration_oracle(
         "WHERE (doc_id % 2147483647) * 2654435761 % 2147483647 % "
-        f"{_Q142_MOD} = {_Q142_BUCKET}"
+        f"{CAL_STRATUM_MOD} = {CAL_STRATUM_BUCKET}"
     ),
     description="q114's MinHash estimator calibration run the way a "
     "100 TB deployment actually runs it — on a deterministic "
@@ -287,17 +283,9 @@ def q142_sampled_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id applied AT THE SCAN, before shingling, signatures, or any
     exchange — everything downstream (the two candidate generators
     and their pair-set-sized audit join, q114's plan) runs on
-    |corpus| / sample_mod rows. Sampling documents keeps the audit
+    |corpus| / CAL_STRATUM_MOD rows. Sampling documents keeps the audit
     unbiased under hash-random strata (within-stratum pairs only —
     the standard LSH calibration protocol, the tradeoff
-    minhash_calibration_sampled documents). At 100 TB sample_mod is
-    the knob: 1000 for a 0.1% pilot; the catalog pins mod 2 so the
-    oracle's truth set stays non-vacuous at bench SFs."""
-    from ..operators.dedup import minhash_calibration_sampled
-
+    minhash_calibration_sampled documents)."""
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_calibration_sampled(
-        docs,
-        sample_mod=_Q142_MOD,
-        sample_bucket=_Q142_BUCKET,
-    )
+    return minhash_calibration_sampled(docs)

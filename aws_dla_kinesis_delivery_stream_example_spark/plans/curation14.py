@@ -137,6 +137,6 @@ def q146_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned (tests/test_plan_shapes.py::test_round14_exchange_budgets)."""
     docs = load_table(spark, sf_dir, "documents")
     sigs = MM.dhash_bands(MM.synthesize_gray_bmp(docs))
-    return MM.dhash_near_duplicates(sigs, max_hamming=3).orderBy(
+    return MM.dhash_near_duplicates(sigs).orderBy(
         "doc_a", "doc_b"
     )

@@ -41,8 +41,8 @@ identical in both engines:
 - the content line itself stays unique per doc and survives.
 
 The library pieces take ANY (doc_id, source, text) frame with real
-newlines — ``line_dedup_rewrite`` (per-doc rewrite frame, df_max
-parameterized), ``line_dedup_report`` (the per-source audit),
+newlines — ``line_dedup_rewrite`` (per-doc rewrite frame),
+``line_dedup_report`` (the per-source audit),
 ``line_counters``/``line_finalize`` (the streamable counter face) —
 so real crawl text drops in unchanged.
 
@@ -171,18 +171,15 @@ def line_counters(df: DataFrame) -> DataFrame:
     )
 
 
-def line_finalize(
-    counters: DataFrame, df_max: int = LINE_DF_MAX
-) -> DataFrame:
+def line_finalize(counters: DataFrame) -> DataFrame:
     """The per-source removal audit from the counter table ALONE
     (batch-built or drained from streaming state): global df/first
     per line, the keep rule, and the per-source rollup all derive
     from the (lhash, doc_id) counters, so the state fully determines
     the report — every column of q155 EXCEPT ``rewrite_xor``, which
     needs line text the counter state deliberately does not hold
-    (the honest twin boundary, documented on q156).  ``df_max``
-    mirrors the batch faces' parameter so a library caller gets a
-    counter audit consistent with their rewrite.  One documented
+    (the honest twin boundary, documented on q156).  The keep rule
+    is the batch faces' ``LINE_DF_MAX`` threshold.  One documented
     divergence from line_dedup_report: a document with ZERO non-empty
     lines leaves no counter row, so it is invisible to this face's
     n_docs (the batch face counts it off the scan) — impossible on
@@ -206,7 +203,7 @@ def line_finalize(
         F.col("lhash") == F.col("f_lhash"),
     )
     kept = (
-        F.when(F.col("df_docs") > df_max, F.lit(0))
+        F.when(F.col("df_docs") > LINE_DF_MAX, F.lit(0))
         .when(F.col("doc_id") == F.col("f_doc"), F.lit(1))
         .otherwise(F.lit(0))
         .cast("long")
@@ -229,9 +226,7 @@ def line_finalize(
     return _report_projection(agg, with_xor=False)
 
 
-def line_dedup_rewrite(
-    df: DataFrame, df_max: int = LINE_DF_MAX
-) -> DataFrame:
+def line_dedup_rewrite(df: DataFrame) -> DataFrame:
     """Per-document line dedup WITH rewrite over any (doc_id, source,
     text) frame: (doc_id, source, n_lines, n_kept, n_tokens,
     kept_tokens, kept_hash) — kept_hash is the 60-bit hash of the
@@ -240,7 +235,7 @@ def line_dedup_rewrite(
     text: at 100 TB the rewritten corpus lands in a sink and the
     audit row stays narrow (the q103 convention).
 
-    HASH-WIDTH caveat (round-16 advisor): line identity is the 60-bit
+    HASH-WIDTH caveat: line identity is the 60-bit
     md5-prefix hash (the q37 convention).  In the AUDIT faces a
     collision only perturbs a count, but here a collision DELETES a
     non-duplicate line from every document — destructive — and
@@ -285,7 +280,7 @@ def line_dedup_rewrite(
         ),
         F.col("lhash") == F.col("f_lhash"),
     ).where(
-        (F.col("df_docs") <= df_max)
+        (F.col("df_docs") <= LINE_DF_MAX)
         & (F.col("doc_id") == F.col("f_doc"))
         & (F.col("line_idx") == F.col("f_idx"))
     )
@@ -322,12 +317,12 @@ def line_dedup_rewrite(
     )
 
 
-def line_dedup_report(df: DataFrame, df_max: int = LINE_DF_MAX) -> DataFrame:
+def line_dedup_report(df: DataFrame) -> DataFrame:
     """The per-source audit over any (doc_id, source, text) frame:
     line_finalize's counter columns PLUS ``rewrite_xor`` — the
     bit_xor fold of the per-doc rewritten-text hashes (one mergeable
     BIGINT per source; any reassembly drift anywhere flips it)."""
-    d = line_dedup_rewrite(df, df_max)
+    d = line_dedup_rewrite(df)
     agg = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_lines").cast("long").alias("n_lines"),

@@ -19,7 +19,6 @@ from ..operators import clustering
 from ..sources.tables import load_table
 from .catalog import query
 
-_K = 8  # k-means clusters (seeds = embeddings of the 8 smallest vec_ids)
 _VOCAB = 16  # OOV vocabulary size (top-16 words by frequency)
 
 
@@ -30,7 +29,7 @@ _VOCAB = 16  # OOV vocabulary size (top-16 words by frequency)
             SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster,
                    embedding AS cemb
             FROM (SELECT vec_id, embedding FROM embeddings
-                  ORDER BY vec_id LIMIT {_K})
+                  ORDER BY vec_id LIMIT {clustering.KMEANS_K})
         ),
         u AS (
             SELECT vec_id, i AS pos, CAST(embedding[i] AS DOUBLE) AS val
@@ -67,7 +66,7 @@ _VOCAB = 16  # OOV vocabulary size (top-16 words by frequency)
 )
 def q71_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = clustering.kmeans_assign(emb, k=_K)
+    assigned = clustering.kmeans_assign(emb)
     return clustering.cluster_profile(assigned)
 
 
@@ -229,7 +228,7 @@ _KMEANS_CTES = f"""
             SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster,
                    embedding AS cemb
             FROM (SELECT vec_id, embedding FROM embeddings
-                  ORDER BY vec_id LIMIT {_K})
+                  ORDER BY vec_id LIMIT {clustering.KMEANS_K})
         ),
         u AS (
             SELECT vec_id, i AS pos, CAST(embedding[i] AS DOUBLE) AS val
@@ -312,13 +311,13 @@ def q75_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")
-    seeds = clustering.kmeans_seeds(emb, "vec_id", "embedding", _K)
+    seeds = clustering.kmeans_seeds(emb, "vec_id", "embedding", clustering.KMEANS_K)
     newc = clustering.updated_centroids(emb, seeds)
     assigned2 = clustering.assign_with_centroids(emb, newc)
     prof = clustering.cluster_profile(assigned2).drop("max_d2")
     drift_rows = [
         (c, _round_half_up(float(np.sqrt(((newc[c] - seeds[c]) ** 2).sum())), 4))
-        for c in range(_K)
+        for c in range(clustering.KMEANS_K)
     ]
     ddf = spark.createDataFrame(drift_rows, "cluster int, drift double")
     return (
@@ -364,7 +363,7 @@ def q75_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q76_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = clustering.semantic_near_duplicates(emb, k=_K, threshold=0.4)
+    pairs = clustering.semantic_near_duplicates(emb, threshold=0.4)
     return (
         pairs.groupBy("cluster")
         .agg(

@@ -24,22 +24,15 @@ next step that stays dialect-safe:
 - per-doc score and head/middle/tail buckets: q157's milli lattice,
   q157's cross-multiplied thresholds, against the BIGRAM model's own
   mean surprisal ``g2 = 1000 * sum(cnt2 * s2) div n_positions`` over
-  the retained pair table — fixed at training time, which again is
+  the pair table — fixed at training time, which again is
   what lets the streaming twin label at ingest.
 
 Pair-vocabulary bound (the round-16 verdict's documentation demand):
 bigram types grow faster than unigram types but remain Zipf-governed
 — empirically ~10-40x the unigram vocabulary for natural language
 (Heaps-law exponent < 1 on pairs too), i.e. ~1e6-4e7 rows per language
-at ANY corpus size: still a broadcast-sized dim at 100 TB, but the
-``min_pair_count`` knob on :func:`bigram_model` caps it hard when a
-deployment needs to (KenLM's pruning flag): pairs below the floor are
-dropped from the PAIR table only — context and unigram counts keep
-their full-mass values (true denominators), pruned pairs take the
-backoff path, and ``g2`` becomes the retained-pair mean (a modeling
-constant of the PRUNED model, exactly like KenLM's pruned perplexity).
-The catalog face uses floor 1, where every derived quantity coincides
-with the unpruned model and the oracle below.
+at ANY corpus size: still a broadcast-sized dim at 100 TB, so the
+model keeps every pair (no KenLM-style pruning).
 
 Bench plant: q157's strata reused verbatim (``_ppl_augment`` — the
 ``hd``-run head stratum and the ``zq`` near-OOV tail stratum).  Under
@@ -116,69 +109,54 @@ def bigram_pairs(docs: DataFrame) -> DataFrame:
 
 
 def bigram_model(
-    ref_docs: DataFrame, min_pair_count: int = 1
+    ref_docs: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
     """Train the bigram-backoff surprisal model on any (doc_id,
     source, text) reference frame: returns ``(pairs, ctx, vocab,
     n_ref, g2)`` where the three frames stay DISTRIBUTED —
 
-    - ``pairs``: (prev, tok, cnt2), the retained pair table (pruned to
-      ``cnt2 >= min_pair_count``; floor 1 = unpruned);
-    - ``ctx``: (prev, ctxn), FULL-mass context counts (the probability
-      denominators — pruning never shrinks them);
-    - ``vocab``: (tok, cnt), FULL-mass unigram counts for the backoff
-      (derived from the pair frame: every occurrence is exactly one
-      pair's ``tok``);
+    - ``pairs``: (prev, tok, cnt2), the pair table;
+    - ``ctx``: (prev, ctxn), context counts (the probability
+      denominators);
+    - ``vocab``: (tok, cnt), unigram counts for the backoff (derived
+      from the pair frame: every occurrence is exactly one pair's
+      ``tok``);
 
     and the scalars ride as python ints from a bounded 1-row collect
     (the q75/q157 convention — the trained LM's constants, fixed
     before the corpus pass): ``n_ref`` = total reference positions
-    (unpruned — the unigram backoff's N) and ``g2`` = the model's mean
-    surprisal over its RETAINED pairs (milli).
+    (the unigram backoff's N) and ``g2`` = the model's mean surprisal
+    over its pairs (milli).
 
     Scale shape: the pair agg map-side combines per (prev, tok) before
     its one exchange; ctx/vocab re-aggregate the Zipf-bounded pair
     frame (module docstring: ~1e6-4e7 rows per language at any corpus
-    size, hard-capped by ``min_pair_count``); the scalar agg joins the
+    size); the scalar agg joins the
     pair frame to ctx UNHINTED (both Zipf-bounded — AQE broadcasts)
     and folds ONE row.  ``cnt2 * bitlen <= 64 * N`` keeps every
     product int64-safe to ~1e17 reference tokens
     (reduce-before-multiply is structural: bitlen collapses the
     magnitudes before the product)."""
-    if min_pair_count < 1:
-        raise ValueError("bigram_model: min_pair_count must be >= 1")
-    raw = stage(
+    pairs = stage(
         bigram_pairs(ref_docs).groupBy("prev", "tok").agg(
             F.count(F.lit(1)).cast("long").alias("cnt2")
         )
     )
     ctx = stage(
-        raw.groupBy("prev").agg(F.sum("cnt2").cast("long").alias("ctxn"))
+        pairs.groupBy("prev").agg(F.sum("cnt2").cast("long").alias("ctxn"))
     )
     vocab = stage(
-        raw.groupBy("tok").agg(F.sum("cnt2").cast("long").alias("cnt"))
+        pairs.groupBy("tok").agg(F.sum("cnt2").cast("long").alias("cnt"))
     )
-    keep = F.col("cnt2") >= min_pair_count
-    pairs = raw if min_pair_count == 1 else stage(raw.filter(keep))
-    # ONE agg job for all three scalars (the q157 one-agg discipline):
-    # n_ref over the full mass, n_pos/sbits over the retained pairs.
-    row = raw.join(ctx, "prev").agg(
+    # ONE agg job for both scalars (the q157 one-agg discipline)
+    row = pairs.join(ctx, "prev").agg(
         F.sum("cnt2").cast("long").alias("n_ref"),
-        F.sum(F.when(keep, F.col("cnt2"))).cast("long").alias("n_pos"),
-        F.sum(
-            F.when(keep, F.col("cnt2") * (_bitlen("ctxn") - _bitlen("cnt2")))
-        ).cast("long").alias("sbits"),
+        F.sum(F.col("cnt2") * (_bitlen("ctxn") - _bitlen("cnt2"))).cast("long").alias("sbits"),
     ).collect()[0]
     n_ref = int(row["n_ref"] or 0)
-    n_pos = int(row["n_pos"] or 0)
     if n_ref <= 0:
         raise ValueError("bigram_model: empty reference corpus")
-    if n_pos <= 0:
-        raise ValueError(
-            "bigram_model: min_pair_count prunes every pair — "
-            "lower the floor or grow the reference"
-        )
-    g2 = 1000 * int(row["sbits"]) // n_pos
+    g2 = 1000 * int(row["sbits"]) // n_ref
     return pairs, ctx, vocab, n_ref, g2
 
 
@@ -199,7 +177,7 @@ def bigram_counters(
     Zipf-bounded build sides, so AQE broadcasts them at any scale.
     Round 18: the context table is folded INTO the pair dim before
     the corpus pass — ``ctxn`` is only read when the pair MATCHED,
-    and every retained pair's ``prev`` is in ``ctx`` by construction
+    and every pair's ``prev`` is in ``ctx`` by construction
     (ctx aggregates the pair frame), so ``pairs ⋈ ctx`` is an
     equivalent single dim and the corpus-sized side crosses TWO
     stream-static joins instead of three (the third join moved to
@@ -231,20 +209,18 @@ def bigram_counters(
     )
 
 
-def bigram_bucket_report(
-    docs: DataFrame, ref_docs: DataFrame, min_pair_count: int = 1
-) -> DataFrame:
+def bigram_bucket_report(docs: DataFrame, ref_docs: DataFrame) -> DataFrame:
     """End-to-end library mode: train the bigram-backoff model on
-    ``ref_docs`` (optionally pruned), score and bucket ``docs``,
+    ``ref_docs``, score and bucket ``docs``,
     report per (source, bucket).  Any two frames; the catalog face
     passes the planted corpus and its src0 stratum.  PROVENANCE: like
     q157/q158, production hands this an INDEPENDENTLY trained
     reference (CCNet trains on Wikipedia, not the live crawl)."""
-    pairs, ctx, vocab, n_ref, g2 = bigram_model(ref_docs, min_pair_count)
+    pairs, ctx, vocab, n_ref, g2 = bigram_model(ref_docs)
     return ppl_finalize(bigram_counters(docs, pairs, ctx, vocab, n_ref), g2)
 
 
-# --- DuckDB oracle for the floor-1 catalog face, generated from the
+# --- DuckDB oracle for the catalog face, generated from the
 # SAME constants as q157's.  Shared VERBATIM by q159 and q160 (the
 # drained per-doc state plus the model constants determine every
 # output column — identical-output twins, the q157/q158 discipline).
@@ -349,11 +325,10 @@ BIGRAM_ORACLE = f"""
     "position scores, seen-pair surprisal bitlen(ctx(prev)) - "
     "bitlen(cnt2), unseen pairs back off to q157's unigram surprisal "
     "plus a fixed +1 penalty (OOV strictly maximal), per-doc milli "
-    "mean vs the MODEL's own retained-pair mean g2 with q157's "
+    "mean vs the MODEL's own pair mean g2 with q157's "
     "cross-multiplied head/tail thresholds — all fixed at training "
     "time; context/unigram/pair tables all derive from ONE reference "
-    "tokenize pass; min_pair_count prunes the pair table KenLM-style "
-    "in library mode (floor 1 here); q157's planted strata reused "
+    "tokenize pass; q157's planted strata reused "
     "(the (hd,hd) run is the corpus's top bigram, non-reference zq "
     "pairs are unseen-pair OOV — the model's maximum)",
     tags=("llm", "curation", "quality", "text"),
@@ -362,8 +337,8 @@ def q159_bigram_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: (1) ONE reference tokenize pass trains pair,
     context, and backoff-unigram tables — the pair agg map-side
     combines per (prev, tok) before its one exchange, ctx/vocab
-    re-aggregate the Zipf-bounded pair frame (module docstring bound;
-    min_pair_count hard-caps it); (2) the corpus pass is pair
+    re-aggregate the Zipf-bounded pair frame (module docstring bound);
+    (2) the corpus pass is pair
     construction (narrow) + TWO left joins against Zipf-bounded
     model frames (the context counts ride pre-joined on the pair dim
     since round 18), UNHINTED — AQE broadcasts every build side at

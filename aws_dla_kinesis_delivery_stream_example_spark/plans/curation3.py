@@ -71,9 +71,9 @@ def q96_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench_pred = F.col("doc_id") % _BENCH_MOD == 0
     bench, cand = docs.filter(bench_pred), docs.filter(~bench_pred)
-    return curation.contamination_overlap(
-        cand, bench, "doc_id", "text", n=4
-    ).orderBy("doc_id")
+    return curation.contamination_overlap(cand, bench, "doc_id", "text").orderBy(
+        "doc_id"
+    )
 
 
 @query(
@@ -352,17 +352,14 @@ def q99_similar_doc_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q100_embedding_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold 0.42 is the same gate-tier calibration as q36: the
     synthetic embeddings (500 random vectors) top out at within-bucket
-    cosine ~0.51, so the production 0.95 default would verify an empty
-    set; 0.42 yields 9/4/57 pairs at sf0.001/0.01/0.1 through the
-    identical plan. `embedding_cross_duplicates` keeps 0.95 as its
-    default for real corpora."""
+    cosine ~0.51, so a production-style 0.95 gate would verify an
+    empty set; 0.42 yields 9/4/57 pairs at sf0.001/0.01/0.1 through the
+    identical plan. The operator's pre-filter gate sits just below it
+    (similarity._CROSS_DUP_COS)."""
     emb = load_table(spark, sf_dir, "embeddings")
     new = emb.filter(F.col("vec_id") % 2 == 1)
     corpus = emb.filter(F.col("vec_id") % 2 == 0)
-    # pre-filter margin 0.4195 < round-boundary 0.41995 (q36 pattern)
-    pairs = similarity.embedding_cross_duplicates(
-        new, corpus, threshold=0.4195
-    )
+    pairs = similarity.embedding_cross_duplicates(new, corpus)
     return (
         pairs.select("vec_new", "vec_corpus", F.round("cos_sim", 4).alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.42)

@@ -23,12 +23,6 @@ from ..operators import anomaly, curation, dedup, graph, sampling
 from ..sources.tables import load_table
 from .catalog import query
 
-# q103 chunker geometry: non-overlapping 16-token chunks (stride ==
-# chunk, unlike q98's 25%-overlap RAG chunks) — the C4/RefinedWeb
-# dedup granularity, small enough that the ~54-token synthetic docs
-# produce 3-4 chunks each so removal is non-vacuous at every test SF.
-_DD_CHUNK = 16
-
 
 @query(
     "q103_chunk_dedup_rewrite",
@@ -39,9 +33,9 @@ _DD_CHUNK = 16
         ),
         ch AS (
             SELECT doc_id,
-                   CAST((i - 1) // {_DD_CHUNK} + 1 AS BIGINT) AS chunk_idx,
-                   array_to_string(array_slice(tk, i, i + {_DD_CHUNK} - 1), ' ') AS ctext
-            FROM toks, UNNEST(generate_series(1, coalesce(len(tk), 0), {_DD_CHUNK})) AS t(i)
+                   CAST((i - 1) // {curation.DEDUP_CHUNK_TOKENS} + 1 AS BIGINT) AS chunk_idx,
+                   array_to_string(array_slice(tk, i, i + {curation.DEDUP_CHUNK_TOKENS} - 1), ' ') AS ctext
+            FROM toks, UNNEST(generate_series(1, coalesce(len(tk), 0), {curation.DEDUP_CHUNK_TOKENS})) AS t(i)
         ),
         -- first occurrence = min (doc_id, chunk_idx) per chunk content;
         -- the oracle ranks with a window, the operator uses a min-struct
@@ -61,11 +55,11 @@ _DD_CHUNK = 16
             FROM kept GROUP BY doc_id
         )
         SELECT d.doc_id,
-               CAST((coalesce(len(t.tk), 0) + {_DD_CHUNK} - 1) // {_DD_CHUNK} AS BIGINT) AS n_chunks,
+               CAST((coalesce(len(t.tk), 0) + {curation.DEDUP_CHUNK_TOKENS} - 1) // {curation.DEDUP_CHUNK_TOKENS} AS BIGINT) AS n_chunks,
                coalesce(a.n_kept, 0) AS n_kept,
-               round(CAST((coalesce(len(t.tk), 0) + {_DD_CHUNK} - 1) // {_DD_CHUNK}
+               round(CAST((coalesce(len(t.tk), 0) + {curation.DEDUP_CHUNK_TOKENS} - 1) // {curation.DEDUP_CHUNK_TOKENS}
                           - coalesce(a.n_kept, 0) AS DOUBLE)
-                     / nullif((coalesce(len(t.tk), 0) + {_DD_CHUNK} - 1) // {_DD_CHUNK}, 0),
+                     / nullif((coalesce(len(t.tk), 0) + {curation.DEDUP_CHUNK_TOKENS} - 1) // {curation.DEDUP_CHUNK_TOKENS}, 0),
                      4) AS removed_frac,
                coalesce(a.kept_hash,
                         CAST('0x' || substring(md5(''), 1, 15) AS BIGINT)) AS kept_hash
@@ -75,7 +69,7 @@ _DD_CHUNK = 16
         ORDER BY d.doc_id
     """,
     description=f"C4/RefinedWeb-style duplicate-chunk REMOVAL with "
-    f"document rewrite: non-overlapping {_DD_CHUNK}-token chunks, keep "
+    f"document rewrite: non-overlapping {curation.DEDUP_CHUNK_TOKENS}-token chunks, keep "
     "only each chunk content's global first occurrence (min doc_id, "
     "chunk_idx), reassemble the surviving text per doc — the "
     "remediation counterpart of q93's span *detection*",
@@ -99,9 +93,7 @@ def q103_chunk_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round8b_ops.py).
     """
     docs = load_table(spark, sf_dir, "documents")
-    return curation.chunk_dedup_rewrite(
-        docs, "doc_id", "text", chunk_tokens=_DD_CHUNK
-    ).orderBy("doc_id")
+    return curation.chunk_dedup_rewrite(docs, "doc_id", "text").orderBy("doc_id")
 
 
 @query(
@@ -158,7 +150,6 @@ def q104_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.greatest(F.col("n_chars"), F.lit(1)),
         k=5,
-        n_salt=16,
     ).orderBy("source", "rnk")
 
 
@@ -287,7 +278,7 @@ def q106_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round8b_ops.py).
     """
     docs = load_table(spark, sf_dir, "documents")
-    return curation.source_overlap(docs, "source", "text", n=5).orderBy(
+    return curation.source_overlap(docs, "source", "text").orderBy(
         "src_a", "src_b"
     )
 
@@ -297,7 +288,7 @@ def q106_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lattice — float PageRank sums contributions in engine-specific order
 # and drifts off-grid within one iteration. Constants are the
 # operator's own so oracle and plan cannot drift.
-_PR_ITERS = 3
+_PR_ITERS = graph.PR_ITERS
 _PR_INIT = graph.PR_INIT
 _PR_TELEPORT = graph.PR_TELEPORT
 
@@ -373,7 +364,7 @@ def q107_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration: one shuffle join (edges x rank projection on src) + one
     hash agg by dst that rebuilds the rank frame directly — on the
     symmetric edge list count(*) of received contributions IS the
-    degree, so no node-sized rebuild join (round-17 fusion, see
+    degree, so no node-sized rebuild join (see
     operators/graph.py::pagerank_fixed_point). Ranks live in BIGINT
     micro-units with truncating integer division, so contribution sums
     are order-independent — the property that lets AQE re-plan each
@@ -388,5 +379,5 @@ def q107_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     test in tests/test_round8b_ops.py).
     """
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shared_shingle_pairs(docs, "doc_id", "text", max_df=10)
-    return graph.pagerank_fixed_point(pairs, iters=_PR_ITERS).orderBy("doc")
+    pairs = dedup.shared_shingle_pairs(docs, "doc_id", "text")
+    return graph.pagerank_fixed_point(pairs).orderBy("doc")

@@ -142,15 +142,11 @@ def q110_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("probe_id", "rnk")
 
 
-# q111 frame geometry: 256-sample frames; silence below 100 avg sq.
-_Q111_FRAME = 256
-
-
 @query(
     "q111_audio_frame_energy",
     oracle=f"""
         WITH samples AS (
-            SELECT doc_id, i // {_Q111_FRAME} AS frame,
+            SELECT doc_id, i // {multimodal.AUDIO_FRAME} AS frame,
                    (doc_id * 31 + i * 7) % 201 - 100 AS v
             FROM documents, UNNEST(generate_series(0, n_chars - 1)) AS t(i)
             WHERE n_chars > 0
@@ -196,7 +192,7 @@ def q111_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     means any byte-level encode/decode drift fails the hash gate."""
     docs = load_table(spark, sf_dir, "documents")
     audio = multimodal.synthesize_audio(docs)
-    return multimodal.audio_frame_energy(audio, frame_samples=_Q111_FRAME).orderBy("media_id")
+    return multimodal.audio_frame_energy(audio).orderBy("media_id")
 
 
 @query(
@@ -250,7 +246,7 @@ def q112_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch at test scale; its global sort is a TakeOrdered(20), never
     a full sort."""
     docs = load_table(spark, sf_dir, "documents")
-    return sketch.countmin_heavy_hitters(docs, k=20)
+    return sketch.countmin_heavy_hitters(docs)
 
 
 def calibration_oracle(doc_where: str = "") -> str:

@@ -23,18 +23,16 @@ from ..operators import curation, sharding, skew
 from ..sources.tables import load_table
 from .catalog import query
 
-# q115 geometry: 8 shards, seed 17 (any seed works; pinned for the oracle).
 _Q115_SHARDS = 8
-_Q115_SEED = 17
 
 
 @query(
     "q115_shard_shuffle",
     oracle=f"""
         WITH assigned AS (
-            SELECT CAST('0x' || substring(md5('shard:{_Q115_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+            SELECT CAST('0x' || substring(md5('shard:{sharding.SHARD_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
                        % {_Q115_SHARDS} AS shard,
-                   CAST('0x' || substring(md5('order:{_Q115_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+                   CAST('0x' || substring(md5('order:{sharding.SHARD_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
                        AS order_key,
                    n_chars
             FROM documents
@@ -65,9 +63,7 @@ def q115_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards adds exactly one repartition("shard") — the output layout
     itself. XOR checksum is commutative, hence partitioning-invariant."""
     docs = load_table(spark, sf_dir, "documents")
-    return sharding.shard_manifest(
-        docs, "doc_id", _Q115_SHARDS, _Q115_SEED, chars_col="n_chars"
-    ).orderBy("shard")
+    return sharding.shard_manifest(docs, "doc_id", _Q115_SHARDS).orderBy("shard")
 
 
 @query(
@@ -126,9 +122,7 @@ def q116_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = docs.filter(did % 10 != 0).select(
         "doc_id", "source", "n_chars", TX.hash60(revised).alias("fp")
     )
-    diff = curation.snapshot_diff(
-        old, new, "doc_id", "fp", keep_cols=("source", "n_chars")
-    )
+    diff = curation.snapshot_diff(old, new, "doc_id", "fp")
     return (
         diff.groupBy("source", "status")
         .agg(
@@ -207,9 +201,6 @@ def q117_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source", "lang")
 
 
-# q118 geometry: 32 simulated reducers over the events.user_id key.
-_Q118_BUCKETS = 32
-
 # Shared verbatim by q118 and its streaming twin q145 (the PII_ORACLE /
 # HIST_ORACLE convention): the stream's per-key counter state must roll
 # up to the identical report row-for-row.
@@ -220,7 +211,7 @@ SKEW_ORACLE = f"""
         ),
         bucketed AS (
             SELECT CAST('0x' || substring(md5(CAST(k AS VARCHAR)), 1, 15) AS BIGINT)
-                       % {_Q118_BUCKETS} AS bucket,
+                       % {skew.SKEW_BUCKETS} AS bucket,
                    k, cnt
             FROM per_key
         )
@@ -256,4 +247,4 @@ def q118_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sees identical membership; the per-key concentration pattern is
     hash-agnostic."""
     events = load_table(spark, sf_dir, "events")
-    return skew.key_skew_audit(events, "user_id", _Q118_BUCKETS).orderBy("bucket")
+    return skew.key_skew_audit(events, "user_id").orderBy("bucket")

@@ -22,11 +22,6 @@ from ..sources.tables import load_table
 from .catalog import query
 from .curation import _BENCH_MOD
 
-# q119 geometry: word-4-gram blocking (the q64 convention), normalized
-# edit distance <= 0.3 flags contamination.
-_Q119_N = 4
-_Q119_MAX_MILLI = 300
-
 # q120 grid: candidate min-BPE-token thresholds, ascending — gate-tier
 # calibrated to the fixture token distribution (p10/p25/p50/p75/p90 of
 # doc BPE tokens ~ 21/32/56/76/88) so every grid row carries signal;
@@ -48,9 +43,9 @@ _Q120_THRESHOLDS = (0, 20, 35, 55, 75, 90)
         -- (the q99 convention)
         sh AS (
             SELECT DISTINCT doc_id,
-                   array_to_string(array_slice(tk, i, i + {_Q119_N - 1}), ' ') AS shingle
+                   array_to_string(array_slice(tk, i, i + {curation.CONTAM_N - 1}), ' ') AS shingle
             FROM toks,
-                 UNNEST(generate_series(1, greatest(len(tk) - {_Q119_N - 1}, 0))) AS t(i)
+                 UNNEST(generate_series(1, greatest(len(tk) - {curation.CONTAM_N - 1}, 0))) AS t(i)
         ),
         pairs AS (
             SELECT DISTINCT c.doc_id AS cid, b.doc_id AS bid
@@ -68,10 +63,10 @@ _Q120_THRESHOLDS = (0, 20, 35, 55, 75, 90)
         agg AS (
             SELECT cid,
                    CAST(count(*) AS BIGINT) AS n_blocked,
-                   CAST(count(*) FILTER (WHERE 1000 * lev <= {_Q119_MAX_MILLI} * mlen)
+                   CAST(count(*) FILTER (WHERE 1000 * lev <= {curation.FUZZY_MAX_DIST_MILLI} * mlen)
                         AS BIGINT) AS n_fuzzy,
                    (min(struct_pack(l := 1000 * lev // mlen, b := bid))
-                        FILTER (WHERE 1000 * lev <= {_Q119_MAX_MILLI} * mlen)) AS best
+                        FILTER (WHERE 1000 * lev <= {curation.FUZZY_MAX_DIST_MILLI} * mlen)) AS best
             FROM scored GROUP BY cid
         )
         SELECT cid AS doc_id, n_blocked, n_fuzzy,
@@ -99,9 +94,7 @@ def q119_fuzzy_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench_pred = F.col("doc_id") % _BENCH_MOD == 0
     bench, cand = docs.filter(bench_pred), docs.filter(~bench_pred)
     return (
-        curation.fuzzy_contamination(
-            cand, bench, "doc_id", "text", n=_Q119_N, max_dist_milli=_Q119_MAX_MILLI
-        )
+        curation.fuzzy_contamination(cand, bench, "doc_id", "text")
         .withColumn("best_bench", F.col("best_bench").cast("long"))
         .orderBy("doc_id")
     )

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import text as TX
 from ..operators import sharding
 from ..operators.staging import stage
 from ..sources.tables import load_table
@@ -139,24 +140,13 @@ def q123_embedding_space_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "audit"),
 )
 def q124_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: classifier is scan-side codegen (the q32
-    expression, plans/llm.py:376); one (lang, guess) hash agg to at
+    """Scale shape: classifier is scan-side codegen (q32's
+    functions.text.stopword_lang); one (lang, guess) hash agg to at
     most |langs|^2 cells, row totals regrouped from the cell frame
     (never a second corpus pass), broadcast join of two tiny frames."""
     docs = load_table(spark, sf_dir, "documents")
-
-    def hits(pat: str):
-        return F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(pat), 0))
-
-    guess = (
-        F.when(hits(r"\b(the|and|of|to|is)\b") >= 2, "en")
-        .when(hits(r"\b(der|die|das|und|ist)\b") >= 2, "de")
-        .when(hits(r"\b(el|la|los|es|de)\b") >= 2, "es")
-        .when(hits(r"\b(le|les|est|et|une)\b") >= 2, "fr")
-        .otherwise("other")
-    )
     cells = stage(
-        docs.select("lang", guess.alias("lang_guess"))
+        docs.select("lang", TX.stopword_lang("text").alias("lang_guess"))
         .groupBy("lang", "lang_guess")
         .agg(F.count(F.lit(1)).alias("n"))
     )  # staged: totals regroup this tiny frame, not the corpus scan
@@ -216,7 +206,7 @@ def q125_shard_mixture_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtracts two already-floored shares, so both engines stay on one
     lattice."""
     docs = load_table(spark, sf_dir, "documents")
-    assigned = sharding.assign_shards(docs, "doc_id", 8, seed=17)
+    assigned = sharding.assign_shards(docs, "doc_id", 8)
     cells = stage(
         assigned.groupBy("shard", "source").agg(F.count(F.lit(1)).alias("n"))
     )  # staged: three totals regroup this |shards| x |sources| frame

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-from ..functions.vectors import cosine, norm2, sign_bucket
+from ..functions.vectors import norm2
 from ..operators import dedup, similarity
 from ..sources.tables import load_table
 from .catalog import query
@@ -261,7 +261,7 @@ def q27_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q28_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        dedup.simhash_near_duplicates(docs, "doc_id", "text", max_hamming=3)
+        dedup.simhash_near_duplicates(docs, "doc_id", "text")
         .orderBy("doc_a", "doc_b")
     )
 
@@ -377,17 +377,7 @@ def q31_token_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q32_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-
-    def hits(pat: str):
-        return F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(pat), 0))
-
-    guess = (
-        F.when(hits(r"\b(the|and|of|to|is)\b") >= 2, "en")
-        .when(hits(r"\b(der|die|das|und|ist)\b") >= 2, "de")
-        .when(hits(r"\b(el|la|los|es|de)\b") >= 2, "es")
-        .when(hits(r"\b(le|les|est|et|une)\b") >= 2, "fr")
-        .otherwise("other")
-    )
+    guess = TX.stopword_lang("text")
     return docs.select("doc_id", "lang", guess.alias("lang_guess")).orderBy("doc_id")
 
 
@@ -473,7 +463,7 @@ def q33_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q34_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = similarity.as_queries(emb.filter(F.col("vec_id") < 5))
-    return similarity.ivf_topk(emb, queries, k=5).orderBy("q_id", "rn")
+    return similarity.ivf_topk(emb, queries).orderBy("q_id", "rn")
 
 
 @query(
@@ -518,7 +508,7 @@ def q34_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q70_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = similarity.as_queries(emb.filter(F.col("vec_id") < 5))
-    return similarity.ivf_topk(emb, queries, k=5, hamming_probes=1).orderBy(
+    return similarity.ivf_topk(emb, queries, hamming_probes=1).orderBy(
         "q_id", "rn"
     )
 
@@ -582,15 +572,11 @@ def q36_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the synthetic embeddings tables (500 random vectors at every SF)
     top out at within-bucket cosine ~0.51, so any >=0.85 gate returns
     the empty set at every tier and the driver's hash row verifies
-    nothing (round-7 verdict "What's wrong #1"). 0.45 yields 3/5/39
-    pairs at sf0.001/0.01/0.1 — a non-vacuous answer set through the
-    same plan — while `embedding_near_duplicates` keeps its 0.95
-    default for real corpora; the true >=0.95 semantics stay covered
-    by the planted-positive operator test (tests/test_llm_ops.py)."""
+    nothing. 0.45 yields 3/5/39 pairs at sf0.001/0.01/0.1 — a
+    non-vacuous answer set through the same plan; the operator's
+    pre-filter gate sits just below it (similarity._NEAR_DUP_COS)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # pre-filter margin 0.4495 < round-boundary 0.44995: nothing that
-    # rounds to >= 0.45 is lost, everything else dies bucket-locally
-    pairs = similarity.embedding_near_duplicates(emb, threshold=0.4495)
+    pairs = similarity.embedding_near_duplicates(emb)
     return (
         pairs.select("vec_a", "vec_b", F.round("cos_sim", 4).alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.45)

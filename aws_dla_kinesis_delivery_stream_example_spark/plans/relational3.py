@@ -110,7 +110,6 @@ def q48_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_raw": ("min", "o_totalprice"),
             "max_raw": ("max", "o_totalprice"),
         },
-        n_salts=16,
     )
     return out.select(
         "o_orderstatus",

@@ -178,7 +178,7 @@ def q51_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join"),
 )
 def q73_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(spark, sf_dir, SW.interval_join_counts, "append")
+    out = _stream_events_closed(spark, sf_dir, SW.interval_join_pairs, "append")
     return (
         out.groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
@@ -409,7 +409,7 @@ def q113_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _sketch.countmin_counters(df)
 
     grid = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
-    top = _sketch.exact_top_tokens(_load(spark, sf_dir, "documents"), 20)
+    top = _sketch.exact_top_tokens(_load(spark, sf_dir, "documents"), _sketch.HEAVY_K)
     return _sketch.countmin_probe(grid, top)
 
 
@@ -458,7 +458,7 @@ def q121_streaming_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators import sharding as _sharding
 
     def op(df):
-        return _sharding.shard_manifest(df, "doc_id", 8, seed=17, chars_col="n_chars")
+        return _sharding.shard_manifest(df, "doc_id", 8)
 
     return _stream_documents_closed(spark, sf_dir, op, "complete").orderBy("shard")
 
@@ -693,13 +693,12 @@ def q145_streaming_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q51/q83) — q134's documented caveat. The rollup to 32 buckets
     runs once on the drained |keys|-row state."""
     from ..operators import skew as _skew
-    from .curation6 import _Q118_BUCKETS
 
     def op(df):
         return _skew.key_counts(df, "user_id")
 
     state = _stream_events_closed(spark, sf_dir, op, "complete")
-    return _skew.skew_rollup(state, _Q118_BUCKETS).orderBy("bucket")
+    return _skew.skew_rollup(state, _skew.SKEW_BUCKETS).orderBy("bucket")
 
 
 
@@ -957,11 +956,10 @@ def q160_streaming_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the plant, pair construction, and both model
     lookups run INSIDE the stream — pair construction is scan-side
     narrow, the lookups are stream-static LEFT joins against
-    Zipf-bounded model frames (broadcast-sized at any corpus scale,
-    hard-capped by min_pair_count in library mode; the context
-    counts ride pre-joined on the pair dim since round 18), and the single
-    groupBy(doc_id) agg collapses each micro-batch map-side before
-    touching state.  HONEST state note: per-DOCUMENT accumulators (2
+    Zipf-bounded model frames (broadcast-sized at any corpus scale;
+    the context counts ride pre-joined on the pair dim since round
+    18), and the single groupBy(doc_id) agg collapses each
+    micro-batch map-side before touching state.  HONEST state note: per-DOCUMENT accumulators (2
     BIGINTs + source) — the q145/q91/q158 per-key family, growing
     with ingested documents; production scopes the live monitor to a
     bounded ingest window and leaves full-corpus scoring to the batch

@@ -67,7 +67,7 @@ from pyspark.sql import functions as F
 from .. import admin
 from ..functions import serde
 from .doc_sink import DocumentSink, ParquetDocumentSink, write_flush
-from .transform import STATUS_DROPPED, STATUS_FAILED, STATUS_OK, apply_transform
+from .transform import STATUS_FAILED, STATUS_OK, apply_transform
 
 # Sink layout mirrors the reference's S3 prefixes
 # (kds_example/iac/s2_app.py:804-808).
@@ -435,7 +435,7 @@ class DeliveryPipeline:
 
     def read_success(self) -> DataFrame:
         """Q1 parity: ``admin.match_all`` of the success sink."""
-        return admin.match_all(self.spark, self.path(PREFIX_SUCCESS), serde.BANK_ACCOUNT_SCHEMA)
+        return admin.match_all(self.spark, self.path(PREFIX_SUCCESS))
 
     def count_documents(self) -> int:
         """A3/Q2 parity: document-sink count (0 when the local document

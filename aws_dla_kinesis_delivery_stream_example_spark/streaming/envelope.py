@@ -18,12 +18,13 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import serde
-from .transform import STATUS_DROPPED, STATUS_FAILED, STATUS_OK, apply_transform
+from .transform import STATUS_DROPPED, STATUS_OK, apply_transform
+
 
 def envelope_df(spark: SparkSession, event: dict) -> DataFrame:
     """Lift a Firehose transform event dict into a DataFrame of records
@@ -32,15 +33,19 @@ def envelope_df(spark: SparkSession, event: dict) -> DataFrame:
 
 
 def transform_envelope(
-    records: DataFrame,
-    fn: Callable[[dict], dict] | None = None,
-    drop_when: Column | None = None,
-    fail_when: Column | None = None,
+    records: DataFrame, fn: Callable[[dict], dict] | None = None
 ) -> DataFrame:
     """envelope records -> {recordId, result, data} with T1/T2/T6
     semantics: recordId echoed, OK payload re-encoded from the
     transformed record, Dropped/ProcessingFailed carry the ORIGINAL
     base64 payload untouched.
+
+    The black-box ``fn`` owns all routing, the reference Lambda
+    contract: it raises ``DropIt`` to drop a record and any other
+    exception to fail it, and a payload ``json.loads`` cannot decode
+    fails before ``fn`` runs. Without ``fn`` (the identity, declarative
+    path) a record is Ok unless its payload cannot be decoded, which
+    makes it ProcessingFailed.
 
     Documented deviation (declarative path): decode failure is
     SCHEMA-VALIDATED, not just parse-validated — a record that is
@@ -67,24 +72,13 @@ def transform_envelope(
     )
     payload_struct = F.struct(*[F.col(f"rec.{f.name}") for f in serde.BANK_ACCOUNT_SCHEMA.fields])
     if fn is not None:
-        # the black-box fn owns ALL routing (it raises DropIt /
-        # exceptions itself, the reference Lambda contract) — refuse
-        # declarative predicates rather than silently ignoring them
-        if drop_when is not None or fail_when is not None:
-            raise ValueError(
-                "transform_envelope: drop_when/fail_when cannot be "
-                "combined with a black-box fn — the fn's own "
-                "DropIt/exception routing decides every record's "
-                "status; encode the predicates inside fn instead"
-            )
         routed = apply_transform(decoded, fn=fn)
         ok_data = serde.encode_raw_line("payload")
     else:
         # Undecodable payload = ProcessingFailed, matching the reference
         # where json.loads raises (F2 semantics).
         decode_failed = F.col("rec").isNull() | F.col("rec._corrupt_record").isNotNull()
-        fail = decode_failed if fail_when is None else (decode_failed | fail_when)
-        routed = apply_transform(decoded, drop_when=drop_when, fail_when=fail)
+        routed = apply_transform(decoded, fail_when=decode_failed)
         ok_data = serde.encode_json_line(payload_struct)
     result = (
         F.when(F.col("status") == STATUS_OK, F.lit("Ok"))

@@ -78,28 +78,20 @@ def apply_transform(
     df: DataFrame,
     fn: Callable[[dict], dict] | None = None,
     declarative: dict[str, Column] | None = None,
-    drop_when: Column | None = None,
     fail_when: Column | None = None,
 ) -> DataFrame:
     """Produce df + (payload, status) columns.
 
-    Declarative mode (preferred): pass Column expressions; stays JVM-side.
-    Black-box mode: pass ``fn`` and the transform runs as a pandas UDF
-    over ``json_line``.
+    Declarative mode (preferred): pass Column expressions; stays
+    JVM-side, and a record is OK unless ``fail_when`` holds
+    (ProcessingFailed). Black-box mode: pass ``fn`` and the transform
+    runs as a pandas UDF over ``json_line``; ``fn`` decides every
+    status itself (DropIt -> Dropped).
     """
     if fn is not None:
         res = transform_udf(fn)(F.col("json_line"))
         return df.withColumn("payload", res["payload"]).withColumn("status", res["status"])
-    # FAILED outranks DROPPED when both predicates hold: in the
-    # reference Lambda, json.loads raises BEFORE any DropIt can be
-    # evaluated, so a record that is both undecodable and drop-matched
-    # must route to ProcessingFailed (original payload preserved for
-    # the error sink), never silently to Dropped — a drop predicate
-    # over all-null decoded fields would otherwise reclassify decode
-    # failures. Hence fail_when wraps LAST (checked first).
     status = F.lit(STATUS_OK)
-    if drop_when is not None:
-        status = F.when(drop_when, STATUS_DROPPED).otherwise(status)
     if fail_when is not None:
         status = F.when(fail_when, STATUS_FAILED).otherwise(status)
     out = df

@@ -63,7 +63,7 @@ def session_counts(df: DataFrame) -> DataFrame:
     )
 
 
-def interval_join_counts(df: DataFrame) -> DataFrame:
+def interval_join_pairs(df: DataFrame) -> DataFrame:
     """Stream-stream interval join: pair every ``click`` event with the
     same user's ``purchase`` events in ``[ts, ts + 30 minutes]``.
 

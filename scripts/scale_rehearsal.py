@@ -281,9 +281,7 @@ def _measure_valve(spark, docs) -> dict:
         # candidates instead of re-executing the whole band join —
         # output-side persistence does not hide the INPUT's statistics,
         # so the timed join strategy is unaffected
-        cand = dedup.simhash_band_candidates(
-            usig, max_hamming=3, max_band_bucket=max_band_bucket
-        ).persist()
+        cand = dedup.simhash_band_candidates(usig, max_band_bucket=max_band_bucket).persist()
         n, sec = timed(cand.count)
         tp = {
             (r["sig_a"], r["sig_b"])
@@ -337,7 +335,7 @@ def extreme_tier_rehearsal(
         .select("sig", "chunks")
         .distinct()
     )
-    cand_df = dedup.simhash_band_candidates(usig, max_hamming=3).persist()
+    cand_df = dedup.simhash_band_candidates(usig).persist()
     cand, row["simhash_sec"] = timed(cand_df.count)
     row["simhash_candidates"] = cand
     row["simhash_true_pairs"] = cand_df.filter(
@@ -360,7 +358,7 @@ def extreme_tier_rehearsal(
 
     cand, row["tfidf_abs_sec"] = timed(
         lambda: TF.tfidf_cosine_pairs(
-            docs, "doc_id", "text", threshold=-1.0, max_df=50
+            docs, "doc_id", "text", threshold=-1.0
         ).count()
     )
     row["tfidf_abs_candidates"] = cand
@@ -372,7 +370,7 @@ def extreme_tier_rehearsal(
     # would surface. Candidates := total duplicated windows.
     from aws_dla_kinesis_delivery_stream_example_spark.operators import curation as CU
 
-    spans = CU.duplicated_span_stats(docs, "doc_id", "text", n=20).persist()
+    spans = CU.duplicated_span_stats(docs, "doc_id", "text").persist()
     _, row["spans_sec"] = timed(spans.count)
     row["spans_candidates"] = int(
         spans.agg(F.sum("n_dup_windows")).collect()[0][0] or 0
@@ -481,7 +479,7 @@ def extreme_tier_rehearsal(
     )
     _, row["fuzzy_sec"] = timed(
         lambda: CU.fuzzy_contamination(
-            cand_docs, bench_fixed, "doc_id", "text", n=4, max_dist_milli=300
+            cand_docs, bench_fixed, "doc_id", "text"
         ).count()
     )
     _release()
@@ -688,7 +686,7 @@ def main() -> None:
             .select("sig", "chunks")
             .distinct()
         )
-        cand_df = dedup.simhash_band_candidates(usig, max_hamming=3).persist()
+        cand_df = dedup.simhash_band_candidates(usig).persist()
         cand, row["simhash_sec"] = timed(cand_df.count)
         row["simhash_candidates"] = cand
         row["simhash_true_pairs"] = cand_df.filter(
@@ -762,7 +760,7 @@ def main() -> None:
 
         n_tf, row["tfidf_sec"] = timed(
             lambda: TF.tfidf_cosine_pairs(
-                docs, "doc_id", "text", threshold=-1.0, max_df=50, max_df_frac=0.1
+                docs, "doc_id", "text", threshold=-1.0, max_df_frac=0.1
             ).count()
         )
         row["tfidf_candidates"] = n_tf
@@ -773,7 +771,7 @@ def main() -> None:
         # to grow ~quadratically on the planted near-dup population)
         n_tfa, row["tfidf_abs_sec"] = timed(
             lambda: TF.tfidf_cosine_pairs(
-                docs, "doc_id", "text", threshold=-1.0, max_df=50
+                docs, "doc_id", "text", threshold=-1.0
             ).count()
         )
         row["tfidf_abs_candidates"] = n_tfa
@@ -794,13 +792,13 @@ def main() -> None:
         )
         row["n_true_pairs"] = truth.count()
         frac_cand = TF.tfidf_cosine_pairs(
-            docs, "doc_id", "text", threshold=-1.0, max_df=50, max_df_frac=0.1
+            docs, "doc_id", "text", threshold=-1.0, max_df_frac=0.1
         ).select("doc_a", "doc_b")
         row["tfidf_true_pairs"] = truth.join(
             frac_cand, ["doc_a", "doc_b"], "left_semi"
         ).count()
         abs_cand = TF.tfidf_cosine_pairs(
-            docs, "doc_id", "text", threshold=-1.0, max_df=50
+            docs, "doc_id", "text", threshold=-1.0
         ).select("doc_a", "doc_b")
         row["tfidf_abs_true_pairs"] = truth.join(
             abs_cand, ["doc_a", "doc_b"], "left_semi"
@@ -1049,7 +1047,7 @@ def main() -> None:
         )
         _, row["fuzzy_sec"] = timed(
             lambda: _cur.fuzzy_contamination(
-                cand_docs, bench_fixed, "doc_id", "text", n=4, max_dist_milli=300
+                cand_docs, bench_fixed, "doc_id", "text"
             ).count()
         )
         release_staging()

@@ -51,7 +51,7 @@ def main() -> None:
     print(f"RESULT t1_smoke rows={n} sec={time.perf_counter() - t0:.2f}", flush=True)
 
     import bench
-    from tests.oracle_utils import compare
+    from tests.oracle_utils import compare_frames
 
     qs, osql = mod.queries(), mod.oracle_sql()
     report: dict[str, dict] = {}
@@ -65,8 +65,11 @@ def main() -> None:
         try:
             df = fn(spark, sf_dir)
             if name in osql:
-                ok, msg = compare(df, osql[name], sf_dir)
-                entry["spark_rows"] = df.count()
+                # one execution: the collected frame is both compared
+                # and counted
+                pdf = df.toPandas()
+                ok, msg = compare_frames(pdf, osql[name], sf_dir)
+                entry["spark_rows"] = len(pdf)
                 entry["rows_match"] = entry["schema_match"] = entry["hash_match"] = ok
                 if ok:
                     entry["oracle_rows"] = entry["spark_rows"]

@@ -46,7 +46,11 @@ def canonicalize(pdf) -> list[tuple]:
 
 
 def compare(spark_df, oracle_sql: str, sf_dir: str) -> tuple[bool, str]:
-    spark_pdf = spark_df.toPandas()
+    return compare_frames(spark_df.toPandas(), oracle_sql, sf_dir)
+
+
+def compare_frames(spark_pdf, oracle_sql: str, sf_dir: str) -> tuple[bool, str]:
+    """``compare`` on a Spark result already collected to pandas."""
     duck_pdf = duckdb_result(oracle_sql, sf_dir)
     if sorted(spark_pdf.columns) != sorted(duck_pdf.columns):
         return False, f"columns differ: spark={sorted(spark_pdf.columns)} duck={sorted(duck_pdf.columns)}"

@@ -16,43 +16,58 @@ def _emb(spark, rows):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
+def _remote_seeds(first_id):
+    """Seeds for the ids ``first_id``..7, far from every planted point, so
+    only the seeds below ``first_id`` attract anything but themselves."""
+    return [(i, [1000.0 * i, -1000.0]) for i in range(first_id, clustering.KMEANS_K)]
+
+
 def test_kmeans_assign_planted_clusters(spark):
-    # Seeds are the two smallest ids: id 0 at the origin, id 1 at (10, 10).
-    rows = [
-        (0, [0.0, 0.0]),
-        (1, [10.0, 10.0]),
-        (2, [0.5, 0.0]),   # near seed 0
-        (3, [9.0, 10.0]),  # near seed 1
-        (4, [0.0, 1.0]),   # near seed 0
+    # Seeds are the 8 smallest ids: id 0 at the origin, id 1 at (10, 10),
+    # ids 2..7 remote.
+    rows = [(0, [0.0, 0.0]), (1, [10.0, 10.0])] + _remote_seeds(2) + [
+        (8, [0.5, 0.0]),    # near seed 0
+        (9, [9.0, 10.0]),   # near seed 1
+        (10, [0.0, 1.0]),   # near seed 0
     ]
-    out = clustering.kmeans_assign(_emb(spark, rows), k=2).orderBy("id").collect()
+    out = clustering.kmeans_assign(_emb(spark, rows)).orderBy("id").collect()
     assigned = {r["id"]: r["cluster"] for r in out}
-    assert assigned == {0: 0, 1: 1, 2: 0, 3: 1, 4: 0}
+    assert assigned == {**{i: i for i in range(8)}, 8: 0, 9: 1, 10: 0}
     d2 = {r["id"]: r["d2"] for r in out}
-    assert d2[0] == 0.0 and d2[1] == 0.0  # seeds sit on their own centroid
-    assert d2[2] == 0.25 and d2[3] == 1.0
+    assert all(d2[i] == 0.0 for i in range(8))  # seeds sit on their own centroid
+    assert d2[8] == 0.25 and d2[9] == 1.0
 
 
 def test_kmeans_assign_tie_breaks_to_lower_cluster(spark):
     # (5, 0) is exactly equidistant from seeds at (0,0) and (10,0):
     # the rounded-distance tie must resolve to the LOWER cluster index
     # on both engines (argmin-first == ORDER BY d2, cluster).
-    rows = [(0, [0.0, 0.0]), (1, [10.0, 0.0]), (2, [5.0, 0.0])]
-    out = clustering.kmeans_assign(_emb(spark, rows), k=2).orderBy("id").collect()
-    assert {r["id"]: r["cluster"] for r in out}[2] == 0
+    rows = [(0, [0.0, 0.0]), (1, [10.0, 0.0])] + _remote_seeds(2) + [(8, [5.0, 0.0])]
+    out = clustering.kmeans_assign(_emb(spark, rows)).orderBy("id").collect()
+    assert {r["id"]: r["cluster"] for r in out}[8] == 0
 
 
 def test_kmeans_assign_requires_k_rows(spark):
     import pytest
 
-    with pytest.raises(ValueError, match="need >= 5"):
-        clustering.kmeans_assign(_emb(spark, [(0, [1.0])]), k=5)
+    with pytest.raises(ValueError, match="need >= 8"):
+        clustering.kmeans_assign(_emb(spark, [(0, [1.0])]))
+
+
+def test_semantic_near_duplicates_requires_k_rows(spark):
+    import pytest
+
+    rows = [(i, [float(i), 1.0]) for i in range(7)]
+    with pytest.raises(ValueError, match="kmeans_seeds: need >= 8 rows"):
+        clustering.semantic_near_duplicates(_emb(spark, rows))
 
 
 def test_cluster_profile_shape(spark):
+    # The 8 seeds sit on only two points; ties go to the lower cluster,
+    # so every row lands in cluster 0 or 1.
     rows = [(i, [float(i % 2) * 10.0, 0.0]) for i in range(10)]
     prof = clustering.cluster_profile(
-        clustering.kmeans_assign(_emb(spark, rows), k=2)
+        clustering.kmeans_assign(_emb(spark, rows))
     ).collect()
     assert [r["cluster"] for r in prof] == [0, 1]
     assert sum(r["n"] for r in prof) == 10
@@ -79,7 +94,7 @@ def test_interval_join_boundary_semantics(spark):
         (3, "purchase", at(5), 1.0),    # other user: excluded
         (1, "view", at(5), 1.0),        # other type: excluded
     ]
-    out = SW.interval_join_counts(_events(spark, rows)).collect()
+    out = SW.interval_join_pairs(_events(spark, rows)).collect()
     per_user = {}
     for r in out:
         per_user[r["user_id"]] = per_user.get(r["user_id"], 0) + 1
@@ -99,9 +114,9 @@ def test_interval_join_streaming_matches_batch(spark, tmp_path):
 
     batch = sorted(
         (r["user_id"], str(r["l_ts"]), str(r["r_ts"]))
-        for r in SW.interval_join_counts(spark.read.parquet(src)).collect()
+        for r in SW.interval_join_pairs(spark.read.parquet(src)).collect()
     )
-    streamed = SW.run_on_closed_input(spark, src, SW.interval_join_counts, "append")
+    streamed = SW.run_on_closed_input(spark, src, SW.interval_join_pairs, "append")
     got = sorted(
         (r["user_id"], str(r["l_ts"]), str(r["r_ts"])) for r in streamed.collect()
     )
@@ -158,18 +173,18 @@ def test_updated_centroids_empty_cluster_keeps_seed(spark):
 def test_semantic_near_duplicates_planted_pair(spark):
     from aws_dla_kinesis_delivery_stream_example_spark.operators import clustering as CL
 
-    # ids 0/1 seed two well-separated clusters; 2 is a near-copy of 0
-    # (cos ~ 1), 3 lands in cluster 0 but is near-orthogonal to both
-    # members, so exactly one pair survives the threshold.
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.0, 0.0, 9.0]),
-        (2, [0.99, 0.01, 0.0]),
-        (3, [0.0, 8.0, 1.0]),
-    ]
+    # ids 0/1 seed two well-separated clusters (2..7 seed remote ones
+    # that attract nothing); 8 is a near-copy of 0 (cos ~ 1), 9 lands in
+    # cluster 0 but is near-orthogonal to both members, so exactly one
+    # pair survives the threshold.
+    rows = (
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 0.0, 9.0])]
+        + [(i, [0.0, -1000.0 * i, 0.0]) for i in range(2, 8)]
+        + [(8, [0.99, 0.01, 0.0]), (9, [0.0, 8.0, 1.0])]
+    )
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = CL.semantic_near_duplicates(emb, k=2, threshold=0.95).collect()
-    assert [(r["vec_a"], r["vec_b"]) for r in out] == [(0, 2)]
+    out = CL.semantic_near_duplicates(emb, threshold=0.95).collect()
+    assert [(r["vec_a"], r["vec_b"]) for r in out] == [(0, 8)]
     assert out[0]["cos_sim"] > 0.99
 
 
@@ -178,24 +193,26 @@ def test_semantic_near_duplicates_sub_block_valve(spark):
 
     from aws_dla_kinesis_delivery_stream_example_spark.operators import clustering as CL
 
-    # One hot cluster: everything lands near seed 0 (seed 1 is remote).
-    # Planted exact duplicate (ids 10/11) must survive sub-blocking —
-    # identical vectors share the rounded-vector digest — while the
-    # candidate pair count drops below the full within-cluster count.
-    rng_rows = [(i, [float((i * 7) % 5) / 10.0, float((i * 3) % 5) / 10.0]) for i in range(2, 10)]
+    # One hot cluster: everything lands near seed 0 (seeds 1..7 are
+    # remote). Planted exact duplicate (ids 16/17) must survive
+    # sub-blocking — identical vectors share the rounded-vector digest —
+    # while the candidate pair count drops below the full within-cluster
+    # count.
+    rng_rows = [(i, [float((i * 7) % 5) / 10.0, float((i * 3) % 5) / 10.0]) for i in range(8, 16)]
     rows = (
-        [(0, [0.0, 0.0]), (1, [100.0, 100.0])]
+        [(0, [0.0, 0.0])]
+        + [(i, [100.0 * i, 100.0 * i]) for i in range(1, 8)]
         + rng_rows
-        + [(10, [0.31, 0.17]), (11, [0.31, 0.17])]
+        + [(16, [0.31, 0.17]), (17, [0.31, 0.17])]
     )
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    full = CL.semantic_near_duplicates(emb, k=2, threshold=-1.1)
-    valved = CL.semantic_near_duplicates(emb, k=2, threshold=-1.1, sub_blocks=4)
+    full = CL.semantic_near_duplicates(emb, threshold=-1.1)
+    valved = CL.semantic_near_duplicates(emb, threshold=-1.1, sub_blocks=4)
     n_full, n_valved = full.count(), valved.count()
     assert n_valved < n_full  # pair space actually shrank
 
-    dup = valved.filter("vec_a = 10 AND vec_b = 11").collect()
+    dup = valved.filter("vec_a = 16 AND vec_b = 17").collect()
     assert len(dup) == 1 and np.isclose(dup[0]["cos_sim"], 1.0)
 
 
@@ -206,32 +223,28 @@ def test_semantic_near_duplicates_gemm_budget_guard(spark):
 
     from aws_dla_kinesis_delivery_stream_example_spark.operators import clustering as CL
 
-    # Planted hot cluster: 30 vectors near the first seeds, 1 remote.
-    # x values are distinct at 1 dp, so the rounded-vector digest
-    # actually spreads them across sub-blocks.
-    rows = [(i, [float(i % 7) / 10.0, 0.0]) for i in range(30)] + [(99, [50.0, 50.0])]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # Planted hot cluster of 50,008 rows, over the 50,000-row budget:
+    # the 8 seeds coincide at the origin, so every row ties into
+    # cluster 0. Past the seeds, rows are distinct at 1 dp, so the
+    # rounded-vector digest actually spreads them across sub-blocks.
+    n = CL._MAX_CLUSTER_ROWS + CL.KMEANS_K
+    vid = F.col("id")
+    emb = spark.range(n).select(
+        vid.alias("vec_id"),
+        F.when(vid < CL.KMEANS_K, F.array(F.lit(0.0), F.lit(0.0)))
+        .otherwise(F.array((vid % 997) / 10.0, (vid % 991) / 10.0))
+        .alias("embedding"),
+    )
 
     # Budget smaller than the hot cluster -> the group task must fail
     # fast with sizing guidance, not OOM mid-GEMM.
-    with pytest.raises((PythonException, Py4JJavaError), match="max_cluster_rows"):
-        CL.semantic_near_duplicates(
-            emb, k=2, threshold=0.9, max_cluster_rows=10
-        ).collect()
+    with pytest.raises((PythonException, Py4JJavaError), match="50000-row GEMM budget"):
+        CL.semantic_near_duplicates(emb, threshold=1.1).collect()
 
-    # Salting the hot cluster under the same budget makes it pass.
-    ok = CL.semantic_near_duplicates(
-        emb, k=2, threshold=0.9, max_cluster_rows=10, sub_blocks=64
-    )
-    assert ok.count() >= 0  # executes without raising
-
-    # Disabled guard also passes (the 31-row GEMM itself is tiny).
-    assert (
-        CL.semantic_near_duplicates(
-            emb, k=2, threshold=0.9, max_cluster_rows=None
-        ).count()
-        >= 0
-    )
+    # Salting the hot cluster under the same budget makes it pass (the
+    # threshold keeps no pair, so only the sub-block GEMMs run).
+    ok = CL.semantic_near_duplicates(emb, threshold=1.1, sub_blocks=64)
+    assert ok.count() == 0  # executes without raising
 
 
 def test_ivf_learned_recall_on_planted_geometry(spark):
@@ -301,15 +314,11 @@ def test_ivf_signbucket_multiprobe_recall(spark):
     }
     own = {
         (r.q_id, r.vec_id)
-        for r in similarity.ivf_topk(
-            cand, queries, k=5, hamming_probes=0
-        ).collect()
+        for r in similarity.ivf_topk(cand, queries, hamming_probes=0).collect()
     }
     multi = {
         (r.q_id, r.vec_id)
-        for r in similarity.ivf_topk(
-            cand, queries, k=5, hamming_probes=1
-        ).collect()
+        for r in similarity.ivf_topk(cand, queries, hamming_probes=1).collect()
     }
     recall = len(want & multi) / len(want)
     assert recall >= 0.9, f"multi-probe recall@5 = {recall}"

@@ -5,7 +5,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
 

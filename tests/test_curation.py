@@ -4,8 +4,6 @@ specs against DuckDB."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from aws_dla_kinesis_delivery_stream_example_spark.operators import curation
 
 
@@ -100,7 +98,7 @@ def test_duplicated_spans_planted_coverage(spark):
     out = {
         r["doc_id"]: r.asDict()
         for r in curation.duplicated_span_stats(
-            _docs(spark, rows), "doc_id", "text", n=20
+            _docs(spark, rows), "doc_id", "text"
         ).collect()
     }
     assert set(out) == {1, 2, 3, 4, 5}
@@ -134,7 +132,7 @@ def test_duplicated_spans_planted_coverage(spark):
         release_staging,
     )
 
-    assert release_staging(blocking=True) >= 1
+    assert release_staging() >= 1
 
 
 def test_duplicated_spans_randomized_brute_force(spark):
@@ -152,14 +150,20 @@ def test_duplicated_spans_randomized_brute_force(spark):
         release_staging,
     )
 
-    n = 5
+    n = curation._SPAN_N
+    n_dup_docs = 0
     for seed in (3, 17):
         rng = random.Random(seed)
-        vocab = [f"t{i}" for i in range(12)]  # tiny vocab -> real dups
-        rows = [
-            (i, " ".join(rng.choice(vocab) for _ in range(rng.randrange(2, 30))), "s")
-            for i in range(40)
-        ]
+        # docs are runs of 7-token phrases from a tiny phrase set, with
+        # a stray token now and then: real duplicated n-token windows,
+        # overlapping ones, and docs shorter than n
+        phrases = [[f"p{j}t{k}" for k in range(7)] for j in range(4)]
+        rows = []
+        for i in range(40):
+            tk = []
+            for _ in range(rng.randrange(1, 7)):
+                tk += rng.choice(phrases) if rng.random() < 0.8 else [f"s{rng.randrange(50)}"]
+            rows.append((i, " ".join(tk), "s"))
         # brute force: window hash counts across the corpus, then
         # per-doc interval union of duplicated [pos, pos+n) windows
         def toks(t):
@@ -185,16 +189,18 @@ def test_duplicated_spans_randomized_brute_force(spark):
         out = {
             r["doc_id"]: r.asDict()
             for r in curation.duplicated_span_stats(
-                _docs(spark, rows), "doc_id", "text", n=n
+                _docs(spark, rows), "doc_id", "text"
             ).collect()
         }
-        release_staging(blocking=True)
+        release_staging()
         assert set(out) == set(expected)
         for doc_id, (L, n_dup, cov) in expected.items():
             r = out[doc_id]
             assert r["n_tokens"] == L, (seed, doc_id)
             assert r["n_dup_windows"] == n_dup, (seed, doc_id)
             assert r["dup_tokens"] == cov, (seed, doc_id)
+        n_dup_docs += sum(1 for _, n_dup, _ in expected.values() if n_dup)
+    assert n_dup_docs >= 10  # the corpora really carry duplicated windows
 
 
 def test_q95_token_budget_boundary_tie(spark, tmp_path):
@@ -241,7 +247,7 @@ def test_q95_token_budget_boundary_tie(spark, tmp_path):
     try:
         spark_pdf = spec.spark(spark, str(tmp_path)).toPandas()
     finally:
-        release_staging(blocking=True)
+        release_staging()
         spark.catalog.clearCache()
 
     con = duckdb.connect()

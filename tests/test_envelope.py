@@ -8,9 +8,6 @@ from __future__ import annotations
 import base64
 import json
 
-import pytest
-from pyspark.sql import functions as F
-
 from aws_dla_kinesis_delivery_stream_example_spark.streaming.envelope import (
     envelope_df,
     handle_event,
@@ -87,18 +84,23 @@ def test_status_routing_and_original_payload(spark):
 
 
 def test_declarative_envelope_transform(spark):
-    """Declarative (JVM-only) envelope path with status predicates."""
-    recs = [dict(REC, id=f"id-{i}", balance=i * 10) for i in range(10)]
-    df = envelope_df(spark, _event(*recs))
-    out = transform_envelope(
-        df,
-        drop_when=F.col("rec.balance") >= 80,
-        fail_when=F.col("rec.balance") == 0,
-    ).collect()
-    results = {r.recordId: r.result for r in out}
-    assert results["rec-0000"] == "ProcessingFailed"
-    assert results["rec-0008"] == "Dropped" and results["rec-0009"] == "Dropped"
-    assert sum(1 for v in results.values() if v == "Ok") == 7
+    """Declarative (JVM-only) envelope path over a mixed batch: every
+    decodable record is Ok with its payload re-encoded from the typed
+    record; an undecodable payload and a schema-mismatched one (valid
+    JSON, balance not a number — the documented strict-at-the-boundary
+    deviation) are ProcessingFailed with their original payloads."""
+    recs = [dict(REC, id=f"id-{i}", balance=i * 10) for i in range(8)]
+    event = _event(*recs, dict(REC, id="id-8", balance="not-a-number"))
+    bad = base64.b64encode(b"}{ not json\n").decode("utf-8")
+    event["records"].append({"recordId": "rec-bad", "approximateArrivalTimestamp": 1, "data": bad})
+    out = {r.recordId: r for r in transform_envelope(envelope_df(spark, event)).collect()}
+    assert len(out) == 10  # every recordId echoed exactly once
+    for i, rec in enumerate(recs):
+        r = out[f"rec-{i:04d}"]
+        assert r.result == "Ok"
+        assert json.loads(base64.b64decode(r.data).decode("utf-8")) == rec
+    for rid, original in (("rec-0008", event["records"][8]["data"]), ("rec-bad", bad)):
+        assert out[rid].result == "ProcessingFailed" and out[rid].data == original
 
 
 def test_malformed_payload_fails_with_original(spark):
@@ -120,41 +122,24 @@ def test_unicode_envelope_roundtrip(spark):
 def test_decode_failure_outranks_drop_predicate(spark):
     """A record that is BOTH undecodable and drop-matched must route
     to ProcessingFailed with the original payload — in the reference,
-    json.loads raises before any DropIt can be evaluated, so a drop
-    predicate over the (all-null) decoded fields must never reclassify
-    a decode failure as Dropped."""
+    json.loads raises before any DropIt can be evaluated, so a
+    transform that drops every record must never reclassify a decode
+    failure as Dropped."""
     bad = base64.b64encode(b"}{ not json\n").decode("utf-8")
     event = {
         "records": [
-            {"recordId": "r-bad", "approximateArrivalTimestamp": 1, "data": bad}
+            {"recordId": "r-bad", "approximateArrivalTimestamp": 1, "data": bad},
+            {"recordId": "r-ok", "approximateArrivalTimestamp": 2, "data": _b64(REC)},
         ]
     }
-    df = envelope_df(spark, event)
-    # isNull() is TRUE on the undecodable record's null balance — the
-    # exact predicate shape that used to win over decode failure
-    out = transform_envelope(df, drop_when=F.col("rec.balance").isNull()).collect()
-    assert out[0]["result"] == "ProcessingFailed"
-    assert out[0]["data"] == bad
 
+    def drop_all(rec: dict) -> dict:
+        raise DropIt()
 
-def test_fn_with_declarative_predicates_raises(spark):
-    """The black-box fn owns all routing; combining it with
-    drop_when/fail_when must raise instead of silently ignoring the
-    predicates (records they matched would otherwise deliver as Ok)."""
-    df = envelope_df(
-        spark,
-        {
-            "records": [
-                {
-                    "recordId": "r-1",
-                    "approximateArrivalTimestamp": 1,
-                    "data": base64.b64encode(b'{"id": "x"}\n').decode("utf-8"),
-                }
-            ]
-        },
-    )
-    with pytest.raises(ValueError, match="drop_when"):
-        transform_envelope(df, fn=lambda d: d, drop_when=F.lit(True))
+    out = {r["recordId"]: r for r in handle_event(spark, event, fn=drop_all)["records"]}
+    assert out["r-bad"]["result"] == "ProcessingFailed"
+    assert out["r-bad"]["data"] == bad
+    assert out["r-ok"]["result"] == "Dropped"
 
 
 def test_stateful_batch_fallback_exact_on_cancellation_set(spark):

@@ -166,8 +166,7 @@ def test_minhash_finds_planted_near_dups(spark, planted_docs):
 def test_simhash_exact_dups_zero_hamming(spark, planted_docs):
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in dedup.simhash_near_duplicates(planted_docs, "doc_id", "text", max_hamming=10)
-        .collect()
+        for r in dedup.simhash_near_duplicates(planted_docs, "doc_id", "text").collect()
     }
     for i in range(20):
         assert pairs.get((i, i + 200000)) == 0  # identical text => identical simhash
@@ -176,20 +175,21 @@ def test_simhash_exact_dups_zero_hamming(spark, planted_docs):
 def test_simhash_bucket_valve_preserves_exact_pair_set(spark, planted_docs):
     """The hot-bucket chunk refinement is recall-preserving: forcing the
     valve onto EVERY bucket (bound 1) must yield the identical verified
-    pair set as the unvalved join."""
-    base = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in dedup.simhash_near_duplicates(
-            planted_docs, "doc_id", "text", max_band_bucket=None
-        ).collect()
-    }
-    valved = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in dedup.simhash_near_duplicates(
-            planted_docs, "doc_id", "text", max_band_bucket=1
-        ).collect()
-    }
-    assert base == valved and len(base) > 0
+    pair set as the unvalved join, on the planted corpus's fingerprints."""
+    from pyspark.sql import functions as F
+
+    usig = dedup.simhash_signatures(planted_docs, "doc_id", "text").select("sig", "chunks").distinct()
+
+    def verified(bound):
+        return {
+            (r.sig_a, r.sig_b)
+            for r in dedup.simhash_band_candidates(usig, bound)
+            .filter(F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= 3)
+            .collect()
+        }
+
+    base = verified(None)
+    assert base == verified(1) and len(base) > 0
 
 
 def test_simhash_valve_equivalence_on_random_sigs(spark):
@@ -228,7 +228,7 @@ def test_simhash_valve_equivalence_on_random_sigs(spark):
         def verified(bound):
             return {
                 (r.sig_a, r.sig_b)
-                for r in dedup.simhash_band_candidates(usig, 3, bound)
+                for r in dedup.simhash_band_candidates(usig, bound)
                 .filter(F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= 3)
                 .collect()
             }
@@ -240,58 +240,39 @@ def test_simhash_valve_equivalence_on_random_sigs(spark):
 
 def _crowd_usig(spark, n):
     # n distinct sigs sharing every band triple that avoids the low
-    # blocks: differences confined to bits 0..5 (inside Manku block 0),
-    # so the (1,2,3)/(3,4,5)/... triples all collide
-    rows = []
-    base = 0x0123_4567_89AB_0000
-    for i in range(n):
-        sig = base | i
-        chunks = [(sig >> (16 * c)) & 0xFFFF for c in range(4)]
-        rows.append((sig, chunks))
-    return spark.createDataFrame(rows, "sig long, chunks array<int>")
+    # blocks: differences confined to bits 0..ceil(log2 n) (inside
+    # Manku blocks 0 and 1 for n up to 2^22), so the (2,3,4)/(3,4,5)/...
+    # triples all collide
+    from pyspark.sql import functions as F
+
+    sig = F.col("id").bitwiseOR(F.lit(0x0123_4567_8000_0000))
+    chunks = [F.shiftrightunsigned(sig, 16 * c).bitwiseAND(F.lit(0xFFFF)).cast("int") for c in range(4)]
+    return spark.range(n).select(sig.alias("sig"), F.array(*chunks).alias("chunks"))
 
 
 def test_simhash_hard_bucket_bound_fails_fast(spark):
-    """A degenerate fingerprint crowd past hard_band_bucket must raise
-    with sizing guidance, not run an unbounded refined join; under the
-    hard bound the refined join still returns the exact candidates."""
+    """A degenerate fingerprint crowd past the hard bound (65,536 sigs
+    in one band bucket) must raise with sizing guidance, not run an
+    unbounded refined join; under the hard bound the refined join
+    still returns the exact candidates."""
     import pytest
 
-    usig = _crowd_usig(spark, 40)
+    usig = _crowd_usig(spark, dedup._HARD_BAND_BUCKET + 1)
     with pytest.raises(Exception, match="hard bound"):
-        dedup.simhash_band_candidates(
-            usig, max_band_bucket=8, hard_band_bucket=16
-        ).count()
+        dedup.simhash_band_candidates(usig, max_band_bucket=8).count()
     # the fail-fast is independent of the refinement valve: it guards
-    # the escape hatch and the >radius-3 fallback too
+    # the unvalved join too
     with pytest.raises(Exception, match="hard bound"):
-        dedup.simhash_band_candidates(
-            usig, max_band_bucket=None, hard_band_bucket=16
-        ).count()
-    with pytest.raises(Exception, match="hard bound"):
-        dedup.simhash_band_candidates(
-            usig, max_hamming=5, hard_band_bucket=16
-        ).count()
-    # hard_band_bucket=None removes the net explicitly; and a hard bound
-    # below the refinement bound is a config error, not a silent bypass
-    assert (
-        dedup.simhash_band_candidates(
-            usig, max_band_bucket=None, hard_band_bucket=None
-        ).count()
-        > 0
-    )
-    with pytest.raises(ValueError, match="hard_band_bucket must be >="):
-        dedup.simhash_band_candidates(usig, max_band_bucket=64, hard_band_bucket=8)
-    # same crowd under the hard bound: refinement engages, exactness holds
+        dedup.simhash_band_candidates(usig, max_band_bucket=None).count()
+    # a crowd under the hard bound: refinement engages, exactness holds
+    usig = _crowd_usig(spark, 40)
     unvalved = {
         (r.sig_a, r.sig_b)
         for r in dedup.simhash_band_candidates(usig, max_band_bucket=None).collect()
     }
     refined = {
         (r.sig_a, r.sig_b)
-        for r in dedup.simhash_band_candidates(
-            usig, max_band_bucket=8, hard_band_bucket=1000
-        ).collect()
+        for r in dedup.simhash_band_candidates(usig, max_band_bucket=8).collect()
     }
     # all differences are inside one 16-bit chunk => the chunk-refined
     # join keeps every pair (they share the other three chunks)
@@ -305,7 +286,7 @@ def test_ivf_topk_is_subset_of_bruteforce_space(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = similarity.as_queries(emb.filter(F.col("vec_id") < 20))
     bf = similarity.brute_force_topk(emb, queries, k=50)
-    ivf = similarity.ivf_topk(emb, queries, k=5)
+    ivf = similarity.ivf_topk(emb, queries)
     bf_scores = {(r.q_id, r.vec_id): r.cos_sim for r in bf.collect()}
     ivf_rows = ivf.collect()
     in_bf = [((r.q_id, r.vec_id) in bf_scores) for r in ivf_rows]
@@ -328,7 +309,7 @@ def test_topk_query_cap_guards_driver_collect(spark, monkeypatch):
     with pytest.raises(ValueError, match="MAX_QUERY_VECTORS"):
         similarity.brute_force_topk(emb, big, k=3)
     with pytest.raises(ValueError, match="MAX_QUERY_VECTORS"):
-        similarity.ivf_topk(emb, big, k=3)
+        similarity.ivf_topk(emb, big)
     # at the cap it still runs
     ok = similarity.brute_force_topk(emb, similarity.as_queries(emb.filter(F.col("vec_id") < 5)), k=3)
     assert ok.count() == 15
@@ -342,7 +323,7 @@ def test_embedding_near_duplicates_detects_planted(spark):
     planted = emb.unionAll(copies)
     pairs = {
         (r.vec_a, r.vec_b)
-        for r in similarity.embedding_near_duplicates(planted, threshold=0.9999).collect()
+        for r in similarity.embedding_near_duplicates(planted).collect()
     }
     assert all((i, i + 10000) in pairs for i in range(10))
 
@@ -377,7 +358,7 @@ def _known_media(spark):
     px[:, :2] = [255, 0, 0]
     px[:, 2:] = [0, 0, 255]
     bmp = codecs.encode_bmp(px)
-    wav = codecs.encode_wav(np.tile([16384, -16384], 800).astype(np.int16), 16000)
+    wav = codecs.encode_wav(np.tile([16384, -16384], 800).astype(np.int16))
     media = spark.createDataFrame(
         [
             (1, "synthetic://img", "image", bytearray(bmp), (4, 2, None, "bmp")),
@@ -399,8 +380,8 @@ def test_codec_roundtrips():
         px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
         assert np.array_equal(codecs.decode_bmp(codecs.encode_bmp(px)), px)
     samples = rng.integers(-32768, 32768, 1234, dtype=np.int16)
-    rate, got = codecs.decode_wav(codecs.encode_wav(samples, 8000))
-    assert rate == 8000
+    rate, got = codecs.decode_wav(codecs.encode_wav(samples))
+    assert rate == codecs.WAV_RATE == 16000
     assert np.allclose(got, samples.astype(np.float32) / 32768.0)
 
 
@@ -625,8 +606,8 @@ def test_ivf_multiprobe_recall_dominates_single_probe(spark):
         (r.q_id, r.vec_id)
         for r in similarity.brute_force_topk(emb, queries, k=5).collect()
     }
-    single = similarity.ivf_topk(emb, queries, k=5)
-    multi = similarity.ivf_topk(emb, queries, k=5, hamming_probes=1)
+    single = similarity.ivf_topk(emb, queries)
+    multi = similarity.ivf_topk(emb, queries, hamming_probes=1)
     s_hits = {(r.q_id, r.vec_id) for r in single.collect()} & bf_top
     m_hits = {(r.q_id, r.vec_id) for r in multi.collect()} & bf_top
     assert len(m_hits) >= len(s_hits)
@@ -668,7 +649,7 @@ def test_simhash_valve_engages_on_band_crowd_corpus(spark):
         assert max_bucket > 256  # the default valve threshold WILL fire
 
         def run(bound):
-            cand = dedup.simhash_band_candidates(usig, 3, bound)
+            cand = dedup.simhash_band_candidates(usig, bound)
             verified = {
                 (r.sig_a, r.sig_b)
                 for r in cand.filter(

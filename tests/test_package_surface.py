@@ -7,22 +7,26 @@ Code that runs is the package itself, ``bench.py``,
 ``__spark_entry__.py``, ``perfbench/*.py`` and ``scripts/*.py``;
 ``test_*.py`` files do not count, so a symbol that only its own tests
 call is flagged. A use is a Name, Attribute or import-alias reference
-outside the symbol's own definition; a re-export in an ``__init__.py``
-is not a use. A function registered with ``@query(...)`` is used by
-the catalog. Dunder names and ``__init__.py`` definitions are exempt.
+outside the symbol's own definition; an import counts only when the
+importing file reads the name it binds, and a re-export in an
+``__init__.py`` is not a use. A function registered with
+``@query(...)`` is used by the catalog. Dunder names and
+``__init__.py`` definitions are exempt.
 
 Each ``ALLOWED`` entry must still exist and still be unused, so the
 list cannot outlive the reason it gives.
 
 Every option (a defaulted parameter of a uniquely named module-level
-package function) that has a caller takes at least two values across
-its call sites, or is named in ``ONE_VALUE_ALLOWED``: with one value in
-use it is a constant. Call sites count everywhere, tests included,
-since a test that sets a second value is a real user. A call site that
-omits the option passes its default; an argument that is not a
-literal or an ALL_CAPS constant counts as a second value. A constant
-counts by its value (followed through imports), so ``n=_K`` with
-``_K = 8`` and ``n=8`` are one value.
+package function) that has a runtime caller takes at least two values
+across its runtime call sites, or is named in ``ONE_VALUE_ALLOWED``:
+with one value in use it is a constant. Runtime call sites are the
+same files as above; a test is not a caller that justifies an option,
+so a value only a test passes does not count. A call site that omits
+the option passes its default; an argument that is not a literal or
+an ALL_CAPS constant counts as a second value. A constant counts by
+its value (followed through imports), so ``n=_K`` with ``_K = 8`` and
+``n=8`` are one value. A function with no runtime caller is not
+scanned.
 """
 
 from __future__ import annotations
@@ -56,9 +60,8 @@ ALLOWED = {
 # (module path under the package, function, parameter) -> why the
 # option stays settable with one value in use.
 ONE_VALUE_ALLOWED = {
-    ("sources/jsonlines.py", "kinesis_reader", "region"): "deployment setting: the stream's AWS region",
-    ("sources/jsonlines.py", "kinesis_reader", "starting_position"): (
-        "deployment setting: where a new consumer starts in the stream"
+    ("sources/jsonlines.py", "generate_bank_accounts", "partitions"): (
+        "deployment setting: the stream's provisioned shard count"
     ),
 }
 
@@ -92,14 +95,21 @@ def _definitions(tree: ast.Module):
                         yield n.id, node
 
 
-def _uses(node: ast.AST) -> Counter:
+def _loaded(tree: ast.Module) -> set[str]:
+    """Names a file reads."""
+    return {n.id for n in ast.walk(tree) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+
+
+def _uses(node: ast.AST, loaded: set[str]) -> Counter:
+    """References per name under ``node``; an import alias counts only
+    when its local name is in ``loaded``, the names its file reads."""
     c: Counter = Counter()
     for n in ast.walk(node):
         if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
             c[n.id] += 1
         elif isinstance(n, ast.Attribute):
             c[n.attr] += 1
-        elif isinstance(n, ast.alias):
+        elif isinstance(n, ast.alias) and (n.asname or n.name.split(".")[0]) in loaded:
             c[n.name.rsplit(".", 1)[-1]] += 1
     return c
 
@@ -110,13 +120,14 @@ def _scan() -> tuple[set[tuple[str, str]], set[tuple[str, str]]]:
     defs = []
     for path in _runtime_files():
         tree = ast.parse(path.read_text(), filename=str(path))
+        loaded = _loaded(tree)
         if path.name != "__init__.py":
-            uses += _uses(tree)
+            uses += _uses(tree, loaded)
         if path.is_relative_to(PKG) and path.name != "__init__.py":
             rel = path.relative_to(PKG).as_posix()
             for name, node in _definitions(tree):
                 if not (name.startswith("__") and name.endswith("__")):
-                    defs.append((rel, name, _uses(node)[name]))
+                    defs.append((rel, name, _uses(node, loaded)[name]))
     defined = {(rel, name) for rel, name, _ in defs}
     unused = {(rel, name) for rel, name, own in defs if uses[name] - own <= 0}
     return defined, unused
@@ -129,6 +140,13 @@ def test_every_package_symbol_has_a_runtime_caller():
         "module-level symbols with no caller outside tests (delete them, "
         f"or add an ALLOWED entry with its reason): {flagged}"
     )
+
+
+def test_unused_import_is_not_a_use():
+    tree = ast.parse("from m import a, b\nimport p.q as r\nimport s.t\nprint(a)\n")
+    uses = _uses(tree, _loaded(tree))
+    assert uses["a"] == 2  # the read and its import
+    assert uses["b"] == uses["q"] == uses["t"] == 0  # imported, never read
 
 
 def test_allowlist_names_exist_and_are_still_unused():
@@ -160,7 +178,7 @@ class _Constants:
 
     def __init__(self) -> None:
         self._trees = {}
-        for path in _runtime_files() + sorted((ROOT / "tests").glob("*.py")):
+        for path in _runtime_files():
             self._trees[_module_name(path)] = (path, ast.parse(path.read_text(), filename=str(path)))
         self._values: dict[str, tuple[dict, dict]] = {}
 
@@ -289,7 +307,7 @@ def _single_valued_options() -> set[tuple[str, str, str]]:
     for key, spec in options.items():
         by_function.setdefault(key[1], []).append((key, spec))
     values: dict[tuple[str, str, str], set] = {key: set() for key in options}
-    for path in _runtime_files() + sorted((ROOT / "tests").glob("*.py")):
+    for path in _runtime_files():
         module = _module_name(path)
         for call in ast.walk(ast.parse(path.read_text(), filename=str(path))):
             if not isinstance(call, ast.Call):

@@ -9,7 +9,6 @@ import hashlib
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from aws_dla_kinesis_delivery_stream_example_spark.operators import (
     curation,
@@ -28,14 +27,16 @@ _ids = st.lists(
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(ids=_ids, n_shards=st.integers(min_value=1, max_value=7), seed=st.integers(0, 99))
-def test_shard_manifest_reconciles_for_any_input(spark, ids, n_shards, seed):
-    """For ANY id set / shard count / seed: manifests partition the
-    input (counts sum to |ids|), every shard value is in range, and
-    the XOR checksum equals the independent Python fold."""
-    df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    man = sharding.shard_manifest(df, "doc_id", n_shards, seed=seed).collect()
+@given(ids=_ids, n_shards=st.integers(min_value=1, max_value=7))
+def test_shard_manifest_reconciles_for_any_input(spark, ids, n_shards):
+    """For ANY id set / shard count: manifests partition the input
+    (counts and chars sum to the input's), every shard value is in
+    range, and the XOR checksum equals the independent Python fold."""
+    df = spark.createDataFrame([(i, i % 97) for i in ids], "doc_id long, n_chars long")
+    man = sharding.shard_manifest(df, "doc_id", n_shards).collect()
     assert sum(r["n_docs"] for r in man) == len(ids)
+    assert sum(r["total_chars"] for r in man) == sum(i % 97 for i in ids)
+    seed = sharding.SHARD_SEED
     expect_xor: dict[int, int] = {}
     for i in ids:
         sh = _hash60_py(f"shard:{seed}:{i}") % n_shards
@@ -55,12 +56,9 @@ def test_snapshot_diff_is_a_partition_of_the_id_union(spark, old, new):
     (each exactly once), and each status matches the dict definition."""
     if not old and not new:
         return
-    old_df = spark.createDataFrame(
-        [(k, v) for k, v in old.items()], "doc_id long, fp long"
-    ) if old else spark.createDataFrame([], "doc_id long, fp long")
-    new_df = spark.createDataFrame(
-        [(k, v) for k, v in new.items()], "doc_id long, fp long"
-    ) if new else spark.createDataFrame([], "doc_id long, fp long")
+    schema = "doc_id long, fp long, source string, n_chars long"
+    old_df = spark.createDataFrame([(k, v, "s", 1) for k, v in old.items()], schema)
+    new_df = spark.createDataFrame([(k, v, "s", 1) for k, v in new.items()], schema)
     got = {
         r["doc_id"]: r["status"]
         for r in curation.snapshot_diff(old_df, new_df, "doc_id", "fp").collect()
@@ -87,7 +85,7 @@ def test_key_skew_audit_conservation_for_any_input(spark, keys, n_buckets):
     are conserved across buckets, and max_key_rows <= n_rows per
     bucket with the hot key's count equal to max_key_rows."""
     df = spark.createDataFrame([(k,) for k in keys], "user_id long")
-    rows = skew.key_skew_audit(df, "user_id", n_buckets).collect()
+    rows = skew.skew_rollup(skew.key_counts(df, "user_id"), n_buckets).collect()
     assert sum(r["n_rows"] for r in rows) == len(keys)
     assert sum(r["n_keys"] for r in rows) == len(set(keys))
     for r in rows:

@@ -41,7 +41,7 @@ def test_interval_join_matches_bruteforce(spark, events):
     df = _mk_df(spark, events)
     got = {
         (r["user_id"], r["l_ts"], r["r_ts"])
-        for r in SW.interval_join_counts(df).collect()
+        for r in SW.interval_join_pairs(df).collect()
     }
     expect = set()
     for u1, off1, t1 in events:

@@ -189,39 +189,30 @@ def test_q139_rotated_pass_catches_the_q138_miss(spark, snm_sf_dir):
     assert (1, 5) in model and (2, 5) in model
 
 
-def test_minhash_calibration_sampled_mod1_equals_q114(spark):
-    """The scale mode's audited face: sample_mod=1 must equal the full
-    q114 report column-for-column at smoke SF (a scale mode equals its
-    audited face wherever both are computable)."""
-    from aws_dla_kinesis_delivery_stream_example_spark.operators.dedup import (
-        minhash_calibration_sampled,
-    )
-
-    from .conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    full = SPECS["q114_minhash_calibration"].spark(spark, SF_SMOKE).collect()
-    sampled = minhash_calibration_sampled(docs).collect()
-    assert [r.asDict() for r in sampled] == [r.asDict() for r in full]
-
-
-def test_minhash_calibration_sampled_strata(spark, snm_sf_dir):
+def test_minhash_calibration_sampled_strata(spark, snm_sf_dir, tmp_path):
     """On the planted fixture the multiplicative hash puts docs
-    {1,2,3,4,9} in bucket 0 and {5,6,7,8} in bucket 1 (recomputed here
-    from the raw constant) — both planted >=0.5-jaccard truth pairs
-    (1,2) and (3,4) live in bucket 0, so the bucket-0 audit must see
-    n_truth=2 and bucket 1 must see 0; the full audit sees the same 2.
+    {1,2,3,4,9} in the audited bucket 0 and {5,6,7,8} in bucket 1
+    (recomputed here from the raw constants) — both planted
+    >=0.5-jaccard truth pairs (1,2) and (3,4) live in bucket 0, so the
+    sampled audit must see n_truth=2 and bucket 1 must see 0; the full
+    audit sees the same 2. The sampled audit equals q114's report over
+    a corpus of only the stratum's docs (a scale mode equals its
+    audited face wherever both are computable).
     """
     from aws_dla_kinesis_delivery_stream_example_spark.operators.dedup import (
         _CAL_SAMPLE_MOD,
         _CAL_SAMPLE_MULT,
+        CAL_STRATUM_BUCKET,
+        CAL_STRATUM_MOD,
+        minhash_calibration_report,
         minhash_calibration_sampled,
     )
 
     strata = {
-        d: d * _CAL_SAMPLE_MULT % _CAL_SAMPLE_MOD % 2 for d in _TOKS
+        d: d * _CAL_SAMPLE_MULT % _CAL_SAMPLE_MOD % CAL_STRATUM_MOD for d in _TOKS
     }
-    assert {d for d, b in strata.items() if b == 0} == {1, 2, 3, 4, 9}
+    stratum = {d for d, b in strata.items() if b == CAL_STRATUM_BUCKET}
+    assert stratum == {1, 2, 3, 4, 9}
     # python truth model: pairs with exact 5-shingle jaccard >= 0.5
     truth = {
         tuple(sorted(p))
@@ -230,31 +221,18 @@ def test_minhash_calibration_sampled_strata(spark, snm_sf_dir):
     }
     assert truth == {(1, 2), (3, 4)}
     docs = load_table(spark, snm_sf_dir, "documents")
-    full = minhash_calibration_sampled(docs).collect()[0]
-    b0 = minhash_calibration_sampled(
-        docs, sample_mod=2, sample_bucket=0
-    ).collect()[0]
-    b1 = minhash_calibration_sampled(
-        docs, sample_mod=2, sample_bucket=1
+    full = minhash_calibration_report(docs).collect()[0]
+    b0 = minhash_calibration_sampled(docs).collect()[0]
+    b1 = minhash_calibration_report(
+        docs.filter(~docs["doc_id"].isin(*stratum))
     ).collect()[0]
     assert full["n_truth"] == 2 and b0["n_truth"] == 2 and b1["n_truth"] == 0
     # within-stratum-only measurement: stratum truth can never exceed
     # full truth, and here (no cross-stratum truth pairs) it matches
     assert b0["n_truth"] + b1["n_truth"] <= full["n_truth"] + 0
-
-
-def test_minhash_calibration_sampled_validates_inputs(spark, snm_sf_dir):
-    from aws_dla_kinesis_delivery_stream_example_spark.operators.dedup import (
-        minhash_calibration_sampled,
-    )
-
-    docs = load_table(spark, snm_sf_dir, "documents")
-    with pytest.raises(ValueError):
-        minhash_calibration_sampled(docs, sample_mod=0)
-    with pytest.raises(ValueError):
-        minhash_calibration_sampled(docs, sample_mod=4, sample_bucket=4)
-    with pytest.raises(ValueError):
-        minhash_calibration_sampled(docs, sample_mod=2, sample_bucket=-1)
+    face_dir = _write_documents(tmp_path, [r for r in _SNM_ROWS if r[0] in stratum])
+    face = SPECS["q114_minhash_calibration"].spark(spark, face_dir).collect()
+    assert [b0.asDict()] == [r.asDict() for r in face]
 
 
 # ---------------------------------------------------------------- q140

@@ -30,7 +30,6 @@ from hypothesis import strategies as st
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
 from aws_dla_kinesis_delivery_stream_example_spark.plans.curation13 import (
     PII_KINDS,
-    pii_audit_report,
     pii_redact,
 )
 
@@ -349,7 +348,7 @@ def test_q146_dhash_on_handmade_images(spark):
     media = _bmp_df(spark, [(1001, base), (1002, near), (1003, other)])
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in dhash_near_duplicates(dhash_bands(media), max_hamming=3).collect()
+        for r in dhash_near_duplicates(dhash_bands(media)).collect()
     }
     release_staging()
     assert (1001, 1002) in pairs and pairs[(1001, 1002)] <= 1
@@ -379,7 +378,7 @@ def test_q146_dhash_ignores_subgrid_noise(spark):
     media = _bmp_df(spark, [(2001, base), (2002, noisy)])
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in dhash_near_duplicates(dhash_bands(media), max_hamming=3).collect()
+        for r in dhash_near_duplicates(dhash_bands(media)).collect()
     }
     release_staging()
     assert pairs == {(2001, 2002): 0}
@@ -428,7 +427,6 @@ def test_q146_banding_recall_guarantee():
     signatures within Hamming 3 share at least one intact 16-bit band
     — the claim that makes the band equi-join a lossless candidate
     generator for the <= 3 spec. Pure python, no SparkSession."""
-    import itertools
     import random
 
     rnd = random.Random(146)
@@ -444,7 +442,7 @@ def test_q146_banding_recall_guarantee():
         )
         assert shared, f"hamming {n_flip} pair with no shared band"
     # and the worst case exactly at the boundary: 4 flips CAN damage
-    # all 4 bands (the reason max_hamming stops at 3)
+    # all 4 bands (the reason the search radius stops at 3)
     sig = 0
     worst = sig ^ (1 | 1 << 16 | 1 << 32 | 1 << 48)
     assert not any(
@@ -501,7 +499,7 @@ def test_q146_wide_band_geometry_is_executable(spark):
         n_cand[label] = dhash_band_candidates(sigs).count()
         pairs[label] = {
             (r.doc_a, r.doc_b): r.hamming
-            for r in dhash_near_duplicates(sigs, max_hamming=3).collect()
+            for r in dhash_near_duplicates(sigs).collect()
         }
         release_staging()
     assert set(pairs["bench"]) == want_pairs
@@ -771,24 +769,6 @@ def test_q150_stream_equals_batch(spark):
 
 
 # ------------------------------------------- round-14 review fixes
-
-
-def test_q146_rejects_max_hamming_beyond_banding_guarantee(spark):
-    """max_hamming >= 4 breaks the pigeonhole recall guarantee (4
-    flips CAN damage all 4 bands), so the operator must refuse loudly
-    instead of silently dropping true pairs."""
-    import pytest as _pytest
-
-    from aws_dla_kinesis_delivery_stream_example_spark.operators.multimodal import (
-        dhash_near_duplicates,
-    )
-
-    sigs = spark.createDataFrame(
-        [(1, 0, 0, 0, 0)], "media_id long, b0 long, b1 long, b2 long, b3 long"
-    )
-    for bad in (4, 64, -1):
-        with _pytest.raises(ValueError, match="recall guarantee"):
-            dhash_near_duplicates(sigs, max_hamming=bad)
 
 
 def test_skew_rollup_rejects_nonpositive_buckets(spark):

@@ -146,7 +146,6 @@ def test_blocklist_library_mode_takes_a_real_list(spark):
 from aws_dla_kinesis_delivery_stream_example_spark.plans.curation18 import (  # noqa: E402
     MOJIBAKE_MAP,
     double_encode,
-    mojibake_audit_report,
     mojibake_repair,
 )
 

@@ -5,8 +5,8 @@ rewrite and its streaming counter twin q156 (round-15 verdict Next
 1. Library-mode fixtures on frames with REAL newlines (no plant):
    hand-computed per-doc rewrite rows (counts, tokens, kept_hash by
    pure-python recompute) and the per-source report incl. the
-   rewrite_xor fold; the df threshold edges (df == df_max keeps
-   first, df == df_max + 1 drops everywhere, first included); the
+   rewrite_xor fold; the df threshold edges (df == LINE_DF_MAX keeps
+   first, df == LINE_DF_MAX + 1 drops everywhere, first included); the
    within-doc line_idx tie-break; and identity on a duplicate-free
    corpus (rewrite == original text, removed == 0).
 2. The catalog face q155 on a written fixture dir, tuple-equal to the
@@ -111,31 +111,33 @@ def _model_report(docs, df_max):
 
 
 _FIXTURE = [
-    # (doc_id, source, text) — 'boil' sits in 4 docs (df 4 > df_max 3:
-    # boilerplate, dropped everywhere); 'repeat me' twice in d1 (df 1,
-    # the line_idx tie-break); 'shared tail' in d3/d4 (df 2: global
-    # first (d3, idx 3) beats (d4, idx 2) on doc_id).
+    # (doc_id, source, text) — 'boil' sits in LINE_DF_MAX + 1 docs
+    # (boilerplate, dropped everywhere; source-c docs only pad its df);
+    # 'repeat me' twice in d1 (df 1, the line_idx tie-break); 'shared
+    # tail' in d3/d4 (df 2: global first (d3, idx 3) beats (d4, idx 2)
+    # on doc_id).
     (1, "a", "boil\nalpha one\nrepeat me\nrepeat me"),
     (2, "a", "boil\nbeta two"),
     (3, "b", "boil\ngamma three\nshared tail"),
     (4, "b", "boil\nshared tail\ndelta four"),
-]
+] + [(i, "c", f"boil\npad {i}") for i in range(5, LINE_DF_MAX + 2)]
 
 
 def test_line_dedup_rewrite_planted_fixture(spark):
-    """Hand-computed per-doc rewrite rows at df_max=3, kept_hash by
+    """Hand-computed per-doc rewrite rows at LINE_DF_MAX, kept_hash by
     pure-python recompute — every face: boilerplate drop, within-doc
     tie-break, cross-doc keep-first, unique-line survival."""
     df = spark.createDataFrame(
         [(d, s, t) for d, s, t in _FIXTURE], _DOC_SCHEMA
     )
-    got = {r.doc_id: r for r in line_dedup_rewrite(df, df_max=3).collect()}
+    got = {r.doc_id: r for r in line_dedup_rewrite(df).collect()}
     want = {
         1: ("a", 4, 2, 7, 4, "alpha one\nrepeat me"),
         2: ("a", 2, 1, 3, 2, "beta two"),
         3: ("b", 3, 2, 5, 4, "gamma three\nshared tail"),
         4: ("b", 3, 1, 5, 2, "delta four"),
     }
+    want.update({i: ("c", 2, 1, 3, 2, f"pad {i}") for i, _, _ in _FIXTURE[4:]})
     assert set(got) == set(want)
     for did, (src, nl, nk, nt, kt, ktext) in want.items():
         r = got[did]
@@ -145,7 +147,7 @@ def test_line_dedup_rewrite_planted_fixture(spark):
         assert r.kept_hash == _h60(ktext), did
     # the model agrees with the hand computation (guards the model
     # itself before the corpus-scale test leans on it)
-    assert _model_rewrite(_FIXTURE, 3) == {
+    assert _model_rewrite(_FIXTURE, LINE_DF_MAX) == {
         d: (s, nl, nk, nt, kt, kt_text)
         for d, (s, nl, nk, nt, kt, kt_text) in want.items()
     }
@@ -155,8 +157,8 @@ def test_line_dedup_report_planted_fixture(spark):
     """The per-source audit on the same fixture: counts, milli rates,
     and the xor fold of the two rewritten docs per source."""
     df = spark.createDataFrame(_FIXTURE, _DOC_SCHEMA)
-    got = [tuple(r) for r in line_dedup_report(df, df_max=3).collect()]
-    assert got == _model_report(_FIXTURE, 3)
+    got = [tuple(r) for r in line_dedup_report(df).collect()]
+    assert got == _model_report(_FIXTURE, LINE_DF_MAX)
     # spelled out for source a: 6 lines, 3 kept, 500 milli; 10 tokens,
     # 6 kept, 400 milli; xor of the two kept texts
     assert got[0] == (
@@ -166,25 +168,26 @@ def test_line_dedup_report_planted_fixture(spark):
 
 
 def test_line_dedup_threshold_edges(spark):
-    """df == df_max keeps the global first occurrence; df == df_max+1
-    drops every occurrence, first included."""
+    """df == LINE_DF_MAX keeps the global first occurrence; df ==
+    LINE_DF_MAX + 1 drops every occurrence, first included."""
+    # 'at max' in docs 1..LINE_DF_MAX, 'over max' in docs 2..LINE_DF_MAX+2
+    n = LINE_DF_MAX
     rows = [
-        (1, "s", "at max\nfiller one"),
-        (2, "s", "at max\nover max\nfiller two"),
-        (3, "s", "at max\nover max\nfiller three"),
-        (4, "s", "over max\nfiller four"),
-        (5, "s", "over max\nfiller five"),
+        (i, "s", "\n".join(
+            (["at max"] if i <= n else []) + (["over max"] if i >= 2 else []) + [f"filler {i}"]
+        ))
+        for i in range(1, n + 3)
     ]
     df = spark.createDataFrame(rows, _DOC_SCHEMA)
-    got = {r.doc_id: r for r in line_dedup_rewrite(df, df_max=3).collect()}
-    # 'at max' df = 3 == df_max: doc 1 (global first) keeps it
-    assert got[1].kept_hash == _h60("at max\nfiller one")
-    assert got[2].kept_hash == _h60("filler two")
-    # 'over max' df = 4 > df_max: dropped even at its first home
+    got = {r.doc_id: r for r in line_dedup_rewrite(df).collect()}
+    # 'at max' df == LINE_DF_MAX: doc 1 (global first) keeps it
+    assert got[1].kept_hash == _h60("at max\nfiller 1")
+    assert got[2].kept_hash == _h60("filler 2")
+    # 'over max' df == LINE_DF_MAX + 1: dropped even at its first home
     assert got[2].n_kept == 1 and got[3].n_kept == 1
-    assert got[4].kept_hash == _h60("filler four")
-    assert [tuple(r) for r in line_dedup_report(df, df_max=3).collect()] == (
-        _model_report(rows, 3)
+    assert got[n + 2].kept_hash == _h60(f"filler {n + 2}")
+    assert [tuple(r) for r in line_dedup_report(df).collect()] == (
+        _model_report(rows, LINE_DF_MAX)
     )
 
 
@@ -326,15 +329,13 @@ def test_line_dedup_library_zero_line_source(spark):
 
 
 def test_line_counters_finalize_df_max_parameter(spark):
-    """The counter face mirrors the batch faces' df_max parameter
-    (round-16 review): at df_max=3 it must agree with the rewrite
-    report on the planted fixture, column-for-column minus the
-    batch-only rewrite_xor."""
+    """The counter face applies the batch faces' df_max threshold
+    (LINE_DF_MAX): on the planted fixture it must agree with the
+    rewrite report, column-for-column minus the batch-only
+    rewrite_xor."""
     df = spark.createDataFrame(_FIXTURE, _DOC_SCHEMA)
-    got = [
-        tuple(r) for r in line_finalize(line_counters(df), df_max=3).collect()
-    ]
-    assert got == [r[:-1] for r in _model_report(_FIXTURE, 3)]
+    got = [tuple(r) for r in line_finalize(line_counters(df)).collect()]
+    assert got == [r[:-1] for r in _model_report(_FIXTURE, LINE_DF_MAX)]
 
 
 # ----------------------------------------- round-16 second batch: q157/q158

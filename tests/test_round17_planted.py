@@ -7,10 +7,7 @@ its streaming twin q160.
    and per-doc buckets exercising EVERY scoring path — seen pair,
    unseen pair with in-vocabulary backoff, unseen-pair OOV (the
    model's strict maximum), and the BOS first-position pair.
-2. KenLM-style pruning (``min_pair_count``): pruned pairs take the
-   backoff path while context/unigram denominators keep full mass,
-   and g2 becomes the retained-pair mean — all hand-computed; the
-   prune-everything and empty-reference guards raise loudly.
+2. The empty-reference guard raises loudly.
 3. The catalog face q159 on a written fixture dir, tuple-equal to the
    DuckDB oracle on that fixture (the q151/q153/q157 convention).
 4. A full pure-python MODEL of the semantics (plant + pairing + model
@@ -55,17 +52,12 @@ def _pairs_of(text: str) -> list[tuple[str, str]]:
     return list(zip([BOS] + ts[:-1], ts))
 
 
-def _model_bigram_report(
-    docs: list[tuple[int, str, str]],
-    ref_source: str,
-    min_pair_count: int = 1,
-):
+def _model_bigram_report(docs: list[tuple[int, str, str]], ref_source: str):
     """Pure-python model of the q159 semantics (NO plant — callers
-    pass already-augmented text): bigram-backoff model on ref_source
-    with optional KenLM-style pruning, integer surprisal via
-    int.bit_length(), milli mean, cross-multiplied buckets vs the
-    retained-pair mean g2, per-(source, bucket) rollup in q159's
-    column order."""
+    pass already-augmented text): bigram-backoff model on ref_source,
+    integer surprisal via int.bit_length(), milli mean,
+    cross-multiplied buckets vs the pair mean g2, per-(source, bucket)
+    rollup in q159's column order."""
     cnt2: dict[tuple[str, str], int] = {}
     for _, src, text in docs:
         if src == ref_source:
@@ -77,15 +69,13 @@ def _model_bigram_report(
     for (p, t), c in cnt2.items():
         ctx[p] = ctx.get(p, 0) + c
         voc[t] = voc.get(t, 0) + c
-    kept = {k: c for k, c in cnt2.items() if c >= min_pair_count}
-    n_pos = sum(kept.values())
     g2 = (
         1000
         * sum(
             c * (ctx[p].bit_length() - c.bit_length())
-            for (p, _), c in kept.items()
+            for (p, _), c in cnt2.items()
         )
-        // n_pos
+        // n_ref
     )
     bl_n = n_ref.bit_length()
     per = {}
@@ -95,8 +85,8 @@ def _model_bigram_report(
             continue
         sm = 0
         for p, t in ps:
-            if (p, t) in kept:
-                sm += ctx[p].bit_length() - kept[(p, t)].bit_length()
+            if (p, t) in cnt2:
+                sm += ctx[p].bit_length() - cnt2[(p, t)].bit_length()
             else:
                 s1 = (bl_n - voc[t].bit_length()) if t in voc else bl_n + 1
                 sm += 1 + s1
@@ -178,49 +168,14 @@ def test_bigram_buckets_every_scoring_path(spark):
     assert asd[("r", "middle")] == (1, 8)    # the reference's own doc
 
 
-def test_bigram_pruning_full_mass_denominators(spark):
-    """min_pair_count=2 prunes (^,aa) and (aa,cc): they take the
-    backoff path while ctx/vocab keep FULL mass (true denominators)
-    and g2 becomes the retained-pair mean — all hand-computed.
-    Retained: (aa,bb):3 s=1, (bb,aa):3 s=0 -> n_pos=6, g2 = 500.
-    The ref text under the pruned model: (^,aa) backoff 1+s1(aa)=2,
-    3x(aa,bb)=3, 3x(bb,aa)=0, (aa,cc) backoff 1+s1(cc)=4 -> sum 9,
-    m = 1125."""
-    rows = [(1, "r", _REF_TEXT), (2, "d", _REF_TEXT)]
-    df = spark.createDataFrame(rows, _DOC_SCHEMA)
-    ref = df.filter("source = 'r'")
-    pairs, ctx, vocab, n_ref, g2 = bigram_model(ref, min_pair_count=2)
-    assert n_ref == 8 and g2 == 500
-    assert {(r.prev, r.tok): r.cnt2 for r in pairs.collect()} == {
-        ("aa", "bb"): 3, ("bb", "aa"): 3,
-    }
-    # full-mass denominators survive the prune
-    assert {r.prev: r.ctxn for r in ctx.collect()} == {BOS: 1, "aa": 4, "bb": 3}
-    assert {r.tok: r.cnt for r in vocab.collect()} == {"aa": 4, "bb": 3, "cc": 1}
-    got = [
-        tuple(r)
-        for r in bigram_bucket_report(df, ref, min_pair_count=2).collect()
-    ]
-    assert got == _model_bigram_report(rows, "r", min_pair_count=2)
-    # m = 1125 vs g2 = 500: 10*1125 >= 11*500 -> both docs tail
-    assert [(r[0], r[1], r[2]) for r in got] == [
-        ("d", "tail", 1), ("r", "tail", 1),
-    ]
-
-
 def test_bigram_guards_raise(spark):
-    """Empty reference and prune-everything are loud errors (no silent
-    divide-by-zero, no all-OOV model), and the floor is validated."""
+    """An empty reference is a loud error (no silent divide-by-zero,
+    no all-OOV model)."""
     import pytest as _pytest
 
     df = spark.createDataFrame([(1, "d", "aa bb")], _DOC_SCHEMA)
     with _pytest.raises(ValueError, match="empty reference"):
         bigram_model(df.filter("source = 'nope'"))
-    ref = spark.createDataFrame([(1, "r", _REF_TEXT)], _DOC_SCHEMA)
-    with _pytest.raises(ValueError, match="prunes every pair"):
-        bigram_model(ref, min_pair_count=10)
-    with _pytest.raises(ValueError, match="min_pair_count"):
-        bigram_model(ref, min_pair_count=0)
 
 
 def test_bigram_pairs_position_count_and_bos(spark):

@@ -33,27 +33,31 @@ def _docs(spark, rows):
 # ---------------------------------------------------------------- q103
 
 
+def _chunk(tag: str, n: int = curation.DEDUP_CHUNK_TOKENS) -> str:
+    return " ".join(f"{tag}{i}" for i in range(n))
+
+
 def test_chunk_dedup_rewrite_planted(spark):
-    """Hand-computed rewrite on 3-token chunks: doc 1 owns both its
-    chunks (first occurrence by min doc_id), doc 2 loses its copied
-    head chunk but keeps its own tail, doc 3 is a full duplicate of
-    doc 1 and is rewritten to empty, doc 4 is empty input, doc 5's
-    head chunk duplicates doc 1's TAIL chunk (cross-position dedup)."""
+    """Hand-computed rewrite on 16-token chunks A, B, X: doc 1 (A B)
+    owns both its chunks (first occurrence by min doc_id), doc 2 (A X)
+    loses its copied head chunk but keeps its own tail, doc 3 is a full
+    duplicate of doc 1 and is rewritten to empty, doc 4 is empty input,
+    doc 5's head chunk duplicates doc 1's TAIL chunk (cross-position
+    dedup) and its one-token tail survives."""
+    a, b, x = _chunk("a"), _chunk("b"), _chunk("x")
     df = _docs(
         spark,
         [
-            (1, "a b c d e f", "s"),
-            (2, "a b c x y z", "s"),
-            (3, "a b c d e f", "s"),
+            (1, f"{a} {b}", "s"),
+            (2, f"{a} {x}", "s"),
+            (3, f"{a} {b}", "s"),
             (4, "", "s"),
-            (5, "d e f g", "s"),
+            (5, f"{b} g", "s"),
         ],
     )
     out = {
         r["doc_id"]: r.asDict()
-        for r in curation.chunk_dedup_rewrite(
-            df, "doc_id", "text", chunk_tokens=3
-        ).collect()
+        for r in curation.chunk_dedup_rewrite(df, "doc_id", "text").collect()
     }
     assert set(out) == {1, 2, 3, 4, 5}
     assert out[1] == {
@@ -61,10 +65,10 @@ def test_chunk_dedup_rewrite_planted(spark):
         "n_chunks": 2,
         "n_kept": 2,
         "removed_frac": 0.0,
-        "kept_hash": _h60("a b c d e f"),
+        "kept_hash": _h60(f"{a} {b}"),
     }
     assert out[2]["n_kept"] == 1 and out[2]["removed_frac"] == 0.5
-    assert out[2]["kept_hash"] == _h60("x y z")
+    assert out[2]["kept_hash"] == _h60(x)
     assert out[3]["n_kept"] == 0 and out[3]["removed_frac"] == 1.0
     assert out[3]["kept_hash"] == _h60("")
     assert out[4] == {
@@ -74,7 +78,7 @@ def test_chunk_dedup_rewrite_planted(spark):
         "removed_frac": None,
         "kept_hash": _h60(""),
     }
-    # doc 5: "d e f" duplicates doc 1's SECOND chunk; only "g" survives
+    # doc 5: B duplicates doc 1's SECOND chunk; only "g" survives
     assert out[5]["n_chunks"] == 2 and out[5]["n_kept"] == 1
     assert out[5]["kept_hash"] == _h60("g")
 
@@ -99,9 +103,7 @@ def test_weighted_sample_matches_single_stage_brute_force(spark):
     df = spark.createDataFrame(rows, "source string, doc_id long, w long")
     got = [
         (r["source"], r["rnk"], r["doc_id"], r["w"])
-        for r in sampling.weighted_sample(
-            df, "source", "doc_id", F.col("w"), k=4, n_salt=8
-        )
+        for r in sampling.weighted_sample(df, "source", "doc_id", F.col("w"), k=4)
         .orderBy("source", "rnk")
         .collect()
     ]
@@ -164,21 +166,21 @@ def test_rolling_zscore_excludes_zero_variance_windows(spark):
 
 
 def test_source_overlap_planted_matrix(spark):
-    """Three sources on word bigrams: a == b (Jaccard 1), c shares one
-    bigram with each (Jaccard 1/4, containment 1/2), and the shared
-    'w1 w2' bigram carried by all three exercises the upper-triangle
+    """Three sources on word 5-grams: a == b (Jaccard 1), c shares one
+    5-gram with each (Jaccard 1/4, containment 1/2), and the shared
+    'w1 .. w5' 5-gram carried by all three exercises the upper-triangle
     explode (sources array [a,b,c] -> pairs ab, ac, bc)."""
     df = _docs(
         spark,
         [
-            (1, "w1 w2 w3", "a"),
-            (2, "w1 w2 w3", "b"),
-            (3, "w1 w2 q9 q8", "c"),
+            (1, "w1 w2 w3 w4 w5 w6", "a"),
+            (2, "w1 w2 w3 w4 w5 w6", "b"),
+            (3, "w1 w2 w3 w4 w5 q9 q8", "c"),
         ],
     )
     out = {
         (r["src_a"], r["src_b"]): r.asDict()
-        for r in curation.source_overlap(df, "source", "text", n=2).collect()
+        for r in curation.source_overlap(df, "source", "text").collect()
     }
     assert set(out) == {("a", "b"), ("a", "c"), ("b", "c")}
     ab = out[("a", "b")]
@@ -206,7 +208,7 @@ def test_pagerank_fixed_point_hand_lattice(spark):
     )
     out = {
         r["doc"]: r.asDict()
-        for r in graph.pagerank_fixed_point(pairs, iters=3).collect()
+        for r in graph.pagerank_fixed_point(pairs).collect()
     }
     assert out[1] == {"doc": 1, "degree": 1, "rank_u": 629187}
     assert out[2] == {"doc": 2, "degree": 2, "rank_u": 1741625}
@@ -214,36 +216,37 @@ def test_pagerank_fixed_point_hand_lattice(spark):
 
 
 def test_shared_shingle_pairs_equals_threshold0_jaccard(spark):
-    """q107's edge derivation (round-17 fast path): shared_shingle_pairs
-    must return exactly shingle_jaccard_pairs(threshold=0) projected to
-    (doc_a, doc_b) — same shingling, same max_df valve, minus the dead
-    jaccard arithmetic. Checked with and without the df cap on a corpus
-    that exercises both branches (a boilerplate shingle shared by many
-    docs, plus rare-shingle near-dups)."""
+    """q107's edge derivation: shared_shingle_pairs must return exactly
+    shingle_jaccard_pairs(threshold=0) projected to (doc_a, doc_b) —
+    same shingling, same max_df valve, minus the dead jaccard
+    arithmetic. The corpus exercises the df cap: a boilerplate run
+    shared by more docs than the cap (its shingles are dropped, so
+    those docs pair only through rare shingles), plus rare-shingle
+    near-dups."""
     from aws_dla_kinesis_delivery_stream_example_spark.operators import dedup
     from aws_dla_kinesis_delivery_stream_example_spark.operators.staging import (
         release_staging,
     )
 
+    cap = dedup._SHARED_MAX_DF
     boiler = "the quick brown fox jumps over the lazy dog"
-    rows = [(i, boiler + f" unique tail {i} alpha beta gamma delta") for i in range(6)]
-    rows += [(10, "one two three four five six seven"), (11, "one two three four five six eight")]
+    rows = [(i, boiler + f" unique tail {i} alpha beta gamma delta") for i in range(cap + 2)]
+    rows += [(100, "one two three four five six seven"), (101, "one two three four five six eight")]
+    # two boilerplate docs that also share a rare tail
+    rows += [(102, boiler + " rare tail shared here too"), (103, boiler + " rare tail shared here too")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     try:
-        for cap in (None, 3):
-            fast = {
-                (r.doc_a, r.doc_b)
-                for r in dedup.shared_shingle_pairs(
-                    docs, "doc_id", "text", max_df=cap
-                ).collect()
-            }
-            full = {
-                (r.doc_a, r.doc_b)
-                for r in dedup.shingle_jaccard_pairs(
-                    docs, "doc_id", "text", threshold=0.0, max_df=cap
-                ).collect()
-            }
-            assert fast == full and fast, (cap, fast, full)
+        fast = {
+            (r.doc_a, r.doc_b)
+            for r in dedup.shared_shingle_pairs(docs, "doc_id", "text").collect()
+        }
+        full = {
+            (r.doc_a, r.doc_b)
+            for r in dedup.shingle_jaccard_pairs(
+                docs, "doc_id", "text", threshold=0.0, max_df=cap
+            ).collect()
+        }
+        assert fast == full == {(100, 101), (102, 103)}, (fast, full)
     finally:
         release_staging()
 
@@ -255,6 +258,6 @@ def test_pagerank_symmetric_mass_and_isolated_pair(spark):
     pairs = spark.createDataFrame([(7, 8)], "doc_a long, doc_b long")
     out = {
         r["doc"]: r["rank_u"]
-        for r in graph.pagerank_fixed_point(pairs, iters=3).collect()
+        for r in graph.pagerank_fixed_point(pairs).collect()
     }
     assert out == {7: graph.PR_INIT, 8: graph.PR_INIT}

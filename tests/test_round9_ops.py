@@ -1,7 +1,6 @@
-"""Round-9 hardening tests: weighted_sample input guards, PageRank
-lineage truncation at iters >> 3, the q108 watermark late-drop
-contract, and the multi-chunk ordering fix inside the streaming
-z-score state function (the round-8 ADVICE medium finding)."""
+"""Hardening tests: weighted_sample input guards, the q108 watermark
+late-drop contract, and the multi-chunk ordering of the streaming
+z-score state function."""
 
 from __future__ import annotations
 
@@ -14,7 +13,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from aws_dla_kinesis_delivery_stream_example_spark.operators import graph, sampling
+from aws_dla_kinesis_delivery_stream_example_spark.operators import sampling
 
 
 # ------------------------------------------------------- q104 guards
@@ -41,31 +40,6 @@ def test_weighted_sample_rejects_nonpositive_weight(spark):
         )
         with pytest.raises(Exception, match="non-positive weight"):
             sampling.weighted_sample(df, "source", "doc_id", F.col("w"), k=2).collect()
-
-
-# --------------------------------------------- q107 lineage truncation
-
-
-def test_pagerank_checkpoint_bounds_plan_size(spark):
-    """At iters=6 the localCheckpoint every `checkpoint_every`
-    iterations must (a) keep the optimized plan tree bounded instead
-    of nesting one join/agg level per iteration, and (b) leave the
-    integer-lattice ranks bit-identical to the uncheckpointed loop."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)], "doc_a long, doc_b long"
-    )
-    ck = graph.pagerank_fixed_point(pairs, iters=6, checkpoint_every=2)
-    no_ck = graph.pagerank_fixed_point(pairs, iters=6, checkpoint_every=100)
-    plan_ck = str(ck._jdf.queryExecution().optimizedPlan())
-    plan_no = str(no_ck._jdf.queryExecution().optimizedPlan())
-    # the checkpointed plan covers <= checkpoint_every iterations of
-    # lineage; the unbounded one covers all six
-    assert len(plan_ck) < len(plan_no) / 2, (
-        f"checkpoint did not truncate lineage: {len(plan_ck)} vs {len(plan_no)}"
-    )
-    got = {(r.doc, r.degree, r.rank_u) for r in ck.collect()}
-    want = {(r.doc, r.degree, r.rank_u) for r in no_ck.collect()}
-    assert got == want and len(got) == 4
 
 
 # ------------------------------------------ q108 watermark late drop

@@ -6,7 +6,6 @@ Spark plan)."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from aws_dla_kinesis_delivery_stream_example_spark.operators import (
     curation,
@@ -74,20 +73,22 @@ def test_int8_quantize_and_qdot_planted(spark):
 def test_audio_roundtrip_energy_planted(spark):
     """Synthesize one clip with a KNOWN waveform through the real WAV
     encode->decode round-trip and hand-compute the frame energies.
-    doc_id=0, n_chars=5 -> samples v(i) = (7i % 201) - 100 for i<5 =
-    [-100, -93, -86, -79, -72]; frame_samples=4 -> two frames:
-    [-100,-93,-86,-79] energy 32406+... compute exactly below."""
-    docs = spark.createDataFrame([(0, "x", "s", 5)], "doc_id long, text string, source string, n_chars long")
+    doc_id=0, n_chars=300 -> samples v(i) = (7i % 201) - 100 for
+    i<300; 256-sample frames -> one full frame and a ragged 44-sample
+    one, energies computed exactly below."""
+    docs = spark.createDataFrame([(0, "x", "s", 300)], "doc_id long, text string, source string, n_chars long")
     audio = multimodal.synthesize_audio(docs)
-    [r] = multimodal.audio_frame_energy(audio, frame_samples=4).collect()
-    v = [(0 * 31 + i * 7) % 201 - 100 for i in range(5)]
-    f1 = sum(x * x for x in v[:4])
-    f2 = v[4] * v[4]
-    assert r["n_samples"] == 5
+    [r] = multimodal.audio_frame_energy(audio).collect()
+    frame = multimodal.AUDIO_FRAME
+    v = [(0 * 31 + i * 7) % 201 - 100 for i in range(300)]
+    f1 = sum(x * x for x in v[:frame])
+    f2 = sum(x * x for x in v[frame:])
+    assert r["n_samples"] == 300
     assert r["n_frames"] == 2
     assert r["total_energy"] == f1 + f2
     assert r["peak_frame_energy"] == max(f1, f2)
-    # frame1: energy/len = f1/4 ~ 7803 >= 100 (loud); frame2: 5184 (loud)
+    # both frames average far above 100 per sample (loud)
+    assert f1 >= 100 * frame and f2 >= 100 * (300 - frame)
     assert r["n_silent"] == 0
 
 
@@ -96,10 +97,10 @@ def test_audio_silence_detection(spark):
     frames: feed a hand-built WAV of zeros through the decode path."""
     from aws_dla_kinesis_delivery_stream_example_spark.operators import codecs
 
-    payload = codecs.encode_wav(np.zeros(10, dtype="<i2"))
+    payload = codecs.encode_wav(np.zeros(600, dtype="<i2"))
     media = spark.createDataFrame([(7, payload)], "media_id long, payload binary")
-    [r] = multimodal.audio_frame_energy(media, frame_samples=4).collect()
-    assert (r["n_samples"], r["n_frames"]) == (10, 3)
+    [r] = multimodal.audio_frame_energy(media).collect()
+    assert (r["n_samples"], r["n_frames"]) == (600, 3)  # 256 + 256 + ragged 88
     assert r["total_energy"] == 0 and r["n_silent"] == 3
 
 
@@ -125,7 +126,7 @@ def test_countmin_estimates_exact_on_sparse_vocab(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["token"]: (r["exact_n"], r["cms_est"], r["overestimate_ok"])
-        for r in sketch.countmin_heavy_hitters(df, k=3).collect()
+        for r in sketch.countmin_heavy_hitters(df).collect()
     }
     assert got == {
         "apple": (3, 3, True),

@@ -52,7 +52,7 @@ def test_fuzzy_contamination_matches_exhaustive_python(spark):
         else:
             cand.append((c, " ".join(rng.choice(vocab) for _ in range(12))))
 
-    n, max_milli = 3, 400
+    n, max_milli = curation.CONTAM_N, curation.FUZZY_MAX_DIST_MILLI
     expect: dict[int, tuple] = {}
     for cid, ctext in cand:
         csh = _shingles_py(ctext, n)
@@ -78,9 +78,7 @@ def test_fuzzy_contamination_matches_exhaustive_python(spark):
             r["best_lev_milli"],
             r["best_bench"],
         )
-        for r in curation.fuzzy_contamination(
-            cand_df, bench_df, "doc_id", "text", n=n, max_dist_milli=max_milli
-        ).collect()
+        for r in curation.fuzzy_contamination(cand_df, bench_df, "doc_id", "text").collect()
     }
     assert got == expect
     assert expect, "seed produced no contaminated docs — test is vacuous"
@@ -102,8 +100,9 @@ def test_snapshot_diff_matches_exhaustive_python(spark):
             expect[i] = "changed"
         else:
             expect[i] = "unchanged"
-    old_df = spark.createDataFrame(list(old.items()), "doc_id long, fp long")
-    new_df = spark.createDataFrame(list(new.items()), "doc_id long, fp long")
+    schema = "doc_id long, fp long, source string, n_chars long"
+    old_df = spark.createDataFrame([(k, v, "s", 1) for k, v in old.items()], schema)
+    new_df = spark.createDataFrame([(k, v, "s", 1) for k, v in new.items()], schema)
     got = {
         r["doc_id"]: r["status"]
         for r in curation.snapshot_diff(old_df, new_df, "doc_id", "fp").collect()
@@ -117,7 +116,7 @@ def test_key_skew_audit_matches_exhaustive_python(spark):
     struct-max hot keys must equal the Counter-based Python audit."""
     rng = random.Random(3)
     keys = [rng.randrange(1, 40) ** 2 % 37 for _ in range(500)]
-    n_buckets = 8
+    n_buckets = skew.SKEW_BUCKETS
     counts: dict[int, int] = {}
     for k in keys:
         counts[k] = counts.get(k, 0) + 1
@@ -132,7 +131,7 @@ def test_key_skew_audit_matches_exhaustive_python(spark):
         e["max_key_rows"] = max(e["max_key_rows"], c)
         e["hot"] = max(e["hot"], (c, k))
     df = spark.createDataFrame([(k,) for k in keys], "user_id long")
-    got = {r["bucket"]: r for r in skew.key_skew_audit(df, "user_id", n_buckets).collect()}
+    got = {r["bucket"]: r for r in skew.key_skew_audit(df, "user_id").collect()}
     assert set(got) == set(expect)
     for b, e in expect.items():
         r = got[b]

@@ -26,18 +26,18 @@ def _hash60_py(s: str) -> int:
 
 
 def test_assign_shards_matches_python_hash(spark):
-    """Shard and order key are pure functions of (seed, id): the Spark
-    values must equal an independent Python md5 computation, and the
-    two hash streams must be domain-separated (different tags)."""
+    """Shard and order key are pure functions of (SHARD_SEED, id): the
+    Spark values must equal an independent Python md5 computation, and
+    the two hash streams must be domain-separated (different tags)."""
     df = spark.createDataFrame([(7,), (8,)], "doc_id long")
-    rows = {r["doc_id"]: r for r in sharding.assign_shards(df, "doc_id", 4, seed=9).collect()}
+    rows = {r["doc_id"]: r for r in sharding.assign_shards(df, "doc_id", 4).collect()}
     for i in (7, 8):
-        assert rows[i]["shard"] == _hash60_py(f"shard:9:{i}") % 4
-        assert rows[i]["order_key"] == _hash60_py(f"order:9:{i}")
+        assert rows[i]["shard"] == _hash60_py(f"shard:17:{i}") % 4
+        assert rows[i]["order_key"] == _hash60_py(f"order:17:{i}")
         # domain separation: shard hash != order hash for the same id
         assert rows[i]["order_key"] % 4 != rows[i]["shard"] or _hash60_py(
-            f"order:9:{i}"
-        ) != _hash60_py(f"shard:9:{i}")
+            f"order:17:{i}"
+        ) != _hash60_py(f"shard:17:{i}")
 
 
 def test_shard_manifest_planted_and_partitioning_invariant(spark):
@@ -49,7 +49,7 @@ def test_shard_manifest_planted_and_partitioning_invariant(spark):
     df = spark.createDataFrame([(i, 10 + i) for i in ids], "doc_id long, n_chars long")
     man = {
         r["shard"]: r
-        for r in sharding.shard_manifest(df, "doc_id", 3, seed=17, chars_col="n_chars").collect()
+        for r in sharding.shard_manifest(df, "doc_id", 3).collect()
     }
     expect: dict[int, list[int]] = {}
     for i in ids:
@@ -69,9 +69,7 @@ def test_shard_manifest_planted_and_partitioning_invariant(spark):
     # layout invariance: 7-way round-robin repartition, same manifest
     man2 = {
         r["shard"]: r
-        for r in sharding.shard_manifest(
-            df.repartition(7), "doc_id", 3, seed=17, chars_col="n_chars"
-        ).collect()
+        for r in sharding.shard_manifest(df.repartition(7), "doc_id", 3).collect()
     }
     assert {k: v.asDict() for k, v in man.items()} == {
         k: v.asDict() for k, v in man2.items()
@@ -89,24 +87,24 @@ def test_assign_shards_rejects_bad_shard_count(spark):
 
 def test_snapshot_diff_planted(spark):
     """1 only-old (removed), 2 same fp (unchanged), 3 fp differs
-    (changed), 4 only-new (added); keep_cols prefer the NEW side."""
+    (changed), 4 only-new (added); source / n_chars prefer the NEW side."""
     old = spark.createDataFrame(
-        [(1, 11, "a"), (2, 22, "b"), (3, 33, "c")],
-        "doc_id long, fp long, src string",
+        [(1, 11, "a", 10), (2, 22, "b", 20), (3, 33, "c", 30)],
+        "doc_id long, fp long, source string, n_chars long",
     )
     new = spark.createDataFrame(
-        [(2, 22, "b"), (3, 34, "c2"), (4, 44, "d")],
-        "doc_id long, fp long, src string",
+        [(2, 22, "b", 20), (3, 34, "c2", 31), (4, 44, "d", 40)],
+        "doc_id long, fp long, source string, n_chars long",
     )
     got = {
-        r["doc_id"]: (r["status"], r["src"])
-        for r in curation.snapshot_diff(old, new, "doc_id", "fp", keep_cols=("src",)).collect()
+        r["doc_id"]: (r["status"], r["source"], r["n_chars"])
+        for r in curation.snapshot_diff(old, new, "doc_id", "fp").collect()
     }
     assert got == {
-        1: ("removed", "a"),
-        2: ("unchanged", "b"),
-        3: ("changed", "c2"),  # freshest metadata wins
-        4: ("added", "d"),
+        1: ("removed", "a", 10),
+        2: ("unchanged", "b", 20),
+        3: ("changed", "c2", 31),  # freshest metadata wins
+        4: ("added", "d", 40),
     }
 
 
@@ -114,8 +112,9 @@ def test_snapshot_diff_null_fingerprints_classify_unchanged(spark):
     """NULL fingerprints (NULL-text docs) on both sides: NULL != NULL
     is NULL, so the CASE falls through to 'unchanged' — identically on
     Spark and DuckDB (documented degenerate rule in q116)."""
-    old = spark.createDataFrame([(1, None)], "doc_id long, fp long")
-    new = spark.createDataFrame([(1, None)], "doc_id long, fp long")
+    schema = "doc_id long, fp long, source string, n_chars long"
+    old = spark.createDataFrame([(1, None, "s", 1)], schema)
+    new = spark.createDataFrame([(1, None, "s", 1)], schema)
     [r] = curation.snapshot_diff(old, new, "doc_id", "fp").collect()
     assert r["status"] == "unchanged"
 
@@ -124,10 +123,11 @@ def test_snapshot_diff_null_fingerprints_classify_unchanged(spark):
 
 
 def test_key_skew_audit_planted_single_bucket(spark):
-    """n_buckets=1 folds everything into bucket 0: totals and the
-    hottest key are hand-checkable."""
+    """One bucket folds everything into bucket 0: totals and the
+    hottest key are hand-checkable (the audit's rollup phase at
+    n_buckets=1)."""
     df = spark.createDataFrame([(k,) for k in [1, 1, 1, 2, 3]], "user_id long")
-    [r] = skew.key_skew_audit(df, "user_id", n_buckets=1).collect()
+    [r] = skew.skew_rollup(skew.key_counts(df, "user_id"), 1).collect()
     assert (r["bucket"], r["n_rows"], r["n_keys"], r["max_key_rows"]) == (0, 5, 3, 3)
     assert (r["hot_key"], r["hot_key_rows"]) == (1, 3)
 
@@ -137,7 +137,7 @@ def test_key_skew_audit_tie_breaks_to_larger_key(spark):
     — deterministic across engines and partitionings (no max_by tie
     nondeterminism)."""
     df = spark.createDataFrame([(5,), (5,), (9,), (9,)], "user_id long")
-    [r] = skew.key_skew_audit(df, "user_id", n_buckets=1).collect()
+    [r] = skew.skew_rollup(skew.key_counts(df, "user_id"), 1).collect()
     assert (r["hot_key"], r["hot_key_rows"]) == (9, 2)
 
 
@@ -145,15 +145,10 @@ def test_key_skew_audit_row_conservation(spark):
     """sum(n_rows) over buckets == input rows; every key lands in
     exactly one bucket."""
     df = spark.createDataFrame([(i % 13,) for i in range(100)], "user_id long")
-    rows = skew.key_skew_audit(df, "user_id", n_buckets=4).collect()
+    rows = skew.key_skew_audit(df, "user_id").collect()
     assert sum(r["n_rows"] for r in rows) == 100
     assert sum(r["n_keys"] for r in rows) == 13
-
-
-def test_key_skew_audit_rejects_bad_bucket_count(spark):
-    df = spark.createDataFrame([(1,)], "user_id long")
-    with pytest.raises(ValueError, match="n_buckets"):
-        skew.key_skew_audit(df, "user_id", n_buckets=0)
+    assert all(0 <= r["bucket"] < skew.SKEW_BUCKETS for r in rows)
 
 
 # ---------------------------------------------------------------- q119
@@ -176,9 +171,7 @@ def test_fuzzy_contamination_planted(spark):
         ],
         "doc_id long, text string",
     )
-    rows = curation.fuzzy_contamination(
-        cand, bench, "doc_id", "text", n=4, max_dist_milli=300
-    ).collect()
+    rows = curation.fuzzy_contamination(cand, bench, "doc_id", "text").collect()
     assert [r["doc_id"] for r in rows] == [10]
     [r] = rows
     assert r["best_bench"] == 1 and r["n_blocked"] == 1 and r["n_fuzzy"] == 1
@@ -200,9 +193,7 @@ def test_fuzzy_contamination_best_is_min_struct(spark):
         [(10, "alpha beta gamma delta epsilon zeta eta iota")],
         "doc_id long, text string",
     )
-    [r] = curation.fuzzy_contamination(
-        cand, bench, "doc_id", "text", n=4, max_dist_milli=300
-    ).collect()
+    [r] = curation.fuzzy_contamination(cand, bench, "doc_id", "text").collect()
     # exact match with bench 2 (lev 0) beats bench 1 (lev 5)
     assert (r["best_lev_milli"], r["best_bench"]) == (0, 2)
     assert r["n_blocked"] == 2 and r["n_fuzzy"] == 2
@@ -235,7 +226,7 @@ def test_streaming_shard_manifest_multibatch_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/b*")
     )
-    out = sharding.shard_manifest(stream, "doc_id", 4, seed=17, chars_col="n_chars")
+    out = sharding.shard_manifest(stream, "doc_id", 4)
     q = (
         out.writeStream.outputMode("complete")
         .format("memory")
@@ -251,9 +242,7 @@ def test_streaming_shard_manifest_multibatch_equals_batch(spark, tmp_path):
     }
     want = {
         r["shard"]: r.asDict()
-        for r in sharding.shard_manifest(
-            docs, "doc_id", 4, seed=17, chars_col="n_chars"
-        ).collect()
+        for r in sharding.shard_manifest(docs, "doc_id", 4).collect()
     }
     assert got == want
     assert len(want) == 4  # all shards populated -> the check is non-vacuous
@@ -322,7 +311,7 @@ def test_streaming_shard_manifest_checkpoint_exactly_once(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, n_chars long").parquet(
             src + "/b*"
         )
-        out = sharding.shard_manifest(stream, "doc_id", 4, seed=17, chars_col="n_chars")
+        out = sharding.shard_manifest(stream, "doc_id", 4)
         q = (
             out.writeStream.outputMode("complete")
             .format("memory")
@@ -346,9 +335,7 @@ def test_streaming_shard_manifest_checkpoint_exactly_once(spark, tmp_path):
     third = drain("shard_rerun_3")
     want = {
         r["shard"]: r.asDict()
-        for r in sharding.shard_manifest(
-            docs, "doc_id", 4, seed=17, chars_col="n_chars"
-        ).collect()
+        for r in sharding.shard_manifest(docs, "doc_id", 4).collect()
     }
     assert third == want
     assert sum(m["n_docs"] for m in third.values()) == 50
@@ -413,7 +400,7 @@ def test_shard_mixture_audit_conserves_and_bounds(spark):
     import aws_dla_kinesis_delivery_stream_example_spark.operators.sharding as sh
     from pyspark.sql import functions as F
 
-    assigned = sh.assign_shards(df, "doc_id", 8, seed=17)
+    assigned = sh.assign_shards(df, "doc_id", 8)
     cells = assigned.groupBy("shard", "source").agg(F.count(F.lit(1)).alias("n")).collect()
     assert sum(r["n"] for r in cells) == 400
     spec = all_specs()["q125_shard_mixture_audit"]

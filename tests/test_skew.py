@@ -36,7 +36,6 @@ def test_salted_agg_equals_plain(spark):
                 "mn": ("min", "l_quantity"),
                 "mx": ("max", "l_quantity"),
             },
-            n_salts=8,
         ).collect()
     }
     assert salted == plain

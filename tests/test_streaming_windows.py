@@ -143,8 +143,8 @@ def test_interval_join_stream_equals_batch(spark, events_parquet):
     """q73's operator: inner stream-stream interval joins emit matches
     as found, so an availableNow drain over a closed input equals the
     batch range join (the oracle path)."""
-    streamed = SW.run_on_closed_input(spark, events_parquet, SW.interval_join_counts, "append")
-    batch = SW.interval_join_counts(_batch(spark, events_parquet))
+    streamed = SW.run_on_closed_input(spark, events_parquet, SW.interval_join_pairs, "append")
+    batch = SW.interval_join_pairs(_batch(spark, events_parquet))
     assert _as_sets(streamed) == _as_sets(batch)
 
 
@@ -177,9 +177,9 @@ def test_interval_join_boundaries(spark, tmp_path):
             for r in out.collect()
         }
 
-    batch = SW.interval_join_counts(spark.read.parquet(src))
+    batch = SW.interval_join_pairs(spark.read.parquet(src))
     assert fmt(batch) == expected
-    streamed = SW.run_on_closed_input(spark, src, SW.interval_join_counts, "append")
+    streamed = SW.run_on_closed_input(spark, src, SW.interval_join_pairs, "append")
     assert fmt(streamed) == expected
 
 

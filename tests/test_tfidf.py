@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 from aws_dla_kinesis_delivery_stream_example_spark.operators.tfidf import (
+    MAX_DF,
+    MAX_DF_CEILING,
     tfidf_cosine_pairs,
     tfidf_postings,
 )
@@ -28,24 +30,16 @@ def test_identical_docs_score_one(spark):
 
 
 def test_hot_token_cap_prunes_stopword_only_overlap(spark):
-    # docs 1-4 share ONLY the hot token "the" (df=4); docs 1/2 also
-    # share rare content. With the cap at df<=2 the hot token is
-    # pruned: 1-2 still pair on their rare terms, but no pair exists
-    # merely through "the".
-    docs = _docs(
-        spark,
-        [
-            (1, "the zebra quagga unique"),
-            (2, "the zebra quagga unique"),
-            (3, "the completely other material"),
-            (4, "the unrelated further content"),
-        ],
-    )
+    # every doc shares the hot token "the" (df = MAX_DF + 2); docs 1/2
+    # also share rare content. With the cap at df <= MAX_DF the hot
+    # token is pruned: 1-2 still pair on their rare terms, but no pair
+    # exists merely through "the".
+    rows = [(1, "the zebra quagga unique"), (2, "the zebra quagga unique")]
+    rows += [(i, f"the other{i} material{i}") for i in range(3, MAX_DF + 3)]
+    docs = _docs(spark, rows)
     pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in tfidf_cosine_pairs(
-            docs, "doc_id", "text", threshold=0.01, max_df=2
-        ).collect()
+        for r in tfidf_cosine_pairs(docs, "doc_id", "text", threshold=0.01).collect()
     }
     assert (1, 2) in pairs
     assert all(p == (1, 2) for p in pairs)
@@ -53,80 +47,57 @@ def test_hot_token_cap_prunes_stopword_only_overlap(spark):
 
 def test_relative_cap_floor(spark):
     # max_df_frac over a tiny corpus must not go below the absolute
-    # floor: with floor 50 nothing is pruned at n_docs=3.
+    # floor: with floor MAX_DF nothing is pruned at n_docs=3.
     docs = _docs(
         spark,
         [(1, "alpha beta"), (2, "alpha gamma"), (3, "alpha delta")],
     )
-    toks = tfidf_postings(
-        docs, "doc_id", "text", max_df=50, max_df_frac=0.1
-    )
-    assert toks.filter("tok = 'alpha'").count() == 3  # df=3 <= 50 floor
+    toks = tfidf_postings(docs, "doc_id", "text", max_df_frac=0.1)
+    assert toks.filter("tok = 'alpha'").count() == 3  # df=3 <= MAX_DF floor
 
 
-def test_frac_only_cap_is_rejected(spark):
-    # The purely relative cap is the measured-quadratic footgun
-    # (SCALE_REHEARSAL_r05: exponent 2.81); it must be unreachable
-    # through the public signature.
-    import pytest as _pytest
+def _df_corpus(spark, n_docs, tokens_by_df):
+    """n_docs docs; token t appears in the first df docs for each
+    (t, df), every doc also carries a unique filler token."""
+    from pyspark.sql import functions as F
 
-    docs = _docs(spark, [(1, "alpha beta")])
-    with _pytest.raises(ValueError, match="max_df_frac requires max_df"):
-        tfidf_postings(docs, "doc_id", "text", max_df_frac=0.1)
-    with _pytest.raises(ValueError, match="max_df_frac requires max_df"):
-        tfidf_cosine_pairs(docs, "doc_id", "text", max_df_frac=0.1)
+    i = F.col("id")
+    parts = [F.when(i < df, F.lit(tok)) for tok, df in tokens_by_df] + [F.concat(F.lit("filler"), i.cast("string"))]
+    return spark.range(n_docs).select(i.alias("doc_id"), F.concat_ws(" ", *parts).alias("text"))
+
+
+def _surviving(docs, **kw):
+    return {r["tok"] for r in tfidf_postings(docs, "doc_id", "text", **kw).select("tok").distinct().collect()}
 
 
 def test_relative_cap_ceiling_clamps(spark):
-    # 30 docs all sharing "alpha" (df=30). frac=1.0 alone would keep it
-    # (rel cap 30); the ceiling clamps the relative term to 10, and the
-    # floor (2) stays below that, so the hot token is pruned. A rarer
-    # token (df=2) survives via the floor.
-    docs = _docs(
-        spark,
-        [(i, "alpha" + (" rare" if i < 2 else "")) for i in range(30)],
-    )
-    toks = tfidf_postings(
-        docs, "doc_id", "text", max_df=2, max_df_frac=1.0, max_df_ceiling=10
-    )
-    surviving = {r["tok"] for r in toks.collect()}
-    assert surviving == {"rare"}
-    # ceiling=None restores the unbounded relative mode (escape hatch)
-    toks = tfidf_postings(
-        docs, "doc_id", "text", max_df=2, max_df_frac=1.0, max_df_ceiling=None
-    )
-    assert {r["tok"] for r in toks.collect()} == {"alpha", "rare"}
+    # MAX_DF_CEILING + 100 docs all sharing "alpha". frac=1.0 alone
+    # would keep it (rel cap = n_docs); the ceiling clamps the relative
+    # term to MAX_DF_CEILING, above the MAX_DF floor, so the hot token
+    # is pruned. A rarer token (df=2) survives via the floor.
+    n = MAX_DF_CEILING + 100
+    docs = _df_corpus(spark, n, [("alpha", n), ("rare", 2)])
+    s = _surviving(docs, max_df_frac=1.0)
+    assert "rare" in s and "alpha" not in s
 
 
 def test_cap_composition_boundaries(spark):
-    # The effective cap is greatest(floor, least(frac*N, ceiling)).
-    # Build a 20-doc corpus with tokens at df = 3, 6, 12 and walk the
-    # three regimes: floor-dominated, frac-dominated, ceiling-clamped.
-    rows = []
-    for i in range(20):
-        toks = ["common"] if i < 12 else ["filler%d" % i]
-        if i < 6:
-            toks.append("mid")
-        if i < 3:
-            toks.append("rare")
-        rows.append((i, " ".join(toks)))
-    docs = _docs(spark, rows)
-
-    def surviving(**kw):
-        return {
-            r["tok"]
-            for r in tfidf_postings(docs, "doc_id", "text", **kw).collect()
-        }
-
-    # floor-dominated: greatest(5, least(0.05*20=1, 100)) = 5 -> df<=5
-    assert "rare" in surviving(max_df=5, max_df_frac=0.05, max_df_ceiling=100)
-    assert "mid" not in surviving(max_df=5, max_df_frac=0.05, max_df_ceiling=100)
-    # frac-dominated: greatest(2, least(0.35*20=7, 100)) = 7 -> df<=7
-    s = surviving(max_df=2, max_df_frac=0.35, max_df_ceiling=100)
+    # The effective cap is greatest(MAX_DF, least(frac*N, MAX_DF_CEILING)).
+    # Build a 2000-doc corpus with tokens at df = 30, 600, 1200 and walk
+    # the three regimes: floor-dominated, frac-dominated, ceiling-clamped.
+    docs = _df_corpus(spark, 2000, [("common", 1200), ("mid", 600), ("rare", 30)])
+    # floor-dominated: greatest(50, least(0.01*2000=20, 1000)) = 50
+    s = _surviving(docs, max_df_frac=0.01)
+    assert "rare" in s and "mid" not in s
+    # frac-dominated: greatest(50, least(0.35*2000=700, 1000)) = 700
+    s = _surviving(docs, max_df_frac=0.35)
     assert "mid" in s and "common" not in s
-    # ceiling-clamped: greatest(2, least(1.0*20=20, 7)) = 7 -> df<=7
-    s = surviving(max_df=2, max_df_frac=1.0, max_df_ceiling=7)
+    # ceiling-clamped: greatest(50, least(1.0*2000=2000, 1000)) = 1000
+    s = _surviving(docs, max_df_frac=1.0)
     assert "mid" in s and "common" not in s
+    # no fraction: the absolute MAX_DF cap alone
+    s = _surviving(docs)
+    assert "rare" in s and "mid" not in s
 
 
 def test_weights_are_on_6dp_grid(spark):
@@ -181,7 +152,7 @@ def test_staging_released_after_sweep(spark):
     dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).count()
     during = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     assert len(during - before) > 0
-    assert release_staging(blocking=True) >= 2
+    assert release_staging() >= 2
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     assert after - before == set(), "staging sweep left its own caches behind"
 
@@ -210,7 +181,7 @@ def test_staging_registry_is_thread_scoped(spark):
     assert other_released == [0]  # the other thread sees nothing to drop
     assert other_orphans == [1]  # ...but the mismatch IS observable
     assert df.storageLevel.useMemory  # ours is still persisted
-    assert release_staging(blocking=True) == 1  # and we can drop it
+    assert release_staging() == 1  # and we can drop it
     assert staged_elsewhere() == 0
 
 
@@ -233,4 +204,4 @@ def test_milliweight_overflow_guard(spark):
     )
     with _pytest.raises(Exception, match="integer-cosine bound"):
         tfidf.tfidf_cosine_pairs(docs, "doc_id", "text").count()
-    release_staging(blocking=True)
+    release_staging()
