@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 # BPE-ish pre-tokenizer: word pieces OR single non-word-non-space marks.
 BPE_PATTERN = r"\w+|[^\w\s]"
-WORD_PATTERN = r"[a-z0-9]+"
+_WORD_CLASS = "a-z0-9"
+WORD_PATTERN = f"[{_WORD_CLASS}]+"
 STOPWORD_PATTERN = r"\b(the|a|an|of|and|to|is|in|that|it)\b"
 PUNCT_CLASS = "[.,!?;:]"
 
@@ -35,6 +36,23 @@ def bpe_token_count(col) -> Column:
 def words(col) -> Column:
     """Lower-cased alphanumeric word array (the shingling base)."""
     return F.regexp_extract_all(F.lower(_c(col)), F.lit(WORD_PATTERN), 0)
+
+
+def word_ngrams(col, n: int) -> Column:
+    """Every word n-gram of ``words(col)`` in order, repeats kept, each
+    joined with single spaces: the oracle's
+    ``array_to_string(array_slice(regexp_extract_all(lower(text),
+    '[a-z0-9]+'), i, i + n - 1), ' ')`` for every start ``i``.
+
+    One codegen'd regex pass, no lambda: the lower-cased text becomes
+    its words joined by single spaces, and a zero-width lookahead
+    anchored at each word start captures that word and the n - 1 after
+    it (a start with fewer than n - 1 words after it matches nothing).
+    NULL text gives NULL. Lookaround is Java regex only (DuckDB's RE2
+    has none), which is why the oracles spell the slices out."""
+    joined = F.trim(F.regexp_replace(F.lower(_c(col)), f"[^{_WORD_CLASS}]+", " "))
+    gram = f"{WORD_PATTERN}(?: {WORD_PATTERN}){{{n - 1}}}"
+    return F.regexp_extract_all(joined, F.lit(f"(?<![{_WORD_CLASS}])(?=({gram}))"), 1)
 
 
 def punct_count(col) -> Column:

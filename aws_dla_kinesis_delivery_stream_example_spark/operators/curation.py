@@ -60,10 +60,8 @@ def contaminated_ids(
     The benchmark shingle set is deduplicated and broadcast; candidate
     shingles stream through a map-side semi join. Shingles are
     represented by their md5-prefix hash (dedup._shingle_hash_rows)
-    — membership is invariant under the injective mapping, the
-    broadcast set shrinks ~4x, and the one-pass Python tokenize+hash
-    beats interpreted JVM string-building (measured 4.4 s -> ~2 s at
-    sf0.1 for the q64 shape).
+    — membership is invariant under the injective mapping and the
+    broadcast set shrinks ~4x.
     """
     from .dedup import _shingle_hash_rows
 
@@ -447,11 +445,8 @@ def source_overlap(df: DataFrame, source_col: str, text_col: str) -> DataFrame:
     Source sizes broadcast back onto the pair counts. The distinct
     (source, shingle-hash) frame feeds the sizes agg and the fold:
     staged once (caller releases via staging.release_staging()).
-    Shingling goes through the family's Arrow-batched Python pass
-    (dedup._shingle_hash_rows, source riding as the id): one
-    tokenize+hash pass per batch beats the interpreted JVM
-    transform/slice/concat_ws HOF stack — measured 4.8 s -> 3.4 s at
-    sf0.1 for the catalog query.
+    Shingling goes through the family's shingle pass
+    (dedup._shingle_hash_rows, source riding as the id).
     """
     from .dedup import _SHINGLE_N, _shingle_hash_rows
 

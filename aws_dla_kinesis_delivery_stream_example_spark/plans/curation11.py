@@ -145,7 +145,7 @@ _HLL_FOLD_SQL = """
     tags=("llm", "sketch", "dedup", "audit"),
 )
 def q137_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: ONE Arrow-batched shingling pass (staged — the
+    """Scale shape: ONE shingling scan pass (staged — the
     register fold and the exact truth column read it once each); the
     register max-agg collapses map-side to <= 256 rows per source
     before its exchange (q128's discipline), and EVERYTHING pairwise
@@ -271,6 +271,12 @@ def snm_global_rank(docs: DataFrame, key=None) -> DataFrame:
     3. per-partition counts (a |partitions|-row frame) running-sum to
        range offsets, broadcast back: grank = offset[pid] + local.
 
+    The partition ids are staged: the local ranks and the counts are
+    two consumers of one range exchange, and each re-execution samples
+    its own range bounds, so unstaged they can disagree on which rows
+    a pid holds (q139 failed its oracle in 4 of 6 runs at sf0.1). The
+    caller releases via ``staging.release_staging()``.
+
     This is the piece a naive SNM port gets wrong at 100 TB — a bare
     `row_number() OVER (ORDER BY key)` funnels the corpus through ONE
     task. Here the only global structure is the |partitions|-row
@@ -280,8 +286,10 @@ def snm_global_rank(docs: DataFrame, key=None) -> DataFrame:
     from pyspark.sql import Window
 
     base = docs.select("doc_id", key.alias("k"))
-    rp = base.repartitionByRange(_SNM_PARTS, "k", "doc_id").withColumn(
-        "pid", F.spark_partition_id()
+    rp = stage(
+        base.repartitionByRange(_SNM_PARTS, "k", "doc_id").withColumn(
+            "pid", F.spark_partition_id()
+        )
     )
     w_loc = Window.partitionBy("pid").orderBy("k", "doc_id")
     loc = rp.withColumn("lrank", F.row_number().over(w_loc))

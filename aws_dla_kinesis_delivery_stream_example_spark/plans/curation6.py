@@ -23,15 +23,12 @@ from ..operators import curation, sharding, skew
 from ..sources.tables import load_table
 from .catalog import query
 
-_Q115_SHARDS = 8
-
-
-@query(
-    "q115_shard_shuffle",
-    oracle=f"""
+# Shared by q115 (batch) and q121 (streaming): the stream's manifests
+# must equal the batch ones bit-for-bit.
+SHARD_ORACLE = f"""
         WITH assigned AS (
             SELECT CAST('0x' || substring(md5('shard:{sharding.SHARD_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-                       % {_Q115_SHARDS} AS shard,
+                       % {sharding.N_SHARDS} AS shard,
                    CAST('0x' || substring(md5('order:{sharding.SHARD_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
                        AS order_key,
                    n_chars
@@ -46,7 +43,12 @@ _Q115_SHARDS = 8
         FROM assigned
         GROUP BY shard
         ORDER BY shard
-    """,
+    """
+
+
+@query(
+    "q115_shard_shuffle",
+    oracle=SHARD_ORACLE,
     description="Deterministic training-shard shuffle manifests: hash-"
     "assign every doc to one of 8 shards with an independent intra-shard "
     "order key (domain-separated 60-bit hashes of (seed, doc_id)), then "
@@ -63,7 +65,7 @@ def q115_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards adds exactly one repartition("shard") — the output layout
     itself. XOR checksum is commutative, hence partitioning-invariant."""
     docs = load_table(spark, sf_dir, "documents")
-    return sharding.shard_manifest(docs, "doc_id", _Q115_SHARDS).orderBy("shard")
+    return sharding.shard_manifest(docs, "doc_id", sharding.N_SHARDS).orderBy("shard")
 
 
 @query(

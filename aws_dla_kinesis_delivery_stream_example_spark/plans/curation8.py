@@ -165,10 +165,10 @@ def q124_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q125_shard_mixture_audit",
-    oracle="""
+    oracle=f"""
         WITH assigned AS (
-            SELECT CAST('0x' || substring(md5('shard:17:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-                       % 8 AS shard,
+            SELECT CAST('0x' || substring(md5('shard:{sharding.SHARD_SEED}:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+                       % {sharding.N_SHARDS} AS shard,
                    source
             FROM documents
         ),
@@ -206,7 +206,7 @@ def q125_shard_mixture_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtracts two already-floored shares, so both engines stay on one
     lattice."""
     docs = load_table(spark, sf_dir, "documents")
-    assigned = sharding.assign_shards(docs, "doc_id", 8)
+    assigned = sharding.assign_shards(docs, "doc_id", sharding.N_SHARDS)
     cells = stage(
         assigned.groupBy("shard", "source").agg(F.count(F.lit(1)).alias("n"))
     )  # staged: three totals regroup this |shards| x |sources| frame

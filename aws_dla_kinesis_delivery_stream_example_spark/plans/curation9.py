@@ -282,7 +282,7 @@ def _hll_output(
 )
 def q128_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape (operators/sketch.py::hll_registers): shingling is
-    one Arrow-batched scan; the register fold is a max-agg whose
+    one codegen'd scan; the register fold is a max-agg whose
     partial aggregation collapses every task to <= 256 rows per source
     BEFORE the shuffle — the exchange carries registers, never
     shingles. The exact count (the audit's truth column) is the only

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..operators import sketch as _SK
 from ..streaming import windows as SW
 from .catalog import query
+from .curation6 import SHARD_ORACLE as _SHARD_ORACLE
 from .curation6 import SKEW_ORACLE as _SKEW_ORACLE
 from .curation9 import HLL_ORACLE as _HLL_ORACLE
 from .curation10 import BLOOM_ORACLE as _BLOOM_ORACLE
@@ -415,25 +416,7 @@ def q113_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q121_streaming_shard_manifest",
-    oracle="""
-        WITH assigned AS (
-            SELECT CAST('0x' || substring(md5('shard:17:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-                       % 8 AS shard,
-                   CAST('0x' || substring(md5('order:17:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-                       AS order_key,
-                   n_chars
-            FROM documents
-        )
-        SELECT shard,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(n_chars) AS BIGINT) AS total_chars,
-               CAST(bit_xor(order_key) AS BIGINT) AS xor_check,
-               CAST(min(order_key) AS BIGINT) AS min_key,
-               CAST(max(order_key) AS BIGINT) AS max_key
-        FROM assigned
-        GROUP BY shard
-        ORDER BY shard
-    """,
+    oracle=_SHARD_ORACLE,
     description="STREAMING training-shard manifests: the q115 shard "
     "assignment and manifest aggregation maintained as streaming state "
     "over the documents stream (complete mode, availableNow drain) — "
@@ -458,7 +441,7 @@ def q121_streaming_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators import sharding as _sharding
 
     def op(df):
-        return _sharding.shard_manifest(df, "doc_id", 8)
+        return _sharding.shard_manifest(df, "doc_id", _sharding.N_SHARDS)
 
     return _stream_documents_closed(spark, sf_dir, op, "complete").orderBy("shard")
 
@@ -483,7 +466,7 @@ def q129_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest volume (the q113/q121 constant-state family) and the
     smallest possible distinct-counting state: the exact streaming
     alternative (q83's digest dedup) holds one key per distinct value.
-    Shingling runs Arrow-batched INSIDE the stream (mapInPandas on the
+    Shingling runs INSIDE the stream (column expressions on the
     unbounded frame); the register max-agg collapses each micro-batch
     map-side. The exact truth column joins from one batch pass after
     the drain — at 100 TB you drop that join and trust the +-6.5%."""
@@ -555,7 +538,7 @@ def q136_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     member yet; the bloom bit sets ride the micro-batches as static
     broadcast joins (8 KiB x 3 regardless of bench size), so the
     stream side never shuffles before its one counter agg. Shingling
-    runs Arrow-batched INSIDE the stream (the q129 pattern). Linear
+    runs INSIDE the stream (the q129 pattern). Linear
     counts are NOT idempotent, so at-least-once ingestion needs
     upstream dedup (q51/q83) — q134's documented caveat. The exact
     truth column (bench_h broadcast) is part of the audit face and is

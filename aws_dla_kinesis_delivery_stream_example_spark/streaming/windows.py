@@ -107,6 +107,10 @@ _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+# A drain deletes its checkpoint, so checkpoint-file checksums protect
+# nothing there; with them on, each drain also leaves a 32-thread
+# checksum pool behind in the JVM.
+_CHECKSUM_CONF = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 
 _log = logging.getLogger(__name__)
 
@@ -132,8 +136,9 @@ def run_on_closed_input(
     window-start strings render identically to the oracle's, and
     ``normalize_ts`` normalizes the ``ts`` event-time encodings.
 
-    The shuffle width (``partitions``, default "8") and the RocksDB
-    state-store provider are scoped to the drain and restored after it.
+    The shuffle width (``partitions``, default "8"), the RocksDB
+    state-store provider and checkpoint checksums (off) are scoped to
+    the drain and restored after it.
     Each stateful stage allocates one state-store instance per shuffle
     partition, so size the width to the drain's state, not its input:
     constant-state sketches want "2", per-key state wants the default.
@@ -148,13 +153,17 @@ def run_on_closed_input(
     """
     tmp = tempfile.mkdtemp(prefix="stream_q_")
     name = f"sq_{uuid.uuid4().hex[:10]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
+    scoped = {
+        "spark.sql.shuffle.partitions": partitions or "8",
+        _PROVIDER_CONF: _ROCKSDB_PROVIDER,
+        _CHECKSUM_CONF: "false",
+    }
+    prev = {k: spark.conf.get(k, None) for k in scoped}
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", partitions or "8")
+        for k, v in scoped.items():
+            spark.conf.set(k, v)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set(_PROVIDER_CONF, _ROCKSDB_PROVIDER)
         schema = parquet_schema(spark, parquet_path)
         # The file source wants a directory or a glob: the glob admits a
         # single-file table and still lists a directory's files.
@@ -178,9 +187,9 @@ def run_on_closed_input(
         return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_provider is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev_provider)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
         shutil.rmtree(tmp, ignore_errors=True)

@@ -26,9 +26,9 @@ to bench_full.json beside this script on every sweep.
 The probe modes take exact catalog names or qNN prefixes and `--sf`
 (default: the sweep's directory). `time` uses the sweep's estimator.
 `profile` prints one warm run's job census, a streaming drain's
-micro-batch jobs included. `plan` prints (or writes to `--out`) the
-formatted physical plan. `check` compares each query with its DuckDB
-oracle and exits 1 if any fails.
+micro-batch jobs included, and its plan's Python passes. `plan`
+prints (or writes to `--out`) the formatted physical plan. `check`
+compares each query with its DuckDB oracle and exits 1 if any fails.
 """
 
 from __future__ import annotations
@@ -235,10 +235,40 @@ class _DrainRuns(logging.Handler):
             self.run_ids.append(progress["runId"])
 
 
+def python_passes(df) -> int:
+    """Python-evaluation nodes in ``df``'s executed plan: the nodes that ship
+    rows to a Python worker (mapInPandas, Arrow and batch UDFs, ...),
+    which Spark marks with the ``pythonDataSent`` metric. A staged
+    subtree counts once however many scans read it; the walk goes
+    through the AQE and query-stage wrappers. A streaming drain's frame
+    is its sink's table, so passes inside the stream are not seen."""
+    identity = df._sc._jvm.System.identityHashCode
+    seen, n, todo = set(), 0, [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        n += node.metrics().contains("pythonDataSent")
+        if "AdaptiveSparkPlan" in name:
+            todo.append(node.executedPlan())
+        elif "QueryStage" in name:
+            todo.append(node.plan())
+        elif "InMemoryTableScan" in name:
+            cached = node.relation().cachedPlan()
+            key = identity(cached)
+            if key not in seen:
+                seen.add(key)
+                todo.append(cached)
+        it = node.children().iterator()
+        while it.hasNext():
+            todo.append(it.next())
+    return n
+
+
 def _profile(spark, name: str, spec, sf: str) -> str:
     """One warm run's census: the jobs of its own job group plus the
     micro-batch jobs of every streaming drain it runs, which Spark puts
-    under the drain's run id (``jobs_stream``)."""
+    under the drain's run id (``jobs_stream``), and the Python passes
+    of the executed plan (``py_passes``, see ``python_passes``)."""
     spec.spark(spark, sf).collect()  # warm: codegen and caches
     _reset(spark)
     sc = spark.sparkContext
@@ -251,8 +281,10 @@ def _profile(spark, name: str, spec, sf: str) -> str:
     sc.setJobGroup(group, name)
     try:
         t0 = time.perf_counter()
-        spec.spark(spark, sf).collect()
+        df = spec.spark(spark, sf)
+        df.collect()
         took = time.perf_counter() - t0
+        py = python_passes(df)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         log.removeHandler(drains)
@@ -262,7 +294,7 @@ def _profile(spark, name: str, spec, sf: str) -> str:
     return (
         f"PROFILE {name} {took:.3f}s jobs={c.jobs} jobs_stream={c.jobs_stream} "
         f"stages={c.stages} tasks={c.totals['tasks']} run_ms={c.totals['executor_run_ms']} "
-        f"shuffle_write_bytes={c.totals['shuffle_write_bytes']}"
+        f"shuffle_write_bytes={c.totals['shuffle_write_bytes']} py_passes={py}"
     )
 
 

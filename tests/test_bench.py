@@ -81,3 +81,16 @@ def test_profile_counts_a_drains_micro_batch_jobs(spark):
     assert int(fields["jobs_stream"]) >= 1, line
     assert int(fields["jobs"]) > int(fields["jobs_stream"]), line
     assert (log.level, list(log.handlers)) == before
+
+
+def test_profile_counts_python_passes(spark):
+    """``py_passes`` counts the plan's Python-evaluation nodes: q26
+    shingles on the JVM and reads 0; q111's audio features run in
+    mapInPandas and read at least 1."""
+    specs = all_specs()
+    got = {}
+    for name in ("q26_ngram_jaccard", "q111_audio_frame_energy"):
+        line = bench._profile(spark, name, specs[name], SF_SMOKE)
+        got[name] = int(dict(kv.split("=") for kv in line.split()[3:])["py_passes"])
+    assert got["q26_ngram_jaccard"] == 0, got
+    assert got["q111_audio_frame_energy"] >= 1, got

@@ -34,7 +34,7 @@ def planted_docs(spark):
 
 def test_shingle_ops_tolerate_null_text(spark):
     """A null text yields no shingles (oracle: regexp over NULL is empty)
-    instead of crashing the whole job inside mapInPandas."""
+    instead of failing the whole job."""
     df = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog today"),
          (2, None),
@@ -51,7 +51,7 @@ def test_minhash_signatures_hash_rows_path_identical(spark, planted_docs):
     """Round-17 shared-shingle-pass optimization (q114/q142): feeding
     minhash_signatures the 60-bit _shingle_hash_rows output folded with
     pmod(h, 2^31-1) must reproduce EXACTLY the signatures of the
-    internal mod= Arrow path — the property that lets
+    internal mod= path — the property that lets
     minhash_calibration_report shingle the corpus once instead of
     twice."""
     from pyspark.sql import functions as F

@@ -436,6 +436,29 @@ def test_round13_exchange_budgets(spark):
         assert n <= budget, f"{name}: {n} exchanges (budget {budget})"
 
 
+def test_shingle_queries_start_no_python_worker(spark):
+    """Word shingling is JVM expressions (dedup._shingle_hash_rows):
+    the queries built on it plan no Python-evaluation node, staged
+    subtrees included (the plan string inlines them)."""
+    from aws_dla_kinesis_delivery_stream_example_spark.operators.staging import (
+        release_staging,
+    )
+
+    python_nodes = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython")
+    for name in (
+        "q26_ngram_jaccard",
+        "q55_jaccard_freq_capped",
+        "q64_contamination_check",
+        "q114_minhash_calibration",
+        "q132_bloom_decontam",
+    ):
+        try:
+            plan = plan_of(spark, name)
+        finally:
+            release_staging()
+        assert not [p for p in python_nodes if p in plan], (name, plan)
+
+
 def test_snm_rank_has_no_corpus_sized_single_partition(spark):
     """The distributed-rank claim as a plan pin: snm_global_rank must
     (a) range-partition the corpus (the RangePartitioner contract the

@@ -26,6 +26,7 @@ stale.
 from __future__ import annotations
 
 import itertools
+import os
 
 import pytest
 
@@ -40,6 +41,7 @@ from aws_dla_kinesis_delivery_stream_example_spark.plans.curation11 import (
 )
 from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import load_table
 
+from .conftest import SF_SMOKE
 from .test_round11_planted import _write_documents
 
 SPECS = all_specs()
@@ -133,6 +135,38 @@ def test_snm_global_rank_is_the_total_order(spark, snm_sf_dir):
         }
         want = {d: i + 1 for i, d in enumerate(_rank_order(p))}
         assert got == want, (p, got)
+
+
+def test_snm_global_rank_is_stable_across_calls(spark):
+    """The local ranks and the per-pid counts read one staged range
+    exchange: unstaged, each re-execution sampled its own range bounds,
+    the two disagreed on which rows a pid holds, and q139's rank came
+    out wrong in some runs. Five calls per pass on sf0.1's 5,000
+    documents, over a staged key frame as q138/q139 build it, must each
+    equal the exact (key, doc_id) total order."""
+    from pyspark.sql import Window, functions as F
+
+    from aws_dla_kinesis_delivery_stream_example_spark.operators.staging import (
+        release_staging,
+        stage,
+    )
+
+    docs = load_table(spark, os.path.join(os.path.dirname(SF_SMOKE), "sf0.1"), "documents")
+    for p in range(3):
+        keyed = docs.select("doc_id", _snm_key(p).alias("k"))
+        want = {
+            r["doc_id"]: r["grank"]
+            for r in keyed.select(
+                "doc_id", F.row_number().over(Window.orderBy("k", "doc_id")).alias("grank")
+            ).collect()
+        }
+        for _ in range(5):
+            try:
+                ranked = snm_global_rank(stage(keyed), F.col("k"))
+                got = {r["doc_id"]: r["grank"] for r in ranked.collect()}
+            finally:
+                release_staging()
+            assert got == want, p
 
 
 def test_q138_finds_planted_prefix_pair_and_misses_rotated_pair(
@@ -326,8 +360,6 @@ def test_q142_stratum_is_proper_and_non_vacuous(spark):
     sf0.01's geometry, which is why the catalog pins mod 2) while
     being a PROPER stratum (n_truth strictly below the full q114
     audit's — the sampled mode must actually sample)."""
-    from .conftest import SF_SMOKE
-
     full = SPECS["q114_minhash_calibration"].spark(spark, SF_SMOKE).collect()[0]
     samp = SPECS["q142_sampled_calibration"].spark(spark, SF_SMOKE).collect()[0]
     assert samp["n_truth"] > 0 and samp["n_candidates"] > 0

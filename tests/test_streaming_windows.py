@@ -242,6 +242,7 @@ def test_failed_drain_restores_session(spark, events_parquet, monkeypatch):
     provider = "spark.sql.streaming.stateStore.providerClass"
     parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_provider = spark.conf.get(provider, None)
+    prev_checksum = spark.conf.get(SW._CHECKSUM_CONF, None)
 
     def op(df):
         return df.withColumn("boom", F.raise_error(F.lit("drain failure")))
@@ -251,4 +252,27 @@ def test_failed_drain_restores_session(spark, events_parquet, monkeypatch):
     assert _sq_views(spark) == []
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
     assert spark.conf.get(provider, None) == prev_provider
+    assert spark.conf.get(SW._CHECKSUM_CONF, None) == prev_checksum
     assert len(made) == 1 and not os.path.exists(made[0])
+
+
+def _checksum_threads(spark) -> int:
+    jvm = spark.sparkContext._jvm
+    it = jvm.java.lang.Thread.getAllStackTraces().keySet().iterator()
+    n = 0
+    while it.hasNext():
+        n += it.next().getName().startswith("ChecksumCheckpointFileManager")
+    return n
+
+
+def test_drain_leaves_no_checksum_threads(spark, events_parquet):
+    """A drain deletes its checkpoint, so it writes no checkpoint
+    checksums: with them on, each drain left a 32-thread checksum pool
+    behind in the JVM. The setting is restored afterwards, so a query
+    that keeps its checkpoint (the resume tests) keeps its checksums."""
+    prev = spark.conf.get(SW._CHECKSUM_CONF, None)
+    before = _checksum_threads(spark)
+    for _ in range(2):
+        SW.run_on_closed_input(spark, events_parquet, SW.tumbling_counts, "complete").collect()
+    assert _checksum_threads(spark) == before
+    assert spark.conf.get(SW._CHECKSUM_CONF, None) == prev
