@@ -29,7 +29,7 @@ def get_spark(
     ``SPARK_GRAFT_CPUS`` sizes both the local master and the shuffle
     width."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Python workers must be able to import this package (pandas-UDF
+    # Python workers must be able to import this package (Python UDF
     # closures reference it). Export the repo root BEFORE the JVM forks
     # so workers inherit it. On a real cluster this is --py-files.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -12,15 +12,18 @@ Two execution paths:
 - declarative transforms (Column -> Column): stay fully JVM-side,
   whole-stage codegen — the fast path.
 - black-box dict->dict Python transforms (the reference's actual
-  extension hook, kds_example/lbd/to_s3.py:6-7): Arrow-batched pandas
-  UDF over the JSON string column. Row-at-a-time Python is never used.
+  extension hook, kds_example/lbd/to_s3.py:6-7): a batched Python UDF
+  over the JSON string column (pickled rows, ``BatchEvalPython``).
+  ``fn`` runs once per record whatever the batch format, so Arrow
+  vectorizes nothing here; it would only make every worker import
+  pandas and pyarrow (about 65 MB more per worker).
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,34 +47,24 @@ _RESULT_SCHEMA = T.StructType(
 
 
 def transform_udf(fn: Callable[[dict], dict]):
-    """Wrap a black-box dict->dict transform as an Arrow-batched pandas
-    UDF producing struct(payload json-string, status)."""
+    """Wrap a black-box dict->dict transform as a batched Python UDF
+    producing struct(payload json-string, status)."""
 
-    def run(lines: pd.Series) -> pd.DataFrame:
-        import json as _json
+    def run(line: str | None) -> tuple[str | None, str]:
+        try:
+            return json.dumps(fn(json.loads(line)), ensure_ascii=False), "OK"
+        except Exception as exc:
+            # Match DropIt by name so the worker doesn't need this
+            # module importable (the closure stays self-contained).
+            if type(exc).__name__ == "DropIt":
+                return None, "Dropped"
+            # ProcessingFailed keeps the ORIGINAL payload
+            # (reference kds_example/kds_helper.py:49-51).
+            return line, "ProcessingFailed"
 
-        import pandas as _pd
-
-        payloads, statuses = [], []
-        for line in lines:
-            try:
-                out = fn(_json.loads(line))
-                payloads.append(_json.dumps(out, ensure_ascii=False))
-                statuses.append("OK")
-            except Exception as exc:
-                # Match DropIt by name so the worker doesn't need this
-                # module importable (the closure stays self-contained).
-                if type(exc).__name__ == "DropIt":
-                    payloads.append(None)
-                    statuses.append("Dropped")
-                else:
-                    # ProcessingFailed keeps the ORIGINAL payload
-                    # (reference kds_example/kds_helper.py:49-51).
-                    payloads.append(line)
-                    statuses.append("ProcessingFailed")
-        return _pd.DataFrame({"payload": payloads, "status": statuses})
-
-    return F.pandas_udf(run, returnType=_RESULT_SCHEMA)
+    # useArrow=False pins the pickled-row path whatever the session's
+    # spark.sql.execution.pythonUDF.arrow.enabled says.
+    return F.udf(run, returnType=_RESULT_SCHEMA, useArrow=False)
 
 
 def apply_transform(
@@ -85,7 +78,7 @@ def apply_transform(
     Declarative mode (preferred): pass Column expressions; stays
     JVM-side, and a record is OK unless ``fail_when`` holds
     (ProcessingFailed). Black-box mode: pass ``fn`` and the transform
-    runs as a pandas UDF over ``json_line``; ``fn`` decides every
+    runs as a batched Python UDF over ``json_line``; ``fn`` decides every
     status itself (DropIt -> Dropped).
     """
     if fn is not None:

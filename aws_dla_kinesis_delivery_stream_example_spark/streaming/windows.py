@@ -18,6 +18,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..shipping import python_passes
 from ..sources.tables import normalize_event_time, parquet_schema
 
 
@@ -148,8 +149,10 @@ def run_on_closed_input(
     is removed. Two settings DO outlive the call, as they do after
     ``sources.tables.load_table``: ``spark.sql.session.timeZone`` stays
     UTC and ``spark.sql.legacy.parquet.nanosAsLong`` stays true.
-    The final ``lastProgress`` (incl. ``stateOperators``) is emitted as
-    one INFO record on this module's logger.
+    The final ``lastProgress`` (incl. ``stateOperators``) and the
+    Python passes of the last micro-batch's executed plan
+    (``shipping.python_passes``) are emitted as one INFO record on this
+    module's logger.
     """
     tmp = tempfile.mkdtemp(prefix="stream_q_")
     name = f"sq_{uuid.uuid4().hex[:10]}"
@@ -180,9 +183,18 @@ def run_on_closed_input(
             .start()
         )
         q.awaitTermination()
+        # The Python passes are read off the last micro-batch's plan now:
+        # the returned frame is the sink's table, not the drain.
+        last = q._jsq.streamingQuery().lastExecution()
         _log.info(
-            "closed-input drain %(query)s on %(provider)s: %(progress)s",
-            {"query": name, "provider": _ROCKSDB_PROVIDER, "progress": q.lastProgress},
+            "closed-input drain %(query)s on %(provider)s "
+            "(%(py_passes)d Python passes): %(progress)s",
+            {
+                "query": name,
+                "provider": _ROCKSDB_PROVIDER,
+                "progress": q.lastProgress,
+                "py_passes": python_passes(spark, last.executedPlan()) if last else 0,
+            },
         )
         return spark.table(name)
     finally:

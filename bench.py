@@ -51,6 +51,7 @@ from aws_dla_kinesis_delivery_stream_example_spark.operators.staging import (  #
 )
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs  # noqa: E402
 from aws_dla_kinesis_delivery_stream_example_spark.session import get_spark  # noqa: E402
+from aws_dla_kinesis_delivery_stream_example_spark.shipping import python_passes  # noqa: E402
 from aws_dla_kinesis_delivery_stream_example_spark.streaming import windows  # noqa: E402
 from perfbench.census import StatusStore, cpu_row, host_canary  # noqa: E402
 
@@ -222,53 +223,29 @@ def sweep() -> None:
 
 
 class _DrainRuns(logging.Handler):
-    """Collects the ``runId`` of each closed-input drain's final-progress
-    record (``windows.run_on_closed_input``)."""
+    """Collects the ``runId`` and the Python passes of each closed-input
+    drain's final-progress record (``windows.run_on_closed_input``)."""
 
     def __init__(self) -> None:
         super().__init__(logging.INFO)
         self.run_ids: list[str] = []
+        self.py_passes = 0
 
     def emit(self, record: logging.LogRecord) -> None:
         progress = record.args.get("progress") if isinstance(record.args, dict) else None
         if progress:
             self.run_ids.append(progress["runId"])
-
-
-def python_passes(df) -> int:
-    """Python-evaluation nodes in ``df``'s executed plan: the nodes that ship
-    rows to a Python worker (mapInPandas, Arrow and batch UDFs, ...),
-    which Spark marks with the ``pythonDataSent`` metric. A staged
-    subtree counts once however many scans read it; the walk goes
-    through the AQE and query-stage wrappers. A streaming drain's frame
-    is its sink's table, so passes inside the stream are not seen."""
-    identity = df._sc._jvm.System.identityHashCode
-    seen, n, todo = set(), 0, [df._jdf.queryExecution().executedPlan()]
-    while todo:
-        node = todo.pop()
-        name = node.nodeName()
-        n += node.metrics().contains("pythonDataSent")
-        if "AdaptiveSparkPlan" in name:
-            todo.append(node.executedPlan())
-        elif "QueryStage" in name:
-            todo.append(node.plan())
-        elif "InMemoryTableScan" in name:
-            cached = node.relation().cachedPlan()
-            key = identity(cached)
-            if key not in seen:
-                seen.add(key)
-                todo.append(cached)
-        it = node.children().iterator()
-        while it.hasNext():
-            todo.append(it.next())
-    return n
+            self.py_passes += record.args["py_passes"]
 
 
 def _profile(spark, name: str, spec, sf: str) -> str:
     """One warm run's census: the jobs of its own job group plus the
     micro-batch jobs of every streaming drain it runs, which Spark puts
     under the drain's run id (``jobs_stream``), and the Python passes
-    of the executed plan (``py_passes``, see ``python_passes``)."""
+    (``py_passes``, see ``shipping.python_passes``) of the executed
+    plan plus those of each drain's last micro-batch: a drain's frame
+    is its sink's table, so its own plan is gone by the time it
+    returns."""
     spec.spark(spark, sf).collect()  # warm: codegen and caches
     _reset(spark)
     sc = spark.sparkContext
@@ -284,7 +261,7 @@ def _profile(spark, name: str, spec, sf: str) -> str:
         df = spec.spark(spark, sf)
         df.collect()
         took = time.perf_counter() - t0
-        py = python_passes(df)
+        py = python_passes(spark, df._jdf.queryExecution().executedPlan())
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         log.removeHandler(drains)
@@ -294,7 +271,8 @@ def _profile(spark, name: str, spec, sf: str) -> str:
     return (
         f"PROFILE {name} {took:.3f}s jobs={c.jobs} jobs_stream={c.jobs_stream} "
         f"stages={c.stages} tasks={c.totals['tasks']} run_ms={c.totals['executor_run_ms']} "
-        f"shuffle_write_bytes={c.totals['shuffle_write_bytes']} py_passes={py}"
+        f"shuffle_write_bytes={c.totals['shuffle_write_bytes']} "
+        f"py_passes={py + drains.py_passes}"
     )
 
 

@@ -80,7 +80,19 @@ def test_profile_counts_a_drains_micro_batch_jobs(spark):
     fields = dict(kv.split("=") for kv in line.split()[3:])
     assert int(fields["jobs_stream"]) >= 1, line
     assert int(fields["jobs"]) > int(fields["jobs_stream"]), line
+    assert int(fields["py_passes"]) == 0, line  # a JVM-only drain
     assert (log.level, list(log.handlers)) == before
+
+
+def test_profile_counts_a_drains_python_passes(spark):
+    """q91 and q108 run applyInPandasWithState inside their drains. The
+    frame a drain returns is its memory sink's table, so the passes are
+    read off the drain's last micro-batch plan and must still count."""
+    specs = all_specs()
+    for name in ("q91_streaming_stateful_totals", "q108_streaming_zscore"):
+        line = bench._profile(spark, name, specs[name], SF_SMOKE)
+        fields = dict(kv.split("=") for kv in line.split()[3:])
+        assert int(fields["py_passes"]) >= 1, line
 
 
 def test_profile_counts_python_passes(spark):

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import json
 import os
-from contextlib import nullcontext
+import sys
+import uuid
+from contextlib import contextmanager, nullcontext
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -29,7 +31,13 @@ from aws_dla_kinesis_delivery_stream_example_spark.streaming.doc_sink import (
     DocumentSink,
     ParquetDocumentSink,
 )
-from aws_dla_kinesis_delivery_stream_example_spark.streaming.transform import DropIt
+from aws_dla_kinesis_delivery_stream_example_spark.streaming.transform import (
+    STATUS_DROPPED,
+    STATUS_FAILED,
+    STATUS_OK,
+    DropIt,
+    apply_transform,
+)
 
 N = 2000
 
@@ -145,20 +153,86 @@ def test_incremental_batch_pickup(spark, pipeline, source_dir):
     assert pipeline.count_sink_records(PREFIX_BACKUP) == N + 100
 
 
+_ACCOUNT_DDL = "id string, firstname string, lastname string, description string, balance long"
+
+
+def _tag_or_unserializable(rec: dict) -> dict:
+    """Adds 1 to the balance, except that a ``Set`` lastname gets a set
+    value, which ``json.dumps`` cannot serialize."""
+    if rec["lastname"] == "Set":
+        return {**rec, "tags": {"a", "b"}}
+    return {**rec, "balance": rec["balance"] + 1}
+
+
 def test_unicode_roundtrip(spark, tmp_path):
     """ensure_ascii=False parity: non-ASCII survives the serde raw,
-    not as \\uXXXX escapes (D2, kds_helper.py:15)."""
+    not as \\uXXXX escapes (D2, kds_helper.py:15), on the identity path
+    and through a black-box ``transform_fn``."""
     src = str(tmp_path / "src")
-    df = spark.createDataFrame(
-        [("ü-1", "Ünïcode", "Tëst", "日本語テキスト", 0)],
-        "id string, firstname string, lastname string, description string, balance long",
-    )
+    df = spark.createDataFrame([("ü-1", "Ünïcode", "Tëst", "日本語テキスト", 0)], _ACCOUNT_DDL)
     produce_jsonlines(df, src)
-    p = DeliveryPipeline(spark, src, str(tmp_path / "out"))
+    for name, fn, balance in (("out", None, 0), ("out-fn", _tag_or_unserializable, 1)):
+        p = DeliveryPipeline(spark, src, str(tmp_path / name), transform_fn=fn)
+        p.run()
+        raw = spark.read.text(p.path(PREFIX_SUCCESS)).collect()[0].value
+        assert "日本語テキスト" in raw and "\\u" not in raw
+        rec = json.loads(raw)
+        assert rec["firstname"] == "Ünïcode" and rec["balance"] == balance
+
+
+def test_unserializable_fn_output_fails_with_the_original(spark, tmp_path):
+    """A ``fn`` result ``json.dumps`` cannot encode is ProcessingFailed:
+    04-failed gets the ORIGINAL record and reconciliation still holds."""
+    src = str(tmp_path / "src")
+    rows = [("ok-1", "Ann", "Lee", "fine", 0), ("bad-1", "Zoë", "Set", "größer", 5)]
+    produce_jsonlines(spark.createDataFrame(rows, _ACCOUNT_DDL), src)
+    p = DeliveryPipeline(spark, src, str(tmp_path / "out"), transform_fn=_tag_or_unserializable)
     p.run()
-    raw = spark.read.text(p.path(PREFIX_SUCCESS)).collect()[0].value
-    assert "日本語テキスト" in raw and "\\u" not in raw
-    assert json.loads(raw)["firstname"] == "Ünïcode"
+    r = p.result
+    assert r.reconciled() and (r.n_input, r.n_ok, r.n_failed, r.n_dropped) == (2, 1, 1, 0)
+    originals = {rec["id"]: rec for rec in _read_lines(spark, src)}
+    assert _read_lines(spark, p.path(PREFIX_FAILED)) == [originals["bad-1"]]
+    assert [rec["id"] for rec in _read_lines(spark, p.path(PREFIX_SUCCESS))] == ["ok-1"]
+
+
+@contextmanager
+def _own_worker_pool(spark):
+    """Python UDFs built in this scope run in a worker pool of their
+    own: Spark keys its pools by the workers' environment, and reused
+    workers keep whatever modules earlier tasks imported."""
+    env = spark.sparkContext.environment
+    env["DELIVERY_TEST_WORKER_POOL"] = uuid.uuid4().hex
+    try:
+        yield
+    finally:
+        del env["DELIVERY_TEST_WORKER_POOL"]
+
+
+def test_black_box_transform_is_a_batched_python_udf(spark):
+    """The black-box transform is a batched pickled-row Python UDF: its
+    executed plan holds BatchEvalPython and no ArrowEvalPython, and the
+    worker running ``fn`` has imported neither pandas nor pyarrow. A
+    null line is ProcessingFailed and ``fn`` never sees it."""
+
+    def probe(rec: dict) -> dict:
+        if rec["id"] == "drop":
+            raise DropIt()  # resolving DropIt imports this package in the worker
+        return {
+            "pandas": "pandas" in sys.modules,
+            "pyarrow": "pyarrow" in sys.modules,
+            "id": rec["id"],
+        }
+
+    df = spark.createDataFrame([('{"id": "a"}',), ('{"id": "drop"}',), (None,)], "json_line string")
+    with _own_worker_pool(spark):
+        out = apply_transform(df, fn=probe)
+    rows = out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" in plan and "ArrowEvalPython" not in plan, plan
+    assert [r.status for r in rows] == [STATUS_OK, STATUS_DROPPED, STATUS_FAILED]
+    assert json.loads(rows[0].payload) == {"pandas": False, "pyarrow": False, "id": "a"}
+    assert rows[1].payload is None and rows[2].payload is None
+
 
 def test_index_rotation(spark, source_dir, tmp_path):
     """K6: OneDay rotation partitions the document sink by a
