@@ -26,7 +26,8 @@ to bench_full.json beside this script on every sweep.
 The probe modes take exact catalog names or qNN prefixes and `--sf`
 (default: the sweep's directory). `time` uses the sweep's estimator.
 `profile` prints one warm run's job census, a streaming drain's
-micro-batch jobs included, and its plan's Python passes. `plan`
+micro-batch jobs included, its plan's Python passes and its drains'
+state-store commit time. `plan`
 prints (or writes to `--out`) the formatted physical plan. `check`
 compares each query with its DuckDB oracle and exits 1 if any fails.
 """
@@ -223,19 +224,22 @@ def sweep() -> None:
 
 
 class _DrainRuns(logging.Handler):
-    """Collects the ``runId`` and the Python passes of each closed-input
-    drain's final-progress record (``windows.run_on_closed_input``)."""
+    """Collects the ``runId``, the Python passes and the state-store
+    commit time of each closed-input drain's final-progress record
+    (``windows.run_on_closed_input``)."""
 
     def __init__(self) -> None:
         super().__init__(logging.INFO)
         self.run_ids: list[str] = []
         self.py_passes = 0
+        self.state_commit_ms = 0
 
     def emit(self, record: logging.LogRecord) -> None:
         progress = record.args.get("progress") if isinstance(record.args, dict) else None
         if progress:
             self.run_ids.append(progress["runId"])
             self.py_passes += record.args["py_passes"]
+            self.state_commit_ms += record.args["state_commit_ms"]
 
 
 def _profile(spark, name: str, spec, sf: str) -> str:
@@ -245,7 +249,8 @@ def _profile(spark, name: str, spec, sf: str) -> str:
     (``py_passes``, see ``shipping.python_passes``) of the executed
     plan plus those of each drain's last micro-batch: a drain's frame
     is its sink's table, so its own plan is gone by the time it
-    returns."""
+    returns. ``state_commit_ms`` sums the drains' state-store commit
+    time over all their micro-batches."""
     spec.spark(spark, sf).collect()  # warm: codegen and caches
     _reset(spark)
     sc = spark.sparkContext
@@ -272,7 +277,7 @@ def _profile(spark, name: str, spec, sf: str) -> str:
         f"PROFILE {name} {took:.3f}s jobs={c.jobs} jobs_stream={c.jobs_stream} "
         f"stages={c.stages} tasks={c.totals['tasks']} run_ms={c.totals['executor_run_ms']} "
         f"shuffle_write_bytes={c.totals['shuffle_write_bytes']} "
-        f"py_passes={py + drains.py_passes}"
+        f"py_passes={py + drains.py_passes} state_commit_ms={drains.state_commit_ms}"
     )
 
 

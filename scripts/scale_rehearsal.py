@@ -1084,7 +1084,7 @@ def main() -> None:
             )
             row["zscore_candidates"] = n_out
             # q108 streaming twin: REAL applyInPandasWithState drain
-            # over the same events (RocksDB state store). Candidates :=
+            # over the same events (the session's state store). Candidates :=
             # flagged rows — must equal the batch q105 count (hash
             # parity is the catalog's gate; the rehearsal pins the
             # count and curves the drain wall, whose state is

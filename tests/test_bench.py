@@ -70,7 +70,7 @@ def test_stdout_line_cuts_errors_to_80_chars():
 def test_profile_counts_a_drains_micro_batch_jobs(spark):
     """q50 is a streaming drain: its micro-batch jobs run under the
     query's run id, not the profile's job group, and must still be
-    counted."""
+    counted, and so must its state-store commit time."""
     name = "q50_streaming_tumbling"
     log = logging.getLogger(
         "aws_dla_kinesis_delivery_stream_example_spark.streaming.windows"
@@ -81,6 +81,7 @@ def test_profile_counts_a_drains_micro_batch_jobs(spark):
     assert int(fields["jobs_stream"]) >= 1, line
     assert int(fields["jobs"]) > int(fields["jobs_stream"]), line
     assert int(fields["py_passes"]) == 0, line  # a JVM-only drain
+    assert int(fields["state_commit_ms"]) > 0, line
     assert (log.level, list(log.handlers)) == before
 
 
@@ -98,11 +99,13 @@ def test_profile_counts_a_drains_python_passes(spark):
 def test_profile_counts_python_passes(spark):
     """``py_passes`` counts the plan's Python-evaluation nodes: q26
     shingles on the JVM and reads 0; q111's audio features run in
-    mapInPandas and read at least 1."""
+    mapInPandas and read at least 1. Neither runs a drain, so neither
+    commits state."""
     specs = all_specs()
     got = {}
     for name in ("q26_ngram_jaccard", "q111_audio_frame_energy"):
         line = bench._profile(spark, name, specs[name], SF_SMOKE)
-        got[name] = int(dict(kv.split("=") for kv in line.split()[3:])["py_passes"])
-    assert got["q26_ngram_jaccard"] == 0, got
-    assert got["q111_audio_frame_energy"] >= 1, got
+        got[name] = dict(kv.split("=") for kv in line.split()[3:])
+    assert int(got["q26_ngram_jaccard"]["py_passes"]) == 0, got
+    assert int(got["q111_audio_frame_energy"]["py_passes"]) >= 1, got
+    assert int(got["q26_ngram_jaccard"]["state_commit_ms"]) == 0, got

@@ -183,31 +183,45 @@ def test_interval_join_boundaries(spark, tmp_path):
     assert fmt(streamed) == expected
 
 
-def test_drain_uses_rocksdb_state_store(spark, caplog):
-    """The drains run on the RocksDB state-store provider and report
-    their final progress as one log record: provider custom metrics in
-    ``stateOperators`` prove RocksDB was actually active, not just
-    configured."""
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+
+@pytest.mark.parametrize("provider", [None, _ROCKSDB], ids=["default", "rocksdb"])
+def test_drain_runs_on_the_session_state_store(spark, caplog, provider):
+    """A drain runs on the state-store provider its session sets and
+    reports it, with its final progress, as one log record: provider
+    custom metrics in ``stateOperators`` prove which store was active,
+    not just configured. The caller's setting is left as it was."""
     from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
 
-    # q91 keeps NoTimeout per-user state, so numRowsTotal stays non-zero
-    # on a closed input (dedup/window state is watermark-evicted by end
-    # of stream and would legitimately report 0)
-    with caplog.at_level(logging.INFO, logger=SW.__name__):
-        df = all_specs()["q91_streaming_stateful_totals"].spark(spark, SF_SMOKE)
-    assert df.count() > 0
+    prev = spark.conf.get(SW._PROVIDER_CONF, None)
+    if provider is not None:
+        spark.conf.set(SW._PROVIDER_CONF, provider)
+    try:
+        setting = spark.conf.get(SW._PROVIDER_CONF, None)
+        effective = spark.conf.get(SW._PROVIDER_CONF)
+        # q91 keeps NoTimeout per-user state, so numRowsTotal stays
+        # non-zero on a closed input (dedup/window state is
+        # watermark-evicted by end of stream and would legitimately
+        # report 0)
+        with caplog.at_level(logging.INFO, logger=SW.__name__):
+            df = all_specs()["q91_streaming_stateful_totals"].spark(spark, SF_SMOKE)
+        assert df.count() > 0
+        assert spark.conf.get(SW._PROVIDER_CONF, None) == setting
+    finally:
+        if prev is None:
+            spark.conf.unset(SW._PROVIDER_CONF)
+        else:
+            spark.conf.set(SW._PROVIDER_CONF, prev)
     records = [r for r in caplog.records if r.name == SW.__name__]
     assert len(records) == 1, "one progress record per drain"
     prog = records[0].args
-    assert prog["provider"].endswith("RocksDBStateStoreProvider")
+    assert prog["provider"] == effective
     ops = prog["progress"]["stateOperators"]
     assert ops, "stateful drain must report state operators"
     assert ops[0]["numRowsTotal"] > 0
-    assert any("rocksdb" in k.lower() for k in ops[0].get("customMetrics", {}))
-    # conf restored: the drain must not leak the provider into the session
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None) is None
-    )
+    on_rocksdb = any("rocksdb" in k.lower() for k in ops[0].get("customMetrics", {}))
+    assert on_rocksdb == (provider == _ROCKSDB)
 
 
 def _sq_views(spark):
@@ -239,7 +253,7 @@ def test_failed_drain_restores_session(spark, events_parquet, monkeypatch):
         return made[-1]
 
     monkeypatch.setattr(SW.tempfile, "mkdtemp", mkdtemp)
-    provider = "spark.sql.streaming.stateStore.providerClass"
+    provider = SW._PROVIDER_CONF
     parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_provider = spark.conf.get(provider, None)
     prev_checksum = spark.conf.get(SW._CHECKSUM_CONF, None)
