@@ -38,7 +38,7 @@ strictly stronger than the reference's at-least-once + recordId
 reconciliation (§2.9).
 (Driver-side ``DeliveryResult`` counters are in-memory per-run
 conveniences and are NOT crash-durable; the durable numbers are the
-sink partitions themselves, see ``count_sink_records``.)
+sink partitions themselves, counted with ``admin.count_records``.)
 Retry (K7): one helper, ``DeliveryPipeline._with_one_retry``, owns the
 bounded retry — try, retry once (reference NumberOfRetries=1,
 kds_example/iac/s2_app.py:353-356), then run the fallback; every failed
@@ -56,15 +56,15 @@ micro-batch at scale.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager, nullcontext
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .. import admin
 from ..functions import serde
 from .doc_sink import DocumentSink, ParquetDocumentSink, write_flush
 from .transform import STATUS_FAILED, STATUS_OK, apply_transform
@@ -78,8 +78,8 @@ PREFIX_FAILED = "04-failed"
 
 # K8: session conf holding how many StreamingQueryProgress entries a
 # query keeps in recentProgress. Spark keeps 100 by default; a drain with
-# more micro-batches would undercount throughput() and drop the head of
-# the progress log, so a drain runs under ``progress_retention``.
+# more micro-batches would drop the head of the progress log, so a
+# drain runs under ``progress_retention``.
 PROGRESS_RETENTION_KEY = "spark.sql.streaming.numRecentProgressUpdates"
 PROGRESS_RETENTION = 10_000
 
@@ -106,14 +106,15 @@ class DeliveryResult:
     """Per-run counters (the reference's reconciliation numbers,
     README.rst:113-124)."""
 
-    n_input: int = 0
-    n_ok: int = 0
-    n_dropped: int = 0
-    n_failed: int = 0
-    n_batches: int = 0
-    doc_sink_retries: int = 0
-    backup_retries: int = 0
-    n_backup_failed: int = 0  # K3 failure branch: rows under 02-backup-failed
+    n_input: int = field(default=0, init=False)
+    n_ok: int = field(default=0, init=False)
+    n_dropped: int = field(default=0, init=False)
+    n_failed: int = field(default=0, init=False)
+    n_batches: int = field(default=0, init=False)
+    doc_sink_retries: int = field(default=0, init=False)
+    backup_retries: int = field(default=0, init=False)
+    # K3 failure branch: rows under 02-backup-failed
+    n_backup_failed: int = field(default=0, init=False)
 
     def reconciled(self) -> bool:
         return self.n_input == self.n_ok + self.n_dropped + self.n_failed
@@ -140,18 +141,8 @@ class DeliveryPipeline:
     # K4 client seam: pass a DocumentSink implementation (e.g. a real
     # bulk-index client) — defaults to the local parquet stand-in.
     document_client: DocumentSink | None = None
-    # K6: Firehose IndexRotationPeriod — the document "index" rotates on
-    # delivery time. "NoRotation" = single fixed index (the reference's
-    # setting, iac/s2_app.py:845); other values partition the document
-    # sink by a time-derived index name.
-    index_rotation: str = "NoRotation"  # NoRotation|OneHour|OneDay|OneMonth
 
     def __post_init__(self) -> None:
-        valid = ("NoRotation", *self._ROTATION_FMT)
-        if self.index_rotation not in valid:
-            raise ValueError(
-                f"index_rotation must be one of {valid}, got {self.index_rotation!r}"
-            )
         if self.document_client is not None:
             self.document_sink = True
         elif self.document_sink:
@@ -209,12 +200,8 @@ class DeliveryPipeline:
         try:
             backup_failed = self._write_backup(with_json, batch_id)
 
-            if self.transform_fn is not None:
-                transformed = apply_transform(with_json, fn=self.transform_fn)
-            else:  # identity fast path: stays fully JVM-side (T3/T4)
-                transformed = apply_transform(
-                    with_json, declarative={"payload": F.col("json_line")}
-                )
+            # fn=None is the identity fast path: stays fully JVM-side (T3/T4)
+            transformed = apply_transform(with_json, fn=self.transform_fn)
             # Counters piggy-back on the sink writes via df.observe —
             # zero extra passes (vs. a count() per sink = two extra full
             # scans per micro-batch at scale). apply_transform is
@@ -247,11 +234,7 @@ class DeliveryPipeline:
                 )
 
             if self.document_sink and (m["n_ok"] or 0) > 0:
-                # Identity path: payload IS the serialized input row, so
-                # the document id can come straight from the original
-                # column instead of a per-row JSON re-parse in the sink.
-                id_from_col = self.transform_fn is None and "id" in batch_df.columns
-                self._write_documents(ok, batch_id, id_from_col=id_from_col)
+                self._write_documents(ok, batch_id)
 
             self.result.n_input += m["n_input"]
             self.result.n_ok += m["n_ok"] or 0
@@ -271,67 +254,19 @@ class DeliveryPipeline:
                 transformed.unpersist()
             with_json.unpersist()
 
-    # strftime formats (driver-side): rotation must be computed ONCE per
-    # batch from a durable timestamp, not at executor write time.
-    _ROTATION_FMT = {"OneHour": "%Y-%m-%d-%H", "OneDay": "%Y-%m-%d", "OneMonth": "%Y-%m"}
-
-    def _rotation_epoch(self, batch_id: int) -> float:
-        """Deterministic per-batch delivery time: recorded under
-        ``_index_epoch/<batch_id>`` on the FIRST attempt and re-read on
-        crash-replay, so a replay that crosses a rotation boundary still
-        writes the SAME index as the original attempt (otherwise dynamic
-        overwrite of (batch_id, new-index) would leave (batch_id,
-        old-index) rows behind — duplicate documents).
-
-        The pin lands whole or not at all (temp file + ``os.replace``).
-        An empty pin file counts as unpinned: the pin is taken before
-        ``bulk_index``, so no document of the batch was written under
-        it."""
-        import time
-
-        d = os.path.join(self.dest_dir, "_index_epoch")
-        os.makedirs(d, exist_ok=True)
-        f = os.path.join(d, str(batch_id))
-        if os.path.exists(f):
-            with open(f) as fh:
-                pinned = fh.read().strip()
-            if pinned:
-                return float(pinned)
-        now = time.time()
-        tmp = f"{f}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write(repr(now))
-        os.replace(tmp, f)
-        return now
-
-    def _write_documents(
-        self, ok: DataFrame, batch_id: int, id_from_col: bool = False
-    ) -> None:
+    def _write_documents(self, ok: DataFrame, batch_id: int) -> None:
         """K4: document sink via the pluggable ``DocumentSink`` client
         seam (reference bulk-index: kds_example/oss_utils.py:54-63), with
         one bounded retry (K7) before the payloads route to the error
-        prefix; index name rotates by delivery time per
-        ``index_rotation`` (K6) — deterministically per batch (idempotent
-        under replay)."""
-        id_col = (
-            F.col("id").cast("string")
-            if id_from_col
-            else F.get_json_object("payload", "$.id")
-        )
+        prefix. One fixed index (K6: NoRotation, as the reference)."""
+        # Identity path: payload IS the serialized input row, so the
+        # document id comes straight from the original column instead of
+        # a per-row JSON re-parse in the sink.
+        if self.transform_fn is None and "id" in ok.columns:
+            id_col = F.col("id").cast("string")
+        else:
+            id_col = F.get_json_object("payload", "$.id")
         docs = ok.select(id_col.alias("id"), F.col("payload"))
-        if self.index_rotation != "NoRotation":
-            from datetime import datetime, timezone
-
-            fmt = self._ROTATION_FMT[self.index_rotation]
-            # UTC, explicitly: Firehose rotates indexes on UTC
-            # boundaries, and a driver-local rendering would defeat the
-            # _rotation_epoch replay guard — a restart under a
-            # different host TZ would re-render the SAME pinned epoch
-            # into a DIFFERENT index name and duplicate the documents
-            stamp = datetime.fromtimestamp(
-                self._rotation_epoch(batch_id), tz=timezone.utc
-            ).strftime(fmt)
-            docs = docs.withColumn("index_name", F.lit(f"documents-{stamp}"))
         self._with_one_retry(
             lambda: self.document_client.bulk_index(docs, batch_id),
             # Distinct flush key: the fallback must not clobber the K2
@@ -381,62 +316,17 @@ class DeliveryPipeline:
         self._log_progress(query)
 
     # -- K8 observability: per-delivery-stream progress log --------------
-    @staticmethod
-    def _progress_dicts(query) -> list[dict]:
-        import json
-
-        out = []
-        for p in query.recentProgress:
-            out.append(p if isinstance(p, dict) else json.loads(p.json))
-        return out
-
     def _log_progress(self, query) -> None:
         """CloudWatch-log-group parity: one JSON line per micro-batch
         (StreamingQueryProgress) under the destination's _progress dir."""
-        import json
-
         prog_dir = os.path.join(self.dest_dir, "_progress")
         os.makedirs(prog_dir, exist_ok=True)
         with open(os.path.join(prog_dir, f"{query.id}.jsonl"), "a") as f:
-            for p in self._progress_dicts(query):
-                f.write(json.dumps(p, default=str) + "\n")
+            for p in query.recentProgress:
+                record = p if isinstance(p, dict) else json.loads(p.json)
+                f.write(json.dumps(record, default=str) + "\n")
 
-    def throughput(self) -> dict:
-        """A4 parity: rec/s from StreamingQueryProgress
-        (numInputRows / batchDuration), the reference's TPS computation
-        (data_producer/multi_process_producer.py:55-59)."""
-        q = getattr(self, "last_query", None)
-        if q is None:
-            return {"rows": 0, "duration_ms": 0, "rec_per_s": 0.0}
-        # One entry per batchId (last wins): recentProgress can contain
-        # replayed/duplicate entries for the same micro-batch, which must
-        # not double-count in the reconciliation metric.
-        by_batch: dict = {}
-        for p in self._progress_dicts(q):
-            by_batch[p.get("batchId")] = p
-        rows, dur = 0, 0
-        for p in by_batch.values():
-            rows += p.get("numInputRows", 0) or 0
-            dur += (p.get("durationMs") or {}).get("triggerExecution", 0) or 0
-        return {
-            "rows": rows,
-            "duration_ms": dur,
-            "rec_per_s": round(rows / (dur / 1000.0), 1) if dur else 0.0,
-        }
-
-    # -- inspection surface (SURVEY.md §2.7 A1-A2, §2.8 Q1-Q2) -------------
-    def count_sink_records(self, prefix: str) -> int:
-        """A1 parity: ``admin.count_records`` of the prefix."""
-        return admin.count_records(self.spark, self.path(prefix))
-
-    def count_sink_objects(self, prefix: str) -> int:
-        """A2 parity: ``admin.count_objects`` of the prefix."""
-        return admin.count_objects(self.path(prefix))
-
-    def read_success(self) -> DataFrame:
-        """Q1 parity: ``admin.match_all`` of the success sink."""
-        return admin.match_all(self.spark, self.path(PREFIX_SUCCESS))
-
+    # -- inspection surface (SURVEY.md §2.7 A3, §2.8 Q2) -------------------
     def count_documents(self) -> int:
         """A3/Q2 parity: document-sink count (0 when the local document
         sink was never written; a failing read raises)."""

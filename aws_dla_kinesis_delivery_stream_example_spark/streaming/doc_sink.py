@@ -47,18 +47,14 @@ class DocumentSink(abc.ABC):
 
     @abc.abstractmethod
     def bulk_index(self, docs: DataFrame, batch_id: int) -> None:
-        """Index one micro-batch of documents. ``docs`` carries at least
-        (id, payload); an ``index_name`` column is present when index
-        rotation (K6) is active. Must be idempotent in ``batch_id``."""
+        """Index one micro-batch of documents, (id, payload) rows, into
+        the sink's one fixed index (K6: NoRotation, as the reference).
+        Must be idempotent in ``batch_id``."""
 
 
 class ParquetDocumentSink(DocumentSink):
     """The local OpenSearch stand-in: a keyed parquet directory,
-    partitioned by batch_id (idempotent replay); when rotation (K6) is
-    active, ``index_name`` rides as a plain data column. Partitioning by
-    batch_id ALONE is deliberate: replay overwrite must clobber the whole
-    batch even if the (deterministic) index name ever differed, so it can
-    never strand rows under a stale index partition."""
+    partitioned by batch_id (idempotent replay)."""
 
     def __init__(self, path: str) -> None:
         self.path = path
@@ -100,7 +96,7 @@ class OpenSearchDocumentSink(DocumentSink):
 
     Semantics per the reference:
     - create-if-not-exists: ``indices.create(..., ignore=[400, 404])``
-      per distinct target index before the bulk (400 = already exists).
+      of the one fixed index before the bulk (400 = already exists).
     - upsert-by-id: every document ships as an ``index`` action with
       ``_id`` = the record id, so a crash-replayed micro-batch
       overwrites its own documents — idempotent, matching the
@@ -111,7 +107,7 @@ class OpenSearchDocumentSink(DocumentSink):
 
     Scale shape: documents stream out per partition in ``batch_size``
     NDJSON chunks — no driver collect; the only driver-side work is the
-    distinct index-name listing (bounded by the rotation granularity).
+    one index creation.
     """
 
     def __init__(
@@ -128,19 +124,11 @@ class OpenSearchDocumentSink(DocumentSink):
 
     def bulk_index(self, docs: DataFrame, batch_id: int) -> None:
         factory = self.client_factory
-        default_index = self.index
+        index = self.index
         batch_size = max(1, self.batch_size)
-        has_rotation = "index_name" in docs.columns
 
-        # Driver-side DDL: create-if-not-exists for every target index
-        # (rotation yields at most a handful of names per batch).
-        client = factory()
-        if has_rotation:
-            names = [r[0] for r in docs.select("index_name").distinct().collect()]
-        else:
-            names = [default_index]
-        for name in names:
-            client.indices.create(index=name, ignore=[400, 404], body=self.index_body)
+        # Driver-side DDL: create-if-not-exists.
+        factory().indices.create(index=index, ignore=[400, 404], body=self.index_body)
 
         def send_partition(rows) -> None:
             import json as _json
@@ -163,10 +151,7 @@ class OpenSearchDocumentSink(DocumentSink):
                 actions.clear()
 
             for row in rows:
-                idx = (row["index_name"] if has_rotation else None) or default_index
-                actions.append(
-                    _json.dumps({"index": {"_index": idx, "_id": row["id"]}})
-                )
+                actions.append(_json.dumps({"index": {"_index": index, "_id": row["id"]}}))
                 # payload is already a JSON document string — ship verbatim
                 actions.append(row["payload"])
                 if len(actions) >= 2 * batch_size:

@@ -73,15 +73,6 @@ class DualDelivery:
             and self.to_s3.result.n_input == self.to_docs.result.n_input
         )
 
-    def counts(self) -> dict:
-        return {
-            "n_input": self.to_s3.result.n_input,
-            "s3_ok": self.to_s3.result.n_ok,
-            "s3_failed": self.to_s3.result.n_failed,
-            "docs_ok": self.to_docs.result.n_ok,
-            "docs_indexed": self.to_docs.count_documents(),
-        }
-
 
 def build_dual_delivery(spark: SparkSession, source_dir: str, dest_root: str) -> DualDelivery:
     """The reference's two-destination fan-out with its defaults: both

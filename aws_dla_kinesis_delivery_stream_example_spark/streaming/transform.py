@@ -9,8 +9,9 @@ Reference semantics reproduced (kds_example/kds_helper.py:29-63):
 - recordId is echoed through unchanged (T6, kds_example/lbd/common.py:24-25)
 
 Two execution paths:
-- declarative transforms (Column -> Column): stay fully JVM-side,
-  whole-stage codegen — the fast path.
+- identity (no ``fn``): the payload is the input's ``json_line``, and a
+  record is OK unless a caller's ``fail_when`` Column holds; stays
+  fully JVM-side, whole-stage codegen — the fast path.
 - black-box dict->dict Python transforms (the reference's actual
   extension hook, kds_example/lbd/to_s3.py:6-7): a batched Python UDF
   over the JSON string column (pickled rows, ``BatchEvalPython``).
@@ -70,12 +71,11 @@ def transform_udf(fn: Callable[[dict], dict]):
 def apply_transform(
     df: DataFrame,
     fn: Callable[[dict], dict] | None = None,
-    declarative: dict[str, Column] | None = None,
     fail_when: Column | None = None,
 ) -> DataFrame:
-    """Produce df + (payload, status) columns.
+    """Produce df + (payload, status) columns from ``df.json_line``.
 
-    Declarative mode (preferred): pass Column expressions; stays
+    Identity mode (no ``fn``): the payload is ``json_line``; stays
     JVM-side, and a record is OK unless ``fail_when`` holds
     (ProcessingFailed). Black-box mode: pass ``fn`` and the transform
     runs as a batched Python UDF over ``json_line``; ``fn`` decides every
@@ -87,7 +87,4 @@ def apply_transform(
     status = F.lit(STATUS_OK)
     if fail_when is not None:
         status = F.when(fail_when, STATUS_FAILED).otherwise(status)
-    out = df
-    for name, col in (declarative or {}).items():
-        out = out.withColumn(name, col)
-    return out.withColumn("status", status)
+    return df.withColumn("payload", F.col("json_line")).withColumn("status", status)

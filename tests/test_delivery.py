@@ -4,6 +4,7 @@ fan-out — the reference's own test strategy generalized."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
@@ -13,6 +14,7 @@ from contextlib import contextmanager, nullcontext
 import pytest
 from py4j.protocol import Py4JJavaError
 
+from aws_dla_kinesis_delivery_stream_example_spark.admin import count_objects, count_records
 from aws_dla_kinesis_delivery_stream_example_spark.functions.serde import BANK_ACCOUNT_SCHEMA
 from aws_dla_kinesis_delivery_stream_example_spark.sources.jsonlines import (
     generate_bank_accounts,
@@ -80,11 +82,11 @@ def test_reconciliation(pipeline):
 
 def test_sink_counts_match_statuses(spark, pipeline):
     r = pipeline.result
-    assert pipeline.count_sink_records(PREFIX_SUCCESS) == r.n_ok
-    assert pipeline.count_sink_records(PREFIX_FAILED) == r.n_failed
-    assert pipeline.count_sink_records(PREFIX_BACKUP) == r.n_input  # K3 raw backup
+    assert count_records(spark, pipeline.path(PREFIX_SUCCESS)) == r.n_ok
+    assert count_records(spark, pipeline.path(PREFIX_FAILED)) == r.n_failed
+    assert count_records(spark, pipeline.path(PREFIX_BACKUP)) == r.n_input  # K3 raw backup
     assert pipeline.count_documents() == r.n_ok  # K4 document sink
-    assert pipeline.count_sink_objects(PREFIX_SUCCESS) > 0  # A2
+    assert count_objects(pipeline.path(PREFIX_SUCCESS)) > 0  # A2
 
 
 def test_failed_sink_preserves_original_payload(spark, source_dir, pipeline):
@@ -102,9 +104,9 @@ def test_transform_applied_to_ok(spark, pipeline):
 def test_exactly_once_rerun(spark, pipeline):
     """Re-running on the same checkpoint adds nothing (stronger than the
     reference's at-least-once, SURVEY.md §2.9)."""
-    before = pipeline.count_sink_records(PREFIX_SUCCESS)
+    before = count_records(spark, pipeline.path(PREFIX_SUCCESS))
     pipeline.run()
-    assert pipeline.count_sink_records(PREFIX_SUCCESS) == before
+    assert count_records(spark, pipeline.path(PREFIX_SUCCESS)) == before
 
 
 def test_identity_fanout_golden_roundtrip(spark, source_dir, tmp_path):
@@ -150,7 +152,7 @@ def test_incremental_batch_pickup(spark, pipeline, source_dir):
     pipeline.run()
     assert pipeline.result.n_input == N + 100
     assert pipeline.result.reconciled()
-    assert pipeline.count_sink_records(PREFIX_BACKUP) == N + 100
+    assert count_records(spark, pipeline.path(PREFIX_BACKUP)) == N + 100
 
 
 _ACCOUNT_DDL = "id string, firstname string, lastname string, description string, balance long"
@@ -234,50 +236,6 @@ def test_black_box_transform_is_a_batched_python_udf(spark):
     assert rows[1].payload is None and rows[2].payload is None
 
 
-def test_index_rotation(spark, source_dir, tmp_path):
-    """K6: OneDay rotation partitions the document sink by a
-    date-derived index name; NoRotation stays flat."""
-    import re
-
-    p = DeliveryPipeline(
-        spark,
-        source_dir,
-        str(tmp_path / "rot"),
-        document_sink=True,
-        index_rotation="OneDay",
-    )
-    p.run()
-    docs = spark.read.parquet(p.path("documents"))
-    names = {r.index_name for r in docs.select("index_name").distinct().collect()}
-    assert len(names) >= 1
-    assert all(re.fullmatch(r"documents-\d{4}-\d{2}-\d{2}", n) for n in names)
-    assert docs.count() == p.result.n_ok
-    # determinism under replay: the per-batch rotation epoch is recorded
-    # durably at first attempt, so a crash-replay crossing a rotation
-    # boundary re-derives the SAME index name (no stranded duplicates).
-    e0 = p._rotation_epoch(0)
-    assert p._rotation_epoch(0) == e0
-    epoch_dir = os.path.join(str(tmp_path / "rot"), "_index_epoch")
-    assert os.path.isdir(epoch_dir) and os.listdir(epoch_dir)
-
-
-def test_index_rotation_repins_an_empty_pin(spark, source_dir, tmp_path):
-    """K6: a crash between creating and writing ``_index_epoch/0`` leaves
-    an empty pin. The replay treats it as unpinned and delivers every
-    document, instead of failing on ``float("")`` in every replay."""
-    dest = tmp_path / "rot-empty"
-    (dest / "_index_epoch").mkdir(parents=True)
-    pin = dest / "_index_epoch" / "0"
-    pin.write_text("")
-    p = DeliveryPipeline(
-        spark, source_dir, str(dest), document_sink=True, index_rotation="OneDay"
-    )
-    p.run()
-    assert p.result.n_ok > 0
-    assert spark.read.parquet(p.path("documents")).count() == p.result.n_ok
-    assert float(pin.read_text()) > 0  # re-pinned
-
-
 def test_backup_failure_branch(spark, source_dir, tmp_path):
     """K3 failure branch: when the raw-backup write fails past its one
     bounded retry, original rows land under 02-backup-failed/
@@ -292,8 +250,8 @@ def test_backup_failure_branch(spark, source_dir, tmp_path):
     assert r.reconciled() and r.n_input > 0
     assert r.n_backup_failed == r.n_input
     assert r.backup_retries == 2 * r.n_batches  # initial + 1 retry per batch
-    assert p.count_sink_records(PREFIX_BACKUP) == 0
-    assert p.count_sink_records(PREFIX_BACKUP_FAILED) == r.n_input
+    assert count_records(spark, p.path(PREFIX_BACKUP)) == 0
+    assert count_records(spark, p.path(PREFIX_BACKUP_FAILED)) == r.n_input
     # the failure branch preserves the ORIGINAL pre-transform records
     src = {rec["id"]: rec for rec in _read_lines(spark, source_dir)}
     backed = _read_lines(spark, p.path(PREFIX_BACKUP_FAILED))
@@ -339,7 +297,7 @@ def test_document_client_failure_routes_to_error(spark, source_dir, tmp_path):
         r = p.result
         assert r.doc_sink_retries == 2 * r.n_batches
         assert (r.n_failed > 0) == (fn is not None)
-        assert p.count_sink_records(PREFIX_FAILED) == r.n_ok + r.n_failed
+        assert count_records(spark, p.path(PREFIX_FAILED)) == r.n_ok + r.n_failed
 
 
 def test_replay_batch_is_idempotent(spark, tmp_path):
@@ -352,10 +310,10 @@ def test_replay_batch_is_idempotent(spark, tmp_path):
     p = DeliveryPipeline(spark, src, str(tmp_path / "out"), document_sink=True)
     batch = spark.read.schema(BANK_ACCOUNT_SCHEMA).json(src)
     p._process_batch(batch, 0)
-    assert p.count_sink_records(PREFIX_SUCCESS) == 200
+    assert count_records(spark, p.path(PREFIX_SUCCESS)) == 200
     p._process_batch(batch, 0)  # simulated post-crash replay
-    assert p.count_sink_records(PREFIX_SUCCESS) == 200
-    assert p.count_sink_records(PREFIX_BACKUP) == 200
+    assert count_records(spark, p.path(PREFIX_SUCCESS)) == 200
+    assert count_records(spark, p.path(PREFIX_BACKUP)) == 200
     assert p.count_documents() == 200
 
 
@@ -413,9 +371,31 @@ def _run_dual(spark, dual, prior: str | None, raises=None) -> None:
         _set_retention(spark, before)
 
 
-def _progress_logged(pipe) -> bool:
+def _progress_log(pipe) -> list[dict]:
+    """The K8 progress records the pipeline's last query logged."""
     log = os.path.join(pipe.dest_dir, "_progress", f"{pipe.last_query.id}.jsonl")
-    return os.path.isfile(log) and os.path.getsize(log) > 0
+    if not os.path.isfile(log):
+        return []
+    with open(log) as f:
+        return [json.loads(line) for line in f]
+
+
+def test_progress_log_reconciles(spark, tmp_path):
+    """K8: a drain logs one StreamingQueryProgress line per micro-batch
+    under ``_progress/<query id>.jsonl``, and the logged input rows
+    reconcile with the run's counters and the durable success sink (the
+    reference's README.rst:113-124 reconciliation)."""
+    src = str(tmp_path / "src")
+    produce_jsonlines(generate_bank_accounts(spark, 1000, partitions=4), src)
+    n_files = len([f for f in glob.glob(os.path.join(src, "part-*")) if not f.endswith(".crc")])
+    p = DeliveryPipeline(spark, src, str(tmp_path / "dest"), max_files_per_trigger=1)
+    p.run()
+    progress = _progress_log(p)
+    assert p.result.n_batches == n_files > 1
+    assert [pr["batchId"] for pr in progress] == list(range(n_files))
+    rows = sum(pr["numInputRows"] for pr in progress)
+    assert rows == p.result.n_input == 1000
+    assert rows == count_records(spark, p.path(PREFIX_SUCCESS)) + p.result.n_failed
 
 
 def test_dual_delivery_topology(spark, source_dir, tmp_path):
@@ -429,9 +409,9 @@ def test_dual_delivery_topology(spark, source_dir, tmp_path):
         dual = build_dual_delivery(spark, source_dir, str(tmp_path / f"dual{i}"))
         _run_dual(spark, dual, prior)
         assert dual.reconciled()
-        c = dual.counts()
-        assert c["s3_ok"] == c["n_input"] == c["docs_ok"] == c["docs_indexed"]
-        assert _progress_logged(dual.to_s3) and _progress_logged(dual.to_docs)
+        s3, docs = dual.to_s3.result, dual.to_docs.result
+        assert s3.n_ok == s3.n_input == docs.n_ok == dual.to_docs.count_documents()
+        assert _progress_log(dual.to_s3) and _progress_log(dual.to_docs)
 
 
 def test_dual_delivery_one_stream_fails(spark, source_dir, tmp_path):
@@ -456,7 +436,7 @@ def test_dual_delivery_one_stream_fails(spark, source_dir, tmp_path):
         docs = dual.to_docs.result
         assert docs.n_input == n_source and docs.reconciled()
         assert dual.to_docs.count_documents() == docs.n_ok == n_source
-        assert _progress_logged(dual.to_docs)
+        assert _progress_log(dual.to_docs)
 
 
 def test_dual_delivery_start_failure_stops_the_other(spark, source_dir, tmp_path):
@@ -514,7 +494,7 @@ def test_empty_flush_writes_and_counts_nothing(spark, tmp_path):
     )
     p._process_batch(spark.createDataFrame([], BANK_ACCOUNT_SCHEMA), 0)
     for prefix in (PREFIX_BACKUP, PREFIX_BACKUP_FAILED, PREFIX_SUCCESS, PREFIX_FAILED):
-        assert p.count_sink_records(prefix) == 0
+        assert count_records(spark, p.path(prefix)) == 0
     assert p.count_documents() == 0
     assert p.result == DeliveryResult()
 
@@ -538,8 +518,6 @@ def test_byte_size_flush(spark, source_dir, tmp_path):
     byte cap (whole-file rounding) — the Firehose BufferingHints
     SizeInMBs condition (iac/s2_app.py:323-326), previously only
     approximated by trigger interval + file count."""
-    import glob
-
     files = [f for f in glob.glob(os.path.join(source_dir, "part-*")) if not f.endswith(".crc")]
     sizes = [os.path.getsize(f) for f in files]
     cap = max(sizes) + 1  # ~one file per flush after whole-file rounding
@@ -547,9 +525,7 @@ def test_byte_size_flush(spark, source_dir, tmp_path):
     p.run()
     n_source = spark.read.text(source_dir).count()
     assert p.result.n_input == n_source  # no rows lost to the batching change
-    progress = [
-        pr for pr in p._progress_dicts(p.last_query) if pr.get("numInputRows", 0) > 0
-    ]
+    progress = [pr for pr in _progress_log(p) if pr.get("numInputRows", 0) > 0]
     # 10+ source files at ~one file per flush: strictly more than one
     # micro-batch, and no batch admits more than cap + one file of rows.
     assert len(progress) > 1

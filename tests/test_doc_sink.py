@@ -105,28 +105,6 @@ def test_bulk_upsert_by_id(spark, tmp_path):
     assert ddl["ignore"] == [400, 404]  # create-if-not-exists semantics
 
 
-def test_index_rotation_routes_indices(spark, tmp_path):
-    """K6 + K4: with rotation active each document targets its
-    time-derived index name."""
-    rec = str(tmp_path / "rec")
-    src = str(tmp_path / "src")
-    produce_jsonlines(generate_bank_accounts(spark, 50, partitions=2), src)
-    sink = OpenSearchDocumentSink(_fake_factory(rec), batch_size=10)
-    p = DeliveryPipeline(
-        spark,
-        src,
-        str(tmp_path / "dest"),
-        document_client=sink,
-        index_rotation="OneDay",
-    )
-    p.run()
-    docs = _indexed_docs(rec)
-    assert len(docs) == 50
-    import re
-
-    assert all(re.fullmatch(r"documents-\d{4}-\d{2}-\d{2}", d["_index"]) for d in docs)
-
-
 def test_bulk_item_errors_route_to_error_sink(spark, tmp_path):
     """A bulk response with errors raises -> one bounded retry (K7) ->
     OK payloads land in the error sink under the -docs flush key."""

@@ -1,14 +1,17 @@
 """Dead-surface guards, no Spark session needed.
 
-Every module-level def, class or assignment in the package is used by
-code that runs, or is named in ``ALLOWED``.
+Every module-level def, class or assignment in the package, and every
+method of a module-level class, is used by code that runs, or is named
+in ``ALLOWED``.
 
 Code that runs is the package itself, ``bench.py``,
 ``__spark_entry__.py``, ``perfbench/*.py`` and ``scripts/*.py``;
 ``test_*.py`` files do not count, so a symbol that only its own tests
-call is flagged. A use is a Name, Attribute or import-alias reference
-outside the symbol's own definition; an import counts only when the
-importing file reads the name it binds, and a re-export in an
+call is flagged. A use of a module-level symbol is a Name, Attribute
+or import-alias reference outside the symbol's own definition; a use
+of a method (``ALLOWED`` key ``Class.method``) is an Attribute
+reference outside the method's own definition. An import counts only
+when the importing file reads the name it binds, and a re-export in an
 ``__init__.py`` is not a use. A function registered with
 ``@query(...)`` is used by the catalog. Dunder names and
 ``__init__.py`` definitions are exempt.
@@ -16,62 +19,102 @@ importing file reads the name it binds, and a re-export in an
 Each ``ALLOWED`` entry must still exist and still be unused, so the
 list cannot outlive the reason it gives.
 
-Every option (a defaulted parameter of a uniquely named module-level
-package function) that has a runtime caller takes at least two values
+Every option that has a runtime caller takes at least two values
 across its runtime call sites, or is named in ``ONE_VALUE_ALLOWED``:
-with one value in use it is a constant. Runtime call sites are the
-same files as above; a test is not a caller that justifies an option,
-so a value only a test passes does not count. A call site that omits
-the option passes its default; an argument that is not a literal or
-an ALL_CAPS constant counts as a second value. A constant counts by
-its value (followed through imports), so ``n=_K`` with ``_K = 8`` and
-``n=8`` are one value. A function with no runtime caller is not
-scanned.
+with one value in use it is a constant. An option is a defaulted
+parameter of a uniquely named module-level package function or of a
+uniquely named class's ``__init__``, or a defaulted field of a
+``@dataclass`` (its positional index is its place among the fields the
+constructor takes; a ``field(init=False)`` is state, not an option).
+Runtime call sites are the same files as above; a test is not a caller
+that justifies an option, so a value only a test passes does not
+count. A call site that omits the option passes its default; an
+argument that is not a literal or an ALL_CAPS constant counts as a
+second value. A constant counts by its value (followed through
+imports), so ``n=_K`` with ``_K = 8`` and ``n=8`` are one value. A
+function or class with no runtime caller is not scanned.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import operator
+import textwrap
 from collections import Counter
-from pathlib import Path
+from pathlib import Path, PurePosixPath
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "aws_dla_kinesis_delivery_stream_example_spark"
 
-# (module path under the package, name) -> why it stays unused.
+# (module path under the package, name or Class.method) -> why it
+# stays unused.
 ALLOWED = {
+    ("admin.py", "match_all"): "reference admin surface, PARITY Q1",
+    ("admin.py", "count_records"): "reference admin surface, PARITY A1",
+    ("admin.py", "count_objects"): "reference admin surface, PARITY A2",
     ("admin.py", "truncate"): "reference admin surface, PARITY Q3",
     ("admin.py", "create_sink_table"): "reference admin surface, PARITY Q4",
     ("admin.py", "drop_sink_table"): "reference admin surface, PARITY Q4",
     ("admin.py", "upsert_by_id"): "reference admin surface, PARITY Q4",
     ("admin.py", "health_check"): "reference admin surface, PARITY Q5",
+    ("streaming/delivery.py", "DeliveryPipeline.count_documents"): (
+        "A3 document count: hides the doc sink's parquet layout"
+    ),
     ("streaming/envelope.py", "handle_event"): "the reference's Lambda handler, PARITY T1",
     ("streaming/doc_sink.py", "OpenSearchDocumentSink"): "K4 deployment seam",
     ("streaming/doc_sink.py", "opensearch_client_factory"): "K4 deployment seam",
     ("sources/jsonlines.py", "kinesis_reader"): "Kinesis cluster binding, PARITY S3",
     ("sources/kinesis_testing.py", "register"): "local source for kinesis_reader, PARITY S3",
+    ("sources/kinesis_testing.py", "_FakeKinesisStreamReader.initialOffset"): (
+        "called by Spark's Python Data Source API"
+    ),
+    ("sources/kinesis_testing.py", "_FakeKinesisStreamReader.readBetweenOffsets"): (
+        "called by Spark's Python Data Source API"
+    ),
+    ("sources/kinesis_testing.py", "FakeKinesisDataSource.simpleStreamReader"): (
+        "called by Spark's Python Data Source API"
+    ),
     ("streaming/pipeline.py", "build_dual_delivery"): "the reference's two-stream topology",
     ("operators/jpeg.py", "encode_jpeg"): "the JPEG source for the decoder's tests",
     ("operators/multimodal.py", "MEDIA_SCHEMA"): "the media frame schema tests build on",
     ("plans/curation16.py", "ATTRITION_REASONS"): "q149's reason vocabulary, read by tests",
 }
 
-# (module path under the package, function, parameter) -> why the
-# option stays settable with one value in use.
+# (module path under the package, function or class, parameter or
+# field) -> why the option stays settable with one value in use.
 ONE_VALUE_ALLOWED = {
     ("sources/jsonlines.py", "generate_bank_accounts", "partitions"): (
         "deployment setting: the stream's provisioned shard count"
     ),
+    ("streaming/delivery.py", "DeliveryPipeline", "trigger_seconds"): (
+        "deployment setting: the reference's BufferingHints interval (iac/s2_app.py:323-326)"
+    ),
+    ("streaming/delivery.py", "DeliveryPipeline", "max_buffer_bytes"): (
+        "deployment setting: the reference's BufferingHints size (iac/s2_app.py:323-326)"
+    ),
 }
 
 
-def _runtime_files() -> list[Path]:
-    files = sorted(PKG.rglob("*.py"))
-    files += [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
-    files += sorted((ROOT / "perfbench").glob("*.py"))
-    files += sorted((ROOT / "scripts").glob("*.py"))
-    return [p for p in files if not p.name.startswith("test_")]
+@functools.cache
+def _sources(root: Path = ROOT) -> dict[str, ast.Module]:
+    """Parsed runtime files under ``root``, keyed by their posix path
+    relative to ``root``."""
+    files = sorted((root / PKG.name).rglob("*.py"))
+    files += [root / "bench.py", root / "__spark_entry__.py"]
+    files += sorted((root / "perfbench").glob("*.py"))
+    files += sorted((root / "scripts").glob("*.py"))
+    return {
+        p.relative_to(root).as_posix(): ast.parse(p.read_text(), filename=str(p))
+        for p in files
+        if p.is_file() and not p.name.startswith("test_")
+    }
+
+
+def _package_path(name: str) -> str | None:
+    """A source's path under the package, None outside it."""
+    prefix = f"{PKG.name}/"
+    return name[len(prefix):] if name.startswith(prefix) else None
 
 
 def _is_catalog_query(node: ast.AST) -> bool:
@@ -82,11 +125,16 @@ def _is_catalog_query(node: ast.AST) -> bool:
 
 
 def _definitions(tree: ast.Module):
-    """(name, defining statement) for each module-level symbol."""
+    """(name, defining statement) for each module-level symbol, and
+    (``Class.method``, def) for each method of a module-level class."""
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             if not _is_catalog_query(node):
                 yield node.name, node
+            if isinstance(node, ast.ClassDef):
+                for m in node.body:
+                    if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        yield f"{node.name}.{m.name}", m
         elif isinstance(node, (ast.Assign, ast.AnnAssign)):
             targets = node.targets if isinstance(node, ast.Assign) else [node.target]
             for t in targets:
@@ -101,44 +149,50 @@ def _loaded(tree: ast.Module) -> set[str]:
 
 
 def _uses(node: ast.AST, loaded: set[str]) -> Counter:
-    """References per name under ``node``; an import alias counts only
-    when its local name is in ``loaded``, the names its file reads."""
+    """References under ``node``: ``name`` per read or import alias
+    (an alias counts only when its local name is in ``loaded``, the
+    names its file reads), ``.name`` per attribute."""
     c: Counter = Counter()
     for n in ast.walk(node):
         if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
             c[n.id] += 1
         elif isinstance(n, ast.Attribute):
-            c[n.attr] += 1
+            c[f".{n.attr}"] += 1
         elif isinstance(n, ast.alias) and (n.asname or n.name.split(".")[0]) in loaded:
             c[n.name.rsplit(".", 1)[-1]] += 1
     return c
 
 
-def _scan() -> tuple[set[tuple[str, str]], set[tuple[str, str]]]:
+def _scan(sources: dict[str, ast.Module]) -> tuple[set[tuple[str, str]], set[tuple[str, str]]]:
     """(every defined symbol, the unused ones), keyed like ALLOWED."""
     uses: Counter = Counter()
     defs = []
-    for path in _runtime_files():
-        tree = ast.parse(path.read_text(), filename=str(path))
+    for name, tree in sources.items():
         loaded = _loaded(tree)
-        if path.name != "__init__.py":
+        is_init = name.endswith("__init__.py")
+        if not is_init:
             uses += _uses(tree, loaded)
-        if path.is_relative_to(PKG) and path.name != "__init__.py":
-            rel = path.relative_to(PKG).as_posix()
-            for name, node in _definitions(tree):
-                if not (name.startswith("__") and name.endswith("__")):
-                    defs.append((rel, name, _uses(node, loaded)[name]))
-    defined = {(rel, name) for rel, name, _ in defs}
-    unused = {(rel, name) for rel, name, own in defs if uses[name] - own <= 0}
+        rel = _package_path(name)
+        if rel is None or is_init:
+            continue
+        for symbol, node in _definitions(tree):
+            cls, _, method = symbol.rpartition(".")
+            if method.startswith("__") and method.endswith("__"):
+                continue
+            keys = (f".{method}",) if cls else (symbol, f".{symbol}")
+            own = _uses(node, loaded)
+            defs.append((rel, symbol, keys, sum(own[k] for k in keys)))
+    defined = {(rel, symbol) for rel, symbol, _, _ in defs}
+    unused = {(rel, symbol) for rel, symbol, keys, own in defs if sum(uses[k] for k in keys) <= own}
     return defined, unused
 
 
 def test_every_package_symbol_has_a_runtime_caller():
-    _, unused = _scan()
+    _, unused = _scan(_sources())
     flagged = sorted(unused - set(ALLOWED))
     assert not flagged, (
-        "module-level symbols with no caller outside tests (delete them, "
-        f"or add an ALLOWED entry with its reason): {flagged}"
+        "package symbols and methods with no caller outside tests (delete "
+        f"them, or add an ALLOWED entry with its reason): {flagged}"
     )
 
 
@@ -150,15 +204,15 @@ def test_unused_import_is_not_a_use():
 
 
 def test_allowlist_names_exist_and_are_still_unused():
-    defined, unused = _scan()
+    defined, unused = _scan(_sources())
     missing = sorted(set(ALLOWED) - defined)
     assert not missing, f"ALLOWED names that no longer exist: {missing}"
     now_used = sorted(set(ALLOWED) - unused)
     assert not now_used, f"ALLOWED names that now have a caller: {now_used}"
 
 
-def _module_name(path: Path) -> str:
-    parts = path.relative_to(ROOT).with_suffix("").parts
+def _module_name(name: str) -> str:
+    parts = PurePosixPath(name).with_suffix("").parts
     return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
@@ -176,24 +230,22 @@ class _Constants:
     literals (``N = 5``, ``M = 1 << P``, ``K = other.K``), per module,
     following imports between package modules."""
 
-    def __init__(self) -> None:
-        self._trees = {}
-        for path in _runtime_files():
-            self._trees[_module_name(path)] = (path, ast.parse(path.read_text(), filename=str(path)))
+    def __init__(self, sources: dict[str, ast.Module]) -> None:
+        self._trees = {_module_name(name): (name, tree) for name, tree in sources.items()}
         self._values: dict[str, tuple[dict, dict]] = {}
 
     def scope(self, module: str) -> tuple[dict, dict]:
         """(constant name -> value, module alias -> module) for a module."""
         if module not in self._values:
             self._values[module] = consts, aliases = {}, {}
-            path, tree = self._trees.get(module, (None, ast.Module(body=[])))
+            name, tree = self._trees.get(module, ("", ast.Module(body=[])))
             for node in tree.body:
                 if isinstance(node, ast.Import):
                     for a in node.names:
                         if a.asname:
                             aliases[a.asname] = a.name
                 elif isinstance(node, ast.ImportFrom):
-                    src = _imported(node, module, path is not None and path.name == "__init__.py")
+                    src = _imported(node, module, name.endswith("__init__.py"))
                     for a in node.names:
                         local = a.asname or a.name
                         if f"{src}.{a.name}" in self._trees:
@@ -258,28 +310,75 @@ _FOLDABLE = {
 }
 
 
-def _options() -> dict[tuple[str, str, str], tuple[int | None, ast.AST, str]]:
-    """(module path, function, parameter) -> (positional index or None,
-    default, defining module) for every defaulted parameter of a
-    uniquely named module-level package function."""
+def _parameters(fn: ast.FunctionDef | ast.AsyncFunctionDef, skip: int = 0):
+    """(parameter, positional index or None, default) per defaulted
+    parameter of ``fn``; ``skip`` leading parameters (``self``) are not
+    passed by a caller."""
+    positional = (fn.args.posonlyargs + fn.args.args)[skip:]
+    tail = positional[len(positional) - len(fn.args.defaults):]
+    for arg, default in zip(tail, fn.args.defaults):
+        yield arg.arg, positional.index(arg), default
+    for arg, default in zip(fn.args.kwonlyargs, fn.args.kw_defaults):
+        if default is not None:
+            yield arg.arg, None, default
+
+
+def _called(node: ast.AST) -> str | None:
+    """The name a call or decorator expression calls (``f`` or ``m.f``)."""
+    node = node.func if isinstance(node, ast.Call) else node
+    return getattr(node, "id", None) or getattr(node, "attr", None)
+
+
+def _fields(cls: ast.ClassDef):
+    """(field, positional index, default) per defaulted field that a
+    ``@dataclass``'s constructor takes."""
+    index = 0
+    for stmt in cls.body:
+        if not (isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name)):
+            continue
+        if "ClassVar" in ast.unparse(stmt.annotation):
+            continue
+        default = stmt.value
+        if isinstance(default, ast.Call) and _called(default) == "field":
+            kw = {k.arg: k.value for k in default.keywords}
+            if isinstance(kw.get("init"), ast.Constant) and kw["init"].value is False:
+                continue
+            default = kw.get("default", kw.get("default_factory"))
+        if default is not None:
+            yield stmt.target.id, index, default
+        index += 1
+
+
+def _constructor(cls: ast.ClassDef):
+    """The options of a class's constructor: its ``@dataclass`` fields,
+    or the defaulted parameters of its ``__init__``."""
+    if any(_called(d) == "dataclass" for d in cls.decorator_list):
+        return _fields(cls)
+    for stmt in cls.body:
+        if isinstance(stmt, ast.FunctionDef) and stmt.name == "__init__":
+            return _parameters(stmt, skip=1)
+    return ()
+
+
+def _options(sources: dict[str, ast.Module]) -> dict[tuple[str, str, str], tuple[int | None, ast.AST, str]]:
+    """(module path, function or class, parameter) -> (positional index
+    or None, default, defining module) for every option of a uniquely
+    named module-level package function or class."""
     found: dict[str, list] = {}
-    for path in sorted(PKG.rglob("*.py")):
-        for node in ast.parse(path.read_text(), filename=str(path)).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                found.setdefault(node.name, []).append((path, node))
+    for name, tree in sources.items():
+        if _package_path(name) is None:
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                found.setdefault(node.name, []).append((name, node))
     options = {}
-    for name, defs in found.items():
+    for symbol, defs in found.items():
         if len(defs) != 1:
             continue
-        path, fn = defs[0]
-        rel, module = path.relative_to(PKG).as_posix(), _module_name(path)
-        positional = fn.args.posonlyargs + fn.args.args
-        tail = positional[len(positional) - len(fn.args.defaults):]
-        for arg, default in zip(tail, fn.args.defaults):
-            options[(rel, name, arg.arg)] = (positional.index(arg), default, module)
-        for arg, default in zip(fn.args.kwonlyargs, fn.args.kw_defaults):
-            if default is not None:
-                options[(rel, name, arg.arg)] = (None, default, module)
+        name, node = defs[0]
+        params = _constructor(node) if isinstance(node, ast.ClassDef) else _parameters(node)
+        for param, index, default in params:
+            options[(_package_path(name), symbol, param)] = (index, default, _module_name(name))
     return options
 
 
@@ -300,31 +399,30 @@ def _argument(call: ast.Call, index: int | None, param: str) -> ast.AST | None:
 _OMITTED = ast.Constant(None)
 
 
-def _single_valued_options() -> set[tuple[str, str, str]]:
-    options = _options()
-    constants = _Constants()
-    by_function: dict[str, list] = {}
+def _single_valued_options(sources: dict[str, ast.Module]) -> set[tuple[str, str, str]]:
+    options = _options(sources)
+    constants = _Constants(sources)
+    by_callee: dict[str, list] = {}
     for key, spec in options.items():
-        by_function.setdefault(key[1], []).append((key, spec))
+        by_callee.setdefault(key[1], []).append((key, spec))
     values: dict[tuple[str, str, str], set] = {key: set() for key in options}
-    for path in _runtime_files():
-        module = _module_name(path)
-        for call in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+    for name, tree in sources.items():
+        module = _module_name(name)
+        for call in ast.walk(tree):
             if not isinstance(call, ast.Call):
                 continue
-            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
-            for key, (index, default, home) in by_function.get(name, ()):
+            for key, (index, default, home) in by_callee.get(_called(call), ()):
                 arg = _argument(call, index, key[2])
                 if arg is _OMITTED:
                     value = constants.key(default, home)
                 else:
                     value = constants.key(arg, module) if arg is not None else None
-                values[key].add(value or ("computed", f"{path.name}:{call.lineno}"))
+                values[key].add(value or ("computed", f"{name}:{call.lineno}"))
     return {key for key, seen in values.items() if len(seen) == 1 and next(iter(seen))[0] != "computed"}
 
 
 def test_every_option_takes_two_values():
-    single = _single_valued_options()
+    single = _single_valued_options(_sources())
     flagged = sorted(single - set(ONE_VALUE_ALLOWED))
     assert not flagged, (
         "options that every caller sets to one value (make each a "
@@ -332,3 +430,70 @@ def test_every_option_takes_two_values():
     )
     stale = sorted(set(ONE_VALUE_ALLOWED) - single)
     assert not stale, f"ONE_VALUE_ALLOWED entries that are gone or now take two values: {stale}"
+
+
+# A synthetic project for the rule self-tests: ``Job`` is a package
+# dataclass, ``bench.py`` its one runtime caller, and a test file that
+# calls ``Job.inspect``.
+_SYNTHETIC = {
+    f"{PKG.name}/jobs.py": """
+        from dataclasses import dataclass, field
+
+        @dataclass
+        class Job:
+            name: str
+            retries: int = 1
+            n_done: int = field(default=0, init=False)
+            width: int = 4
+
+            def run(self) -> int:
+                return self._step() + self.n_done
+
+            def _step(self) -> int:
+                return self.retries * self.width
+
+            def inspect(self) -> int:
+                return self.n_done
+        """,
+    "bench.py": """
+        from pkg.jobs import Job
+
+        Job("a", 2, width=8).run()
+        Job("b", 3, 8).run()
+        """,
+    "tests/test_jobs.py": """
+        from pkg.jobs import Job
+
+        def test_inspect():
+            assert Job("c").inspect() == 0
+        """,
+}
+
+
+def _synthetic(tmp_path: Path) -> dict[str, ast.Module]:
+    for name, src in _SYNTHETIC.items():
+        (tmp_path / name).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / name).write_text(textwrap.dedent(src))
+    return _sources(tmp_path)
+
+
+def test_one_valued_dataclass_field_is_flagged(tmp_path):
+    """``width`` takes 8 at both call sites, once by keyword and once by
+    position (index 2: ``n_done`` takes no place); ``retries`` takes two
+    values."""
+    single = _single_valued_options(_synthetic(tmp_path))
+    assert ("jobs.py", "Job", "width") in single
+    assert ("jobs.py", "Job", "retries") not in single
+
+
+def test_init_false_field_is_not_flagged(tmp_path):
+    sources = _synthetic(tmp_path)
+    assert ("jobs.py", "Job", "n_done") not in _options(sources)
+    assert ("jobs.py", "Job", "n_done") not in _single_valued_options(sources)
+
+
+def test_method_only_a_test_calls_is_flagged(tmp_path):
+    _, unused = _scan(_synthetic(tmp_path))
+    assert ("jobs.py", "Job.inspect") in unused
+    assert ("jobs.py", "Job.run") not in unused  # bench.py calls it
+    assert ("jobs.py", "Job._step") not in unused  # run calls it
