@@ -20,8 +20,9 @@ reference is 2,576 rec/s), and prints ONE JSON line:
 That compact line is the driver contract: timings keyed by the qNN
 prefix at 2 decimals, error strings cut to 80 characters, compact
 separators. The full result (full query names, 3-decimal timings,
-untruncated errors, repeats, sweep wall time, host canary) is written
-to bench_full.json beside this script on every sweep.
+untruncated errors, repeats, sweep wall time, host canary, the driver
+JVM's live threads at the end by pool) is written to bench_full.json
+beside this script on every sweep.
 
 The probe modes take exact catalog names or qNN prefixes and `--sf`
 (default: the sweep's directory). `time` uses the sweep's estimator.
@@ -43,6 +44,7 @@ import shutil
 import sys
 import tempfile
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -164,6 +166,14 @@ def bench_delivery(spark, n_records: int = 100_000) -> float:
         shutil.rmtree(base, ignore_errors=True)
 
 
+def thread_census(names: list[str]) -> dict:
+    """Live threads by pool: each name with its numbers (and the
+    separators before them) stripped, so ``broadcast-exchange-12``
+    counts under ``broadcast-exchange``; plus the total."""
+    pools = Counter(re.sub(r"[-_ #.]*\d+", "", name) for name in names)
+    return {"total": len(names), "by_pool": dict(sorted(pools.items()))}
+
+
 def stdout_line(result: dict) -> str:
     """The driver's one JSON line, built from the full result."""
     queries = {
@@ -202,6 +212,7 @@ def sweep() -> None:
         tps = max(bench_delivery(spark) for _ in range(REPEATS))
     except Exception as exc:  # noqa: BLE001
         tps = {"err": f"{type(exc).__name__}: {exc}"[:500]}
+    threads = spark._jvm.java.lang.Thread.getAllStackTraces().keySet().toArray()
     result = {
         "metric": "catalog_queries_total_wall",
         "value": round(sum(ok.values()), 3),
@@ -216,6 +227,8 @@ def sweep() -> None:
         "query_errors": sorted(k for k in timings if k not in ok),
         # steal near 0% means neighbours on the host did not slow the sweep
         "host_canary": canary,
+        # a pool that grows with the query count shows up here
+        "driver_threads": thread_census([t.getName() for t in threads]),
     }
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
     with open(full_path, "w") as f:

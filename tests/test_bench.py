@@ -59,6 +59,33 @@ def test_stdout_line_from_committed_full_result():
     assert parsed["full_results"] == "bench_full.json"
 
 
+def test_thread_census_groups_threads_by_pool():
+    names = [
+        "broadcast-exchange-0",
+        "broadcast-exchange-17",
+        "shuffle-exchange-3",
+        "ResultQueryStageExecution-12",
+        "block-manager-ask-thread-pool-99",
+        "rpc-server-4-1",
+        "C1 CompilerThread0",
+        "Executor task launch worker for task 3.0 in stage 5.0 (TID 12)",
+        "main",
+    ]
+    assert bench.thread_census(names) == {
+        "total": 9,
+        "by_pool": {
+            "C CompilerThread": 1,
+            "Executor task launch worker for task in stage (TID)": 1,
+            "ResultQueryStageExecution": 1,
+            "block-manager-ask-thread-pool": 1,
+            "broadcast-exchange": 2,
+            "main": 1,
+            "rpc-server": 1,
+            "shuffle-exchange": 1,
+        },
+    }
+
+
 def test_stdout_line_cuts_errors_to_80_chars():
     full = _load("bench_full.json")
     full["queries"]["q50_streaming_tumbling"] = {"err": "AnalysisException: " + "x" * 500}
