@@ -19,34 +19,29 @@ ZS_MIN_N = 10
 ZS_THRESHOLD = 3.0
 
 
-def rolling_zscore(
-    df: DataFrame,
-    entity_col: str,
-    order_cols: tuple[str, ...],
-    value_col: str,
-) -> DataFrame:
-    """Per-entity rolling z-score outliers: each row's value against
-    the mean/stddev of its previous <= ``ZS_LOOKBACK`` rows
-    (>= ``ZS_MIN_N`` required, zero-variance windows excluded);
-    |z| >= ``ZS_THRESHOLD`` flags the row. Input ``value_col`` must
-    already be integer units (milli-units by convention) so the
-    variance arithmetic is exact.
+def rolling_zscore(df: DataFrame) -> DataFrame:
+    """Per-user rolling z-score outliers: each row's ``v_milli``
+    against the mean/stddev of the user's previous <= ``ZS_LOOKBACK``
+    rows in (ts, event_id) order (>= ``ZS_MIN_N`` required,
+    zero-variance windows excluded); |z| >= ``ZS_THRESHOLD`` flags the
+    row. ``v_milli`` is integer milli-units, so the variance arithmetic
+    is exact.
 
     Returns the input columns plus ``z`` (double). Keeps only flagged
     rows.
 
-    Scale shape: one window partitioned by the entity — partitions are
-    a single entity's history (bounded by per-entity activity, never
+    Scale shape: one window partitioned by the user — partitions are
+    a single user's history (bounded by per-user activity, never
     the corpus). All three frame aggregates (count/sum/sum-of-squares)
     share ONE WindowExec pass. The z arithmetic is exact-integer until
     the last four IEEE ops (div/sub/div/sqrt on identical inputs ->
     bit-identical across engines): milli-unit values keep sum(v^2)
     inside BIGINT for |v| <= ~650k over a 20-row frame.
     """
-    v = F.col(value_col)
+    v = F.col("v_milli")
     w = (
-        W.partitionBy(entity_col)
-        .orderBy(*order_cols)
+        W.partitionBy("user_id")
+        .orderBy("ts", "event_id")
         .rowsBetween(-ZS_LOOKBACK, -1)
     )
     st = df.select(

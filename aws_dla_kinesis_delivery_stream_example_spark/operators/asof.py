@@ -19,33 +19,33 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """For each left row, attach the right row with the greatest
-    ``right.ts <= left.ts`` within the same ``on`` key (inclusive).
+    ``right.ts <= left.ts`` within the same ``user_id`` (inclusive).
 
     Every right column but the key and ``ts`` is carried. Right-side
     (key, ts) ties resolve to one WHOLE row — the lexicographic max
     over those value columns — never a per-column max that could
     synthesize a row that doesn't exist.
     """
-    value_cols = [c for c in right.columns if c not in (on, "ts")]
-    tie_w = W.partitionBy(on, "ts").orderBy(*[F.desc(c) for c in value_cols])
+    value_cols = [c for c in right.columns if c not in ("user_id", "ts")]
+    tie_w = W.partitionBy("user_id", "ts").orderBy(*[F.desc(c) for c in value_cols])
     r = (
-        right.select(on, "ts", *value_cols)
+        right.select("user_id", "ts", *value_cols)
         .withColumn("_rn", F.row_number().over(tie_w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
     # side: right=0 sorts before left=1 at equal ts => inclusive match.
     l_tagged = left.select(
-        F.col(on).alias("_k"),
+        F.col("user_id").alias("_k"),
         F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
         F.struct(*left.columns).alias("_left"),
         *[F.lit(None).cast(r.schema[c].dataType).alias(f"_r_{c}") for c in value_cols],
     )
     r_tagged = r.select(
-        F.col(on).alias("_k"),
+        F.col("user_id").alias("_k"),
         F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         F.lit(None).cast(

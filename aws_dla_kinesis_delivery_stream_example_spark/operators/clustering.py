@@ -39,13 +39,13 @@ KMEANS_K = 8  # clusters: the seeds are the embeddings of the 8 smallest ids
 _MAX_CLUSTER_ROWS = 50_000
 
 
-def kmeans_seeds(emb: DataFrame, id_col: str, vec_col: str, k: int) -> np.ndarray:
-    """Deterministic seed centroids: the embeddings of the ``k``
-    smallest ids (TakeOrderedAndProject — no full sort), as a k x dim
-    float64 matrix in id order."""
-    rows = emb.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    if len(rows) < k:
-        raise ValueError(f"kmeans_seeds: need >= {k} rows, got {len(rows)}")
+def kmeans_seeds(emb: DataFrame) -> np.ndarray:
+    """Deterministic seed centroids: the embeddings of the ``KMEANS_K``
+    smallest ``vec_id``s (TakeOrderedAndProject — no full sort), as a
+    KMEANS_K x dim float64 matrix in id order."""
+    rows = emb.select("vec_id", "embedding").orderBy("vec_id").limit(KMEANS_K).collect()
+    if len(rows) < KMEANS_K:
+        raise ValueError(f"kmeans_seeds: need >= {KMEANS_K} rows, got {len(rows)}")
     return np.array([[float(x) for x in r[1]] for r in rows], dtype=np.float64)
 
 
@@ -97,7 +97,7 @@ def kmeans_assign(emb: DataFrame) -> DataFrame:
     Returns (id, cluster, d2) with d2 rounded to 6 dp — the rounding
     grid on which the nearest-centroid decision is made.
     """
-    cents = kmeans_seeds(emb, "vec_id", "embedding", KMEANS_K)  # k x dim, closure-shipped
+    cents = kmeans_seeds(emb)  # k x dim, closure-shipped
     return assign_with_centroids(emb, cents)
 
 
@@ -183,7 +183,7 @@ def semantic_near_duplicates(
     opaquely mid-GEMM, the group task fails fast with sizing guidance
     (set or raise ``sub_blocks``).
     """
-    cents = kmeans_seeds(emb, "vec_id", "embedding", KMEANS_K)
+    cents = kmeans_seeds(emb)
     assigned = assign_with_centroids(emb, cents, include_vector=True)
     group_keys = ["cluster"]
     if sub_blocks is not None:

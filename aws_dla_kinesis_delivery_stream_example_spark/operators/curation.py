@@ -3,6 +3,12 @@ extension): benchmark-contamination checks, incremental (batch-vs-
 corpus) dedup, boilerplate n-gram detection, and embedding-centroid
 quality stats.
 
+The operators read their frames' columns by name: a documents frame's
+``doc_id`` and ``text`` (``source`` for the cross-source audit, ``fp``
+for the snapshot diff) and the embeddings frame's ``vec_id``,
+``embedding`` and ``label``. That schema is their contract, so no
+column name is a parameter.
+
 100 TB design notes
 -------------------
 - Contamination: the *benchmark* shingle set is tiny (benchmarks are
@@ -40,20 +46,14 @@ _SPAN_N = 20  # duplicated_span_stats: tokens per window
 _SNAPSHOT_KEEP_COLS = ("source", "n_chars")  # snapshot_diff's carried metadata
 
 
-def content_digest(text_col) -> Column:
+def content_digest(text_col: str) -> Column:
     """Engine-independent content key for exact dedup across runs
     (md5 is reproducible in DuckDB/Trino/Flink SQL alike)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.md5(c)
+    return F.md5(F.col(text_col))
 
 
-def contaminated_ids(
-    candidates: DataFrame,
-    benchmark: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """IDs of candidate docs sharing >= 1 word-``CONTAM_N``-gram with
+def contaminated_ids(candidates: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """``doc_id`` of the candidate docs sharing >= 1 word-``CONTAM_N``-gram with
     any benchmark doc (the decontamination pass a training pipeline
     runs against eval sets before training).
 
@@ -66,26 +66,21 @@ def contaminated_ids(
     from .dedup import _shingle_hash_rows
 
     bench_sh = (
-        _shingle_hash_rows(benchmark, id_col, text_col, CONTAM_N)
+        _shingle_hash_rows(benchmark, "doc_id", CONTAM_N)
         .select(F.col("h").alias("shingle"))
         .distinct()
     )
-    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, CONTAM_N).select(
-        F.col("doc").alias(id_col), F.col("h").alias("shingle")
+    cand_sh = _shingle_hash_rows(candidates, "doc_id", CONTAM_N).select(
+        F.col("doc").alias("doc_id"), F.col("h").alias("shingle")
     )
     return (
         cand_sh.join(F.broadcast(bench_sh), "shingle", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
     )
 
 
-def contamination_overlap(
-    candidates: DataFrame,
-    benchmark: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
+def contamination_overlap(candidates: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Per-candidate-doc benchmark overlap FRACTION — the graded
     refinement of :func:`contaminated_ids`' boolean flag (the GPT-3
     appendix-C style "n-gram overlap with eval sets" audit): for every
@@ -94,7 +89,7 @@ def contamination_overlap(
     pipeline thresholds this (drop at >= 10%, review at >= 1%) instead
     of dropping on a single shared shingle.
 
-    Returns (id_col, n_shingles, n_hit, overlap_frac) — one row per
+    Returns (doc_id, n_shingles, n_hit, overlap_frac) — one row per
     candidate doc that has >= 1 shingle (docs shorter than ``CONTAM_N``
     words produce none, same exclusion as ``boilerplate_ratio``);
     overlap_frac is rounded to 4 dp on both engines.
@@ -109,18 +104,18 @@ def contamination_overlap(
     from .dedup import _shingle_hash_rows
 
     bench_sh = (
-        _shingle_hash_rows(benchmark, id_col, text_col, CONTAM_N)
+        _shingle_hash_rows(benchmark, "doc_id", CONTAM_N)
         .select(F.col("h").alias("shingle"))
         .distinct()
     )
-    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, CONTAM_N).select(
-        F.col("doc").alias(id_col), F.col("h").alias("shingle")
+    cand_sh = _shingle_hash_rows(candidates, "doc_id", CONTAM_N).select(
+        F.col("doc").alias("doc_id"), F.col("h").alias("shingle")
     )
     flagged = cand_sh.join(
         F.broadcast(bench_sh.withColumn("_b", F.lit(1))), "shingle", "left"
     )
     return (
-        flagged.groupBy(id_col)
+        flagged.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.sum(F.coalesce(F.col("_b"), F.lit(0))).cast("long").alias("n_hit"),
@@ -135,9 +130,7 @@ def contamination_overlap(
     )
 
 
-def incremental_dedup(
-    batch: DataFrame, corpus: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
+def incremental_dedup(batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """Dedup a new ingest batch against an existing corpus, then within
     itself: drop batch docs whose content digest already exists in the
     corpus, then keep the min-id survivor per digest among the rest.
@@ -155,27 +148,27 @@ def incremental_dedup(
     treating unknown content as mutual duplicates is usually not what
     you want (tests/test_curation.py pins the SQL behavior).
     """
-    bh = batch.withColumn("_h", content_digest(text_col))
-    ch = corpus.select(content_digest(text_col).alias("_h")).distinct()
+    bh = batch.withColumn("_h", content_digest("text"))
+    ch = corpus.select(content_digest("text").alias("_h")).distinct()
     fresh = bh.join(ch, "_h", "left_anti")
     return (
         fresh.groupBy("_h")
         .agg(
-            F.min(id_col).alias("keep_id"),
-            F.expr(f"min_by(source, {id_col})").alias("source"),
+            F.min("doc_id").alias("keep_id"),
+            F.expr("min_by(source, doc_id)").alias("source"),
             F.count(F.lit(1)).alias("n_copies"),
         )
         .drop("_h")
     )
 
 
-def boilerplate_ratio(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def boilerplate_ratio(docs: DataFrame) -> DataFrame:
     """Per-doc share of word-5-gram shingles that are *boilerplate*
     (appear in >= 3 distinct docs) — the C4-style repeated-template
     signal. Docs with zero shingles (shorter than 5 words) are
     excluded.
 
-    Returns (id_col, n_shingles, n_boiler, boiler_ratio).
+    Returns (doc_id, n_shingles, n_boiler, boiler_ratio).
     """
     # The shingle explosion feeds two consumers (the df count and the
     # per-doc ratio join) — materialize it once instead of re-running
@@ -185,8 +178,8 @@ def boilerplate_ratio(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     from .dedup import _SHINGLE_N, _shingle_hash_rows
 
     sh = stage(
-        _shingle_hash_rows(docs, id_col, text_col, _SHINGLE_N).select(
-            F.col("doc").alias(id_col), F.col("h").alias("shingle")
+        _shingle_hash_rows(docs, "doc_id", _SHINGLE_N).select(
+            F.col("doc").alias("doc_id"), F.col("h").alias("shingle")
         )
     )
     boiler = (
@@ -199,7 +192,7 @@ def boilerplate_ratio(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.broadcast(boiler.withColumn("_b", F.lit(1))), "shingle", "left"
     )
     return (
-        flagged.groupBy(id_col)
+        flagged.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.sum(F.coalesce(F.col("_b"), F.lit(0))).cast("long").alias("n_boiler"),
@@ -211,7 +204,7 @@ def boilerplate_ratio(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def duplicated_span_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def duplicated_span_stats(docs: DataFrame) -> DataFrame:
     """Per-doc duplicated-span coverage — the EXACTSUBSTR-style signal
     (Lee et al., "Deduplicating Training Data Makes Language Models
     Better"): how much of each document is covered by ``_SPAN_N``-token
@@ -230,7 +223,7 @@ def duplicated_span_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFr
     count (``boilerplate_ratio`` is the occurrence-count variant at
     shingle granularity).
 
-    Returns (id_col, n_tokens, n_dup_windows, dup_tokens,
+    Returns (doc_id, n_tokens, n_dup_windows, dup_tokens,
     dup_fraction) for EVERY input document; docs shorter than
     ``_SPAN_N`` tokens report zeros. Window hashes are 60-bit md5
     prefixes — engine-portable (the q37 pattern), so the whole statistic sits
@@ -241,7 +234,7 @@ def duplicated_span_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFr
     from ..functions import text as TX
 
     toks = docs.select(
-        F.col(id_col).alias("doc"), TX.words(text_col).alias("toks")
+        F.col("doc_id").alias("doc"), TX.words("text").alias("toks")
     ).withColumn("n_tokens", F.size("toks").cast("long"))
     window_structs = F.transform(
         F.sequence(F.lit(1), F.size("toks") - _SPAN_N + 1),
@@ -299,7 +292,7 @@ def duplicated_span_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFr
         pre.select("doc", "n_tokens")
         .join(per_doc, "doc", "left")
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             "n_tokens",
             F.coalesce("n_dup_windows", F.lit(0)).cast("long").alias("n_dup_windows"),
             F.coalesce("dup_tokens", F.lit(0)).cast("long").alias("dup_tokens"),
@@ -312,41 +305,40 @@ def duplicated_span_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFr
     )
 
 
-def label_centroids(emb: DataFrame, vec_col: str, label_col: str) -> DataFrame:
-    """Element-wise mean embedding per label as (label, centroid
+def label_centroids(emb: DataFrame) -> DataFrame:
+    """Element-wise mean ``embedding`` per ``label`` as (label, centroid
     array<double>) — |labels| x dim rows, broadcast-sized."""
     unpacked = emb.select(
-        F.col(label_col), F.posexplode(F.col(vec_col)).alias("pos", "val")
+        F.col("label"), F.posexplode(F.col("embedding")).alias("pos", "val")
     )
-    cent = unpacked.groupBy(label_col, "pos").agg(F.avg("val").alias("c"))
+    cent = unpacked.groupBy("label", "pos").agg(F.avg("val").alias("c"))
     return (
-        cent.groupBy(label_col)
+        cent.groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
         .select(
-            label_col, F.transform("pc", lambda s: s["c"]).alias("centroid")
+            "label", F.transform("pc", lambda s: s["c"]).alias("centroid")
         )
     )
 
 
-def centroid_cosines(
-    emb: DataFrame, id_col: str, vec_col: str, label_col: str
-) -> DataFrame:
-    """Cosine of every vector to its label centroid — the outlier /
-    drift signal used to filter corrupt or mislabeled embeddings."""
-    cents = label_centroids(emb, vec_col, label_col)
-    return emb.join(F.broadcast(cents), label_col).select(
-        id_col, label_col, cosine(vec_col, "centroid").alias("cos_centroid")
+def centroid_cosines(emb: DataFrame) -> DataFrame:
+    """(vec_id, label, cos_centroid): the cosine of every vector to its
+    label centroid — the outlier / drift signal used to filter corrupt
+    or mislabeled embeddings."""
+    cents = label_centroids(emb)
+    return emb.join(F.broadcast(cents), "label").select(
+        "vec_id", "label", cosine("embedding", "centroid").alias("cos_centroid")
     )
 
 
-def chunk_dedup_rewrite(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def chunk_dedup_rewrite(df: DataFrame) -> DataFrame:
     """C4/RefinedWeb-style duplicate-chunk REMOVAL with document
     rewrite: split each doc into non-overlapping
     ``DEDUP_CHUNK_TOKENS``-token chunks, keep only each chunk content's
     global first occurrence (min (doc_id, chunk_idx)), reassemble the
     surviving text per doc.
 
-    Returns (id_col, n_chunks, n_kept, removed_frac, kept_hash) — the
+    Returns (doc_id, n_chunks, n_kept, removed_frac, kept_hash) — the
     60-bit hash of the rewritten text, not the text: at 100 TB the
     rewrite lands in a sink, the audit row stays narrow. A doc whose
     every chunk occurred earlier keeps nothing (kept_hash = hash60("")).
@@ -365,7 +357,7 @@ def chunk_dedup_rewrite(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     from ..functions import text as TX
 
-    toks = df.select(id_col, TX.words(text_col).alias("tk"))
+    toks = df.select("doc_id", TX.words("text").alias("tk"))
     tk = F.col("tk")
     starts = F.when(
         F.size(tk) >= 1, F.sequence(F.lit(1), F.size(tk), F.lit(DEDUP_CHUNK_TOKENS))
@@ -378,23 +370,23 @@ def chunk_dedup_rewrite(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         ),
     )
     ch = stage(
-        toks.select(id_col, F.explode(chunk_structs).alias("c")).select(
-            id_col,
+        toks.select("doc_id", F.explode(chunk_structs).alias("c")).select(
+            "doc_id",
             F.col("c.chunk_idx").alias("chunk_idx"),
             F.col("c.ctext").alias("ctext"),
             TX.hash60(F.col("c.ctext")).alias("chash"),
         )
     )
-    first = ch.groupBy("chash").agg(F.min(F.struct(id_col, "chunk_idx")).alias("f"))
+    first = ch.groupBy("chash").agg(F.min(F.struct("doc_id", "chunk_idx")).alias("f"))
     kept = (
         ch.join(first, "chash")
         .where(
-            (F.col(id_col) == F.col(f"f.{id_col}"))
+            (F.col("doc_id") == F.col("f.doc_id"))
             & (F.col("chunk_idx") == F.col("f.chunk_idx"))
         )
-        .select(id_col, "chunk_idx", "ctext")
+        .select("doc_id", "chunk_idx", "ctext")
     )
-    agg = kept.groupBy(id_col).agg(
+    agg = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_kept"),
         TX.hash60(
             F.array_join(
@@ -413,9 +405,9 @@ def chunk_dedup_rewrite(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .cast("long")
         .alias("n_chunks")
     )
-    base = toks.select(id_col, n_chunks)
-    return base.join(agg, id_col, "left").select(
-        id_col,
+    base = toks.select("doc_id", n_chunks)
+    return base.join(agg, "doc_id", "left").select(
+        "doc_id",
         "n_chunks",
         F.coalesce(F.col("n_kept"), F.lit(0)).cast("long").alias("n_kept"),
         F.round(
@@ -427,7 +419,7 @@ def chunk_dedup_rewrite(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def source_overlap(df: DataFrame, source_col: str, text_col: str) -> DataFrame:
+def source_overlap(df: DataFrame) -> DataFrame:
     """Cross-source duplication matrix: for every source pair, the
     count of distinct word-5-gram shingles both contain, with Jaccard
     and containment — the "which sources copy from which" audit that
@@ -451,14 +443,14 @@ def source_overlap(df: DataFrame, source_col: str, text_col: str) -> DataFrame:
     from .dedup import _SHINGLE_N, _shingle_hash_rows
 
     sh = stage(
-        _shingle_hash_rows(df, source_col, text_col, _SHINGLE_N, id_type="string")
-        .withColumnRenamed("doc", source_col)
+        _shingle_hash_rows(df, "source", _SHINGLE_N, id_type="string")
+        .withColumnRenamed("doc", "source")
         .distinct()
     )
-    sizes = sh.groupBy(source_col).agg(F.count(F.lit(1)).alias("n"))
+    sizes = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     by_sh = (
         sh.groupBy("h")
-        .agg(F.array_sort(F.collect_set(source_col)).alias("ss"))
+        .agg(F.array_sort(F.collect_set("source")).alias("ss"))
         .filter(F.size("ss") >= 2)
     )
     ss = F.col("ss")
@@ -476,8 +468,8 @@ def source_overlap(df: DataFrame, source_col: str, text_col: str) -> DataFrame:
         .groupBy(F.col("p.src_a").alias("src_a"), F.col("p.src_b").alias("src_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    sa = sizes.select(F.col(source_col).alias("src_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col(source_col).alias("src_b"), F.col("n").alias("n_b"))
+    sa = sizes.select(F.col("source").alias("src_a"), F.col("n").alias("n_a"))
+    sb = sizes.select(F.col("source").alias("src_b"), F.col("n").alias("n_b"))
     return (
         ov.join(F.broadcast(sa), "src_a")
         .join(F.broadcast(sb), "src_b")
@@ -529,7 +521,7 @@ def shingle_novelty(docs: DataFrame) -> DataFrame:
     from .dedup import _SHINGLE_N, _shingle_hash_rows
 
     sh = stage(
-        _shingle_hash_rows(docs, "doc_id", "text", _SHINGLE_N)
+        _shingle_hash_rows(docs, "doc_id", _SHINGLE_N)
     )  # caller releases via staging.release_staging()
     per_doc = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
     novel_per_doc = (
@@ -561,12 +553,7 @@ def shingle_novelty(docs: DataFrame) -> DataFrame:
     )
 
 
-def fuzzy_contamination(
-    candidates: DataFrame,
-    benchmark: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
+def fuzzy_contamination(candidates: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Fuzzy decontamination: candidate docs within a NORMALIZED edit
     distance of ``FUZZY_MAX_DIST_MILLI``/1000 of any benchmark doc. Exact
     n-gram decontamination (q64/q96) misses eval items that entered
@@ -588,7 +575,7 @@ def fuzzy_contamination(
        IEEE division anywhere.
 
     Returns one row per contaminated candidate:
-    (id_col, n_blocked, n_fuzzy, best_lev_milli, best_bench) — best =
+    (doc_id, n_blocked, n_fuzzy, best_lev_milli, best_bench) — best =
     lexicographic struct min over gated pairs (deterministic ties).
 
     Engine caveat (pinned by the ASCII fixture contract, FIXTURES.md):
@@ -608,10 +595,10 @@ def fuzzy_contamination(
     # out duplicate join hits (results stay correct via
     # pairs.distinct(); only the broadcast build and join output
     # inflate). Catalog callers pass the driver's unique-id bench split.
-    bench_sh = _shingle_hash_rows(benchmark, id_col, text_col, CONTAM_N).select(
+    bench_sh = _shingle_hash_rows(benchmark, "doc_id", CONTAM_N).select(
         F.col("doc").alias("_bid"), F.col("h").alias("shingle")
     )
-    cand_sh = _shingle_hash_rows(candidates, id_col, text_col, CONTAM_N).select(
+    cand_sh = _shingle_hash_rows(candidates, "doc_id", CONTAM_N).select(
         F.col("doc").alias("_cid"), F.col("h").alias("shingle")
     )
     pairs = (
@@ -620,10 +607,10 @@ def fuzzy_contamination(
         .distinct()
     )
     cand_txt = candidates.select(
-        F.col(id_col).alias("_cid"), F.col(text_col).alias("_ctext")
+        F.col("doc_id").alias("_cid"), F.col("text").alias("_ctext")
     )
     bench_txt = benchmark.select(
-        F.col(id_col).alias("_bid"), F.col(text_col).alias("_btext")
+        F.col("doc_id").alias("_bid"), F.col("text").alias("_btext")
     )
     scored = (
         pairs.join(cand_txt, "_cid")
@@ -653,7 +640,7 @@ def fuzzy_contamination(
         )
         .filter(F.col("n_fuzzy") >= 1)
         .select(
-            F.col("_cid").alias(id_col),
+            F.col("_cid").alias("doc_id"),
             "n_blocked",
             "n_fuzzy",
             F.col("_best.l").cast("long").alias("best_lev_milli"),
@@ -662,17 +649,12 @@ def fuzzy_contamination(
     )
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str,
-    fp_col: str,
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Recrawl delta: classify every document across two corpus
-    snapshots by identity and content fingerprint.
+    snapshots by identity (``doc_id``) and content fingerprint (``fp``).
 
     Returns one row per doc id present in EITHER snapshot:
-    (id_col, status, source, n_chars) where status ∈
+    (doc_id, status, source, n_chars) where status ∈
     {'added', 'removed', 'changed', 'unchanged'} and source / n_chars
     are coalesce(new.col, old.col) — the freshest available metadata.
 
@@ -689,13 +671,13 @@ def snapshot_diff(
     window, no skew exposure (ids are unique on each side).
     """
     o = old.select(
-        F.col(id_col).alias("_oid"),
-        F.col(fp_col).alias("_ofp"),
+        F.col("doc_id").alias("_oid"),
+        F.col("fp").alias("_ofp"),
         *[F.col(c).alias(f"_o_{c}") for c in _SNAPSHOT_KEEP_COLS],
     )
     n = new.select(
-        F.col(id_col).alias("_nid"),
-        F.col(fp_col).alias("_nfp"),
+        F.col("doc_id").alias("_nid"),
+        F.col("fp").alias("_nfp"),
         *[F.col(c).alias(f"_n_{c}") for c in _SNAPSHOT_KEEP_COLS],
     )
     j = o.join(n, o["_oid"] == n["_nid"], "full_outer")
@@ -706,7 +688,7 @@ def snapshot_diff(
         .otherwise(F.lit("unchanged"))
     )
     return j.select(
-        F.coalesce(F.col("_nid"), F.col("_oid")).alias(id_col),
+        F.coalesce(F.col("_nid"), F.col("_oid")).alias("doc_id"),
         status.alias("status"),
         *[
             F.coalesce(F.col(f"_n_{c}"), F.col(f"_o_{c}")).alias(c)

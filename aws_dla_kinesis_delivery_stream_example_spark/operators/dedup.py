@@ -12,6 +12,11 @@ is one hash-aggregate on the key, inline in q25):
               16-bit chunk (Hamming<=3-style banding), verified by
               true Hamming distance.
 
+The operators read the documents frame's ``doc_id`` and ``text``
+columns by name: that schema is their contract, so no column name is a
+parameter (``_shingle_hash_rows`` alone takes its id column: q106's
+cross-source audit and the per-source sketches shingle per ``source``).
+
 Word shingling is JVM expressions: ``_shingle_hash_rows`` is one
 codegen'd regex pass (``text.word_ngrams``) plus md5, so the queries
 built on it start no Python worker. A per-row state machine that no
@@ -47,12 +52,11 @@ _SHINGLE_N = 5
 
 def shingle_jaccard_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     threshold: float = 0.1,
     max_df: int | None = None,
 ) -> DataFrame:
-    """Exact word-5-gram Jaccard similarity for all pairs sharing >=1 shingle.
+    """Exact word-5-gram Jaccard similarity for all pairs of documents
+    sharing >=1 shingle.
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
 
@@ -75,7 +79,7 @@ def shingle_jaccard_pairs(
     # Shingles are represented by their md5-prefix hash, not the
     # string: Jaccard is invariant under an injective mapping and the
     # join key shrinks ~4x.
-    sh = stage(_capped_shingles(df, id_col, text_col, max_df))
+    sh = stage(_capped_shingles(df, max_df))
     # caller releases via staging.release_staging()
     return _jaccard_pairs_on(sh, threshold)
 
@@ -111,17 +115,12 @@ def _jaccard_pairs_on(sh: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _capped_shingles(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_df: int | None,
-) -> DataFrame:
+def _capped_shingles(df: DataFrame, max_df: int | None) -> DataFrame:
     """(doc, shingle) rows with the optional max_df valve applied —
     the shared prefix of shingle_jaccard_pairs and
     shared_shingle_pairs. NOT staged here: each caller stages at the
     boundary its own consumer count requires."""
-    sh = _shingle_hash_rows(df, id_col, text_col, _SHINGLE_N).withColumnRenamed("h", "shingle")
+    sh = _shingle_hash_rows(df, "doc_id", _SHINGLE_N).withColumnRenamed("h", "shingle")
     if max_df is not None:
         rare = (
             sh.groupBy("shingle")
@@ -136,7 +135,7 @@ def _capped_shingles(
 _SHARED_MAX_DF = 10  # shared_shingle_pairs' df cap (q55's max_df valve)
 
 
-def shared_shingle_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def shared_shingle_pairs(df: DataFrame) -> DataFrame:
     """Distinct (doc_a, doc_b) pairs (doc_a < doc_b) sharing >= 1
     shingle of document frequency <= ``_SHARED_MAX_DF`` — exactly
     ``shingle_jaccard_pairs(threshold=0, max_df=_SHARED_MAX_DF)``
@@ -156,7 +155,7 @@ def shared_shingle_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame
     shingle_jaccard_pairs). Equivalence to the threshold-0 jaccard form
     is pinned in tests/test_round8b_ops.py.
     """
-    sh = stage(_capped_shingles(df, id_col, text_col, _SHARED_MAX_DF))
+    sh = stage(_capped_shingles(df, _SHARED_MAX_DF))
     a, b = sh.alias("a"), sh.alias("b")
     return (
         a.join(
@@ -172,18 +171,18 @@ def shared_shingle_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame
 def _shingle_hash_rows(
     df: DataFrame,
     id_col: str,
-    text_col: str,
     n: int,
     mod: int | None = None,
     id_type: str = "long",
 ) -> DataFrame:
     """(doc, h) rows: one 60-bit hash per DISTINCT word n-gram of each
-    row (distinct within the row, not across rows: two rows sharing an
-    id each contribute their own n-grams).
+    row's ``text`` (distinct within the row, not across rows: two rows
+    sharing an id each contribute their own n-grams).
 
-    ``id_type`` is the output type of the ``doc`` column (``long`` for
-    document ids; ``string`` lets a GROUPING value like source ride
-    through — the cross-source overlap audit shingles per source).
+    ``id_col`` is the column that becomes ``doc``, and ``id_type`` its
+    output type (``long`` for ``doc_id``; ``string`` lets a GROUPING
+    value like ``source`` ride through — the cross-source overlap audit
+    shingles per source).
 
     JVM expressions only: ``text.word_ngrams`` (one codegen'd regex
     pass), ``array_distinct`` per row, ``explode``, ``text.hash60``.
@@ -210,7 +209,7 @@ def _shingle_hash_rows(
     """
     grams = df.select(
         F.col(id_col).cast(id_type).alias("doc"),
-        F.explode(F.array_distinct(TX.word_ngrams(text_col, n))).alias("s"),
+        F.explode(F.array_distinct(TX.word_ngrams("text", n))).alias("s"),
     )
     h = TX.hash60("s")
     return grams.select("doc", (h if mod is None else F.pmod(h, F.lit(mod))).alias("h"))
@@ -223,7 +222,7 @@ CDC_WINDOW = 4
 CDC_MASK = 32
 
 
-def cdc_chunk_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def cdc_chunk_rows(df: DataFrame) -> DataFrame:
     """(doc, chunk_hash, chunk_len) content-defined chunks: a chunk
     boundary falls AFTER token j whenever the rolling ``CDC_WINDOW``-gram
     ending at j hashes to 0 mod ``CDC_MASK`` (gear/Rabin-style CDC on the
@@ -251,7 +250,7 @@ def cdc_chunk_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         tok_re = re.compile(r"[a-z0-9]+")
         for pdf in batches:
             out_doc, out_h, out_len = [], [], []
-            for doc, text in zip(pdf[id_col], pdf[text_col]):
+            for doc, text in zip(pdf["doc_id"], pdf["text"]):
                 if not isinstance(text, str):
                     continue
                 toks = tok_re.findall(text.lower())
@@ -282,9 +281,7 @@ def cdc_chunk_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             )
 
     ensure_shipped(df.sparkSession)
-    return df.select(
-        F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
-    ).mapInPandas(run, "doc long, chunk_hash long, chunk_len long")
+    return df.select("doc_id", "text").mapInPandas(run, "doc long, chunk_hash long, chunk_len long")
 
 
 # MinHash geometry: 64 hashes in 16 bands of 4 rows.
@@ -292,14 +289,9 @@ _MINHASH_N = 64
 _MINHASH_BANDS = 16
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    _hash_rows: DataFrame | None = None,
-) -> DataFrame:
-    """(id, signature array<long>) — min over ``_MINHASH_N`` universal
-    hashes of the shingle-hash set. One narrow map + one groupBy(id)
+def minhash_signatures(df: DataFrame, _hash_rows: DataFrame | None = None) -> DataFrame:
+    """(doc, signature array<long>) — min over ``_MINHASH_N`` universal
+    hashes of the shingle-hash set. One narrow map + one groupBy(doc)
     aggregate.
 
     Shingle hashes are folded to 31 bits (mod 2^31-1) HERE ONLY: the
@@ -318,7 +310,7 @@ def minhash_signatures(
     sh = (
         _hash_rows
         if _hash_rows is not None
-        else _shingle_hash_rows(df, id_col, text_col, _SHINGLE_N, mod=_MERSENNE)
+        else _shingle_hash_rows(df, "doc_id", _SHINGLE_N, mod=_MERSENNE)
     )
     # h_i(x) = (a_i*x + b_i) mod p, fixed odd a_i / b_i derived from i.
     mins = [
@@ -331,8 +323,6 @@ def minhash_signatures(
 
 def minhash_near_duplicates(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     threshold: float = 0.5,
     _hash_rows: DataFrame | None = None,
 ) -> DataFrame:
@@ -347,7 +337,7 @@ def minhash_near_duplicates(
     rows = _MINHASH_N // _MINHASH_BANDS
     # Signature computation (shingle + 64 min-aggs) feeds both join
     # sides — materialize once (staging table at 100 TB).
-    sig = stage(minhash_signatures(df, id_col, text_col, _hash_rows))
+    sig = stage(minhash_signatures(df, _hash_rows))
     # Narrow band join: only (doc, band) rows shuffle; the 64-long
     # signatures re-attach AFTER pair dedup, so candidate multiplicity
     # never multiplies the signature payload (the shuffle-size property
@@ -537,7 +527,7 @@ def cluster_survivors(clusters: DataFrame, scored: DataFrame) -> DataFrame:
     return j.groupBy("cluster_id").agg(*aggs)
 
 
-def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """64-bit SimHash packed into ONE long: (doc, sig, chunks array<int>).
 
     bit_j = sign of Σ_tokens tf(token) * (2*bit_j(hash(token)) - 1); the
@@ -589,7 +579,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
         for pdf in batches:
             out_doc, out_sig, out_chunks = [], [], []
-            for doc, text in zip(pdf[id_col], pdf[text_col]):
+            for doc, text in zip(pdf["doc_id"], pdf["text"]):
                 if not isinstance(text, str):
                     continue
                 tf = Counter(tok_re.findall(text.lower()))
@@ -608,9 +598,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             yield _pd.DataFrame({"doc": out_doc, "sig": out_sig, "chunks": out_chunks})
 
     ensure_shipped(df.sparkSession)
-    return df.select(F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)).mapInPandas(
-        run, "doc long, sig long, chunks array<int>"
-    )
+    return df.select("doc_id", "text").mapInPandas(run, "doc long, sig long, chunks array<int>")
 
 
 # Manku-style banding (Manku/Jain/Das Sarma, WWW'07 "Detecting
@@ -754,7 +742,7 @@ def simhash_band_candidates(
     )
 
 
-def simhash_near_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def simhash_near_duplicates(df: DataFrame) -> DataFrame:
     """SimHash near-dup pairs within Hamming distance ``_MANKU_RADIUS``:
     candidates share a Manku block-triple band key, verified by exact
     Hamming distance = bit_count(sig_a XOR sig_b).
@@ -768,7 +756,7 @@ def simhash_near_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFr
     crowding goes through the hot-bucket valve (recall-preserving
     chunk refinement — see :func:`simhash_band_candidates`).
     """
-    sig = stage(simhash_signatures(df, id_col, text_col))
+    sig = stage(simhash_signatures(df))
     # usig feeds up to five scans inside the candidate generator, and
     # recomputing the distinct from the staged `sig` per scan looks
     # wasteful — but staging usig too was MEASURED WORSE (2.2 s -> 5.9 s
@@ -843,14 +831,12 @@ def minhash_calibration_report(docs: DataFrame) -> DataFrame:
     (guide §1.2 step 1: the dominant cost at 100 TB is reading and
     tokenizing the corpus, and this audit was doing it twice).
     """
-    sh60 = stage(_shingle_hash_rows(docs, "doc_id", "text", _SHINGLE_N))
+    sh60 = stage(_shingle_hash_rows(docs, "doc_id", _SHINGLE_N))
     truth = _jaccard_pairs_on(
         sh60.withColumnRenamed("h", "shingle"), _CALIBRATION_THRESHOLD
     ).select("doc_a", "doc_b", F.round(F.col("jaccard") * 1000, 0).cast("long").alias("ej_exact_milli"))
     h31 = sh60.select("doc", F.pmod(F.col("h"), F.lit(_MERSENNE)).alias("h"))
-    cand = minhash_near_duplicates(
-        docs, "doc_id", "text", threshold=_CALIBRATION_THRESHOLD, _hash_rows=h31
-    ).select(
+    cand = minhash_near_duplicates(docs, threshold=_CALIBRATION_THRESHOLD, _hash_rows=h31).select(
         "doc_a", "doc_b",
         F.round(F.col("est_jaccard") * 1000, 0).cast("long").alias("ej_est_milli"),
     )

@@ -13,8 +13,8 @@ shard assignment and intra-shard order are pure functions of
 
 Scale shape: `assign_shards` is a pure projection (zero shuffles —
 the hash is computed at scan); `shard_manifest` adds ONE map-side-
-combinable hash aggregate over n_shards groups. This module does not
-write shards: a writer would `repartition(n_shards, "shard")` and
+combinable hash aggregate over ``N_SHARDS`` groups. This module does not
+write shards: a writer would `repartition(N_SHARDS, "shard")` and
 sort each partition by order_key, one exchange whose partitioning is
 the output layout. The XOR checksum is order- and partitioning-
 independent (XOR is commutative), so two runs on different cluster
@@ -40,23 +40,21 @@ def _tagged_hash(tag: str, id_col: Column) -> Column:
     return TX.hash60(F.concat(F.lit(f"{tag}:{SHARD_SEED}:"), id_col.cast("string")))
 
 
-def assign_shards(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
-    """Add ``shard`` (int64 in [0, n_shards)) and ``order_key`` (int64)
-    columns. Sorting by (shard, order_key) IS the deterministic global
-    shuffle; ties on the 60-bit order_key are broken downstream by the
-    unique id, though a collision needs ~2^30 docs per shard to show
-    up at even 50% odds."""
-    if n_shards <= 0:
-        raise ValueError(f"assign_shards: n_shards must be positive, got {n_shards}")
-    idc = F.col(id_col)
+def assign_shards(df: DataFrame) -> DataFrame:
+    """Add ``shard`` (int64 in [0, N_SHARDS)) and ``order_key`` (int64)
+    columns, both hashed from ``doc_id``. Sorting by (shard, order_key)
+    IS the deterministic global shuffle; ties on the 60-bit order_key
+    are broken downstream by the unique id, though a collision needs
+    ~2^30 docs per shard to show up at even 50% odds."""
+    idc = F.col("doc_id")
     return df.select(
         "*",
-        (_tagged_hash("shard", idc) % n_shards).alias("shard"),
+        (_tagged_hash("shard", idc) % N_SHARDS).alias("shard"),
         _tagged_hash("order", idc).alias("order_key"),
     )
 
 
-def shard_manifest(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
+def shard_manifest(df: DataFrame) -> DataFrame:
     """Per-shard manifest: doc count, payload volume (the sum of the
     ``n_chars`` column), XOR checksum of the order keys, and the key
     span. The checksum verifies shard CONTENT equality across
@@ -66,7 +64,7 @@ def shard_manifest(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
 
     Columns: shard, n_docs, total_chars, xor_check, min_key, max_key.
     """
-    assigned = assign_shards(df, id_col, n_shards)
+    assigned = assign_shards(df)
     return assigned.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),

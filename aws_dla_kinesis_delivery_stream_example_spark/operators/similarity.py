@@ -44,8 +44,6 @@ MAX_QUERY_VECTORS = 10_000
 
 # Sign-pattern buckets key on the signs of the first 3 dims: 8 buckets.
 _SIGN_BITS = 3
-# Learned IVF: k-means cells (seeds = the 8 smallest vec_ids).
-_IVF_LISTS = 8
 # Neighbors kept per probe by quantized_topk (q110's top-3).
 QUANTIZED_K = 3
 # Neighbors kept per query by the IVF operators (q34/q70/q92 top-5).
@@ -216,21 +214,21 @@ def ivf_topk(
 
 def learned_centroids(candidates: DataFrame) -> np.ndarray:
     """Train the IVF coarse quantizer: deterministic seeds (the
-    ``_IVF_LISTS`` smallest ids) refined by one Lloyd iteration. Every step is on
+    ``clustering.KMEANS_K`` smallest ids) refined by one Lloyd iteration. Every step is on
     the 6-dp rounding grid (clustering._batch_assign /
     updated_centroids), so the trained centroids — and therefore the
     probe decisions — are bit-reproducible across engines and runs."""
     from .clustering import kmeans_seeds, updated_centroids
 
-    return updated_centroids(candidates, kmeans_seeds(candidates, "vec_id", "embedding", _IVF_LISTS))
+    return updated_centroids(candidates, kmeans_seeds(candidates))
 
 
 def ivf_learned_topk(candidates: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF ANN with a LEARNED coarse quantizer (the production shape,
     vs the data-independent sign buckets of ``ivf_topk``): k-means
-    centroids partition the corpus into ``_IVF_LISTS`` cells that
-    follow the data distribution, and each query scans only its 2
-    nearest cells — an ``_IVF_LISTS/2``-fold candidate reduction that,
+    centroids partition the corpus into ``clustering.KMEANS_K`` cells
+    that follow the data distribution, and each query scans only its 2
+    nearest cells — a ``KMEANS_K/2``-fold candidate reduction that,
     unlike sign bucketing, does not degrade when the embedding mass
     concentrates away from the coordinate hyperplanes.
 

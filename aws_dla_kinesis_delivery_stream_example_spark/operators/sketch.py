@@ -59,15 +59,16 @@ def countmin_counters(docs: DataFrame) -> DataFrame:
     return keyed.groupBy("r", "bucket").agg(F.count("*").cast("long").alias("cnt"))
 
 
-def exact_top_tokens(docs: DataFrame, k: int) -> DataFrame:
-    """Exact top-k ``text`` tokens by count — (token, exact_n), total
-    order (count desc, token asc). A TakeOrdered(k), never a full sort."""
+def exact_top_tokens(docs: DataFrame) -> DataFrame:
+    """Exact top-``HEAVY_K`` ``text`` tokens by count — (token, exact_n),
+    total order (count desc, token asc). A TakeOrdered(HEAVY_K), never a
+    full sort."""
     tok = docs.select(F.explode(TX.words("text")).alias("token"))
     return (
         tok.groupBy("token")
         .agg(F.count("*").cast("long").alias("exact_n"))
         .orderBy(F.desc("exact_n"), F.asc("token"))
-        .limit(k)
+        .limit(HEAVY_K)
     )
 
 
@@ -127,7 +128,7 @@ def countmin_heavy_hitters(docs: DataFrame) -> DataFrame:
     hash plumbing diverged between build and probe).
     """
     counters = countmin_counters(docs)
-    top = exact_top_tokens(docs, HEAVY_K)
+    top = exact_top_tokens(docs)
     return countmin_probe(counters, top)
 
 
@@ -144,11 +145,11 @@ HLL_M = 1 << HLL_P
 _HLL_RHO_MAX = 53
 
 
-def hll_registers(rows: DataFrame, group_col: str, hash_col: str) -> DataFrame:
-    """Per-group HLL register file from pre-hashed values: returns
-    (group_col, register, rho) with rho = max over the group's values
-    landing in that register — at most ``HLL_M`` rows per group, TOTAL
-    state HLL_M x |groups| regardless of value volume.
+def hll_registers(rows: DataFrame) -> DataFrame:
+    """Per-``source`` HLL register file from pre-hashed values ``h``:
+    returns (source, register, rho) with rho = max over the source's
+    values landing in that register — at most ``HLL_M`` rows per
+    source, TOTAL state HLL_M x |sources| regardless of value volume.
 
     Why this is the 100 TB distinct counter: max() is commutative,
     associative, and idempotent, so partial aggregation collapses each
@@ -159,7 +160,7 @@ def hll_registers(rows: DataFrame, group_col: str, hash_col: str) -> DataFrame:
     The same property makes it the streaming state (q129): complete-
     mode max-agg over any micro-batch split lands on the identical
     register file bit-for-bit."""
-    h = F.col(hash_col)
+    h = F.col("h")
     # h >> p, NOT h/m: Spark's / is DOUBLE division, which silently
     # rounds away low bits of a 60-bit hash (int64 > 2^53); the shift
     # is exact and mirrors the oracle's (h >> p)
@@ -169,11 +170,11 @@ def hll_registers(rows: DataFrame, group_col: str, hash_col: str) -> DataFrame:
     )
     return (
         rows.select(
-            F.col(group_col),
+            F.col("source"),
             (h % HLL_M).cast("long").alias("register"),
             rho.cast("long").alias("rho"),
         )
-        .groupBy(group_col, "register")
+        .groupBy("source", "register")
         .agg(F.max("rho").cast("long").alias("rho"))
     )
 

@@ -7,6 +7,10 @@ implements the classic two-phase fix: shard each key into
 ``_N_SALTS`` sub-keys (phase 1 partial agg over (key, salt)), then
 combine partials per key (phase 2). Both phases are hash aggregates
 with map-side combine; the hot key's work spreads over _N_SALTS tasks.
+
+The operators read their input's schema by name: ``salted_agg`` the
+orders frame's ``o_orderstatus``, ``o_orderkey`` and ``o_totalprice``,
+and the skew audit the events frame's ``user_id``.
 """
 
 from __future__ import annotations
@@ -17,45 +21,38 @@ from pyspark.sql import functions as F
 _N_SALTS = 16  # salted_agg's sub-keys per key
 SKEW_BUCKETS = 32  # key_skew_audit's simulated reducers
 
-# (partial_agg, final_agg) pairs per supported measure.
-_MERGERS = {
-    "count": (lambda c: F.count(c), F.sum),
-    "sum": (lambda c: F.sum(c), F.sum),
-    "min": (lambda c: F.min(c), F.min),
-    "max": (lambda c: F.max(c), F.max),
-}
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    measures: dict[str, tuple[str, str]],
-) -> DataFrame:
-    """Two-phase salted aggregation.
-
-    measures: output_name -> (agg_fn in {count,sum,min,max}, input_col).
-    avg decomposes as sum/count by the caller. Result == plain
-    ``df.groupBy(keys).agg(...)`` but immune to hot-key reducer skew.
+def salted_agg(orders: DataFrame) -> DataFrame:
+    """Two-phase salted aggregation of the orders frame per
+    ``o_orderstatus``: (o_orderstatus, n, total_raw, min_raw, max_raw)
+    = the count of ``o_orderkey`` and the sum, min and max of
+    ``o_totalprice``. Result == the plain ``groupBy`` but immune to
+    hot-key reducer skew: phase 1 aggregates per (key, salt), phase 2
+    merges the partials (counts and sums add, min and max fold).
     """
     salt = (F.rand(seed=42) * _N_SALTS).cast("int").alias("_salt")
-    phase1_aggs = []
-    for out, (fn, col) in measures.items():
-        partial, _final = _MERGERS[fn]
-        phase1_aggs.append(partial(F.col(col)).alias(f"_p_{out}"))
-    phase1 = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(*phase1_aggs)
-    phase2_aggs = []
-    for out, (fn, _col) in measures.items():
-        _partial, final = _MERGERS[fn]
-        phase2_aggs.append(final(F.col(f"_p_{out}")).alias(out))
-    return phase1.groupBy(*keys).agg(*phase2_aggs)
+    phase1 = (
+        orders.withColumn("_salt", salt)
+        .groupBy("o_orderstatus", "_salt")
+        .agg(
+            F.count("o_orderkey").alias("_p_n"),
+            F.sum("o_totalprice").alias("_p_total_raw"),
+            F.min("o_totalprice").alias("_p_min_raw"),
+            F.max("o_totalprice").alias("_p_max_raw"),
+        )
+    )
+    return phase1.groupBy("o_orderstatus").agg(
+        F.sum("_p_n").alias("n"),
+        F.sum("_p_total_raw").alias("total_raw"),
+        F.min("_p_min_raw").alias("min_raw"),
+        F.max("_p_max_raw").alias("max_raw"),
+    )
 
 
-def key_skew_audit(df: DataFrame, key_col: str) -> DataFrame:
-    """Pre-flight shuffle-skew audit for a join/agg key: simulate the
-    ``SKEW_BUCKETS``-way hash partitioning a shuffle on ``key_col``
-    would produce and
-    report, per bucket, the row volume, key cardinality, and hottest
-    key. Run this BEFORE committing a 100 TB job to a shuffle on the
+def key_skew_audit(df: DataFrame) -> DataFrame:
+    """Pre-flight shuffle-skew audit for the ``user_id`` key: simulate
+    the ``SKEW_BUCKETS``-way hash partitioning a shuffle on the key
+    would produce and report, per bucket, the row volume, key
+    cardinality, and hottest key. Run this BEFORE committing a 100 TB job to a shuffle on the
     key — a bucket holding 30% of the rows means that exchange stalls
     one reducer for hours; the report's max_key_rows tells you whether
     the fix is salting (one giant key) or more partitions (many keys
@@ -76,11 +73,11 @@ def key_skew_audit(df: DataFrame, key_col: str) -> DataFrame:
     the |keys|-sized count frame by bucket. No join, no window, no
     collect.
     """
-    return skew_rollup(key_counts(df, key_col), SKEW_BUCKETS)
+    return skew_rollup(key_counts(df))
 
 
-def key_counts(df: DataFrame, key_col: str) -> DataFrame:
-    """Phase 1 of the skew audit: the per-key row-count table
+def key_counts(df: DataFrame) -> DataFrame:
+    """Phase 1 of the skew audit: the per-``user_id`` row-count table
     ``(_key, _cnt)``. A phase of its own because this IS the streaming
     twin's state: ``_cnt`` is a linear counter, so the same
     groupBy serves the batch face and a complete-mode streaming
@@ -88,27 +85,22 @@ def key_counts(df: DataFrame, key_col: str) -> DataFrame:
     q91 per-key state family (state grows with KEY CARDINALITY, never
     with ingest volume). Map-side combine collapses hot keys to one
     partial per task, so the audit is immune to the skew it measures."""
-    return df.groupBy(F.col(key_col).alias("_key")).agg(
+    return df.groupBy(F.col("user_id").alias("_key")).agg(
         F.count(F.lit(1)).alias("_cnt")
     )
 
 
-def skew_rollup(per_key: DataFrame, n_buckets: int) -> DataFrame:
+def skew_rollup(per_key: DataFrame) -> DataFrame:
     """Phase 2 of the skew audit: roll the |keys|-sized count table up
-    to per-bucket volume / cardinality / hottest-key rows (lexicographic
-    struct-max tie break — skew-immune, no window). Runs identically on
-    a batch-built count table and on streaming state drained from
-    ``key_counts``, so the report is fully determined by that state.
-    Validates ``n_buckets`` HERE: q145 consumes this phase directly,
-    bypassing the key_skew_audit wrapper, and
-    ``hash60 % 0`` would be a modulo error / NULL buckets instead of
-    a clear message."""
-    if n_buckets <= 0:
-        raise ValueError(f"n_buckets must be positive, got {n_buckets}")
+    to per-bucket (``SKEW_BUCKETS`` of them) volume / cardinality /
+    hottest-key rows (lexicographic struct-max tie break — skew-immune,
+    no window). Runs identically on a batch-built count table and on
+    streaming state drained from ``key_counts`` (q145), so the report
+    is fully determined by that state."""
     from ..functions import text as TX
 
     bucketed = per_key.select(
-        (TX.hash60(F.col("_key").cast("string")) % n_buckets).alias("bucket"),
+        (TX.hash60(F.col("_key").cast("string")) % SKEW_BUCKETS).alias("bucket"),
         "_key",
         "_cnt",
     )

@@ -2,6 +2,10 @@
 dedup' — the sparse-vector complement to the dense embedding path in
 ``operators/similarity.py``).
 
+The operators read the documents frame's ``doc_id`` and ``text``
+columns by name: that schema is their contract, so no column name is a
+parameter.
+
 The classic inverted-index shape: explode docs to (doc, token, tf)
 postings, weight by smoothed idf, and compute pairwise dots with a
 self-join ON TOKEN — so only pairs that share a term are ever formed
@@ -76,12 +80,7 @@ MAX_DF = 50
 MAX_DF_CEILING = 1_000
 
 
-def tfidf_postings(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_df_frac: float | None = None,
-) -> DataFrame:
+def tfidf_postings(docs: DataFrame, max_df_frac: float | None = None) -> DataFrame:
     """(doc, tok, w) postings with smoothed-idf weights on the 6-dp
     grid.
 
@@ -94,7 +93,7 @@ def tfidf_postings(
     operator's one quadratic hazard; an unbounded relative cap
     reintroduces it)."""
     toks = (
-        docs.select(F.col(id_col).alias("doc"), F.explode(TX.words(text_col)).alias("tok"))
+        docs.select(F.col("doc_id").alias("doc"), F.explode(TX.words("text")).alias("tok"))
         .groupBy("doc", "tok")
         .agg(F.count("*").cast("double").alias("tf"))
     )
@@ -126,8 +125,6 @@ def tfidf_postings(
 
 def tfidf_cosine_pairs(
     docs: DataFrame,
-    id_col: str,
-    text_col: str,
     threshold: float = 0.3,
     max_df_frac: float | None = None,
 ) -> DataFrame:
@@ -162,7 +159,7 @@ def tfidf_cosine_pairs(
     missing a pair matters, use MinHash — it is this repo's designated
     recall operator."""
     w = stage(
-        tfidf_postings(docs, id_col, text_col, max_df_frac=max_df_frac)
+        tfidf_postings(docs, max_df_frac=max_df_frac)
         .withColumn(
             "w_m",
             _checked_milliweight(F.round(F.col("w") * 1000, 0).cast("long")),
@@ -204,8 +201,6 @@ _BM25_B = 0.75
 
 def bm25_topk(
     docs: DataFrame,
-    id_col: str,
-    text_col: str,
     query_tokens: list[str],
     top_k: int = 20,
     with_rank: bool = False,
@@ -225,7 +220,7 @@ def bm25_topk(
     is platform-exact; returns (doc, bm25) with bm25 at 4 dp.
     """
     base = docs.select(
-        F.col(id_col).alias("doc"), TX.words(text_col).alias("tks")
+        F.col("doc_id").alias("doc"), TX.words("text").alias("tks")
     ).withColumn("dl", F.size("tks").cast("double"))
     stats = base.agg(
         F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")

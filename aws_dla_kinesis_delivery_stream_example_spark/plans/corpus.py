@@ -294,7 +294,7 @@ def q81_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
         tfidf_cosine_pairs(
-            docs, "doc_id", "text",
+            docs,
             threshold=_TFIDF_THRESHOLD,
             max_df_frac=_TFIDF_MAX_DF_FRAC,
         )
@@ -365,7 +365,7 @@ def q82_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from ..operators.tfidf import bm25_topk
 
-    return bm25_topk(docs, "doc_id", "text", list(_BM25_QUERY)).select(
+    return bm25_topk(docs, list(_BM25_QUERY)).select(
         F.col("doc").alias("doc_id"), "bm25"
     )
 
@@ -472,9 +472,9 @@ def q84_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    bmr = bm25_topk(
-        docs, "doc_id", "text", list(_BM25_QUERY), top_k=50, with_rank=True
-    ).select(F.col("doc").alias("id"), F.col("rank").alias("bm25_rank"))
+    bmr = bm25_topk(docs, list(_BM25_QUERY), top_k=50, with_rank=True).select(
+        F.col("doc").alias("id"), F.col("rank").alias("bm25_rank")
+    )
     cosr = brute_force_topk(
         emb, as_queries(emb.filter(F.col("vec_id") == 0)), k=50
     ).select(F.col("vec_id").alias("id"), F.col("rn").cast("long").alias("cos_rank"))
@@ -493,16 +493,20 @@ def q84_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# q88's date range: 3 of the lake's 30 daily partitions.
+_Q88_DATES = ("2024-01-10", "2024-01-12")
+
+
 @query(
     "q88_partition_pruned_scan",
-    oracle="""
+    oracle=f"""
         SELECT strftime(CAST(date_trunc('day', ts) AS DATE), '%Y-%m-%d') AS event_date,
                event_type,
                CAST(count(*) AS BIGINT) AS n,
                round(sum(value), 2) AS sum_value
         FROM events
         WHERE CAST(date_trunc('day', ts) AS DATE)
-              BETWEEN DATE '2024-01-10' AND DATE '2024-01-12'
+              BETWEEN DATE '{_Q88_DATES[0]}' AND DATE '{_Q88_DATES[1]}'
         GROUP BY event_date, event_type
         ORDER BY event_date, event_type
     """,
@@ -520,9 +524,11 @@ def q88_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     days and listing 10 years. Pushdown (row-group skip) still applies
     within the surviving partitions; the agg is map-side combined on
     the small (date, type) key space."""
-    from ..sources.partitioned import read_events_for_dates
+    from ..sources.partitioned import read_partitioned_events
 
-    ev = read_events_for_dates(spark, sf_dir, "2024-01-10", "2024-01-12")
+    ev = read_partitioned_events(spark, sf_dir).filter(
+        F.col("event_date").between(*_Q88_DATES)
+    )
     return (
         ev.groupBy(
             F.date_format("event_date", "yyyy-MM-dd").alias("event_date"),

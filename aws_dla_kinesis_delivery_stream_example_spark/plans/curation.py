@@ -58,7 +58,7 @@ def q64_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench_pred = F.col("doc_id") % _BENCH_MOD == 0
     bench, cand = docs.filter(bench_pred), docs.filter(~bench_pred)
-    hits = curation.contaminated_ids(cand, bench, "doc_id", "text")
+    hits = curation.contaminated_ids(cand, bench)
     flagged = cand.join(
         hits.withColumn("_hit", F.lit(1)), "doc_id", "left"
     )
@@ -99,7 +99,7 @@ def q65_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    kept = curation.incremental_dedup(batch, corpus, "doc_id", "text")
+    kept = curation.incremental_dedup(batch, corpus)
     return kept.select("keep_id", "source", "n_copies").orderBy("keep_id")
 
 
@@ -139,7 +139,7 @@ def q65_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q66_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    per_doc = curation.boilerplate_ratio(docs, "doc_id", "text")
+    per_doc = curation.boilerplate_ratio(docs)
     return (
         per_doc.join(docs.select("doc_id", "source"), "doc_id")
         .groupBy("source")
@@ -302,7 +302,7 @@ def q68_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q69_embedding_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cc = curation.centroid_cosines(emb, "vec_id", "embedding", "label")
+    cc = curation.centroid_cosines(emb)
     return (
         cc.groupBy("label")
         .agg(
@@ -362,7 +362,7 @@ def q69_embedding_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q93_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return curation.duplicated_span_stats(docs, "doc_id", "text").orderBy("doc_id")
+    return curation.duplicated_span_stats(docs).orderBy("doc_id")
 
 
 # Per-source token budget for the pipeline's final stage — small
@@ -519,7 +519,7 @@ def q95_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 2 — near-dup clusters over the exact survivors; keep the best-
     # quality member per cluster (q94), pass singletons through
-    pairs = dedup.shingle_jaccard_pairs(e, "doc_id", "text", threshold=0.4)
+    pairs = dedup.shingle_jaccard_pairs(e, threshold=0.4)
     clusters = dedup.duplicate_clusters(pairs).select(
         "doc", F.col("cluster_id").cast("long").alias("cluster_id")
     )
@@ -550,7 +550,7 @@ def q95_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cheap join. The expensive part — the shingle pass inside
     # contaminated_ids — runs once either way because `hits` is what
     # is cached (guide §5).
-    hits = stage(curation.contaminated_ids(qual, bench, "doc_id", "text"))
+    hits = stage(curation.contaminated_ids(qual, bench))
     dec = qual.join(hits, "doc_id", "left_anti")
 
     # 5 — per-source token budget in doc_id order

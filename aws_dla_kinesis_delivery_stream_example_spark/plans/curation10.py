@@ -56,7 +56,6 @@ def bloom_bits(spark: SparkSession, sf_dir: str):
         _shingle_hash_rows(
             docs.filter(F.col("doc_id") % _BENCH_MOD == 0).select("doc_id", "text"),
             "doc_id",
-            "text",
             _BLOOM_N,
         )
         .select("h")
@@ -219,7 +218,6 @@ def _bloom_probe(docs: DataFrame) -> DataFrame:
     return _shingle_hash_rows(
         docs.filter(F.col("doc_id") % _BENCH_MOD != 0).select("source", "text"),
         "source",
-        "text",
         _BLOOM_N,
         id_type="string",
     ).withColumnRenamed("doc", "source")
@@ -486,9 +484,7 @@ def q135_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import cdc_chunk_rows
 
     docs = load_table(spark, sf_dir, "documents")
-    chunks = stage(
-        cdc_chunk_rows(docs.select("doc_id", "text"), "doc_id", "text")
-    )  # staged: the df agg and the join-back probe read it once each
+    chunks = stage(cdc_chunk_rows(docs))  # staged: the df agg and the join-back probe read it once each
     cdf = chunks.groupBy("chunk_hash").agg(
         F.count_distinct("doc").cast("long").alias("df")
     )

@@ -162,7 +162,7 @@ def q137_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged: the register fold and the exact intersection read it
     # once each (sh is distinct (source, h) — doc carries the source)
     regs = stage(
-        SK.hll_registers(sh.withColumnRenamed("doc", "source"), "source", "h")
+        SK.hll_registers(sh.withColumnRenamed("doc", "source"))
     )  # staged: the per-source estimate and the pair merge read it
     est = SK.hll_estimate(regs, "source").select("source", "hll_est")
 
@@ -411,7 +411,7 @@ def q138_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sh = stage(
-        _shingle_hash_rows(docs.select("doc_id", "text"), "doc_id", "text", _SNM_SH_N)
+        _shingle_hash_rows(docs.select("doc_id", "text"), "doc_id", _SNM_SH_N)
     )  # staged: sizes agg + both verification probes read it
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).cast("long").alias("n"))
     inter = (
@@ -605,7 +605,7 @@ def q139_snm_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sh = stage(
-        _shingle_hash_rows(docs.select("doc_id", "text"), "doc_id", "text", _SNM_SH_N)
+        _shingle_hash_rows(docs.select("doc_id", "text"), "doc_id", _SNM_SH_N)
     )  # staged: sizes agg + both verification probes read it
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).cast("long").alias("n"))
     inter = (

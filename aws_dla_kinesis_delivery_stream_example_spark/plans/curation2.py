@@ -311,7 +311,7 @@ def q75_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")
-    seeds = clustering.kmeans_seeds(emb, "vec_id", "embedding", clustering.KMEANS_K)
+    seeds = clustering.kmeans_seeds(emb)
     newc = clustering.updated_centroids(emb, seeds)
     assigned2 = clustering.assign_with_centroids(emb, newc)
     prof = clustering.cluster_profile(assigned2).drop("max_d2")

@@ -71,9 +71,7 @@ def q96_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench_pred = F.col("doc_id") % _BENCH_MOD == 0
     bench, cand = docs.filter(bench_pred), docs.filter(~bench_pred)
-    return curation.contamination_overlap(cand, bench, "doc_id", "text").orderBy(
-        "doc_id"
-    )
+    return curation.contamination_overlap(cand, bench).orderBy("doc_id")
 
 
 @query(
@@ -300,9 +298,7 @@ def q99_similar_doc_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + jaccard aggregation (measured 14 exchanges unstaged -> 2
     # staged; pinned at budget 3 in tests/test_plan_shapes.py)
     pairs = stage(
-        dedup.shingle_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.0, max_df=10
-        )
+        dedup.shingle_jaccard_pairs(docs, threshold=0.0, max_df=10)
     )
     sym = pairs.select(
         F.col("doc_a").alias("doc"), F.col("doc_b").alias("neighbor"), "jaccard"
@@ -491,7 +487,7 @@ def q102_corpus_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import _SHINGLE_N, _shingle_hash_rows
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = _shingle_hash_rows(docs, "doc_id", "text", _SHINGLE_N)
+    sh = _shingle_hash_rows(docs, "doc_id", _SHINGLE_N)
     j = sh.join(docs.select(F.col("doc_id").alias("doc"), "source"), "doc")
     lvl1 = j.groupBy("source", "h").agg(F.count(F.lit(1)).alias("occ"))
     # HLL is duplicate-insensitive, so sketching lvl1's one-row-per-

@@ -93,7 +93,7 @@ def q103_chunk_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round8b_ops.py).
     """
     docs = load_table(spark, sf_dir, "documents")
-    return curation.chunk_dedup_rewrite(docs, "doc_id", "text").orderBy("doc_id")
+    return curation.chunk_dedup_rewrite(docs).orderBy("doc_id")
 
 
 @query(
@@ -144,13 +144,8 @@ def q104_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence test in tests/test_round8b_ops.py).
     """
     docs = load_table(spark, sf_dir, "documents")
-    return sampling.weighted_sample(
-        docs,
-        "source",
-        "doc_id",
-        F.greatest(F.col("n_chars"), F.lit(1)),
-        k=5,
-    ).orderBy("source", "rnk")
+    weight = F.greatest(F.col("n_chars"), F.lit(1))
+    return sampling.weighted_sample(docs, weight).orderBy("source", "rnk")
 
 
 @query(
@@ -212,7 +207,7 @@ def q105_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.round(F.col("value") * 1000, 0).cast("long").alias("v_milli"),
     )
-    out = anomaly.rolling_zscore(base, "user_id", ("ts", "event_id"), "v_milli")
+    out = anomaly.rolling_zscore(base)
     return (
         out.select(
             "event_id",
@@ -278,9 +273,7 @@ def q106_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round8b_ops.py).
     """
     docs = load_table(spark, sf_dir, "documents")
-    return curation.source_overlap(docs, "source", "text").orderBy(
-        "src_a", "src_b"
-    )
+    return curation.source_overlap(docs).orderBy("src_a", "src_b")
 
 
 # q107 fixed-point PageRank: micro-unit rank mass, damping 0.85 as
@@ -379,5 +372,5 @@ def q107_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     test in tests/test_round8b_ops.py).
     """
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shared_shingle_pairs(docs, "doc_id", "text")
+    pairs = dedup.shared_shingle_pairs(docs)
     return graph.pagerank_fixed_point(pairs).orderBy("doc")

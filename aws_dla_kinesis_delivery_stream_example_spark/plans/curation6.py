@@ -65,7 +65,7 @@ def q115_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards adds exactly one repartition("shard") — the output layout
     itself. XOR checksum is commutative, hence partitioning-invariant."""
     docs = load_table(spark, sf_dir, "documents")
-    return sharding.shard_manifest(docs, "doc_id", sharding.N_SHARDS).orderBy("shard")
+    return sharding.shard_manifest(docs).orderBy("shard")
 
 
 @query(
@@ -124,7 +124,7 @@ def q116_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = docs.filter(did % 10 != 0).select(
         "doc_id", "source", "n_chars", TX.hash60(revised).alias("fp")
     )
-    diff = curation.snapshot_diff(old, new, "doc_id", "fp")
+    diff = curation.snapshot_diff(old, new)
     return (
         diff.groupBy("source", "status")
         .agg(
@@ -249,4 +249,4 @@ def q118_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sees identical membership; the per-key concentration pattern is
     hash-agnostic."""
     events = load_table(spark, sf_dir, "events")
-    return skew.key_skew_audit(events, "user_id").orderBy("bucket")
+    return skew.key_skew_audit(events).orderBy("bucket")

@@ -94,7 +94,7 @@ def q119_fuzzy_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench_pred = F.col("doc_id") % _BENCH_MOD == 0
     bench, cand = docs.filter(bench_pred), docs.filter(~bench_pred)
     return (
-        curation.fuzzy_contamination(cand, bench, "doc_id", "text")
+        curation.fuzzy_contamination(cand, bench)
         .withColumn("best_bench", F.col("best_bench").cast("long"))
         .orderBy("doc_id")
     )

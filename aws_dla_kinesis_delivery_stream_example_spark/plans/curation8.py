@@ -206,7 +206,7 @@ def q125_shard_mixture_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtracts two already-floored shares, so both engines stay on one
     lattice."""
     docs = load_table(spark, sf_dir, "documents")
-    assigned = sharding.assign_shards(docs, "doc_id", sharding.N_SHARDS)
+    assigned = sharding.assign_shards(docs)
     cells = stage(
         assigned.groupBy("shard", "source").agg(F.count(F.lit(1)).alias("n"))
     )  # staged: three totals regroup this |shards| x |sources| frame

@@ -234,7 +234,7 @@ def _source_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the register fold and the exact truth column."""
     docs = load_table(spark, sf_dir, "documents")
     return _shingle_hash_rows(
-        docs.select("source", "text"), "source", "text", _Q130_N, id_type="string"
+        docs.select("source", "text"), "source", _Q130_N, id_type="string"
     ).distinct()
 
 
@@ -291,7 +291,7 @@ def q128_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan's state is |sources| x 256 longs."""
     sh = stage(_source_shingles(spark, sf_dir))
     # staged: registers AND the exact count read it once each
-    regs = SK.hll_registers(sh.withColumnRenamed("doc", "source"), "source", "h")
+    regs = SK.hll_registers(sh.withColumnRenamed("doc", "source"))
     return _hll_output(spark, sf_dir, regs, sh=sh)
 
 
@@ -365,7 +365,7 @@ def q130_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").cast("long").alias("total_chars"),
     )
     sh = stage(
-        _shingle_hash_rows(base, "doc_id", "text", _Q130_N)
+        _shingle_hash_rows(base, "doc_id", _Q130_N)
         .withColumn(
             "split",
             F.when(

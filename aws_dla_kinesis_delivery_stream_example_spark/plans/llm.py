@@ -79,7 +79,7 @@ def q25_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q26_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.0)
+    pairs = dedup.shingle_jaccard_pairs(docs, threshold=0.0)
     return (
         pairs.select("doc_a", "doc_b", F.round("jaccard", 3).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.1)
@@ -124,7 +124,7 @@ def q26_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q55_jaccard_freq_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.0, max_df=10)
+    pairs = dedup.shingle_jaccard_pairs(docs, threshold=0.0, max_df=10)
     return (
         pairs.select("doc_a", "doc_b", F.round("jaccard", 3).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.1)
@@ -191,7 +191,7 @@ def q55_jaccard_freq_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q27_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        dedup.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.5)
+        dedup.minhash_near_duplicates(docs, threshold=0.5)
         .select("doc_a", "doc_b", F.round("est_jaccard", 3).alias("est_jaccard"))
         .orderBy("doc_a", "doc_b")
     )
@@ -261,7 +261,7 @@ def q27_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q28_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        dedup.simhash_near_duplicates(docs, "doc_id", "text")
+        dedup.simhash_near_duplicates(docs)
         .orderBy("doc_a", "doc_b")
     )
 
@@ -649,7 +649,7 @@ _JACCARD_CLUSTERS_CTE = jaccard_clusters_cte()
 )
 def q49_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.4)
+    pairs = dedup.shingle_jaccard_pairs(docs, threshold=0.4)
     return (
         dedup.duplicate_clusters(pairs)
         .select("doc", F.col("cluster_id").cast("long").alias("cluster_id"))
@@ -707,7 +707,7 @@ def q94_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .quality import quality_p_u
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.4)
+    pairs = dedup.shingle_jaccard_pairs(docs, threshold=0.4)
     clusters = dedup.duplicate_clusters(pairs).select(
         "doc", F.col("cluster_id").cast("long").alias("cluster_id")
     )

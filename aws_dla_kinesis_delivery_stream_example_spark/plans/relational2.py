@@ -200,5 +200,5 @@ def q44_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     signups = ev.filter(F.col("event_type") == "signup").select(
         "user_id", "ts", F.col("event_id").alias("signup_event")
     )
-    out = asof_join(purchases, signups, on="user_id")
+    out = asof_join(purchases, signups)
     return out.select("event_id", "user_id", "signup_event").orderBy("event_id")

@@ -101,17 +101,7 @@ def q47_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q48_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    out = salted_agg(
-        orders,
-        keys=["o_orderstatus"],
-        measures={
-            "n": ("count", "o_orderkey"),
-            "total_raw": ("sum", "o_totalprice"),
-            "min_raw": ("min", "o_totalprice"),
-            "max_raw": ("max", "o_totalprice"),
-        },
-    )
-    return out.select(
+    return salted_agg(orders).select(
         "o_orderstatus",
         "n",
         F.round("total_raw", 2).alias("total"),

@@ -148,7 +148,7 @@ def q51_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _stream_events_closed(
         spark,
         sf_dir,
-        lambda df: SW.streaming_dedup(df, ["user_id", "event_type"]).select(
+        lambda df: SW.streaming_dedup(df).select(
             "user_id", "event_type"
         ),
         "append",
@@ -410,7 +410,7 @@ def q113_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _sketch.countmin_counters(df)
 
     grid = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
-    top = _sketch.exact_top_tokens(_load(spark, sf_dir, "documents"), _sketch.HEAVY_K)
+    top = _sketch.exact_top_tokens(_load(spark, sf_dir, "documents"))
     return _sketch.countmin_probe(grid, top)
 
 
@@ -441,7 +441,7 @@ def q121_streaming_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators import sharding as _sharding
 
     def op(df):
-        return _sharding.shard_manifest(df, "doc_id", _sharding.N_SHARDS)
+        return _sharding.shard_manifest(df)
 
     return _stream_documents_closed(spark, sf_dir, op, "complete").orderBy("shard")
 
@@ -474,10 +474,8 @@ def q129_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .curation9 import _Q130_N, _hll_output
 
     def op(df):
-        rows = _shr(
-            df.select("source", "text"), "source", "text", _Q130_N, id_type="string"
-        )
-        return _SK.hll_registers(rows.withColumnRenamed("doc", "source"), "source", "h")
+        rows = _shr(df.select("source", "text"), "source", _Q130_N, id_type="string")
+        return _SK.hll_registers(rows.withColumnRenamed("doc", "source"))
 
     regs = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
     return _hll_output(spark, sf_dir, regs)
@@ -678,10 +676,10 @@ def q145_streaming_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import skew as _skew
 
     def op(df):
-        return _skew.key_counts(df, "user_id")
+        return _skew.key_counts(df)
 
     state = _stream_events_closed(spark, sf_dir, op, "complete")
-    return _skew.skew_rollup(state, _skew.SKEW_BUCKETS).orderBy("bucket")
+    return _skew.skew_rollup(state).orderBy("bucket")
 
 
 

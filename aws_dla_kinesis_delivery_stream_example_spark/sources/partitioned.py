@@ -89,12 +89,8 @@ def materialize_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-def read_events_for_dates(
-    spark: SparkSession, sf_dir: str, start_date: str, end_date: str
-) -> DataFrame:
-    """Date-bounded scan over the partitioned layout. The BETWEEN on
-    the partition column compiles to PartitionFilters — directories
-    outside the range are never listed, let alone read."""
-    path = materialize_partitioned_events(spark, sf_dir)
-    df = spark.read.parquet(path)
-    return df.filter(F.col("event_date").between(start_date, end_date))
+def read_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events lake partitioned by ``event_date``. A filter on the
+    partition column compiles to PartitionFilters — directories outside
+    its range are never listed, let alone read."""
+    return spark.read.parquet(materialize_partitioned_events(spark, sf_dir))

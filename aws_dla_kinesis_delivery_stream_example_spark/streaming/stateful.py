@@ -182,7 +182,7 @@ def streaming_rolling_zscore(events: DataFrame) -> DataFrame:
     milli-unit column, for stream == batch verification.
     """
     if not events.isStreaming:
-        return rolling_zscore(events, "user_id", ("ts", "event_id"), "v_milli").select("event_id", "user_id", "v_milli", "z")
+        return rolling_zscore(events).select("event_id", "user_id", "v_milli", "z")
     ensure_shipped(events.sparkSession)
     has_watermark = "EventTimeWatermark" in str(
         events._jdf.queryExecution().analyzed()

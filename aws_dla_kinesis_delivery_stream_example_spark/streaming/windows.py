@@ -94,7 +94,10 @@ def interval_join_pairs(df: DataFrame) -> DataFrame:
     return pairs.select(F.col("l_user").alias("user_id"), "l_ts", "r_ts")
 
 
-def streaming_dedup(df: DataFrame, keys: list[str]) -> DataFrame:
+def streaming_dedup(df: DataFrame) -> DataFrame:
+    """One row per (user_id, event_type): within the watermark on a
+    stream, exactly on a batch frame."""
+    keys = ["user_id", "event_type"]
     df = normalize_event_time(df)
     if df.isStreaming:
         return df.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(keys)

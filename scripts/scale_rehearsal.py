@@ -250,7 +250,7 @@ def _measure_valve(spark, docs) -> dict:
     # record. It is persisted only for the untimed diagnostics below
     # and unpersisted again before the first timed run.
     usig = (
-        dedup.simhash_signatures(docs, "doc_id", "text")
+        dedup.simhash_signatures(docs)
         .select("sig", "chunks")
         .distinct()
     )
@@ -325,13 +325,13 @@ def extreme_tier_rehearsal(
     row: dict = {"n_docs": docs.count()}
 
     cand, row["minhash_sec"] = timed(
-        lambda: dedup.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.0).count()
+        lambda: dedup.minhash_near_duplicates(docs, threshold=0.0).count()
     )
     row["minhash_candidates"] = cand
     spark.catalog.clearCache()
 
     usig = (
-        dedup.simhash_signatures(docs, "doc_id", "text")
+        dedup.simhash_signatures(docs)
         .select("sig", "chunks")
         .distinct()
     )
@@ -349,16 +349,14 @@ def extreme_tier_rehearsal(
     # the identical operator configuration — a cap-free 100x tier vs a
     # df-capped 10x row would overstate the marginal-decade growth
     cand, row["jaccard_sec"] = timed(
-        lambda: dedup.shingle_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.0, max_df=max_df
-        ).count()
+        lambda: dedup.shingle_jaccard_pairs(docs, threshold=0.0, max_df=max_df).count()
     )
     row["jaccard_candidates"] = cand
     spark.catalog.clearCache()
 
     cand, row["tfidf_abs_sec"] = timed(
         lambda: TF.tfidf_cosine_pairs(
-            docs, "doc_id", "text", threshold=-1.0
+            docs, threshold=-1.0
         ).count()
     )
     row["tfidf_abs_candidates"] = cand
@@ -370,7 +368,7 @@ def extreme_tier_rehearsal(
     # would surface. Candidates := total duplicated windows.
     from aws_dla_kinesis_delivery_stream_example_spark.operators import curation as CU
 
-    spans = CU.duplicated_span_stats(docs, "doc_id", "text").persist()
+    spans = CU.duplicated_span_stats(docs).persist()
     _, row["spans_sec"] = timed(spans.count)
     row["spans_candidates"] = int(
         spans.agg(F.sum("n_dup_windows")).collect()[0][0] or 0
@@ -382,7 +380,7 @@ def extreme_tier_rehearsal(
     # strict linearity in corpus tokens (min-struct hash agg, no pair
     # join), so the marginal decade is where hidden superlinearity
     # would surface. Candidates := total chunks.
-    rw = CU.chunk_dedup_rewrite(docs, "doc_id", "text").persist()
+    rw = CU.chunk_dedup_rewrite(docs).persist()
     _, row["rewrite_sec"] = timed(rw.count)
     row["rewrite_candidates"] = int(
         rw.agg(F.sum("n_chunks")).collect()[0][0] or 0
@@ -467,20 +465,18 @@ def extreme_tier_rehearsal(
 
     cand_docs = docs.filter(F.col("doc_id") % 50 != 0)
     bsh = (
-        _shr(bench_fixed, "doc_id", "text", 4)
+        _shr(bench_fixed, "doc_id", 4)
         .select(F.col("doc").alias("bid"), "h")
         .distinct()
     )
-    csh = _shr(cand_docs, "doc_id", "text", 4).select(
+    csh = _shr(cand_docs, "doc_id", 4).select(
         F.col("doc").alias("cid"), "h"
     )
     row["fuzzy_candidates"] = (
         csh.join(F.broadcast(bsh), "h").select("cid", "bid").distinct().count()
     )
     _, row["fuzzy_sec"] = timed(
-        lambda: CU.fuzzy_contamination(
-            cand_docs, bench_fixed, "doc_id", "text"
-        ).count()
+        lambda: CU.fuzzy_contamination(cand_docs, bench_fixed).count()
     )
     _release()
     spark.catalog.clearCache()
@@ -655,15 +651,13 @@ def main() -> None:
 
         # exact n-gram Jaccard: candidates = pairs sharing >=1 shingle
         cand, row["jaccard_sec"] = timed(
-            lambda: dedup.shingle_jaccard_pairs(
-                docs, "doc_id", "text", threshold=0.0, max_df=max_df
-            ).count()
+            lambda: dedup.shingle_jaccard_pairs(docs, threshold=0.0, max_df=max_df).count()
         )
         row["jaccard_candidates"] = cand
 
         # MinHash LSH: candidates = banded-join pairs (threshold 0)
         cand, row["minhash_sec"] = timed(
-            lambda: dedup.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.0).count()
+            lambda: dedup.minhash_near_duplicates(docs, threshold=0.0).count()
         )
         row["minhash_candidates"] = cand
 
@@ -682,7 +676,7 @@ def main() -> None:
         # (measured 2.2 -> 5.9 s on q28), which would distort the very
         # timing this rehearsal records.
         usig = (
-            dedup.simhash_signatures(docs, "doc_id", "text")
+            dedup.simhash_signatures(docs)
             .select("sig", "chunks")
             .distinct()
         )
@@ -702,7 +696,7 @@ def main() -> None:
         cand_df.unpersist()
 
         # clusters over the q49-style pair set
-        pairs = dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.5, max_df=max_df)
+        pairs = dedup.shingle_jaccard_pairs(docs, threshold=0.5, max_df=max_df)
         n_clustered, row["clusters_sec"] = timed(lambda: dedup.duplicate_clusters(pairs).count())
         row["clustered_docs"] = n_clustered
 
@@ -716,14 +710,14 @@ def main() -> None:
         bench = full.filter(F.col("doc_id") < 10)
         cand_docs = full.filter(F.col("doc_id") >= 10)
         n_hits, row["contam_sec"] = timed(
-            lambda: curation.contaminated_ids(cand_docs, bench, "doc_id", "text").count()
+            lambda: curation.contaminated_ids(cand_docs, bench).count()
         )
         row["contam_candidates"] = n_hits
 
         # boilerplate: the df-count aggregation is linear; the hazard is
         # the boilerplate-set size (broadcast back) — track it
         n_boiler, row["boiler_sec"] = timed(
-            lambda: curation.boilerplate_ratio(full, "doc_id", "text")
+            lambda: curation.boilerplate_ratio(full)
             .filter("n_boiler > 0")
             .count()
         )
@@ -760,7 +754,7 @@ def main() -> None:
 
         n_tf, row["tfidf_sec"] = timed(
             lambda: TF.tfidf_cosine_pairs(
-                docs, "doc_id", "text", threshold=-1.0, max_df_frac=0.1
+                docs, threshold=-1.0, max_df_frac=0.1
             ).count()
         )
         row["tfidf_candidates"] = n_tf
@@ -771,7 +765,7 @@ def main() -> None:
         # to grow ~quadratically on the planted near-dup population)
         n_tfa, row["tfidf_abs_sec"] = timed(
             lambda: TF.tfidf_cosine_pairs(
-                docs, "doc_id", "text", threshold=-1.0
+                docs, threshold=-1.0
             ).count()
         )
         row["tfidf_abs_candidates"] = n_tfa
@@ -784,21 +778,19 @@ def main() -> None:
         # recovers. Runs after the timed measurements so nothing here
         # warms them.
         truth = (
-            dedup.shingle_jaccard_pairs(
-                docs, "doc_id", "text", threshold=0.5, max_df=None
-            )
+            dedup.shingle_jaccard_pairs(docs, threshold=0.5, max_df=None)
             .select("doc_a", "doc_b")
             .persist()
         )
         row["n_true_pairs"] = truth.count()
         frac_cand = TF.tfidf_cosine_pairs(
-            docs, "doc_id", "text", threshold=-1.0, max_df_frac=0.1
+            docs, threshold=-1.0, max_df_frac=0.1
         ).select("doc_a", "doc_b")
         row["tfidf_true_pairs"] = truth.join(
             frac_cand, ["doc_a", "doc_b"], "left_semi"
         ).count()
         abs_cand = TF.tfidf_cosine_pairs(
-            docs, "doc_id", "text", threshold=-1.0
+            docs, threshold=-1.0
         ).select("doc_a", "doc_b")
         row["tfidf_abs_true_pairs"] = truth.join(
             abs_cand, ["doc_a", "doc_b"], "left_semi"
@@ -806,9 +798,7 @@ def main() -> None:
         # the documented handoff: MinHash recovers the template-dup
         # population the df-capped tfidf modes go blind to — measure it
         # on the same truth set so the claim carries a number
-        mh_cand = dedup.minhash_near_duplicates(
-            docs, "doc_id", "text", threshold=0.0
-        ).select("doc_a", "doc_b")
+        mh_cand = dedup.minhash_near_duplicates(docs, threshold=0.0).select("doc_a", "doc_b")
         row["minhash_true_pairs"] = truth.join(
             mh_cand, ["doc_a", "doc_b"], "left_semi"
         ).count()
@@ -1035,20 +1025,18 @@ def main() -> None:
 
         cand_docs = docs.filter(F.col("doc_id") % 50 != 0)
         bsh = (
-            _shr(bench_fixed, "doc_id", "text", 4)
+            _shr(bench_fixed, "doc_id", 4)
             .select(F.col("doc").alias("bid"), "h")
             .distinct()
         )
-        csh = _shr(cand_docs, "doc_id", "text", 4).select(
+        csh = _shr(cand_docs, "doc_id", 4).select(
             F.col("doc").alias("cid"), "h"
         )
         row["fuzzy_candidates"] = (
             csh.join(F.broadcast(bsh), "h").select("cid", "bid").distinct().count()
         )
         _, row["fuzzy_sec"] = timed(
-            lambda: _cur.fuzzy_contamination(
-                cand_docs, bench_fixed, "doc_id", "text"
-            ).count()
+            lambda: _cur.fuzzy_contamination(cand_docs, bench_fixed).count()
         )
         release_staging()
         spark.catalog.clearCache()

@@ -142,13 +142,16 @@ def test_oov_vocab_rank_determinism(spark):
 def test_updated_centroids_moves_to_cluster_mean(spark):
     import numpy as np
 
-    # Seed 0 at origin, seed 1 at (10,0); extra points pull cluster 0's
-    # centroid to the mean of {(0,0),(2,0),(4,0)} = (2,0).
-    rows = [(0, [0.0, 0.0]), (1, [10.0, 0.0]), (2, [2.0, 0.0]), (3, [4.0, 0.0])]
     from aws_dla_kinesis_delivery_stream_example_spark.operators import clustering as CL
 
+    # The KMEANS_K seeds sit 10 apart on the x axis (seed 0 at the
+    # origin, seed 1 at (10,0)); extra points pull cluster 0's centroid
+    # to the mean of {(0,0),(2,0),(4,0)} = (2,0).
+    k = CL.KMEANS_K
+    rows = [(i, [10.0 * i, 0.0]) for i in range(k)] + [(k, [2.0, 0.0]), (k + 1, [4.0, 0.0])]
+
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    seeds = CL.kmeans_seeds(emb, "vec_id", "embedding", 2)
+    seeds = CL.kmeans_seeds(emb)
     new = CL.updated_centroids(emb, seeds)
     assert np.allclose(new[0], [2.0, 0.0])
     assert np.allclose(new[1], [10.0, 0.0])
@@ -161,11 +164,13 @@ def test_updated_centroids_empty_cluster_keeps_seed(spark):
     # make seed 1's lone member move away is impossible — instead plant
     # a cluster that attracts nothing beyond its seed and check the
     # OTHER cluster when emptied: here cluster 1 keeps exactly its seed.
-    rows = [(0, [0.0, 0.0]), (1, [100.0, 0.0]), (2, [1.0, 0.0])]
     from aws_dla_kinesis_delivery_stream_example_spark.operators import clustering as CL
 
+    k = CL.KMEANS_K
+    rows = [(i, [100.0 * i, 0.0]) for i in range(k)] + [(k, [1.0, 0.0])]
+
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    seeds = CL.kmeans_seeds(emb, "vec_id", "embedding", 2)
+    seeds = CL.kmeans_seeds(emb)
     new = CL.updated_centroids(emb, seeds)
     assert np.allclose(new[1], [100.0, 0.0])  # its only member is the seed
 

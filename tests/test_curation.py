@@ -23,7 +23,7 @@ def test_contamination_finds_planted_overlap(spark):
         ],
     )
     hits = sorted(
-        r.doc_id for r in curation.contaminated_ids(cand, bench, "doc_id", "text").collect()
+        r.doc_id for r in curation.contaminated_ids(cand, bench).collect()
     )
     assert hits == [1]
 
@@ -46,7 +46,7 @@ def test_incremental_dedup_null_and_cross_batch_semantics(spark):
     )
     kept = {
         r.keep_id: r.n_copies
-        for r in curation.incremental_dedup(batch, corpus, "doc_id", "text").collect()
+        for r in curation.incremental_dedup(batch, corpus).collect()
     }
     assert kept == {3: 2, 7: 2}
 
@@ -60,7 +60,7 @@ def test_boilerplate_planted_template(spark):
     out = {
         r.doc_id: (r.n_boiler, r.n_shingles)
         for r in curation.boilerplate_ratio(
-            _docs(spark, rows), "doc_id", "text"
+            _docs(spark, rows)
         ).collect()
     }
     for i in range(3):
@@ -75,7 +75,7 @@ def test_centroid_cosines_identical_vectors(spark):
         [(i, [1.0, 2.0, 2.0], i % 2) for i in range(6)],
         "vec_id long, embedding array<float>, label int",
     )
-    cc = curation.centroid_cosines(emb, "vec_id", "embedding", "label").collect()
+    cc = curation.centroid_cosines(emb).collect()
     assert len(cc) == 6
     for r in cc:
         assert abs(r.cos_centroid - 1.0) < 1e-12
@@ -98,7 +98,7 @@ def test_duplicated_spans_planted_coverage(spark):
     out = {
         r["doc_id"]: r.asDict()
         for r in curation.duplicated_span_stats(
-            _docs(spark, rows), "doc_id", "text"
+            _docs(spark, rows)
         ).collect()
     }
     assert set(out) == {1, 2, 3, 4, 5}
@@ -189,7 +189,7 @@ def test_duplicated_spans_randomized_brute_force(spark):
         out = {
             r["doc_id"]: r.asDict()
             for r in curation.duplicated_span_stats(
-                _docs(spark, rows), "doc_id", "text"
+                _docs(spark, rows)
             ).collect()
         }
         release_staging()

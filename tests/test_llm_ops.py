@@ -41,9 +41,9 @@ def test_shingle_ops_tolerate_null_text(spark):
          (3, "the quick brown fox jumps over the lazy dog today")],
         "doc_id long, text string",
     )
-    pairs = dedup.shingle_jaccard_pairs(df, "doc_id", "text", threshold=0.5).collect()
+    pairs = dedup.shingle_jaccard_pairs(df, threshold=0.5).collect()
     assert {(r.doc_a, r.doc_b) for r in pairs} == {(1, 3)}
-    sigs = dedup.minhash_signatures(df, "doc_id", "text").collect()
+    sigs = dedup.minhash_signatures(df).collect()
     assert {r.doc for r in sigs} == {1, 3}
 
 
@@ -58,16 +58,16 @@ def test_minhash_signatures_hash_rows_path_identical(spark, planted_docs):
 
     direct = {
         r.doc: list(r.signature)
-        for r in dedup.minhash_signatures(planted_docs, "doc_id", "text").collect()
+        for r in dedup.minhash_signatures(planted_docs).collect()
     }
-    sh60 = dedup._shingle_hash_rows(planted_docs, "doc_id", "text", 5)
+    sh60 = dedup._shingle_hash_rows(planted_docs, "doc_id", 5)
     folded = sh60.select(
         "doc", F.pmod(F.col("h"), F.lit(dedup._MERSENNE)).alias("h")
     )
     shared = {
         r.doc: list(r.signature)
         for r in dedup.minhash_signatures(
-            planted_docs, "doc_id", "text", _hash_rows=folded
+            planted_docs, _hash_rows=folded
         ).collect()
     }
     assert direct == shared and direct
@@ -77,12 +77,12 @@ def test_minhash_estimates_jaccard(spark, planted_docs):
     """MinHash estimate within 0.2 of exact Jaccard on candidate pairs."""
     exact = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.shingle_jaccard_pairs(planted_docs, "doc_id", "text", threshold=0.3)
+        for r in dedup.shingle_jaccard_pairs(planted_docs, threshold=0.3)
         .collect()
     }
     est = {
         (r.doc_a, r.doc_b): r.est_jaccard
-        for r in dedup.minhash_near_duplicates(planted_docs, "doc_id", "text", threshold=0.3)
+        for r in dedup.minhash_near_duplicates(planted_docs, threshold=0.3)
         .collect()
     }
     assert exact, "plants must create high-jaccard pairs"
@@ -103,7 +103,7 @@ def test_jaccard_frequency_cap_keeps_true_dups(spark, planted_docs):
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in dedup.shingle_jaccard_pairs(
-            planted_docs, "doc_id", "text", threshold=0.5, max_df=10
+            planted_docs, threshold=0.5, max_df=10
         ).collect()
     }
     for i in range(20):  # planted exact copies at +200000
@@ -140,13 +140,13 @@ def test_lsh_recall_floor_sf001(spark):
         all_docs = all_docs.unionAll(p)
     exact = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.shingle_jaccard_pairs(all_docs, "doc_id", "text", threshold=0.6).collect()
+        for r in dedup.shingle_jaccard_pairs(all_docs, threshold=0.6).collect()
     }
     truth = {p for p, j in exact.items() if j >= 0.7}
     assert len(truth) >= 40, "graded plants must produce J>=0.7 ground truth"
     est = {
         (r.doc_a, r.doc_b)
-        for r in dedup.minhash_near_duplicates(all_docs, "doc_id", "text", threshold=0.55).collect()
+        for r in dedup.minhash_near_duplicates(all_docs, threshold=0.55).collect()
     }
     recall = len(truth & est) / len(truth)
     assert recall >= 0.9, f"LSH recall {recall:.3f} below floor on {len(truth)} true pairs"
@@ -155,7 +155,7 @@ def test_lsh_recall_floor_sf001(spark):
 def test_minhash_finds_planted_near_dups(spark, planted_docs):
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in dedup.minhash_near_duplicates(planted_docs, "doc_id", "text", threshold=0.5)
+        for r in dedup.minhash_near_duplicates(planted_docs, threshold=0.5)
         .collect()
     }
     planted = {(i, i + 100000) for i in range(20)} | {(i, i + 200000) for i in range(20)}
@@ -166,7 +166,7 @@ def test_minhash_finds_planted_near_dups(spark, planted_docs):
 def test_simhash_exact_dups_zero_hamming(spark, planted_docs):
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in dedup.simhash_near_duplicates(planted_docs, "doc_id", "text").collect()
+        for r in dedup.simhash_near_duplicates(planted_docs).collect()
     }
     for i in range(20):
         assert pairs.get((i, i + 200000)) == 0  # identical text => identical simhash
@@ -178,7 +178,7 @@ def test_simhash_bucket_valve_preserves_exact_pair_set(spark, planted_docs):
     pair set as the unvalved join, on the planted corpus's fingerprints."""
     from pyspark.sql import functions as F
 
-    usig = dedup.simhash_signatures(planted_docs, "doc_id", "text").select("sig", "chunks").distinct()
+    usig = dedup.simhash_signatures(planted_docs).select("sig", "chunks").distinct()
 
     def verified(bound):
         return {
@@ -635,7 +635,7 @@ def test_simhash_valve_engages_on_band_crowd_corpus(spark):
     assert expected["n_planted_twins"] == 20
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     usig = (
-        dedup.simhash_signatures(docs, "doc_id", "text")
+        dedup.simhash_signatures(docs)
         .select("sig", "chunks")
         .distinct()
         .persist()

@@ -26,13 +26,19 @@ parameter of a uniquely named module-level package function or of a
 uniquely named class's ``__init__``, or a defaulted field of a
 ``@dataclass`` (its positional index is its place among the fields the
 constructor takes; a ``field(init=False)`` is state, not an option).
+An operator — a function whose first parameter is annotated
+``DataFrame`` or ``SparkSession`` — reads its input's schema by name,
+so each of its required parameters after that input is an option too:
+a column name every caller spells the same is part of the schema
+contract, not a setting.
 Runtime call sites are the same files as above; a test is not a caller
 that justifies an option, so a value only a test passes does not
 count. A call site that omits the option passes its default; an
 argument that is not a literal or an ALL_CAPS constant counts as a
 second value. A constant counts by its value (followed through
-imports), so ``n=_K`` with ``_K = 8`` and ``n=8`` are one value. A
-function or class with no runtime caller is not scanned.
+imports, including those inside function bodies), so ``n=_K`` with
+``_K = 8`` and ``n=8`` are one value. A function or class with no
+runtime caller is not scanned.
 """
 
 from __future__ import annotations
@@ -239,19 +245,10 @@ class _Constants:
         if module not in self._values:
             self._values[module] = consts, aliases = {}, {}
             name, tree = self._trees.get(module, ("", ast.Module(body=[])))
+            is_package = name.endswith("__init__.py")
             for node in tree.body:
-                if isinstance(node, ast.Import):
-                    for a in node.names:
-                        if a.asname:
-                            aliases[a.asname] = a.name
-                elif isinstance(node, ast.ImportFrom):
-                    src = _imported(node, module, name.endswith("__init__.py"))
-                    for a in node.names:
-                        local = a.asname or a.name
-                        if f"{src}.{a.name}" in self._trees:
-                            aliases[local] = f"{src}.{a.name}"
-                        elif a.name.isupper() and a.name in self.scope(src)[0]:
-                            consts[local] = self.scope(src)[0][a.name]
+                if isinstance(node, (ast.Import, ast.ImportFrom)):
+                    self._bind(node, module, is_package)
                 elif isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value is not None:
                     targets = node.targets if isinstance(node, ast.Assign) else [node.target]
                     if len(targets) == 1 and isinstance(targets[0], ast.Name) and targets[0].id.isupper():
@@ -259,7 +256,29 @@ class _Constants:
                             consts[targets[0].id] = self.fold(node.value, module)
                         except ValueError:
                             pass
+            # Imports inside function bodies bind after the module's own
+            # constants, so an import cycle they close sees those.
+            top = set(map(id, tree.body))
+            for node in ast.walk(tree):
+                if isinstance(node, (ast.Import, ast.ImportFrom)) and id(node) not in top:
+                    self._bind(node, module, is_package)
         return self._values[module]
+
+    def _bind(self, node: ast.Import | ast.ImportFrom, module: str, is_package: bool) -> None:
+        """Record the module aliases and constants an import binds."""
+        consts, aliases = self._values[module]
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    aliases[a.asname] = a.name
+            return
+        src = _imported(node, module, is_package)
+        for a in node.names:
+            local = a.asname or a.name
+            if f"{src}.{a.name}" in self._trees:
+                aliases[local] = f"{src}.{a.name}"
+            elif a.name.isupper() and a.name in self.scope(src)[0]:
+                consts[local] = self.scope(src)[0][a.name]
 
     def fold(self, node: ast.AST, module: str):
         """The value of an expression built from literals and constants
@@ -310,17 +329,33 @@ _FOLDABLE = {
 }
 
 
-def _parameters(fn: ast.FunctionDef | ast.AsyncFunctionDef, skip: int = 0):
-    """(parameter, positional index or None, default) per defaulted
-    parameter of ``fn``; ``skip`` leading parameters (``self``) are not
-    passed by a caller."""
+def _parameters(fn: ast.FunctionDef | ast.AsyncFunctionDef, skip: int = 0, required: bool = False):
+    """(parameter, positional index or None, default) per option of
+    ``fn``: each defaulted parameter and, with ``required``, each
+    required parameter after its input (default None). ``skip`` leading
+    parameters (``self``) are not passed by a caller."""
     positional = (fn.args.posonlyargs + fn.args.args)[skip:]
-    tail = positional[len(positional) - len(fn.args.defaults):]
-    for arg, default in zip(tail, fn.args.defaults):
-        yield arg.arg, positional.index(arg), default
+    defaults = [None] * (len(positional) - len(fn.args.defaults)) + fn.args.defaults
+    for index, (arg, default) in enumerate(zip(positional, defaults)):
+        if default is not None or (required and index > 0):
+            yield arg.arg, index, default
     for arg, default in zip(fn.args.kwonlyargs, fn.args.kw_defaults):
-        if default is not None:
+        if default is not None or required:
             yield arg.arg, None, default
+
+
+_INPUTS = {"DataFrame", "SparkSession"}
+
+
+def _is_operator(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> bool:
+    """Whether ``fn``'s first parameter is annotated ``DataFrame`` or
+    ``SparkSession``: the schema of that input is its contract, so a
+    column name every caller passes the same belongs in ``fn``, not in
+    its signature."""
+    positional = fn.args.posonlyargs + fn.args.args
+    if not positional or positional[0].annotation is None:
+        return False
+    return ast.unparse(positional[0].annotation).strip("'\"").rsplit(".", 1)[-1] in _INPUTS
 
 
 def _called(node: ast.AST) -> str | None:
@@ -376,7 +411,10 @@ def _options(sources: dict[str, ast.Module]) -> dict[tuple[str, str, str], tuple
         if len(defs) != 1:
             continue
         name, node = defs[0]
-        params = _constructor(node) if isinstance(node, ast.ClassDef) else _parameters(node)
+        if isinstance(node, ast.ClassDef):
+            params = _constructor(node)
+        else:
+            params = _parameters(node, required=_is_operator(node))
         for param, index, default in params:
             options[(_package_path(name), symbol, param)] = (index, default, _module_name(name))
     return options
@@ -408,13 +446,24 @@ def _single_valued_options(sources: dict[str, ast.Module]) -> set[tuple[str, str
     values: dict[tuple[str, str, str], set] = {key: set() for key in options}
     for name, tree in sources.items():
         module = _module_name(name)
+        # a call through ``from m import f as g`` is a call of ``f``
+        renamed = {
+            a.asname: a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for a in node.names
+            if a.asname
+        }
         for call in ast.walk(tree):
             if not isinstance(call, ast.Call):
                 continue
-            for key, (index, default, home) in by_callee.get(_called(call), ()):
+            callee = _called(call)
+            if isinstance(call.func, ast.Name):
+                callee = renamed.get(callee, callee)
+            for key, (index, default, home) in by_callee.get(callee, ()):
                 arg = _argument(call, index, key[2])
                 if arg is _OMITTED:
-                    value = constants.key(default, home)
+                    value = constants.key(default, home) if default is not None else None
                 else:
                     value = constants.key(arg, module) if arg is not None else None
                 values[key].add(value or ("computed", f"{name}:{call.lineno}"))
@@ -434,7 +483,11 @@ def test_every_option_takes_two_values():
 
 # A synthetic project for the rule self-tests: ``Job`` is a package
 # dataclass, ``bench.py`` its one runtime caller, and a test file that
-# calls ``Job.inspect``.
+# calls ``Job.inspect``. ``ops.dedup`` is an operator (its first
+# parameter is a DataFrame) that ``bench.py`` and ``plans.q1`` call
+# with one id column and one width, ``q1`` through a module imported
+# inside its body; only the test passes other values. ``ops.digest``
+# takes a column name first, so it is not an operator.
 _SYNTHETIC = {
     f"{PKG.name}/jobs.py": """
         from dataclasses import dataclass, field
@@ -455,17 +508,41 @@ _SYNTHETIC = {
             def inspect(self) -> int:
                 return self.n_done
         """,
+    f"{PKG.name}/ops.py": """
+        from pyspark.sql import DataFrame
+
+        WIDTH = 8
+
+        def dedup(df: DataFrame, id_col: str, width: int) -> DataFrame:
+            return df.select(id_col).limit(width)
+
+        def digest(text_col: str, bits: int):
+            return text_col[:bits]
+        """,
+    f"{PKG.name}/plans.py": """
+        def q1(docs):
+            from . import ops as _ops
+
+            return _ops.dedup(docs, "doc_id", _ops.WIDTH)
+        """,
     "bench.py": """
         from pkg.jobs import Job
+        from pkg.ops import dedup, digest
 
         Job("a", 2, width=8).run()
         Job("b", 3, 8).run()
+        dedup(frame, "doc_id", 8)
+        digest("text", 8)
         """,
     "tests/test_jobs.py": """
         from pkg.jobs import Job
+        from pkg.ops import dedup
 
         def test_inspect():
             assert Job("c").inspect() == 0
+
+        def test_dedup(frame):
+            dedup(frame, "other_id", 3)
         """,
 }
 
@@ -497,3 +574,33 @@ def test_method_only_a_test_calls_is_flagged(tmp_path):
     assert ("jobs.py", "Job.inspect") in unused
     assert ("jobs.py", "Job.run") not in unused  # bench.py calls it
     assert ("jobs.py", "Job._step") not in unused  # run calls it
+
+
+def test_one_valued_required_parameter_of_an_operator_is_flagged(tmp_path):
+    """Both runtime call sites pass ``"doc_id"`` and width 8 (once
+    through ``_ops.WIDTH``); the test's other values do not count."""
+    single = _single_valued_options(_synthetic(tmp_path))
+    assert ("ops.py", "dedup", "id_col") in single
+    assert ("ops.py", "dedup", "width") in single
+
+
+def test_only_an_operators_required_parameters_after_its_input_are_options(tmp_path):
+    options = _options(_synthetic(tmp_path))
+    assert ("ops.py", "dedup", "df") not in options  # the input itself
+    assert not {key for key in options if key[1] == "digest"}  # not an operator
+
+
+def test_call_through_an_import_alias_is_a_call_site(tmp_path):
+    sources = dict(_synthetic(tmp_path))
+    sources["scripts/alias.py"] = ast.parse(
+        "from pkg.ops import dedup as _dedup\n_dedup(frame, 'other_id', 8)\n"
+    )
+    single = _single_valued_options(sources)
+    assert ("ops.py", "dedup", "id_col") not in single
+    assert ("ops.py", "dedup", "width") in single
+
+
+def test_constant_imported_inside_a_function_folds_to_its_value(tmp_path):
+    sources = _synthetic(tmp_path)
+    expr = ast.parse("_ops.WIDTH", mode="eval").body
+    assert _Constants(sources).key(expr, _module_name(f"{PKG.name}/plans.py")) == ("number", 8)

@@ -517,12 +517,7 @@ def test_partition_pruning_reaches_scan(spark):
     """q88's layout: the date BETWEEN must appear as PartitionFilters
     (directory-level pruning), and the scan must select only the 3
     surviving partitions of 30."""
-    from aws_dla_kinesis_delivery_stream_example_spark.sources.partitioned import (
-        read_events_for_dates,
-    )
-
-    df = read_events_for_dates(spark, SF, "2024-01-10", "2024-01-12")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(spark, "q88_partition_pruned_scan")
     assert "PartitionFilters: [" in plan
     pushed = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "event_date" in pushed and pushed.strip() != ""

@@ -27,13 +27,14 @@ _ids = st.lists(
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(ids=_ids, n_shards=st.integers(min_value=1, max_value=7))
-def test_shard_manifest_reconciles_for_any_input(spark, ids, n_shards):
-    """For ANY id set / shard count: manifests partition the input
+@given(ids=_ids)
+def test_shard_manifest_reconciles_for_any_input(spark, ids):
+    """For ANY id set: manifests partition the input
     (counts and chars sum to the input's), every shard value is in
     range, and the XOR checksum equals the independent Python fold."""
     df = spark.createDataFrame([(i, i % 97) for i in ids], "doc_id long, n_chars long")
-    man = sharding.shard_manifest(df, "doc_id", n_shards).collect()
+    man = sharding.shard_manifest(df).collect()
+    n_shards = sharding.N_SHARDS
     assert sum(r["n_docs"] for r in man) == len(ids)
     assert sum(r["total_chars"] for r in man) == sum(i % 97 for i in ids)
     seed = sharding.SHARD_SEED
@@ -61,7 +62,7 @@ def test_snapshot_diff_is_a_partition_of_the_id_union(spark, old, new):
     new_df = spark.createDataFrame([(k, v, "s", 1) for k, v in new.items()], schema)
     got = {
         r["doc_id"]: r["status"]
-        for r in curation.snapshot_diff(old_df, new_df, "doc_id", "fp").collect()
+        for r in curation.snapshot_diff(old_df, new_df).collect()
     }
     assert set(got) == set(old) | set(new)
     for i, status in got.items():
@@ -76,16 +77,13 @@ def test_snapshot_diff_is_a_partition_of_the_id_union(spark, old, new):
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    keys=st.lists(st.integers(min_value=-100, max_value=100), min_size=1, max_size=60),
-    n_buckets=st.integers(min_value=1, max_value=9),
-)
-def test_key_skew_audit_conservation_for_any_input(spark, keys, n_buckets):
+@given(keys=st.lists(st.integers(min_value=-100, max_value=100), min_size=1, max_size=60))
+def test_key_skew_audit_conservation_for_any_input(spark, keys):
     """For ANY key multiset (including negatives): row and key counts
     are conserved across buckets, and max_key_rows <= n_rows per
     bucket with the hot key's count equal to max_key_rows."""
     df = spark.createDataFrame([(k,) for k in keys], "user_id long")
-    rows = skew.skew_rollup(skew.key_counts(df, "user_id"), n_buckets).collect()
+    rows = skew.skew_rollup(skew.key_counts(df)).collect()
     assert sum(r["n_rows"] for r in rows) == len(keys)
     assert sum(r["n_keys"] for r in rows) == len(set(keys))
     for r in rows:

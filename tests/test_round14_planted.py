@@ -771,19 +771,6 @@ def test_q150_stream_equals_batch(spark):
 # ------------------------------------------- round-14 review fixes
 
 
-def test_skew_rollup_rejects_nonpositive_buckets(spark):
-    """q145 consumes skew_rollup directly (bypassing the audit
-    wrapper), so the n_buckets guard must live in the phase itself."""
-    import pytest as _pytest
-
-    from aws_dla_kinesis_delivery_stream_example_spark.operators.skew import skew_rollup
-
-    per_key = spark.createDataFrame([(1, 2)], "_key long, _cnt long")
-    for bad in (0, -3):
-        with _pytest.raises(ValueError, match="n_buckets"):
-            skew_rollup(per_key, bad)
-
-
 def test_q148_all_empty_corpus_degenerates_to_zero_shares(spark, tmp_path):
     """sumw = 0 (every source token-free): all-zero shares and
     allocations instead of a divide-by-zero, on BOTH faces."""

@@ -40,7 +40,7 @@ def test_contamination_overlap_planted_fractions(spark):
     )
     out = {
         r["doc_id"]: r.asDict()
-        for r in curation.contamination_overlap(cand, bench, "doc_id", "text").collect()
+        for r in curation.contamination_overlap(cand, bench).collect()
     }
     assert set(out) == {1, 2}
     assert out[1]["n_shingles"] == 3 and out[1]["n_hit"] == 1
@@ -345,7 +345,7 @@ def test_contamination_overlap_randomized_brute_force(spark):
         out = {
             r["doc_id"]: (r["n_shingles"], r["n_hit"], r["overlap_frac"])
             for r in curation.contamination_overlap(
-                _docs(spark, cand_rows), _docs(spark, bench_rows), "doc_id", "text"
+                _docs(spark, cand_rows), _docs(spark, bench_rows)
             ).collect()
         }
         assert out == expected, seed
@@ -540,7 +540,7 @@ def test_tfidf_zero_weight_doc_does_not_crash(spark):
         pairs = {
             (r["doc_a"], r["doc_b"])
             for r in TF.tfidf_cosine_pairs(
-                docs, "doc_id", "text", threshold=0.01
+                docs, threshold=0.01
             ).collect()
         }
     finally:

@@ -57,7 +57,7 @@ def test_chunk_dedup_rewrite_planted(spark):
     )
     out = {
         r["doc_id"]: r.asDict()
-        for r in curation.chunk_dedup_rewrite(df, "doc_id", "text").collect()
+        for r in curation.chunk_dedup_rewrite(df).collect()
     }
     assert set(out) == {1, 2, 3, 4, 5}
     assert out[1] == {
@@ -103,7 +103,7 @@ def test_weighted_sample_matches_single_stage_brute_force(spark):
     df = spark.createDataFrame(rows, "source string, doc_id long, w long")
     got = [
         (r["source"], r["rnk"], r["doc_id"], r["w"])
-        for r in sampling.weighted_sample(df, "source", "doc_id", F.col("w"), k=4)
+        for r in sampling.weighted_sample(df, F.col("w"))
         .orderBy("source", "rnk")
         .collect()
     ]
@@ -112,7 +112,8 @@ def test_weighted_sample_matches_single_stage_brute_force(spark):
         members = [(doc, w) for (src, doc, w) in rows if src == s]
         members.sort(key=lambda t: (_es_key(t[0], t[1]), t[0]))
         expected.extend(
-            (s, rnk + 1, doc, w) for rnk, (doc, w) in enumerate(members[:4])
+            (s, rnk + 1, doc, w)
+            for rnk, (doc, w) in enumerate(members[: sampling.WEIGHTED_K])
         )
     assert got == expected
 
@@ -120,15 +121,13 @@ def test_weighted_sample_matches_single_stage_brute_force(spark):
 def test_weighted_sample_prefers_heavy_rows(spark):
     """A row with overwhelming weight is (deterministically) included:
     w=10^9 against 99 rows of w=1 gives it a ~2^-30 chance of missing
-    a k=3 cut under the ES distribution — if it's absent, the operator
-    is ignoring the weight column."""
+    a WEIGHTED_K cut under the ES distribution — if it's absent, the
+    operator is ignoring the weight column."""
     rows = [("s", i, 1) for i in range(99)] + [("s", 999, 10**9)]
     df = spark.createDataFrame(rows, "source string, doc_id long, w long")
     got = {
         r["doc_id"]
-        for r in sampling.weighted_sample(
-            df, "source", "doc_id", F.col("w"), k=3
-        ).collect()
+        for r in sampling.weighted_sample(df, F.col("w")).collect()
     }
     assert 999 in got
 
@@ -143,9 +142,9 @@ def test_rolling_zscore_flags_planted_spike(spark):
     rows = [(i, 1, i, 1000 if i % 2 == 0 else 1010) for i in range(20)]
     rows.append((20, 1, 20, 100000))
     df = spark.createDataFrame(
-        rows, "event_id long, user_id long, pos long, v long"
+        rows, "event_id long, user_id long, ts long, v_milli long"
     )
-    out = anomaly.rolling_zscore(df, "user_id", ("pos",), "v").collect()
+    out = anomaly.rolling_zscore(df).collect()
     assert [r["event_id"] for r in out] == [20]
     assert out[0]["z"] > 100  # spike is wildly outside the calm band
 
@@ -156,9 +155,9 @@ def test_rolling_zscore_excludes_zero_variance_windows(spark):
     documented var_num > 0 guard."""
     rows = [(i, 1, i, 1000) for i in range(15)] + [(15, 1, 15, 99999)]
     df = spark.createDataFrame(
-        rows, "event_id long, user_id long, pos long, v long"
+        rows, "event_id long, user_id long, ts long, v_milli long"
     )
-    out = anomaly.rolling_zscore(df, "user_id", ("pos",), "v").collect()
+    out = anomaly.rolling_zscore(df).collect()
     assert out == []
 
 
@@ -180,7 +179,7 @@ def test_source_overlap_planted_matrix(spark):
     )
     out = {
         (r["src_a"], r["src_b"]): r.asDict()
-        for r in curation.source_overlap(df, "source", "text").collect()
+        for r in curation.source_overlap(df).collect()
     }
     assert set(out) == {("a", "b"), ("a", "c"), ("b", "c")}
     ab = out[("a", "b")]
@@ -238,12 +237,12 @@ def test_shared_shingle_pairs_equals_threshold0_jaccard(spark):
     try:
         fast = {
             (r.doc_a, r.doc_b)
-            for r in dedup.shared_shingle_pairs(docs, "doc_id", "text").collect()
+            for r in dedup.shared_shingle_pairs(docs).collect()
         }
         full = {
             (r.doc_a, r.doc_b)
             for r in dedup.shingle_jaccard_pairs(
-                docs, "doc_id", "text", threshold=0.0, max_df=cap
+                docs, threshold=0.0, max_df=cap
             ).collect()
         }
         assert fast == full == {(100, 101), (102, 103)}, (fast, full)

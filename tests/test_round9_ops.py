@@ -27,7 +27,7 @@ def test_weighted_sample_rejects_string_id(spark):
         [("s", "doc-a", 5)], "source string, doc_id string, w long"
     )
     with pytest.raises(TypeError, match="must be numeric"):
-        sampling.weighted_sample(df, "source", "doc_id", F.col("w"), k=2)
+        sampling.weighted_sample(df, F.col("w"))
 
 
 def test_weighted_sample_rejects_nonpositive_weight(spark):
@@ -39,7 +39,7 @@ def test_weighted_sample_rejects_nonpositive_weight(spark):
             [("s", 1, 5), ("s", 2, bad_w)], "source string, doc_id long, w long"
         )
         with pytest.raises(Exception, match="non-positive weight"):
-            sampling.weighted_sample(df, "source", "doc_id", F.col("w"), k=2).collect()
+            sampling.weighted_sample(df, F.col("w")).collect()
 
 
 # ------------------------------------------ q108 watermark late drop

@@ -78,7 +78,7 @@ def test_fuzzy_contamination_matches_exhaustive_python(spark):
             r["best_lev_milli"],
             r["best_bench"],
         )
-        for r in curation.fuzzy_contamination(cand_df, bench_df, "doc_id", "text").collect()
+        for r in curation.fuzzy_contamination(cand_df, bench_df).collect()
     }
     assert got == expect
     assert expect, "seed produced no contaminated docs — test is vacuous"
@@ -105,7 +105,7 @@ def test_snapshot_diff_matches_exhaustive_python(spark):
     new_df = spark.createDataFrame([(k, v, "s", 1) for k, v in new.items()], schema)
     got = {
         r["doc_id"]: r["status"]
-        for r in curation.snapshot_diff(old_df, new_df, "doc_id", "fp").collect()
+        for r in curation.snapshot_diff(old_df, new_df).collect()
     }
     assert got == expect
     assert len(set(expect.values())) == 4, "seed missed a status class"
@@ -131,7 +131,7 @@ def test_key_skew_audit_matches_exhaustive_python(spark):
         e["max_key_rows"] = max(e["max_key_rows"], c)
         e["hot"] = max(e["hot"], (c, k))
     df = spark.createDataFrame([(k,) for k in keys], "user_id long")
-    got = {r["bucket"]: r for r in skew.key_skew_audit(df, "user_id").collect()}
+    got = {r["bucket"]: r for r in skew.key_skew_audit(df).collect()}
     assert set(got) == set(expect)
     for b, e in expect.items():
         r = got[b]

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
 
 from aws_dla_kinesis_delivery_stream_example_spark.operators import (
     curation,
@@ -30,12 +29,13 @@ def test_assign_shards_matches_python_hash(spark):
     Spark values must equal an independent Python md5 computation, and
     the two hash streams must be domain-separated (different tags)."""
     df = spark.createDataFrame([(7,), (8,)], "doc_id long")
-    rows = {r["doc_id"]: r for r in sharding.assign_shards(df, "doc_id", 4).collect()}
+    rows = {r["doc_id"]: r for r in sharding.assign_shards(df).collect()}
+    n = sharding.N_SHARDS
     for i in (7, 8):
-        assert rows[i]["shard"] == _hash60_py(f"shard:17:{i}") % 4
+        assert rows[i]["shard"] == _hash60_py(f"shard:17:{i}") % n
         assert rows[i]["order_key"] == _hash60_py(f"order:17:{i}")
         # domain separation: shard hash != order hash for the same id
-        assert rows[i]["order_key"] % 4 != rows[i]["shard"] or _hash60_py(
+        assert rows[i]["order_key"] % n != rows[i]["shard"] or _hash60_py(
             f"order:17:{i}"
         ) != _hash60_py(f"shard:17:{i}")
 
@@ -49,11 +49,11 @@ def test_shard_manifest_planted_and_partitioning_invariant(spark):
     df = spark.createDataFrame([(i, 10 + i) for i in ids], "doc_id long, n_chars long")
     man = {
         r["shard"]: r
-        for r in sharding.shard_manifest(df, "doc_id", 3).collect()
+        for r in sharding.shard_manifest(df).collect()
     }
     expect: dict[int, list[int]] = {}
     for i in ids:
-        expect.setdefault(_hash60_py(f"shard:17:{i}") % 3, []).append(i)
+        expect.setdefault(_hash60_py(f"shard:17:{i}") % sharding.N_SHARDS, []).append(i)
     assert set(man) == set(expect)
     for sh, members in expect.items():
         keys = [_hash60_py(f"order:17:{i}") for i in members]
@@ -69,17 +69,11 @@ def test_shard_manifest_planted_and_partitioning_invariant(spark):
     # layout invariance: 7-way round-robin repartition, same manifest
     man2 = {
         r["shard"]: r
-        for r in sharding.shard_manifest(df.repartition(7), "doc_id", 3).collect()
+        for r in sharding.shard_manifest(df.repartition(7)).collect()
     }
     assert {k: v.asDict() for k, v in man.items()} == {
         k: v.asDict() for k, v in man2.items()
     }
-
-
-def test_assign_shards_rejects_bad_shard_count(spark):
-    df = spark.createDataFrame([(1,)], "doc_id long")
-    with pytest.raises(ValueError, match="n_shards"):
-        sharding.assign_shards(df, "doc_id", 0)
 
 
 # ---------------------------------------------------------------- q116
@@ -98,7 +92,7 @@ def test_snapshot_diff_planted(spark):
     )
     got = {
         r["doc_id"]: (r["status"], r["source"], r["n_chars"])
-        for r in curation.snapshot_diff(old, new, "doc_id", "fp").collect()
+        for r in curation.snapshot_diff(old, new).collect()
     }
     assert got == {
         1: ("removed", "a", 10),
@@ -115,7 +109,7 @@ def test_snapshot_diff_null_fingerprints_classify_unchanged(spark):
     schema = "doc_id long, fp long, source string, n_chars long"
     old = spark.createDataFrame([(1, None, "s", 1)], schema)
     new = spark.createDataFrame([(1, None, "s", 1)], schema)
-    [r] = curation.snapshot_diff(old, new, "doc_id", "fp").collect()
+    [r] = curation.snapshot_diff(old, new).collect()
     assert r["status"] == "unchanged"
 
 
@@ -123,29 +117,31 @@ def test_snapshot_diff_null_fingerprints_classify_unchanged(spark):
 
 
 def test_key_skew_audit_planted_single_bucket(spark):
-    """One bucket folds everything into bucket 0: totals and the
-    hottest key are hand-checkable (the audit's rollup phase at
-    n_buckets=1)."""
-    df = spark.createDataFrame([(k,) for k in [1, 1, 1, 2, 3]], "user_id long")
-    [r] = skew.skew_rollup(skew.key_counts(df, "user_id"), 1).collect()
-    assert (r["bucket"], r["n_rows"], r["n_keys"], r["max_key_rows"]) == (0, 5, 3, 3)
+    """Keys 1, 35 and 71 all hash to bucket 24 of ``SKEW_BUCKETS``, so
+    one bucket folds everything: totals and the hottest key are
+    hand-checkable."""
+    assert {_hash60_py(str(k)) % skew.SKEW_BUCKETS for k in (1, 35, 71)} == {24}
+    df = spark.createDataFrame([(k,) for k in [1, 1, 1, 35, 71]], "user_id long")
+    [r] = skew.skew_rollup(skew.key_counts(df)).collect()
+    assert (r["bucket"], r["n_rows"], r["n_keys"], r["max_key_rows"]) == (24, 5, 3, 3)
     assert (r["hot_key"], r["hot_key_rows"]) == (1, 3)
 
 
 def test_key_skew_audit_tie_breaks_to_larger_key(spark):
     """Equal counts: the lexicographic struct max picks the LARGER key
     — deterministic across engines and partitionings (no max_by tie
-    nondeterminism)."""
-    df = spark.createDataFrame([(5,), (5,), (9,), (9,)], "user_id long")
-    [r] = skew.skew_rollup(skew.key_counts(df, "user_id"), 1).collect()
-    assert (r["hot_key"], r["hot_key_rows"]) == (9, 2)
+    nondeterminism). Keys 5 and 19 share a bucket."""
+    assert _hash60_py("5") % skew.SKEW_BUCKETS == _hash60_py("19") % skew.SKEW_BUCKETS
+    df = spark.createDataFrame([(5,), (5,), (19,), (19,)], "user_id long")
+    [r] = skew.skew_rollup(skew.key_counts(df)).collect()
+    assert (r["hot_key"], r["hot_key_rows"]) == (19, 2)
 
 
 def test_key_skew_audit_row_conservation(spark):
     """sum(n_rows) over buckets == input rows; every key lands in
     exactly one bucket."""
     df = spark.createDataFrame([(i % 13,) for i in range(100)], "user_id long")
-    rows = skew.key_skew_audit(df, "user_id").collect()
+    rows = skew.key_skew_audit(df).collect()
     assert sum(r["n_rows"] for r in rows) == 100
     assert sum(r["n_keys"] for r in rows) == 13
     assert all(0 <= r["bucket"] < skew.SKEW_BUCKETS for r in rows)
@@ -171,7 +167,7 @@ def test_fuzzy_contamination_planted(spark):
         ],
         "doc_id long, text string",
     )
-    rows = curation.fuzzy_contamination(cand, bench, "doc_id", "text").collect()
+    rows = curation.fuzzy_contamination(cand, bench).collect()
     assert [r["doc_id"] for r in rows] == [10]
     [r] = rows
     assert r["best_bench"] == 1 and r["n_blocked"] == 1 and r["n_fuzzy"] == 1
@@ -193,7 +189,7 @@ def test_fuzzy_contamination_best_is_min_struct(spark):
         [(10, "alpha beta gamma delta epsilon zeta eta iota")],
         "doc_id long, text string",
     )
-    [r] = curation.fuzzy_contamination(cand, bench, "doc_id", "text").collect()
+    [r] = curation.fuzzy_contamination(cand, bench).collect()
     # exact match with bench 2 (lev 0) beats bench 1 (lev 5)
     assert (r["best_lev_milli"], r["best_bench"]) == (0, 2)
     assert r["n_blocked"] == 2 and r["n_fuzzy"] == 2
@@ -226,7 +222,7 @@ def test_streaming_shard_manifest_multibatch_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/b*")
     )
-    out = sharding.shard_manifest(stream, "doc_id", 4)
+    out = sharding.shard_manifest(stream)
     q = (
         out.writeStream.outputMode("complete")
         .format("memory")
@@ -242,10 +238,10 @@ def test_streaming_shard_manifest_multibatch_equals_batch(spark, tmp_path):
     }
     want = {
         r["shard"]: r.asDict()
-        for r in sharding.shard_manifest(docs, "doc_id", 4).collect()
+        for r in sharding.shard_manifest(docs).collect()
     }
     assert got == want
-    assert len(want) == 4  # all shards populated -> the check is non-vacuous
+    assert len(want) == sharding.N_SHARDS  # all shards populated -> the check is non-vacuous
 
 
 # ---------------------------------------------------------------- q122
@@ -311,7 +307,7 @@ def test_streaming_shard_manifest_checkpoint_exactly_once(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, n_chars long").parquet(
             src + "/b*"
         )
-        out = sharding.shard_manifest(stream, "doc_id", 4)
+        out = sharding.shard_manifest(stream)
         q = (
             out.writeStream.outputMode("complete")
             .format("memory")
@@ -335,7 +331,7 @@ def test_streaming_shard_manifest_checkpoint_exactly_once(spark, tmp_path):
     third = drain("shard_rerun_3")
     want = {
         r["shard"]: r.asDict()
-        for r in sharding.shard_manifest(docs, "doc_id", 4).collect()
+        for r in sharding.shard_manifest(docs).collect()
     }
     assert third == want
     assert sum(m["n_docs"] for m in third.values()) == 50
@@ -400,7 +396,7 @@ def test_shard_mixture_audit_conserves_and_bounds(spark):
     import aws_dla_kinesis_delivery_stream_example_spark.operators.sharding as sh
     from pyspark.sql import functions as F
 
-    assigned = sh.assign_shards(df, "doc_id", 8)
+    assigned = sh.assign_shards(df)
     cells = assigned.groupBy("shard", "source").agg(F.count(F.lit(1)).alias("n")).collect()
     assert sum(r["n"] for r in cells) == 400
     spec = all_specs()["q125_shard_mixture_audit"]

@@ -53,7 +53,7 @@ def _reference(rows, n, mod=None):
 
 def _spark_multiset(df, n, **kw):
     return Counter(
-        (r.doc, r.h) for r in _shingle_hash_rows(df, "id", "text", n, **kw).collect()
+        (r.doc, r.h) for r in _shingle_hash_rows(df, "id", n, **kw).collect()
     )
 
 
@@ -89,4 +89,4 @@ def test_shingle_hash_rows_is_distinct_per_row_not_per_id(spark):
     got = _spark_multiset(df, 4, id_type="string")
     assert got == _reference(rows, 4)
     assert max(got.values()) == 2
-    assert {r.doc for r in _shingle_hash_rows(df, "id", "text", 4, id_type="string").collect()} == {"web", "wiki"}
+    assert {r.doc for r in _shingle_hash_rows(df, "id", 4, id_type="string").collect()} == {"web", "wiki"}

@@ -13,31 +13,20 @@ from .conftest import SF_SMOKE
 
 
 def test_salted_agg_equals_plain(spark):
-    li = load_table(spark, SF_SMOKE, "lineitem")
+    orders = load_table(spark, SF_SMOKE, "orders")
     plain = {
-        r.l_returnflag: (r.n, round(r.s, 2), r.mn, r.mx)
-        for r in li.groupBy("l_returnflag")
+        r.o_orderstatus: (r.n, round(r.total_raw, 2), r.min_raw, r.max_raw)
+        for r in orders.groupBy("o_orderstatus")
         .agg(
-            F.count("*").alias("n"),
-            F.sum("l_quantity").alias("s"),
-            F.min("l_quantity").alias("mn"),
-            F.max("l_quantity").alias("mx"),
+            F.count("o_orderkey").alias("n"),
+            F.sum("o_totalprice").alias("total_raw"),
+            F.min("o_totalprice").alias("min_raw"),
+            F.max("o_totalprice").alias("max_raw"),
         )
         .collect()
     }
     salted = {
-        r.l_returnflag: (r.n, round(r.s, 2), r.mn, r.mx)
-        for r in salted_agg(
-            li,
-            keys=["l_returnflag"],
-            measures={
-                "n": ("count", "l_orderkey"),
-                "s": ("sum", "l_quantity"),
-                "mn": ("min", "l_quantity"),
-                "mx": ("max", "l_quantity"),
-            },
-        ).collect()
+        r.o_orderstatus: (r.n, round(r.total_raw, 2), r.min_raw, r.max_raw)
+        for r in salted_agg(orders).collect()
     }
     assert salted == plain
-
-

@@ -295,10 +295,8 @@ def test_streaming_hll_resume_from_checkpoint(spark, tmp_path):
         ).parquet(src + "/b*")
         regs = sketch.hll_registers(
             _shingle_hash_rows(
-                stream.select("source", "text"), "source", "text", 5, id_type="string"
-            ).withColumnRenamed("doc", "source"),
-            "source",
-            "h",
+                stream.select("source", "text"), "source", 5, id_type="string"
+            ).withColumnRenamed("doc", "source")
         )
         q = (
             regs.writeStream.outputMode("complete")
@@ -321,10 +319,8 @@ def test_streaming_hll_resume_from_checkpoint(spark, tmp_path):
     want = {
         (r[0], r[1]): r[2]
         for r in sketch.hll_registers(
-            _shingle_hash_rows(docs, "source", "text", 5, id_type="string")
-            .withColumnRenamed("doc", "source"),
-            "source",
-            "h",
+            _shingle_hash_rows(docs, "source", 5, id_type="string")
+            .withColumnRenamed("doc", "source")
         ).collect()
     }
     assert final == want and len(want) > 0
@@ -582,7 +578,7 @@ def test_streaming_skew_resume_from_checkpoint(spark, tmp_path):
             src + "/b*"
         )
         q = (
-            key_counts(stream, "user_id")
+            key_counts(stream)
             .writeStream.outputMode("complete")
             .format("memory")
             .queryName(qname)
@@ -597,7 +593,7 @@ def test_streaming_skew_resume_from_checkpoint(spark, tmp_path):
     assert partial, "first drain built no per-key counts"
     ev.filter("event_id % 2 = 1").coalesce(1).write.parquet(_os.path.join(src, "b2"))
     final = drain("skew_resume_2")
-    want = {r[0]: r[1] for r in key_counts(ev, "user_id").collect()}
+    want = {r[0]: r[1] for r in key_counts(ev).collect()}
     assert final == want and len(want) > 0
     # the resumed counts strictly extend the pre-crash ones: per-key
     # counters only grow across the resume, none reset

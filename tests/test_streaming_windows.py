@@ -73,7 +73,7 @@ def test_streaming_dedup_equals_batch(spark, events_parquet):
     streamed = SW.run_on_closed_input(
         spark,
         events_parquet,
-        lambda df: SW.streaming_dedup(df, ["user_id", "event_type"]).select(
+        lambda df: SW.streaming_dedup(df).select(
             "user_id", "event_type"
         ),
         "append",

@@ -24,7 +24,7 @@ def test_identical_docs_score_one(spark):
         ],
     )
     out = {(r["doc_a"], r["doc_b"]): r["cos_sim"] for r in
-           tfidf_cosine_pairs(docs, "doc_id", "text", threshold=0.9).collect()}
+           tfidf_cosine_pairs(docs, threshold=0.9).collect()}
     assert set(out) == {(1, 2)}
     assert abs(out[(1, 2)] - 1.0) < 1e-6
 
@@ -39,7 +39,7 @@ def test_hot_token_cap_prunes_stopword_only_overlap(spark):
     docs = _docs(spark, rows)
     pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in tfidf_cosine_pairs(docs, "doc_id", "text", threshold=0.01).collect()
+        for r in tfidf_cosine_pairs(docs, threshold=0.01).collect()
     }
     assert (1, 2) in pairs
     assert all(p == (1, 2) for p in pairs)
@@ -52,7 +52,7 @@ def test_relative_cap_floor(spark):
         spark,
         [(1, "alpha beta"), (2, "alpha gamma"), (3, "alpha delta")],
     )
-    toks = tfidf_postings(docs, "doc_id", "text", max_df_frac=0.1)
+    toks = tfidf_postings(docs, max_df_frac=0.1)
     assert toks.filter("tok = 'alpha'").count() == 3  # df=3 <= MAX_DF floor
 
 
@@ -67,7 +67,7 @@ def _df_corpus(spark, n_docs, tokens_by_df):
 
 
 def _surviving(docs, **kw):
-    return {r["tok"] for r in tfidf_postings(docs, "doc_id", "text", **kw).select("tok").distinct().collect()}
+    return {r["tok"] for r in tfidf_postings(docs, **kw).select("tok").distinct().collect()}
 
 
 def test_relative_cap_ceiling_clamps(spark):
@@ -102,7 +102,7 @@ def test_cap_composition_boundaries(spark):
 
 def test_weights_are_on_6dp_grid(spark):
     docs = _docs(spark, [(1, "a a b"), (2, "b c")])
-    ws = [r["w"] for r in tfidf_postings(docs, "doc_id", "text").collect()]
+    ws = [r["w"] for r in tfidf_postings(docs).collect()]
     assert all(abs(w - round(w, 6)) < 1e-12 for w in ws)
 
 
@@ -122,7 +122,7 @@ def test_bm25_tf_and_length_normalization(spark):
             (4, "nothing relevant here"),
         ],
     )
-    out = bm25_topk(docs, "doc_id", "text", ["spark"], top_k=10).collect()
+    out = bm25_topk(docs, ["spark"], top_k=10).collect()
     ranked = [r["doc"] for r in out]
     assert ranked == [1, 2, 3]  # tf dominance, then length normalization
     scores = {r["doc"]: r["bm25"] for r in out}
@@ -148,8 +148,8 @@ def test_staging_released_after_sweep(spark):
     # q49/q94) whose superseded checkpoint RDDs linger until the
     # driver GC triggers the ContextCleaner — out of scope here
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    tfidf.tfidf_cosine_pairs(docs, "doc_id", "text", threshold=0.5).count()
-    dedup.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).count()
+    tfidf.tfidf_cosine_pairs(docs, threshold=0.5).count()
+    dedup.shingle_jaccard_pairs(docs, threshold=0.5).count()
     during = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     assert len(during - before) > 0
     assert release_staging() >= 2
@@ -203,5 +203,5 @@ def test_milliweight_overflow_guard(spark):
         "doc_id long, text string",
     )
     with _pytest.raises(Exception, match="integer-cosine bound"):
-        tfidf.tfidf_cosine_pairs(docs, "doc_id", "text").count()
+        tfidf.tfidf_cosine_pairs(docs).count()
     release_staging()
