@@ -197,21 +197,22 @@ def tfidf_cosine_pairs(
 # Okapi BM25's standard term-saturation and length-normalization weights.
 _BM25_K1 = 1.2
 _BM25_B = 0.75
+# the catalog's fixed search (q82, and q84's lexical retriever)
+BM25_QUERY = ("spark", "stream", "join")
 
 
 def bm25_topk(
     docs: DataFrame,
-    query_tokens: list[str],
     top_k: int = 20,
     with_rank: bool = False,
 ) -> DataFrame:
-    """BM25 ranked retrieval for a fixed query over the corpus — the
+    """BM25 ranked retrieval for ``BM25_QUERY`` over the corpus — the
     search the reference delivers documents INTO OpenSearch for
     (kds_example/oss_utils.py:43-47 match_all / search helpers are the
     §2.8 query surface; this is the scored variant), computed
     Spark-side.
 
-    Scale shape: the ``isin(query_tokens)`` filter lands directly on
+    Scale shape: the ``isin(BM25_QUERY)`` filter lands directly on
     the exploded postings BEFORE any shuffle, so posting volume is
     bounded by the query vocabulary, not the corpus vocabulary; corpus
     stats (N, avgdl) are a broadcast 1-row aggregate; the final cut is
@@ -227,7 +228,7 @@ def bm25_topk(
     )
     posts = (
         base.select("doc", "dl", F.explode("tks").alias("tok"))
-        .filter(F.col("tok").isin(list(query_tokens)))
+        .filter(F.col("tok").isin(list(BM25_QUERY)))
         .groupBy("doc", "tok")
         .agg(F.count("*").cast("double").alias("tf"), F.first("dl").alias("dl"))
     )

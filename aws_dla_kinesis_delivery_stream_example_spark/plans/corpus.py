@@ -302,9 +302,6 @@ def q81_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BM25_QUERY = ("spark", "stream", "join")
-
-
 @query(
     "q82_bm25_search",
     oracle="""
@@ -365,7 +362,7 @@ def q82_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from ..operators.tfidf import bm25_topk
 
-    return bm25_topk(docs, list(_BM25_QUERY)).select(
+    return bm25_topk(docs).select(
         F.col("doc").alias("doc_id"), "bm25"
     )
 
@@ -472,7 +469,7 @@ def q84_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    bmr = bm25_topk(docs, list(_BM25_QUERY), top_k=50, with_rank=True).select(
+    bmr = bm25_topk(docs, top_k=50, with_rank=True).select(
         F.col("doc").alias("id"), F.col("rank").alias("bm25_rank")
     )
     cosr = brute_force_topk(
@@ -523,10 +520,12 @@ def q88_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory listing — at 100 TB the difference between scanning 3
     days and listing 10 years. Pushdown (row-group skip) still applies
     within the surviving partitions; the agg is map-side combined on
-    the small (date, type) key space."""
-    from ..sources.partitioned import read_partitioned_events
+    the small (date, type) key space. The filter is on the partition
+    column, so it compiles to PartitionFilters: directories outside
+    the range are never listed, let alone read."""
+    from ..sources.partitioned import materialize_partitioned_events
 
-    ev = read_partitioned_events(spark, sf_dir).filter(
+    ev = spark.read.parquet(materialize_partitioned_events(spark, sf_dir)).filter(
         F.col("event_date").between(*_Q88_DATES)
     )
     return (

@@ -7,9 +7,9 @@ file; partition pruning never lists the file at all).
 
 This module materializes that layout from the flat test table
 (idempotently, keyed by source mtime so a regenerated testdata set
-invalidates the copy) and exposes the pruned reader.
-tests/test_partition_pruning.py asserts ``PartitionFilters`` actually
-reaches the scan.
+invalidates the copy); q88 reads it back with a filter on
+``event_date``, and tests/test_plan_shapes.py asserts that the filter
+reaches q88's scan as ``PartitionFilters``.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ import shutil
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .tables import load_table
@@ -87,10 +87,3 @@ def materialize_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
         if os.path.abspath(d) != os.path.abspath(path):
             shutil.rmtree(d, ignore_errors=True)
     return path
-
-
-def read_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events lake partitioned by ``event_date``. A filter on the
-    partition column compiles to PartitionFilters — directories outside
-    its range are never listed, let alone read."""
-    return spark.read.parquet(materialize_partitioned_events(spark, sf_dir))

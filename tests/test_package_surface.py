@@ -297,6 +297,16 @@ class _Constants:
                 return other[node.attr]
         if isinstance(node, ast.BinOp) and type(node.op) in _FOLDABLE:
             return _FOLDABLE[type(node.op)](self.fold(node.left, module), self.fold(node.right, module))
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) in _CONVERSIONS
+            and len(node.args) == 1
+            and not node.keywords
+        ):
+            try:
+                return _CONVERSIONS[node.func.id](self.fold(node.args[0], module))
+            except TypeError as e:  # list(8)
+                raise ValueError(node.func.id) from e
         return ast.literal_eval(node)
 
     def key(self, node: ast.AST, module: str):
@@ -327,6 +337,9 @@ _FOLDABLE = {
     ast.Pow: operator.pow,
     ast.LShift: operator.lshift,
 }
+
+# ``list(CONST)`` is as static as ``CONST``
+_CONVERSIONS = {"list": list, "tuple": tuple}
 
 
 def _parameters(fn: ast.FunctionDef | ast.AsyncFunctionDef, skip: int = 0, required: bool = False):
@@ -512,6 +525,7 @@ _SYNTHETIC = {
         from pyspark.sql import DataFrame
 
         WIDTH = 8
+        TERMS = ("a", "b")
 
         def dedup(df: DataFrame, id_col: str, width: int) -> DataFrame:
             return df.select(id_col).limit(width)
@@ -604,3 +618,18 @@ def test_constant_imported_inside_a_function_folds_to_its_value(tmp_path):
     sources = _synthetic(tmp_path)
     expr = ast.parse("_ops.WIDTH", mode="eval").body
     assert _Constants(sources).key(expr, _module_name(f"{PKG.name}/plans.py")) == ("number", 8)
+
+
+def test_list_of_a_constant_folds_like_the_constant(tmp_path):
+    """``list(CONST)`` passes the same value at every call, so it keys
+    like the literal list; any other call stays computed."""
+    constants = _Constants(_synthetic(tmp_path))
+    module = _module_name(f"{PKG.name}/plans.py")
+
+    def key(src: str):
+        return constants.key(ast.parse(src, mode="eval").body, module)
+
+    assert key("list(_ops.TERMS)") == key("['a', 'b']") == ("list", "['a', 'b']")
+    assert key("tuple(_ops.TERMS)") == key("('a', 'b')") == ("tuple", ("a", "b"))
+    assert key("sorted(_ops.TERMS)") is None
+    assert key("list(_ops.WIDTH)") is None

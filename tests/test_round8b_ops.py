@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 import math
 import random
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -95,11 +96,16 @@ def test_weighted_sample_matches_single_stage_brute_force(spark):
     """The two-stage (salted) top-k must equal the single-stage
     Efraimidis-Spirakis sample computed brute-force in Python over the
     identical deterministic keys — exactness of the salt cut is the
-    union-bound argument the docstring makes; this pins it."""
+    union-bound argument the docstring makes; this pins it. Every
+    (stratum, salt) cell holds more than WEIGHTED_K rows, so the stage-1
+    cut drops rows in every cell."""
     rng = random.Random(8)
     rows = [
-        (f"src{r % 3}", r, rng.randint(1, 1000)) for r in range(200)
+        (f"src{r % 3}", r, rng.randint(1, 1000)) for r in range(2000)
     ]
+    cells = Counter((src, doc % sampling._N_SALT) for (src, doc, _) in rows)
+    assert len(cells) == 3 * sampling._N_SALT
+    assert min(cells.values()) > sampling.WEIGHTED_K
     df = spark.createDataFrame(rows, "source string, doc_id long, w long")
     got = [
         (r["source"], r["rnk"], r["doc_id"], r["w"])

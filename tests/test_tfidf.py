@@ -109,6 +109,7 @@ def test_weights_are_on_6dp_grid(spark):
 def test_bm25_tf_and_length_normalization(spark):
     from aws_dla_kinesis_delivery_stream_example_spark.operators.tfidf import bm25_topk
 
+    # "spark" is the only BM25_QUERY term these documents contain
     docs = _docs(
         spark,
         [
@@ -122,7 +123,7 @@ def test_bm25_tf_and_length_normalization(spark):
             (4, "nothing relevant here"),
         ],
     )
-    out = bm25_topk(docs, ["spark"], top_k=10).collect()
+    out = bm25_topk(docs, top_k=10).collect()
     ranked = [r["doc"] for r in out]
     assert ranked == [1, 2, 3]  # tf dominance, then length normalization
     scores = {r["doc"]: r["bm25"] for r in out}
