@@ -3,18 +3,19 @@ Structured Streaming path (readStream -> windowed agg / dedup -> memory
 sink, availableNow) over the closed events table, so the t2 gate
 hash-checks actual streaming execution against the batch-SQL oracle —
 not just the batch twin (FIXTURES.md: 'streaming queries are verified
-on closed inputs against the equivalent batch query'). Every drain goes
-through the one closed-input harness, ``streaming.windows.run_on_closed_input``.
+on closed inputs against the equivalent batch query'). Each drain
+builds its stream on the table reader (``sources.tables.stream_table``,
+the streaming face of ``load_table``) and drains it through the one
+closed-input harness, ``streaming.windows.run_on_closed_input``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sketch as _SK
+from ..sources.tables import load_table, stream_table
 from ..streaming import windows as SW
 from .catalog import query
 from .curation6 import SHARD_ORACLE as _SHARD_ORACLE
@@ -31,12 +32,6 @@ from .curation19 import LINEDEDUP_COUNTER_ORACLE as _LINEDEDUP_COUNTER_ORACLE
 from .curation20 import PPL_ORACLE as _PPL_ORACLE
 from .curation21 import BIGRAM_ORACLE as _BIGRAM_ORACLE
 from .curation22 import LLR_ORACLE as _LLR_ORACLE
-
-
-def _stream_events_closed(spark: SparkSession, sf_dir: str, op, output_mode: str) -> DataFrame:
-    return SW.run_on_closed_input(
-        spark, os.path.join(sf_dir, "events.parquet"), op, output_mode, normalize_ts=True
-    )
 
 
 @query(
@@ -56,7 +51,9 @@ def _stream_events_closed(spark: SparkSession, sf_dir: str, op, output_mode: str
     tags=("streaming", "window"),
 )
 def q50_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(spark, sf_dir, SW.tumbling_counts, "complete")
+    out = SW.run_on_closed_input(
+        SW.tumbling_counts(stream_table(spark, sf_dir, "events")), "complete"
+    )
     return out.orderBy("window_start", "event_type")
 
 
@@ -80,7 +77,9 @@ def q50_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window"),
 )
 def q56_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(spark, sf_dir, SW.sliding_counts, "complete")
+    out = SW.run_on_closed_input(
+        SW.sliding_counts(stream_table(spark, sf_dir, "events")), "complete"
+    )
     return out.orderBy("window_start")
 
 
@@ -120,7 +119,9 @@ def q56_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "session"),
 )
 def q57_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(spark, sf_dir, SW.session_counts, "complete")
+    out = SW.run_on_closed_input(
+        SW.session_counts(stream_table(spark, sf_dir, "events")), "complete"
+    )
     return (
         out.groupBy("user_id")
         .agg(
@@ -145,10 +146,8 @@ def q57_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup"),
 )
 def q51_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(
-        spark,
-        sf_dir,
-        lambda df: SW.streaming_dedup(df).select(
+    out = SW.run_on_closed_input(
+        SW.streaming_dedup(stream_table(spark, sf_dir, "events")).select(
             "user_id", "event_type"
         ),
         "append",
@@ -179,23 +178,13 @@ def q51_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join"),
 )
 def q73_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _stream_events_closed(spark, sf_dir, SW.interval_join_pairs, "append")
+    out = SW.run_on_closed_input(
+        SW.interval_join_pairs(stream_table(spark, sf_dir, "events")), "append"
+    )
     return (
         out.groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
         .orderBy("user_id")
-    )
-
-
-def _stream_documents_closed(
-    spark: SparkSession,
-    sf_dir: str,
-    op,
-    output_mode: str,
-    partitions: str | None = None,
-) -> DataFrame:
-    return SW.run_on_closed_input(
-        spark, os.path.join(sf_dir, "documents.parquet"), op, output_mode, partitions=partitions
     )
 
 
@@ -226,23 +215,16 @@ def q83_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-byte digests, never document bodies; per-source counts are a
     tiny final agg. The per-(source, digest) dedup key makes the count
     survivor-independent, so the streaming answer is deterministic."""
-    from pyspark.sql import functions as FF
-
-    def op(df):
-        ar = FF.length(FF.regexp_replace("text", "[^A-Za-z]", "")).cast("double") / FF.length(
-            "text"
-        ).cast("double")
-        return (
-            df.filter(
-                (FF.col("lang") == "en")
-                & FF.col("n_chars").between(100, 5000)
-                & (ar >= 0.6)
-            )
-            .select("source", FF.md5("text").alias("digest"))
-            .dropDuplicates(["source", "digest"])
-        )
-
-    out = _stream_documents_closed(spark, sf_dir, op, "append")
+    ar = F.length(F.regexp_replace("text", "[^A-Za-z]", "")).cast("double") / F.length(
+        "text"
+    ).cast("double")
+    kept = (
+        stream_table(spark, sf_dir, "documents")
+        .filter((F.col("lang") == "en") & F.col("n_chars").between(100, 5000) & (ar >= 0.6))
+        .select("source", F.md5("text").alias("digest"))
+        .dropDuplicates(["source", "digest"])
+    )
+    out = SW.run_on_closed_input(kept, "append")
     return (
         out.groupBy("source")
         .agg(F.count(F.lit(1)).cast("long").alias("n_kept"))
@@ -277,7 +259,9 @@ def q91_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from ..streaming.stateful import running_user_totals
 
-    out = _stream_events_closed(spark, sf_dir, running_user_totals, "update")
+    out = SW.run_on_closed_input(
+        running_user_totals(stream_table(spark, sf_dir, "events")), "update"
+    )
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         out.withColumn("rn", F.row_number().over(w))
@@ -333,16 +317,13 @@ def q108_streaming_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     one availableNow pass."""
     from ..streaming.stateful import streaming_rolling_zscore
 
-    def op(stream):
-        base = stream.select(
-            "event_id",
-            "user_id",
-            "ts",
-            F.round(F.col("value") * 1000, 0).cast("long").alias("v_milli"),
-        )
-        return streaming_rolling_zscore(base)
-
-    out = _stream_events_closed(spark, sf_dir, op, "append")
+    base = stream_table(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.round(F.col("value") * 1000, 0).cast("long").alias("v_milli"),
+    )
+    out = SW.run_on_closed_input(streaming_rolling_zscore(base), "append")
     return (
         out.select("event_id", "user_id", "v_milli", F.round("z", 3).alias("z"))
         .orderBy("event_id")
@@ -403,15 +384,13 @@ def q113_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sketch.countmin_probe, shared with q112) — a drift anywhere in
     the streaming build (hash plumbing, partial-agg merge, complete-
     mode re-emission) lands in the hash gate, not just a row count."""
-    from ..operators import sketch as _sketch
-    from ..sources.tables import load_table as _load
-
-    def op(df):
-        return _sketch.countmin_counters(df)
-
-    grid = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
-    top = _sketch.exact_top_tokens(_load(spark, sf_dir, "documents"))
-    return _sketch.countmin_probe(grid, top)
+    grid = SW.run_on_closed_input(
+        _SK.countmin_counters(stream_table(spark, sf_dir, "documents")),
+        "complete",
+        partitions="2",
+    )
+    top = _SK.exact_top_tokens(load_table(spark, sf_dir, "documents"))
+    return _SK.countmin_probe(grid, top)
 
 
 @query(
@@ -440,10 +419,9 @@ def q121_streaming_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame
     dedup (q51/q83), not key coordination."""
     from ..operators import sharding as _sharding
 
-    def op(df):
-        return _sharding.shard_manifest(df)
-
-    return _stream_documents_closed(spark, sf_dir, op, "complete").orderBy("shard")
+    return SW.run_on_closed_input(
+        _sharding.shard_manifest(stream_table(spark, sf_dir, "documents")), "complete"
+    ).orderBy("shard")
 
 
 
@@ -473,11 +451,11 @@ def q129_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import _shingle_hash_rows as _shr
     from .curation9 import _Q130_N, _hll_output
 
-    def op(df):
-        rows = _shr(df.select("source", "text"), "source", _Q130_N, id_type="string")
-        return _SK.hll_registers(rows.withColumnRenamed("doc", "source"))
-
-    regs = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
+    docs = stream_table(spark, sf_dir, "documents")
+    rows = _shr(docs.select("source", "text"), "source", _Q130_N, id_type="string")
+    regs = SW.run_on_closed_input(
+        _SK.hll_registers(rows.withColumnRenamed("doc", "source")), "complete", partitions="2"
+    )
     return _hll_output(spark, sf_dir, regs)
 
 
@@ -508,7 +486,9 @@ def q134_streaming_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram-sized state."""
     from .curation10 import _hist_output, hist_documents
 
-    hist = _stream_documents_closed(spark, sf_dir, hist_documents, "complete", partitions="2")
+    hist = SW.run_on_closed_input(
+        hist_documents(stream_table(spark, sf_dir, "documents")), "complete", partitions="2"
+    )
     return _hist_output(spark, sf_dir, hist)
 
 
@@ -551,12 +531,10 @@ def q136_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bench_h, bits = bloom_bits(spark, sf_dir)
 
-    def op(df):
-        return bloom_counters(
-            bloom_flag_probes(_bloom_probe(df), bench_h, bits)
-        )
-
-    agg = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
+    probes = _bloom_probe(stream_table(spark, sf_dir, "documents"))
+    agg = SW.run_on_closed_input(
+        bloom_counters(bloom_flag_probes(probes, bench_h, bits)), "complete", partitions="2"
+    )
     return bloom_finalize(agg)
 
 
@@ -595,10 +573,11 @@ def q141_streaming_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the same frozen state."""
     from .curation12 import _dsir_bucket_rows, _dsir_output, dsir_distribution
 
-    def op(df):
-        return dsir_distribution(_dsir_bucket_rows(df))
-
-    dist = _stream_documents_closed(spark, sf_dir, op, "complete", partitions="2")
+    dist = SW.run_on_closed_input(
+        dsir_distribution(_dsir_bucket_rows(stream_table(spark, sf_dir, "documents"))),
+        "complete",
+        partitions="2",
+    )
     return _dsir_output(spark, sf_dir, dist)
 
 
@@ -633,11 +612,10 @@ def q144_streaming_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkable row-for-row."""
     from .curation13 import _pii_augment, pii_counters, pii_finalize
 
-    def op(df):
-        return pii_counters(_pii_augment(df))
-
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        pii_counters(_pii_augment(stream_table(spark, sf_dir, "documents"))),
+        "complete",
+        partitions="2",
     )
     return pii_finalize(state)
 
@@ -675,10 +653,9 @@ def q145_streaming_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs once on the drained |keys|-row state."""
     from ..operators import skew as _skew
 
-    def op(df):
-        return _skew.key_counts(df)
-
-    state = _stream_events_closed(spark, sf_dir, op, "complete")
+    state = SW.run_on_closed_input(
+        _skew.key_counts(stream_table(spark, sf_dir, "events")), "complete"
+    )
     return _skew.skew_rollup(state).orderBy("bucket")
 
 
@@ -712,8 +689,8 @@ def q150_streaming_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger."""
     from .curation16 import attrition_counters, attrition_finalize
 
-    state = _stream_documents_closed(
-        spark, sf_dir, attrition_counters, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        attrition_counters(stream_table(spark, sf_dir, "documents")), "complete", partitions="2"
     )
     return attrition_finalize(state)
 
@@ -749,11 +726,10 @@ def q152_streaming_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     window run once on the drained counter table."""
     from .curation17 import _domain_augment, domain_counters, domain_finalize
 
-    def op(df):
-        return domain_counters(_domain_augment(df))
-
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        domain_counters(_domain_augment(stream_table(spark, sf_dir, "documents"))),
+        "complete",
+        partitions="2",
     )
     return domain_finalize(state)
 
@@ -787,11 +763,10 @@ def q154_streaming_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection runs once on the drained counter table."""
     from .curation18 import _mojibake_augment, mojibake_counters, mojibake_finalize
 
-    def op(df):
-        return mojibake_counters(_mojibake_augment(df))
-
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        mojibake_counters(_mojibake_augment(stream_table(spark, sf_dir, "documents"))),
+        "complete",
+        partitions="2",
     )
     return mojibake_finalize(state)
 
@@ -840,11 +815,10 @@ def q156_streaming_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the q152 drained-memory-table discipline)."""
     from .curation19 import _line_augment, line_counters, line_finalize
 
-    def op(df):
-        return line_counters(_line_augment(df))
-
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        line_counters(_line_augment(stream_table(spark, sf_dir, "documents"))),
+        "complete",
+        partitions="2",
     )
     return line_finalize(state)
 
@@ -891,7 +865,6 @@ def q158_streaming_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained model (CCNet trains on Wikipedia, not the live crawl);
     a library caller should hand surprisal_model() a separate
     reference frame, never the stream's own source."""
-    from ..sources.tables import load_table
     from .curation20 import (
         PPL_REF_SOURCE,
         _ppl_augment,
@@ -905,11 +878,10 @@ def q158_streaming_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vocab, n_ref, g = surprisal_model(ref)
 
-    def op(df):
-        return ppl_counters(_ppl_augment(df), vocab, n_ref)
-
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        ppl_counters(_ppl_augment(stream_table(spark, sf_dir, "documents")), vocab, n_ref),
+        "complete",
+        partitions="2",
     )
     return ppl_finalize(state, g)
 
@@ -953,7 +925,6 @@ def q160_streaming_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     trains on the same closed table it streams ONLY because the
     oracle gate needs a deterministic model — production hands
     bigram_model an independently trained reference."""
-    from ..sources.tables import load_table
     from .curation20 import PPL_REF_SOURCE, _ppl_augment, ppl_finalize
     from .curation21 import bigram_counters, bigram_model
 
@@ -962,11 +933,9 @@ def q160_streaming_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs, ctx, vocab, n_ref, g2 = bigram_model(ref)
 
-    def op(df):
-        return bigram_counters(_ppl_augment(df), pairs, ctx, vocab, n_ref)
-
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    docs = _ppl_augment(stream_table(spark, sf_dir, "documents"))
+    state = SW.run_on_closed_input(
+        bigram_counters(docs, pairs, ctx, vocab, n_ref), "complete", partitions="2"
     )
     return ppl_finalize(state, g2)
 
@@ -1008,7 +977,6 @@ def q162_streaming_llr_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     same closed table it streams ONLY because the oracle gate needs
     a deterministic model — production hands llr_classifier
     independently curated classes."""
-    from ..sources.tables import load_table
     from .curation22 import _llr_augment, llr_classifier, llr_counters, llr_finalize
     from .curation20 import PPL_REF_SOURCE
 
@@ -1017,10 +985,9 @@ def q162_streaming_llr_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     neg = aug.filter(F.col("source") != PPL_REF_SOURCE)
     weights, w_oov, theta2, _shift = llr_classifier(pos, neg)
 
-    def op(df):
-        return llr_counters(_llr_augment(df), weights, w_oov)
-
-    state = _stream_documents_closed(
-        spark, sf_dir, op, "complete", partitions="2"
+    state = SW.run_on_closed_input(
+        llr_counters(_llr_augment(stream_table(spark, sf_dir, "documents")), weights, w_oov),
+        "complete",
+        partitions="2",
     )
     return llr_finalize(state, theta2)

@@ -27,6 +27,8 @@ cluster-manager config, not code.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -43,6 +45,23 @@ def stage_pool_confs(cpus: int) -> dict[str, str]:
     """The three stage-pool caps for a host of ``cpus`` cores: the core
     count, clamped to what Spark accepts."""
     return {k: str(min(cpus, top)) for k, top in _STAGE_POOL_MAX.items()}
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the block, then restore each
+    key's prior value, or unset a key the caller had not set."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

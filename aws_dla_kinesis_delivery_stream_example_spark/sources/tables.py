@@ -1,25 +1,37 @@
-"""Parquet table readers for the driver-generated test tables.
+"""Readers for the driver-generated catalog tables, batch or stream.
 
-Scans carry an EXPLICIT schema read driver-side from the parquet
-footer (:func:`parquet_schema`): ``spark.read.parquet`` without one
-launches a 1-task schema-inference JOB per call (~0.15-0.2 s on this
-host), which at 1-3 ``load_table`` calls per catalog query is pure
-fixed overhead on every single query — and at 100 TB it is a wasted
-cluster round-trip per scan for metadata one local footer read
-already has (guide §6: metadata work belongs on the driver, and §1.2:
-don't compute things you throw away).  The explicit schema changes
-NOTHING about the scan: Catalyst keeps predicate pushdown / column
-pruning / partition pruning, and tests/test_round18_schema.py pins
-byte-for-byte equality between :func:`parquet_schema` and Spark's own
-inference for every table at every SF.  Never cache data here — at
-100 TB the tables don't fit; rely on pushdown + pruning instead.
+Every read of a catalog table goes through one body, with
+``load_table`` as its batch face (``spark.read``) and ``stream_table``
+as its streaming face (``spark.readStream``); a query keeps its plan
+and only its source changes. That body owns three rules:
+
+- The reader schema comes from the parquet footer
+  (:func:`parquet_schema`), read driver-side. Without it,
+  ``spark.read.parquet`` launches a 1-task schema-inference job per
+  call, fixed overhead on every query. The explicit schema changes
+  nothing about the scan: Catalyst keeps predicate pushdown, column
+  pruning and partition pruning, and tests/test_round18_schema.py pins
+  equality with Spark's own inference for every table at every SF.
+- The events table's ``ts`` is event time: the body sets the two confs
+  its encodings need and normalizes it (:func:`normalize_event_time`),
+  so every consumer sees a UTC ``TimestampType`` column. Operators
+  downstream take that column as given.
+- A stream reads its table through a glob. Given a plain path, the
+  streaming file source takes it as its partition base path, which
+  must be a directory; the glob admits a single-file table and still
+  lists a directory's files. A batch read keeps the plain path: on a
+  glob, Spark's metadata-log probe logs a warning with a stack trace
+  on every read.
+
+Never cache data here; rely on pushdown and pruning instead.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.streaming import DataStreamReader
 
 TABLES = (
     "region",
@@ -171,7 +183,11 @@ def parquet_schema(spark: SparkSession, path: str):
         return spark.read.parquet(path).schema
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _read(
+    spark: SparkSession, reader: DataFrameReader | DataStreamReader, sf_dir: str, name: str
+) -> DataFrame:
+    """Table ``name`` under ``sf_dir`` through ``reader``
+    (``spark.read`` or ``spark.readStream``)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
@@ -179,14 +195,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # if events.ts is TIMESTAMP(NANOS) the reader rejects it unless
         # nanosAsLong is set; and timestamp *rendering* must be UTC for
         # oracle hash parity with DuckDB's naive-UTC timestamps. Both
-        # are runtime-settable SQL confs.
+        # are runtime-settable SQL confs, and both outlive the call.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(parquet_schema(spark, src)).parquet(src)
+    path = src + "*" if isinstance(reader, DataStreamReader) else src
+    df = reader.schema(parquet_schema(spark, src)).parquet(path)
     if name == "events":
         df = normalize_event_time(df)
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` as a batch frame."""
+    return _read(spark, spark.read, sf_dir, name)
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` as a streaming frame over its closed files: the
+    same columns and types as :func:`load_table`."""
+    return _read(spark, spark.readStream, sf_dir, name)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -58,14 +58,14 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager, nullcontext
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import serde
+from ..session import scoped_confs
 from .doc_sink import DocumentSink, ParquetDocumentSink, write_flush
 from .transform import STATUS_FAILED, STATUS_OK, apply_transform
 
@@ -79,26 +79,11 @@ PREFIX_FAILED = "04-failed"
 # K8: session conf holding how many StreamingQueryProgress entries a
 # query keeps in recentProgress. Spark keeps 100 by default; a drain with
 # more micro-batches would drop the head of the progress log, so a
-# drain runs under ``progress_retention``.
+# drain runs under ``scoped_confs(spark, PROGRESS_RETENTION)``. Spark
+# reads the conf on every progress update, so a drain must terminate
+# inside the block.
 PROGRESS_RETENTION_KEY = "spark.sql.streaming.numRecentProgressUpdates"
-PROGRESS_RETENTION = 10_000
-
-
-@contextmanager
-def progress_retention(spark: SparkSession) -> Iterator[None]:
-    """Raise the session's progress retention to ``PROGRESS_RETENTION``
-    for the block, then restore the caller's value (or unset it). Spark
-    reads the conf on every progress update, so a drain must terminate
-    inside the block."""
-    prior = spark.conf.get(PROGRESS_RETENTION_KEY, None)
-    spark.conf.set(PROGRESS_RETENTION_KEY, str(PROGRESS_RETENTION))
-    try:
-        yield
-    finally:
-        if prior is None:
-            spark.conf.unset(PROGRESS_RETENTION_KEY)
-        else:
-            spark.conf.set(PROGRESS_RETENTION_KEY, prior)
+PROGRESS_RETENTION = {PROGRESS_RETENTION_KEY: "10000"}
 
 
 @dataclass
@@ -282,8 +267,8 @@ class DeliveryPipeline:
         """Start the streaming query. With trigger_seconds=None uses
         availableNow (drain the source and stop — the test/bench mode)
         and, if ``await_termination``, waits for it via ``finish``, all
-        under ``progress_retention``. A query that is not waited on runs
-        under the caller's retention."""
+        with ``PROGRESS_RETENTION`` scoped to the block. A query that is
+        not waited on runs under the caller's retention."""
         reader = self.spark.readStream.schema(serde.BANK_ACCOUNT_SCHEMA)
         if self.max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
@@ -300,7 +285,7 @@ class DeliveryPipeline:
         else:
             writer = writer.trigger(processingTime=f"{self.trigger_seconds} seconds")
         drain = await_termination and self.trigger_seconds is None
-        with progress_retention(self.spark) if drain else nullcontext():
+        with scoped_confs(self.spark, PROGRESS_RETENTION if drain else {}):
             query = writer.start()
             self.last_query = query
             if drain:
@@ -311,7 +296,8 @@ class DeliveryPipeline:
         """Wait for a started drain query to terminate, then append its
         progress to the ``_progress`` log. Raises the query's failure
         (nothing is logged then). The caller runs the query's start and
-        its ``finish`` inside one ``progress_retention`` block."""
+        its ``finish`` inside one ``scoped_confs(spark,
+        PROGRESS_RETENTION)`` block."""
         query.awaitTermination()
         self._log_progress(query)
 

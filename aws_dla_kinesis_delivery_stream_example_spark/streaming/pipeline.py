@@ -15,7 +15,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from .delivery import DeliveryPipeline, progress_retention
+from ..session import scoped_confs
+from .delivery import PROGRESS_RETENTION, DeliveryPipeline
 
 
 @dataclass
@@ -36,14 +37,14 @@ class DualDelivery:
         failed query does not stop the other from draining: the first
         failure is re-raised once both have terminated. Both starts, both
         waits and the stop-on-failure cleanup run inside one
-        ``progress_retention`` block, so the caller's retention is back
-        only after no drain is left running. Continuous-mode pipelines
-        are started and left running under the caller's retention, as
-        ``DeliveryPipeline.run`` does."""
+        ``scoped_confs(spark, PROGRESS_RETENTION)`` block, so the
+        caller's retention is back only after no drain is left running.
+        Continuous-mode pipelines are started and left running under the
+        caller's retention, as ``DeliveryPipeline.run`` does."""
         pipes = (self.to_s3, self.to_docs)
         drains = [p for p in pipes if p.trigger_seconds is None]
         failures = []
-        with progress_retention(self.to_s3.spark):
+        with scoped_confs(self.to_s3.spark, PROGRESS_RETENTION):
             try:
                 for pipe in pipes:
                     pipe.run(await_termination=False)

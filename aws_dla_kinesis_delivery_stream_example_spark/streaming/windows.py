@@ -2,10 +2,15 @@
 
 The reference has only processing-time buffers; event-time windows,
 watermarks, session windows and streaming dedup are the engine's
-generalization. Every function here takes a (possibly streaming)
-DataFrame with a ``ts`` timestamp column and returns the transformed
-(streaming) DataFrame — the SAME logical plan serves batch and stream,
-which is what the closed-input stream==batch tests assert.
+generalization. Every operator here takes a batch or streaming
+DataFrame whose ``ts`` is already a UTC ``TimestampType`` column (the
+table reader, ``sources.tables.load_table`` / ``stream_table``, owns
+that decode) and returns the transformed frame: the SAME logical plan
+serves batch and stream, which is what the closed-input stream==batch
+tests assert.
+
+``run_on_closed_input`` drains a streaming frame that is already built
+and returns its final result as a batch frame.
 """
 
 from __future__ import annotations
@@ -15,11 +20,11 @@ import shutil
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scoped_confs
 from ..shipping import python_passes
-from ..sources.tables import normalize_event_time, parquet_schema
 
 
 # The windows are part of each declared query, not arguments: hourly
@@ -30,7 +35,6 @@ WATERMARK = "2 hours"
 
 
 def tumbling_counts(df: DataFrame) -> DataFrame:
-    df = normalize_event_time(df)
     src = df.withWatermark("ts", WATERMARK) if df.isStreaming else df
     return (
         src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -45,7 +49,6 @@ def tumbling_counts(df: DataFrame) -> DataFrame:
 
 
 def sliding_counts(df: DataFrame) -> DataFrame:
-    df = normalize_event_time(df)
     src = df.withWatermark("ts", WATERMARK) if df.isStreaming else df
     return (
         src.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
@@ -55,7 +58,6 @@ def sliding_counts(df: DataFrame) -> DataFrame:
 
 
 def session_counts(df: DataFrame) -> DataFrame:
-    df = normalize_event_time(df)
     src = df.withWatermark("ts", WATERMARK) if df.isStreaming else df
     return (
         src.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -75,7 +77,6 @@ def interval_join_pairs(df: DataFrame) -> DataFrame:
     found, so an availableNow drain over a closed input produces the
     complete pair set. The same plan runs in batch (the oracle path).
     """
-    df = normalize_event_time(df)
     left = df.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("l_user"), F.col("ts").alias("l_ts")
     )
@@ -98,7 +99,6 @@ def streaming_dedup(df: DataFrame) -> DataFrame:
     """One row per (user_id, event_type): within the watermark on a
     stream, exactly on a batch frame."""
     keys = ["user_id", "event_type"]
-    df = normalize_event_time(df)
     if df.isStreaming:
         return df.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(keys)
     return df.dropDuplicates(keys)
@@ -122,25 +122,20 @@ _log = logging.getLogger(__name__)
 
 
 def run_on_closed_input(
-    spark: SparkSession,
-    parquet_path: str,
-    op,
+    result: DataFrame,
     output_mode: str,
     *,
-    normalize_ts: bool = False,
     partitions: str | None = None,
 ) -> DataFrame:
-    """Replay a *closed* parquet input (a file or a directory) through
-    Structured Streaming and return the final result as a batch
-    DataFrame (memory sink + availableNow). This is the FIXTURES.md
-    rule: streaming answers are verified against the batch answer on
-    the same closed input.
+    """Drain the streaming frame ``result`` over its closed input and
+    return the final result as a batch DataFrame (memory sink +
+    availableNow). This is the FIXTURES.md rule: streaming answers are
+    verified against the batch answer on the same closed input.
 
-    Self-sufficient under any session: the reader schema comes from the
-    parquet footer (``parquet_schema``), ``nanosAsLong`` is set for
-    TIMESTAMP(NANOS) inputs, the session timezone is pinned to UTC so
-    window-start strings render identically to the oracle's, and
-    ``normalize_ts`` normalizes the ``ts`` event-time encodings.
+    The harness drains; it does not read. ``result`` is built on a
+    table reader (``sources.tables.stream_table``), which owns the
+    reader schema, the events confs and the ``ts`` decode, and the
+    drain runs on ``result``'s session.
 
     The shuffle width (``partitions``, default "8") and checkpoint
     checksums (off) are scoped to the drain and restored after it. The
@@ -151,68 +146,47 @@ def run_on_closed_input(
 
     On success or failure the memory-sink view is dropped (the returned
     frame already holds the sink's plan) and the checkpoint directory
-    is removed. Two settings DO outlive the call, as they do after
-    ``sources.tables.load_table``: ``spark.sql.session.timeZone`` stays
-    UTC and ``spark.sql.legacy.parquet.nanosAsLong`` stays true.
-    One INFO record on this module's logger carries the provider the
-    drain ran on, the final ``lastProgress`` (incl. ``stateOperators``),
-    the state-store commit time summed over every micro-batch
-    (``state_commit_ms``) and the Python passes of the last
+    is removed. One INFO record on this module's logger carries the
+    provider the drain ran on, the final ``lastProgress`` (incl.
+    ``stateOperators``), the state-store commit time summed over every
+    micro-batch (``state_commit_ms``) and the Python passes of the last
     micro-batch's executed plan (``shipping.python_passes``).
     """
+    spark = result.sparkSession
     tmp = tempfile.mkdtemp(prefix="stream_q_")
     name = f"sq_{uuid.uuid4().hex[:10]}"
-    scoped = {
-        "spark.sql.shuffle.partitions": partitions or "8",
-        _CHECKSUM_CONF: "false",
-    }
-    prev = {k: spark.conf.get(k, None) for k in scoped}
+    scoped = {"spark.sql.shuffle.partitions": partitions or "8", _CHECKSUM_CONF: "false"}
     try:
-        for k, v in scoped.items():
-            spark.conf.set(k, v)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        schema = parquet_schema(spark, parquet_path)
-        # The file source wants a directory or a glob: the glob admits a
-        # single-file table and still lists a directory's files.
-        stream = spark.readStream.schema(schema).parquet(parquet_path + "*")
-        if normalize_ts:
-            stream = normalize_event_time(stream)
-        q = (
-            op(stream)
-            .writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # The Python passes are read off the last micro-batch's plan now:
-        # the returned frame is the sink's table, not the drain.
-        last = q._jsq.streamingQuery().lastExecution()
-        _log.info(
-            "closed-input drain %(query)s on %(provider)s "
-            "(%(py_passes)d Python passes, %(state_commit_ms)d ms state "
-            "commit): %(progress)s",
-            {
-                "query": name,
-                "provider": spark.conf.get(_PROVIDER_CONF),
-                "progress": q.lastProgress,
-                "state_commit_ms": sum(
-                    op["commitTimeMs"]
-                    for p in q.recentProgress
-                    for op in p["stateOperators"]
-                ),
-                "py_passes": python_passes(spark, last.executedPlan()) if last else 0,
-            },
-        )
-        return spark.table(name)
+        with scoped_confs(spark, scoped):
+            q = (
+                result.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", f"{tmp}/ckpt")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            # The Python passes are read off the last micro-batch's plan
+            # now: the returned frame is the sink's table, not the drain.
+            last = q._jsq.streamingQuery().lastExecution()
+            _log.info(
+                "closed-input drain %(query)s on %(provider)s "
+                "(%(py_passes)d Python passes, %(state_commit_ms)d ms state "
+                "commit): %(progress)s",
+                {
+                    "query": name,
+                    "provider": spark.conf.get(_PROVIDER_CONF),
+                    "progress": q.lastProgress,
+                    "state_commit_ms": sum(
+                        op["commitTimeMs"]
+                        for p in q.recentProgress
+                        for op in p["stateOperators"]
+                    ),
+                    "py_passes": python_passes(spark, last.executedPlan()) if last else 0,
+                },
+            )
+            return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         shutil.rmtree(tmp, ignore_errors=True)

@@ -9,6 +9,10 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from aws_dla_kinesis_delivery_stream_example_spark.operators import clustering
+from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import (
+    load_table,
+    stream_table,
+)
 from aws_dla_kinesis_delivery_stream_example_spark.streaming import windows as SW
 
 
@@ -108,15 +112,16 @@ def test_interval_join_streaming_matches_batch(spark, tmp_path):
         for m in range(0, 120, 7):
             kind = "click" if m % 14 == 0 else "purchase"
             rows.append((u, kind, t0 + dt.timedelta(minutes=m), 1.0))
-    df = _events(spark, rows)
-    src = str(tmp_path / "ev")
-    df.coalesce(1).write.parquet(src)
+    _events(spark, rows).coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
+    sf_dir = str(tmp_path)
 
     batch = sorted(
         (r["user_id"], str(r["l_ts"]), str(r["r_ts"]))
-        for r in SW.interval_join_pairs(spark.read.parquet(src)).collect()
+        for r in SW.interval_join_pairs(load_table(spark, sf_dir, "events")).collect()
     )
-    streamed = SW.run_on_closed_input(spark, src, SW.interval_join_pairs, "append")
+    streamed = SW.run_on_closed_input(
+        SW.interval_join_pairs(stream_table(spark, sf_dir, "events")), "append"
+    )
     got = sorted(
         (r["user_id"], str(r["l_ts"]), str(r["r_ts"])) for r in streamed.collect()
     )

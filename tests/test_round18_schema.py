@@ -20,6 +20,7 @@ from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import (
     TABLES,
     load_table,
     parquet_schema,
+    stream_table,
 )
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
@@ -40,11 +41,14 @@ def test_footer_schema_equals_spark_inference(spark, sf_dir, table):
 
 def test_load_table_round_trips_every_table(spark):
     # the explicit-schema read must yield the same columns/types the
-    # inference path produced (events post-normalization included)
+    # inference path produced (events post-normalization included), and
+    # the streaming face the same as the batch one (events.ts a
+    # TimestampType on both)
     for t in TABLES:
         df = load_table(spark, SF_DIRS[0], t)
         assert df.schema == load_table(spark, SF_DIRS[0], t).schema
         assert df.limit(1).count() in (0, 1)
+        assert stream_table(spark, SF_DIRS[0], t).schema == df.schema
 
 
 def test_nanos_timestamp_maps_to_long_under_legacy_conf(spark, tmp_path):

@@ -10,75 +10,70 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import load_table
+from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import (
+    load_table,
+    stream_table,
+)
 from aws_dla_kinesis_delivery_stream_example_spark.streaming import windows as SW
 
 from .conftest import SF_SMOKE
 
 
-@pytest.fixture(scope="module")
-def events_parquet(spark, tmp_path_factory):
-    """Re-materialize events with us timestamps (the raw file is ns,
-    which the streaming parquet reader rejects the same way batch does)."""
-    out = str(tmp_path_factory.mktemp("events") / "events_us")
-    load_table(spark, SF_SMOKE, "events").write.parquet(out)
-    return out
+def _stream(spark):
+    """The events table as the drains read it."""
+    return stream_table(spark, SF_SMOKE, "events")
 
 
-def _batch(spark, path):
-    return spark.read.parquet(path)
+def _batch(spark):
+    """The same table as the batch queries read it."""
+    return load_table(spark, SF_SMOKE, "events")
 
 
 def _as_sets(df):
     return {tuple(r) for r in df.collect()}
 
 
-def test_tumbling_stream_equals_batch(spark, events_parquet):
+def test_tumbling_stream_equals_batch(spark):
     # complete mode: append would (correctly) hold back the final
     # windows still inside the watermark horizon on a closed input.
-    streamed = SW.run_on_closed_input(spark, events_parquet, SW.tumbling_counts, "complete")
-    batch = SW.tumbling_counts(_batch(spark, events_parquet))
+    streamed = SW.run_on_closed_input(SW.tumbling_counts(_stream(spark)), "complete")
+    batch = SW.tumbling_counts(_batch(spark))
     assert _as_sets(streamed) == _as_sets(batch)
 
 
-def test_tumbling_append_holds_back_open_windows(spark, events_parquet):
+def test_tumbling_append_holds_back_open_windows(spark):
     """Append mode emits only watermark-closed windows: streamed results
     are a strict prefix of the batch answer, missing only the tail."""
     streamed = _as_sets(
-        SW.run_on_closed_input(spark, events_parquet, SW.tumbling_counts, "append")
+        SW.run_on_closed_input(SW.tumbling_counts(_stream(spark)), "append")
     )
-    batch = _as_sets(SW.tumbling_counts(_batch(spark, events_parquet)))
+    batch = _as_sets(SW.tumbling_counts(_batch(spark)))
     assert streamed <= batch
     missing = batch - streamed
     max_closed = max(w for w, *_ in streamed)
     assert all(w > max_closed for w, *_ in missing)  # only the open tail
 
 
-def test_sliding_stream_equals_batch(spark, events_parquet):
-    streamed = SW.run_on_closed_input(spark, events_parquet, SW.sliding_counts, "complete")
-    batch = SW.sliding_counts(_batch(spark, events_parquet))
+def test_sliding_stream_equals_batch(spark):
+    streamed = SW.run_on_closed_input(SW.sliding_counts(_stream(spark)), "complete")
+    batch = SW.sliding_counts(_batch(spark))
     assert _as_sets(streamed) == _as_sets(batch)
 
 
-def test_session_window_stream_runs(spark, events_parquet):
+def test_session_window_stream_runs(spark):
     """session_window is streaming-only in this form; assert it produces
     sessions and that per-user totals reconcile with the event count."""
-    streamed = SW.run_on_closed_input(spark, events_parquet, SW.session_counts, "complete")
+    streamed = SW.run_on_closed_input(SW.session_counts(_stream(spark)), "complete")
     total = streamed.agg(F.sum("session_len")).collect()[0][0]
-    n_events = _batch(spark, events_parquet).count()
+    n_events = _batch(spark).count()
     assert total == n_events  # every event belongs to exactly one session
 
 
-def test_streaming_dedup_equals_batch(spark, events_parquet):
+def test_streaming_dedup_equals_batch(spark):
     streamed = SW.run_on_closed_input(
-        spark,
-        events_parquet,
-        lambda df: SW.streaming_dedup(df).select(
-            "user_id", "event_type"
-        ),
-        "append",
+        SW.streaming_dedup(_stream(spark)).select("user_id", "event_type"), "append"
     )
-    batch = _batch(spark, events_parquet).select("user_id", "event_type").distinct()
+    batch = _batch(spark).select("user_id", "event_type").distinct()
     assert _as_sets(streamed) == _as_sets(batch)
 
 
@@ -139,12 +134,12 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert ("10:00", 1) in rows
     assert not any(h == "09:00" for h, _ in rows)
 
-def test_interval_join_stream_equals_batch(spark, events_parquet):
+def test_interval_join_stream_equals_batch(spark):
     """q73's operator: inner stream-stream interval joins emit matches
     as found, so an availableNow drain over a closed input equals the
     batch range join (the oracle path)."""
-    streamed = SW.run_on_closed_input(spark, events_parquet, SW.interval_join_pairs, "append")
-    batch = SW.interval_join_pairs(_batch(spark, events_parquet))
+    streamed = SW.run_on_closed_input(SW.interval_join_pairs(_stream(spark)), "append")
+    batch = SW.interval_join_pairs(_batch(spark))
     assert _as_sets(streamed) == _as_sets(batch)
 
 
@@ -160,11 +155,10 @@ def test_interval_join_boundaries(spark, tmp_path):
         (5, "2024-01-01 10:10:00", 2, "purchase"),  # other user -> out
         (6, "2024-01-01 09:59:59.999999", 1, "purchase"),  # before click -> out
     ]
-    src = str(tmp_path / "ijoin_src")
     df = spark.createDataFrame(
         rows, "event_id long, ts_s string, user_id long, event_type string"
     ).selectExpr("event_id", "CAST(ts_s AS TIMESTAMP) ts", "user_id", "event_type")
-    df.coalesce(1).write.parquet(src)
+    df.coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
 
     expected = {
         (1, "2024-01-01 10:00:00", "2024-01-01 10:00:00"),
@@ -177,9 +171,11 @@ def test_interval_join_boundaries(spark, tmp_path):
             for r in out.collect()
         }
 
-    batch = SW.interval_join_pairs(spark.read.parquet(src))
+    batch = SW.interval_join_pairs(load_table(spark, str(tmp_path), "events"))
     assert fmt(batch) == expected
-    streamed = SW.run_on_closed_input(spark, src, SW.interval_join_pairs, "append")
+    streamed = SW.run_on_closed_input(
+        SW.interval_join_pairs(stream_table(spark, str(tmp_path), "events")), "append"
+    )
     assert fmt(streamed) == expected
 
 
@@ -242,7 +238,7 @@ def test_drain_leaves_no_view_and_frames_stay_readable(spark):
     assert rows[0] and rows[0] == rows[1] == rows[2]
 
 
-def test_failed_drain_restores_session(spark, events_parquet, monkeypatch):
+def test_failed_drain_restores_session(spark, monkeypatch):
     """A drain whose operator fails mid-stream leaves no view, no
     checkpoint dir and no changed conf behind."""
     made = []
@@ -262,7 +258,7 @@ def test_failed_drain_restores_session(spark, events_parquet, monkeypatch):
         return df.withColumn("boom", F.raise_error(F.lit("drain failure")))
 
     with pytest.raises(Exception, match="drain failure"):
-        SW.run_on_closed_input(spark, events_parquet, op, "append", partitions="3")
+        SW.run_on_closed_input(op(_stream(spark)), "append", partitions="3")
     assert _sq_views(spark) == []
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
     assert spark.conf.get(provider, None) == prev_provider
@@ -279,7 +275,7 @@ def _checksum_threads(spark) -> int:
     return n
 
 
-def test_drain_leaves_no_checksum_threads(spark, events_parquet):
+def test_drain_leaves_no_checksum_threads(spark):
     """A drain deletes its checkpoint, so it writes no checkpoint
     checksums: with them on, each drain left a 32-thread checksum pool
     behind in the JVM. The setting is restored afterwards, so a query
@@ -287,6 +283,6 @@ def test_drain_leaves_no_checksum_threads(spark, events_parquet):
     prev = spark.conf.get(SW._CHECKSUM_CONF, None)
     before = _checksum_threads(spark)
     for _ in range(2):
-        SW.run_on_closed_input(spark, events_parquet, SW.tumbling_counts, "complete").collect()
+        SW.run_on_closed_input(SW.tumbling_counts(_stream(spark)), "complete").collect()
     assert _checksum_threads(spark) == before
     assert spark.conf.get(SW._CHECKSUM_CONF, None) == prev
