@@ -137,16 +137,18 @@ def run_on_closed_input(
     reader schema, the events confs and the ``ts`` decode, and the
     drain runs on ``result``'s session.
 
-    The shuffle width (``partitions``, default "8") and checkpoint
-    checksums (off) are scoped to the drain and restored after it. The
-    state-store provider is the session's own.
+    The shuffle width (``partitions``, default "8"), checkpoint
+    checksums (off) and AQE (off, as Spark runs a stateful stream) are
+    scoped to the drain and restored after it. The state-store provider
+    is the session's own.
     Each stateful stage allocates one state-store instance per shuffle
     partition, so size the width to the drain's state, not its input:
     constant-state sketches want "2", per-key state wants the default.
 
     On success or failure the memory-sink view is dropped (the returned
     frame already holds the sink's plan) and the checkpoint directory
-    is removed. One INFO record on this module's logger carries the
+    is removed. One INFO record on this module's logger, built only when
+    the logger is at INFO (its plan walk costs py4j calls), carries the
     provider the drain ran on, the final ``lastProgress`` (incl.
     ``stateOperators``), the state-store commit time summed over every
     micro-batch (``state_commit_ms``) and the Python passes of the last
@@ -155,7 +157,13 @@ def run_on_closed_input(
     spark = result.sparkSession
     tmp = tempfile.mkdtemp(prefix="stream_q_")
     name = f"sq_{uuid.uuid4().hex[:10]}"
-    scoped = {"spark.sql.shuffle.partitions": partitions or "8", _CHECKSUM_CONF: "false"}
+    scoped = {
+        "spark.sql.shuffle.partitions": partitions or "8",
+        _CHECKSUM_CONF: "false",
+        # Spark turns AQE off for a stateful stream anyway; set off
+        # here, its analyzer no longer warns about it on every drain.
+        "spark.sql.adaptive.enabled": "false",
+    }
     try:
         with scoped_confs(spark, scoped):
             q = (
@@ -167,25 +175,27 @@ def run_on_closed_input(
                 .start()
             )
             q.awaitTermination()
-            # The Python passes are read off the last micro-batch's plan
-            # now: the returned frame is the sink's table, not the drain.
-            last = q._jsq.streamingQuery().lastExecution()
-            _log.info(
-                "closed-input drain %(query)s on %(provider)s "
-                "(%(py_passes)d Python passes, %(state_commit_ms)d ms state "
-                "commit): %(progress)s",
-                {
-                    "query": name,
-                    "provider": spark.conf.get(_PROVIDER_CONF),
-                    "progress": q.lastProgress,
-                    "state_commit_ms": sum(
-                        op["commitTimeMs"]
-                        for p in q.recentProgress
-                        for op in p["stateOperators"]
-                    ),
-                    "py_passes": python_passes(spark, last.executedPlan()) if last else 0,
-                },
-            )
+            if _log.isEnabledFor(logging.INFO):
+                # The Python passes are read off the last micro-batch's
+                # plan now: the returned frame is the sink's table, not
+                # the drain.
+                last = q._jsq.streamingQuery().lastExecution()
+                _log.info(
+                    "closed-input drain %(query)s on %(provider)s "
+                    "(%(py_passes)d Python passes, %(state_commit_ms)d ms state "
+                    "commit): %(progress)s",
+                    {
+                        "query": name,
+                        "provider": spark.conf.get(_PROVIDER_CONF),
+                        "progress": q.lastProgress,
+                        "state_commit_ms": sum(
+                            op["commitTimeMs"]
+                            for p in q.recentProgress
+                            for op in p["stateOperators"]
+                        ),
+                        "py_passes": python_passes(spark, last.executedPlan()) if last else 0,
+                    },
+                )
             return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)

@@ -1,5 +1,6 @@
 """session.get_spark sizes the driver's query-stage pools to the host's
-cores, so a long session stops adding a thread per query stage."""
+cores, so a long session stops adding a thread per query stage, and
+starts the driver JVM on the parallel collector."""
 
 from __future__ import annotations
 
@@ -39,3 +40,11 @@ def test_stage_pool_caps_clamp_to_what_spark_accepts():
         "spark.sql.resultQueryStage.maxThreadThreshold": "512",
     }
     assert set(stage_pool_confs(4096).values()) == {"128", "1024"}
+
+
+def test_driver_runs_the_parallel_collector(spark):
+    """G1, the server-class default, would name its beans "G1 Young
+    Generation" and "G1 Old Generation"."""
+    jvm = spark.sparkContext._jvm
+    beans = jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    assert sorted(b.getName() for b in beans) == ["PS MarkSweep", "PS Scavenge"]

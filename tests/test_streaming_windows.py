@@ -253,6 +253,7 @@ def test_failed_drain_restores_session(spark, monkeypatch):
     parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_provider = spark.conf.get(provider, None)
     prev_checksum = spark.conf.get(SW._CHECKSUM_CONF, None)
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", None)
 
     def op(df):
         return df.withColumn("boom", F.raise_error(F.lit("drain failure")))
@@ -263,7 +264,22 @@ def test_failed_drain_restores_session(spark, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
     assert spark.conf.get(provider, None) == prev_provider
     assert spark.conf.get(SW._CHECKSUM_CONF, None) == prev_checksum
+    assert spark.conf.get("spark.sql.adaptive.enabled", None) == prev_aqe
     assert len(made) == 1 and not os.path.exists(made[0])
+
+
+def test_drain_builds_no_log_record_below_info(spark, caplog, monkeypatch):
+    """With the module's logger above INFO a drain skips its progress
+    record, and with it the py4j walk of the last micro-batch's plan."""
+
+    def walk(*a, **kw):
+        raise AssertionError("python_passes ran for a discarded record")
+
+    monkeypatch.setattr(SW, "python_passes", walk)
+    caplog.set_level(logging.WARNING, logger=SW.__name__)
+    streamed = SW.run_on_closed_input(SW.tumbling_counts(_stream(spark)), "complete")
+    assert streamed.count() > 0
+    assert not [r for r in caplog.records if r.name == SW.__name__]
 
 
 def _checksum_threads(spark) -> int:
