@@ -46,17 +46,23 @@ def cosine(a, b) -> Column:
     return dot(a, b) / F.nullif(norm2(a) * norm2(b), F.lit(0.0))
 
 
-def sign_bucket(a, n_bits: int = 3) -> Column:
+# Sign-pattern buckets key on the signs of the first 3 dims: 8 buckets.
+SIGN_BITS = 3
+
+
+def sign_bucket(a) -> Column:
     """Coarse IVF-style bucket id from the sign pattern of the first
-    ``n_bits`` dimensions (2**n_bits buckets). A deterministic stand-in
-    for a trained coarse quantizer: at 100 TB the candidate set shrinks
-    by ~2**n_bits and the join key becomes the bucket id, so the ANN
-    probe is a co-partitioned equi-join instead of a full cross join.
+    ``SIGN_BITS`` dimensions (2**SIGN_BITS buckets). A deterministic
+    stand-in for a trained coarse quantizer: at 100 TB the candidate
+    set shrinks by ~2**SIGN_BITS and the join key becomes the bucket
+    id, so the ANN probe is a co-partitioned equi-join instead of a
+    full cross join.
     """
     a = F.col(a) if isinstance(a, str) else a
     bucket = F.lit(0)
-    for i in range(1, n_bits + 1):
-        bucket = bucket + F.when(F.element_at(a, i) > 0, F.lit(2 ** (n_bits - i))).otherwise(F.lit(0))
+    for i in range(1, SIGN_BITS + 1):
+        bit = F.lit(2 ** (SIGN_BITS - i))
+        bucket = bucket + F.when(F.element_at(a, i) > 0, bit).otherwise(F.lit(0))
     return bucket
 
 

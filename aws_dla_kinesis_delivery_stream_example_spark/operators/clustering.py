@@ -34,7 +34,10 @@ _ASSIGN_SCHEMA = "id long, cluster int, d2 double"
 
 KMEANS_K = 8  # clusters: the seeds are the embeddings of the 8 smallest ids
 
-# Per-group GEMM budget of semantic_near_duplicates: 50k rows ~= 20 GB
+# Cosine at or above which two vectors of one cluster are near-duplicates.
+SEMDEDUP_THRESHOLD = 0.4
+
+# Per-cluster GEMM budget of semantic_near_duplicates: 50k rows ~= 20 GB
 # of pairwise doubles, the ceiling for a 64 GB executor.
 _MAX_CLUSTER_ROWS = 50_000
 
@@ -150,11 +153,7 @@ def updated_centroids(emb: DataFrame, cents: np.ndarray) -> np.ndarray:
     return new
 
 
-def semantic_near_duplicates(
-    emb: DataFrame,
-    threshold: float = 0.4,
-    sub_blocks: int | None = None,
-) -> DataFrame:
+def semantic_near_duplicates(emb: DataFrame) -> DataFrame:
     """SemDeDup: cosine near-dup (vec_id, embedding) pairs WITHIN
     ``KMEANS_K`` k-means clusters.
 
@@ -164,64 +163,18 @@ def semantic_near_duplicates(
     GEMM runs bucket-locally in one ``applyInPandas`` group. Vectors
     ride along with the assignment (``include_vector``), so no corpus
     self-join is needed to put embeddings next to cluster ids.
-    Cosines are rounded to 6 dp before the threshold compare (the
-    oracle-stable boundary). Returns (cluster, vec_a, vec_b, cos_sim).
+    Cosines are rounded to 6 dp before the ``SEMDEDUP_THRESHOLD``
+    compare (the oracle-stable boundary). Returns (cluster, vec_a,
+    vec_b, cos_sim).
 
-    ``sub_blocks`` is the hot-cluster valve (the q55 ``max_df``
-    analogue): when set, each cluster is salted into that many
-    sub-blocks keyed by a digest of the 1-dp-ROUNDED vector, and pairs
-    form only within a sub-block — pair space drops another
-    ``sub_blocks``-fold. Exact duplicates and near-identical vectors
-    (equal after rounding) share a digest, so true-dup recall survives
-    the split; pairs that are merely similar may land in different
-    sub-blocks — the documented recall trade of the valve.
-
-    Each group has a GEMM memory budget of ``_MAX_CLUSTER_ROWS`` rows:
-    the within-group cosine matrix is O(n^2) doubles, so a single hot
-    cluster (or hot sub-block) bigger than the budget would OOM one
-    executor while the rest of the stage idles. Rather than die
-    opaquely mid-GEMM, the group task fails fast with sizing guidance
-    (set or raise ``sub_blocks``).
+    Each cluster has a GEMM memory budget of ``_MAX_CLUSTER_ROWS``
+    rows: the within-cluster cosine matrix is O(n^2) doubles, so a
+    single hot cluster bigger than the budget would OOM one executor
+    while the rest of the stage idles. Rather than die opaquely
+    mid-GEMM, the group task fails fast with the cluster's size.
     """
     cents = kmeans_seeds(emb)
     assigned = assign_with_centroids(emb, cents, include_vector=True)
-    group_keys = ["cluster"]
-    if sub_blocks is not None:
-        import hashlib
-
-        nb = int(sub_blocks)
-
-        def salt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                g = [
-                    int.from_bytes(
-                        # + 0.0 normalizes -0.0 -> +0.0: np.round maps
-                        # tiny negative components to -0.0, whose BYTE
-                        # pattern differs from +0.0 even though the
-                        # values compare equal — without it, two
-                        # vectors equal after rounding could digest
-                        # into different sub-blocks and a true
-                        # near-dup pair would be silently missed
-                        hashlib.md5(
-                            (np.round(np.asarray(v), 1) + 0.0).tobytes()
-                        ).digest()[:4],
-                        "big",
-                    )
-                    % nb
-                    for v in pdf["embedding"]
-                ]
-                pdf = pdf.assign(salt=np.array(g, dtype="int32"))
-                yield pdf
-
-        from pyspark.sql import types as T
-
-        salted_schema = T.StructType(
-            assigned.schema.fields + [T.StructField("salt", T.IntegerType())]
-        )
-        assigned = assigned.mapInPandas(salt, schema=salted_schema)
-        group_keys.append("salt")
 
     def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -236,8 +189,7 @@ def semantic_near_duplicates(
             raise ValueError(
                 f"semantic_near_duplicates: cluster {c} has {len(pdf)} rows, "
                 f"over the {_MAX_CLUSTER_ROWS}-row GEMM budget "
-                f"(~{len(pdf) ** 2 * 8 / 1e9:.1f} GB of pairwise doubles). "
-                f"Set or raise sub_blocks to salt the cluster."
+                f"(~{len(pdf) ** 2 * 8 / 1e9:.1f} GB of pairwise doubles)."
             )
         pdf = pdf.sort_values("id")
         ids = pdf["id"].to_numpy()
@@ -246,7 +198,7 @@ def semantic_near_duplicates(
         norms[norms == 0.0] = 1.0
         s = np.round((x / norms) @ (x / norms).T, 6)
         ia, ib = np.triu_indices(len(ids), k=1)
-        keep = s[ia, ib] >= threshold
+        keep = s[ia, ib] >= SEMDEDUP_THRESHOLD
         if not keep.any():
             return empty
         return pd.DataFrame(
@@ -259,7 +211,7 @@ def semantic_near_duplicates(
         )
 
     ensure_shipped(emb.sparkSession)
-    return assigned.groupBy(*group_keys).applyInPandas(
+    return assigned.groupBy("cluster").applyInPandas(
         pairs, schema="cluster int, vec_a long, vec_b long, cos_sim double"
     )
 

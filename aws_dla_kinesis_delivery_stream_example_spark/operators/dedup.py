@@ -71,7 +71,7 @@ def shingle_jaccard_pairs(
 
     The shingle table is persisted as staging; after the terminal
     action on the returned frame, call ``staging.release_staging()``
-    to drop it (bench/rehearsal do).
+    to drop it (``bench.py`` does).
     """
     # Shingling is the expensive narrow map and feeds three consumers
     # (sizes + both join sides): materialize it once. At 100 TB this is
@@ -287,6 +287,9 @@ def cdc_chunk_rows(df: DataFrame) -> DataFrame:
 # MinHash geometry: 64 hashes in 16 bands of 4 rows.
 _MINHASH_N = 64
 _MINHASH_BANDS = 16
+# Estimated Jaccard at or above which a candidate pair is a near-duplicate
+# (q27; the calibration audit measures recall and precision at it too).
+MINHASH_THRESHOLD = 0.5
 
 
 def minhash_signatures(df: DataFrame, _hash_rows: DataFrame | None = None) -> DataFrame:
@@ -323,7 +326,6 @@ def minhash_signatures(df: DataFrame, _hash_rows: DataFrame | None = None) -> Da
 
 def minhash_near_duplicates(
     df: DataFrame,
-    threshold: float = 0.5,
     _hash_rows: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: band the signature into
@@ -331,8 +333,9 @@ def minhash_near_duplicates(
     candidates, verify candidates with the estimated Jaccard = fraction
     of matching minhashes.
 
-    Returns (doc_a, doc_b, est_jaccard >= threshold). The LSH join is
-    the 100 TB path: candidates ~ true-positive pairs, never all pairs.
+    Returns (doc_a, doc_b, est_jaccard >= ``MINHASH_THRESHOLD``). The
+    LSH join is the 100 TB path: candidates ~ true-positive pairs,
+    never all pairs.
     """
     rows = _MINHASH_N // _MINHASH_BANDS
     # Signature computation (shingle + 64 min-aggs) feeds both join
@@ -374,7 +377,7 @@ def minhash_near_duplicates(
         lambda acc, x: acc + x,
     ).cast("double") / F.lit(float(_MINHASH_N))
     return cand.select("doc_a", "doc_b", est.alias("est_jaccard")).filter(
-        F.col("est_jaccard") >= threshold
+        F.col("est_jaccard") >= MINHASH_THRESHOLD
     )
 
 
@@ -608,8 +611,8 @@ def simhash_signatures(df: DataFrame) -> DataFrame:
 # combinations matches exactly. Band keys are ~32 bits — 65536x more
 # selective than a single 16-bit chunk, which kills the birthday-
 # paradox candidate growth a growing corpus inflicts on narrow keys
-# (measured: candidate exponent ~2.0 with 16-bit chunks, ~1.0 with
-# block triples — scripts/scale_rehearsal.py).
+# (measured: candidate exponent 2.0 with 16-bit chunks over 500 ->
+# 5,000 documents, SCALE_REHEARSAL_r04.json).
 _MANKU_BLOCK_BITS = (11, 11, 11, 11, 10, 10)
 _MANKU_RADIUS = 3  # the guarantee: hamming <= 6 - 3 blocks clean
 
@@ -799,10 +802,6 @@ def simhash_near_duplicates(df: DataFrame) -> DataFrame:
     return cross.unionByName(same)
 
 
-# The Jaccard level the calibration audit measures recall and precision at
-# (q26's exact truth set, q27's MinHash candidates).
-_CALIBRATION_THRESHOLD = 0.5
-
 
 def minhash_calibration_report(docs: DataFrame) -> DataFrame:
     """Estimator-quality audit: how well do the MinHash(64)+LSH(16)
@@ -833,10 +832,10 @@ def minhash_calibration_report(docs: DataFrame) -> DataFrame:
     """
     sh60 = stage(_shingle_hash_rows(docs, "doc_id", _SHINGLE_N))
     truth = _jaccard_pairs_on(
-        sh60.withColumnRenamed("h", "shingle"), _CALIBRATION_THRESHOLD
+        sh60.withColumnRenamed("h", "shingle"), MINHASH_THRESHOLD
     ).select("doc_a", "doc_b", F.round(F.col("jaccard") * 1000, 0).cast("long").alias("ej_exact_milli"))
     h31 = sh60.select("doc", F.pmod(F.col("h"), F.lit(_MERSENNE)).alias("h"))
-    cand = minhash_near_duplicates(docs, threshold=_CALIBRATION_THRESHOLD, _hash_rows=h31).select(
+    cand = minhash_near_duplicates(docs, _hash_rows=h31).select(
         "doc_a", "doc_b",
         F.round(F.col("est_jaccard") * 1000, 0).cast("long").alias("ej_est_milli"),
     )

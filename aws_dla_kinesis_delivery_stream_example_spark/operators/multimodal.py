@@ -315,20 +315,9 @@ def audio_frame_energy(media: DataFrame) -> DataFrame:
 _DHASH_SRC_W, _DHASH_SRC_H = 18, 16  # synthesized full resolution
 _DHASH_GRID_W, _DHASH_GRID_H = 9, 8  # downsample grid -> 64 dHash bits
 _DHASH_BANDS = 4  # bands; recall guaranteed for Hamming <= _DHASH_BANDS - 1
+_DHASH_BAND_BITS = (_DHASH_GRID_W - 1) * _DHASH_GRID_H // _DHASH_BANDS
 
 DHASH_SIG_SCHEMA = "media_id long, b0 long, b1 long, b2 long, b3 long"
-
-# Band geometries (the scale story must be EXECUTABLE, not narrated).
-# Collision candidates are ~ C(n,2) * B / 2^w for B bands of w bits,
-# so band width is the knob that must track corpus size: the bench geometry's
-# w=16 saturates around n ~ 2^16, the wide geometry's w=64 holds to
-# n ~ 2^64/B — far past 1e10 images. Wide = a LARGER grid hashed
-# wider (same decode, same resize arithmetic, same packing), so the
-# production setting is the same plan with different constants —
-# pinned by tests/test_round14_planted.py (planted pairs found in
-# both geometries; collision candidates shrink).
-DHASH_GEOM_BENCH = (_DHASH_GRID_W, _DHASH_GRID_H)  # 64 bits, 4 x 16-bit bands
-DHASH_GEOM_WIDE = (17, 16)  # 256 bits, 4 x 64-bit bands
 
 
 def _dhash_pixel(seed: int, x: int, y: int) -> int:
@@ -387,29 +376,20 @@ def synthesize_gray_bmp(documents: DataFrame) -> DataFrame:
     )
 
 
-def dhash_bands(
-    media: DataFrame, grid: tuple[int, int] = DHASH_GEOM_BENCH
-) -> DataFrame:
+def dhash_bands(media: DataFrame) -> DataFrame:
     """REAL decode path: BMP bytes -> pixels (codecs.decode_bmp) ->
-    nearest-neighbor downsample to the ``grid`` (codecs.resize_nearest,
-    index math ``src = i * in // out``) -> dHash bit j = y*(gw-1)+x set
+    nearest-neighbor downsample to the 9x8 grid (codecs.resize_nearest,
+    index math ``src = i * in // out``) -> dHash bit j = y*8+x set
     iff grid[y, x+1] > grid[y, x] -> packed into 4 band integers of
-    (gw-1)*gh/4 bits each (bit j lands in band j // w at offset
-    j % w; 64-bit bands wrap to signed int64, which bit_count(xor)
-    reads transparently). Arrow-batched; the signature is 4 ints per
-    image, so the shuffle that follows moves signatures, never pixels
-    — at 100 TB the payload column stays behind in the scan stage
-    (multimodal house rule: bytes never travel through an exchange).
+    16 bits each (bit j lands in band j // 16 at offset j % 16).
+    Arrow-batched; the signature is 4 ints per image, so the shuffle
+    that follows moves signatures, never pixels — at 100 TB the
+    payload column stays behind in the scan stage (multimodal house
+    rule: bytes never travel through an exchange).
 
-    ``grid`` is the collision-rate contract (DHASH_GEOM_* constants):
-    the bench 9x8/16-bit-band geometry for bench n, the wide
-    17x16/64-bit-band geometry for production n — same decode, same
-    resize arithmetic, same packing loop, only the constants move."""
-    grid_w, grid_h = grid
-    n_bits = (grid_w - 1) * grid_h
-    if n_bits % _DHASH_BANDS:
-        raise ValueError(f"dhash_bands: {n_bits} bits not divisible into {_DHASH_BANDS} bands")
-    band_bits = n_bits // _DHASH_BANDS
+    Band-collision candidates grow as C(n,2) * 4 / 2^16, so 16-bit
+    bands saturate around n ~ 2^16 images; past that the band width
+    is the knob to widen (SCALE.md, q146)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from . import codecs
@@ -418,45 +398,18 @@ def dhash_bands(
             out: dict[str, list] = {"media_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
             for mid, raw in zip(pdf["media_id"], pdf["payload"]):
                 px = codecs.decode_bmp(bytes(raw))
-                g = codecs.resize_nearest(px, grid_w, grid_h)[:, :, 0].astype("int64")
+                g = codecs.resize_nearest(px, _DHASH_GRID_W, _DHASH_GRID_H)[:, :, 0]
+                g = g.astype("int64")
                 flat = (g[:, 1:] > g[:, :-1]).reshape(-1)
                 out["media_id"].append(int(mid))
                 for b in range(_DHASH_BANDS):
-                    val = 0
-                    for i, bit in enumerate(flat[band_bits * b : band_bits * (b + 1)]):
-                        if bit:
-                            val |= 1 << i
-                    if val >= 1 << 63:  # 64-bit band -> signed wrap
-                        val -= 1 << 64
-                    out[f"b{b}"].append(val)
+                    bits = flat[_DHASH_BAND_BITS * b : _DHASH_BAND_BITS * (b + 1)]
+                    out[f"b{b}"].append(sum(1 << i for i, bit in enumerate(bits) if bit))
             yield pd.DataFrame(out)
 
     ensure_shipped(media.sparkSession)
     return media.select("media_id", "payload").mapInPandas(
         run, schema=DHASH_SIG_SCHEMA
-    )
-
-
-def dhash_band_candidates(sigs: DataFrame) -> DataFrame:
-    """The band-blocking candidate generator, shared by the near-dup
-    operator, the scale rehearsal's candidate-count measurement, and
-    the geometry tests — ONE definition so a future blocking change
-    (e.g. a q28-style crowding cap on hot band values) cannot leave
-    the rehearsal curving a different generator than the query runs.
-    Returns distinct ``(doc_a, doc_b)`` id pairs (doc_a < doc_b)
-    sharing at least one identical (band, val)."""
-    bands = sigs.selectExpr(
-        "media_id", "stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (band, val)"
-    )
-    return (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band", "val"])
-        .where(F.col("a.media_id") < F.col("b.media_id"))
-        .select(
-            F.col("a.media_id").alias("doc_a"),
-            F.col("b.media_id").alias("doc_b"),
-        )
-        .distinct()
     )
 
 
@@ -483,7 +436,19 @@ def dhash_near_duplicates(sigs: DataFrame) -> DataFrame:
     from .staging import stage
 
     sigs = stage(sigs)
-    cand = dhash_band_candidates(sigs)
+    bands = sigs.selectExpr(
+        "media_id", "stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (band, val)"
+    )
+    cand = (
+        bands.alias("a")
+        .join(bands.alias("b"), ["band", "val"])
+        .where(F.col("a.media_id") < F.col("b.media_id"))
+        .select(
+            F.col("a.media_id").alias("doc_a"),
+            F.col("b.media_id").alias("doc_b"),
+        )
+        .distinct()
+    )
     sig_cols = [f"b{b}" for b in range(_DHASH_BANDS)]
     sa = sigs.select(
         F.col("media_id").alias("doc_a"),

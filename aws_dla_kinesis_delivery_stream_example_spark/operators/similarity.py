@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.vectors import sign_bucket
+from ..functions.vectors import SIGN_BITS, sign_bucket
 from ..shipping import ensure_shipped
 
 _SCORE_SCHEMA = "q_id long, vec_id long, cos_sim double"
@@ -41,9 +41,6 @@ _PAIR_SCHEMA = "vec_a long, vec_b long, cos_sim double"
 # and every executor. The cap is generous for the ANN-query use case;
 # a larger workload is a join problem, not a closure problem.
 MAX_QUERY_VECTORS = 10_000
-
-# Sign-pattern buckets key on the signs of the first 3 dims: 8 buckets.
-_SIGN_BITS = 3
 # Neighbors kept per probe by quantized_topk (q110's top-3).
 QUANTIZED_K = 3
 # Neighbors kept per query by the IVF operators (q34/q70/q92 top-5).
@@ -141,21 +138,21 @@ def ivf_topk(
     hamming_probes: int = 0,
 ) -> DataFrame:
     """Approximate top-``_IVF_K`` over sign-pattern buckets of
-    ``_SIGN_BITS`` bits.
+    ``SIGN_BITS`` bits.
 
     ``hamming_probes=0`` probes ONLY the query's own bucket (fastest,
     lowest recall); ``hamming_probes=1`` additionally probes every
     bucket at Hamming distance 1 — the standard multi-probe recall
-    lever: a vector whose first ``_SIGN_BITS`` dims sit near a sign
+    lever: a vector whose first ``SIGN_BITS`` dims sit near a sign
     boundary lands in a neighboring bucket, and the 1-bit-flip probes
-    recover it for ~``_SIGN_BITS``x more scanned candidates (still a
-    2**_SIGN_BITS-fold reduction vs brute force at 100 TB, and each probe
+    recover it for ~``SIGN_BITS``x more scanned candidates (still a
+    2**SIGN_BITS-fold reduction vs brute force at 100 TB, and each probe
     stays a partition-prunable bucket filter). Larger radii probe
-    every bucket within that Hamming distance (sum of C(_SIGN_BITS, r)
-    flips); radius > _SIGN_BITS raises — it cannot mean anything.
+    every bucket within that Hamming distance (sum of C(SIGN_BITS, r)
+    flips); radius > SIGN_BITS raises — it cannot mean anything.
 
     Recall contract (geometry-dependent — sign buckets key on the
-    signs of the first ``_SIGN_BITS`` dims): on the planted-blob property
+    signs of the first ``SIGN_BITS`` dims): on the planted-blob property
     geometry, ``hamming_probes=0`` measured 0.87-1.0 recall@5 vs brute
     force across seeds and ``hamming_probes=1`` recovered 1.0 on all
     of them; the >= 0.9 floor at 1 probe is pinned by
@@ -166,28 +163,28 @@ def ivf_topk(
     q_mat = _unit_rows(qp["q_emb"])
     q_ids = qp["q_id"].to_numpy()
     raw = np.vstack(qp["q_emb"].to_numpy())
-    weights = np.array([2 ** (_SIGN_BITS - 1 - i) for i in range(_SIGN_BITS)])
-    q_buckets = ((raw[:, :_SIGN_BITS] > 0) * weights).sum(axis=1)
+    weights = np.array([2 ** (SIGN_BITS - 1 - i) for i in range(SIGN_BITS)])
+    q_buckets = ((raw[:, :SIGN_BITS] > 0) * weights).sum(axis=1)
 
     # bucket -> indices of the queries probing it (own bucket plus
     # every bucket within Hamming distance <= hamming_probes when
-    # multi-probing — all C(_SIGN_BITS, r) r-bit flips per radius, not
+    # multi-probing — all C(SIGN_BITS, r) r-bit flips per radius, not
     # just radius 1, so the parameter means what it says instead of
     # silently capping at 1). Buckets stay disjoint, so each
     # (query, candidate) pair is scored at most once — no dedup needed.
     from itertools import combinations
 
-    if not 0 <= hamming_probes <= _SIGN_BITS:
+    if not 0 <= hamming_probes <= SIGN_BITS:
         raise ValueError(
             f"ivf_topk: hamming_probes={hamming_probes} outside [0, "
-            f"{_SIGN_BITS}] — a radius past the bucket key's {_SIGN_BITS} "
+            f"{SIGN_BITS}] — a radius past the bucket key's {SIGN_BITS} "
             "bits cannot flip more bits than the key has"
         )
     probe_map: dict[int, list[int]] = {}
     for qi, b in enumerate(q_buckets.tolist()):
         probes = {int(b)}
         for r in range(1, hamming_probes + 1):
-            for bits in combinations(range(_SIGN_BITS), r):
+            for bits in combinations(range(SIGN_BITS), r):
                 flip = 0
                 for j in bits:
                     flip |= 1 << j
@@ -195,7 +192,7 @@ def ivf_topk(
         for pb in probes:
             probe_map.setdefault(pb, []).append(qi)
 
-    cand_b = candidates.withColumn("bucket", sign_bucket("embedding", _SIGN_BITS))
+    cand_b = candidates.withColumn("bucket", sign_bucket("embedding"))
     parts = []
     for pb in sorted(probe_map):
         idx = np.array(probe_map[pb])
@@ -317,7 +314,7 @@ def embedding_near_duplicates(df: DataFrame) -> DataFrame:
 
     ensure_shipped(df.sparkSession)
     return (
-        df.withColumn("bucket", sign_bucket("embedding", _SIGN_BITS))
+        df.withColumn("bucket", sign_bucket("embedding"))
         .groupBy("bucket")
         .applyInPandas(pairs, schema=_PAIR_SCHEMA)
     )
@@ -368,7 +365,7 @@ def embedding_cross_duplicates(new: DataFrame, corpus: DataFrame) -> DataFrame:
         corpus.select("vec_id", "embedding").withColumn("_side", F.lit(0))
     )
     return (
-        tagged.withColumn("bucket", sign_bucket("embedding", _SIGN_BITS))
+        tagged.withColumn("bucket", sign_bucket("embedding"))
         .groupBy("bucket")
         .applyInPandas(pairs, schema="vec_new long, vec_corpus long, cos_sim double")
     )
@@ -378,7 +375,6 @@ def quantized_topk(
     emb: DataFrame,
     probe_pred,
     corpus_pred,
-    n_bits: int = 3,
 ) -> DataFrame:
     """Int8-quantized top-k neighbors (q110): probes scored against the
     corpus through shared sign buckets, EXACT BIGINT dot products.
@@ -394,9 +390,9 @@ def quantized_topk(
     - SCORING runs as a bucket-wise int64 numpy GEMM inside
       applyInPandas: the within-bucket probe x corpus product is
       inherently |P_b| x |C_b|, and an interpreted per-pair zip_with
-      fold was measured 98x slower at the 10x rehearsal tier (77 s,
-      12.5M pairs) than pushing the same arithmetic through BLAS-shape
-      batch ops. int64 matmul is exact, so the hash oracle is
+      fold over 12.5M bucket pairs (20,000 embeddings) was measured
+      98x slower (77 s) than the same arithmetic as BLAS-shape batch
+      ops. int64 matmul is exact, so the hash oracle is
       unaffected. Only k rows per probe leave the bucket — sub-top-k
       pairs never cross a shuffle.
     - Tie-break np.lexsort((neighbor_ids, -scores)) reproduces the
@@ -411,7 +407,7 @@ def quantized_topk(
         emb.select(
             "vec_id",
             F.when(probe_pred, F.lit(1)).when(corpus_pred, F.lit(0)).alias("_side"),
-            sign_bucket("embedding", n_bits).alias("bucket"),
+            sign_bucket("embedding").alias("bucket"),
             int8_quantize("embedding").alias("qv"),
         )
         .filter(F.col("_side").isNotNull() & F.col("qv").isNotNull())

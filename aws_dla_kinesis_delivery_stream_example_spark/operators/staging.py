@@ -62,7 +62,7 @@ def _registry() -> list[DataFrame]:
 
 def staged_elsewhere() -> int:
     """Staged frames held by OTHER threads' registries (0 in the
-    single-threaded bench/rehearsal/test callers)."""
+    single-threaded bench and test callers)."""
     with _GLOBAL_LOCK:
         return _GLOBAL_STAGED - len(_registry())
 

@@ -66,32 +66,28 @@ def _checked_milliweight(w_m):
     ).otherwise(w_m)
 
 
-# The absolute document-frequency cap on postings (the floor under the
-# relative cap when one is set).
+# The hot-token cap on postings is greatest(MAX_DF, least(n_docs *
+# MAX_DF_FRAC, MAX_DF_CEILING)): an absolute floor so a small corpus
+# keeps its vocabulary, a corpus-relative term so the cap means the
+# same across scale factors, and an absolute ceiling on that term.
 MAX_DF = 50
-# Absolute ceiling on the RELATIVE (max_df_frac) cap: the join hazard
-# is O(df^2) pairs per token, so any cap that grows linearly with the
-# corpus admits quadratic total work — measured at exponent 2.81 /
-# 331 s / 125M pairs for just 50k docs (SCALE_REHEARSAL_r05.json,
-# tfidf frac mode). Clamping the relative term at an absolute bound
-# makes the cap constant once the corpus outgrows ceiling/frac docs:
-# per-token fan-out is then at most C(ceiling, 2) pairs (~0.5M at
-# 1000) regardless of N.
+MAX_DF_FRAC = 0.1
+# The ceiling: the join hazard is O(df^2) pairs per token, so any cap
+# that grows linearly with the corpus admits quadratic total work —
+# measured at exponent 2.81 / 331 s / 125M pairs for just 50k docs
+# without it (SCALE_REHEARSAL_r05.json, tfidf frac mode). Clamped, the
+# cap is constant once the corpus outgrows MAX_DF_CEILING / MAX_DF_FRAC
+# docs: per-token fan-out is then at most C(ceiling, 2) pairs (~0.5M
+# at 1000) regardless of N.
 MAX_DF_CEILING = 1_000
+# TF-IDF cosine at or above which two documents pair (q81).
+TFIDF_THRESHOLD = 0.3
 
 
-def tfidf_postings(docs: DataFrame, max_df_frac: float | None = None) -> DataFrame:
+def tfidf_postings(docs: DataFrame) -> DataFrame:
     """(doc, tok, w) postings with smoothed-idf weights on the 6-dp
-    grid.
-
-    The hot-token cap is ``MAX_DF``, or with ``max_df_frac``
-    ``greatest(MAX_DF, least(n_docs * max_df_frac, MAX_DF_CEILING))``
-    — an absolute floor so a tiny corpus keeps its vocabulary, a
-    corpus-relative term so the same query stays meaningful across
-    scale factors, and an absolute CEILING on the relative term so the
-    cap stops growing with the corpus (O(df^2) pairs per token is the
-    operator's one quadratic hazard; an unbounded relative cap
-    reintroduces it)."""
+    grid, over the tokens whose document frequency is within the
+    hot-token cap (see ``MAX_DF``)."""
     toks = (
         docs.select(F.col("doc_id").alias("doc"), F.explode(TX.words("text")).alias("tok"))
         .groupBy("doc", "tok")
@@ -99,10 +95,8 @@ def tfidf_postings(docs: DataFrame, max_df_frac: float | None = None) -> DataFra
     )
     n_docs = docs.agg(F.count("*").cast("double").alias("n_docs"))
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    cap = F.lit(float(MAX_DF))
-    if max_df_frac is not None:
-        rel = F.least(F.col("n_docs") * float(max_df_frac), F.lit(float(MAX_DF_CEILING)))
-        cap = F.greatest(cap, rel)
+    rel = F.least(F.col("n_docs") * MAX_DF_FRAC, F.lit(float(MAX_DF_CEILING)))
+    cap = F.greatest(F.lit(float(MAX_DF)), rel)
     dfreq = (
         dfreq.crossJoin(F.broadcast(n_docs))
         .filter(F.col("df").cast("double") <= cap)
@@ -123,14 +117,10 @@ def tfidf_postings(docs: DataFrame, max_df_frac: float | None = None) -> DataFra
     )
 
 
-def tfidf_cosine_pairs(
-    docs: DataFrame,
-    threshold: float = 0.3,
-    max_df_frac: float | None = None,
-) -> DataFrame:
+def tfidf_cosine_pairs(docs: DataFrame) -> DataFrame:
     """All doc pairs sharing >= 1 (surviving) term, with TF-IDF cosine
-    >= ``threshold``. Returns (doc_a, doc_b, cos_sim) with doc_a <
-    doc_b, cosine rounded to 4 dp (threshold applied on the 6-dp
+    >= ``TFIDF_THRESHOLD``. Returns (doc_a, doc_b, cos_sim) with doc_a
+    < doc_b, cosine rounded to 4 dp (threshold applied on the 6-dp
     grid).
 
     Dot products and norms are summed in INTEGER milli-weight units
@@ -144,14 +134,14 @@ def tfidf_cosine_pairs(
 
     The postings table is persisted as staging (feeds norms + both
     join sides); after the terminal action on the returned frame, call
-    ``staging.release_staging()`` to drop it (bench/rehearsal do).
+    ``staging.release_staging()`` to drop it (``bench.py`` does).
 
     RECALL WARNING — do not use this operator for recall-critical
     dedup. The df cap prunes the candidate join's hottest terms, and
-    duplicated *templates* live exactly in those high-df terms: at the
-    sf0.1 rehearsal tier (SCALE_REHEARSAL_r07.json, SCALE.md §TF-IDF),
-    the absolute ``MAX_DF`` mode found **0 of 256** planted true pairs
-    and relative mode (``max_df_frac``) ~5%, while
+    duplicated *templates* live exactly in those high-df terms: on
+    sf0.1's 5,000 documents (SCALE_REHEARSAL_r07.json, SCALE.md
+    §TF-IDF), an absolute ``MAX_DF`` cap found **0 of 256** planted
+    true pairs and this relative cap ~5%, while
     :func:`~..operators.dedup.minhash_near_duplicates` found 100% at
     linear candidate growth. TF-IDF cosine is the right operator for
     *content* similarity over distinctive vocabulary (retrieval-ish
@@ -159,7 +149,7 @@ def tfidf_cosine_pairs(
     missing a pair matters, use MinHash — it is this repo's designated
     recall operator."""
     w = stage(
-        tfidf_postings(docs, max_df_frac=max_df_frac)
+        tfidf_postings(docs)
         .withColumn(
             "w_m",
             _checked_milliweight(F.round(F.col("w") * 1000, 0).cast("long")),
@@ -189,7 +179,7 @@ def tfidf_cosine_pairs(
     return (
         dots.join(na, "doc_a")
         .join(nb, "doc_b")
-        .filter(F.round(cos, 6) >= threshold)
+        .filter(F.round(cos, 6) >= TFIDF_THRESHOLD)
         .select("doc_a", "doc_b", F.round(cos, 4).alias("cos_sim"))
     )
 

@@ -14,7 +14,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import text as TX
-from ..operators.tfidf import MAX_DF, MAX_DF_CEILING, tfidf_cosine_pairs
+from ..operators.tfidf import (
+    MAX_DF,
+    MAX_DF_CEILING,
+    MAX_DF_FRAC,
+    TFIDF_THRESHOLD,
+    tfidf_cosine_pairs,
+)
 from ..sources.tables import load_table
 from .catalog import query
 
@@ -229,10 +235,6 @@ def q80_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TFIDF_MAX_DF_FRAC = 0.1
-_TFIDF_THRESHOLD = 0.3
-
-
 @query(
     "q81_tfidf_cosine_pairs",
     oracle=f"""
@@ -250,7 +252,7 @@ _TFIDF_THRESHOLD = 0.3
             SELECT tok, count(*) AS df FROM toks GROUP BY tok
             HAVING count(*) <= greatest(
                 {MAX_DF},
-                least((SELECT count(*) FROM documents) * {_TFIDF_MAX_DF_FRAC},
+                least((SELECT count(*) FROM documents) * {MAX_DF_FRAC},
                       {MAX_DF_CEILING})
             )
         ),
@@ -275,12 +277,12 @@ _TFIDF_THRESHOLD = 0.3
         FROM dots
         JOIN norms na ON na.doc_id = doc_a
         JOIN norms nb ON nb.doc_id = doc_b
-        WHERE round(dot / (na.nrm * nb.nrm), 6) >= {_TFIDF_THRESHOLD}
+        WHERE round(dot / (na.nrm * nb.nrm), 6) >= {TFIDF_THRESHOLD}
         ORDER BY doc_a, doc_b
     """,
     description="Sparse TF-IDF cosine near-dup pairs via inverted-index "
     "self-join on token (pairs form only where a term is shared; hot "
-    f"tokens over greatest({MAX_DF}, least({_TFIDF_MAX_DF_FRAC}"
+    f"tokens over greatest({MAX_DF}, least({MAX_DF_FRAC}"
     f" * n_docs, {MAX_DF_CEILING})) are pruned before the join "
     "— principled for TF-IDF since high-df terms carry ~zero idf "
     "weight; the ceiling keeps per-token fan-out absolutely bounded)",
@@ -292,14 +294,7 @@ def q81_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on doc keys. The sparse complement of q76's dense
     cluster-blocked GEMM."""
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        tfidf_cosine_pairs(
-            docs,
-            threshold=_TFIDF_THRESHOLD,
-            max_df_frac=_TFIDF_MAX_DF_FRAC,
-        )
-        .orderBy("doc_a", "doc_b")
-    )
+    return tfidf_cosine_pairs(docs).orderBy("doc_a", "doc_b")
 
 
 @query(

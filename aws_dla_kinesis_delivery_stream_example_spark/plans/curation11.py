@@ -248,15 +248,11 @@ _SNM_THRESH = 500
 _SNM_PARTS = 8
 
 
-def _snm_key(pass_id: int = 0):
-    """Blocking key for SNM pass ``pass_id``: the _SNM_KEY_N-token
-    window starting at token offset pass_id * _SNM_KEY_N (pass 0 = the
-    prefix). Shorter docs yield whatever tokens remain (possibly ''),
-    matching DuckDB array_slice semantics exactly."""
-    toks = TX.words("text")
-    return F.array_join(
-        F.slice(toks, 1 + _SNM_KEY_N * pass_id, _SNM_KEY_N), " "
-    )
+def _snm_key():
+    """SNM blocking key: the first _SNM_KEY_N normalized tokens. Shorter
+    docs yield whatever tokens remain (possibly ''), matching DuckDB
+    array_slice semantics exactly."""
+    return F.array_join(F.slice(TX.words("text"), 1, _SNM_KEY_N), " ")
 
 
 def snm_global_rank(docs: DataFrame, key=None) -> DataFrame:
@@ -282,7 +278,7 @@ def snm_global_rank(docs: DataFrame, key=None) -> DataFrame:
     task. Here the only global structure is the |partitions|-row
     offset frame."""
     if key is None:
-        key = _snm_key(0)
+        key = _snm_key()
     from pyspark.sql import Window
 
     base = docs.select("doc_id", key.alias("k"))
@@ -390,7 +386,7 @@ def q138_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame so the range-partition SAMPLING pass and the real range
     # exchange inside snm_global_rank read the cache instead of each
     # re-tokenizing the corpus — one corpus text pass instead of two.
-    keyed = stage(docs.select("doc_id", _snm_key(0).alias("k0")))
+    keyed = stage(docs.select("doc_id", _snm_key().alias("k0")))
     ranked = stage(snm_global_rank(keyed, F.col("k0")))
     # staged: the band join reads it twice (build + probe)
     band = (F.col("grank") / _SNM_W).cast("long")  # floor for positive ranks

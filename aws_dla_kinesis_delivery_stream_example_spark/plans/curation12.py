@@ -241,9 +241,9 @@ def q140_dsir_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses map-side per doc_id. At 100 TB the bucket table is the
     piece you persist and re-use across selection runs (it is
     mergeable: counts add across shards, measured saturating at
-    exactly 256 rows at the 500k-doc rehearsal tier), exactly like
-    the q128 registers — and q141 maintains the SAME rows as
-    streaming aggregation state while the crawl lands. This batch
+    exactly 256 rows over 500,000 documents, SCALE_REHEARSAL_r17.json),
+    exactly like the q128 registers — and q141 maintains the SAME rows
+    as streaming aggregation state while the crawl lands. This batch
     face is replay-safe (deterministic re-aggregation over a static
     snapshot); the at-least-once linear-count caveat documented on
     q141 (cf. q51/q83) applies only to the streaming twin."""

@@ -122,19 +122,14 @@ def q146_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The geometry knob that must track corpus size: expected collision
     candidates are ~ C(n,2) * B / 2^w for B bands of w bits —
-    QUADRATIC in n with a 2^-w constant. At bench n the 4x16-bit
-    geometry keeps candidates a few hundred rows (the rehearsal curves
-    the realized exponent: scripts/scale_rehearsal.py 'dhash' family);
-    at 1e10 images w=16 saturates, and the production setting is a
-    LARGER grid hashed wider — EXECUTABLE as
-    ``dhash_bands(media, grid=DHASH_GEOM_WIDE)`` (17x16 grid -> 256
-    bits as 4x64-bit bands, collision rate 2^-64 per band): same
-    decode, same resize arithmetic, same packing loop, pinned by
-    planted test to find every planted pair with its collision set
-    shrunk to exactly those pairs. Band width is a recall/cost
-    contract the operator of a 100 TB dedup sets explicitly (q28's
-    crowding valve is the alternative for hot band values). Budget
-    pinned (tests/test_plan_shapes.py::test_round14_exchange_budgets)."""
+    QUADRATIC in n with a 2^-w constant. The 4x16-bit geometry keeps
+    candidates a few hundred rows at bench n and saturates near
+    n ~ 2^16 images; a larger corpus needs wider bands (a larger grid
+    hashed wider). Band width is a recall/cost contract the operator
+    of a 100 TB dedup sets explicitly (q28's crowding valve is the
+    alternative for hot band values). ``bench.py scale q146`` measures
+    its shuffle growth (SCALE_bench_scale.json). Budget pinned
+    (tests/test_plan_shapes.py::test_round14_exchange_budgets)."""
     docs = load_table(spark, sf_dir, "documents")
     sigs = MM.dhash_bands(MM.synthesize_gray_bmp(docs))
     return MM.dhash_near_duplicates(sigs).orderBy(

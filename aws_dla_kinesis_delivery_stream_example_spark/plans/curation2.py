@@ -352,7 +352,7 @@ def q75_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT cluster,
                CAST(count(*) AS BIGINT) AS n_pairs,
                round(avg(cos_sim), 4) AS avg_cos
-        FROM c WHERE cos_sim >= 0.4
+        FROM c WHERE cos_sim >= {clustering.SEMDEDUP_THRESHOLD}
         GROUP BY cluster ORDER BY cluster
     """,
     description="SemDeDup: cosine near-dup pairs mined WITHIN k-means "
@@ -363,7 +363,7 @@ def q75_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q76_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = clustering.semantic_near_duplicates(emb, threshold=0.4)
+    pairs = clustering.semantic_near_duplicates(emb)
     return (
         pairs.groupBy("cluster")
         .agg(

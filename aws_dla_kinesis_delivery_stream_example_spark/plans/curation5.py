@@ -77,10 +77,6 @@ def q109_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q110 blocking geometry: 3 sign bits = 8 buckets (the q100 convention)
-_Q110_BITS = 3
-
-
 @query(
     "q110_quantized_ann",
     oracle=f"""
@@ -128,17 +124,16 @@ def q110_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed inside a bucket-wise int64 numpy GEMM and only k rows
     per probe cross the shuffle. The original declarative variant
     (bucket equi-join + per-pair zip_with fold + window) was measured
-    98x slower at the 10x rehearsal tier (77 s over 12.5M bucket
-    pairs) — the per-pair interpreted HOF was the cost, not the
-    blocking; the GEMM keeps the identical exact-integer scores, so
-    the oracle is untouched. Zero-norm vectors quantize to NULL and
-    drop out identically on both engines (FIXTURES.md rule)."""
+    98x slower on 20,000 embeddings (77 s over 12.5M bucket pairs) —
+    the per-pair interpreted HOF was the cost, not the blocking; the
+    GEMM keeps the identical exact-integer scores, so the oracle is
+    untouched. Zero-norm vectors quantize to NULL and drop out
+    identically on both engines (FIXTURES.md rule)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.quantized_topk(
         emb,
         probe_pred=F.col("vec_id") % 2 == 1,
         corpus_pred=F.col("vec_id") % 2 == 0,
-        n_bits=_Q110_BITS,
     ).orderBy("probe_id", "rnk")
 
 

@@ -191,7 +191,7 @@ def q55_jaccard_freq_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q27_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        dedup.minhash_near_duplicates(docs, threshold=0.5)
+        dedup.minhash_near_duplicates(docs)
         .select("doc_a", "doc_b", F.round("est_jaccard", 3).alias("est_jaccard"))
         .orderBy("doc_a", "doc_b")
     )

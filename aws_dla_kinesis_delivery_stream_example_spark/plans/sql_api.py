@@ -8,15 +8,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.tables import load_tables
+from ..sources.tables import load_table
 from .catalog import query
 
 
 def _sql(spark: SparkSession, sf_dir: str, stmt: str, tables: tuple[str, ...]) -> DataFrame:
-    for t, df in load_tables(spark, sf_dir).items():
-        if t in tables:
-            df.createOrReplaceTempView(t)
-    return spark.sql(stmt)
+    """``stmt`` over the catalog ``tables``, each referenced as ``{name}``.
+    Spark registers each frame as a view for the call only, so nothing
+    outlives the query or shadows a caller's table of the same name."""
+    return spark.sql(stmt, **{t: load_table(spark, sf_dir, t) for t in tables})
 
 
 @query(
@@ -40,9 +40,9 @@ def q52_correlated_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFram
         sf_dir,
         """
         SELECT p_brand, p_partkey, round(p_retailprice, 2) AS price
-        FROM part
+        FROM {part} AS part
         WHERE p_retailprice = (SELECT min(p2.p_retailprice)
-                               FROM part p2
+                               FROM {part} p2
                                WHERE p2.p_brand = part.p_brand)
         ORDER BY p_brand, p_partkey
         """,
@@ -69,9 +69,9 @@ def q53_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         """
         SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS totalprice
-        FROM orders
-        WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'MACHINERY')
-          AND o_orderkey NOT IN (SELECT l_orderkey FROM lineitem WHERE l_quantity > 49)
+        FROM {orders}
+        WHERE o_custkey IN (SELECT c_custkey FROM {customer} WHERE c_mktsegment = 'MACHINERY')
+          AND o_orderkey NOT IN (SELECT l_orderkey FROM {lineitem} WHERE l_quantity > 49)
         ORDER BY o_orderkey
         """,
         ("orders", "customer", "lineitem"),
@@ -99,8 +99,8 @@ def q54_exists_aggregate_subquery(spark: SparkSession, sf_dir: str) -> DataFrame
         sf_dir,
         """
         SELECT c_custkey, c_name
-        FROM customer
-        WHERE EXISTS (SELECT 1 FROM orders
+        FROM {customer}
+        WHERE EXISTS (SELECT 1 FROM {orders}
                       WHERE o_custkey = c_custkey
                       GROUP BY o_custkey
                       HAVING count(*) >= 20)
@@ -140,7 +140,7 @@ def q89_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                coalesce(o_orderpriority, 'ALL') AS priority,
                count(*) AS n,
                round(sum(o_totalprice), 2) AS total
-        FROM orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
                                 (o_orderstatus, o_orderpriority), ())
         ORDER BY status, priority

@@ -215,8 +215,3 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Table ``name`` as a streaming frame over its closed files: the
     same columns and types as :func:`load_table`."""
     return _read(spark, spark.readStream, sf_dir, name)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-

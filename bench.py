@@ -6,6 +6,7 @@
     python bench.py profile <qNN|name>... [--sf DIR]
     python bench.py plan    <qNN|name>... [--sf DIR] [--out FILE]
     python bench.py check   <qNN|name>... [--sf DIR]
+    python bench.py scale   <qNN|name>...
 
 The sweep times every catalog query at $SPARK_GRAFT_SF_DIR (default:
 the sf0.1 test data) on local[$SPARK_GRAFT_CPUS], then the end-to-end
@@ -31,6 +32,15 @@ micro-batch jobs included, its plan's Python passes and its drains'
 state-store commit time. `plan`
 prints (or writes to `--out`) the formatted physical plan. `check`
 compares each query with its DuckDB oracle and exits 1 if any fails.
+
+`scale` takes no flags. It profiles each query on three tiers: sf0.01
+and sf0.1 beside the sweep's directory, and a 10x tier built from
+sf0.1 in a temporary directory (``synthesize_10x``). Per query and
+tier it prints one JSON line with the census's ``input_records``,
+``shuffle_write_bytes`` and ``executor_run_ms`` and the output rows;
+then one line per query with the log-log growth exponent of shuffle
+bytes and of run time against ``input_records`` between the smallest
+and the largest tier (1.0 is linear).
 """
 
 from __future__ import annotations
@@ -38,6 +48,7 @@ from __future__ import annotations
 import argparse
 import json
 import logging
+import math
 import os
 import re
 import shutil
@@ -45,6 +56,7 @@ import sys
 import tempfile
 import time
 from collections import Counter
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -56,7 +68,7 @@ from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs  # noq
 from aws_dla_kinesis_delivery_stream_example_spark.session import get_spark  # noqa: E402
 from aws_dla_kinesis_delivery_stream_example_spark.shipping import python_passes  # noqa: E402
 from aws_dla_kinesis_delivery_stream_example_spark.streaming import windows  # noqa: E402
-from perfbench.census import StatusStore, cpu_row, host_canary  # noqa: E402
+from perfbench.census import Census, StatusStore, cpu_row, host_canary  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # A timing is the MIN over this many runs: one-shot timings at this
@@ -255,7 +267,15 @@ class _DrainRuns(logging.Handler):
             self.state_commit_ms += record.args["state_commit_ms"]
 
 
-def _profile(spark, name: str, spec, sf: str) -> str:
+class Profile(NamedTuple):
+    took: float
+    census: Census
+    rows: int
+    py_passes: int
+    state_commit_ms: int
+
+
+def _profile(spark, name: str, spec, sf: str) -> Profile:
     """One warm run's census: the jobs of its own job group plus the
     micro-batch jobs of every streaming drain it runs, which Spark puts
     under the drain's run id (``jobs_stream``), and the Python passes
@@ -277,7 +297,7 @@ def _profile(spark, name: str, spec, sf: str) -> str:
     try:
         t0 = time.perf_counter()
         df = spec.spark(spark, sf)
-        df.collect()
+        rows = len(df.collect())
         took = time.perf_counter() - t0
         py = python_passes(spark, df._jdf.queryExecution().executedPlan())
     finally:
@@ -286,12 +306,102 @@ def _profile(spark, name: str, spec, sf: str) -> str:
         log.setLevel(prev_level)
     c = StatusStore(spark).census(group, drains.run_ids)
     _reset(spark)
+    return Profile(took, c, rows, py + drains.py_passes, drains.state_commit_ms)
+
+
+def _profile_line(name: str, p: Profile) -> str:
+    c = p.census
     return (
-        f"PROFILE {name} {took:.3f}s jobs={c.jobs} jobs_stream={c.jobs_stream} "
+        f"PROFILE {name} {p.took:.3f}s jobs={c.jobs} jobs_stream={c.jobs_stream} "
         f"stages={c.stages} tasks={c.totals['tasks']} run_ms={c.totals['executor_run_ms']} "
         f"shuffle_write_bytes={c.totals['shuffle_write_bytes']} "
-        f"py_passes={py + drains.py_passes} state_commit_ms={drains.state_commit_ms}"
+        f"py_passes={p.py_passes} state_commit_ms={p.state_commit_ms}"
     )
+
+
+# The 10x tier: replica k's ids are offset by k * _REPLICA_ID_STRIDE,
+# above every id the generated tables use.
+_REPLICAS = 10
+_REPLICA_ID_STRIDE = 10_000_000
+_SCALE_METRICS = ("shuffle_write_bytes", "executor_run_ms")
+
+
+def synthesize_10x(src: str, out: str) -> None:
+    """Write a tier with ten times ``src``'s documents and embeddings to
+    ``out``: the corpus grows with the same duplicate density, not by
+    copies. Replica 0 is ``src`` verbatim. Replica k offsets its ids by
+    k * ``_REPLICA_ID_STRIDE``, prefixes every token with ``r{k}`` (a
+    vocabulary of its own, so no near-duplicate crosses replicas) and
+    adds seeded N(0, 0.05) noise to its embeddings (the cluster geometry
+    persists, exact duplicates stop being exact). The other tables are
+    linked from ``src``."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import TABLES
+
+    token = re.compile(r"[A-Za-z0-9]+")
+    docs = pq.read_table(os.path.join(src, "documents.parquet")).to_pandas()
+    emb = pq.read_table(os.path.join(src, "embeddings.parquet")).to_pandas()
+    mat = np.vstack(emb["embedding"].to_numpy())
+    doc_parts, emb_parts = [], []
+    for k in range(_REPLICAS):
+        d = docs.assign(doc_id=docs["doc_id"] + k * _REPLICA_ID_STRIDE)
+        e = emb.assign(vec_id=emb["vec_id"] + k * _REPLICA_ID_STRIDE)
+        if k:
+            d["text"] = d["text"].map(
+                lambda s, p=f"r{k}": token.sub(lambda m: p + m.group(0), s)
+                if isinstance(s, str)
+                else s
+            )
+            noise = np.random.default_rng(k).normal(0.0, 0.05, mat.shape)
+            e["embedding"] = list((mat + noise).astype(mat.dtype))
+        doc_parts.append(d)
+        emb_parts.append(e)
+    for name, parts in (("documents", doc_parts), ("embeddings", emb_parts)):
+        table = pa.Table.from_pandas(pd.concat(parts, ignore_index=True), preserve_index=False)
+        pq.write_table(table, os.path.join(out, f"{name}.parquet"))
+    for name in TABLES:
+        if name not in ("documents", "embeddings"):
+            os.symlink(os.path.join(src, f"{name}.parquet"), os.path.join(out, f"{name}.parquet"))
+
+
+def growth_exponent(x0: float, y0: float, x1: float, y1: float) -> float | None:
+    """Slope of log y against log x between two tiers, or None where
+    it is undefined: equal sizes, or a zero reading."""
+    if x0 == x1 or min(x0, y0, x1, y1) <= 0:
+        return None
+    return round(math.log(y1 / y0) / math.log(x1 / x0), 2)
+
+
+def scale(spark, names: list[str], specs: dict) -> None:
+    data = os.path.dirname(SF_DIR)
+    base = os.path.join(data, "sf0.1")
+    synth = tempfile.mkdtemp(prefix="bench_scale_10x_")
+    try:
+        synthesize_10x(base, synth)
+        tiers = (("sf0.01", os.path.join(data, "sf0.01")), ("sf0.1", base), ("10x", synth))
+        runs: dict[str, list[dict]] = {name: [] for name in names}
+        for tier, sf in tiers:
+            _warm_tables(spark, sf)
+            for name in names:
+                p = _profile(spark, name, specs[name], sf)
+                row = {"query": name, "tier": tier, "rows": p.rows}
+                row.update(
+                    (k, p.census.totals[k]) for k in ("input_records", *_SCALE_METRICS)
+                )
+                runs[name].append(row)
+                print(json.dumps(row), flush=True)
+    finally:
+        shutil.rmtree(synth, ignore_errors=True)
+    for name, (lo, *_, hi) in runs.items():
+        exponent = {
+            k: growth_exponent(lo["input_records"], lo[k], hi["input_records"], hi[k])
+            for k in _SCALE_METRICS
+        }
+        print(json.dumps({"query": name, "exponent": exponent}), flush=True)
 
 
 def _plan(spark, spec, sf: str) -> str:
@@ -318,16 +428,22 @@ def _check(spark, spec, sf: str) -> tuple[bool, str]:
 
 def probe(argv: list[str]) -> int:
     p = argparse.ArgumentParser(prog="bench.py", description="Probe single catalog queries.")
-    p.add_argument("mode", choices=["time", "profile", "plan", "check"])
+    p.add_argument("mode", choices=["time", "profile", "plan", "check", "scale"])
     p.add_argument("names", nargs="+", metavar="qNN|name")
-    p.add_argument("--sf", default=SF_DIR)
+    p.add_argument("--sf", help="the tables' directory (default: the sweep's); not for scale")
     p.add_argument("--out", help="plan: write the plan of the one query to this file")
     args = p.parse_args(argv)
     specs = all_specs()
     names = resolve(args.names, specs)
     if args.out and (args.mode != "plan" or len(names) != 1):
         p.error("--out takes plan mode and one query")
+    if args.sf and args.mode == "scale":
+        p.error("scale runs its own tiers and takes no --sf")
+    args.sf = args.sf or SF_DIR
     spark = get_spark(app_name=f"bench_{args.mode}")
+    if args.mode == "scale":
+        scale(spark, names, specs)
+        return 0
     if args.mode in ("time", "profile"):
         _warm_tables(spark, args.sf)
     failed = 0
@@ -338,7 +454,7 @@ def probe(argv: list[str]) -> int:
             failed += isinstance(best, dict)
             print(f"TIME {name} {best if isinstance(best, dict) else f'{best:.3f}'}", flush=True)
         elif args.mode == "profile":
-            print(_profile(spark, name, spec, args.sf), flush=True)
+            print(_profile_line(name, _profile(spark, name, spec, args.sf)), flush=True)
         elif args.mode == "plan":
             txt = _plan(spark, spec, args.sf)
             if args.out:

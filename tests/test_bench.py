@@ -14,7 +14,7 @@ import pytest
 
 from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
 
-from .conftest import SF_SMOKE
+from .conftest import SF_CORRECT, SF_SMOKE
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -103,12 +103,12 @@ def test_profile_counts_a_drains_micro_batch_jobs(spark):
         "aws_dla_kinesis_delivery_stream_example_spark.streaming.windows"
     )
     before = (log.level, list(log.handlers))
-    line = bench._profile(spark, name, all_specs()[name], SF_SMOKE)
-    fields = dict(kv.split("=") for kv in line.split()[3:])
-    assert int(fields["jobs_stream"]) >= 1, line
-    assert int(fields["jobs"]) > int(fields["jobs_stream"]), line
-    assert int(fields["py_passes"]) == 0, line  # a JVM-only drain
-    assert int(fields["state_commit_ms"]) > 0, line
+    p = bench._profile(spark, name, all_specs()[name], SF_SMOKE)
+    line = bench._profile_line(name, p)
+    assert p.census.jobs_stream >= 1, line
+    assert p.census.jobs > p.census.jobs_stream, line
+    assert p.py_passes == 0, line  # a JVM-only drain
+    assert p.state_commit_ms > 0, line
     assert (log.level, list(log.handlers)) == before
 
 
@@ -118,9 +118,8 @@ def test_profile_counts_a_drains_python_passes(spark):
     read off the drain's last micro-batch plan and must still count."""
     specs = all_specs()
     for name in ("q91_streaming_stateful_totals", "q108_streaming_zscore"):
-        line = bench._profile(spark, name, specs[name], SF_SMOKE)
-        fields = dict(kv.split("=") for kv in line.split()[3:])
-        assert int(fields["py_passes"]) >= 1, line
+        p = bench._profile(spark, name, specs[name], SF_SMOKE)
+        assert p.py_passes >= 1, bench._profile_line(name, p)
 
 
 def test_profile_counts_python_passes(spark):
@@ -129,10 +128,50 @@ def test_profile_counts_python_passes(spark):
     mapInPandas and read at least 1. Neither runs a drain, so neither
     commits state."""
     specs = all_specs()
-    got = {}
-    for name in ("q26_ngram_jaccard", "q111_audio_frame_energy"):
-        line = bench._profile(spark, name, specs[name], SF_SMOKE)
-        got[name] = dict(kv.split("=") for kv in line.split()[3:])
-    assert int(got["q26_ngram_jaccard"]["py_passes"]) == 0, got
-    assert int(got["q111_audio_frame_energy"]["py_passes"]) >= 1, got
-    assert int(got["q26_ngram_jaccard"]["state_commit_ms"]) == 0, got
+    got = {
+        name: bench._profile(spark, name, specs[name], SF_SMOKE)
+        for name in ("q26_ngram_jaccard", "q111_audio_frame_energy")
+    }
+    assert got["q26_ngram_jaccard"].py_passes == 0, got
+    assert got["q111_audio_frame_energy"].py_passes >= 1, got
+    assert got["q26_ngram_jaccard"].state_commit_ms == 0, got
+
+
+def test_growth_exponent_recovers_a_power_law():
+    for k in (0.5, 1.0, 2.0):
+        assert bench.growth_exponent(500, 3 * 500**k, 50_000, 3 * 50_000**k) == k
+
+
+def test_growth_exponent_is_none_between_tiers_of_one_size():
+    # sf0.001 and sf0.01 hold the same 500 documents
+    assert bench.growth_exponent(500, 120, 500, 130) is None
+    assert bench.growth_exponent(500, 0, 5000, 130) is None
+
+
+def test_synthesize_10x_replicates_with_disjoint_ids_and_vocabularies(spark, tmp_path):
+    """The 10x tier built from sf0.01: ten times the documents, replica
+    0 verbatim, ids disjoint across replicas, replica k's tokens all
+    prefixed ``r{k}``, and every other catalog table readable."""
+    import pandas as pd
+
+    from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import (
+        TABLES,
+        load_table,
+    )
+
+    bench.synthesize_10x(SF_CORRECT, str(tmp_path))
+    src = pd.read_parquet(os.path.join(SF_CORRECT, "documents.parquet"))
+    big = pd.read_parquet(tmp_path / "documents.parquet")
+    assert len(big) == 10 * len(src)
+    assert big["doc_id"].is_unique
+    replica = big["doc_id"] // bench._REPLICA_ID_STRIDE
+    pd.testing.assert_frame_equal(big[replica == 0].reset_index(drop=True), src)
+    for k in range(1, 10):
+        texts = big.loc[replica == k, "text"].dropna()
+        tokens = {t for s in texts for t in re.findall(r"[A-Za-z0-9]+", s)}
+        assert tokens and all(t.startswith(f"r{k}") for t in tokens), k
+    emb = pd.read_parquet(tmp_path / "embeddings.parquet")
+    assert len(emb) == 10 * len(pd.read_parquet(os.path.join(SF_CORRECT, "embeddings.parquet")))
+    assert emb["vec_id"].is_unique
+    for name in TABLES:
+        assert load_table(spark, str(tmp_path), name).count() > 0, name

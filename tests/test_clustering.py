@@ -193,37 +193,9 @@ def test_semantic_near_duplicates_planted_pair(spark):
         + [(8, [0.99, 0.01, 0.0]), (9, [0.0, 8.0, 1.0])]
     )
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = CL.semantic_near_duplicates(emb, threshold=0.95).collect()
+    out = CL.semantic_near_duplicates(emb).collect()
     assert [(r["vec_a"], r["vec_b"]) for r in out] == [(0, 8)]
     assert out[0]["cos_sim"] > 0.99
-
-
-def test_semantic_near_duplicates_sub_block_valve(spark):
-    import numpy as np
-
-    from aws_dla_kinesis_delivery_stream_example_spark.operators import clustering as CL
-
-    # One hot cluster: everything lands near seed 0 (seeds 1..7 are
-    # remote). Planted exact duplicate (ids 16/17) must survive
-    # sub-blocking — identical vectors share the rounded-vector digest —
-    # while the candidate pair count drops below the full within-cluster
-    # count.
-    rng_rows = [(i, [float((i * 7) % 5) / 10.0, float((i * 3) % 5) / 10.0]) for i in range(8, 16)]
-    rows = (
-        [(0, [0.0, 0.0])]
-        + [(i, [100.0 * i, 100.0 * i]) for i in range(1, 8)]
-        + rng_rows
-        + [(16, [0.31, 0.17]), (17, [0.31, 0.17])]
-    )
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    full = CL.semantic_near_duplicates(emb, threshold=-1.1)
-    valved = CL.semantic_near_duplicates(emb, threshold=-1.1, sub_blocks=4)
-    n_full, n_valved = full.count(), valved.count()
-    assert n_valved < n_full  # pair space actually shrank
-
-    dup = valved.filter("vec_a = 16 AND vec_b = 17").collect()
-    assert len(dup) == 1 and np.isclose(dup[0]["cos_sim"], 1.0)
 
 
 def test_semantic_near_duplicates_gemm_budget_guard(spark):
@@ -235,8 +207,7 @@ def test_semantic_near_duplicates_gemm_budget_guard(spark):
 
     # Planted hot cluster of 50,008 rows, over the 50,000-row budget:
     # the 8 seeds coincide at the origin, so every row ties into
-    # cluster 0. Past the seeds, rows are distinct at 1 dp, so the
-    # rounded-vector digest actually spreads them across sub-blocks.
+    # cluster 0.
     n = CL._MAX_CLUSTER_ROWS + CL.KMEANS_K
     vid = F.col("id")
     emb = spark.range(n).select(
@@ -247,14 +218,9 @@ def test_semantic_near_duplicates_gemm_budget_guard(spark):
     )
 
     # Budget smaller than the hot cluster -> the group task must fail
-    # fast with sizing guidance, not OOM mid-GEMM.
+    # fast with the cluster's size, not OOM mid-GEMM.
     with pytest.raises((PythonException, Py4JJavaError), match="50000-row GEMM budget"):
-        CL.semantic_near_duplicates(emb, threshold=1.1).collect()
-
-    # Salting the hot cluster under the same budget makes it pass (the
-    # threshold keeps no pair, so only the sub-block GEMMs run).
-    ok = CL.semantic_near_duplicates(emb, threshold=1.1, sub_blocks=64)
-    assert ok.count() == 0  # executes without raising
+        CL.semantic_near_duplicates(emb).collect()
 
 
 def test_ivf_learned_recall_on_planted_geometry(spark):

@@ -82,7 +82,7 @@ def test_minhash_estimates_jaccard(spark, planted_docs):
     }
     est = {
         (r.doc_a, r.doc_b): r.est_jaccard
-        for r in dedup.minhash_near_duplicates(planted_docs, threshold=0.3)
+        for r in dedup.minhash_near_duplicates(planted_docs)
         .collect()
     }
     assert exact, "plants must create high-jaccard pairs"
@@ -146,7 +146,7 @@ def test_lsh_recall_floor_sf001(spark):
     assert len(truth) >= 40, "graded plants must produce J>=0.7 ground truth"
     est = {
         (r.doc_a, r.doc_b)
-        for r in dedup.minhash_near_duplicates(all_docs, threshold=0.55).collect()
+        for r in dedup.minhash_near_duplicates(all_docs).collect()
     }
     recall = len(truth & est) / len(truth)
     assert recall >= 0.9, f"LSH recall {recall:.3f} below floor on {len(truth)} true pairs"
@@ -155,7 +155,7 @@ def test_lsh_recall_floor_sf001(spark):
 def test_minhash_finds_planted_near_dups(spark, planted_docs):
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in dedup.minhash_near_duplicates(planted_docs, threshold=0.5)
+        for r in dedup.minhash_near_duplicates(planted_docs)
         .collect()
     }
     planted = {(i, i + 100000) for i in range(20)} | {(i, i + 200000) for i in range(20)}
@@ -614,24 +614,15 @@ def test_ivf_multiprobe_recall_dominates_single_probe(spark):
 
 
 def test_simhash_valve_engages_on_band_crowd_corpus(spark):
-    """End-to-end at the DEFAULT bound (the rehearsal's shape, pinned
-    per-commit): a template-crowd TEXT corpus concentrates >256
-    distinct fingerprints on one band key, the hot-bucket valve
-    engages (candidate set strictly shrinks), and the verified
-    Hamming<=3 pair set is identical to the unvalved join."""
-    import importlib.util
-    import os
-
+    """End-to-end at the DEFAULT bound: a template-crowd TEXT corpus
+    concentrates >256 distinct fingerprints on one band key, the
+    hot-bucket valve engages (candidate set strictly shrinks), and the
+    verified Hamming<=3 pair set is identical to the unvalved join."""
     from pyspark.sql import functions as F
 
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "scripts", "scale_rehearsal.py"
-    )
-    spec = importlib.util.spec_from_file_location("scale_rehearsal", path)
-    sr = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sr)
+    from .band_crowd import build_band_crowd_corpus
 
-    rows, expected = sr.build_band_crowd_corpus(n_variants=300, n_twins=20)
+    rows, expected = build_band_crowd_corpus(n_variants=300, n_twins=20)
     assert expected["n_planted_twins"] == 20
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     usig = (

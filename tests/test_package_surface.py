@@ -99,6 +99,9 @@ ONE_VALUE_ALLOWED = {
     ("streaming/delivery.py", "DeliveryPipeline", "max_buffer_bytes"): (
         "deployment setting: the reference's BufferingHints size (iac/s2_app.py:323-326)"
     ),
+    ("operators/dedup.py", "simhash_band_candidates", "max_band_bucket"): (
+        "reference path: None is the unvalved band join the valve tests compare against"
+    ),
 }
 
 

@@ -37,8 +37,8 @@ from aws_dla_kinesis_delivery_stream_example_spark.plans.curation11 import (
     _SNM_THRESH,
     _SNM_W,
     snm_global_rank,
-    _snm_key,
 )
+from aws_dla_kinesis_delivery_stream_example_spark.functions import text as TX
 from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import load_table
 
 from .conftest import SF_SMOKE
@@ -88,6 +88,14 @@ def _jacc_milli(a: int, b: int) -> int:
     return 1000 * len(sa & sb) // len(sa | sb)
 
 
+def _pass_key(pass_id: int):
+    """SNM pass ``pass_id``'s blocking key as q139 builds it: the
+    _SNM_KEY_N-token window at token offset pass_id * _SNM_KEY_N."""
+    from pyspark.sql import functions as F
+
+    return F.array_join(F.slice(TX.words("text"), 1 + _SNM_KEY_N * pass_id, _SNM_KEY_N), " ")
+
+
 def _rank_order(pass_id: int) -> list[int]:
     """Pure-python model of the pass's total order."""
     key = {
@@ -131,7 +139,7 @@ def test_snm_global_rank_is_the_total_order(spark, snm_sf_dir):
     for p in range(2):
         got = {
             r["doc_id"]: r["grank"]
-            for r in snm_global_rank(docs, _snm_key(p)).collect()
+            for r in snm_global_rank(docs, _pass_key(p)).collect()
         }
         want = {d: i + 1 for i, d in enumerate(_rank_order(p))}
         assert got == want, (p, got)
@@ -153,7 +161,7 @@ def test_snm_global_rank_is_stable_across_calls(spark):
 
     docs = load_table(spark, os.path.join(os.path.dirname(SF_SMOKE), "sf0.1"), "documents")
     for p in range(3):
-        keyed = docs.select("doc_id", _snm_key(p).alias("k"))
+        keyed = docs.select("doc_id", _pass_key(p).alias("k"))
         want = {
             r["doc_id"]: r["grank"]
             for r in keyed.select(

@@ -468,89 +468,6 @@ def test_q146_nonvacuous_at_smoke_sf(spark):
     assert all(h <= 1 for h in got.values())
 
 
-def test_q146_wide_band_geometry_is_executable(spark):
-    """The scale remedy q146's docstring documents — wider bands at
-    production n — as an EXECUTABLE library mode, not narration: the
-    wide 17x16 / 4x64-bit geometry runs the SAME decode -> resize ->
-    pack chain on the SAME corpus, still finds every planted near-dup
-    pair, and its band-collision candidate set never exceeds the bench
-    geometry's (2^-64 vs 2^-16 per-band collision rate is the point).
-    The wide near-dup output is EXACTLY the planted pairs: at w=64 no
-    independent-image candidate survives blocking at any realistic n."""
-    from aws_dla_kinesis_delivery_stream_example_spark.operators.multimodal import (
-        DHASH_GEOM_BENCH,
-        DHASH_GEOM_WIDE,
-        dhash_band_candidates,
-        dhash_bands,
-        dhash_near_duplicates,
-        synthesize_gray_bmp,
-    )
-    from aws_dla_kinesis_delivery_stream_example_spark.operators.staging import (
-        release_staging,
-    )
-    from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    want_pairs = {(9 * k, 9 * k + 1) for k in range(56)}  # 500 docs
-
-    n_cand, pairs = {}, {}
-    for label, geom in (("bench", DHASH_GEOM_BENCH), ("wide", DHASH_GEOM_WIDE)):
-        sigs = dhash_bands(synthesize_gray_bmp(docs), grid=geom)
-        n_cand[label] = dhash_band_candidates(sigs).count()
-        pairs[label] = {
-            (r.doc_a, r.doc_b): r.hamming
-            for r in dhash_near_duplicates(sigs).collect()
-        }
-        release_staging()
-    assert set(pairs["bench"]) == want_pairs
-    assert set(pairs["wide"]) == want_pairs
-    assert all(h <= 1 for h in pairs["wide"].values())
-    # the geometry's purpose: collision candidates shrink to exactly
-    # the planted set at w=64 while the bench w=16 admits collisions
-    assert n_cand["wide"] == len(want_pairs) <= n_cand["bench"]
-
-
-def test_q146_wide_bands_match_pure_python_recompute(spark):
-    """The wide geometry's packing (bit j = y*16+x, band j//64, offset
-    j%64, signed-int64 wrap at bit 63) pinned against an independent
-    closed-form recompute — the 17x16 grid samples full-res columns
-    0..16 and all rows (src = i*in//out), so the formula evaluates at
-    (x, y) directly."""
-    import hashlib as _hl
-
-    from aws_dla_kinesis_delivery_stream_example_spark.operators.multimodal import (
-        DHASH_GEOM_WIDE,
-        dhash_bands,
-        synthesize_gray_bmp,
-    )
-    from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents").filter("doc_id < 20")
-    got = {
-        r.media_id: (r.b0, r.b1, r.b2, r.b3)
-        for r in dhash_bands(synthesize_gray_bmp(docs), grid=DHASH_GEOM_WIDE).collect()
-    }
-
-    def px(seed, x, y):
-        return int(_hl.md5(f"{seed}_{x}_{y}".encode()).hexdigest()[:15], 16) % 256
-
-    for did in range(20):
-        seed = did // 9 * 9 if did % 9 <= 1 else did
-        # 17x16 grid from an 18x16 source: xs = i*18//17 = i for i<17,
-        # ys = j*16//16 = j — the grid IS the first 17 columns
-        grid = [[px(seed, x, y) for x in range(17)] for y in range(16)]
-        if did % 9 == 1:
-            grid[0][0] = (grid[0][0] + 128) % 256
-        bands = [0, 0, 0, 0]
-        for y in range(16):
-            for x in range(16):
-                j = y * 16 + x
-                if grid[y][x + 1] > grid[y][x]:
-                    bands[j // 64] |= 1 << (j % 64)
-        signed = tuple(v - (1 << 64) if v >= 1 << 63 else v for v in bands)
-        assert got[did] == signed, f"doc {did}"
-
-
 # ------------------------------------------------------------- q147
 
 

@@ -533,15 +533,13 @@ def test_tfidf_zero_weight_doc_does_not_crash(spark):
         [
             (1, "the", "s"),  # only the universal token: zero norm
             (2, "the foo bar baz", "s"),
-            (3, "the foo bar qux", "s"),
+            (3, "the foo bar baz qux", "s"),
         ],
     )
     try:
         pairs = {
             (r["doc_a"], r["doc_b"])
-            for r in TF.tfidf_cosine_pairs(
-                docs, threshold=0.01
-            ).collect()
+            for r in TF.tfidf_cosine_pairs(docs).collect()
         }
     finally:
         release_staging()

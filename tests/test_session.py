@@ -48,3 +48,21 @@ def test_driver_runs_the_parallel_collector(spark):
     jvm = spark.sparkContext._jvm
     beans = jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
     assert sorted(b.getName() for b in beans) == ["PS MarkSweep", "PS Scavenge"]
+
+
+def test_sql_api_queries_leave_no_temp_view(spark):
+    """The SQL-API queries (and their DataFrame neighbours in the same
+    module) run on the caller's session and must leave no temporary
+    view behind: a view named ``part`` or ``orders`` would shadow the
+    caller's table of that name. A fresh session of the same context
+    starts with an empty view catalog."""
+    from aws_dla_kinesis_delivery_stream_example_spark.plans import all_specs
+
+    from .conftest import SF_SMOKE
+
+    caller = spark.newSession()
+    specs = all_specs()
+    for q in ("q52", "q53", "q54", "q89", "q90", "q122"):
+        (name,) = [k for k in specs if k.startswith(q + "_")]
+        specs[name].spark(caller, SF_SMOKE).collect()
+    assert [t.name for t in caller.catalog.listTables() if t.isTemporary] == []

@@ -5,6 +5,7 @@ from __future__ import annotations
 from aws_dla_kinesis_delivery_stream_example_spark.operators.tfidf import (
     MAX_DF,
     MAX_DF_CEILING,
+    MAX_DF_FRAC,
     tfidf_cosine_pairs,
     tfidf_postings,
 )
@@ -24,35 +25,36 @@ def test_identical_docs_score_one(spark):
         ],
     )
     out = {(r["doc_a"], r["doc_b"]): r["cos_sim"] for r in
-           tfidf_cosine_pairs(docs, threshold=0.9).collect()}
+           tfidf_cosine_pairs(docs).collect()}
     assert set(out) == {(1, 2)}
     assert abs(out[(1, 2)] - 1.0) < 1e-6
 
 
 def test_hot_token_cap_prunes_stopword_only_overlap(spark):
     # every doc shares the hot token "the" (df = MAX_DF + 2); docs 1/2
-    # also share rare content. With the cap at df <= MAX_DF the hot
-    # token is pruned: 1-2 still pair on their rare terms, but no pair
-    # exists merely through "the".
+    # also share rare content. At 52 docs the relative cap is below the
+    # MAX_DF floor, so the cap is df <= MAX_DF and the hot token is
+    # pruned: 1-2 still pair on their rare terms, but no pair exists
+    # merely through "the".
     rows = [(1, "the zebra quagga unique"), (2, "the zebra quagga unique")]
     rows += [(i, f"the other{i} material{i}") for i in range(3, MAX_DF + 3)]
     docs = _docs(spark, rows)
     pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in tfidf_cosine_pairs(docs, threshold=0.01).collect()
+        for r in tfidf_cosine_pairs(docs).collect()
     }
     assert (1, 2) in pairs
     assert all(p == (1, 2) for p in pairs)
 
 
 def test_relative_cap_floor(spark):
-    # max_df_frac over a tiny corpus must not go below the absolute
-    # floor: with floor MAX_DF nothing is pruned at n_docs=3.
+    # the relative cap over a tiny corpus must not go below the
+    # absolute floor: with floor MAX_DF nothing is pruned at n_docs=3.
     docs = _docs(
         spark,
         [(1, "alpha beta"), (2, "alpha gamma"), (3, "alpha delta")],
     )
-    toks = tfidf_postings(docs, max_df_frac=0.1)
+    toks = tfidf_postings(docs)
     assert toks.filter("tok = 'alpha'").count() == 3  # df=3 <= MAX_DF floor
 
 
@@ -66,38 +68,36 @@ def _df_corpus(spark, n_docs, tokens_by_df):
     return spark.range(n_docs).select(i.alias("doc_id"), F.concat_ws(" ", *parts).alias("text"))
 
 
-def _surviving(docs, **kw):
-    return {r["tok"] for r in tfidf_postings(docs, **kw).select("tok").distinct().collect()}
+def _surviving(docs):
+    return {r["tok"] for r in tfidf_postings(docs).select("tok").distinct().collect()}
 
 
 def test_relative_cap_ceiling_clamps(spark):
-    # MAX_DF_CEILING + 100 docs all sharing "alpha". frac=1.0 alone
-    # would keep it (rel cap = n_docs); the ceiling clamps the relative
-    # term to MAX_DF_CEILING, above the MAX_DF floor, so the hot token
-    # is pruned. A rarer token (df=2) survives via the floor.
-    n = MAX_DF_CEILING + 100
-    docs = _df_corpus(spark, n, [("alpha", n), ("rare", 2)])
-    s = _surviving(docs, max_df_frac=1.0)
-    assert "rare" in s and "alpha" not in s
+    # MAX_DF_CEILING + 100 docs' worth of relative cap: unclamped it
+    # would be MAX_DF_CEILING + 100 and keep "hot" (df MAX_DF_CEILING
+    # + 50); the ceiling clamps it to MAX_DF_CEILING, above the MAX_DF
+    # floor, so "hot" is pruned while "edge" (df at the ceiling) and a
+    # rare token survive.
+    n = round((MAX_DF_CEILING + 100) / MAX_DF_FRAC)
+    docs = _df_corpus(
+        spark, n, [("hot", MAX_DF_CEILING + 50), ("edge", MAX_DF_CEILING), ("rare", 2)]
+    )
+    s = _surviving(docs)
+    assert "rare" in s and "edge" in s and "hot" not in s
 
 
 def test_cap_composition_boundaries(spark):
-    # The effective cap is greatest(MAX_DF, least(frac*N, MAX_DF_CEILING)).
-    # Build a 2000-doc corpus with tokens at df = 30, 600, 1200 and walk
-    # the three regimes: floor-dominated, frac-dominated, ceiling-clamped.
-    docs = _df_corpus(spark, 2000, [("common", 1200), ("mid", 600), ("rare", 30)])
-    # floor-dominated: greatest(50, least(0.01*2000=20, 1000)) = 50
-    s = _surviving(docs, max_df_frac=0.01)
+    # The effective cap is greatest(MAX_DF, least(MAX_DF_FRAC * N,
+    # MAX_DF_CEILING)). Walk its three regimes, one corpus size each.
+    # floor-dominated: greatest(50, least(0.1*200=20, 1000)) = 50
+    s = _surviving(_df_corpus(spark, 200, [("mid", MAX_DF + 10), ("rare", MAX_DF)]))
     assert "rare" in s and "mid" not in s
-    # frac-dominated: greatest(50, least(0.35*2000=700, 1000)) = 700
-    s = _surviving(docs, max_df_frac=0.35)
+    # frac-dominated: greatest(50, least(0.1*2000=200, 1000)) = 200
+    s = _surviving(_df_corpus(spark, 2000, [("common", 250), ("mid", 200)]))
     assert "mid" in s and "common" not in s
-    # ceiling-clamped: greatest(50, least(1.0*2000=2000, 1000)) = 1000
-    s = _surviving(docs, max_df_frac=1.0)
+    # ceiling-clamped: greatest(50, least(0.1*12000=1200, 1000)) = 1000
+    s = _surviving(_df_corpus(spark, 12000, [("common", 1100), ("mid", 1000)]))
     assert "mid" in s and "common" not in s
-    # no fraction: the absolute MAX_DF cap alone
-    s = _surviving(docs)
-    assert "rare" in s and "mid" not in s
 
 
 def test_weights_are_on_6dp_grid(spark):
@@ -149,7 +149,7 @@ def test_staging_released_after_sweep(spark):
     # q49/q94) whose superseded checkpoint RDDs linger until the
     # driver GC triggers the ContextCleaner — out of scope here
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-    tfidf.tfidf_cosine_pairs(docs, threshold=0.5).count()
+    tfidf.tfidf_cosine_pairs(docs).count()
     dedup.shingle_jaccard_pairs(docs, threshold=0.5).count()
     during = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     assert len(during - before) > 0
