@@ -18,6 +18,31 @@ count, the three stop at 3 x cpus threads; a lower cap only queues
 submissions. The caps are static confs, so they take effect only in
 the builder: a session built elsewhere keeps Spark's defaults.
 
+The same count caps the driver's two block-manager RPC pools,
+``block-manager-ask-thread-pool`` (``BlockManagerMasterEndpoint``'s
+``askThreadPool``) and ``block-manager-storage-async-thread-pool``
+(``BlockManagerStorageEndpoint``'s ``asyncThreadPool``). Both are
+cached pools hard-coded at core = maximum = 100 with a 60 s
+keep-alive, fed by every ``unpersist`` and ContextCleaner removal, so
+a session that flushes or queries more than once a minute keeps 100
+threads in each (about 110 KB of native memory per thread). No conf
+sizes them: ``get_spark`` reaches them by reflection after
+``getOrCreate()`` (``SparkContext.env().rpcEnv()``, its private
+``dispatcher``, the endpoint instances keyed in the dispatcher's
+private ``endpointRefs``, their private ``ThreadPoolExecutor``) and
+lowers each core size to the core count. It does so on every call,
+so a new ``SparkContext`` in the same JVM is capped too. The maximum
+stays 100 and the queue is an unbounded FIFO, so work beyond the core
+count queues and starts no thread. In local mode the pools run
+``ask`` callbacks, ``Future.sequence`` continuations and local block
+removals, none of which waits on another task of its pool. On a
+cluster with the external shuffle service, the master's RDD removal
+blocks a pool thread on the service's reply (a ``.get``); that is the
+one place a queued task could wait behind a running one. A class or
+field that a Spark upgrade renames makes ``get_spark`` raise, naming
+it, rather than silently keep 200 threads. A session built elsewhere
+keeps Spark's pools.
+
 The driver JVM runs the parallel collector. In local mode it is the
 only JVM: it drives many short micro-batch and query jobs and executes
 them too. G1 is the JVM's default only because the host counts as
@@ -58,10 +83,48 @@ _STAGE_POOL_MAX = {
 }
 
 
+# The driver's block-manager RPC endpoints and the private
+# ThreadPoolExecutor field of each.
+_BLOCK_MANAGER_POOLS = {
+    "org.apache.spark.storage.BlockManagerMasterEndpoint": "askThreadPool",
+    "org.apache.spark.storage.BlockManagerStorageEndpoint": "asyncThreadPool",
+}
+
+
 def stage_pool_confs(cpus: int) -> dict[str, str]:
     """The three stage-pool caps for a host of ``cpus`` cores: the core
     count, clamped to what Spark accepts."""
     return {k: str(min(cpus, top)) for k, top in _STAGE_POOL_MAX.items()}
+
+
+def _private_field(obj, name: str):
+    """The value of ``obj``'s private field ``name``, read by reflection;
+    raises naming the class and field if it does not exist."""
+    from py4j.protocol import Py4JJavaError
+
+    cls = obj.getClass()
+    try:
+        field = cls.getDeclaredField(name)
+    except Py4JJavaError as exc:
+        raise RuntimeError(f"{cls.getName()} has no field {name!r}") from exc
+    field.setAccessible(True)
+    return field.get(obj)
+
+
+def block_manager_pools(spark: SparkSession) -> list:
+    """The driver's two block-manager ``ThreadPoolExecutor``s, master's
+    ask pool first. Raises naming the endpoint class the driver's RPC
+    dispatcher does not hold, or the field that is missing."""
+    rpc_env = spark.sparkContext._jsc.sc().env().rpcEnv()
+    dispatcher = _private_field(rpc_env, "dispatcher")
+    endpoints = _private_field(dispatcher, "endpointRefs").keySet().toArray()
+    pools = []
+    for cls, name in _BLOCK_MANAGER_POOLS.items():
+        found = [e for e in endpoints if e.getClass().getName() == cls]
+        if not found:
+            raise RuntimeError(f"no {cls} registered with the driver's RPC dispatcher")
+        pools += [_private_field(e, name) for e in found]
+    return pools
 
 
 @contextmanager
@@ -87,8 +150,9 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) the SparkSession used by the engine. One read of
-    ``SPARK_GRAFT_CPUS`` sizes the local master, the shuffle width and
-    the three driver stage pools (``stage_pool_confs``)."""
+    ``SPARK_GRAFT_CPUS`` sizes the local master, the shuffle width, the
+    three driver stage pools (``stage_pool_confs``) and the core size of
+    the two block-manager pools (``block_manager_pools``)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Python workers must be able to import this package (Python UDF
     # closures reference it). Export the repo root BEFORE the JVM forks
@@ -133,5 +197,9 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # Before any job: work beyond the core count queues, the maximum
+    # stays Spark's 100.
+    for pool in block_manager_pools(spark):
+        pool.setCorePoolSize(min(int(cpus), pool.getMaximumPoolSize()))
     spark.sparkContext.setLogLevel("WARN")
     return spark

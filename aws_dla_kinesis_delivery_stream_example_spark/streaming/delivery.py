@@ -268,7 +268,8 @@ class DeliveryPipeline:
         availableNow (drain the source and stop — the test/bench mode)
         and, if ``await_termination``, waits for it via ``finish``, all
         with ``PROGRESS_RETENTION`` scoped to the block. A query that is
-        not waited on runs under the caller's retention."""
+        not waited on runs under the caller's retention. AQE is off
+        during ``start()`` only."""
         reader = self.spark.readStream.schema(serde.BANK_ACCOUNT_SCHEMA)
         if self.max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
@@ -286,7 +287,12 @@ class DeliveryPipeline:
             writer = writer.trigger(processingTime=f"{self.trigger_seconds} seconds")
         drain = await_termination and self.trigger_seconds is None
         with scoped_confs(self.spark, PROGRESS_RETENTION if drain else {}):
-            query = writer.start()
+            # The stream runs without AQE anyway (its micro-batches run on
+            # a clone of the session with AQE off); off for the start
+            # only, the analyzer no longer warns about it, and a batch
+            # query the caller runs meanwhile keeps AQE.
+            with scoped_confs(self.spark, {"spark.sql.adaptive.enabled": "false"}):
+                query = writer.start()
             self.last_query = query
             if drain:
                 self.finish(query)

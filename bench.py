@@ -331,8 +331,9 @@ def synthesize_10x(src: str, out: str) -> None:
     ``out``: the corpus grows with the same duplicate density, not by
     copies. Replica 0 is ``src`` verbatim. Replica k offsets its ids by
     k * ``_REPLICA_ID_STRIDE``, prefixes every token with ``r{k}`` (a
-    vocabulary of its own, so no near-duplicate crosses replicas) and
-    adds seeded N(0, 0.05) noise to its embeddings (the cluster geometry
+    vocabulary of its own, so no near-duplicate crosses replicas),
+    recounts ``n_chars`` from the prefixed text and adds seeded
+    N(0, 0.05) noise to its embeddings (the cluster geometry
     persists, exact duplicates stop being exact). The other tables are
     linked from ``src``."""
     import numpy as np
@@ -356,6 +357,8 @@ def synthesize_10x(src: str, out: str) -> None:
                 if isinstance(s, str)
                 else s
             )
+            # A null text keeps the source's (null) count.
+            d["n_chars"] = d["text"].str.len().fillna(d["n_chars"]).astype(docs["n_chars"].dtype)
             noise = np.random.default_rng(k).normal(0.0, 0.05, mat.shape)
             e["embedding"] = list((mat + noise).astype(mat.dtype))
         doc_parts.append(d)

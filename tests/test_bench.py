@@ -151,7 +151,8 @@ def test_growth_exponent_is_none_between_tiers_of_one_size():
 def test_synthesize_10x_replicates_with_disjoint_ids_and_vocabularies(spark, tmp_path):
     """The 10x tier built from sf0.01: ten times the documents, replica
     0 verbatim, ids disjoint across replicas, replica k's tokens all
-    prefixed ``r{k}``, and every other catalog table readable."""
+    prefixed ``r{k}`` with ``n_chars`` counting the prefixed text, and
+    every other catalog table readable."""
     import pandas as pd
 
     from aws_dla_kinesis_delivery_stream_example_spark.sources.tables import (
@@ -170,6 +171,8 @@ def test_synthesize_10x_replicates_with_disjoint_ids_and_vocabularies(spark, tmp
         texts = big.loc[replica == k, "text"].dropna()
         tokens = {t for s in texts for t in re.findall(r"[A-Za-z0-9]+", s)}
         assert tokens and all(t.startswith(f"r{k}") for t in tokens), k
+    assert big["text"].notna().all()
+    assert (big["n_chars"] == big["text"].str.len()).all()
     emb = pd.read_parquet(tmp_path / "embeddings.parquet")
     assert len(emb) == 10 * len(pd.read_parquet(os.path.join(SF_CORRECT, "embeddings.parquet")))
     assert emb["vec_id"].is_unique

@@ -344,6 +344,35 @@ def test_continuous_mode_runs_under_caller_retention(spark, source_dir, tmp_path
     assert spark.streams.active == []
 
 
+_AQE = "spark.sql.adaptive.enabled"
+
+
+@pytest.mark.parametrize("start_fails", [False, True])
+def test_stream_starts_with_aqe_off(spark, source_dir, tmp_path, monkeypatch, start_fails):
+    """AQE is off while ``DataStreamWriter.start`` runs (its analyzer
+    would warn that a stream does not support it) and the caller's value
+    is back afterwards, also when ``start`` raises."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    seen = []
+    real_start = DataStreamWriter.start
+
+    def spy(self, *args, **kwargs):
+        seen.append(spark.conf.get(_AQE))
+        if start_fails:
+            raise RuntimeError("start failed")
+        return real_start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", spy)
+    before = spark.conf.get(_AQE)
+    p = DeliveryPipeline(spark, source_dir, str(tmp_path / "aqe"))
+    with pytest.raises(RuntimeError) if start_fails else nullcontext():
+        p.run()
+    assert seen == ["false"]
+    assert spark.conf.get(_AQE) == before == "true"
+    assert spark.streams.active == []
+
+
 def _set_retention(spark, value: str | None) -> None:
     if value is None:
         spark.conf.unset(PROGRESS_RETENTION_KEY)

@@ -1,12 +1,22 @@
-"""session.get_spark sizes the driver's query-stage pools to the host's
-cores, so a long session stops adding a thread per query stage, and
-starts the driver JVM on the parallel collector."""
+"""session.get_spark sizes the driver's query-stage pools and its two
+block-manager RPC pools to the host's cores, so a long session stops
+adding a thread per query stage or block removal, and starts the driver
+JVM on the parallel collector."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 from pyspark.sql import functions as F
 
-from aws_dla_kinesis_delivery_stream_example_spark.session import stage_pool_confs
+from aws_dla_kinesis_delivery_stream_example_spark.session import (
+    block_manager_pools,
+    get_spark,
+    stage_pool_confs,
+)
 
 # Thread-name prefixes of the three pools and the conf that caps each.
 _POOLS = {
@@ -30,6 +40,65 @@ def test_stage_pools_stop_at_the_core_count(spark):
     for prefix in _POOLS:
         live = sum(n.startswith(prefix) for n in names)
         assert 0 < live <= cpus, (prefix, live, cpus)
+
+
+# Thread-name prefixes of the two block-manager pools.
+_BLOCK_MANAGER_THREADS = (
+    "block-manager-ask-thread-pool-",
+    "block-manager-storage-async-thread-pool-",
+)
+
+
+def _live_threads(spark, prefix: str) -> int:
+    threads = spark._jvm.java.lang.Thread.getAllStackTraces().keySet().toArray()
+    return sum(t.getName().startswith(prefix) for t in threads)
+
+
+def test_block_manager_pools_core_at_the_core_count(spark):
+    cpus = spark.sparkContext.defaultParallelism  # local[cpus]
+    assert [p.getCorePoolSize() for p in block_manager_pools(spark)] == [cpus, cpus]
+    assert get_spark() is spark  # a second call fetches the same session ...
+    pools = block_manager_pools(spark)
+    assert [p.getCorePoolSize() for p in pools] == [cpus, cpus]  # ... still capped
+    assert [p.getMaximumPoolSize() for p in pools] == [100, 100]
+
+
+def test_block_manager_threads_stop_at_the_core_count(spark):
+    """Each unpersist submits to both pools; below its core size a pool
+    starts a thread per submission, so uncapped each climbs toward 100."""
+    cpus = spark.sparkContext.defaultParallelism
+    sc = spark.sparkContext
+    for _ in range(4 * cpus):
+        rdd = sc.parallelize(range(100), 2).persist()
+        rdd.count()
+        rdd.unpersist()
+        sc.broadcast(list(range(10))).destroy()
+    for prefix in _BLOCK_MANAGER_THREADS:
+        assert _live_threads(spark, prefix) <= cpus, prefix
+
+
+def test_a_new_context_gets_capped_pools():
+    """``spark.stop()`` then ``get_spark`` builds a new SparkContext with
+    new pools; they are capped again. In a child process, so the shared
+    session stays up."""
+    script = textwrap.dedent(
+        """
+        from aws_dla_kinesis_delivery_stream_example_spark.session import (
+            block_manager_pools, get_spark)
+        conf = {"spark.driver.memory": "1g"}
+        spark = get_spark(master="local[2]", extra_conf=conf)
+        spark.stop()
+        spark = get_spark(master="local[2]", extra_conf=conf)
+        print("CORES", [p.getCorePoolSize() for p in block_manager_pools(spark)])
+        spark.stop()
+        """
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "PYTHONPATH": repo}
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True, text=True, timeout=300
+    )
+    assert "CORES [2, 2]" in out.stdout, out.stderr[-2000:]
 
 
 def test_stage_pool_caps_clamp_to_what_spark_accepts():
